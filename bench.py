@@ -252,96 +252,85 @@ def main() -> None:
                 pass
     # queries whose FIRST run builds a session index artifact (shared
     # shingle table, MinHash signatures, PQ codebook) keep their
-    # artifact-BUILD cost in the timing: every re-sample clears exactly
-    # that query's artifact cache first (min of N COLD runs), so a warm
+    # artifact-BUILD cost in the timing: every re-sample purges exactly
+    # that query's artifacts first (min of N COLD runs), so a warm
     # re-run can never report a near-zero number that hides a build-cost
-    # regression.  Only the named cache is purged — downstream consumers
-    # of OTHER session artifacts keep their intended warm inputs.
-    import columnflow_spark.queries.mmdata as _mm
+    # regression.  Only the named artifacts are purged — downstream
+    # consumers of OTHER session artifacts keep their intended warm inputs.
+    from columnflow_spark.core.artifacts import purge
 
-    import columnflow_spark.queries.anngraph as _agc
-    import columnflow_spark.queries.graph as _gr
-    import columnflow_spark.queries.retrieval as _rt
-
-    cold_first: dict[str, list[dict]] = {
+    cold_first: dict[str, list[str]] = {
         # the sharded line measures the COLD build+merge: purge the shared
         # corpus build frame too (r13 — bucket bits + grid now land in one
         # checkpointed pass shared across build variants), so every sample
         # re-pays the full corpus pass, not just the merge
-        "ann_graph_sharded_topk": [_agc._G_SHARD_CACHE, _agc._G_CF_CACHE, _agc._G_N_CACHE],
+        "ann_graph_sharded_topk": [
+            "graph_sharded_adjacency", "graph_corpus_frame", "graph_corpus_rows",
+        ],
         # first line of each iterative-graph family pays the session edge
         # build COLD (r13 — _trade_edges/_coorder_edges are checkpointed
         # session artifacts now, the shared-shingle-table pattern);
         # downstream family members keep their intended warm edges
-        "pagerank_trade_graph": [_gr._EDGE_CACHE],
-        "graph_label_propagation": [_gr._EDGE_CACHE],
-        "dedup_shingle_index": [_mm._GRAMS_CACHE],
+        "pagerank_trade_graph": ["graph_edges"],
+        "graph_label_propagation": ["graph_edges"],
+        "dedup_shingle_index": ["hashed_grams"],
         # first line of the retrieval family pays the shared BM25-totals
         # checkpoint COLD (r13 — nine queries consume the identical
         # query-driven totals frame; the shared-shingle-table pattern)
-        "bm25_topk": [_rt._BM25_TOTALS_CACHE],
+        "bm25_topk": ["bm25_totals"],
         # first line of each near-dup edge family pays its shared edge
         # artifact COLD (r13): the text-Jaccard pair set and the phash
         # fingerprint+pair chain are session checkpoints consumed by
         # 4 and 3 queries respectively
-        "dedup_connected_components": [_mm._JEDGES_CACHE],
-        "multimodal_phash_neardup": [_mm._PH_FP_CACHE, _mm._PH_PAIRS_CACHE],
-        "dedup_minhash_lsh": [_mm._SIGS_CACHE],
-        "ann_pq_adc_topk": [_mm._PQ_CB_CACHE],
+        "dedup_connected_components": ["jaccard_edges"],
+        "multimodal_phash_neardup": ["phash_fingerprints", "phash_pairs"],
+        "dedup_minhash_lsh": ["minhash_sigs"],
+        "ann_pq_adc_topk": ["pq_codebook"],
         # first consumer of the shared probed-ADC aggregate (r14): pays the
         # assign → probe → LUT → ADC chain COLD every sample; the refined
-        # sibling then reads the session checkpoint (the _bm25_totals
+        # sibling then reads the session checkpoint (the bm25_totals
         # pattern)
-        "ann_ivfpq_topk": [_mm._IVFPQ_ADC_CACHE],
-        "bpe_encode_corpus": [_mm._BPE_MERGE_CACHE],
-        "unigram_encode_corpus": [_mm._ULM_CACHE],
-        "quality_classifier_filter": [_mm._LOGREG_W_CACHE],
+        "ann_ivfpq_topk": ["ivfpq_adc"],
+        "bpe_encode_corpus": ["bpe_merges"],
+        "unigram_encode_corpus": ["unigram_vocab"],
+        "quality_classifier_filter": ["logreg_weights"],
     }
+    import shutil
+
+    from columnflow_spark.queries import anngraph as _ag
+    from columnflow_spark.queries import annindex as _ai
+    from columnflow_spark.queries import mmdata as _mm
+
+    def timed_build(line: str, build) -> None:
+        """Time one once-per-corpus artifact build as its own line."""
+        t0 = time.perf_counter()
+        build()
+        timings[line] = round(time.perf_counter() - t0, 4)
+        print(f"[bench] {line}: {timings[line]}s", file=sys.stderr, flush=True)
+
     # materialized-index timing split (VERDICT r4 next #4): time the
     # index BUILD once as its own line, so the query-loop entry below
     # measures the steady-state probe path on both runs — a pruning
     # regression moves the stable probe number instead of hiding inside
     # build/hypervisor noise
     if "ann_ivfpq_materialized_topk" in names:
-        import shutil
-
-        from columnflow_spark.queries import annindex as _ai
-
         ipath = _ai.ivfpq_index_path(sf_dir)
         shutil.rmtree(ipath, ignore_errors=True)
-        t0 = time.perf_counter()
-        _ai.build_ivfpq_index(spark, sf_dir, ipath)
-        timings["ann_ivfpq_index_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            f"[bench] ann_ivfpq_index_build: {timings['ann_ivfpq_index_build']}s",
-            file=sys.stderr,
-            flush=True,
-        )
+        timed_build("ann_ivfpq_index_build", lambda: _ai.build_ivfpq_index(spark, sf_dir, ipath))
 
     # same split for the graph-ANN page store (r10): build cold (band
     # joins + degree windows + partitioned write) as its own line; the
     # query-loop line then measures the steady beam over pruned reads
     if "ann_graph_store_topk" in names:
-        import shutil
-
-        from columnflow_spark.queries import anngraph as _ag
-
         gpath = _ag.graph_index_path(sf_dir)
         shutil.rmtree(gpath, ignore_errors=True)
-        _ag._G_ADJ_CACHE.clear()
+        purge("graph_adjacency")
         # r14: the scored candidate pairs are a session artifact shared by
         # the full and base builds — purge so this line pays the candidate
         # join COLD (the insert build line later reuses it warm, the
         # compute-once-reuse pattern the corpus frame already follows)
-        _ag._G_SCORED_CACHE.clear()
-        t0 = time.perf_counter()
-        _ag.build_graph_index(spark, sf_dir, gpath)
-        timings["ann_graph_index_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            f"[bench] ann_graph_index_build: {timings['ann_graph_index_build']}s",
-            file=sys.stderr,
-            flush=True,
-        )
+        purge("graph_scored_pairs")
+        timed_build("ann_graph_index_build", lambda: _ag.build_graph_index(spark, sf_dir, gpath))
 
     # warm the incremental-insert artifact (base graph + insert beams +
     # repair) as its own build line (ADVICE r10: its first query-loop
@@ -349,52 +338,25 @@ def main() -> None:
     # warm — inconsistent averaging); the loop line then measures the
     # steady serve over the repaired pages on every sample
     if "ann_graph_insert_topk" in names:
-        from columnflow_spark.queries import anngraph as _ag
-
-        _ag._G_UPD_CACHE.clear()
-        for k in [k for k in _ag._G_ADJ_CACHE if k[2] == "base"]:
-            del _ag._G_ADJ_CACHE[k]
-        t0 = time.perf_counter()
-        _ag.updated_graph_pages(spark, sf_dir)
-        timings["ann_graph_insert_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            f"[bench] ann_graph_insert_build: {timings['ann_graph_insert_build']}s",
-            file=sys.stderr,
-            flush=True,
-        )
+        purge("graph_updated_adjacency")
+        purge("graph_updated_pages")
+        purge("graph_adjacency", ("base",))
+        timed_build("ann_graph_insert_build", lambda: _ag.updated_graph_pages(spark, sf_dir))
 
     # vacuum store build (full store + tombstones + repair compaction)
     # split from its steady serve line, the graph-store pattern
     if "ann_graph_vacuum_topk" in names:
-        import shutil
-
-        from columnflow_spark.queries import anngraph as _ag
-
-        vpath = _ag._vacuumed_graph_path(sf_dir)
-        shutil.rmtree(vpath, ignore_errors=True)
-        t0 = time.perf_counter()
-        _ag._ensure_vacuumed_graph_index(spark, sf_dir)
-        timings["ann_graph_vacuum_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            f"[bench] ann_graph_vacuum_build: {timings['ann_graph_vacuum_build']}s",
-            file=sys.stderr,
-            flush=True,
+        shutil.rmtree(_ag._vacuumed_graph_path(sf_dir), ignore_errors=True)
+        timed_build(
+            "ann_graph_vacuum_build", lambda: _ag._ensure_vacuumed_graph_index(spark, sf_dir)
         )
 
     # trained entry layer: the kmeans fit + centroid->node map is a
     # once-per-corpus build; the loop line measures the routed beam
     if "ann_graph_trained_entry_topk" in names:
-        from columnflow_spark.queries import anngraph as _ag
-
-        _ag._G_ENTRY_CACHE.clear()
-        t0 = time.perf_counter()
-        _ag.trained_entry_nodes(spark, sf_dir)
-        timings["ann_graph_trained_entry_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            "[bench] ann_graph_trained_entry_build: "
-            f"{timings['ann_graph_trained_entry_build']}s",
-            file=sys.stderr,
-            flush=True,
+        purge("graph_trained_entry")
+        timed_build(
+            "ann_graph_trained_entry_build", lambda: _ag.trained_entry_nodes(spark, sf_dir)
         )
 
     # same build/steady-state split for the funnel's learned gate: the
@@ -403,16 +365,9 @@ def main() -> None:
     # line, then the funnel line below measures the warm pipeline the
     # way dedup queries measure against the warm shingle table
     if "training_corpus_pipeline" in names:
-        for c in (_mm._TF_FEAT_CACHE, _mm._TF_W_CACHE, _mm._TF_THR_CACHE):
-            c.clear()
-        t0 = time.perf_counter()
-        _mm.tf_learned_gate(spark, sf_dir)
-        timings["tf_learned_gate_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            f"[bench] tf_learned_gate_build: {timings['tf_learned_gate_build']}s",
-            file=sys.stderr,
-            flush=True,
-        )
+        for artifact in ("tf_features", "tf_weights", "tf_threshold"):
+            purge(artifact)
+        timed_build("tf_learned_gate_build", lambda: _mm.tf_learned_gate(spark, sf_dir))
 
     # unigram vocab build/serve split (VERDICT r8 next #7): training (2
     # EM segmentation rounds over the word table) is a once-per-corpus
@@ -420,19 +375,9 @@ def main() -> None:
     # below then measures the serving path (vocab read + ONE corpus
     # pass), the same split the IVF+PQ index and learned gate use
     if "unigram_encode_corpus" in names:
-        import shutil
-
-        vpath = _mm.unigram_vocab_store_path(sf_dir)
-        shutil.rmtree(vpath, ignore_errors=True)
-        _mm._ULM_CACHE.clear()
-        t0 = time.perf_counter()
-        _mm.build_unigram_vocab_store(spark, sf_dir)
-        timings["unigram_vocab_build"] = round(time.perf_counter() - t0, 4)
-        print(
-            f"[bench] unigram_vocab_build: {timings['unigram_vocab_build']}s",
-            file=sys.stderr,
-            flush=True,
-        )
+        shutil.rmtree(_mm.unigram_vocab_store_path(sf_dir), ignore_errors=True)
+        purge("unigram_vocab")
+        timed_build("unigram_vocab_build", lambda: _mm.build_unigram_vocab_store(spark, sf_dir))
 
     # fixed same-tree reference line (r14, VERDICT r13 next #8): a
     # code-independent CPU probe (hash-sum over an in-memory range — no
@@ -478,8 +423,8 @@ def main() -> None:
                 # cold-first queries re-run COLD: purge exactly this
                 # query's artifact cache so the min never hides a
                 # build-cost regression behind a warm second run
-                for cache in cold_first.get(name, ()):
-                    cache.clear()
+                for artifact in cold_first.get(name, ()):
+                    purge(artifact)
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).count()
             runs.append(time.perf_counter() - t0)

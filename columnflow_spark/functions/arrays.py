@@ -26,20 +26,10 @@ def amax(arr: Column) -> Column:
     return F.array_max(arr)
 
 
-def amin(arr: Column) -> Column:
-    return F.array_min(arr)
-
-
 def firsts(arr: Column, null_value=None) -> Column:
     """ak.firsts: first element or null/sentinel."""
     col = F.try_element_at(arr, F.lit(1))
     return F.coalesce(col, F.lit(null_value)) if null_value is not None else col
-
-
-def pad_fill(arr: Column, index: int, null_value) -> Column:
-    """ak.pad_none + ak.fill_none at an object index (0-based)."""
-    col = F.try_element_at(arr, F.lit(index + 1 if index >= 0 else index))
-    return F.coalesce(col, F.lit(null_value))
 
 
 def local_index(arr: Column) -> Column:
@@ -52,37 +42,3 @@ def where(mask: Column, a: Column, b: Column) -> Column:
     """ak.where elementwise over aligned arrays."""
     return F.zip_with(mask, F.zip_with(a, b, lambda x, y: F.struct(x.alias("x"), y.alias("y"))),
                       lambda m, xy: F.when(m, xy["x"]).otherwise(xy["y"]))
-
-
-def sort_desc_by(arr: Column, key) -> Column:
-    """Sort an array<struct> by ``key(struct)`` descending with a stable
-    total order (reference sorted_indices_from_mask / pt-sort,
-    columnar_util.py:1134).  Spark's array_sort comparator must return
-    -1/0/1."""
-    return F.array_sort(
-        arr,
-        lambda a, b: F.when(key(a) > key(b), F.lit(-1))
-        .when(key(a) < key(b), F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-
-
-def mask_elements(arr: Column, mask: Column) -> Column:
-    """Keep elements where the aligned boolean mask is true (the reducer's
-    collection rebuild, reference reduction/util.py:55-113)."""
-    return F.filter(
-        F.zip_with(arr, mask, lambda x, m: F.when(m, x)),
-        lambda x: x.isNotNull(),
-    )
-
-
-def take_indices(arr: Column, indices: Column) -> Column:
-    """Build a sub-collection from an index-list column (1-based-safe)."""
-    return F.transform(indices, lambda i: F.try_element_at(arr, i + 1))
-
-
-def concat_safe(a: Column, b: Column) -> Column:
-    """ak_concatenate_safe (reference columnar_util.py:1433): concat with
-    null arrays treated as empty."""
-    empty = F.array()
-    return F.concat(F.coalesce(a, empty), F.coalesce(b, empty))

@@ -74,11 +74,3 @@ def bin_expr(var: Variable) -> Column:
         expr = expr.when(x < edges[i + 1], F.lit(i))
     expr = expr.when(x == edges[-1], F.lit(n - 1))  # last-edge-inclusive
     return expr.otherwise(F.lit(n)).cast("int")
-
-
-def bin_edges(var: Variable) -> list[float]:
-    if isinstance(var.binning, tuple):
-        n, lo, hi = var.binning
-        width = (hi - lo) / n
-        return [lo + i * width for i in range(n + 1)]
-    return list(var.binning)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.functions import arrays as A
 from columnflow_spark.hist import Variable, fill_hist
 from columnflow_spark.operators import (
@@ -38,43 +39,26 @@ from columnflow_spark.operators import (
 from columnflow_spark.operators.selection import apply_event_mask, rebuild_collection
 from columnflow_spark.plans.stage import StageChain
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.session import session_key
 
 PRICE_SCALE = 1.02
 QTY_CUT = 5.0
 MIN_SELECTED = 2
 
 
-#: per-(session, sf_dir) cache of the materialized nested event table —
-#: the in-session analog of the reference materializing ReduceEvents once
-#: and letting every downstream task reuse it (tasks/reduction.py:580
-#: ProvideReducedEvents).  On a cluster the durable form of this reuse is
-#: tasks.py writing stage parquet; the persist() here serves interactive /
-#: bench sessions where many queries share the same intermediate.  Disable
-#: with SPARK_GRAFT_CACHE_NESTED=0 (plan-inspection tests do).
-_NESTED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact("nested_events")
 def build_nested_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested event table: one row per order with an ``items``
     array<struct> collection (the reference's event/Jet shape, SURVEY
     §1.1).  At 100 TB this groupBy is the one unavoidable shuffle; it
     hash-partitions by the event key, which every later per-event operator
-    then reuses shuffle-free."""
-    import os
+    then reuses shuffle-free.
 
-    use_cache = os.environ.get("SPARK_GRAFT_CACHE_NESTED", "1") != "0"
-    key = (session_key(spark), sf_dir)
-    if use_cache and key in _NESTED_CACHE:
-        return _NESTED_CACHE[key]
-    events = _build_nested_events_uncached(spark, sf_dir)
-    if use_cache:
-        events = events.persist()
-        _NESTED_CACHE[key] = events
-    return events
-
-
-def _build_nested_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    Persisted session artifact — the in-session analog of the reference
+    materializing ReduceEvents once and letting every downstream task
+    reuse it (tasks/reduction.py:580 ProvideReducedEvents).  On a cluster
+    the durable form of this reuse is tasks.py writing stage parquet; the
+    persist() here serves interactive / bench sessions where many queries
+    share the same intermediate."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(
         spark, sf_dir, "lineitem",
@@ -102,6 +86,7 @@ def _build_nested_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame
         orders.join(items, F.col("o_orderkey") == F.col("l_orderkey"), "left")
         .drop("l_orderkey")
         .withColumn("items", F.coalesce(F.col("items"), empty))
+        .persist()
     )
 
 

@@ -26,9 +26,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-_TUNED_SESSIONS: set[int] = set()
-
-
 def tune_session(spark: SparkSession) -> None:
     """Apply runtime session sizing once per session.
 
@@ -41,11 +38,16 @@ def tune_session(spark: SparkSession) -> None:
     shuffle to the cluster, let AQE coalesce further at runtime.  On a real
     cluster ``defaultParallelism`` reflects total executor cores, so the
     same rule sizes up transparently; AQE still owns skew/coalesce.
+
+    "Tuned" is marked in the session's own runtime conf: ``id(spark)``
+    is recycled after a session is collected (see ``session_key``), and
+    ``session_key`` is shared by ``spark.newSession()`` siblings, each of
+    which has its own SQL conf to tune.  Values set after the first call
+    (a test pinning shuffle partitions) are never overwritten.
     """
-    key = id(spark)
-    if key in _TUNED_SESSIONS:
+    if spark.conf.get("spark.columnflow.tuned", "false") == "true":
         return
-    _TUNED_SESSIONS.add(key)
+    spark.conf.set("spark.columnflow.tuned", "true")
     cores = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(max(cores, 8)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")

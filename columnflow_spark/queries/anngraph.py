@@ -73,6 +73,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from columnflow_spark.core import artifacts
+from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df, checkpoint_df_lazy
 from columnflow_spark.functions.similarity import chunked_self_pairs, hyperplane_signs
 from columnflow_spark.queries import query
@@ -143,32 +145,22 @@ def _grid_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", _grid(F.col("embedding")).alias("g"))
 
 
-_G_ADJ_CACHE: dict = {}
-
-#: per-(session, sf_dir) combined build frame — see :func:`_corpus_frame`
-_G_CF_CACHE: dict = {}
-
-#: per-(session, sf_dir) corpus row count — one tiny job over the
-#: already-checkpointed corpus frame, reused wherever a build needs the
-#: corpus size (trained-entry k sizing) instead of a fresh parquet scan.
+#: ``graph_corpus_rows`` session artifact: the corpus row count — one
+#: tiny job over the already-checkpointed corpus frame, reused wherever a
+#: build needs the corpus size (trained-entry k sizing) instead of a
+#: fresh parquet scan.
 #: NOTE (r13, measured): a size-derived ``coalesce`` of the checkpointed
 #: serve artifacts (pages / repaired adjacency) down to O(rows/65536)
 #: partitions was tried here and REVERTED — the beam's per-round cost is
 #: the lazy entrant-chain replay (windows/anti-joins over the visited
 #: union), whose map sides the coalesce serializes: insert/sharded
 #: serves measured +2-4 s with 1-partition artifacts at sf0.1.
-_G_N_CACHE: dict = {}
-
-
+@artifact("graph_corpus_rows")
 def _corpus_rows(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _G_N_CACHE.get(key)
-    if n is None:
-        n = _corpus_frame(spark, sf_dir).count()
-        _G_N_CACHE[key] = n
-    return n
+    return _corpus_frame(spark, sf_dir).count()
 
 
+@artifact("graph_corpus_frame")
 def _corpus_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(vec_id, g, bk0..bk{B-1})`` — ONE checkpointed corpus pass
     serving BOTH the banded bucket join and exact grid scoring (r13
@@ -176,30 +168,25 @@ def _corpus_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed passes for the bucket frame and the grid frame — at
     100 TB that is two full corpus scans where one suffices, since the
     sign bits and the grid quantization read the same embedding column).
-    Cached per (session, sf_dir) like the dedup family's shared shingle
-    table (``_GRAMS_CACHE``), so the full/base/sharded build variants
-    share the scan; bench cold-lines that must pay it purge this cache
-    (bench.py ``cold_first``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cf = _G_CF_CACHE.get(key)
-    if cf is None:
-        emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-        bands = _band_planes()
-        cf = emb.select(
-            "vec_id",
-            _grid(F.col("embedding")).alias("g"),
-            *[
-                hyperplane_signs(F.col("embedding"), bands[b]).alias(f"bk{b}")
-                for b in range(_G_BANDS)
-            ],
-        ).transform(checkpoint_df)
-        _G_CF_CACHE[key] = cf
-    return cf
+    The ``graph_corpus_frame`` session artifact, like the dedup family's
+    shared shingle table (``hashed_grams``), so the full/base/sharded
+    build variants share the scan; bench cold-lines that must pay it
+    purge ``graph_corpus_frame``."""
+    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
+    bands = _band_planes()
+    return emb.select(
+        "vec_id",
+        _grid(F.col("embedding")).alias("g"),
+        *[
+            hyperplane_signs(F.col("embedding"), bands[b]).alias(f"bk{b}")
+            for b in range(_G_BANDS)
+        ],
+    ).transform(checkpoint_df)
 
 
-#: per-(session, sf_dir) checkpointed FULL-corpus scored candidate pairs
-#: ``(v1 < v2, d)`` — the expensive half of every adjacency build (banded
-#: LSH candidate join + grid-dot scoring).  r14 (VERDICT r13 next #4):
+#: ``graph_scored_pairs`` session artifact: checkpointed FULL-corpus
+#: scored candidate pairs ``(v1 < v2, d)`` — the expensive half of every
+#: adjacency build (banded LSH candidate join + grid-dot scoring).  r14 (VERDICT r13 next #4):
 #: the insert twin's base build re-ran this identical join over the 95 %
 #: non-inserted subset even though candidate collision is a PAIRWISE
 #: property — the base candidate set is exactly the full set restricted
@@ -210,19 +197,12 @@ def _corpus_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: consumer's action materializes the blocks.  bench.py purges this on
 #: the ann_graph_store_topk build split so ann_graph_index_build pays
 #: the join COLD.
-_G_SCORED_CACHE: dict = {}
-
-
+@artifact("graph_scored_pairs")
 def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sp = _G_SCORED_CACHE.get(key)
-    if sp is None:
-        cf = _corpus_frame(spark, sf_dir)
-        sp = _score_pairs(_within_pairs(cf), cf.select("vec_id", "g")).transform(
-            checkpoint_df_lazy
-        )
-        _G_SCORED_CACHE[key] = sp
-    return sp
+    cf = _corpus_frame(spark, sf_dir)
+    return _score_pairs(_within_pairs(cf), cf.select("vec_id", "g")).transform(
+        checkpoint_df_lazy
+    )
 
 
 def build_graph_adjacency(
@@ -248,33 +228,32 @@ def build_graph_adjacency(
     once per session no matter how many build variants consume it.
     Cached per (session, sf_dir, tag) since every serving form starts
     from it.
-    A ``node_pred`` REQUIRES a non-default tag — the cache is keyed by
-    tag, and a predicated build under tag='full' would poison the
-    full-graph adjacency for the whole session."""
+    A ``node_pred`` REQUIRES a non-default tag — the ``graph_adjacency``
+    artifact is keyed by tag, and a predicated build under tag='full'
+    would poison the full-graph adjacency for the whole session."""
     if node_pred is not None and tag == "full":
         raise ValueError(
             "build_graph_adjacency: node_pred requires a distinct tag "
             "(tag='full' is reserved for the unpredicated graph)"
         )
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key in _G_ADJ_CACHE:
-        return _G_ADJ_CACHE[key]
-    if node_pred is None:
-        adj = _adjacency_rank(_scored_pairs(spark, sf_dir))
-    elif callable(node_pred):
-        scored = _scored_pairs(spark, sf_dir).filter(
-            node_pred(F.col("v1")) & node_pred(F.col("v2"))
-        )
-        adj = _adjacency_rank(scored)
-    else:
+
+    def build() -> DataFrame:
+        if node_pred is None:
+            return _adjacency_rank(_scored_pairs(spark, sf_dir))
+        if callable(node_pred):
+            return _adjacency_rank(
+                _scored_pairs(spark, sf_dir).filter(
+                    node_pred(F.col("v1")) & node_pred(F.col("v2"))
+                )
+            )
         # legacy Column predicate: cannot be rebound to pair endpoints —
         # run the direct subset candidate join (result-identical)
         cf = _corpus_frame(spark, sf_dir)
-        adj = _adjacency_from_pairs(
+        return _adjacency_from_pairs(
             _within_pairs(cf.filter(node_pred)), cf.select("vec_id", "g")
         )
-    _G_ADJ_CACHE[key] = adj
-    return adj
+
+    return artifacts.get("graph_adjacency", spark, sf_dir, build, (tag,))
 
 
 def _stacked_bands(bucketed: DataFrame, vcol: str) -> DataFrame:
@@ -403,6 +382,7 @@ def _adjacency_rank(scored: DataFrame) -> DataFrame:
     ).drop("rk")
 
 
+@artifact("graph_sharded_adjacency")
 def build_graph_adjacency_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard-parallel build + merge (VERDICT r11 missing #2 — the
     DiskANN merge): two half-corpus shard builds generate their own
@@ -417,9 +397,6 @@ def build_graph_adjacency_sharded(spark: SparkSession, sf_dir: str) -> DataFrame
     set, and scores/rank tie-breaks are identical expressions — asserted
     edge-for-edge in tests/test_ann_graph.py, and the serve shares
     ``ann_graph_beam_topk``'s oracle verbatim."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _G_SHARD_CACHE:
-        return _G_SHARD_CACHE[key]
     # one combined corpus pass serves both shards' bucket slices and the
     # grid scoring (r13 — previously two per-shard bucket passes plus a
     # grid pass; the shard split is a filter on the shared checkpointed
@@ -437,12 +414,7 @@ def build_graph_adjacency_sharded(spark: SparkSession, sf_dir: str) -> DataFrame
         .unionAll(_within_pairs(bb, chunked=False))
         .unionAll(_cross_pairs(ba, bb))
     )
-    adj = _adjacency_from_pairs(cand, cf.select("vec_id", "g"))
-    _G_SHARD_CACHE[key] = adj
-    return adj
-
-
-_G_SHARD_CACHE: dict = {}
+    return _adjacency_from_pairs(cand, cf.select("vec_id", "g"))
 
 
 def _pages_from_adj(
@@ -474,26 +446,20 @@ def _pages_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pages_from_adj(spark, sf_dir, build_graph_adjacency(spark, sf_dir))
 
 
-#: per-(session, sf_dir) checkpointed query-vector frame (~n/100 rows).
-#: Every beam ROUND broadcast-joins qv, so a lazy qv re-scanned the
-#: embeddings parquet in every round job of every serve; one tiny
-#: checkpoint per session makes each round read a materialized leaf
-#: instead (r13, guide §1.2: don't re-read what a prior pass produced).
-_G_QV_CACHE: dict = {}
-
-
+#: ``graph_query_vectors`` session artifact: the checkpointed
+#: query-vector frame (~n/100 rows).  Every beam ROUND broadcast-joins
+#: qv, so a lazy qv re-scanned the embeddings parquet in every round job
+#: of every serve; one tiny checkpoint per session makes each round read
+#: a materialized leaf instead (r13, guide §1.2: don't re-read what a
+#: prior pass produced).
+@artifact("graph_query_vectors")
 def _query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    qv = _G_QV_CACHE.get(key)
-    if qv is None:
-        qv = (
-            _grid_emb(spark, sf_dir)
-            .filter(F.col("vec_id") % 100 == 7)
-            .select(F.col("vec_id").alias("query_id"), F.col("g").alias("gq"))
-            .transform(checkpoint_df)
-        )
-        _G_QV_CACHE[key] = qv
-    return qv
+    return (
+        _grid_emb(spark, sf_dir)
+        .filter(F.col("vec_id") % 100 == 7)
+        .select(F.col("vec_id").alias("query_id"), F.col("g").alias("gq"))
+        .transform(checkpoint_df)
+    )
 
 
 def _topw(df: DataFrame, k: int) -> DataFrame:
@@ -608,24 +574,14 @@ def _fetcher_over(pages: DataFrame):
     return fetch
 
 
-#: per-(session, sf_dir) checkpointed full pages frame — built once per
-#: session and shared by every in-session serve (beam/filtered/trained
-#: entry), the ``_G_UPD_CACHE`` pages precedent: repeated serves measure
-#: the beam, not a per-call page rematerialization (r13)
-_G_PAGES_CACHE: dict = {}
-
-
+#: ``graph_pages`` session artifact: the checkpointed full pages frame —
+#: built once per session and shared by every in-session serve
+#: (beam/filtered/trained entry), the ``graph_updated_pages`` precedent:
+#: repeated serves measure the beam, not a per-call page
+#: rematerialization (r13)
+@artifact("graph_pages")
 def _session_pages_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pages = _G_PAGES_CACHE.get(key)
-    if pages is None:
-        pages = (
-            _pages_frame(spark, sf_dir)
-            
-            .transform(checkpoint_df)
-        )
-        _G_PAGES_CACHE[key] = pages
-    return pages
+    return _pages_frame(spark, sf_dir).transform(checkpoint_df)
 
 
 def _session_pages(spark: SparkSession, sf_dir: str):
@@ -1120,15 +1076,10 @@ def _base_node_pred(c: Column | None = None):
     return ~_insert_pred(c)
 
 
-_G_UPD_CACHE: dict = {}
-
-
+@artifact("graph_updated_adjacency")
 def updated_graph_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(src, dst, d)`` after inserting the late batch into the base
     graph (insert beams → new out-edges → reverse edges → re-cap)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _G_UPD_CACHE:
-        return _G_UPD_CACHE[key]
     # checkpoint the base adjacency ONCE: both downstream consumers
     # (the base pages the insert beams walk, and the repair union below)
     # otherwise re-evaluate the entire base build — candidates + ranking
@@ -1156,31 +1107,22 @@ def updated_graph_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     upd0 = base_adj.unionAll(_both_directions(new_edges, "src", "dst"))
     w = W.partitionBy("src").orderBy(F.desc("d"), F.asc("dst"))
-    upd = (
+    return (
         upd0.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _G_DEG_CAP)
         .drop("rk")
-        
         .transform(checkpoint_df)
     )
-    _G_UPD_CACHE[key] = upd
-    return upd
 
 
+@artifact("graph_updated_pages")
 def updated_graph_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpointed pages of the repaired graph — part of the insert
-    artifact (cached with the adjacency), so repeated serves measure
-    the beam, not a per-call page rematerialization."""
-    key = ("pages", spark.sparkContext.applicationId, sf_dir)
-    pages = _G_UPD_CACHE.get(key)
-    if pages is None:
-        pages = (
-            _pages_from_adj(spark, sf_dir, updated_graph_adjacency(spark, sf_dir))
-            
-            .transform(checkpoint_df)
-        )
-        _G_UPD_CACHE[key] = pages
-    return pages
+    """Checkpointed pages of the repaired graph — the second half of the
+    insert artifact, next to ``graph_updated_adjacency``, so repeated
+    serves measure the beam, not a per-call page rematerialization."""
+    return _pages_from_adj(
+        spark, sf_dir, updated_graph_adjacency(spark, sf_dir)
+    ).transform(checkpoint_df)
 
 
 def update_graph_index(spark: SparkSession, sf_dir: str, path: str) -> str:
@@ -1295,42 +1237,43 @@ def ann_graph_insert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _G_TRAINED_ENTRY_K_CAP = 4096  # constant entry budget at corpus scale
 
-_G_ENTRY_CACHE: dict = {}
+
+@artifact("graph_trained_entry")
+def _trained_entry_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id)`` of the entry nodes: the nearest node per Lloyd
+    centroid, a checkpointed DataFrame — entry ids never round-trip
+    through the driver."""
+    from columnflow_spark.functions.similarity import kmeans_fit
+
+    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
+    # corpus size from the shared checkpointed frame's cached count —
+    # not a fresh full parquet scan (r13)
+    n = _corpus_rows(spark, sf_dir)
+    k = max(2, min(_G_TRAINED_ENTRY_K_CAP, (n + _G_ENTRY_MOD - 1) // _G_ENTRY_MOD))
+    cents, _info = kmeans_fit(emb, k=k, iters=3)
+    cents_df = spark.createDataFrame(
+        [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
+        "cid long, ce array<double>",
+    ).select("cid", _grid(F.col("ce")).alias("gc"))
+    ge = _corpus_frame(spark, sf_dir).select("vec_id", "g")
+    w = W.partitionBy("cid").orderBy(F.desc("d"), F.asc("vec_id"))
+    return (
+        ge.join(F.broadcast(cents_df))
+        .select("cid", "vec_id", _gdot(F.col("g"), F.col("gc")).alias("d"))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("vec_id")
+        .distinct()
+        .transform(checkpoint_df)
+    )
 
 
 def trained_entry_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(vec_id, g)`` of the trained entry layer: one graph node per
     Lloyd centroid (build-time cost — the corpus x k assignment is the
-    standard IVF training scan, never paid at serve).  The mapping is a
-    checkpointed DataFrame, cached per (app, sf_dir) — entry ids never
-    round-trip through the driver."""
-    from columnflow_spark.functions.similarity import kmeans_fit
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    mapped = _G_ENTRY_CACHE.get(key)
-    if mapped is None:
-        emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-        # corpus size from the shared checkpointed frame's cached count —
-        # not a fresh full parquet scan (r13)
-        n = _corpus_rows(spark, sf_dir)
-        k = max(2, min(_G_TRAINED_ENTRY_K_CAP, (n + _G_ENTRY_MOD - 1) // _G_ENTRY_MOD))
-        cents, _info = kmeans_fit(emb, k=k, iters=3)
-        cents_df = spark.createDataFrame(
-            [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
-            "cid long, ce array<double>",
-        ).select("cid", _grid(F.col("ce")).alias("gc"))
-        ge = _corpus_frame(spark, sf_dir).select("vec_id", "g")
-        w = W.partitionBy("cid").orderBy(F.desc("d"), F.asc("vec_id"))
-        mapped = (
-            ge.join(F.broadcast(cents_df))
-            .select("cid", "vec_id", _gdot(F.col("g"), F.col("gc")).alias("d"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id")
-            .distinct()
-            .transform(checkpoint_df)
-        )
-        _G_ENTRY_CACHE[key] = mapped
+    standard IVF training scan, never paid at serve).  The mapping is
+    the ``graph_trained_entry`` session artifact."""
+    mapped = _trained_entry_ids(spark, sf_dir)
     # k is capped constant → the entry-id set is model-sized; broadcast
     # keeps the serve join shuffle-free (grid vectors from the shared
     # checkpointed corpus frame — no per-call parquet rescan, r13)

@@ -573,7 +573,7 @@ def ann_index_delete_vacuum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the artifacts without retraining (the unigram-vocab contract); cells
 # come from the same frozen raw-space coarse quantizer the IVF+PQ index
 # uses, so probe routing is SHARED with every other index-served path
-# (ivf_probe_route's session cache).  Rows-only registration (the
+# (the ``ivf_probe_route`` session artifact).  Rows-only registration (the
 # rotation's SVD has no SQL twin); store ≡ in-session-math equality and
 # tombstone-delete behavior are pinned in tests/test_ann_index.py. ---
 _OPQ_INDEX_FORMAT = 1

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df
 
 from columnflow_spark.functions.similarity import (
@@ -205,20 +206,17 @@ def flag_batch_against_store(
     )
 
 
-#: per-(session, sf_dir) memo of the two cutoff counts: ~22 store-query
-#: call sites each scheduled a fresh count job over an unchanging table
-#: (r13, guide §5.2 — the _corpus_rows pattern); the cutoff is a pure
-#: function of the corpus, so one job per session suffices.
-_HIST_N_CACHE: dict = {}
+@artifact("history_rows")
+def _table_rows(spark: SparkSession, sf_dir: str, table: str, id_col: str) -> int:
+    """Row count of a history table, a session artifact: ~22 store-query
+    call sites each scheduled a fresh count job over an unchanging table
+    (r13, guide §5.2 — the _corpus_rows pattern); the cutoff is a pure
+    function of the corpus, so one job per session suffices."""
+    return load_table(spark, sf_dir, table, columns=[id_col]).count()
 
 
 def _history_cutoff(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir, "documents")
-    n = _HIST_N_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-        _HIST_N_CACHE[key] = n
-    return 3 * n // 5
+    return 3 * _table_rows(spark, sf_dir, "documents", "doc_id") // 5
 
 
 def _ensure_history_store(spark: SparkSession, sf_dir: str, h: int) -> str:
@@ -623,12 +621,7 @@ def flag_semdedup_batch(
 
 
 def _sem_history_cutoff(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir, "embeddings")
-    n = _HIST_N_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
-        _HIST_N_CACHE[key] = n
-    return 3 * n // 5
+    return 3 * _table_rows(spark, sf_dir, "embeddings", "vec_id") // 5
 
 
 def _ensure_semdedup_store(spark: SparkSession, sf_dir: str, h: int) -> str:

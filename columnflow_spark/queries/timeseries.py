@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df
 
 from columnflow_spark.queries import query
@@ -26,19 +27,12 @@ SESSION_GAP_MIN = 30
 
 
 # --- sessionization: gap-based sessions via lag + cumulative sum ---
-#: per-(session, sf_dir) cached events row count — the incremental
-#: store twins (KMV, quantile) derive their synthetic ingest cut points
-#: from it; one scan serves both (ADVICE r10 nit)
-_EV_COUNT_CACHE: dict = {}
-
-
+@artifact("events_rows")
 def _events_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EV_COUNT_CACHE:
-        _EV_COUNT_CACHE[key] = load_table(
-            spark, sf_dir, "events", columns=["event_id"]
-        ).count()
-    return _EV_COUNT_CACHE[key]
+    """Events row count, a session artifact — the incremental store
+    twins (KMV, quantile) derive their synthetic ingest cut points from
+    it; one scan serves both (ADVICE r10 nit)."""
+    return load_table(spark, sf_dir, "events", columns=["event_id"]).count()
 
 
 @query(

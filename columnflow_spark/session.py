@@ -15,7 +15,8 @@ from pyspark.sql import SparkSession
 
 
 def session_key(spark: SparkSession) -> str:
-    """Stable per-session cache key for the engine's driver-side caches.
+    """Stable per-session key of the engine's session artifacts
+    (``core/artifacts``).
 
     ``id(spark)`` is NOT safe here: CPython recycles object ids after a
     torn-down session is garbage-collected, so a long-lived process that

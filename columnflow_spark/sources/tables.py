@@ -19,7 +19,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from columnflow_spark.session import session_key
+from columnflow_spark.core.artifacts import artifact
 
 TABLES = (
     "region",
@@ -42,14 +42,18 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: per-(session, dir, table) cache of the *base* relation.  A catalog would
-#: hold this for registered tables; for path reads Spark re-lists the
-#: directory and re-reads the parquet footer on every ``spark.read.parquet``
-#: call, which at many-queries-per-session cost ~0.1-0.3 s of driver time
-#: per table reference.  The cached object is a lazy plan, not data: column
-#: pruning/pushdown from each query's ``select``/``filter`` still reach the
-#: scan unchanged.
-_BASE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+@artifact("base_table")
+def _base_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The *base* relation of one table, a session artifact.  A catalog
+    would hold this for registered tables; for path reads Spark re-lists
+    the directory and re-reads the parquet footer on every
+    ``spark.read.parquet`` call, which at many-queries-per-session cost
+    ~0.1-0.3 s of driver time per table reference.  The artifact is a
+    lazy plan, not data: column pruning/pushdown from each query's
+    ``select``/``filter`` still reach the scan unchanged."""
+    if name == "events":
+        return _load_events(spark, sf_dir)
+    return spark.read.parquet(table_path(sf_dir, name))
 
 
 def load_table(
@@ -58,14 +62,7 @@ def load_table(
     name: str,
     columns: Iterable[str] | None = None,
 ) -> DataFrame:
-    key = (session_key(spark), sf_dir, name)
-    df = _BASE_CACHE.get(key)
-    if df is None:
-        if name == "events":
-            df = _load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(table_path(sf_dir, name))
-        _BASE_CACHE[key] = df
+    df = _base_table(spark, sf_dir, name)
     if columns is not None:
         df = df.select(*columns)
     return df

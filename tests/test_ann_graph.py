@@ -341,9 +341,10 @@ def test_trained_entry_stays_in_plan(spark, sf_dir, monkeypatch):
     mapping itself stays in-plan (cached as a checkpointed DataFrame)."""
     from pyspark.sql import DataFrame
 
+    from columnflow_spark.core import artifacts
     from columnflow_spark.queries import anngraph
 
-    anngraph._G_ENTRY_CACHE.clear()
+    artifacts.purge("graph_trained_entry")
     k_cap = anngraph._G_TRAINED_ENTRY_K_CAP
     dim = anngraph._G_DIM
     sizes: list = []
@@ -358,17 +359,20 @@ def test_trained_entry_stays_in_plan(spark, sf_dir, monkeypatch):
     entry = anngraph.trained_entry_nodes(spark, sf_dir)
     monkeypatch.undo()
     assert all(s <= k_cap * dim for s in sizes), sizes
-    # the cache holds the in-plan mapping, not a driver-side id list
-    cached = next(iter(anngraph._G_ENTRY_CACHE.values()))
+    # the registry holds the in-plan mapping, not a driver-side id list
+    def not_built():
+        raise AssertionError("trained entry mapping was not registered")
+
+    cached = artifacts.get("graph_trained_entry", spark, sf_dir, not_built)
     assert isinstance(cached, DataFrame)
     assert entry.count() >= 2
     # the constant cap binds: a tiny cap yields at most that many entries
-    anngraph._G_ENTRY_CACHE.clear()
+    artifacts.purge("graph_trained_entry")
     monkeypatch.setattr(anngraph, "_G_TRAINED_ENTRY_K_CAP", 4)
     try:
         assert anngraph.trained_entry_nodes(spark, sf_dir).count() <= 4
     finally:
-        anngraph._G_ENTRY_CACHE.clear()
+        artifacts.purge("graph_trained_entry")
 
 
 def test_delete_excludes_tombstoned_and_preserves_rest(spark, sf_dir):

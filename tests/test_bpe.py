@@ -71,13 +71,14 @@ def test_distributed_fallback_batches_merges_identically(spark, sf_dir, monkeypa
     # prefix + creation-count domination bound) must reproduce the
     # one-merge-at-a-time list EXACTLY, in fewer rounds
     import columnflow_spark.queries.mmdata as M
+    from columnflow_spark.core.artifacts import purge
 
-    M._BPE_MERGE_CACHE.clear()
+    purge("bpe_merges")
     reference = M.bpe_train(spark, sf_dir)  # driver path (under cap)
-    M._BPE_MERGE_CACHE.clear()
+    purge("bpe_merges")
     monkeypatch.setattr(M, "_BPE_DRIVER_CAP", 0)  # synthetic super-cap vocab
     batched = M.bpe_train(spark, sf_dir)
-    M._BPE_MERGE_CACHE.clear()
+    purge("bpe_merges")
     assert batched == reference
     assert len(batched) == M._BPE_ROUNDS
     # on this corpus the 6 merges land in <= 3 rounds (measured 3);
@@ -109,13 +110,14 @@ def test_wordpiece_distributed_equals_driver(spark, sf_dir, monkeypatch):
     """Above the driver cap the distributed rounds must learn the
     identical merge table (the BPE cap-monkeypatch proof)."""
     import columnflow_spark.queries.mmdata as M
+    from columnflow_spark.core.artifacts import purge
 
-    M._WP_MERGE_CACHE.clear()
+    purge("wordpiece_merges")
     reference = M.wordpiece_train(spark, sf_dir)
-    M._WP_MERGE_CACHE.clear()
+    purge("wordpiece_merges")
     monkeypatch.setattr(M, "_BPE_DRIVER_CAP", 0)
     distributed = M.wordpiece_train(spark, sf_dir)
-    M._WP_MERGE_CACHE.clear()
+    purge("wordpiece_merges")
     assert distributed == reference and len(reference) > 0
 
 

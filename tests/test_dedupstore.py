@@ -589,7 +589,7 @@ def test_minhash_store_delete_unblocks_neardups(spark, tmp_path):
         flag_minhash_batch,
         upsert_minhash_batch,
     )
-    import columnflow_spark.queries.mmdata as mm
+    from columnflow_spark.core.artifacts import purge
 
     base = " ".join(f"w{i}" for i in range(40))
     other = " ".join(f"v{i}" for i in range(40))
@@ -607,7 +607,7 @@ def test_minhash_store_delete_unblocks_neardups(spark, tmp_path):
 
     d = tempfile.mkdtemp(prefix="cf_mh_fixture_")
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    mm._GRAMS_CACHE.clear(); mm._SIGS_CACHE.clear()
+    purge("hashed_grams"); purge("minhash_sigs")
     path = str(tmp_path / "mh")
     upsert_minhash_batch(spark, d, path, batch=0, batch_pred=F.col("doc_id") < 100)
     flag = lambda: {  # noqa: E731
@@ -623,7 +623,7 @@ def test_minhash_store_delete_unblocks_neardups(spark, tmp_path):
     # idempotent per batch id
     delete_docs_from_minhash_store(spark, deleted, path, batch=0)
     assert flag() == {100: False, 101: True}
-    mm._GRAMS_CACHE.clear(); mm._SIGS_CACHE.clear()
+    purge("hashed_grams"); purge("minhash_sigs")
 
 
 def test_semdedup_purge_clears_and_stays_equal(spark, sf_dir, tmp_path):

@@ -32,44 +32,44 @@ def test_graph_beam_partition_invariance(spark, sf_dir):
     # the beam's loop state is collect-driven (entrant buckets) and the
     # adjacency build is cached per session — clear the cache so BOTH
     # the graph build and the walk re-run under each parallelism
-    from columnflow_spark.queries import anngraph
+    from columnflow_spark.core.artifacts import purge
 
     q = all_queries()["ann_graph_beam_topk"]
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        anngraph._G_ADJ_CACHE.clear()
+        purge("graph_adjacency")
         a = sorted(map(tuple, q(spark, sf_dir).collect()))
         spark.conf.set("spark.sql.shuffle.partitions", "29")
-        anngraph._G_ADJ_CACHE.clear()
+        purge("graph_adjacency")
         b = sorted(map(tuple, q(spark, sf_dir).collect()))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-        anngraph._G_ADJ_CACHE.clear()
+        purge("graph_adjacency")
     assert a == b
 
 
 def test_ltr_training_partition_invariance(spark, sf_dir):
     # the per-step 1e-6 weight rounding must absorb partial-sum order
     # differences — the published integer weights are the contract
+    from columnflow_spark.core.artifacts import purge
     from columnflow_spark.queries import retrieval
 
+    ltr = ("ltr_features", "ltr_weights", "ltr_pairwise_weights")
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        retrieval._LTR_FEAT_CACHE.clear()
-        retrieval._LTR_W_CACHE.clear()
-        retrieval._LTR_PW_CACHE.clear()
+        for artifact in ltr:
+            purge(artifact)
         a = (retrieval.ltr_train(spark, sf_dir), retrieval.ltr_train_pairwise(spark, sf_dir))
         spark.conf.set("spark.sql.shuffle.partitions", "29")
-        retrieval._LTR_FEAT_CACHE.clear()
-        retrieval._LTR_W_CACHE.clear()
-        retrieval._LTR_PW_CACHE.clear()
+        for artifact in ltr:
+            purge(artifact)
         b = (retrieval.ltr_train(spark, sf_dir), retrieval.ltr_train_pairwise(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-        for c in (retrieval._LTR_FEAT_CACHE, retrieval._LTR_W_CACHE, retrieval._LTR_PW_CACHE):
-            c.clear()
+        for artifact in ltr:
+            purge(artifact)
     assert a == b
 
 
@@ -91,18 +91,18 @@ def test_logreg_training_partition_invariance(spark, sf_dir):
     # training sums are partial-aggregated, so the trained weights differ
     # at ulp level across parallelism — the round-4 published model must
     # not.  The per-corpus weight memo is cleared so training re-runs.
-    from columnflow_spark.queries import mmdata
+    from columnflow_spark.core.artifacts import purge
 
     q = all_queries()["ml_logreg_fit"]
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        mmdata._LOGREG_W_CACHE.clear()
+        purge("logreg_weights")
         a = sorted(map(tuple, q(spark, sf_dir).collect()))
         spark.conf.set("spark.sql.shuffle.partitions", "29")
-        mmdata._LOGREG_W_CACHE.clear()
+        purge("logreg_weights")
         b = sorted(map(tuple, q(spark, sf_dir).collect()))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-        mmdata._LOGREG_W_CACHE.clear()
+        purge("logreg_weights")
     assert a == b, "published logreg model changed under different shuffle parallelism"

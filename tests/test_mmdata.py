@@ -623,8 +623,8 @@ def test_unigram_vocab_store_roundtrip(spark, sf_dir):
     produced: build -> clear session cache -> serve == train."""
     import shutil
 
+    from columnflow_spark.core.artifacts import purge
     from columnflow_spark.queries.mmdata import (
-        _ULM_CACHE,
         _ulm_vocab,
         _ulm_word_counts,
         unigram_train_rows,
@@ -633,10 +633,10 @@ def test_unigram_vocab_store_roundtrip(spark, sf_dir):
 
     trained = unigram_train_rows(spark, _ulm_word_counts(spark, sf_dir))
     shutil.rmtree(unigram_vocab_store_path(sf_dir), ignore_errors=True)
-    _ULM_CACHE.clear()
+    purge("unigram_vocab")
     served = _ulm_vocab(spark, sf_dir)  # builds the store, then reads it
     assert served == trained
-    _ULM_CACHE.clear()
+    purge("unigram_vocab")
     assert _ulm_vocab(spark, sf_dir) == trained  # pure store read
 
 

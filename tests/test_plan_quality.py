@@ -8,18 +8,36 @@ from __future__ import annotations
 import pytest
 import contextlib
 import io
-import os
 
+from pyspark.sql import DataFrame
+
+from columnflow_spark.core import artifacts
 from columnflow_spark.queries import all_queries
 
 
+@contextlib.contextmanager
+def _build_through():
+    """Registry patched so the nested events, the one persisted session
+    artifact, are built through, fresh and unpersisted: the plan then
+    shows the collection build's raw scans.  Checkpointed artifacts plan
+    the same either way and stay served from the registry."""
+    real_get = artifacts.get
+
+    def get(name, spark, sf_dir, build, params=()):
+        if name != "nested_events":
+            return real_get(name, spark, sf_dir, build, params)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(DataFrame, "persist", lambda self, *args, **kwargs: self)
+            return build()
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(artifacts, "get", get)
+        yield
+
+
 def _plan(spark, sf_dir, name: str) -> str:
-    # inspect the raw compiled plan, not the in-session nested-events cache
-    os.environ["SPARK_GRAFT_CACHE_NESTED"] = "0"
-    try:
+    with _build_through():
         df = all_queries()[name](spark, sf_dir)
-    finally:
-        os.environ.pop("SPARK_GRAFT_CACHE_NESTED", None)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -71,9 +71,10 @@ def test_session_artifact_caches_honor_reliable_mode(spark, sf_dir, reliable_mod
     (minhash signatures, BPE word counts — VERDICT r11 nit) must route
     through checkpoint_df: under the switch their materialization lands
     on the checkpoint store like every loop-body site (79/79)."""
+    from columnflow_spark.core.artifacts import purge
     from columnflow_spark.queries import mmdata
 
-    mmdata._SIGS_CACHE.clear()
+    purge("minhash_sigs")
     sigs = mmdata.minhash_sigs(spark, sf_dir)
     assert sigs.count() > 0
     wc = mmdata._bpe_word_state(spark, sf_dir)
@@ -82,4 +83,4 @@ def test_session_artifact_caches_honor_reliable_mode(spark, sf_dir, reliable_mod
     assert ckpt_dir is not None
     local = ckpt_dir.replace("file:", "")
     assert any(files for _, _, files in os.walk(local)), local
-    mmdata._SIGS_CACHE.clear()  # a reliable-pinned frame must not leak
+    purge("minhash_sigs")  # a reliable-pinned frame must not leak
