@@ -83,6 +83,7 @@ from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import (
     anti_tombstones,
     ensure_store,
+    mark_built,
     upsert_partitions,
     upsert_tombstones,
 )
@@ -632,13 +633,6 @@ def _read_store_buckets(path: str) -> int:
         return _G_STORE_BUCKETS
 
 
-def _mark_built(path: str) -> None:
-    # explicit completeness marker: dynamic partition overwrite emits no
-    # root _SUCCESS (the annindex.py store lesson)
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_G_FORMAT}\n")
-
-
 def build_graph_index(
     spark: SparkSession,
     sf_dir: str,
@@ -692,7 +686,7 @@ def build_graph_index(
     )
     upsert_partitions(cents, _centroids_path(path), partition_by=["batch"])
     if mark:
-        _mark_built(path)
+        mark_built(path, _G_FORMAT)
     return path
 
 
@@ -808,7 +802,7 @@ def _ensure_deleted_graph_index(spark: SparkSession, sf_dir: str) -> str:
     def build(p: str) -> None:
         build_graph_index(spark, sf_dir, p, mark=False)
         upsert_tombstones(_delete_ids(spark, sf_dir), p, batch=0, id_col="vec_id")
-        _mark_built(p)
+        mark_built(p, _G_FORMAT)
 
     return ensure_store(_deleted_graph_path(sf_dir), build)
 
@@ -1595,7 +1589,7 @@ def _ensure_vacuumed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     def build(p: str) -> None:
         build_graph_index(spark, sf_dir, p, mark=False)
         upsert_tombstones(_delete_ids(spark, sf_dir), p, batch=0, id_col="vec_id")
-        _mark_built(p)
+        mark_built(p, _G_FORMAT)
 
     path = ensure_store(_vacuumed_graph_path(sf_dir), build)
     if os.path.exists(os.path.join(path, "_deleted")):

@@ -58,6 +58,8 @@ from columnflow_spark.sources.sinks import (
     anti_tombstones,
     clear_tombstones,
     ensure_store,
+    invalidate_store,
+    mark_built,
     replace_store,
     upsert_partitions,
     upsert_tombstones,
@@ -117,13 +119,7 @@ def upsert_index_frame(
         F.lit(int(batch)).alias("batch"),
     )
     upsert_partitions(idx, path, partition_by=["cid", "batch"])
-    # completeness marker: dynamic partition overwrite does NOT emit a
-    # root _SUCCESS (it commits per partition), so without an explicit
-    # marker the reuse check can never pass and every session silently
-    # pays a full rebuild — the store-level equivalent of a task output
-    # existence check
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_INDEX_FORMAT}\n")
+    mark_built(path, _INDEX_FORMAT)
     return path
 
 
@@ -390,10 +386,7 @@ def ann_index_needs_rebuild(
 def invalidate_index(path: str) -> None:
     """Trip the index's reuse contract (``_BUILT`` + sequence markers) so
     the next ensure pays a fresh build with re-trained quantizers."""
-    for marker in ("_BUILT", "_SEQ_COMPLETE"):
-        p = os.path.join(path, marker)
-        if os.path.exists(p):
-            os.remove(p)
+    invalidate_store(path)
 
 
 def _trend_index_path(sf_dir: str) -> str:
@@ -631,8 +624,7 @@ def build_opq_index(
         F.lit(int(batch)).alias("batch"),
     )
     upsert_partitions(idx, path, partition_by=["cid", "batch"])
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_OPQ_INDEX_FORMAT}\n")
+    mark_built(path, _OPQ_INDEX_FORMAT)
     return path
 
 

@@ -45,7 +45,8 @@ Reference anchor: the reference engine has no streaming/CDC surface
 from __future__ import annotations
 
 import os
-import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -58,9 +59,10 @@ from columnflow_spark.queries.streaming import (
     _SCC_PART_OFF,
     _SCC_QTY_MIN,
     _derive_scc_gb,
-    _ingest_batch_rows,
+    _drain,
     _read_scc_gb,
     _write_scc_gb,
+    replay_ingest,
 )
 from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import upsert_partitions
@@ -487,58 +489,47 @@ def order_part_components_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_cc_cdc_lifecycle(spark: SparkSession, sf_dir: str) -> str:
+@contextmanager
+def _run_cc_cdc_lifecycle(spark: SparkSession, sf_dir: str) -> Iterator[str]:
     """Shared CDC drive: stream-ingest the ``qty >= {_SCC_QTY_MIN}``
     edges through :func:`cc_apply_edges`, then retract the
     ``qty == {_SCC_QTY_MIN}`` pairs as two delete batches through
-    :func:`cc_retract_edges`.  Returns the store path."""
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_cccdc_store_")
-    n = load_table(spark, sf_dir, "lineitem", columns=["l_orderkey"]).count()
-    # scale-adaptive bucket modulus, recorded at store creation (r13)
-    _write_scc_gb(store, _derive_scc_gb(n))
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/lineitem.parquet")
-        .option("order_col", "l_orderkey")
-        .option("batch_rows", _ingest_batch_rows(n, target_batches=8))
-        .load()
-        .filter(F.col("l_quantity") >= _SCC_QTY_MIN)
-        .select(
-            F.col("l_orderkey").alias("a"),
-            (F.col("l_partkey") + _SCC_PART_OFF).alias("b"),
+    :func:`cc_retract_edges`.  Yields the scratch store path, which is
+    removed when the block exits."""
+    with replay_ingest(
+        spark, sf_dir, "lineitem", "l_orderkey", "store", target_batches=8
+    ) as rp:
+        (store,) = rp.dirs
+        # scale-adaptive bucket modulus, recorded at store creation (r13)
+        _write_scc_gb(store, _derive_scc_gb(rp.rows))
+        _drain(
+            rp.stream.filter(F.col("l_quantity") >= _SCC_QTY_MIN).select(
+                F.col("l_orderkey").alias("a"),
+                (F.col("l_partkey") + _SCC_PART_OFF).alias("b"),
+            ),
+            lambda bdf, bid: cc_apply_edges(spark, bdf, store, int(bid)),
         )
-    )
-    q = stream.writeStream.foreachBatch(
-        lambda bdf, bid: cc_apply_edges(spark, bdf, store, int(bid))
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    dels = (
-        spread(
-            load_table(
-                spark,
-                sf_dir,
-                "lineitem",
-                columns=["l_orderkey", "l_partkey", "l_quantity"],
+        dels = (
+            spread(
+                load_table(
+                    spark,
+                    sf_dir,
+                    "lineitem",
+                    columns=["l_orderkey", "l_partkey", "l_quantity"],
+                )
             )
+            .filter(F.col("l_quantity") == _SCC_QTY_MIN)
+            .select(
+                F.col("l_orderkey").alias("a"),
+                (F.col("l_partkey") + _SCC_PART_OFF).alias("b"),
+            )
+            .distinct()
         )
-        .filter(F.col("l_quantity") == _SCC_QTY_MIN)
-        .select(
-            F.col("l_orderkey").alias("a"),
-            (F.col("l_partkey") + _SCC_PART_OFF).alias("b"),
-        )
-        .distinct()
-    )
-    # two CDC delete batches (id-split) — the split re-solve must hold
-    # across batch boundaries, not just as one big retraction
-    cc_retract_edges(spark, dels.filter(F.col("a") % 2 == 0), store, 1000)
-    cc_retract_edges(spark, dels.filter(F.col("a") % 2 == 1), store, 1001)
-    return store
+        # two CDC delete batches (id-split) — the split re-solve must hold
+        # across batch boundaries, not just as one big retraction
+        cc_retract_edges(spark, dels.filter(F.col("a") % 2 == 0), store, 1000)
+        cc_retract_edges(spark, dels.filter(F.col("a") % 2 == 1), store, 1001)
+        yield store
 
 
 @query("streaming_cc_cdc", oracle=_CC_DEL_ORACLE)
@@ -550,8 +541,10 @@ def streaming_cc_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches through :func:`cc_retract_edges` — split re-solve bounded to
     the touched components.  At rest ≡ the batch twin ≡ the reduced-set
     min-reachability oracle."""
-    store = _run_cc_cdc_lifecycle(spark, sf_dir)
-    return _order_labels(spark, sf_dir, cc_current_labels(spark, store))
+    with _run_cc_cdc_lifecycle(spark, sf_dir) as store:
+        return _order_labels(spark, sf_dir, cc_current_labels(spark, store)).transform(
+            checkpoint_df
+        )
 
 
 @query("streaming_cc_cdc_vacuum", oracle=_CC_DEL_ORACLE)
@@ -562,6 +555,8 @@ def streaming_cc_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch=0 layout, purging tombstones and stale history) → serve.
     Hash-equal to the un-compacted CDC serve and to the reduced-set
     oracle — the layout invariance IS the vacuum correctness proof."""
-    store = _run_cc_cdc_lifecycle(spark, sf_dir)
-    cc_compact_store(spark, store)
-    return _order_labels(spark, sf_dir, cc_current_labels(spark, store))
+    with _run_cc_cdc_lifecycle(spark, sf_dir) as store:
+        cc_compact_store(spark, store)
+        return _order_labels(spark, sf_dir, cc_current_labels(spark, store)).transform(
+            checkpoint_df
+        )

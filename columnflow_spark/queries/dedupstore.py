@@ -58,6 +58,9 @@ from columnflow_spark.sources.sinks import (
     anti_tombstones,
     clear_tombstones,
     ensure_store,
+    invalidate_store,
+    is_built,
+    mark_built,
     replace_store,
     upsert_partitions,
     upsert_tombstones,
@@ -111,11 +114,7 @@ def upsert_fingerprints(fp: DataFrame, path: str, *, batch: int) -> str:
         .withColumn("batch", F.lit(int(batch)))
     )
     upsert_partitions(rows, path, partition_by=["band", "batch"])
-    # dynamic partition overwrite emits no root _SUCCESS; the explicit
-    # marker is the store completeness check (see annindex.py — without
-    # it every session silently pays a full rebuild)
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_STORE_FORMAT}\n")
+    mark_built(path, _STORE_FORMAT)
     return path
 
 
@@ -502,8 +501,7 @@ def upsert_semdedup_frame(vecs: DataFrame, path: str, *, batch: int) -> str:
         vecs, _sem_centroids(vecs.sparkSession, path)
     ).select("vec_id", "embedding", "cid", F.lit(int(batch)).alias("batch"))
     upsert_partitions(rows, path, partition_by=["cid", "batch"])
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_SEM_STORE_FORMAT}\n")
+    mark_built(path, _SEM_STORE_FORMAT)
     return path
 
 
@@ -545,7 +543,7 @@ def flag_semdedup_frame(
         .select("cid", "vec_id", "embedding")
         .transform(checkpoint_df)
     )
-    if not os.path.exists(os.path.join(path, "_BUILT")):
+    if not is_built(path):
         inb = (
             chunked_self_pairs(batch, "cid", "vec_id", cap=256)
             .filter(cosine(F.col("embedding"), F.col("embedding_b")) >= F.lit(_SEM_TAU))
@@ -768,10 +766,7 @@ def invalidate_semdedup_store(path: str) -> None:
     makes every ensure helper (and any ``_BUILT``-gated consumer) treat
     the store as absent, so the next touch pays a fresh build with
     re-trained centroids — the rebuild path drift feeds into."""
-    for marker in ("_BUILT", "_SEQ_COMPLETE"):
-        p = os.path.join(path, marker)
-        if os.path.exists(p):
-            os.remove(p)
+    invalidate_store(path)
 
 
 def _sem_trend_store_path(sf_dir: str) -> str:
@@ -934,8 +929,7 @@ def upsert_phash_fp(ph: DataFrame, path: str, *, batch: int) -> str:
         F.lit(int(batch)).alias("batch"),
     )
     upsert_partitions(rows, path, partition_by=["bi", "batch"])
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_PH_STORE_FORMAT}\n")
+    mark_built(path, _PH_STORE_FORMAT)
     return path
 
 
@@ -1112,8 +1106,7 @@ def upsert_substring_grams(grams: DataFrame, path: str, *, batch: int) -> str:
         .withColumn("batch", F.lit(int(batch)))
     )
     upsert_partitions(rows, path, partition_by=["gb", "batch"])
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_SSTR_STORE_FORMAT}\n")
+    mark_built(path, _SSTR_STORE_FORMAT)
     return path
 
 
@@ -1651,8 +1644,7 @@ def upsert_minhash_batch(
         .withColumn("batch", F.lit(int(batch)))
     )
     upsert_partitions(docs, os.path.join(path, "_docs"), partition_by=["batch"])
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_MH_STORE_FORMAT}\n")
+    mark_built(path, _MH_STORE_FORMAT)
     return path
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from columnflow_spark.queries import query
 from columnflow_spark.queries.annindex import content_tag, scratch_root
 from columnflow_spark.sources import load_table
+from columnflow_spark.sources.sinks import is_built, mark_built
 from columnflow_spark.sources.tables import table_path
 
 #: microsecond-preserving pattern shared by writer and reader; the default
@@ -54,15 +55,13 @@ def _write_once(df: DataFrame, out: str, fmt: str, **options) -> None:
     the IVF+PQ index and dedup stores): repeated runs — including a
     concurrent session's later run — read the existing files instead of
     overwriting them out from under an in-flight scan."""
-    marker = os.path.join(out, "_BUILT")
-    if os.path.exists(marker):
+    if is_built(out):
         return
     writer = df.write.mode("overwrite")
     for k, v in options.items():
         writer = writer.option(k, v)
     getattr(writer, fmt)(out)
-    with open(marker, "w"):
-        pass
+    mark_built(out)
 
 
 @query(

@@ -58,6 +58,7 @@ from columnflow_spark.functions.text import (
 )
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
+from columnflow_spark.sources.sinks import is_built, mark_built
 
 JACCARD_THRESHOLD = 0.8
 
@@ -6324,7 +6325,7 @@ def build_unigram_vocab_store(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     path = unigram_vocab_store_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_BUILT")):
+    if is_built(path):
         return path  # training is the expensive part — skip before it
     rows = unigram_train_rows(spark, _ulm_word_counts(spark, sf_dir))
     from columnflow_spark.sources.sinks import tiny_rows_df
@@ -6336,8 +6337,7 @@ def build_unigram_vocab_store(spark: SparkSession, sf_dir: str) -> str:
 
     def build(p: str) -> None:
         df.write.mode("overwrite").parquet(os.path.join(p, "vocab"))
-        with open(os.path.join(p, "_BUILT"), "w") as f:
-            f.write("ulm vocab v1\n")
+        mark_built(p, "ulm-vocab-v1")
 
     from columnflow_spark.sources.sinks import ensure_store
 

@@ -594,16 +594,16 @@ def ml_interface_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks (save_model/open_model), held-out-fold scoring compiled to a
     literal when-chain.  The betas travel driver-side as three doubles;
     everything else stays distributed."""
-    import tempfile
-
     from columnflow_spark.ml import get_ml_model
+    from columnflow_spark.queries.streaming import scratch_dirs
 
     model = get_ml_model("LinregDemo")()
     li = load_table(spark, sf_dir, "lineitem", columns=sorted(model.uses()))
-    out_dir = tempfile.mkdtemp(prefix="mlmodel_")
-    model.run_training(spark, li, output_dir=out_dir)
-    # models=None: reload the fold artifacts from the sink outputs
-    scored = model.run_evaluation(spark, li, models=None, output_dir=out_dir)
+    with scratch_dirs("mlmodel") as (out_dir,):
+        model.run_training(spark, li, output_dir=out_dir)
+        # models=None: reload the fold artifacts from the sink outputs
+        # (read driver-side, so the scored frame never touches out_dir)
+        scored = model.run_evaluation(spark, li, models=None, output_dir=out_dir)
     return scored.filter(F.col("l_orderkey") < 1000).select(
         F.col("l_orderkey").alias("okey"), "fold", "x1", "x2", F.round("score", 4).alias("score")
     )

@@ -40,7 +40,7 @@ from columnflow_spark.functions.similarity import cosine
 from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import ensure_store
+from columnflow_spark.sources.sinks import ensure_store, mark_built
 
 # fixed search workload: deterministic multi-term keyword queries over the
 # synthetic corpus vocabulary (TESTDATA.md documents.text)
@@ -955,8 +955,7 @@ def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
         F.sum(F.size("ts")).cast("long").alias("sum_dl"),
     ).withColumn("batch", F.lit(int(batch)))
     upsert_partitions(stats, os.path.join(path, "_stats"), partition_by=["batch"])
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(f"format={_POSTINGS_FORMAT}\n")
+    mark_built(path, _POSTINGS_FORMAT)
     return path
 
 

@@ -2,35 +2,55 @@
 reference is batch-only; its chunk loop maps onto micro-batches).
 
 Each query drives a real streaming pipeline (readStream -> transform ->
-writeStream) to completion on the parquet events table via the memory sink
-(``processAllAvailable`` makes a batch of files drive the stream
-synchronously), then returns the materialized result as a DataFrame, so
-the driver's oracle compare applies to streaming output too:
+writeStream) to completion and returns its at-rest result as a
+DataFrame, so the oracle compare applies to streaming output too.  Two
+harnesses drive every stream:
 
-- tumbling-window agg (window())
-- session windows (session_window())
-- custom stateful operator (applyInPandasWithState)
+- :func:`_run_to_memory` — the memory sink (``processAllAvailable``
+  makes a batch of files drive the stream synchronously) for the window,
+  session, stateful and join operators:
+
+  - tumbling-window agg (window())
+  - session windows (session_window())
+  - custom stateful operator (applyInPandasWithState)
+
+- :func:`replay_ingest` — the replay-ingest primitive for the
+  store-maintenance twins: it registers the deterministic
+  ``events_replay`` source (sources/pydatasource.py), sizes the
+  micro-batches through :func:`_ingest_batch_rows`, and owns the twin's
+  scratch store directories (:func:`scratch_dirs`); :func:`_drain` runs
+  ``foreachBatch(sink)`` to completion.  A twin keeps only its sink body
+  and its at-rest read.
+
+Both materialize the at-rest result with ``checkpoint_df`` before they
+release what they created (the memory sink's ``stream_out_*`` view, the
+scratch directories), so nothing a twin creates outlives its return.
 
 At scale the same code runs unchanged against kafka/file streams; the
-memory sink is only the local test harness.
+memory sink and the replay source are only the local test harness.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from typing import NamedTuple
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-
-from columnflow_spark.core.state import checkpoint_df
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from columnflow_spark.core.state import checkpoint_df
 from columnflow_spark.queries import query
 from columnflow_spark.sources import normalize_events_ts, table_path
+from columnflow_spark.sources.sinks import is_built, upsert_partitions
 
 # raw schema of events.parquet; ts as NTZ (the parquet stores timestamp[us]
 # without a timezone) — normalize_events_ts casts it to session-TZ TIMESTAMP,
@@ -50,18 +70,17 @@ _EVENTS_RAW_SCHEMA = T.StructType(
 
 
 def _ingest_batch_rows(n: int, *, floor: int = 200, target_batches: int = 40) -> str:
-    """Replay micro-batch size for the store-ingest twins (VERDICT r7
-    next #6): env-overridable (``SPARK_GRAFT_STREAM_BATCH_ROWS``),
-    otherwise scaled so a full ingest is ~``target_batches``
-    micro-batches, with a floor that keeps the multi-batch state
-    machinery genuinely exercised at test scale (sf0.001's 500 docs
-    still replay as 3 batches).  The at-rest oracle equality is
-    batch-size-INVARIANT — batch boundaries affect state timing, never
-    the at-rest output (pinned by the crafted-boundary replay tests) —
-    so this knob moves wall time only: sf1's 50k docs drop from 250
-    micro-batches (~24 min of per-batch upsert overhead) to 40."""
-    import os
-
+    """Replay micro-batch size for ``n`` rows, the one sizing rule of
+    every replay twin (VERDICT r7 next #6): env-overridable
+    (``SPARK_GRAFT_STREAM_BATCH_ROWS``), otherwise scaled so a full
+    ingest is ~``target_batches`` micro-batches, with a floor that keeps
+    the multi-batch state machinery genuinely exercised at test scale
+    (sf0.001's 500 docs still replay as 3 batches).  The at-rest oracle
+    equality is batch-size-INVARIANT — batch boundaries affect state
+    timing, never the at-rest output (pinned by the crafted-boundary
+    replay tests) — so this knob moves wall time only: sf1's 50k docs
+    drop from 250 micro-batches (~24 min of per-batch upsert overhead)
+    to 40."""
     env = os.environ.get("SPARK_GRAFT_STREAM_BATCH_ROWS")
     if env:
         return env
@@ -80,13 +99,79 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_to_memory(df: DataFrame, spark: SparkSession, mode: str = "complete") -> DataFrame:
+    """Drain ``df`` into a memory sink and return its rows, materialized
+    so the sink's ``stream_out_*`` view can be dropped on return."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
+        return spark.table(name).transform(checkpoint_df)
     finally:
         q.stop()
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
+
+
+@contextmanager
+def scratch_dirs(*names: str) -> Iterator[list[str]]:
+    """Fresh empty directories ``names`` under one private temp root,
+    removed with all their contents when the block exits — the one owner
+    of a query's scratch stores.  A result that reads them must be
+    materialized (``checkpoint_df``) before the block exits."""
+    with tempfile.TemporaryDirectory(prefix="cf_scratch_") as root:
+        dirs = [os.path.join(root, name) for name in names]
+        for d in dirs:
+            os.mkdir(d)
+        yield dirs
+
+
+class Replay(NamedTuple):
+    stream: DataFrame  # the replayed table, one micro-batch per slice
+    dirs: list[str]  # the scratch directories, in the order named
+    rows: int  # the table's row count
+
+
+@contextmanager
+def replay_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    order_col: str,
+    *scratch: str,
+    floor: int = 200,
+    target_batches: int = 40,
+) -> Iterator[Replay]:
+    """The replay-ingest primitive: ``table`` replayed in ``order_col``
+    order through the ``events_replay`` source, as micro-batches of
+    :func:`_ingest_batch_rows` rows, plus the ``scratch`` store
+    directories of :func:`scratch_dirs`.  Drive the stream with
+    :func:`_drain` and materialize the at-rest result inside the block:
+    the directories are gone once it exits."""
+    from columnflow_spark.sources.pydatasource import register
+
+    register(spark)
+    path = table_path(sf_dir, table)
+    n = pq.ParquetFile(path).metadata.num_rows
+    stream = (
+        spark.readStream.format("events_replay")
+        .option("path", path)
+        .option("order_col", order_col)
+        .option("batch_rows", _ingest_batch_rows(n, floor=floor, target_batches=target_batches))
+        .load()
+    )
+    with scratch_dirs(*scratch) as dirs:
+        yield Replay(stream, dirs, n)
+
+
+def _drain(stream: DataFrame, sink: Callable[[DataFrame, int], None]) -> None:
+    """Run ``foreachBatch(sink)`` until the source is exhausted.
+    processAllAvailable, not availableNow: the replay source's
+    prefetching simple reader exposes one batch per read() — availableNow
+    terminates after the first prefetched range."""
+    q = stream.writeStream.foreachBatch(sink).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 @query(
@@ -147,17 +232,9 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes its end — the oracle reproduces that finalization predicate
     (replay order is monotone in ts, so no input row is ever late here;
     the late-drop path is exercised in tests/test_streaming_watermark.py)."""
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", table_path(sf_dir, "events"))
-        .option("batch_rows", "2500")
-        .load()
-    )
-    ev = normalize_events_ts(stream)
-    out = _run_to_memory(tumbling_counts_append(ev), spark, mode="append")
+    with replay_ingest(spark, sf_dir, "events", "event_id", floor=2500) as rp:
+        ev = normalize_events_ts(rp.stream)
+        out = _run_to_memory(tumbling_counts_append(ev), spark, mode="append")
     return out.select(
         F.col("window.start").alias("hour"), "event_type", "n"
     ).orderBy("hour", "event_type")
@@ -272,8 +349,7 @@ def streaming_hist_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema_holder["schema"] = h.schema
         partial_rows.extend(h.collect())
 
-    q = ev.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain(ev, upsert)
     partials = spark.createDataFrame(partial_rows, schema_holder["schema"])
     return merge_hists([partials])
 
@@ -307,17 +383,7 @@ def stream_to_partitioned_store(
         out = out.withColumn("batch", F.lit(int(batch_id)))
         upsert_partitions(out, path, partition_by=[*partition_by, "batch"])
 
-    # processAllAvailable, not availableNow: the custom replay source's
-    # prefetching simple reader exposes one batch per read() — availableNow
-    # terminates after the first prefetched range
-    q = stream_df.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-from columnflow_spark.sources.sinks import upsert_partitions  # noqa: E402
+    _drain(stream_df, sink)
 
 
 @query(
@@ -337,22 +403,21 @@ def streaming_store_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert sink, then ONLY the probed event types are read back (partition
     pruning) and aggregated — the values must match the batch table
     exactly (integer cents per row keep the compare fp-order-proof)."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="cf_stream_store_")
-    ev = _stream_events(spark, sf_dir)
-    stream_to_partitioned_store(ev, path, partition_by=["event_type"])
-    stored = spark.read.parquet(path).filter(
-        F.col("event_type").isin("click", "error")
-    )
-    return (
-        stored.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("value_cents"),
+    with scratch_dirs("store") as (path,):
+        ev = _stream_events(spark, sf_dir)
+        stream_to_partitioned_store(ev, path, partition_by=["event_type"])
+        stored = spark.read.parquet(path).filter(
+            F.col("event_type").isin("click", "error")
         )
-        .orderBy("event_type")
-    )
+        return (
+            stored.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("value_cents"),
+            )
+            .orderBy("event_type")
+            .transform(checkpoint_df)
+        )
 
 
 @query(
@@ -560,6 +625,14 @@ _EMB_RAW_SCHEMA = T.StructType(
 )
 
 
+def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        spark.readStream.schema(_EMB_RAW_SCHEMA)
+        .option("pathGlobFilter", "embeddings.parquet")
+        .parquet(sf_dir)
+    )
+
+
 # --- streaming embedding ingest: PQ-encode vectors as they arrive (the
 # ingestion-time form of ann_pq_codes: the codebook is a static broadcast
 # literal, encoding is a stateless per-row map — append mode, no state, no
@@ -605,11 +678,7 @@ def streaming_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         s: [[float(x) for x in r.embedding[s * dim:(s + 1) * dim]] for r in cb_rows]
         for s in range(m)
     }
-    stream = (
-        spark.readStream.schema(_EMB_RAW_SCHEMA)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_embeddings(spark, sf_dir)
 
     def subdist(s: int, centroid: list[float]):
         sub = F.slice("embedding", s * dim + 1, dim)
@@ -644,17 +713,6 @@ def streaming_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair relation.  Final per-doc verdict = OR over the doc's buckets,
 # aggregated on the materialized sink output (chaining a second stateful
 # agg onto applyInPandasWithState is not supported in append mode). ---
-_NEARDUP_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
 @query(
     "streaming_neardup_simhash",
     oracle=f"""
@@ -687,11 +745,7 @@ def streaming_neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnflow_spark.functions.similarity import simhash64
     from columnflow_spark.functions.text import tokens, word_shingles
 
-    stream = (
-        spark.readStream.schema(_NEARDUP_DOCS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_documents(spark, sf_dir)
     md5_hashes = F.transform(
         word_shingles(F.col("text"), 3),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
@@ -841,11 +895,8 @@ def streaming_neardup_bounded_state(spark: SparkSession, sf_dir: str) -> DataFra
     the unbounded operator's output (same oracle); the aging/expiry
     behavior is pinned against crafted multi-batch replays in
     tests/test_streaming_watermark.py."""
-    stream = (
-        spark.readStream.schema(_NEARDUP_DOCS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .withColumn("ts", F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")))
+    stream = _stream_documents(spark, sf_dir).withColumn(
+        "ts", F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id"))
     )
     flagged = neardup_simhash_bounded(stream, horizon_ms=30 * 86_400_000)
     sunk = _run_to_memory(flagged, spark, mode="update")
@@ -883,11 +934,7 @@ def streaming_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     merges = bpe_train(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(_DOCS_RAW_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_documents(spark, sf_dir)
     enc = bpe_encode_expr(merges)
     per_word = _bpe_words(stream.select("doc_id", "text")).select(
         "doc_id",
@@ -919,21 +966,12 @@ def streaming_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("batch_rows", "2500")
-        .load()
-        .select("event_type", "value")
-    )
-    agg = stream.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(F.col("value") > 50.0).alias("n_high"),
-    )
-    return _run_to_memory(agg, spark, mode="complete").orderBy("event_type")
+    with replay_ingest(spark, sf_dir, "events", "event_id", floor=2500) as rp:
+        agg = rp.stream.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col("value") > 50.0).alias("n_high"),
+        )
+        return _run_to_memory(agg, spark, mode="complete").orderBy("event_type")
 
 
 # --- streaming ingest-time quality filtering: the deployment form of
@@ -970,9 +1008,7 @@ from columnflow_spark.queries.mmdata import (  # noqa: E402
 def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _logreg_train(spark, sf_dir)  # offline batch training pass
     stream = (
-        spark.readStream.schema(_EMB_RAW_SCHEMA)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
+        _stream_embeddings(spark, sf_dir)
         .select(
             "label",
             F.transform("embedding", lambda v: v.cast("double")).alias("x"),
@@ -1014,9 +1050,7 @@ def streaming_learned_quality_gate(spark: SparkSession, sf_dir: str) -> DataFram
 
     w, thr = tf_learned_gate(spark, sf_dir)  # offline batch training pass
     stream = (
-        spark.readStream.schema(_NEARDUP_DOCS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        _stream_documents(spark, sf_dir)
         .select("doc_id", "source", tf_gate_score_expr(w).alias("z"))
         .filter(F.col("z") >= F.lit(thr))
     )
@@ -1053,66 +1087,48 @@ def streaming_learned_quality_gate(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def streaming_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_dedup_store_")
-    flags = tempfile.mkdtemp(prefix="cf_dedup_flags_")
-
-    from columnflow_spark.sources import load_table
-
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("doc_id", "text")
+    from columnflow_spark.queries.dedupstore import (
+        doc_fingerprints,
+        flag_fingerprints_against_store,
+        upsert_fingerprints,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "store", "flags") as rp:
+        store, flags = rp.dirs
 
-        from columnflow_spark.queries.dedupstore import (
-            doc_fingerprints,
-            flag_fingerprints_against_store,
-            upsert_fingerprints,
-        )
-
-        fp = doc_fingerprints(batch_df)
-        # flag FIRST (the batch must not see itself in the store), then
-        # upsert this batch's distinct fingerprints for the next batch
-        if os.path.exists(os.path.join(store, "_BUILT")):
-            # max_batch fence: a REPLAYED micro-batch must not see the
-            # slice its failed attempt already upserted (its own
-            # fingerprints would flag the whole batch dup_prior)
-            decided = flag_fingerprints_against_store(
-                fp, store, max_batch=int(batch_id) - 1
-            )
-        else:
-            first_in_batch = F.min("doc_id").over(W.partitionBy("fingerprint"))
-            decided = fp.select(
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            fp = doc_fingerprints(batch_df)
+            # flag FIRST (the batch must not see itself in the store), then
+            # upsert this batch's distinct fingerprints for the next batch
+            if is_built(store):
+                # max_batch fence: a REPLAYED micro-batch must not see the
+                # slice its failed attempt already upserted (its own
+                # fingerprints would flag the whole batch dup_prior)
+                decided = flag_fingerprints_against_store(
+                    fp, store, max_batch=int(batch_id) - 1
+                )
+            else:
+                first_in_batch = F.min("doc_id").over(W.partitionBy("fingerprint"))
+                decided = fp.select(
+                    "doc_id",
+                    F.lit(False).alias("dup_prior"),
+                    (first_in_batch < F.col("doc_id")).alias("dup_in_batch"),
+                )
+            out = decided.select(
                 "doc_id",
-                F.lit(False).alias("dup_prior"),
-                (first_in_batch < F.col("doc_id")).alias("dup_in_batch"),
+                (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
+                F.lit(int(batch_id)).alias("batch"),
             )
-        out = decided.select(
-            "doc_id",
-            (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
-            F.lit(int(batch_id)).alias("batch"),
-        )
-        upsert_partitions(out, flags, partition_by=["batch"])
-        upsert_fingerprints(fp, store, batch=int(batch_id))
+            upsert_partitions(out, flags, partition_by=["batch"])
+            upsert_fingerprints(fp, store, batch=int(batch_id))
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(flags).select("doc_id", "is_dup").orderBy("doc_id")
+        _drain(rp.stream.select("doc_id", "text"), sink)
+        return (
+            spark.read.parquet(flags)
+            .select("doc_id", "is_dup")
+            .orderBy("doc_id")
+            .transform(checkpoint_df)
+        )
 
 
 @query(
@@ -1149,14 +1165,7 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale); the 100 TB form upserts only the key partitions a batch
     touches, exactly like the dedup fingerprint store.
     """
-    import os
-    import tempfile
-
     from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    state_root = tempfile.mkdtemp(prefix="cf_scd2_state_")
 
     seed = (
         load_table(spark, sf_dir, "customer", columns=["c_custkey", "c_acctbal"])
@@ -1170,49 +1179,46 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     latest = {"path": None}
 
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/orders.parquet")
-        .option("order_col", "o_orderkey")
-        .option("batch_rows", "5000")
-        .load()
-        .select("o_custkey", "o_orderdate", "o_totalprice")
-    )
+    # 5000-row batches up to ~30 of them (sf0.1's 150k orders)
+    with replay_ingest(
+        spark, sf_dir, "orders", "o_orderkey", "state", floor=5000, target_batches=30
+    ) as rp:
+        (state_root,) = rp.dirs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_agg = (
-            batch_df.groupBy(F.col("o_custkey").alias("c_custkey"))
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("dn"),
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                .cast("long")
-                .alias("dbal"),
-                F.max("o_orderdate").alias("dmx"),
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            batch_agg = (
+                batch_df.groupBy(F.col("o_custkey").alias("c_custkey"))
+                .agg(
+                    F.count(F.lit(1)).cast("int").alias("dn"),
+                    F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
+                    .cast("long")
+                    .alias("dbal"),
+                    F.max("o_orderdate").alias("dmx"),
+                )
             )
-        )
-        state = seed if latest["path"] is None else spark.read.parquet(latest["path"])
-        new_state = (
-            state.join(batch_agg, "c_custkey", "left")
-            .select(
-                "c_custkey",
-                (F.col("version") + F.coalesce("dn", F.lit(0))).cast("int").alias("version"),
-                (F.col("bal_c") + F.coalesce("dbal", F.lit(0))).cast("long").alias("bal_c"),
-                F.greatest("valid_from", F.coalesce("dmx", F.col("valid_from"))).alias(
-                    "valid_from"
-                ),
+            state = seed if latest["path"] is None else spark.read.parquet(latest["path"])
+            new_state = (
+                state.join(batch_agg, "c_custkey", "left")
+                .select(
+                    "c_custkey",
+                    (F.col("version") + F.coalesce("dn", F.lit(0))).cast("int").alias("version"),
+                    (F.col("bal_c") + F.coalesce("dbal", F.lit(0))).cast("long").alias("bal_c"),
+                    F.greatest("valid_from", F.coalesce("dmx", F.col("valid_from"))).alias(
+                        "valid_from"
+                    ),
+                )
             )
-        )
-        out = os.path.join(state_root, f"b{int(batch_id)}")
-        new_state.write.parquet(out)
-        latest["path"] = out
+            out = os.path.join(state_root, f"b{int(batch_id)}")
+            new_state.write.parquet(out)
+            latest["path"] = out
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    final = seed if latest["path"] is None else spark.read.parquet(latest["path"])
-    return final.select("c_custkey", "version", "bal_c", "valid_from").orderBy("c_custkey")
+        _drain(rp.stream.select("o_custkey", "o_orderdate", "o_totalprice"), sink)
+        final = seed if latest["path"] is None else spark.read.parquet(latest["path"])
+        return (
+            final.select("c_custkey", "version", "bal_c", "valid_from")
+            .orderBy("c_custkey")
+            .transform(checkpoint_df)
+        )
 
 
 def _cms_oracle() -> str:
@@ -1233,57 +1239,38 @@ def streaming_cms_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The heavy-hitter scoring at rest reads the static vocabulary (an
     offline read) against the stream-accumulated cells.
     """
-    import os
-    import tempfile
-
     from columnflow_spark.functions.text import tokens
     from columnflow_spark.queries.mmdata import cms_cells, cms_topk_from_cells
     from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
 
-    register(spark)
-    state_root = tempfile.mkdtemp(prefix="cf_cms_state_")
     latest = {"path": None}
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "state", floor=500) as rp:
+        (state_root,) = rp.dirs
 
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n, floor=500))
-        .load()
-        .select("text")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            btoks = batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
+            bcells = cms_cells(btoks)
+            if latest["path"] is not None:
+                prev = spark.read.parquet(latest["path"])
+                bcells = (
+                    prev.unionByName(bcells)
+                    .groupBy("j", "idx")
+                    .agg(F.sum("c").alias("c"))
+                )
+            out = os.path.join(state_root, f"b{int(batch_id)}")
+            bcells.write.parquet(out)
+            latest["path"] = out
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        btoks = batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
-        bcells = cms_cells(btoks)
-        if latest["path"] is not None:
-            prev = spark.read.parquet(latest["path"])
-            bcells = (
-                prev.unionByName(bcells)
-                .groupBy("j", "idx")
-                .agg(F.sum("c").alias("c"))
+        _drain(rp.stream.select("text"), sink)
+        if latest["path"] is None:  # zero micro-batches: an empty sketch
+            cells = spark.createDataFrame([], "j INT, idx BIGINT, c BIGINT")
+        else:
+            cells = spark.read.parquet(latest["path"]).select(
+                "j", "idx", F.col("c").cast("long").alias("c")
             )
-        out = os.path.join(state_root, f"b{int(batch_id)}")
-        bcells.write.parquet(out)
-        latest["path"] = out
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    if latest["path"] is None:  # zero micro-batches: an empty sketch
-        cells = spark.createDataFrame([], "j INT, idx BIGINT, c BIGINT")
-    else:
-        cells = spark.read.parquet(latest["path"]).select(
-            "j", "idx", F.col("c").cast("long").alias("c")
-        )
-    docs = load_table(spark, sf_dir, "documents", columns=["text"])
-    toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
-    return cms_topk_from_cells(toks, cells)
+        docs = load_table(spark, sf_dir, "documents", columns=["text"])
+        toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        return cms_topk_from_cells(toks, cells).transform(checkpoint_df)
 
 
 # --- streaming semantic dedup against the persisted SemDeDup store (the
@@ -1333,64 +1320,48 @@ def streaming_cms_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from columnflow_spark.queries.dedupstore import (
+        flag_semdedup_frame,
+        init_semdedup_store,
+        upsert_semdedup_frame,
+    )
 
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_semdedup_store_")
-    flags = tempfile.mkdtemp(prefix="cf_semdedup_flags_")
-
-    # the frozen coarse quantizer is provisioned BEFORE ingest starts
-    # (offline-trained, the IVF contract) — the stream only assigns
-    from columnflow_spark.queries.dedupstore import init_semdedup_store
-
-    init_semdedup_store(spark, sf_dir, store, seed_pred=F.col("vec_id") % 64 == 0)
-
-    # batch size scales with the corpus (>= 5 boundaries at any sf): the
+    # batch size scales with the corpus (5 boundaries at any sf): the
     # at-rest output is batch-boundary-INVARIANT by contract, so more
     # boundaries only multiply fixed per-micro-batch job overhead — the
     # sf1 sweep measured 200 fixed-size batches at ~8 s of overhead each
-    from columnflow_spark.sources import load_table
+    with replay_ingest(
+        spark, sf_dir, "embeddings", "vec_id", "store", "flags",
+        floor=100, target_batches=5,
+    ) as rp:
+        store, flags = rp.dirs
+        # the frozen coarse quantizer is provisioned BEFORE ingest starts
+        # (offline-trained, the IVF contract) — the stream only assigns
+        init_semdedup_store(spark, sf_dir, store, seed_pred=F.col("vec_id") % 64 == 0)
 
-    n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/embeddings.parquet")
-        .option("order_col", "vec_id")
-        .option("batch_rows", str(max(100, n // 5)))
-        .load()
-        .select("vec_id", "embedding")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            # flag FIRST (the batch must not see itself in the store), then
+            # upsert this batch's vectors for the next batch; the max_batch
+            # fence makes the sink REPLAY-idempotent — a retried micro-batch
+            # filters out the slice its failed attempt already upserted
+            # (which would otherwise match every vector against itself,
+            # cosine = 1 >= tau, and mark the whole batch dup_prior)
+            decided = flag_semdedup_frame(batch_df, store, max_batch=int(batch_id) - 1)
+            out = decided.select(
+                "vec_id",
+                (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
+                F.lit(int(batch_id)).alias("batch"),
+            )
+            upsert_partitions(out, flags, partition_by=["batch"])
+            upsert_semdedup_frame(batch_df, store, batch=int(batch_id))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from columnflow_spark.queries.dedupstore import (
-            flag_semdedup_frame,
-            upsert_semdedup_frame,
+        _drain(rp.stream.select("vec_id", "embedding"), sink)
+        return (
+            spark.read.parquet(flags)
+            .select("vec_id", "is_dup")
+            .orderBy("vec_id")
+            .transform(checkpoint_df)
         )
-        from columnflow_spark.sources.sinks import upsert_partitions
-
-        # flag FIRST (the batch must not see itself in the store), then
-        # upsert this batch's vectors for the next batch; the max_batch
-        # fence makes the sink REPLAY-idempotent — a retried micro-batch
-        # filters out the slice its failed attempt already upserted
-        # (which would otherwise match every vector against itself,
-        # cosine = 1 >= tau, and mark the whole batch dup_prior)
-        decided = flag_semdedup_frame(batch_df, store, max_batch=int(batch_id) - 1)
-        out = decided.select(
-            "vec_id",
-            (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
-            F.lit(int(batch_id)).alias("batch"),
-        )
-        upsert_partitions(out, flags, partition_by=["batch"])
-        upsert_semdedup_frame(batch_df, store, batch=int(batch_id))
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(flags).select("vec_id", "is_dup").orderBy("vec_id")
 
 
 # --- streaming search-index maintenance (the ingest deployment of the
@@ -1407,46 +1378,30 @@ from columnflow_spark.queries.retrieval import BM25_TOPK_ORACLE as _BM25_ORACLE
 
 @query("streaming_postings_ingest", oracle=_BM25_ORACLE)
 def streaming_postings_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from columnflow_spark.queries.retrieval import (
         _BM25_TOPK,
         bm25_totals_from_store,
         upsert_postings_frame,
     )
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_postings_store_")
+    with replay_ingest(
+        spark, sf_dir, "documents", "doc_id", "store", floor=100, target_batches=5
+    ) as rp:
+        (store,) = rp.dirs
 
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", str(max(100, n // 5)))
-        .load()
-        .select("doc_id", "text")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            upsert_postings_frame(batch_df, store, batch=int(batch_id))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_postings_frame(batch_df, store, batch=int(batch_id))
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    totals = bm25_totals_from_store(spark, store)
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        totals.withColumn("rk", F.row_number().over(win).cast("int"))
-        .filter(F.col("rk") <= _BM25_TOPK)
-        .select("query_id", "doc_id", "score_q", "rk")
-        .orderBy("query_id", "rk")
-    )
+        _drain(rp.stream.select("doc_id", "text"), sink)
+        totals = bm25_totals_from_store(spark, store)
+        win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
+        return (
+            totals.withColumn("rk", F.row_number().over(win).cast("int"))
+            .filter(F.col("rk") <= _BM25_TOPK)
+            .select("query_id", "doc_id", "score_q", "rk")
+            .orderBy("query_id", "rk")
+            .transform(checkpoint_df)
+        )
 
 
 
@@ -1464,34 +1419,18 @@ from columnflow_spark.queries.mmdata import IVFPQ_ORACLE as _IVFPQ_ORACLE
 
 @query("streaming_ann_index_ingest", oracle=_IVFPQ_ORACLE)
 def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from columnflow_spark.queries.annindex import search_ivfpq_index, upsert_index_frame
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_ann_index_")
+    with replay_ingest(
+        spark, sf_dir, "embeddings", "vec_id", "store", floor=100, target_batches=5
+    ) as rp:
+        (store,) = rp.dirs
 
-    n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/embeddings.parquet")
-        .option("order_col", "vec_id")
-        .option("batch_rows", str(max(100, n // 5)))
-        .load()
-        .select("vec_id", "embedding")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            upsert_index_frame(spark, sf_dir, batch_df, store, batch=int(batch_id))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_index_frame(spark, sf_dir, batch_df, store, batch=int(batch_id))
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return search_ivfpq_index(spark, sf_dir, store)
+        _drain(rp.stream.select("vec_id", "embedding"), sink)
+        return search_ivfpq_index(spark, sf_dir, store).transform(checkpoint_df)
 
 
 # --- streaming PERCEPTUAL dedup ingest (the fifth member of the
@@ -1522,71 +1461,53 @@ from columnflow_spark.queries.mmdata import _PHASH_FP_CTES as _PH_CTES  # noqa: 
     """,
 )
 def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from columnflow_spark.queries.dedupstore import (
         flag_phash_fp,
         phash_fp_frame,
         upsert_phash_fp,
     )
     from columnflow_spark.queries.mmdata import phash_neardup_pairs
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_phash_store_")
-    flags = tempfile.mkdtemp(prefix="cf_phash_flags_")
+    with replay_ingest(
+        spark, sf_dir, "documents", "doc_id", "store", "flags",
+        floor=100, target_batches=5,
+    ) as rp:
+        store, flags = rp.dirs
 
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", str(max(100, n // 5)))
-        .load()
-        .select("doc_id", "text")
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        # one Arrow fingerprint pass per micro-batch, shared by the flag
-        # joins and the upsert
-        ph = phash_fp_frame(batch_df).transform(checkpoint_df)
-        if os.path.exists(os.path.join(store, "_BUILT")):
-            # max_batch fence: a REPLAYED micro-batch must not see the
-            # slice its failed attempt already upserted
-            decided = flag_phash_fp(ph, store, max_batch=int(batch_id) - 1)
-        else:
-            inb = (
-                phash_neardup_pairs(ph)
-                .select(F.col("d2").alias("doc_id"))
-                .distinct()
-                .withColumn("dup_in_batch", F.lit(True))
-            )
-            decided = (
-                ph.select("doc_id")
-                .join(inb, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.lit(False).alias("dup_prior"),
-                    F.coalesce("dup_in_batch", F.lit(False)).alias("dup_in_batch"),
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            # one Arrow fingerprint pass per micro-batch, shared by the flag
+            # joins and the upsert
+            ph = phash_fp_frame(batch_df).transform(checkpoint_df)
+            if is_built(store):
+                # max_batch fence: a REPLAYED micro-batch must not see the
+                # slice its failed attempt already upserted
+                decided = flag_phash_fp(ph, store, max_batch=int(batch_id) - 1)
+            else:
+                inb = (
+                    phash_neardup_pairs(ph)
+                    .select(F.col("d2").alias("doc_id"))
+                    .distinct()
+                    .withColumn("dup_in_batch", F.lit(True))
                 )
+                decided = (
+                    ph.select("doc_id")
+                    .join(inb, "doc_id", "left")
+                    .select(
+                        "doc_id",
+                        F.lit(False).alias("dup_prior"),
+                        F.coalesce("dup_in_batch", F.lit(False)).alias("dup_in_batch"),
+                    )
+                )
+            out = decided.select(
+                "doc_id",
+                (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
+                F.lit(int(batch_id)).alias("batch"),
             )
-        out = decided.select(
-            "doc_id",
-            (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
-            F.lit(int(batch_id)).alias("batch"),
-        )
-        upsert_partitions(out, flags, partition_by=["batch"])
-        upsert_phash_fp(ph, store, batch=int(batch_id))
+            upsert_partitions(out, flags, partition_by=["batch"])
+            upsert_phash_fp(ph, store, batch=int(batch_id))
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(flags).select("doc_id", "is_dup")
+        _drain(rp.stream.select("doc_id", "text"), sink)
+        return spark.read.parquet(flags).select("doc_id", "is_dup").transform(checkpoint_df)
 
 
 # --- streaming exact-substring ingest (the SIXTH streaming
@@ -1643,9 +1564,6 @@ from columnflow_spark.queries.mmdata import _SSTR_K as _SSK  # noqa: E402
     """,
 )
 def streaming_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from columnflow_spark.queries.dedupstore import (
         batch_only_substring_marked,
         flag_substring_frame,
@@ -1653,41 +1571,28 @@ def streaming_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_substring_grams,
     )
     from columnflow_spark.queries.mmdata import _SSTR_K, _sstr_grams
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_sstr_store_")
-    flags = tempfile.mkdtemp(prefix="cf_sstr_flags_")
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("doc_id", "text")
-    )
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "store", "flags") as rp:
+        store, flags = rp.dirs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        bg = _sstr_grams(batch_df, _SSTR_K)
-        if os.path.exists(os.path.join(store, "_BUILT")):
-            decided = flag_substring_frame(bg, store, max_batch=int(batch_id) - 1)
-        else:
-            decided = substring_cov_rollup(batch_only_substring_marked(bg), _SSTR_K)
-        out = decided.select(
-            "doc_id", "n_runs", "dup_tokens", F.lit(int(batch_id)).alias("batch")
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            bg = _sstr_grams(batch_df, _SSTR_K)
+            if is_built(store):
+                decided = flag_substring_frame(bg, store, max_batch=int(batch_id) - 1)
+            else:
+                decided = substring_cov_rollup(batch_only_substring_marked(bg), _SSTR_K)
+            out = decided.select(
+                "doc_id", "n_runs", "dup_tokens", F.lit(int(batch_id)).alias("batch")
+            )
+            upsert_partitions(out, flags, partition_by=["batch"])
+            upsert_substring_grams(bg, store, batch=int(batch_id))
+
+        _drain(rp.stream.select("doc_id", "text"), sink)
+        return (
+            spark.read.parquet(flags)
+            .select("doc_id", "n_runs", "dup_tokens")
+            .transform(checkpoint_df)
         )
-        upsert_partitions(out, flags, partition_by=["batch"])
-        upsert_substring_grams(bg, store, batch=int(batch_id))
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(flags).select("doc_id", "n_runs", "dup_tokens")
 
 
 # --- streaming unigram tokenization (the unigram twin of
@@ -1704,55 +1609,11 @@ def streaming_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 from columnflow_spark.queries.mmdata import _ULM_ENCODE_ORACLE as _ULME  # noqa: E402
 
 
-@query("streaming_unigram_tokenize", oracle=_ULME)
-def streaming_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from columnflow_spark.queries.mmdata import _ulm_segment, _ulm_vocab
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
-
-    register(spark)
-    flags = tempfile.mkdtemp(prefix="cf_ulm_tok_")
-    sc = {p: s for p, c, s in _ulm_vocab(spark, sf_dir)}  # offline artifact
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("lang", "text")
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        words = batch_df.select(
-            "lang",
-            F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"),
-        )
-        wtok = _ulm_segment(
-            words.select("w").distinct().withColumn("cnt", F.lit(1)), sc
-        ).select("w", F.size("pieces").alias("ntok"))
-        out = (
-            words.join(F.broadcast(wtok), "w")
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum("ntok").alias("n_tokens"),
-            )
-            .withColumn("batch", F.lit(int(batch_id)))
-        )
-        upsert_partitions(out, flags, partition_by=["batch"])
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+def _lang_token_totals(partials: DataFrame) -> DataFrame:
+    """At-rest rollup of the tokenizer twins' per-batch (lang, n_words,
+    n_tokens) partials, materialized; fertility comes from the totals."""
     return (
-        spark.read.parquet(flags)
-        .groupBy("lang")
+        partials.groupBy("lang")
         .agg(
             F.sum("n_words").cast("long").alias("n_words"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
@@ -1764,7 +1625,39 @@ def streaming_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_tokens * 10000 div n_words").alias("fert_q"),
         )
         .orderBy("lang")
+        .transform(checkpoint_df)
     )
+
+
+@query("streaming_unigram_tokenize", oracle=_ULME)
+def streaming_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from columnflow_spark.queries.mmdata import _ulm_segment, _ulm_vocab
+
+    sc = {p: s for p, c, s in _ulm_vocab(spark, sf_dir)}  # offline artifact
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "flags") as rp:
+        (flags,) = rp.dirs
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            words = batch_df.select(
+                "lang",
+                F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"),
+            )
+            wtok = _ulm_segment(
+                words.select("w").distinct().withColumn("cnt", F.lit(1)), sc
+            ).select("w", F.size("pieces").alias("ntok"))
+            out = (
+                words.join(F.broadcast(wtok), "w")
+                .groupBy("lang")
+                .agg(
+                    F.count(F.lit(1)).alias("n_words"),
+                    F.sum("ntok").alias("n_tokens"),
+                )
+                .withColumn("batch", F.lit(int(batch_id)))
+            )
+            upsert_partitions(out, flags, partition_by=["batch"])
+
+        _drain(rp.stream.select("lang", "text"), sink)
+        return _lang_token_totals(spark.read.parquet(flags))
 
 
 # --- streaming ingest WITH deletion propagation (round 9 — the CDC
@@ -1801,85 +1694,70 @@ def streaming_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_dedup_cdc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from columnflow_spark.queries.dedupstore import (
         doc_fingerprints,
         flag_fingerprints_against_store,
-    )
-    from columnflow_spark.queries.dedupstore import upsert_fingerprints
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
-
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_cdc_store_")
-    flags = tempfile.mkdtemp(prefix="cf_cdc_flags_")
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("doc_id", "text")
+        upsert_fingerprints,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        b = int(batch_id)
-        fp = doc_fingerprints(batch_df).withColumn(
-            "del", F.col("doc_id") % 7 == 3
-        )
-        # within-batch rule: duplicate of a SURVIVING lower-id member
-        min_surv = F.min(F.when(~F.col("del"), F.col("doc_id"))).over(
-            W.partitionBy("fingerprint")
-        )
-        if os.path.exists(os.path.join(store, "_BUILT")):
-            prior = flag_fingerprints_against_store(
-                fp, store, max_batch=2 * b - 1
-            ).select("doc_id", "dup_prior")
-        else:
-            prior = fp.select("doc_id", F.lit(False).alias("dup_prior"))
-        # coalesce: a fingerprint with NO surviving batch member yields a
-        # NULL min, and NULL < doc_id must read as "no surviving earlier
-        # holder", not propagate into the flag
-        inb = fp.select(
-            "doc_id",
-            F.coalesce(min_surv < F.col("doc_id"), F.lit(False)).alias(
-                "dup_in_batch"
-            ),
-        )
-        out = (
-            prior.join(inb, "doc_id")
-            .select(
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "store", "flags") as rp:
+        store, flags = rp.dirs
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            b = int(batch_id)
+            fp = doc_fingerprints(batch_df).withColumn(
+                "del", F.col("doc_id") % 7 == 3
+            )
+            # within-batch rule: duplicate of a SURVIVING lower-id member
+            min_surv = F.min(F.when(~F.col("del"), F.col("doc_id"))).over(
+                W.partitionBy("fingerprint")
+            )
+            if is_built(store):
+                prior = flag_fingerprints_against_store(
+                    fp, store, max_batch=2 * b - 1
+                ).select("doc_id", "dup_prior")
+            else:
+                prior = fp.select("doc_id", F.lit(False).alias("dup_prior"))
+            # coalesce: a fingerprint with NO surviving batch member yields a
+            # NULL min, and NULL < doc_id must read as "no surviving earlier
+            # holder", not propagate into the flag
+            inb = fp.select(
                 "doc_id",
-                (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
-                F.lit(b).alias("batch"),
+                F.coalesce(min_surv < F.col("doc_id"), F.lit(False)).alias(
+                    "dup_in_batch"
+                ),
             )
-        )
-        upsert_partitions(out, flags, partition_by=["batch"])
-        # upsert slice 2b, then the batch's delete requests as negative
-        # slice 2b+1 — both idempotent per id, so a replayed batch
-        # overwrites exactly its own two slices
-        upsert_fingerprints(fp, store, batch=2 * b)
-        neg = (
-            fp.filter("del")
-            .groupBy("band", "fingerprint")
-            .agg(
-                F.min("doc_id").alias("first_doc"),
-                (-F.count(F.lit(1))).cast("long").alias("cnt"),
+            out = (
+                prior.join(inb, "doc_id")
+                .select(
+                    "doc_id",
+                    (F.col("dup_prior") | F.col("dup_in_batch")).alias("is_dup"),
+                    F.lit(b).alias("batch"),
+                )
             )
-            .withColumn("batch", F.lit(2 * b + 1))
-        )
-        upsert_partitions(neg, store, partition_by=["band", "batch"])
+            upsert_partitions(out, flags, partition_by=["batch"])
+            # upsert slice 2b, then the batch's delete requests as negative
+            # slice 2b+1 — both idempotent per id, so a replayed batch
+            # overwrites exactly its own two slices
+            upsert_fingerprints(fp, store, batch=2 * b)
+            neg = (
+                fp.filter("del")
+                .groupBy("band", "fingerprint")
+                .agg(
+                    F.min("doc_id").alias("first_doc"),
+                    (-F.count(F.lit(1))).cast("long").alias("cnt"),
+                )
+                .withColumn("batch", F.lit(2 * b + 1))
+            )
+            upsert_partitions(neg, store, partition_by=["band", "batch"])
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(flags).select("doc_id", "is_dup").orderBy("doc_id")
+        _drain(rp.stream.select("doc_id", "text"), sink)
+        return (
+            spark.read.parquet(flags)
+            .select("doc_id", "is_dup")
+            .orderBy("doc_id")
+            .transform(checkpoint_df)
+        )
 
 
 # --- streaming WordPiece tokenization (round 9 — the third member of
@@ -1897,32 +1775,14 @@ from columnflow_spark.queries.mmdata import _WP_ENCODE_ORACLE as _WPE  # noqa: E
 
 @query("streaming_wordpiece_tokenize", oracle=_WPE)
 def streaming_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    import pandas as pd
-
     from columnflow_spark.queries.mmdata import (
         _WP_ROUNDS,
         _wp_greedy_ntok,
         _wp_vocab_set,
     )
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
 
-    register(spark)
-    flags = tempfile.mkdtemp(prefix="cf_wp_tok_")
     vocab = _wp_vocab_set(spark, sf_dir)  # offline artifact
     maxlen = _WP_ROUNDS + 1
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("lang", "text")
-    )
 
     def run(it):
         for pdf in it:
@@ -1938,51 +1798,36 @@ def streaming_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        words = batch_df.select(
-            "lang",
-            F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"),
-        )
-        # drop words that clean to empty (the training-side rule) —
-        # they carry no tokens on either engine
-        words = words.filter(
-            F.length(F.replace(F.replace(F.col("w"), F.lit("<"), F.lit("")),
-                               F.lit(">"), F.lit(""))) > 0
-        )
-        wtok = (
-            words.select("w").distinct().mapInPandas(run, schema="w string, ntok int")
-        )
-        out = (
-            words.join(F.broadcast(wtok), "w")
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum("ntok").alias("n_tokens"),
-            )
-            .withColumn("batch", F.lit(int(batch_id)))
-        )
-        upsert_partitions(out, flags, partition_by=["batch"])
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "flags") as rp:
+        (flags,) = rp.dirs
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return (
-        spark.read.parquet(flags)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_words").cast("long").alias("n_words"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .select(
-            "lang",
-            "n_words",
-            "n_tokens",
-            F.expr("n_tokens * 10000 div n_words").alias("fert_q"),
-        )
-        .orderBy("lang")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            words = batch_df.select(
+                "lang",
+                F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"),
+            )
+            # drop words that clean to empty (the training-side rule) —
+            # they carry no tokens on either engine
+            words = words.filter(
+                F.length(F.replace(F.replace(F.col("w"), F.lit("<"), F.lit("")),
+                                   F.lit(">"), F.lit(""))) > 0
+            )
+            wtok = (
+                words.select("w").distinct().mapInPandas(run, schema="w string, ntok int")
+            )
+            out = (
+                words.join(F.broadcast(wtok), "w")
+                .groupBy("lang")
+                .agg(
+                    F.count(F.lit(1)).alias("n_words"),
+                    F.sum("ntok").alias("n_tokens"),
+                )
+                .withColumn("batch", F.lit(int(batch_id)))
+            )
+            upsert_partitions(out, flags, partition_by=["batch"])
+
+        _drain(rp.stream.select("lang", "text"), sink)
+        return _lang_token_totals(spark.read.parquet(flags))
 
 
 # --- streaming segment-count ingest (the boilerplate twin of the
@@ -1999,48 +1844,29 @@ from columnflow_spark.queries.dedupstore import _segment_store_oracle
 
 @query("streaming_segment_ingest", oracle=_segment_store_oracle())
 def streaming_segment_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from columnflow_spark.queries.dedupstore import (
+        _N_BANDS,
         _history_cutoff,
         segment_store_serve,
         upsert_fingerprints,
     )
     from columnflow_spark.queries.mmdata import segment_docs
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_segment_store_")
     h = _history_cutoff(spark, sf_dir)
-    n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("order_col", "doc_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < h)
-    )
+    with replay_ingest(spark, sf_dir, "documents", "doc_id", "store") as rp:
+        (store,) = rp.dirs
 
-    from columnflow_spark.queries.dedupstore import _N_BANDS
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            fp = (
+                segment_docs(batch_df)
+                .select("doc_id", F.col("seg_text").alias("fingerprint"))
+                .distinct()
+                .withColumn("band", F.pmod(F.hash("fingerprint"), F.lit(_N_BANDS)))
+            )
+            upsert_fingerprints(fp, store, batch=int(batch_id))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        fp = (
-            segment_docs(batch_df)
-            .select("doc_id", F.col("seg_text").alias("fingerprint"))
-            .distinct()
-            .withColumn("band", F.pmod(F.hash("fingerprint"), F.lit(_N_BANDS)))
-        )
-        upsert_fingerprints(fp, store, batch=int(batch_id))
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return segment_store_serve(spark, sf_dir, store)
+        _drain(rp.stream.select("doc_id", "text").filter(F.col("doc_id") < h), sink)
+        return segment_store_serve(spark, sf_dir, store).transform(checkpoint_df)
 
 
 # --- streaming KMV distinct-count maintenance: each micro-batch
@@ -2061,38 +1887,20 @@ from columnflow_spark.queries.timeseries import _KMV_SKETCH_CTES as _KMV_CTES_S
     """,
 )
 def streaming_kmv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from columnflow_spark.queries.timeseries import (
         _kmv_batch_sketch,
         kmv_store_serve,
     )
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_kmv_store_")
-    n = load_table(spark, sf_dir, "events", columns=["event_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("order_col", "event_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("event_type", "user_id")
-    )
+    with replay_ingest(spark, sf_dir, "events", "event_id", "store") as rp:
+        (store,) = rp.dirs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rows = _kmv_batch_sketch(batch_df).withColumn("batch", F.lit(int(batch_id)))
-        upsert_partitions(rows, store, partition_by=["batch"])
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            rows = _kmv_batch_sketch(batch_df).withColumn("batch", F.lit(int(batch_id)))
+            upsert_partitions(rows, store, partition_by=["batch"])
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return kmv_store_serve(spark, store)
+        _drain(rp.stream.select("event_type", "user_id"), sink)
+        return kmv_store_serve(spark, store).transform(checkpoint_df)
 
 
 from columnflow_spark.queries.timeseries import _QSK_SKETCH_CTES as _QSK_CTES_S
@@ -2111,38 +1919,20 @@ def streaming_quantile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest maintains); the merged serve equals the one-shot batch sketch
     under the shared oracle — batch-boundary invariance is the sketch's
     merge property, not a property of the replay cut points."""
-    import tempfile
-
     from columnflow_spark.queries.timeseries import (
         _qsk_batch_sample,
         qsk_store_serve,
     )
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_qsk_store_")
-    n = load_table(spark, sf_dir, "events", columns=["event_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("order_col", "event_id")
-        .option("batch_rows", _ingest_batch_rows(n))
-        .load()
-        .select("event_id", "event_type", "value")
-    )
+    with replay_ingest(spark, sf_dir, "events", "event_id", "store") as rp:
+        (store,) = rp.dirs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rows = _qsk_batch_sample(batch_df).withColumn("batch", F.lit(int(batch_id)))
-        upsert_partitions(rows, store, partition_by=["batch"])
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            rows = _qsk_batch_sample(batch_df).withColumn("batch", F.lit(int(batch_id)))
+            upsert_partitions(rows, store, partition_by=["batch"])
 
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return qsk_store_serve(spark, store)
+        _drain(rp.stream.select("event_id", "event_type", "value"), sink)
+        return qsk_store_serve(spark, store).transform(checkpoint_df)
 
 
 # --- streaming graph-ANN ingest (the 11th streaming index-maintenance
@@ -2160,8 +1950,6 @@ from columnflow_spark.queries.anngraph import _GRAPH_INSERT_ORACLE  # noqa: E402
 
 @query("streaming_graph_ann_ingest", oracle=_GRAPH_INSERT_ORACLE)
 def streaming_graph_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from columnflow_spark.queries.anngraph import (
         _final_topk,
         _graph_beam,
@@ -2172,36 +1960,23 @@ def streaming_graph_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ingest_graph_batch,
         store_page_fetcher,
     )
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_gann_store_")
-    build_graph_index(spark, sf_dir, store, node_pred=_base_node_pred, tag="base")
+    # ~8 target batches: each micro-batch pays a full insert-beam round
+    # trip, and at-rest equality is batch-size-invariant
+    with replay_ingest(
+        spark, sf_dir, "embeddings", "vec_id", "store", target_batches=8
+    ) as rp:
+        (store,) = rp.dirs
+        build_graph_index(spark, sf_dir, store, node_pred=_base_node_pred, tag="base")
 
-    n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/embeddings.parquet")
-        .option("order_col", "vec_id")
-        # ~8 target batches: each micro-batch pays a full insert-beam
-        # round trip, and at-rest equality is batch-size-invariant
-        .option("batch_rows", _ingest_batch_rows(n, target_batches=8))
-        .load()
-        .filter(_insert_pred())
-        .select("vec_id", "embedding")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            ingest_graph_batch(spark, batch_df, store, int(batch_id))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_graph_batch(spark, batch_df, store, int(batch_id))
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    qv = _query_vectors(spark, sf_dir)
-    return _final_topk(_graph_beam(spark, qv, store_page_fetcher(spark, store)))
+        _drain(rp.stream.filter(_insert_pred()).select("vec_id", "embedding"), sink)
+        qv = _query_vectors(spark, sf_dir)
+        return _final_topk(
+            _graph_beam(spark, qv, store_page_fetcher(spark, store))
+        ).transform(checkpoint_df)
 
 
 # --- streaming graph-ANN CDC (the 12th member): one replay stream
@@ -2219,52 +1994,41 @@ def streaming_graph_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 from columnflow_spark.queries.anngraph import _graph_insert_oracle  # noqa: E402
 
 
-def _graph_cdc_store(spark: SparkSession, sf_dir: str) -> str:
+@contextmanager
+def _graph_cdc_store(spark: SparkSession, sf_dir: str) -> Iterator[str]:
     """Run the CDC ingest (base build + streamed inserts with repair +
-    per-batch tombstone slices) into a fresh store; shared by the
-    logical-delete serve and the vacuum lifecycle twin."""
-    import tempfile
-
+    per-batch tombstone slices) into a fresh scratch store and yield it;
+    shared by the logical-delete serve and the vacuum lifecycle twin."""
     from columnflow_spark.queries.anngraph import (
         _base_node_pred,
         _insert_pred,
         build_graph_index,
         ingest_graph_batch,
     )
-    from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
     from columnflow_spark.sources.sinks import upsert_tombstones
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_gann_cdc_")
-    build_graph_index(spark, sf_dir, store, node_pred=_base_node_pred, tag="base")
+    with replay_ingest(
+        spark, sf_dir, "embeddings", "vec_id", "store", target_batches=8
+    ) as rp:
+        (store,) = rp.dirs
+        build_graph_index(spark, sf_dir, store, node_pred=_base_node_pred, tag="base")
 
-    n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/embeddings.parquet")
-        .option("order_col", "vec_id")
-        .option("batch_rows", _ingest_batch_rows(n, target_batches=8))
-        .load()
-        .filter(_insert_pred() | (F.col("vec_id") % 50 == 3))
-        .select("vec_id", "embedding")
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            b = int(batch_id)
+            ingest_graph_batch(spark, batch_df.filter(_insert_pred()), store, b)
+            dels = batch_df.filter(F.col("vec_id") % 50 == 3).select("vec_id")
+            if not dels.isEmpty():
+                # the batch's delete requests as its OWN tombstone slice —
+                # a replayed batch overwrites exactly its slice (idempotent)
+                upsert_tombstones(dels, store, batch=b, id_col="vec_id")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        b = int(batch_id)
-        ingest_graph_batch(spark, batch_df.filter(_insert_pred()), store, b)
-        dels = batch_df.filter(F.col("vec_id") % 50 == 3).select("vec_id")
-        if not dels.isEmpty():
-            # the batch's delete requests as its OWN tombstone slice —
-            # a replayed batch overwrites exactly its slice (idempotent)
-            upsert_tombstones(dels, store, batch=b, id_col="vec_id")
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return store
+        _drain(
+            rp.stream.filter(_insert_pred() | (F.col("vec_id") % 50 == 3)).select(
+                "vec_id", "embedding"
+            ),
+            sink,
+        )
+        yield store
 
 
 @query(
@@ -2279,10 +2043,10 @@ def streaming_graph_ann_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         store_page_fetcher,
     )
 
-    store = _graph_cdc_store(spark, sf_dir)
-    qv = _query_vectors(spark, sf_dir)
-    visited = _graph_beam(spark, qv, store_page_fetcher(spark, store))
-    return _final_topk(visited, tombstone_path=store)
+    with _graph_cdc_store(spark, sf_dir) as store:
+        qv = _query_vectors(spark, sf_dir)
+        visited = _graph_beam(spark, qv, store_page_fetcher(spark, store))
+        return _final_topk(visited, tombstone_path=store).transform(checkpoint_df)
 
 
 def _graph_cdc_vacuum_oracle() -> str:
@@ -2339,11 +2103,11 @@ def streaming_graph_ann_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFram
         store_page_fetcher,
     )
 
-    store = _graph_cdc_store(spark, sf_dir)
-    compact_graph_index(spark, store)
-    qv = _query_vectors(spark, sf_dir)
-    visited = _graph_beam(spark, qv, store_page_fetcher(spark, store))
-    return _final_topk(visited)
+    with _graph_cdc_store(spark, sf_dir) as store:
+        compact_graph_index(spark, store)
+        qv = _query_vectors(spark, sf_dir)
+        visited = _graph_beam(spark, qv, store_page_fetcher(spark, store))
+        return _final_topk(visited).transform(checkpoint_df)
 
 
 # --- streaming incremental connected components (the 13th member):
@@ -2438,152 +2202,138 @@ def _read_scc_gb(store: str) -> int:
     """,
 )
 def streaming_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql.window import Window as W2
-
     from columnflow_spark.sources import load_table
-    from columnflow_spark.sources.pydatasource import register
-    from columnflow_spark.sources.sinks import upsert_partitions
 
-    register(spark)
-    store = tempfile.mkdtemp(prefix="cf_scc_store_")
     wrote = {"any": False}
-    n = load_table(spark, sf_dir, "lineitem", columns=["l_orderkey"]).count()
-    # scale-adaptive bucket modulus, recorded at store creation (r13)
-    _write_scc_gb(store, _derive_scc_gb(n))
-    scc_gb = _read_scc_gb(store)
-    stream = (
-        spark.readStream.format("events_replay")
-        .option("path", f"{sf_dir}/lineitem.parquet")
-        .option("order_col", "l_orderkey")
-        .option("batch_rows", _ingest_batch_rows(n, target_batches=8))
-        .load()
-        .filter(F.col("l_quantity") >= _SCC_QTY_MIN)
-        .select(
-            F.col("l_orderkey").alias("a"),
-            (F.col("l_partkey") + _SCC_PART_OFF).alias("b"),
-        )
-    )
+    with replay_ingest(
+        spark, sf_dir, "lineitem", "l_orderkey", "store", target_batches=8
+    ) as rp:
+        (store,) = rp.dirs
+        # scale-adaptive bucket modulus, recorded at store creation (r13)
+        _write_scc_gb(store, _derive_scc_gb(rp.rows))
+        scc_gb = _read_scc_gb(store)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from columnflow_spark.queries.mmdata import components_from_edges
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            from columnflow_spark.queries.mmdata import components_from_edges
 
-        b = int(batch_id)
-        pairs = batch_df.select("a", "b").distinct().transform(checkpoint_df)
-        if pairs.isEmpty():
-            return
-        nodes = (
-            pairs.select(F.col("a").alias("node"))
-            .union(pairs.select(F.col("b").alias("node")))
-            .distinct()
+            b = int(batch_id)
+            pairs = batch_df.select("a", "b").distinct().transform(checkpoint_df)
+            if pairs.isEmpty():
+                return
+            nodes = (
+                pairs.select(F.col("a").alias("node"))
+                .union(pairs.select(F.col("b").alias("node")))
+                .distinct()
+            )
+            if wrote["any"]:
+                # latest-wins per node, resolved IN-PLAN: a relabeled node
+                # keeps its stale rows (only the LABEL-pruned member read
+                # can skip the window; a NODE-keyed lookup cannot) — the
+                # window runs over the semi-joined (batch-bounded) rows,
+                # never the store
+                wn = W.partitionBy("node").orderBy(F.desc("batch"))
+                cur = (
+                    spark.read.parquet(store)
+                    .filter(F.col("batch") <= b)  # replay fence
+                    .join(nodes, "node", "left_semi")
+                    .withColumn("_rn", F.row_number().over(wn))
+                    .filter(F.col("_rn") == 1)
+                    .select("node", "label")
+                )
+            else:
+                cur = spark.createDataFrame([], "node long, label long")
+            cur = cur.transform(checkpoint_df)
+            # LABEL-level edges: resolve both endpoints to their current
+            # labels distributed, keep only cross-component pairs — bounded
+            # by components touched, never by raw batch pair count
+            lab_edges = (
+                pairs.join(
+                    cur.select(F.col("node").alias("a"), F.col("label").alias("la")),
+                    "a",
+                    "left",
+                )
+                .join(
+                    cur.select(F.col("node").alias("b"), F.col("label").alias("lb")),
+                    "b",
+                    "left",
+                )
+                .select(
+                    F.coalesce("la", F.col("a")).alias("x"),
+                    F.coalesce("lb", F.col("b")).alias("y"),
+                )
+                .filter(F.col("x") != F.col("y"))
+                .select(F.least("x", "y").alias("d1"), F.greatest("x", "y").alias("d2"))
+                .distinct()
+                .transform(checkpoint_df)
+            )
+            touched = (
+                lab_edges.select(F.col("d1").alias("doc_id"))
+                .union(lab_edges.select(F.col("d2").alias("doc_id")))
+                .distinct()
+            )
+            # shared solve: driver union-find below _CC_DRIVER_MAX_EDGES,
+            # distributed min-label loop above it (the batch precedent)
+            rootmap = (
+                components_from_edges(touched, lab_edges)
+                .select(F.col("doc_id").alias("label"), F.col("component").alias("root"))
+                .transform(checkpoint_df)
+            )
+            amap = rootmap.filter(F.col("root") != F.col("label"))
+            new_rows = (
+                nodes.join(cur, "node", "left_anti")
+                .join(
+                    amap.select(F.col("label").alias("node"), "root"), "node", "left"
+                )
+                .select("node", F.coalesce("root", F.col("node")).alias("label"))
+            )
+            out = new_rows
+            if wrote["any"] and not amap.isEmpty():
+                gbs = sorted(
+                    {r.gb for r in amap.select(
+                        F.pmod(F.xxhash64("label"), F.lit(scc_gb)).alias("gb")
+                    ).distinct().collect()}
+                )  # bounded: ≤ touched components' bucket ids
+                # LIVE-LABEL invariant: every row under an absorbed (still-
+                # live) label is current — a label-pruned partition read,
+                # no window over the store
+                members = (
+                    spark.read.parquet(store)
+                    .filter(F.col("batch") <= b)
+                    .filter(F.col("gb").isin(gbs))
+                    .join(amap, "label")
+                    .select("node", F.col("root").alias("label"))
+                )
+                out = out.unionByName(members)
+            rows = out.select(
+                "node",
+                "label",
+                F.pmod(F.xxhash64("label"), F.lit(scc_gb)).alias("gb"),
+                F.lit(b + 1).alias("batch"),
+            )
+            upsert_partitions(rows, store, partition_by=["gb", "batch"])
+            wrote["any"] = True
+
+        _drain(
+            rp.stream.filter(F.col("l_quantity") >= _SCC_QTY_MIN).select(
+                F.col("l_orderkey").alias("a"),
+                (F.col("l_partkey") + _SCC_PART_OFF).alias("b"),
+            ),
+            sink,
         )
-        if wrote["any"]:
-            # latest-wins per node, resolved IN-PLAN: a relabeled node
-            # keeps its stale rows (only the LABEL-pruned member read
-            # can skip the window; a NODE-keyed lookup cannot) — the
-            # window runs over the semi-joined (batch-bounded) rows,
-            # never the store
-            wn = W.partitionBy("node").orderBy(F.desc("batch"))
-            cur = (
-                spark.read.parquet(store)
-                .filter(F.col("batch") <= b)  # replay fence
-                .join(nodes, "node", "left_semi")
-                .withColumn("_rn", F.row_number().over(wn))
-                .filter(F.col("_rn") == 1)
-                .select("node", "label")
-            )
-        else:
-            cur = spark.createDataFrame([], "node long, label long")
-        cur = cur.transform(checkpoint_df)
-        # LABEL-level edges: resolve both endpoints to their current
-        # labels distributed, keep only cross-component pairs — bounded
-        # by components touched, never by raw batch pair count
-        lab_edges = (
-            pairs.join(
-                cur.select(F.col("node").alias("a"), F.col("label").alias("la")),
-                "a",
-                "left",
-            )
-            .join(
-                cur.select(F.col("node").alias("b"), F.col("label").alias("lb")),
-                "b",
-                "left",
-            )
+        orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey"])
+        w = W.partitionBy("node").orderBy(F.desc("batch"))
+        labels = (
+            spark.read.parquet(store)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select(F.col("node").alias("o_orderkey"), "label")
+        )
+        return (
+            orders.join(labels, "o_orderkey", "left")
             .select(
-                F.coalesce("la", F.col("a")).alias("x"),
-                F.coalesce("lb", F.col("b")).alias("y"),
+                F.col("o_orderkey").alias("order_id"),
+                F.coalesce("label", "o_orderkey").cast("long").alias("component"),
             )
-            .filter(F.col("x") != F.col("y"))
-            .select(F.least("x", "y").alias("d1"), F.greatest("x", "y").alias("d2"))
-            .distinct()
+            .orderBy("order_id")
             .transform(checkpoint_df)
         )
-        touched = (
-            lab_edges.select(F.col("d1").alias("doc_id"))
-            .union(lab_edges.select(F.col("d2").alias("doc_id")))
-            .distinct()
-        )
-        # shared solve: driver union-find below _CC_DRIVER_MAX_EDGES,
-        # distributed min-label loop above it (the batch precedent)
-        rootmap = (
-            components_from_edges(touched, lab_edges)
-            .select(F.col("doc_id").alias("label"), F.col("component").alias("root"))
-            .transform(checkpoint_df)
-        )
-        amap = rootmap.filter(F.col("root") != F.col("label"))
-        new_rows = (
-            nodes.join(cur, "node", "left_anti")
-            .join(
-                amap.select(F.col("label").alias("node"), "root"), "node", "left"
-            )
-            .select("node", F.coalesce("root", F.col("node")).alias("label"))
-        )
-        out = new_rows
-        if wrote["any"] and not amap.isEmpty():
-            gbs = sorted(
-                {r.gb for r in amap.select(
-                    F.pmod(F.xxhash64("label"), F.lit(scc_gb)).alias("gb")
-                ).distinct().collect()}
-            )  # bounded: ≤ touched components' bucket ids
-            # LIVE-LABEL invariant: every row under an absorbed (still-
-            # live) label is current — a label-pruned partition read,
-            # no window over the store
-            members = (
-                spark.read.parquet(store)
-                .filter(F.col("batch") <= b)
-                .filter(F.col("gb").isin(gbs))
-                .join(amap, "label")
-                .select("node", F.col("root").alias("label"))
-            )
-            out = out.unionByName(members)
-        rows = out.select(
-            "node",
-            "label",
-            F.pmod(F.xxhash64("label"), F.lit(scc_gb)).alias("gb"),
-            F.lit(b + 1).alias("batch"),
-        )
-        upsert_partitions(rows, store, partition_by=["gb", "batch"])
-        wrote["any"] = True
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderkey"])
-    w = W2.partitionBy("node").orderBy(F.desc("batch"))
-    labels = (
-        spark.read.parquet(store)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(F.col("node").alias("o_orderkey"), "label")
-    )
-    return (
-        orders.join(labels, "o_orderkey", "left")
-        .select(
-            F.col("o_orderkey").alias("order_id"),
-            F.coalesce("label", "o_orderkey").cast("long").alias("component"),
-        )
-        .orderBy("order_id")
-    )

@@ -129,12 +129,42 @@ def compact_to_target_size(
     return n_files
 
 
+#: a store's completeness marker: dynamic partition overwrite commits per
+#: partition and writes NO root ``_SUCCESS``, so without an explicit
+#: marker a reuse check can never pass and every session silently pays a
+#: full rebuild — the store-level equivalent of a task output existence
+#: check
+BUILT = "_BUILT"
+
+
+def mark_built(path: str, fmt: object = None) -> None:
+    """Write ``path``'s completeness marker: one ``format=<fmt>`` line
+    (the store format version), or an empty file when ``fmt`` is None."""
+    with open(os.path.join(path, BUILT), "w") as f:
+        f.write("" if fmt is None else f"format={fmt}\n")
+
+
+def is_built(path: str) -> bool:
+    """Whether ``path`` carries its completeness marker."""
+    return os.path.exists(os.path.join(path, BUILT))
+
+
+def invalidate_store(path: str) -> None:
+    """Trip a store's reuse contract: remove its completeness markers
+    (``_BUILT`` and the multi-step ``_SEQ_COMPLETE``), so every reuse
+    check treats the store as absent and the next touch rebuilds it."""
+    for marker in (BUILT, "_SEQ_COMPLETE"):
+        p = os.path.join(path, marker)
+        if os.path.exists(p):
+            os.remove(p)
+
+
 def replace_store(
     df: DataFrame,
     path: str,
     *,
     partition_by: Iterable[str],
-    marker_name: str = "_BUILT",
+    marker_name: str = BUILT,
     marker_text: str = "",
     rows_per_file: int = DEFAULT_ROWS_PER_FILE,
 ) -> None:
@@ -181,7 +211,7 @@ def replace_store(
     shutil.rmtree(old)
 
 
-def ensure_store(path: str, build_fn, marker: str = "_BUILT") -> str:
+def ensure_store(path: str, build_fn, marker: str = BUILT) -> str:
     """Cross-session-safe check-then-build (VERDICT r11 next #7): when
     the ``_BUILT`` marker is absent, build into a UNIQUE staging sibling
     and publish with one atomic ``rename``.  Two concurrent sessions may

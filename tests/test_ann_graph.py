@@ -397,16 +397,16 @@ def test_delete_excludes_tombstoned_and_preserves_rest(spark, sf_dir):
 @pytest.fixture(scope="module")
 def vacuumed_graph(spark, sf_dir, tmp_path_factory):
     from columnflow_spark.queries.anngraph import (
+        _G_FORMAT,
         _delete_ids,
-        _mark_built,
         compact_graph_index,
     )
-    from columnflow_spark.sources.sinks import upsert_tombstones
+    from columnflow_spark.sources.sinks import mark_built, upsert_tombstones
 
     path = str(tmp_path_factory.mktemp("gvac") / "index")
     build_graph_index(spark, sf_dir, path, mark=False)
     upsert_tombstones(_delete_ids(spark, sf_dir), path, batch=0, id_col="vec_id")
-    _mark_built(path)
+    mark_built(path, _G_FORMAT)
     compact_graph_index(spark, path)
     return path
 

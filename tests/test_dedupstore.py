@@ -603,9 +603,7 @@ def test_minhash_store_delete_unblocks_neardups(spark, tmp_path):
         "doc_id long, text string, source string",
     )
     # monkey-route the session shingle/signature tables at this frame
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="cf_mh_fixture_")
+    d = str(tmp_path / "sf")
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
     purge("hashed_grams"); purge("minhash_sigs")
     path = str(tmp_path / "mh")
