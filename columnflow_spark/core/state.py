@@ -20,7 +20,7 @@ switch instead of a code change:
 
 with the checkpoint location from ``SPARK_GRAFT_CHECKPOINT_DIR`` (or
 ``spark.columnflow.checkpointDir``), falling back to a local temp dir
-so the switch is testable on one box.
+(removed at process exit) so the switch is testable on one box.
 
 Retention: reliable checkpoints are only garbage-collected when
 ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` is set AT
@@ -39,7 +39,9 @@ Call sites keep method-chain syntax via ``DataFrame.transform``::
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame
@@ -62,11 +64,13 @@ def _ensure_checkpoint_dir(spark) -> None:
     sc = spark.sparkContext
     if sc.getCheckpointDir() is not None:
         return
-    path = (
-        os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        or spark.conf.get("spark.columnflow.checkpointDir", None)
-        or tempfile.mkdtemp(prefix="cf_reliable_ckpt_")
+    path = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or spark.conf.get(
+        "spark.columnflow.checkpointDir", None
     )
+    if not path:
+        # the one-box fallback is this process's own: gone at exit
+        path = tempfile.mkdtemp(prefix="cf_reliable_ckpt_")
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     sc.setCheckpointDir(path)
 
 

@@ -78,16 +78,14 @@ from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df, checkpoint_df_lazy
 from columnflow_spark.functions.similarity import chunked_self_pairs, hyperplane_signs
 from columnflow_spark.queries import query
-from columnflow_spark.queries.annindex import content_tag, scratch_root
 from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import (
     anti_tombstones,
     ensure_store,
-    mark_built,
+    store_path,
     upsert_partitions,
     upsert_tombstones,
 )
-from columnflow_spark.sources.tables import table_path
 
 _G_GRID = 1000  # component quantization step (the PQ family's grid)
 _G_DIM = 64
@@ -593,8 +591,7 @@ def _session_pages(spark: SparkSession, sf_dir: str):
 
 
 def graph_index_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"gann{_G_FORMAT}")
-    return os.path.join(scratch_root(), "graph_index", tag)
+    return store_path(sf_dir, "embeddings", "graph_index", f"gann{_G_FORMAT}")
 
 
 def _centroids_path(path: str) -> str:
@@ -636,20 +633,17 @@ def _read_store_buckets(path: str) -> int:
 def build_graph_index(
     spark: SparkSession,
     sf_dir: str,
-    path: str | None = None,
+    path: str,
     node_pred=None,
     tag: str = "full",
-    mark: bool = True,
     buckets: int | None = None,
 ) -> str:
     """Persist the page store plus its ``_centroids`` routing sidecar.
 
-    ``mark=False`` defers the ``_BUILT`` completeness marker so a caller
-    can finish multi-step store setup (e.g. the tombstone slice of the
-    delete twin) BEFORE declaring the store complete — a crash between
-    build and that extra step must fail closed (no marker → rebuild),
-    never serve a half-initialized store."""
-    path = path or graph_index_path(sf_dir)
+    Writes no ``_BUILT`` marker: ``ensure_store`` marks the store once
+    every step of its build (e.g. the delete twin's tombstone slice) has
+    returned, so a crash in between never leaves a half-initialized
+    store that reads as complete."""
     # scale-adaptive bucket count (r13): derived from corpus size at
     # creation and recorded in store metadata so serves/ingests/compactions
     # read the same modulus back — per-bucket reads stay O(target pages)
@@ -685,8 +679,6 @@ def build_graph_index(
         "vec_id", "g", F.lit(0).alias("batch")
     )
     upsert_partitions(cents, _centroids_path(path), partition_by=["batch"])
-    if mark:
-        mark_built(path, _G_FORMAT)
     return path
 
 
@@ -781,11 +773,6 @@ def store_page_fetcher(spark: SparkSession, path: str, max_batch: int | None = N
 # --- deletion twin: a store copy with a tombstone slice ---
 
 
-def _deleted_graph_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"gann-del{_G_FORMAT}")
-    return os.path.join(scratch_root(), "graph_index", tag)
-
-
 def _delete_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _grid_emb(spark, sf_dir)
@@ -795,16 +782,13 @@ def _delete_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_deleted_graph_index(spark: SparkSession, sf_dir: str) -> str:
-    # the tombstone slice lands BEFORE the completeness marker: a crash
-    # in between leaves no marker, so the next session rebuilds — never
-    # a marker-complete store whose missing _deleted slice silently
-    # serves tombstoned vectors
     def build(p: str) -> None:
-        build_graph_index(spark, sf_dir, p, mark=False)
+        build_graph_index(spark, sf_dir, p)
         upsert_tombstones(_delete_ids(spark, sf_dir), p, batch=0, id_col="vec_id")
-        mark_built(p, _G_FORMAT)
 
-    return ensure_store(_deleted_graph_path(sf_dir), build)
+    return ensure_store(
+        store_path(sf_dir, "embeddings", "graph_index", f"gann-del{_G_FORMAT}"), build
+    )
 
 
 # --- oracle builders: the full build + walk replayed as materialized
@@ -1559,12 +1543,7 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
     cents_new.hint("rebalance", "batch").write.mode("overwrite").partitionBy(
         "batch"
     ).parquet(cents_tmp)
-    replace_store(
-        new_pages,
-        path,
-        partition_by=["gb", "batch"],
-        marker_text=f"format={_G_FORMAT}\n",
-    )
+    replace_store(new_pages, path, partition_by=["gb", "batch"])
     shutil.rmtree(cpath, ignore_errors=True)
     os.rename(cents_tmp, cpath)
     clear_tombstones(path)
@@ -1578,20 +1557,16 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
 _G_VAC_REV = 2
 
 
-def _vacuumed_graph_path(sf_dir: str) -> str:
-    tag = content_tag(
-        table_path(sf_dir, "embeddings"), f"gann-vac{_G_FORMAT}.{_G_VAC_REV}"
-    )
-    return os.path.join(scratch_root(), "graph_index", tag)
+def vacuumed_graph_path(sf_dir: str) -> str:
+    return store_path(sf_dir, "embeddings", "graph_index", f"gann-vac{_G_FORMAT}.{_G_VAC_REV}")
 
 
 def _ensure_vacuumed_graph_index(spark: SparkSession, sf_dir: str) -> str:
     def build(p: str) -> None:
-        build_graph_index(spark, sf_dir, p, mark=False)
+        build_graph_index(spark, sf_dir, p)
         upsert_tombstones(_delete_ids(spark, sf_dir), p, batch=0, id_col="vec_id")
-        mark_built(p, _G_FORMAT)
 
-    path = ensure_store(_vacuumed_graph_path(sf_dir), build)
+    path = ensure_store(vacuumed_graph_path(sf_dir), build)
     if os.path.exists(os.path.join(path, "_deleted")):
         # pending tombstones → (re-)vacuum; idempotent on crash-resume
         compact_graph_index(spark, path)

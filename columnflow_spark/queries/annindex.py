@@ -34,7 +34,6 @@ tasks) re-expressed as a Spark partitioned table.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,23 +57,13 @@ from columnflow_spark.sources.sinks import (
     anti_tombstones,
     clear_tombstones,
     ensure_store,
-    invalidate_store,
     mark_built,
     replace_store,
+    store_path,
     upsert_partitions,
     upsert_tombstones,
 )
-from columnflow_spark.sources.tables import table_path
 from columnflow_spark.sources import spread
-
-
-def scratch_root() -> str:
-    """Writable artifact root (env-overridable; never under the read-only
-    testdata tree)."""
-    return os.environ.get(
-        "SPARK_GRAFT_SCRATCH",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "scratch"),
-    )
 
 
 #: bump when the trained-codebook/encoding math changes: persisted codes
@@ -82,24 +71,9 @@ def scratch_root() -> str:
 _INDEX_FORMAT = 2
 
 
-def content_tag(src: str, prefix: str) -> str:
-    """Shared content-addressing scheme for every scratch artifact store
-    (IVF+PQ index, dedup fingerprint store, format roundtrips): hash the
-    source file identity (abspath + size + mtime) plus a caller prefix
-    (format/version), so a rebuilt source or a bumped format gets a fresh
-    tag and an unchanged one is reused across sessions."""
-    try:
-        st = os.stat(src)
-        ident = f"{prefix}|{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = f"{prefix}|{os.path.abspath(src)}"
-    return hashlib.sha1(ident.encode()).hexdigest()[:12]
-
-
 def ivfpq_index_path(sf_dir: str) -> str:
-    """Content-addressed index location (see :func:`content_tag`)."""
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"v{_INDEX_FORMAT}")
-    return os.path.join(scratch_root(), "ivfpq_index", tag)
+    """Content-addressed index location (see :func:`sinks.store_path`)."""
+    return store_path(sf_dir, "embeddings", "ivfpq_index", f"v{_INDEX_FORMAT}")
 
 
 def upsert_index_frame(
@@ -167,12 +141,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
             F.lit(0).alias("batch"),
         )
     )
-    replace_store(
-        rows,
-        path,
-        partition_by=["cid", "batch"],
-        marker_text=f"format={_INDEX_FORMAT}\n",
-    )
+    replace_store(rows, path, partition_by=["cid", "batch"])
     clear_tombstones(path)
 
 
@@ -383,30 +352,18 @@ def ann_index_needs_rebuild(
     return drift_trips(rows, err_ratio=err_ratio, skew_ratio=skew_ratio)
 
 
-def invalidate_index(path: str) -> None:
-    """Trip the index's reuse contract (``_BUILT`` + sequence markers) so
-    the next ensure pays a fresh build with re-trained quantizers."""
-    invalidate_store(path)
-
-
-def _trend_index_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"trend-v{_INDEX_FORMAT}")
-    return os.path.join(scratch_root(), "ivfpq_index_trend", tag)
-
-
 def _ensure_trend_index(spark: SparkSession, sf_dir: str) -> str:
     """Two-batch index (first and second half of vec_ids) so the audit
-    has a per-batch trend to report; sequence-marker gated (a crash
-    between the two builds must not leave a half-index that passes the
-    reuse check)."""
+    has a per-batch trend to report."""
     def build(p: str) -> None:
         n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
         build_ivfpq_index(spark, sf_dir, p, batch=0, batch_pred=F.col("vec_id") < n // 2)
         build_ivfpq_index(spark, sf_dir, p, batch=1, batch_pred=F.col("vec_id") >= n // 2)
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("2-batch trend build complete\n")
 
-    return ensure_store(_trend_index_path(sf_dir), build, marker="_SEQ_COMPLETE")
+    return ensure_store(
+        store_path(sf_dir, "embeddings", "ivfpq_index_trend", f"trend-v{_INDEX_FORMAT}"),
+        build,
+    )
 
 
 def _index_drift_oracle() -> str:
@@ -503,12 +460,6 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the full IVF+PQ replay with the deleted ids excluded from the
 # CANDIDATE side only — the query batch is external serve-time input
 # and keeps its fixed workload. ---
-def _deleted_index_path(sf_dir: str, *, vacuum: bool) -> str:
-    kind = "vacuumed" if vacuum else "deleted"
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"{kind}-v{_INDEX_FORMAT}")
-    return os.path.join(scratch_root(), f"ivfpq_index_{kind}", tag)
-
-
 def _ensure_deleted_index(spark: SparkSession, sf_dir: str, *, vacuum: bool) -> str:
     def build(p: str) -> None:
         build_ivfpq_index(spark, sf_dir, p)
@@ -518,11 +469,11 @@ def _ensure_deleted_index(spark: SparkSession, sf_dir: str, *, vacuum: bool) -> 
         delete_vectors_from_index(spark, deleted, p, batch=0)
         if vacuum:
             compact_ivfpq_index(spark, p)
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("build + delete%s complete\n" % (" + vacuum" if vacuum else ""))
 
+    kind = "vacuumed" if vacuum else "deleted"
     return ensure_store(
-        _deleted_index_path(sf_dir, vacuum=vacuum), build, marker="_SEQ_COMPLETE"
+        store_path(sf_dir, "embeddings", f"ivfpq_index_{kind}", f"{kind}-v{_INDEX_FORMAT}"),
+        build,
     )
 
 
@@ -572,14 +523,8 @@ def ann_index_delete_vacuum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OPQ_INDEX_FORMAT = 1
 
 
-def opq_index_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"opq-v{_OPQ_INDEX_FORMAT}")
-    return os.path.join(scratch_root(), "opq_index", tag)
-
-
 def build_opq_index(
-    spark: SparkSession, sf_dir: str, path: str | None = None, *, batch: int = 0,
-    batch_pred=None,
+    spark: SparkSession, sf_dir: str, path: str, *, batch: int = 0, batch_pred=None
 ) -> str:
     """Train (or reuse) the OPQ artifacts, persist them as sidecars, and
     encode (a batch of) the corpus into ``cid=/batch=`` code partitions
@@ -592,7 +537,6 @@ def build_opq_index(
         opq_train_np,
     )
 
-    path = path or opq_index_path(sf_dir)
     R, cms = opq_train_np(spark, sf_dir)
     from columnflow_spark.sources.sinks import tiny_rows_df
 
@@ -624,7 +568,6 @@ def build_opq_index(
         F.lit(int(batch)).alias("batch"),
     )
     upsert_partitions(idx, path, partition_by=["cid", "batch"])
-    mark_built(path, _OPQ_INDEX_FORMAT)
     return path
 
 
@@ -650,7 +593,8 @@ def load_opq_artifacts(spark: SparkSession, path: str):
 
 def _ensure_opq_index(spark: SparkSession, sf_dir: str) -> str:
     return ensure_store(
-        opq_index_path(sf_dir), lambda p: build_opq_index(spark, sf_dir, p)
+        store_path(sf_dir, "embeddings", "opq_index", f"opq-v{_OPQ_INDEX_FORMAT}"),
+        lambda p: build_opq_index(spark, sf_dir, p),
     )
 
 

@@ -52,20 +52,18 @@ from columnflow_spark.functions.similarity import (
 )
 from columnflow_spark.functions.text import fingerprint
 from columnflow_spark.queries import query
-from columnflow_spark.queries.annindex import content_tag, scratch_root
 from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import (
     anti_tombstones,
     clear_tombstones,
     ensure_store,
-    invalidate_store,
     is_built,
     mark_built,
     replace_store,
+    store_path,
     upsert_partitions,
     upsert_tombstones,
 )
-from columnflow_spark.sources.tables import table_path
 
 #: bump when the fingerprint definition OR the row monoid changes:
 #: stored digests from an older normalizer / rows without the holder
@@ -75,11 +73,10 @@ _N_BANDS = 16
 
 
 def dedup_store_path(sf_dir: str) -> str:
-    """Content-addressed store location (shared annindex.content_tag
-    scheme): a rebuilt corpus or a changed fingerprint definition gets a
-    fresh store."""
-    tag = content_tag(table_path(sf_dir, "documents"), f"v{_STORE_FORMAT}")
-    return os.path.join(scratch_root(), "dedup_store", tag)
+    """Content-addressed store location (:func:`sinks.store_path`): a
+    rebuilt corpus or a changed fingerprint definition gets a fresh
+    store."""
+    return store_path(sf_dir, "documents", "dedup_store", f"v{_STORE_FORMAT}")
 
 
 def doc_fingerprints(docs: DataFrame) -> DataFrame:
@@ -157,12 +154,7 @@ def compact_dedup_store(spark: SparkSession, path: str) -> None:
         .filter(F.col("cnt") > 0)
         .withColumn("batch", F.lit(0))
     )
-    replace_store(
-        rows,
-        path,
-        partition_by=["band", "batch"],
-        marker_text=f"format={_STORE_FORMAT}\n",
-    )
+    replace_store(rows, path, partition_by=["band", "batch"])
 
 
 def flag_fingerprints_against_store(
@@ -276,18 +268,10 @@ def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _compacted_store_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "documents"), f"v{_STORE_FORMAT}-compacted")
-    return os.path.join(scratch_root(), "dedup_store_compacted", tag)
-
-
 def _ensure_compacted_history_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     """History store built as TWO ingest batches then compacted to one
     ``batch=0`` slice per band — the steady-state layout a long-running
     ingest pipeline periodically restores."""
-    # sequence marker, not the per-upsert _BUILT: a crash between the
-    # upserts (or before the compaction) would otherwise leave a partial
-    # store that passes the reuse check forever (ADVICE r6)
     def build(p: str) -> None:
         upsert_dedup_batch(
             spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h // 2
@@ -300,10 +284,11 @@ def _ensure_compacted_history_store(spark: SparkSession, sf_dir: str, h: int) ->
             batch_pred=(F.col("doc_id") >= h // 2) & (F.col("doc_id") < h),
         )
         compact_dedup_store(spark, p)
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("2-batch ingest + compaction complete\n")
 
-    return ensure_store(_compacted_store_path(sf_dir), build, marker="_SEQ_COMPLETE")
+    return ensure_store(
+        store_path(sf_dir, "documents", "dedup_store_compacted", f"v{_STORE_FORMAT}-compacted"),
+        build,
+    )
 
 
 @query("dedup_store_compacted", oracle=_INC_STORE_ORACLE)
@@ -371,22 +356,12 @@ def delete_docs_from_dedup_store(
     return path
 
 
-def _deleted_store_path(sf_dir: str, *, vacuum: bool) -> str:
-    kind = "vacuumed" if vacuum else "deleted"
-    tag = content_tag(table_path(sf_dir, "documents"), f"v{_STORE_FORMAT}-{kind}")
-    return os.path.join(scratch_root(), f"dedup_store_{kind}", tag)
-
-
 def _ensure_deleted_dedup_store(
     spark: SparkSession, sf_dir: str, h: int, *, vacuum: bool
 ) -> str:
     """History store (first 60%) with ``doc_id % 7 == 3`` deleted through
     it — as a live negative slice (``vacuum=False``) or additionally
-    compacted so the purge is physical (``vacuum=True``).  Sequence-
-    marker gated: a crash between ingest and delete must not leave a
-    store with undeleted docs that passes the reuse check; the re-run is
-    safe (each step idempotently overwrites its own slices, the
-    compaction swap fails closed)."""
+    compacted so the purge is physical (``vacuum=True``)."""
     def build(p: str) -> None:
         upsert_dedup_batch(
             spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
@@ -397,11 +372,11 @@ def _ensure_deleted_dedup_store(
         )
         if vacuum:
             compact_dedup_store(spark, p)
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("ingest + delete%s complete\n" % (" + vacuum" if vacuum else ""))
 
+    kind = "vacuumed" if vacuum else "deleted"
     return ensure_store(
-        _deleted_store_path(sf_dir, vacuum=vacuum), build, marker="_SEQ_COMPLETE"
+        store_path(sf_dir, "documents", f"dedup_store_{kind}", f"v{_STORE_FORMAT}-{kind}"),
+        build,
     )
 
 
@@ -462,11 +437,6 @@ _SEM_COS_SQL = """list_aggregate(list_transform(range(1, 65),
                       j -> e1.embedding[j]::DOUBLE * e1.embedding[j]::DOUBLE), 'sum'))
                   * sqrt(list_aggregate(list_transform(range(1, 65),
                       j -> e2.embedding[j]::DOUBLE * e2.embedding[j]::DOUBLE), 'sum')))"""
-
-
-def semdedup_store_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "embeddings"), f"semdedup-v{_SEM_STORE_FORMAT}")
-    return os.path.join(scratch_root(), "semdedup_store", tag)
 
 
 def _sem_vectors(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
@@ -632,7 +602,10 @@ def _ensure_semdedup_store(spark: SparkSession, sf_dir: str, h: int) -> str:
             spark, sf_dir, p, batch=0, batch_pred=F.col("vec_id") < h
         )
 
-    return ensure_store(semdedup_store_path(sf_dir), build)
+    return ensure_store(
+        store_path(sf_dir, "embeddings", "semdedup_store", f"semdedup-v{_SEM_STORE_FORMAT}"),
+        build,
+    )
 
 
 @query(
@@ -703,7 +676,7 @@ def semdedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (per-cell occupancy + integer-quantized error per batch); the REBUILD
 # TRIGGER compares the newest batch's error/skew against the first
 # batch's and, when tripped, invalidates the store through the SAME
-# ``_BUILT``/sequence-marker contract every ensure helper already gates
+# ``_BUILT`` contract every ensure helper already gates
 # on — the next ensure pays a fresh build with re-trained centroids. ---
 
 #: drift thresholds: rebuild when the newest batch's mean quantization
@@ -761,24 +734,9 @@ def semdedup_store_needs_rebuild(
     return drift_trips(rows, err_ratio=err_ratio, skew_ratio=skew_ratio)
 
 
-def invalidate_semdedup_store(path: str) -> None:
-    """Trip the store's reuse contract: removing the completeness markers
-    makes every ensure helper (and any ``_BUILT``-gated consumer) treat
-    the store as absent, so the next touch pays a fresh build with
-    re-trained centroids — the rebuild path drift feeds into."""
-    invalidate_store(path)
-
-
-def _sem_trend_store_path(sf_dir: str) -> str:
-    tag = content_tag(
-        table_path(sf_dir, "embeddings"), f"semdedup-trend-v{_SEM_STORE_FORMAT}"
-    )
-    return os.path.join(scratch_root(), "semdedup_trend_store", tag)
-
-
 def _ensure_semdedup_trend_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     """Two-batch history store (first and second 30% of vec_ids) so the
-    audit has a per-batch trend to report; sequence-marker gated."""
+    audit has a per-batch trend to report."""
     def build(p: str) -> None:
         a = h // 2
         init_semdedup_store(
@@ -792,10 +750,13 @@ def _ensure_semdedup_trend_store(spark: SparkSession, sf_dir: str, h: int) -> st
             spark, sf_dir, p, batch=1,
             batch_pred=(F.col("vec_id") >= a) & (F.col("vec_id") < h),
         )
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("2-batch trend ingest complete\n")
 
-    return ensure_store(_sem_trend_store_path(sf_dir), build, marker="_SEQ_COMPLETE")
+    return ensure_store(
+        store_path(
+            sf_dir, "embeddings", "semdedup_trend_store", f"semdedup-trend-v{_SEM_STORE_FORMAT}"
+        ),
+        build,
+    )
 
 
 @query(
@@ -867,11 +828,6 @@ from columnflow_spark.queries.mmdata import (  # noqa: E402
 )
 
 _PH_STORE_FORMAT = 1
-
-
-def phash_store_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "documents"), f"phash-v{_PH_STORE_FORMAT}")
-    return os.path.join(scratch_root(), "phash_store", tag)
 
 
 def phash_fp_frame(docs: DataFrame) -> DataFrame:
@@ -1006,7 +962,7 @@ def flag_phash_batch_against_store(
 
 def _ensure_phash_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     return ensure_store(
-        phash_store_path(sf_dir),
+        store_path(sf_dir, "documents", "phash_store", f"phash-v{_PH_STORE_FORMAT}"),
         lambda p: upsert_phash_batch(
             spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
         ),
@@ -1083,11 +1039,6 @@ from columnflow_spark.queries.mmdata import (  # noqa: E402
 #: fingerprint store)
 _SSTR_STORE_FORMAT = 2
 _SSTR_BANDS = 16
-
-
-def substring_store_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "documents"), f"sstr-v{_SSTR_STORE_FORMAT}")
-    return os.path.join(scratch_root(), "substring_store", tag)
 
 
 def upsert_substring_grams(grams: DataFrame, path: str, *, batch: int) -> str:
@@ -1229,17 +1180,12 @@ def compact_substring_store(spark: SparkSession, path: str) -> None:
         .filter(F.col("cnt") > 0)
         .withColumn("batch", F.lit(0))
     )
-    replace_store(
-        rows,
-        path,
-        partition_by=["gb", "batch"],
-        marker_text=f"format={_SSTR_STORE_FORMAT}\n",
-    )
+    replace_store(rows, path, partition_by=["gb", "batch"])
 
 
 def _ensure_substring_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     return ensure_store(
-        substring_store_path(sf_dir),
+        store_path(sf_dir, "documents", "substring_store", f"sstr-v{_SSTR_STORE_FORMAT}"),
         lambda p: upsert_substring_batch(
             spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
         ),
@@ -1351,17 +1297,9 @@ def delete_docs_from_substring_store(
     return path
 
 
-def _deleted_substring_store_path(sf_dir: str) -> str:
-    tag = content_tag(
-        table_path(sf_dir, "documents"), f"sstr-v{_SSTR_STORE_FORMAT}-deleted"
-    )
-    return os.path.join(scratch_root(), "substring_store_deleted", tag)
-
-
 def _ensure_deleted_substring_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     """History gram store (first 60%) with ``doc_id % 7 == 3`` deleted
-    through it as a negative occurrence slice; sequence-marker gated
-    (see :func:`_ensure_deleted_dedup_store`)."""
+    through it as a negative occurrence slice."""
     def build(p: str) -> None:
         upsert_substring_batch(
             spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
@@ -1370,11 +1308,12 @@ def _ensure_deleted_substring_store(spark: SparkSession, sf_dir: str, h: int) ->
             spark, sf_dir, p,
             delete_pred=_delete_pred() & (F.col("doc_id") < h), batch=1,
         )
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("ingest + delete complete\n")
 
     return ensure_store(
-        _deleted_substring_store_path(sf_dir), build, marker="_SEQ_COMPLETE"
+        store_path(
+            sf_dir, "documents", "substring_store_deleted", f"sstr-v{_SSTR_STORE_FORMAT}-deleted"
+        ),
+        build,
     )
 
 
@@ -1410,19 +1349,8 @@ def purge_phash_store(spark: SparkSession, path: str) -> None:
         F.col("bi").cast("int").alias("bi"), "bv", "ph", "doc_id",
         F.lit(0).alias("batch"),
     )
-    replace_store(
-        rows, path, partition_by=["bi", "batch"],
-        marker_text=f"format={_PH_STORE_FORMAT}\n",
-    )
+    replace_store(rows, path, partition_by=["bi", "batch"])
     clear_tombstones(path)
-
-
-def _deleted_phash_store_path(sf_dir: str, *, vacuum: bool) -> str:
-    kind = "vacuumed" if vacuum else "deleted"
-    tag = content_tag(
-        table_path(sf_dir, "documents"), f"phash-v{_PH_STORE_FORMAT}-{kind}"
-    )
-    return os.path.join(scratch_root(), f"phash_store_{kind}", tag)
 
 
 def _ensure_deleted_phash_store(
@@ -1438,11 +1366,13 @@ def _ensure_deleted_phash_store(
         upsert_tombstones(deleted, p, batch=0)
         if vacuum:
             purge_phash_store(spark, p)
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("ingest + delete%s complete\n" % (" + vacuum" if vacuum else ""))
 
+    kind = "vacuumed" if vacuum else "deleted"
     return ensure_store(
-        _deleted_phash_store_path(sf_dir, vacuum=vacuum), build, marker="_SEQ_COMPLETE"
+        store_path(
+            sf_dir, "documents", f"phash_store_{kind}", f"phash-v{_PH_STORE_FORMAT}-{kind}"
+        ),
+        build,
     )
 
 
@@ -1487,18 +1417,8 @@ def purge_semdedup_store(spark: SparkSession, path: str) -> None:
         "vec_id", "embedding",
         F.col("cid").cast("long").alias("cid"), F.lit(0).alias("batch"),
     )
-    replace_store(
-        rows, path, partition_by=["cid", "batch"],
-        marker_text=f"format={_SEM_STORE_FORMAT}\n",
-    )
+    replace_store(rows, path, partition_by=["cid", "batch"])
     clear_tombstones(path)
-
-
-def _deleted_sem_store_path(sf_dir: str) -> str:
-    tag = content_tag(
-        table_path(sf_dir, "embeddings"), f"semdedup-v{_SEM_STORE_FORMAT}-deleted"
-    )
-    return os.path.join(scratch_root(), "semdedup_store_deleted", tag)
 
 
 def _ensure_deleted_sem_store(spark: SparkSession, sf_dir: str, h: int) -> str:
@@ -1514,10 +1434,16 @@ def _ensure_deleted_sem_store(spark: SparkSession, sf_dir: str, h: int) -> str:
             (F.col("vec_id") % 7 == 3) & (F.col("vec_id") < h)
         )
         upsert_tombstones(deleted, p, batch=0, id_col="vec_id")
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("ingest + delete complete\n")
 
-    return ensure_store(_deleted_sem_store_path(sf_dir), build, marker="_SEQ_COMPLETE")
+    return ensure_store(
+        store_path(
+            sf_dir,
+            "embeddings",
+            "semdedup_store_deleted",
+            f"semdedup-v{_SEM_STORE_FORMAT}-deleted",
+        ),
+        build,
+    )
 
 
 @query(
@@ -1611,11 +1537,6 @@ from columnflow_spark.functions.similarity import (  # noqa: E402
 _MH_STORE_FORMAT = 1
 _MH_BANDS, _MH_ROWS = 16, 2
 _MH_SALT = 16
-
-
-def minhash_store_path(sf_dir: str) -> str:
-    tag = content_tag(table_path(sf_dir, "documents"), f"minhash-v{_MH_STORE_FORMAT}")
-    return os.path.join(scratch_root(), "minhash_store", tag)
 
 
 def _mh_banded(sigs: DataFrame) -> DataFrame:
@@ -1751,7 +1672,7 @@ def _mh_store_oracle(hist_filter: str = "") -> str:
 
 def _ensure_minhash_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     return ensure_store(
-        minhash_store_path(sf_dir),
+        store_path(sf_dir, "documents", "minhash_store", f"minhash-v{_MH_STORE_FORMAT}"),
         lambda p: upsert_minhash_batch(
             spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
         ),
@@ -1772,13 +1693,6 @@ def minhash_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _deleted_minhash_store_path(sf_dir: str) -> str:
-    tag = content_tag(
-        table_path(sf_dir, "documents"), f"minhash-v{_MH_STORE_FORMAT}-deleted"
-    )
-    return os.path.join(scratch_root(), "minhash_store_deleted", tag)
-
-
 def _ensure_deleted_minhash_store(spark: SparkSession, sf_dir: str, h: int) -> str:
     def build(p: str) -> None:
         upsert_minhash_batch(
@@ -1788,11 +1702,12 @@ def _ensure_deleted_minhash_store(spark: SparkSession, sf_dir: str, h: int) -> s
             _delete_pred() & (F.col("doc_id") < h)
         )
         delete_docs_from_minhash_store(spark, deleted, p, batch=0)
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("ingest + delete complete\n")
 
     return ensure_store(
-        _deleted_minhash_store_path(sf_dir), build, marker="_SEQ_COMPLETE"
+        store_path(
+            sf_dir, "documents", "minhash_store_deleted", f"minhash-v{_MH_STORE_FORMAT}-deleted"
+        ),
+        build,
     )
 
 
@@ -1947,12 +1862,6 @@ def _url_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
     )
 
 
-def _url_store_path(sf_dir: str, *, deleted: bool) -> str:
-    kind = "url-deleted" if deleted else "url"
-    tag = content_tag(table_path(sf_dir, "documents"), f"{kind}-v{_STORE_FORMAT}")
-    return os.path.join(scratch_root(), f"dedup_store_{kind}", tag)
-
-
 #: oracle template: URL-grain flagging over the (optionally reduced)
 #: history — the _inc_store_oracle shape with the URL CTE chain
 def _url_store_oracle(hist_filter: str = "") -> str:
@@ -1996,11 +1905,11 @@ def _ensure_url_store(spark: SparkSession, sf_dir: str, h: int, *, deleted: bool
                 .withColumn("batch", F.lit(1))
             )
             upsert_partitions(rows, p, partition_by=["band", "batch"])
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("url ingest%s complete\n" % (" + delete" if deleted else ""))
 
+    kind = "url-deleted" if deleted else "url"
     return ensure_store(
-        _url_store_path(sf_dir, deleted=deleted), build, marker="_SEQ_COMPLETE"
+        store_path(sf_dir, "documents", f"dedup_store_{kind}", f"{kind}-v{_STORE_FORMAT}"),
+        build,
     )
 
 
@@ -2042,12 +1951,6 @@ def url_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # algebra applies: forgetting a history doc decrements its segments'
 # holder counts, and a segment that drops below the threshold stops
 # being boilerplate for future batches. ---
-def _segment_store_path(sf_dir: str, *, deleted: bool) -> str:
-    kind = "segment-deleted" if deleted else "segment"
-    tag = content_tag(table_path(sf_dir, "documents"), f"{kind}-v{_STORE_FORMAT}")
-    return os.path.join(scratch_root(), f"dedup_store_{kind}", tag)
-
-
 def _segment_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
     """``(doc_id, fingerprint, band)`` — one row per DISTINCT (doc,
     segment text): the count monoid must count holder DOCS, so in-doc
@@ -2129,11 +2032,11 @@ def _ensure_segment_store(
                 .withColumn("batch", F.lit(1))
             )
             upsert_partitions(rows, p, partition_by=["band", "batch"])
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("segment ingest%s complete\n" % (" + delete" if deleted else ""))
 
+    kind = "segment-deleted" if deleted else "segment"
     return ensure_store(
-        _segment_store_path(sf_dir, deleted=deleted), build, marker="_SEQ_COMPLETE"
+        store_path(sf_dir, "documents", f"dedup_store_{kind}", f"{kind}-v{_STORE_FORMAT}"),
+        build,
     )
 
 

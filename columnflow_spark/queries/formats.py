@@ -25,43 +25,32 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from columnflow_spark.queries import query
-from columnflow_spark.queries.annindex import content_tag, scratch_root
 from columnflow_spark.sources import load_table
-from columnflow_spark.sources.sinks import is_built, mark_built
-from columnflow_spark.sources.tables import table_path
+from columnflow_spark.sources.sinks import ensure_store, store_path
 
 #: microsecond-preserving pattern shared by writer and reader; the default
 #: (second-granularity) format would truncate event timestamps
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
-def _roundtrip_dir(sf_dir: str, table: str, fmt: str) -> str:
-    """Content-addressed scratch location (shared annindex.content_tag
-    scheme): a rebuilt source file gets a fresh directory."""
-    tag = content_tag(table_path(sf_dir, table), fmt)
-    return os.path.join(scratch_root(), "formats", f"{table}_{fmt}_{tag}")
+def _write_once(df: DataFrame, out: str, fmt: str, **options) -> str:
+    """Write the roundtrip copy to ``out`` once (``ensure_store``: staged,
+    published by one rename, reused while ``_BUILT``): repeated runs —
+    including a concurrent session's later run — read the existing files,
+    and no session ever writes into a directory another one scans."""
 
+    def build(p: str) -> None:
+        writer = df.write
+        for k, v in options.items():
+            writer = writer.option(k, v)
+        getattr(writer, fmt)(p)
 
-def _write_once(df: DataFrame, out: str, fmt: str, **options) -> None:
-    """Write the roundtrip copy only if this content-addressed directory
-    was not already completed (``_BUILT`` marker, same reuse contract as
-    the IVF+PQ index and dedup stores): repeated runs — including a
-    concurrent session's later run — read the existing files instead of
-    overwriting them out from under an in-flight scan."""
-    if is_built(out):
-        return
-    writer = df.write.mode("overwrite")
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    getattr(writer, fmt)(out)
-    mark_built(out)
+    return ensure_store(out, build)
 
 
 @query(
@@ -93,8 +82,13 @@ def csv_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # o_orderdate is TIMESTAMP_NTZ in the parquet store: CSV formats it via
     # the separate timestampNTZFormat option (timestampFormat only applies
     # to zoned timestamps and would be silently ignored here)
-    out = _roundtrip_dir(sf_dir, "orders", "csv")
-    _write_once(orders, out, "csv", header=True, timestampNTZFormat=_TS_FMT)
+    out = _write_once(
+        orders,
+        store_path(sf_dir, "orders", "formats", "csv"),
+        "csv",
+        header=True,
+        timestampNTZFormat=_TS_FMT,
+    )
 
     schema = T.StructType(
         [
@@ -154,8 +148,9 @@ def json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.from_json("props", "k INT").alias("props"),
     )
 
-    out = _roundtrip_dir(sf_dir, "events", "json")
-    _write_once(events, out, "json", timestampFormat=_TS_FMT)
+    out = _write_once(
+        events, store_path(sf_dir, "events", "formats", "json"), "json", timestampFormat=_TS_FMT
+    )
 
     schema = T.StructType(
         [
@@ -206,8 +201,7 @@ def orc_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lineitem",
         columns=["l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate"],
     )
-    out = _roundtrip_dir(sf_dir, "lineitem", "orc")
-    _write_once(li, out, "orc")
+    out = _write_once(li, store_path(sf_dir, "lineitem", "formats", "orc"), "orc")
     back = spark.read.schema(li.schema).orc(out)
     return (
         back.groupBy("l_returnflag")

@@ -58,7 +58,7 @@ from columnflow_spark.functions.text import (
 )
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import is_built, mark_built
+from columnflow_spark.sources.sinks import ensure_store, store_path, tiny_rows_df
 
 JACCARD_THRESHOLD = 0.8
 
@@ -6304,44 +6304,31 @@ def unigram_vocab_store_path(sf_dir: str) -> str:
     the tag folds in every training hyperparameter, so a changed
     corpus or config trains fresh and an unchanged one is reused across
     sessions."""
-    import os
-
-    from columnflow_spark.queries.annindex import content_tag, scratch_root
-    from columnflow_spark.sources.tables import table_path
-
-    tag = content_tag(
-        table_path(sf_dir, "documents"),
-        f"ulm-v1-m{_ULM_MAXLEN}-s{_ULM_SEED}-p{_ULM_PRUNE}"
-        f"-r{_ULM_ROUNDS}-g{_ULM_GRID}",
+    return store_path(
+        sf_dir,
+        "documents",
+        "ulm_vocab",
+        f"ulm-v1-m{_ULM_MAXLEN}-s{_ULM_SEED}-p{_ULM_PRUNE}-r{_ULM_ROUNDS}-g{_ULM_GRID}",
     )
-    return os.path.join(scratch_root(), "ulm_vocab", tag)
 
 
 def build_unigram_vocab_store(spark: SparkSession, sf_dir: str) -> str:
-    """Train the unigram vocab and persist it (piece, cnt, score_q) with
-    the explicit ``_BUILT`` marker — the once-per-corpus BUILD; serving
-    (encode, streaming tokenize) reads this artifact and pays only the
-    corpus pass."""
+    """Train the unigram vocab and persist it (piece, cnt, score_q) — the
+    once-per-corpus BUILD, skipped whole while the store is reused;
+    serving (encode, streaming tokenize) reads this artifact and pays
+    only the corpus pass."""
     import os
 
-    path = unigram_vocab_store_path(sf_dir)
-    if is_built(path):
-        return path  # training is the expensive part — skip before it
-    rows = unigram_train_rows(spark, _ulm_word_counts(spark, sf_dir))
-    from columnflow_spark.sources.sinks import tiny_rows_df
-
-    # one-partition frame: createDataFrame(list).coalesce(1) evaluated 32
-    # Python partitions sequentially in ONE task — 4-5 s of worker round
-    # trips per build for a ~40-row vocab (r14; see sinks.tiny_rows_df)
-    df = tiny_rows_df(spark, rows, "piece string, cnt long, score_q long")
-
     def build(p: str) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(p, "vocab"))
-        mark_built(p, "ulm-vocab-v1")
+        rows = unigram_train_rows(spark, _ulm_word_counts(spark, sf_dir))
+        # one-partition frame: createDataFrame(list).coalesce(1) evaluated
+        # 32 Python partitions sequentially in ONE task — 4-5 s of worker
+        # round trips per build for a ~40-row vocab (r14; see
+        # sinks.tiny_rows_df)
+        df = tiny_rows_df(spark, rows, "piece string, cnt long, score_q long")
+        df.write.parquet(os.path.join(p, "vocab"))
 
-    from columnflow_spark.sources.sinks import ensure_store
-
-    return ensure_store(path, build)
+    return ensure_store(unigram_vocab_store_path(sf_dir), build)
 
 
 @artifact("unigram_vocab")

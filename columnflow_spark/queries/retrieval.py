@@ -40,7 +40,7 @@ from columnflow_spark.functions.similarity import cosine
 from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import ensure_store, mark_built
+from columnflow_spark.sources.sinks import ensure_store, mark_built, store_path
 
 # fixed search workload: deterministic multi-term keyword queries over the
 # synthetic corpus vocabulary (TESTDATA.md documents.text)
@@ -917,15 +917,6 @@ def colbert_maxsim_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _POSTINGS_FORMAT = 1
 
 
-def postings_store_path(sf_dir: str) -> str:
-    from columnflow_spark.queries.annindex import content_tag, scratch_root
-    from columnflow_spark.sources.tables import table_path
-    import os
-
-    tag = content_tag(table_path(sf_dir, "documents"), f"bm25-v{_POSTINGS_FORMAT}")
-    return os.path.join(scratch_root(), "bm25_postings", tag)
-
-
 def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
     """Tokenize one ``(doc_id, text)`` ingest frame, keep postings for the
     query vocabulary only, and upsert them (plus the batch's monoid
@@ -1034,13 +1025,7 @@ def bm25_totals_from_store(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _ensure_postings_store(spark: SparkSession, sf_dir: str) -> str:
-    """Two-batch fixture build.  Gated on a SEQUENCE marker written after
-    the LAST step, not the per-upsert ``_BUILT`` (which only proves "some
-    upsert committed"): a crash between the two upserts would otherwise
-    leave a content-addressed store holding half the corpus that every
-    later session trusts (ADVICE r6).  The re-run is safe because each
-    upsert idempotently overwrites its own ``batch=`` slices."""
-    import os
+    """Two-batch fixture build (the corpus ingested as two halves)."""
 
     def build(p: str) -> None:
         n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
@@ -1050,10 +1035,10 @@ def _ensure_postings_store(spark: SparkSession, sf_dir: str) -> str:
         upsert_postings_batch(
             spark, sf_dir, p, batch=1, batch_pred=F.col("doc_id") >= n // 2
         )
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("2-batch ingest complete\n")
 
-    return ensure_store(postings_store_path(sf_dir), build, marker="_SEQ_COMPLETE")
+    return ensure_store(
+        store_path(sf_dir, "documents", "bm25_postings", f"bm25-v{_POSTINGS_FORMAT}"), build
+    )
 
 
 @query("bm25_incremental_postings", oracle=BM25_TOPK_ORACLE)
@@ -1104,12 +1089,7 @@ def delete_docs_from_postings(
         .select(F.col("w").cast("string").alias("w"), "doc_id", "tf", "dl")
         .withColumn("batch", F.lit(0))
     )
-    replace_store(
-        kept,
-        path,
-        partition_by=["w", "batch"],
-        marker_text=f"format={_POSTINGS_FORMAT}\n",
-    )
+    replace_store(kept, path, partition_by=["w", "batch"])
     deleted = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
         delete_pred
     )
@@ -1125,27 +1105,16 @@ def delete_docs_from_postings(
 
 
 def _ensure_deleted_postings_store(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from columnflow_spark.queries.annindex import content_tag, scratch_root
-    from columnflow_spark.sources.tables import table_path
-
-    tag = content_tag(table_path(sf_dir, "documents"), f"bm25-del-v{_POSTINGS_FORMAT}")
-    path = os.path.join(scratch_root(), "bm25_postings_del", tag)
-    # sequence marker, not the per-upsert _BUILT: a crash after the
-    # ingest but before the delete would otherwise leave a store with
-    # still-undeleted docs that passes the reuse check forever (ADVICE
-    # r6).  The re-run is safe: the ingest overwrites every batch=0
-    # slice (resetting any partial delete), then the delete re-applies.
     def build(p: str) -> None:
         upsert_postings_batch(spark, sf_dir, p, batch=0, batch_pred=F.lit(True))
         delete_docs_from_postings(
             spark, sf_dir, p, delete_pred=F.col("doc_id") % 7 == 3, batch=1
         )
-        with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-            f.write("ingest+delete complete\n")
 
-    return ensure_store(path, build, marker="_SEQ_COMPLETE")
+    return ensure_store(
+        store_path(sf_dir, "documents", "bm25_postings_del", f"bm25-del-v{_POSTINGS_FORMAT}"),
+        build,
+    )
 
 
 @query(

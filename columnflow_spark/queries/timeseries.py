@@ -990,16 +990,6 @@ def kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # be one of the k minima and cannot be un-taken without the raw data) —
 # the delete story for sketch stores is a rebuild, documented here
 # rather than faked.
-def _kmv_store_path(sf_dir: str) -> str:
-    import os
-
-    from columnflow_spark.queries.annindex import content_tag, scratch_root
-    from columnflow_spark.sources.tables import table_path
-
-    tag = content_tag(table_path(sf_dir, "events"), f"kmv-k{_KMV_K}-v1")
-    return os.path.join(scratch_root(), "kmv_store", tag)
-
-
 def _kmv_batch_sketch(ev: DataFrame) -> DataFrame:
     """Per-type bottom-k over one batch's events: ``(event_type, h)``."""
     from columnflow_spark.functions.hashing import seed_long
@@ -1037,22 +1027,18 @@ def kmv_incremental_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     three event_id-range batches, each persisting only its own bottom-k
     slice; the merged serve is hash-equal to the from-scratch sketch —
     the mergeability proof."""
-    import os
+    from columnflow_spark.sources.sinks import ensure_store, store_path, upsert_partitions
 
-    from columnflow_spark.sources.sinks import upsert_partitions
-
-    path = _kmv_store_path(sf_dir)
-    done = os.path.join(path, "_SEQ_COMPLETE")
-    if not os.path.exists(done):
+    def build(p: str) -> None:
         ev = load_table(spark, sf_dir, "events", columns=["event_id", "event_type", "user_id"])
         n = _events_count(spark, sf_dir)
         for b, (lo, hi) in enumerate(((0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n + 1))):
             rows = _kmv_batch_sketch(
                 ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
             ).withColumn("batch", F.lit(b))
-            upsert_partitions(rows, path, partition_by=["batch"])
-        with open(done, "w") as f:
-            f.write("kmv ingest complete\n")
+            upsert_partitions(rows, p, partition_by=["batch"])
+
+    path = ensure_store(store_path(sf_dir, "events", "kmv_store", f"kmv-k{_KMV_K}-v1"), build)
     return kmv_store_serve(spark, path)
 
 
@@ -1475,22 +1461,10 @@ def quantile_sketch_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qsk_summarize(_qsk_batch_sample(ev))
 
 
-def _qsk_store_path(sf_dir: str, variant: str = "") -> str:
-    import os
-
-    from columnflow_spark.queries.annindex import content_tag, scratch_root
-    from columnflow_spark.sources.tables import table_path
-
-    # v2: the store carries a _slices sidecar (batch boundaries) so the
-    # delete contract can rebuild exactly the affected slices
-    tag = content_tag(table_path(sf_dir, "events"), f"qsk{variant}-k{_QSK_K}-v2")
-    return os.path.join(scratch_root(), "qsk_store", tag)
-
-
 def _build_qsk_store(spark: SparkSession, sf_dir: str, p: str) -> None:
     """Three event_id-range ingest slices + the ``_slices`` boundary
-    sidecar (what makes a per-slice rebuild operational) + the sequence
-    marker — written at the staging path ``ensure_store`` gives us."""
+    sidecar (what makes a per-slice rebuild operational) — written at the
+    staging path ``ensure_store`` gives us."""
     import os
 
     from columnflow_spark.sources.sinks import upsert_partitions
@@ -1511,17 +1485,16 @@ def _build_qsk_store(spark: SparkSession, sf_dir: str, p: str) -> None:
         spark, [(b, lo, hi) for b, (lo, hi) in enumerate(bounds)], "batch int, lo long, hi long"
     )
     slices.write.mode("overwrite").parquet(os.path.join(p, "_slices"))
-    with open(os.path.join(p, "_SEQ_COMPLETE"), "w") as f:
-        f.write("qsk ingest complete\n")
 
 
-def _ensure_qsk_store(spark: SparkSession, sf_dir: str, path: str | None = None) -> str:
-    from columnflow_spark.sources.sinks import ensure_store
+def _ensure_qsk_store(spark: SparkSession, sf_dir: str, variant: str = "") -> str:
+    from columnflow_spark.sources.sinks import ensure_store, store_path
 
+    # v2: the store carries a _slices sidecar (batch boundaries) so the
+    # delete contract can rebuild exactly the affected slices
     return ensure_store(
-        path or _qsk_store_path(sf_dir),
+        store_path(sf_dir, "events", "qsk_store", f"qsk{variant}-k{_QSK_K}-v2"),
         lambda p: _build_qsk_store(spark, sf_dir, p),
-        marker="_SEQ_COMPLETE",
     )
 
 
@@ -1675,7 +1648,7 @@ def quantile_sketch_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletion of the ``event_id % {_QSK_DELETE_MOD} == {_QSK_DELETE_REM}``
     rows, settle (bounded per-slice rebuild), serve — hash-equal to the
     from-scratch sketch over the reduced corpus."""
-    path = _ensure_qsk_store(spark, sf_dir, _qsk_store_path(sf_dir, variant="-del"))
+    path = _ensure_qsk_store(spark, sf_dir, variant="-del")
     ids = (
         load_table(spark, sf_dir, "events", columns=["event_id"])
         .filter(F.col("event_id") % _QSK_DELETE_MOD == _QSK_DELETE_REM)

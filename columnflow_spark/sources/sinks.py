@@ -25,6 +25,7 @@ Reference semantics:
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import shutil
@@ -33,6 +34,8 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from columnflow_spark.sources.tables import table_path
 
 DEFAULT_ROWS_PER_FILE = 50_000
 DEFAULT_TARGET_FILE_BYTES = 512 * 1024 * 1024
@@ -129,6 +132,35 @@ def compact_to_target_size(
     return n_files
 
 
+def scratch_root() -> str:
+    """Writable artifact root (env-overridable; never under the read-only
+    testdata tree)."""
+    return os.environ.get(
+        "SPARK_GRAFT_SCRATCH",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "scratch"),
+    )
+
+
+def content_tag(src: str, prefix: str) -> str:
+    """Shared content-addressing scheme for every scratch artifact store
+    (IVF+PQ index, dedup fingerprint store, format roundtrips): hash the
+    source file identity (abspath + size + mtime) plus a caller prefix
+    (format/version), so a rebuilt source or a bumped format gets a fresh
+    tag and an unchanged one is reused across sessions."""
+    try:
+        st = os.stat(src)
+        ident = f"{prefix}|{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}"
+    except OSError:
+        ident = f"{prefix}|{os.path.abspath(src)}"
+    return hashlib.sha1(ident.encode()).hexdigest()[:12]
+
+
+def store_path(sf_dir: str, table: str, kind: str, prefix: str) -> str:
+    """Where a persisted store derived from ``table`` lives:
+    ``<scratch_root>/<kind>/<content_tag(table file, prefix)>``."""
+    return os.path.join(scratch_root(), kind, content_tag(table_path(sf_dir, table), prefix))
+
+
 #: a store's completeness marker: dynamic partition overwrite commits per
 #: partition and writes NO root ``_SUCCESS``, so without an explicit
 #: marker a reuse check can never pass and every session silently pays a
@@ -150,13 +182,11 @@ def is_built(path: str) -> bool:
 
 
 def invalidate_store(path: str) -> None:
-    """Trip a store's reuse contract: remove its completeness markers
-    (``_BUILT`` and the multi-step ``_SEQ_COMPLETE``), so every reuse
-    check treats the store as absent and the next touch rebuilds it."""
-    for marker in (BUILT, "_SEQ_COMPLETE"):
-        p = os.path.join(path, marker)
-        if os.path.exists(p):
-            os.remove(p)
+    """Trip a store's reuse contract: remove its completeness marker, so
+    every reuse check treats the store as absent and the next touch
+    rebuilds it."""
+    if is_built(path):
+        os.remove(os.path.join(path, BUILT))
 
 
 def replace_store(
@@ -164,8 +194,6 @@ def replace_store(
     path: str,
     *,
     partition_by: Iterable[str],
-    marker_name: str = BUILT,
-    marker_text: str = "",
     rows_per_file: int = DEFAULT_ROWS_PER_FILE,
 ) -> None:
     """Rewrite an incremental store IN PLACE with a new layout (the
@@ -190,52 +218,54 @@ def replace_store(
     # layout before the swap, or the rewrite silently destroys them
     # (found by bm25_postings_delete: the stats slices vanished and every
     # score went NaN off a negative doc count).  FILE sidecars (store
-    # metadata like the graph store's _BUCKETS modulus) are COPIED, not
-    # moved: a crash between this loop and the swap must leave the
-    # still-live source store metadata-complete — a marker-complete
-    # store missing its bucket-modulus record would serve wrongly-pruned
-    # reads, which is worse than the rebuild a missing marker forces
-    # (r13; directory sidecars keep the move — their loss fails safe via
-    # the serve-path fallbacks).
+    # metadata like the graph store's _BUCKETS modulus, and the _BUILT
+    # marker itself) are COPIED, not moved: a crash between this loop and
+    # the swap must leave the still-live source store metadata-complete —
+    # a marker-complete store missing its bucket-modulus record would
+    # serve wrongly-pruned reads, which is worse than the rebuild a
+    # missing marker forces (r13; directory sidecars keep the move —
+    # their loss fails safe via the serve-path fallbacks).
     for entry in os.listdir(path):
-        if entry.startswith("_") and entry != marker_name:
+        if entry.startswith("_"):
             src, dst = os.path.join(path, entry), os.path.join(tmp, entry)
             if os.path.isfile(src):
                 shutil.copy2(src, dst)
             else:
                 os.rename(src, dst)
-    with open(os.path.join(tmp, marker_name), "w") as f:
-        f.write(marker_text)
+    if not is_built(tmp):
+        mark_built(tmp)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
 
 
-def ensure_store(path: str, build_fn, marker: str = BUILT) -> str:
-    """Cross-session-safe check-then-build (VERDICT r11 next #7): when
-    the ``_BUILT`` marker is absent, build into a UNIQUE staging sibling
-    and publish with one atomic ``rename``.  Two concurrent sessions may
-    both pay the build (content-addressed paths make the bytes
-    identical), but they can never interleave writes inside one
-    directory: exactly one rename wins, the loser discards its staging
-    copy and serves the winner's store.
+def ensure_store(path: str, build_fn) -> str:
+    """The one check-then-build for persisted stores: reuse ``path`` when
+    it carries ``_BUILT``, otherwise run ``build_fn(staging)`` into a
+    UNIQUE ``.staging-*`` sibling, mark it and publish it with one atomic
+    ``rename``.
 
-    ``build_fn(staging_path)`` must write the complete store INCLUDING
-    its completeness ``marker`` at ``staging_path`` (``_BUILT`` for
-    single-step builds, ``_SEQ_COMPLETE`` for multi-step fixtures) — the
-    marker therefore exists before publication, and a crash at any point
-    leaves either nothing at ``path`` (next session rebuilds) or a
-    fully-marked store.
+    Staging plus rename makes any multi-step build atomic: nothing
+    reaches ``path`` until ``build_fn`` returns, so a build may take any
+    number of upserts, deletes and compactions and never write a marker
+    itself — a crash at any step leaves nothing at ``path`` (the next
+    session rebuilds) or a complete, marked store.  A marker the build
+    did write (the per-upsert ``format=`` line) is kept.  Two concurrent
+    sessions may both pay the build (content-addressed paths make the
+    bytes identical), but exactly one rename wins; the loser discards its
+    staging copy and serves the winner's store.
     """
     import uuid
 
-    if os.path.exists(os.path.join(path, marker)):
+    if is_built(path):
         return path
     staging = f"{path}.staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     try:
         build_fn(staging)
-        if not os.path.exists(os.path.join(staging, marker)):
-            raise RuntimeError(f"store build left no {marker} marker: {staging}")
+        if not os.path.isdir(staging):
+            raise RuntimeError(f"store build created no staging dir: {staging}")
+        if not is_built(staging):
+            mark_built(staging)
     except BaseException:
         # a failed build must not leak its staging tree (ADVICE r12):
         # orphaned .staging-* siblings otherwise accumulate forever
@@ -261,12 +291,12 @@ def ensure_store(path: str, build_fn, marker: str = BUILT) -> str:
         pass
     # a marker-less remnant at path (crashed legacy in-place build) must
     # not block publication
-    if os.path.exists(path) and not os.path.exists(os.path.join(path, marker)):
+    if os.path.exists(path) and not is_built(path):
         shutil.rmtree(path, ignore_errors=True)
     try:
         os.rename(staging, path)
     except OSError:
-        if os.path.exists(os.path.join(path, marker)):
+        if is_built(path):
             # another session published first — deterministic content,
             # use theirs
             shutil.rmtree(staging, ignore_errors=True)

@@ -74,13 +74,14 @@ def test_centroid_routing_reads_sidecar_only(spark, sf_dir, fresh_graph):
 
 
 def test_deferred_marker_fails_closed(spark, sf_dir, tmp_path):
-    """mark=False leaves no _BUILT marker — multi-step store setup
-    (build + tombstones) that crashes mid-way must trigger a rebuild,
-    never serve a half-initialized store as complete."""
+    """The graph build leaves no _BUILT marker (ensure_store writes it
+    once the whole build returned) — multi-step store setup (build +
+    tombstones) that crashes mid-way must trigger a rebuild, never serve
+    a half-initialized store as complete."""
     import os
 
     path = str(tmp_path / "gdefer")
-    build_graph_index(spark, sf_dir, path, mark=False)
+    build_graph_index(spark, sf_dir, path)
     assert not os.path.exists(os.path.join(path, "_BUILT"))
     assert os.path.exists(os.path.join(path, "_centroids"))
 
@@ -404,7 +405,7 @@ def vacuumed_graph(spark, sf_dir, tmp_path_factory):
     from columnflow_spark.sources.sinks import mark_built, upsert_tombstones
 
     path = str(tmp_path_factory.mktemp("gvac") / "index")
-    build_graph_index(spark, sf_dir, path, mark=False)
+    build_graph_index(spark, sf_dir, path)
     upsert_tombstones(_delete_ids(spark, sf_dir), path, batch=0, id_col="vec_id")
     mark_built(path, _G_FORMAT)
     compact_graph_index(spark, path)

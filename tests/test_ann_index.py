@@ -173,11 +173,11 @@ def test_index_drift_audit_and_trigger(spark, sf_dir, tmp_path):
         ann_index_needs_rebuild,
         build_ivfpq_index,
         index_drift_audit_frame,
-        invalidate_index,
         upsert_index_frame,
     )
     from columnflow_spark.queries.mmdata import _ivf_cents
     from columnflow_spark.sources import load_table, spread
+    from columnflow_spark.sources.sinks import invalidate_store
 
     n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
     path = str(tmp_path / "drift_index")
@@ -197,7 +197,7 @@ def test_index_drift_audit_and_trigger(spark, sf_dir, tmp_path):
     upsert_index_frame(spark, sf_dir, drifted, path, batch=2)
     assert ann_index_needs_rebuild(spark, sf_dir, path)
     assert os.path.exists(os.path.join(path, "_BUILT"))
-    invalidate_index(path)
+    invalidate_store(path)
     assert not os.path.exists(os.path.join(path, "_BUILT"))
 
 

@@ -275,20 +275,20 @@ def test_drift_audit_trigger(spark, sf_dir, tmp_path):
     """A healthy two-batch store must not trip the rebuild trigger; a
     planted drifted batch (vectors negated — maximally far from every
     frozen centroid) must trip it, and tripping invalidates the store
-    through the _BUILT/sequence-marker reuse contract."""
+    through the _BUILT reuse contract."""
     import os
 
     import pyspark.sql.functions as F
 
     from columnflow_spark.queries.dedupstore import (
         init_semdedup_store,
-        invalidate_semdedup_store,
         semdedup_drift_audit_frame,
         semdedup_store_needs_rebuild,
         upsert_semdedup_batch,
         upsert_semdedup_frame,
     )
     from columnflow_spark.sources import load_table
+    from columnflow_spark.sources.sinks import invalidate_store
 
     n = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).count()
     h = 3 * n // 5
@@ -326,7 +326,7 @@ def test_drift_audit_trigger(spark, sf_dir, tmp_path):
     # the trigger wires into the SAME completeness contract every ensure
     # helper gates on: after invalidation the store reads as absent
     assert os.path.exists(os.path.join(path, "_BUILT"))
-    invalidate_semdedup_store(path)
+    invalidate_store(path)
     assert not os.path.exists(os.path.join(path, "_BUILT"))
 
 

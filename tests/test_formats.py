@@ -13,7 +13,11 @@ import os
 
 
 def test_roundtrip_dir_content_addressed(tmp_path):
-    from columnflow_spark.queries.formats import _roundtrip_dir
+    from columnflow_spark.sources.sinks import store_path
+
+    def _roundtrip_dir(sf_dir, table, fmt):
+        # the location the roundtrip queries write their copies to
+        return store_path(sf_dir, table, "formats", fmt)
 
     src = tmp_path / "orders.parquet"
     src.write_bytes(b"x")

@@ -84,3 +84,53 @@ def test_session_artifact_caches_honor_reliable_mode(spark, sf_dir, reliable_mod
     local = ckpt_dir.replace("file:", "")
     assert any(files for _, _, files in os.walk(local)), local
     purge("minhash_sigs")  # a reliable-pinned frame must not leak
+
+
+def test_fallback_checkpoint_dir_removed_at_exit(tmp_path):
+    """With the switch on and no configured checkpoint dir, the local
+    fallback dir belongs to the process: nothing named
+    ``cf_reliable_ckpt_*`` survives its exit."""
+    import subprocess
+    import sys
+    import textwrap
+
+    child = textwrap.dedent(
+        """
+        import os
+        from columnflow_spark.core.state import _ensure_checkpoint_dir
+
+        class _Conf:
+            def get(self, key, default=None):
+                return default
+
+        class _Context:
+            dir = None
+
+            def getCheckpointDir(self):
+                return self.dir
+
+            def setCheckpointDir(self, path):
+                self.dir = path
+
+        class _Session:
+            conf = _Conf()
+            sparkContext = _Context()
+
+        s = _Session()
+        _ensure_checkpoint_dir(s)
+        assert os.path.isdir(s.sparkContext.dir), s.sparkContext.dir
+        print(s.sparkContext.dir)
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CHECKPOINT_DIR"}
+    env["TMPDIR"] = str(tmp_path)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    out = subprocess.run(
+        [sys.executable, "-c", child], env=env, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    made = out.stdout.strip()
+    assert os.path.basename(made).startswith("cf_reliable_ckpt_")
+    assert os.path.dirname(made) == str(tmp_path)
+    assert [e for e in os.listdir(tmp_path) if e.startswith("cf_reliable_ckpt_")] == []

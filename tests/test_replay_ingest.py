@@ -1,6 +1,8 @@
 """The replay-ingest primitive (queries/streaming.py ``replay_ingest``):
 nothing a streaming twin creates outlives its return, and no query
-hand-rolls the replay harness or a scratch directory."""
+hand-rolls the replay harness or a scratch directory.  The store
+contract (sources/sinks.py): ``store_path`` owns where a persisted store
+lives and ``ensure_store`` owns when it is complete."""
 
 from __future__ import annotations
 
@@ -54,11 +56,28 @@ def _calls_outside(path: pathlib.Path, needle: str, owners: set[str]) -> list[st
     ]
 
 
+def _ensure_store_calls_over_two_args(path: pathlib.Path) -> list[str]:
+    """``ensure_store(...)`` calls in ``path`` passing more than
+    ``(path, build_fn)``."""
+    out = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name == "ensure_store" and len(node.args) + len(node.keywords) > 2:
+            out.append(f"{path.relative_to(_REPO)}:{node.lineno}: ensure_store with extra args")
+    return out
+
+
 def test_replay_harness_and_scratch_dirs_have_one_owner():
     """Every ``events_replay`` stream in the query layer is opened by
     ``replay_ingest``, drained by ``_drain`` (or the memory sink), and
-    every scratch directory comes from ``scratch_dirs``; the ``_BUILT``
-    marker name lives only in sources/sinks.py."""
+    every scratch directory comes from ``scratch_dirs``.  Stores have one
+    owner too: the ``_BUILT`` marker name and the location helpers
+    (``content_tag``/``scratch_root``) live only in sources/sinks.py,
+    no second completeness marker (``_SEQ_COMPLETE``) exists, and
+    ``ensure_store`` takes nothing beyond ``(path, build_fn)``."""
     offenders = []
     for path in sorted((_REPO / "columnflow_spark" / "queries").rglob("*.py")):
         offenders += _calls_outside(path, "mkdtemp(", set())
@@ -67,6 +86,9 @@ def test_replay_harness_and_scratch_dirs_have_one_owner():
             path, ".processAllAvailable(", {"_drain", "_run_to_memory"}
         )
     for path in sorted((_REPO / "columnflow_spark").rglob("*.py")):
-        if path.name != "sinks.py":
-            offenders += _calls_outside(path, '"_BUILT"', set())
+        if path.relative_to(_REPO) != pathlib.Path("columnflow_spark/sources/sinks.py"):
+            for needle in ('"_BUILT"', "content_tag(", "scratch_root("):
+                offenders += _calls_outside(path, needle, set())
+        offenders += _calls_outside(path, "_SEQ_COMPLETE", set())
+        offenders += _ensure_store_calls_over_two_args(path)
     assert offenders == []

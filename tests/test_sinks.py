@@ -256,6 +256,28 @@ def test_upsert_partitions_preserves_siblings(spark, sf_dir, tmp_path):
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
 
 
+def test_replace_store_keeps_the_marker_it_finds(spark, tmp_path):
+    """Compaction copies ``_BUILT`` like every file sidecar (its bytes
+    unchanged) and writes an empty one only when the source had none."""
+    from columnflow_spark.sources.sinks import replace_store, upsert_partitions
+
+    rows = spark.range(6).selectExpr("id", "CAST(id % 2 AS INT) AS batch")
+    marked, bare = str(tmp_path / "marked"), str(tmp_path / "bare")
+    for path in (marked, bare):
+        upsert_partitions(rows, path, partition_by=["batch"])
+    with open(os.path.join(marked, "_BUILT"), "w") as f:
+        f.write("format=7\n")
+    for path in (marked, bare):
+        replace_store(
+            spark.read.parquet(path).selectExpr("id", "0 AS batch"), path, partition_by=["batch"]
+        )
+        assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(6))
+    with open(os.path.join(marked, "_BUILT")) as f:
+        assert f.read() == "format=7\n"
+    with open(os.path.join(bare, "_BUILT")) as f:
+        assert f.read() == ""
+
+
 def test_ensure_store_builds_staged_and_publishes(tmp_path):
     from columnflow_spark.sources.sinks import ensure_store
 
@@ -277,6 +299,20 @@ def test_ensure_store_builds_staged_and_publishes(tmp_path):
     # second call short-circuits: no rebuild
     assert ensure_store(path, build) == path
     assert len(calls) == 1
+    # a marker the build wrote itself is kept as written
+    with open(os.path.join(path, "_BUILT")) as f:
+        assert f.read() == "ok"
+
+    # a two-step build that writes no marker publishes a marked store:
+    # ensure_store owns completeness
+    two_step = str(tmp_path / "two_step")
+
+    def steps(p):
+        for step in ("one", "two"):
+            os.makedirs(os.path.join(p, f"step={step}"))
+
+    assert ensure_store(two_step, steps) == two_step
+    assert sorted(os.listdir(two_step)) == ["_BUILT", "step=one", "step=two"]
 
 
 def test_ensure_store_requires_marker_and_clears_remnants(tmp_path):
@@ -287,9 +323,9 @@ def test_ensure_store_requires_marker_and_clears_remnants(tmp_path):
     path = str(tmp_path / "store")
 
     def bad_build(p):
-        os.makedirs(p)  # no marker -> must fail loudly, never publish
+        pass  # creates nothing -> must fail loudly, never publish
 
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="created no staging dir"):
         ensure_store(path, bad_build)
     assert not os.path.exists(path)
     # a marker-less remnant (crashed legacy in-place build) is replaced
@@ -348,8 +384,20 @@ def test_ensure_store_cleans_staging_on_failure(tmp_path):
         ensure_store(path, boom)
     leftovers = [e for e in os.listdir(tmp_path) if ".staging-" in e]
     assert leftovers == []
-    # and a markerless build (no exception, no marker) also cleans up
-    with _pytest.raises(RuntimeError, match="no _BUILT marker"):
-        ensure_store(path, lambda p: os.makedirs(p, exist_ok=True))
+    assert not os.path.exists(path)
+
+    # a build that raises BETWEEN its steps publishes nothing either
+    def crash_between(p):
+        os.makedirs(os.path.join(p, "step=one"))
+        raise RuntimeError("crash between steps")
+
+    with _pytest.raises(RuntimeError, match="crash between steps"):
+        ensure_store(path, crash_between)
+    assert not os.path.exists(path)
+    leftovers = [e for e in os.listdir(tmp_path) if ".staging-" in e]
+    assert leftovers == []
+    # and a build that creates nothing (no exception) raises and cleans up
+    with _pytest.raises(RuntimeError, match="created no staging dir"):
+        ensure_store(path, lambda p: None)
     leftovers = [e for e in os.listdir(tmp_path) if ".staging-" in e]
     assert leftovers == []

@@ -63,6 +63,10 @@ def _tumbling(spark, path, watermark="10 minutes"):
         q.processAllAvailable()
     finally:
         q.stop()
+    try:
+        rows = spark.table(name).collect()
+    finally:
+        spark.catalog.dropTempView(name)
     dropped = sum(
         so.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress
@@ -70,7 +74,7 @@ def _tumbling(spark, path, watermark="10 minutes"):
     )
     out = {
         (r.window.start.minute + 60 * r.window.start.hour, r.event_type): r.n
-        for r in spark.table(name).collect()
+        for r in rows
     }
     return out, dropped
 
