@@ -45,8 +45,3 @@ def seeded_gauss(seed: Column, mean: Column, std: Column) -> Column:
     z = F.sqrt(-2.0 * F.log(u1)) * F.cos(F.lit(2.0 * 3.141592653589793) * u2)
     return mean + std * z
 
-
-def md5_fingerprint(col: Column) -> Column:
-    """Document fingerprint: md5 hex of the (caller-normalized) content —
-    identical surface in DuckDB for oracle parity."""
-    return F.md5(col)

@@ -30,10 +30,6 @@ def delta_r(eta1: Column, phi1: Column, eta2: Column, phi2: Column) -> Column:
     return F.sqrt(deta * deta + dphi * dphi)
 
 
-def pt_from_cartesian(px: Column, py: Column) -> Column:
-    return F.sqrt(px * px + py * py)
-
-
 def cosh(x: Column) -> Column:
     """exp-based cosh: identical arithmetic is expressible in any SQL
     engine (DuckDB has no cosh), so oracle parity holds bit-for-bit."""

@@ -18,6 +18,7 @@ from __future__ import annotations
 from collections.abc import Mapping
 
 from columnflow_spark.inference.model import InferenceModel, Parameter
+from columnflow_spark.sources.sinks import replace_store, write_events
 
 
 def _effective_effect(par, cat_name: str, proc_name: str, shapes, cache: dict):
@@ -92,14 +93,11 @@ def export_shapes(hists, path: str) -> str:
     ``$CHANNEL/$PROCESS`` / ``$CHANNEL/$PROCESS_$SYSTEMATIC(Up|Down)``
     realized as the (category, process, shift) columns).
 
-    The write clusters rows by the partition column first (the
-    ``REBALANCE`` hint — guide §6): this writer bypassed the shared
-    ``write_events`` path and so re-created the one-file-per-task-per-
-    partition-value small-files bug the r13 sinks fix closed."""
-    hists.hint("rebalance", "category").write.mode("overwrite").partitionBy(
-        "category"
-    ).parquet(path)
-    return path
+    Rebuilt on every call through ``sinks.replace_store`` (staged, then
+    swapped in with one rename) over ``write_events``, whose
+    ``REBALANCE`` by the partition column keeps the layout to a few files
+    per category (guide §6)."""
+    return replace_store(path, lambda p: write_events(hists, p, partition_by=["category"]))
 
 
 def render_datacard(

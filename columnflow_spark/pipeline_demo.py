@@ -165,8 +165,10 @@ def write_reduced_store(
     histogram pass over a 100 TB store into a scan of 1/N_shifts of it:
     the shift/dataset predicates resolve at PLANNING time against the
     directory listing (PartitionFilters), no file footer is even opened
-    for pruned slices.  test_plan_quality pins that property."""
-    from columnflow_spark.sources.sinks import write_events
+    for pruned slices.  test_plan_quality pins that property.  Rebuilt on
+    every call through ``sinks.replace_store``: staged, then swapped in
+    with one rename."""
+    from columnflow_spark.sources.sinks import replace_store, write_events
 
     events = build_nested_events(spark, sf_dir)
     slices = []
@@ -187,5 +189,4 @@ def write_reduced_store(
     out = slices[0]
     for s in slices[1:]:
         out = out.unionByName(s)
-    write_events(out, path, partition_by=("dataset", "shift"))
-    return path
+    return replace_store(path, lambda p: write_events(out, p, partition_by=("dataset", "shift")))

@@ -39,8 +39,8 @@ the whole walk replays in the DuckDB oracle:
   the index.  The entry (routing) layer persists as a ``_centroids``
   sidecar written at build time (the semdedup-store pattern,
   dedupstore.py) — routing reads the 1/64-sized sidecar, NEVER the
-  corpus-sized page store; sidecars survive ``replace_store``
-  compaction by contract (sinks.py).
+  corpus-sized page store; a sidecar the rewrite does not write itself
+  is copied into ``replace_store``'s staging dir by contract (sinks.py).
 - **deletes**: bounded tombstones anti-joined at the final ranking —
   deleted nodes still ROUTE (their edges keep the graph navigable, the
   DiskANN deletion semantics) but never surface as results; the oracle
@@ -67,7 +67,6 @@ from __future__ import annotations
 
 import os
 import random
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -612,8 +611,8 @@ def _derive_store_buckets(n_rows: int) -> int:
 
 def _write_store_buckets(path: str, buckets: int) -> None:
     """Record the store's bucket modulus as the ``_BUCKETS`` metadata
-    sidecar (underscore-prefixed → carried through ``replace_store``
-    compaction by the sinks contract) so every later reader/writer uses
+    sidecar (underscore-prefixed → copied into ``replace_store``'s
+    staging dir by the sinks contract) so every later reader/writer uses
     the modulus the store was PARTITIONED with."""
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, "_BUCKETS"), "w") as f:
@@ -1473,15 +1472,17 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
     around the store's tombstoned nodes, rewrite surviving pages as one
     ``batch=0`` layout, drop deleted pages + centroids + tombstones.
 
-    Crash-safe and idempotent: the page rewrite is ``replace_store``'s
-    atomic tmp+swap; the ``_deleted`` slice (carried through the swap as
-    a sidecar) is cleared LAST, so an interrupted vacuum re-runs — a
-    re-vacuum over already-purged ids finds no edges touching them and
-    rewrites the identical store."""
+    Crash-safe and idempotent: the new pages and the new ``_centroids``
+    routing sidecar are built into one ``replace_store`` staging dir and
+    published together by one rename; the ``_deleted`` slice (carried
+    into the staging dir as a sidecar) is cleared LAST, so an interrupted
+    vacuum re-runs — a re-vacuum over already-purged ids finds no edges
+    touching them and rewrites the identical store."""
     from columnflow_spark.sources.sinks import (
         clear_tombstones,
         read_tombstones,
         replace_store,
+        write_events,
     )
 
     del_ids = read_tombstones(spark, path, id_col="vec_id")
@@ -1509,24 +1510,21 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
             "g",
             F.coalesce("nbrs", F.array().cast("array<bigint>")).alias("nbrs"),
             # keep the store's recorded modulus (the _BUCKETS sidecar is
-            # carried through replace_store's swap like every sidecar)
+            # carried into replace_store's staging dir like every sidecar)
             F.pmod(F.xxhash64("vec_id"), F.lit(_read_store_buckets(path))).alias("gb"),
             F.lit(0).alias("batch"),
         )
-        .transform(checkpoint_df)  # fully resolved BEFORE the in-place rewrite
+        .transform(checkpoint_df)  # fully resolved BEFORE the rewrite
     )
-    # new routing sidecar staged to a sibling first (same fail-closed
-    # shape as replace_store's tmp): purged entry nodes must leave routing
-    cents_tmp = path + ".centroids-tmp"
+    # the new routing sidecar: purged entry nodes must leave routing
     cpath = _centroids_path(path)
     if os.path.exists(cpath):
         cents_src = spark.read.parquet(cpath)
     else:
-        # crash-recovery: a previous vacuum that died between the sidecar
-        # rmtree and rename leaves a marker-complete store with no
-        # _centroids — the sidecar is definitionally the modulus entry
-        # rows of the store's own pages (build writes ge%MOD, ingest
-        # upserts its batch's %MOD slice), so rebuild it from them
+        # recovery: a marker-complete store with no _centroids — the
+        # sidecar is definitionally the modulus entry rows of the store's
+        # own pages (build writes ge%MOD, ingest upserts its batch's %MOD
+        # slice), so rebuild it from them
         cents_src = pages.filter(F.col("vec_id") % _G_ENTRY_MOD == 0).select(
             "vec_id", "g", F.lit(0).alias("batch")
         )
@@ -1534,18 +1532,20 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
         cents_src.join(F.broadcast(del_ids), "vec_id", "left_anti")
         .select("vec_id", "g", F.lit(0).alias("batch"))
     )
-    # hive-partitioned by batch= exactly like the build/ingest writes, so
-    # a post-vacuum incremental insert that upserts its own slice keeps
-    # ONE consistent partition layout in the sidecar directory
-    # cluster by the partition column before the write (the write_events
-    # REBALANCE rule, guide §6) so the sidecar is a few files, not
-    # files-per-task x batch
-    cents_new.hint("rebalance", "batch").write.mode("overwrite").partitionBy(
-        "batch"
-    ).parquet(cents_tmp)
-    replace_store(new_pages, path, partition_by=["gb", "batch"])
-    shutil.rmtree(cpath, ignore_errors=True)
-    os.rename(cents_tmp, cpath)
+
+    def build(staging: str) -> None:
+        write_events(new_pages, staging, partition_by=["gb", "batch"])
+        # hive-partitioned by batch= exactly like the build/ingest writes,
+        # so a post-vacuum incremental insert that upserts its own slice
+        # keeps ONE consistent partition layout in the sidecar directory;
+        # clustered by the partition column before the write (the
+        # write_events REBALANCE rule, guide §6) so the sidecar is a few
+        # files, not files-per-task x batch
+        cents_new.hint("rebalance", "batch").write.mode("overwrite").partitionBy(
+            "batch"
+        ).parquet(_centroids_path(staging))
+
+    replace_store(path, build)
     clear_tombstones(path)
     return path
 

@@ -62,6 +62,7 @@ from columnflow_spark.sources.sinks import (
     store_path,
     upsert_partitions,
     upsert_tombstones,
+    write_events,
 )
 from columnflow_spark.sources import spread
 
@@ -126,9 +127,9 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
     Also the VACUUM step of deletion propagation: tombstoned vectors
     (``_deleted/`` slices written by :func:`delete_vectors_from_index`)
     are dropped from the rewrite and the tombstones cleared — a crash
-    between swap and clear is harmless (surviving tombstones anti-join
-    already-purged rows).  Marker-preserving, fails closed on a crash
-    (sources/sinks.py:replace_store)."""
+    between publish and clear is harmless (surviving tombstones anti-join
+    already-purged rows).  Staged and published by one rename, keeping
+    the marker (sources/sinks.py:replace_store)."""
     rows = anti_tombstones(spark.read.parquet(path), path, id_col="vec_id")
     win = W.partitionBy("vec_id").orderBy(F.desc("batch"))
     rows = (
@@ -141,7 +142,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
             F.lit(0).alias("batch"),
         )
     )
-    replace_store(rows, path, partition_by=["cid", "batch"])
+    replace_store(path, lambda p: write_events(rows, p, partition_by=["cid", "batch"]))
     clear_tombstones(path)
 
 

@@ -349,13 +349,13 @@ def cc_compact_store(spark: SparkSession, store: str) -> str:
     current label's bucket, each LIVE edge re-labeled to its component's
     current label, tombstones and stale dual-bucket history dropped.
     The full-store read is the one corpus-proportional read compaction
-    is allowed (the graph-vacuum rule); each sidecar rewrite is
-    ``replace_store``'s atomic tmp+swap, and a crash between the two
-    swaps leaves a correct store (the sidecars are independently
-    complete) that a re-run finishes — idempotent.  Run at stream
+    is allowed (the graph-vacuum rule); each sidecar rewrite is a
+    ``replace_store`` (staged, published by one rename), and a crash
+    between the two publishes leaves a correct store (the sidecars are
+    independently complete) that a re-run finishes — idempotent.  Run at stream
     quiescence, like every other store vacuum: a micro-batch replayed
     from BEFORE the compaction horizon would see folded state."""
-    from columnflow_spark.sources.sinks import replace_store
+    from columnflow_spark.sources.sinks import replace_store, write_events
 
     gbm = _read_scc_gb(store)
     labels = cc_current_labels(spark, store).transform(checkpoint_df)
@@ -372,8 +372,8 @@ def cc_compact_store(spark: SparkSession, store: str) -> str:
             _gb(gb_mod=gbm).alias("gb"), F.lit(0).alias("batch"),
         )
     )
-    replace_store(nodes_new, _nodes_path(store), partition_by=["gb", "batch"])
-    replace_store(edges_new, _edges_path(store), partition_by=["gb", "batch"])
+    for path, rows in ((_nodes_path(store), nodes_new), (_edges_path(store), edges_new)):
+        replace_store(path, lambda p: write_events(rows, p, partition_by=["gb", "batch"]))
     return store
 
 

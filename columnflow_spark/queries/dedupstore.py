@@ -63,6 +63,7 @@ from columnflow_spark.sources.sinks import (
     store_path,
     upsert_partitions,
     upsert_tombstones,
+    write_events,
 )
 
 #: bump when the fingerprint definition OR the row monoid changes:
@@ -136,8 +137,8 @@ def compact_dedup_store(spark: SparkSession, path: str) -> None:
     so flagging against the compacted store is bit-identical to flagging
     against the full batch history (tests/test_dedupstore.py re-proves
     the incremental ≡ from-scratch equivalence over a compacted store).
-    The swap is marker-preserving and fails closed on a crash
-    (sources/sinks.py:replace_store).
+    The rewrite is staged and published by one rename, keeping the
+    marker (sources/sinks.py:replace_store).
 
     Compaction is also the VACUUM step of deletion propagation: a
     fingerprint whose summed holder count reaches zero (every holder
@@ -154,7 +155,7 @@ def compact_dedup_store(spark: SparkSession, path: str) -> None:
         .filter(F.col("cnt") > 0)
         .withColumn("batch", F.lit(0))
     )
-    replace_store(rows, path, partition_by=["band", "batch"])
+    replace_store(path, lambda p: write_events(rows, p, partition_by=["band", "batch"]))
 
 
 def flag_fingerprints_against_store(
@@ -1171,8 +1172,8 @@ def compact_substring_store(spark: SparkSession, path: str) -> None:
     monoid), so flagging against the compacted store is bit-identical
     to flagging against the full batch history.  Also the VACUUM step
     of deletion propagation: grams whose summed occurrence count nets
-    to zero are physically purged here.  Marker-preserving, fails
-    closed on a crash (replace_store)."""
+    to zero are physically purged here.  Staged and published by one
+    rename, keeping the marker (replace_store)."""
     rows = (
         spark.read.parquet(path)
         .groupBy(F.col("gb").cast("int").alias("gb"), "g")
@@ -1180,7 +1181,7 @@ def compact_substring_store(spark: SparkSession, path: str) -> None:
         .filter(F.col("cnt") > 0)
         .withColumn("batch", F.lit(0))
     )
-    replace_store(rows, path, partition_by=["gb", "batch"])
+    replace_store(path, lambda p: write_events(rows, p, partition_by=["gb", "batch"]))
 
 
 def _ensure_substring_store(spark: SparkSession, sf_dir: str, h: int) -> str:
@@ -1342,14 +1343,15 @@ def substring_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # history. ---
 def purge_phash_store(spark: SparkSession, path: str) -> None:
     """Physical purge: rewrite the block-posting store minus tombstones
-    (marker-preserving, fails closed — replace_store) and clear the
-    tombstone slices.  A crash between swap and clear is harmless: the
-    surviving tombstones anti-join against already-purged rows."""
+    (staged, published by one rename, marker kept — replace_store) and
+    clear the tombstone slices.  A crash between publish and clear is
+    harmless: the surviving tombstones anti-join against already-purged
+    rows."""
     rows = anti_tombstones(spark.read.parquet(path), path).select(
         F.col("bi").cast("int").alias("bi"), "bv", "ph", "doc_id",
         F.lit(0).alias("batch"),
     )
-    replace_store(rows, path, partition_by=["bi", "batch"])
+    replace_store(path, lambda p: write_events(rows, p, partition_by=["bi", "batch"]))
     clear_tombstones(path)
 
 
@@ -1410,14 +1412,15 @@ def phash_store_delete_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def purge_semdedup_store(spark: SparkSession, path: str) -> None:
     """Physical purge of the semantic store (see
     :func:`purge_phash_store`); the ``_centroids`` sidecar rides through
-    the rewrite untouched (replace_store carries underscore entries)."""
+    the rewrite untouched (replace_store copies underscore entries into
+    its staging dir)."""
     rows = anti_tombstones(
         spark.read.parquet(path), path, id_col="vec_id"
     ).select(
         "vec_id", "embedding",
         F.col("cid").cast("long").alias("cid"), F.lit(0).alias("batch"),
     )
-    replace_store(rows, path, partition_by=["cid", "batch"])
+    replace_store(path, lambda p: write_events(rows, p, partition_by=["cid", "batch"]))
     clear_tombstones(path)
 
 

@@ -1081,7 +1081,7 @@ def delete_docs_from_postings(
     the deleted docs' NEGATED collection stats as slice ``batch=<n>``."""
     import os
 
-    from columnflow_spark.sources.sinks import replace_store, upsert_partitions
+    from columnflow_spark.sources.sinks import replace_store, upsert_partitions, write_events
 
     kept = (
         _read_postings(spark, path)
@@ -1089,7 +1089,7 @@ def delete_docs_from_postings(
         .select(F.col("w").cast("string").alias("w"), "doc_id", "tf", "dl")
         .withColumn("batch", F.lit(0))
     )
-    replace_store(kept, path, partition_by=["w", "batch"])
+    replace_store(path, lambda p: write_events(kept, p, partition_by=["w", "batch"]))
     deleted = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
         delete_pred
     )

@@ -25,13 +25,16 @@ Reference semantics:
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import math
 import os
 import shutil
-from collections.abc import Iterable
+import time
+import uuid
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -97,14 +100,21 @@ def write_events(
     partition across tasks (advisory size), so one hot ``batch=0`` slice
     still writes in parallel; ``maxRecordsPerFile`` bounds row groups
     either way."""
+    _sorted_writer(df, list(partition_by), rows_per_file, mode).parquet(path)
+
+
+def _sorted_writer(
+    df: DataFrame, partition_by: list[str], rows_per_file: int, mode: str
+) -> DataFrameWriter:
+    """The shared writer of :func:`write_events`, :func:`upsert_partitions`
+    and :func:`write_json_lines` (``rows_per_file`` 0: no cap)."""
     out = sort_fields(df)
-    partition_by = list(partition_by)
     if partition_by:
         out = out.hint("rebalance", *partition_by)
     writer = out.write.mode(mode).option("maxRecordsPerFile", rows_per_file)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    return writer
 
 
 def compact_to_target_size(
@@ -161,11 +171,20 @@ def store_path(sf_dir: str, table: str, kind: str, prefix: str) -> str:
     return os.path.join(scratch_root(), kind, content_tag(table_path(sf_dir, table), prefix))
 
 
-#: a store's completeness marker: dynamic partition overwrite commits per
-#: partition and writes NO root ``_SUCCESS``, so without an explicit
-#: marker a reuse check can never pass and every session silently pays a
-#: full rebuild — the store-level equivalent of a task output existence
-#: check
+def tables_tag(sf_dir: str, tables: Iterable[str]) -> str:
+    """One content tag over several source tables of ``sf_dir``: the
+    input part of the address of an output derived from all of them (the
+    task chain's ``store_parts``), so changed input gets a fresh address."""
+    tags = "|".join(content_tag(table_path(sf_dir, t), "table") for t in sorted(tables))
+    return hashlib.sha1(tags.encode()).hexdigest()[:12]
+
+
+#: the engine's one completeness marker, for every persisted directory:
+#: a store, a task output, an export.  ``ensure_store``/``replace_store``
+#: write it when they publish; dynamic partition overwrite commits per
+#: partition and writes no root success file, so the live ``upsert_*``
+#: stores write it themselves.  Without it a reuse check can never pass
+#: and every session silently pays a full rebuild
 BUILT = "_BUILT"
 
 
@@ -189,77 +208,20 @@ def invalidate_store(path: str) -> None:
         os.remove(os.path.join(path, BUILT))
 
 
-def replace_store(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: Iterable[str],
-    rows_per_file: int = DEFAULT_ROWS_PER_FILE,
-) -> None:
-    """Rewrite an incremental store IN PLACE with a new layout (the
-    compaction primitive for the ``batch=``-grained stores: the IVF+PQ
-    index and the dedup fingerprint store grow one directory per ingest
-    batch forever; compaction folds them back into one slice).
-
-    ``df`` may read FROM ``path`` itself: the rewrite lands in a sibling
-    ``<path>.compact-tmp`` first (fully materialized — the source is
-    still intact while the write runs), gets its completeness marker, and
-    only then swaps directories.  Crash between the two renames leaves no
-    marker at ``path``, so the store-reuse check fails closed and the
-    next session rebuilds — never a half-compacted store read as
-    complete."""
-    tmp, old = path + ".compact-tmp", path + ".compact-old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    write_events(df, tmp, partition_by=partition_by, rows_per_file=rows_per_file)
-    # sidecar artifacts (underscore-prefixed: the semdedup store's
-    # _centroids, the postings store's _stats) live INSIDE the store dir
-    # but are not part of the rewritten data — carry them into the new
-    # layout before the swap, or the rewrite silently destroys them
-    # (found by bm25_postings_delete: the stats slices vanished and every
-    # score went NaN off a negative doc count).  FILE sidecars (store
-    # metadata like the graph store's _BUCKETS modulus, and the _BUILT
-    # marker itself) are COPIED, not moved: a crash between this loop and
-    # the swap must leave the still-live source store metadata-complete —
-    # a marker-complete store missing its bucket-modulus record would
-    # serve wrongly-pruned reads, which is worse than the rebuild a
-    # missing marker forces (r13; directory sidecars keep the move —
-    # their loss fails safe via the serve-path fallbacks).
-    for entry in os.listdir(path):
-        if entry.startswith("_"):
-            src, dst = os.path.join(path, entry), os.path.join(tmp, entry)
-            if os.path.isfile(src):
-                shutil.copy2(src, dst)
-            else:
-                os.rename(src, dst)
-    if not is_built(tmp):
-        mark_built(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+def _sibling(path: str, kind: str) -> str:
+    """A unique ``<path>.<kind>-<pid>-<hex>`` sibling of ``path``."""
+    return f"{path}.{kind}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
 
 
-def ensure_store(path: str, build_fn) -> str:
-    """The one check-then-build for persisted stores: reuse ``path`` when
-    it carries ``_BUILT``, otherwise run ``build_fn(staging)`` into a
-    UNIQUE ``.staging-*`` sibling, mark it and publish it with one atomic
-    ``rename``.
-
-    Staging plus rename makes any multi-step build atomic: nothing
-    reaches ``path`` until ``build_fn`` returns, so a build may take any
-    number of upserts, deletes and compactions and never write a marker
-    itself — a crash at any step leaves nothing at ``path`` (the next
-    session rebuilds) or a complete, marked store.  A marker the build
-    did write (the per-upsert ``format=`` line) is kept.  Two concurrent
-    sessions may both pay the build (content-addressed paths make the
-    bytes identical), but exactly one rename wins; the loser discards its
-    staging copy and serves the winner's store.
-    """
-    import uuid
-
-    if is_built(path):
-        return path
-    staging = f"{path}.staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+def _staged_build(path: str, build_fn: Callable[[str], None]) -> str:
+    """The one build step of both store verbs: run ``build_fn(staging)``
+    into a unique ``.staging-*`` sibling of ``path``, mark it ``_BUILT``
+    unless the build did, and return it.  Nothing reaches ``path`` here,
+    so a build may take any number of steps; one that raises leaves no
+    staging tree behind (ADVICE r12).  Stale ``.staging-*``/``.old-*``
+    siblings older than a day (crashed builds; a live one is never that
+    old) are swept."""
+    staging = _sibling(path, "staging")
     try:
         build_fn(staging)
         if not os.path.isdir(staging):
@@ -267,41 +229,75 @@ def ensure_store(path: str, build_fn) -> str:
         if not is_built(staging):
             mark_built(staging)
     except BaseException:
-        # a failed build must not leak its staging tree (ADVICE r12):
-        # orphaned .staging-* siblings otherwise accumulate forever
         shutil.rmtree(staging, ignore_errors=True)
         raise
-    # opportunistic sweep of stale staging siblings from crashed builds
-    # (a LIVE concurrent build uses a different pid-uuid name and wins or
-    # discards via the rename race below; anything older than a day here
-    # is dead weight)
-    import time as _time
-
     parent, base = os.path.split(path)
-    try:
-        for entry in os.listdir(parent or "."):
-            if entry.startswith(f"{base}.staging-") and entry != os.path.basename(staging):
-                full = os.path.join(parent, entry)
-                try:
-                    if _time.time() - os.path.getmtime(full) > 86400:
-                        shutil.rmtree(full, ignore_errors=True)
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    # a marker-less remnant at path (crashed legacy in-place build) must
-    # not block publication
-    if os.path.exists(path) and not is_built(path):
-        shutil.rmtree(path, ignore_errors=True)
+    for entry in os.listdir(parent or "."):
+        stale = entry.startswith((f"{base}.staging-", f"{base}.old-"))
+        if stale and entry != os.path.basename(staging):
+            full = os.path.join(parent, entry)
+            with contextlib.suppress(OSError):
+                if time.time() - os.path.getmtime(full) > 86400:
+                    shutil.rmtree(full, ignore_errors=True)
+    return staging
+
+
+def _publish(staging: str, path: str) -> None:
+    """Rename ``staging`` onto ``path``.  If another session published a
+    marked store there first, ours is discarded and theirs served."""
     try:
         os.rename(staging, path)
     except OSError:
-        if is_built(path):
-            # another session published first — deterministic content,
-            # use theirs
-            shutil.rmtree(staging, ignore_errors=True)
-        else:
+        shutil.rmtree(staging, ignore_errors=True)
+        if not is_built(path):
             raise
+
+
+def ensure_store(path: str, build_fn: Callable[[str], None]) -> str:
+    """Build once: reuse ``path`` when it carries ``_BUILT``, otherwise
+    stage ``build_fn(staging)`` and publish it with one rename.  A crash
+    at any step leaves nothing at ``path`` or a complete, marked store.
+    Two concurrent sessions may both pay the build (content-addressed
+    paths make the bytes identical), but the first rename wins and the
+    loser serves the winner's store."""
+    if is_built(path):
+        return path
+    staging = _staged_build(path, build_fn)
+    # a marker-less remnant (crashed legacy in-place build) must not
+    # block publication
+    if os.path.exists(path) and not is_built(path):
+        shutil.rmtree(path, ignore_errors=True)
+    _publish(staging, path)
+    return path
+
+
+def replace_store(path: str, build_fn: Callable[[str], None]) -> str:
+    """Always rebuild: stage ``build_fn(staging)`` — which may read FROM
+    ``path``, intact and marked until the swap — then move the old store
+    aside to a unique ``.old-*`` sibling, rename the staging dir into
+    place and drop the old copy.  The compaction/purge primitive of the
+    ``batch=``-grained stores and the writer of rebuilt exports.
+
+    Every ``_*`` sidecar of the old store the build did not write itself
+    (``_BUILT``, ``_BUCKETS``, ``_centroids``, ``_stats``, ``_deleted``)
+    is copied into the staging dir: a rewrite that dropped the postings
+    ``_stats`` served NaN scores (bm25_postings_delete)."""
+
+    def build(staging: str) -> None:
+        build_fn(staging)
+        if not (os.path.isdir(staging) and os.path.isdir(path)):
+            return
+        for entry in os.listdir(path):
+            src, dst = os.path.join(path, entry), os.path.join(staging, entry)
+            if entry.startswith("_") and not os.path.exists(dst):
+                (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, dst)
+
+    staging = _staged_build(path, build)
+    old = _sibling(path, "old")
+    with contextlib.suppress(FileNotFoundError):
+        os.rename(path, old)
+    _publish(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
     return path
 
 
@@ -358,19 +354,10 @@ def write_json_lines(
     """Distributed JSON-lines sink (sorted fields, one object per line) —
     the export twin of :func:`columnflow_spark.sources.load_json`; the
     reference's json side outputs for interchange with non-parquet tooling
-    (e.g. tasks/selection.py stats targets)."""
-    out = sort_fields(df)
-    partition_by = list(partition_by)
-    if partition_by:
-        # REBALANCE by the partition columns, exactly like write_events
-        # (guide §6): without it every task emits one file per
-        # hive-partition value it holds — the small-files bug the r13
-        # parquet-writer fix closed was still reachable via this path
-        out = out.hint("rebalance", *partition_by)
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
+    (e.g. tasks/selection.py stats targets).  Partitioned writes
+    REBALANCE by the partition columns exactly like :func:`write_events`
+    (guide §6)."""
+    _sorted_writer(df, list(partition_by), 0, mode).json(path)
 
 
 def tiny_rows_df(spark, rows, schema: str):
@@ -393,7 +380,6 @@ def write_side_output(obj: object, path: str) -> str:
     tasks/selection.py:260 stats output).  Atomic write (tmp + rename);
     keys are sorted so re-runs are byte-identical."""
     import json
-    import os
 
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + ".tmp"
@@ -449,16 +435,12 @@ def upsert_partitions(
     This is the incremental form of :func:`write_events` — re-running one
     dataset/shift (the reference's per-task idempotent output semantics,
     task outputs short-circuit on existence) must not clobber the rest of
-    a store that took cluster-days to build.  The conf flip is scoped and
-    restored."""
+    a store that took cluster-days to build.  Dynamic mode is an option
+    of this one write, never a session conf, so a concurrent overwrite in
+    the same session keeps its own mode."""
     partition_by = list(partition_by)
     if not partition_by:
         raise ValueError("upsert_partitions requires partition columns")
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        write_events(df, path, partition_by=partition_by, rows_per_file=rows_per_file)
-    finally:
-        spark.conf.set(key, before)
+    _sorted_writer(df, partition_by, rows_per_file, "overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)

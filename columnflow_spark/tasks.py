@@ -6,9 +6,11 @@ and luigi completeness).
 
 Scope: the orchestration *semantics* (store-parts output layout, idempotent
 re-runs, shift-aware planning) without the luigi scheduler — each task is
-one Spark job writing Parquet, and the DAG is resolved by a plain
-depth-first runner.  On a cluster the same classes run under any scheduler
-that calls :func:`run_pipeline` per terminal task.
+one Spark job writing Parquet through ``sinks.ensure_store`` (staged,
+published by one rename, complete once it carries ``_BUILT``), and the
+DAG is resolved by a plain depth-first runner.  On a cluster the same
+classes run under any scheduler that calls :func:`run_pipeline` per
+terminal task.
 
 Shift planning: a task executes under shift S only when S is *local* to
 one of its operators or to any upstream task (otherwise its inputs and
@@ -26,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from columnflow_spark.plans.shifts import NOMINAL, Shift
-from columnflow_spark.sources.sinks import write_events
+from columnflow_spark.sources.sinks import ensure_store, is_built, tables_tag, write_events
 
 
 @dataclass
@@ -45,6 +47,8 @@ class Task:
     version: str = "v1"
     #: shift names whose aliases/logic affect THIS task's operators
     local_shifts: frozenset[str] = frozenset()
+    #: source tables THIS task reads; downstream tasks inherit them
+    tables: tuple[str, ...] = ()
 
     def requires(self) -> list["Task"]:  # noqa: UP037
         return []
@@ -63,29 +67,40 @@ class Task:
     def effective_shift(self, ctx: TaskContext) -> Shift:
         return ctx.shift if self.affected_by(ctx.shift) else NOMINAL
 
+    def input_tables(self) -> set[str]:
+        return set(self.tables).union(*(dep.input_tables() for dep in self.requires()))
+
     def store_parts(self, ctx: TaskContext) -> tuple[str, ...]:
         """Content-addressed path fragments (reference store_parts,
-        base.py:926): task family / shift / version."""
-        return (self.name, f"shift_{self.effective_shift(ctx).name}", self.version)
+        base.py:926): task family / content tag of the source tables /
+        shift / version — a run over other input never reuses this one's
+        outputs."""
+        return (
+            self.name,
+            tables_tag(ctx.sf_dir, self.input_tables()),
+            f"shift_{self.effective_shift(ctx).name}",
+            self.version,
+        )
 
     def output_path(self, ctx: TaskContext) -> str:
         return os.path.join(ctx.store, *self.store_parts(ctx))
 
     def complete(self, ctx: TaskContext) -> bool:
-        return os.path.exists(os.path.join(self.output_path(ctx), "_SUCCESS"))
+        return is_built(self.output_path(ctx))
 
 
 def run_pipeline(task: Task, ctx: TaskContext) -> str:
-    """Depth-first DAG execution with completed-target short-circuit.
-    Returns the task's output path."""
-    in_paths = {dep.name: run_pipeline(dep, ctx) for dep in task.requires()}
-    out = task.output_path(ctx)
-    if task.complete(ctx):
-        return out
-    inputs = {name: ctx.spark.read.parquet(p) for name, p in in_paths.items()}
-    df = task.run(ctx, inputs)
-    write_events(df, out)
-    return out
+    """Depth-first DAG execution with completed-target short-circuit:
+    a complete task returns its output path without touching its
+    dependencies; otherwise they run first and its output is built."""
+
+    def build(staging: str) -> None:
+        inputs = {
+            dep.name: ctx.spark.read.parquet(run_pipeline(dep, ctx)) for dep in task.requires()
+        }
+        write_events(task.run(ctx, inputs), staging)
+
+    return ensure_store(task.output_path(ctx), build)
 
 
 # --- the concrete reference task family over the nested event table ---------
@@ -96,6 +111,7 @@ class BuildEvents(Task):
     event table once; never shift-dependent."""
 
     name = "events"
+    tables = ("orders", "lineitem")
 
     def run(self, ctx: TaskContext, inputs: dict[str, DataFrame]) -> DataFrame:
         from columnflow_spark.pipeline_demo import build_nested_events

@@ -154,14 +154,15 @@ def test_compaction_preserves_flagging(spark, sf_dir, tmp_path, thirds):
         )
     )
     assert after == before and len(after) > 0
-    # layout: exactly one batch= dir per band, marker intact, no tmp/old
+    # layout: exactly one batch= dir per band, marker intact, no staging
+    # or swapped-out sibling
     assert os.path.exists(os.path.join(path, "_BUILT"))
     bands = [d for d in os.listdir(path) if d.startswith("band=")]
     assert bands
     for band in bands:
         assert os.listdir(os.path.join(path, band)) == ["batch=0"]
-    assert not os.path.exists(path + ".compact-tmp")
-    assert not os.path.exists(path + ".compact-old")
+    base = os.path.basename(path)
+    assert [e for e in os.listdir(os.path.dirname(path)) if e.startswith(base + ".")] == []
 
 
 def test_compaction_then_upsert_keeps_incremental_contract(spark, sf_dir, tmp_path, thirds):

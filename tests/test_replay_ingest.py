@@ -56,17 +56,17 @@ def _calls_outside(path: pathlib.Path, needle: str, owners: set[str]) -> list[st
     ]
 
 
-def _ensure_store_calls_over_two_args(path: pathlib.Path) -> list[str]:
-    """``ensure_store(...)`` calls in ``path`` passing more than
-    ``(path, build_fn)``."""
+def _store_calls_over_two_args(path: pathlib.Path) -> list[str]:
+    """``ensure_store(...)``/``replace_store(...)`` calls in ``path``
+    passing more than ``(path, build_fn)``."""
     out = []
     for node in ast.walk(ast.parse(path.read_text())):
         if not isinstance(node, ast.Call):
             continue
         f = node.func
         name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-        if name == "ensure_store" and len(node.args) + len(node.keywords) > 2:
-            out.append(f"{path.relative_to(_REPO)}:{node.lineno}: ensure_store with extra args")
+        if name in ("ensure_store", "replace_store") and len(node.args) + len(node.keywords) > 2:
+            out.append(f"{path.relative_to(_REPO)}:{node.lineno}: {name} with extra args")
     return out
 
 
@@ -74,10 +74,13 @@ def test_replay_harness_and_scratch_dirs_have_one_owner():
     """Every ``events_replay`` stream in the query layer is opened by
     ``replay_ingest``, drained by ``_drain`` (or the memory sink), and
     every scratch directory comes from ``scratch_dirs``.  Stores have one
-    owner too: the ``_BUILT`` marker name and the location helpers
-    (``content_tag``/``scratch_root``) live only in sources/sinks.py,
-    no second completeness marker (``_SEQ_COMPLETE``) exists, and
-    ``ensure_store`` takes nothing beyond ``(path, build_fn)``."""
+    owner too: the ``_BUILT`` marker name, the location helpers
+    (``content_tag``/``scratch_root``) and every directory rename live
+    only in sources/sinks.py, no second completeness marker
+    (``_SEQ_COMPLETE``, or Hadoop's ``_SUCCESS`` outside the DataSource
+    V2 commit protocol of sources/pydatasource.py) exists, and
+    ``ensure_store``/``replace_store`` take nothing beyond
+    ``(path, build_fn)``."""
     offenders = []
     for path in sorted((_REPO / "columnflow_spark" / "queries").rglob("*.py")):
         offenders += _calls_outside(path, "mkdtemp(", set())
@@ -85,10 +88,14 @@ def test_replay_harness_and_scratch_dirs_have_one_owner():
         offenders += _calls_outside(
             path, ".processAllAvailable(", {"_drain", "_run_to_memory"}
         )
+    sources = pathlib.Path("columnflow_spark/sources")
     for path in sorted((_REPO / "columnflow_spark").rglob("*.py")):
-        if path.relative_to(_REPO) != pathlib.Path("columnflow_spark/sources/sinks.py"):
-            for needle in ('"_BUILT"', "content_tag(", "scratch_root("):
+        rel = path.relative_to(_REPO)
+        if rel != sources / "sinks.py":
+            for needle in ('"_BUILT"', "content_tag(", "scratch_root(", "os.rename("):
                 offenders += _calls_outside(path, needle, set())
+        if rel != sources / "pydatasource.py":
+            offenders += _calls_outside(path, "_SUCCESS", set())
         offenders += _calls_outside(path, "_SEQ_COMPLETE", set())
-        offenders += _ensure_store_calls_over_two_args(path)
+        offenders += _store_calls_over_two_args(path)
     assert offenders == []

@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from columnflow_spark.sources import load_table
@@ -252,14 +253,16 @@ def test_upsert_partitions_preserves_siblings(spark, sf_dir, tmp_path):
     b = sorted(r.id for r in got.filter("dataset = 'ds_b'").collect())
     assert a == [100, 101, 102]
     assert b == [5, 6, 7, 8, 9]
-    # conf restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+    # the session conf stays static: dynamic mode was an option of the
+    # one write (Spark reads the mode case-insensitively; its default
+    # reads "STATIC")
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
 
 
 def test_replace_store_keeps_the_marker_it_finds(spark, tmp_path):
     """Compaction copies ``_BUILT`` like every file sidecar (its bytes
     unchanged) and writes an empty one only when the source had none."""
-    from columnflow_spark.sources.sinks import replace_store, upsert_partitions
+    from columnflow_spark.sources.sinks import replace_store, upsert_partitions, write_events
 
     rows = spark.range(6).selectExpr("id", "CAST(id % 2 AS INT) AS batch")
     marked, bare = str(tmp_path / "marked"), str(tmp_path / "bare")
@@ -268,14 +271,14 @@ def test_replace_store_keeps_the_marker_it_finds(spark, tmp_path):
     with open(os.path.join(marked, "_BUILT"), "w") as f:
         f.write("format=7\n")
     for path in (marked, bare):
-        replace_store(
-            spark.read.parquet(path).selectExpr("id", "0 AS batch"), path, partition_by=["batch"]
-        )
+        rows = spark.read.parquet(path).selectExpr("id", "0 AS batch")
+        replace_store(path, lambda p: write_events(rows, p, partition_by=["batch"]))
         assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(6))
     with open(os.path.join(marked, "_BUILT")) as f:
         assert f.read() == "format=7\n"
     with open(os.path.join(bare, "_BUILT")) as f:
         assert f.read() == ""
+    assert sorted(os.listdir(tmp_path)) == ["bare", "marked"]
 
 
 def test_ensure_store_builds_staged_and_publishes(tmp_path):
@@ -364,15 +367,30 @@ def test_ensure_store_loser_adopts_winner(tmp_path):
     assert not any(e.startswith("store.staging-") for e in os.listdir(tmp_path))
 
 
-def test_ensure_store_cleans_staging_on_failure(tmp_path):
-    """ADVICE r12: a failed build must not leak its .staging-* tree."""
-    import os
+@pytest.mark.parametrize("verb", ["ensure_store", "replace_store"])
+def test_ensure_store_cleans_staging_on_failure(tmp_path, verb):
+    """ADVICE r12: a failed build must not leak its .staging-* tree, and
+    it publishes nothing: ``ensure_store`` leaves no store at ``path``,
+    ``replace_store`` leaves the old store intact and marked."""
+    from columnflow_spark.sources import sinks
 
-    import pytest as _pytest
-
-    from columnflow_spark.sources.sinks import ensure_store
-
+    store = getattr(sinks, verb)
     path = str(tmp_path / "store")
+    if verb == "replace_store":
+        os.makedirs(path)
+        with open(os.path.join(path, "data.txt"), "w") as f:
+            f.write("old")
+        sinks.mark_built(path)
+
+    def unchanged():
+        if verb == "ensure_store":
+            return not os.path.exists(path)
+        with open(os.path.join(path, "data.txt")) as f:
+            data = f.read()
+        return sorted(os.listdir(path)) == ["_BUILT", "data.txt"] and data == "old"
+
+    def leftovers():
+        return [e for e in os.listdir(tmp_path) if ".staging-" in e or ".old-" in e]
 
     def boom(p):
         os.makedirs(p, exist_ok=True)
@@ -380,24 +398,22 @@ def test_ensure_store_cleans_staging_on_failure(tmp_path):
             f.write("x")
         raise RuntimeError("build failed")
 
-    with _pytest.raises(RuntimeError, match="build failed"):
-        ensure_store(path, boom)
-    leftovers = [e for e in os.listdir(tmp_path) if ".staging-" in e]
-    assert leftovers == []
-    assert not os.path.exists(path)
+    with pytest.raises(RuntimeError, match="build failed"):
+        store(path, boom)
+    assert leftovers() == []
+    assert unchanged()
 
     # a build that raises BETWEEN its steps publishes nothing either
     def crash_between(p):
         os.makedirs(os.path.join(p, "step=one"))
         raise RuntimeError("crash between steps")
 
-    with _pytest.raises(RuntimeError, match="crash between steps"):
-        ensure_store(path, crash_between)
-    assert not os.path.exists(path)
-    leftovers = [e for e in os.listdir(tmp_path) if ".staging-" in e]
-    assert leftovers == []
+    with pytest.raises(RuntimeError, match="crash between steps"):
+        store(path, crash_between)
+    assert leftovers() == []
+    assert unchanged()
     # and a build that creates nothing (no exception) raises and cleans up
-    with _pytest.raises(RuntimeError, match="created no staging dir"):
-        ensure_store(path, lambda p: None)
-    leftovers = [e for e in os.listdir(tmp_path) if ".staging-" in e]
-    assert leftovers == []
+    with pytest.raises(RuntimeError, match="created no staging dir"):
+        store(path, lambda p: None)
+    assert leftovers() == []
+    assert unchanged()
