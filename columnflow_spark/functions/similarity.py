@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from columnflow_spark.sources.sinks import local_frame
+
 _PRIME = 2147483647  # 2^31 - 1, Mersenne prime for cheap permutation hashing
 
 
@@ -364,7 +366,8 @@ def kmeans_fit(
     cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
     info = {"iters": 0, "shift": float("inf"), "sse": float("inf")}
     for it in range(iters):
-        cents_df = df.sparkSession.createDataFrame(
+        cents_df = local_frame(
+            df.sparkSession,
             [(int(i), [float(x) for x in cmat[i]]) for i in range(len(cmat))],
             "cid long, ce array<double>",
         )

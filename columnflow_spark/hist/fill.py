@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from columnflow_spark.hist.axes import Variable, bin_expr
+from columnflow_spark.sources.sinks import local_frame
 
 
 def fill_hist(
@@ -123,7 +124,7 @@ def insert_axis_values(hist: DataFrame, axis: str, values: list[str]) -> DataFra
     (reference hist_util.py:618 ``insert_axis_values`` — downstream shift
     union and datacard writers need every expected category present)."""
     spark = hist.sparkSession
-    wanted = spark.createDataFrame([(v,) for v in values], f"{axis} string")
+    wanted = local_frame(spark, [(v,) for v in values], f"{axis} string")
     other = [c for c in hist.columns if c not in (axis, "n", "sum_w", "sum_w2")]
     if other:
         wanted = hist.select(*other).distinct().crossJoin(wanted)
@@ -186,6 +187,6 @@ def add_missing_shifts(
         return hist
     nominal_rows = hist.filter(F.col(shift_axis) == nominal).drop(shift_axis)
     fill = nominal_rows.crossJoin(
-        hist.sparkSession.createDataFrame([(m,) for m in missing], f"{shift_axis} string")
+        local_frame(hist.sparkSession, [(m,) for m in missing], f"{shift_axis} string")
     ).select(hist.columns)
     return hist.unionByName(fill)

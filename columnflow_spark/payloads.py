@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnflow_spark.session import session_key
+from columnflow_spark.sources.sinks import local_frame
 
 
 @dataclass(frozen=True)
@@ -135,7 +136,7 @@ class PayloadBundle:
         (defaults to identity for already-tabular payloads)."""
         payload = self.load(name)
         rows = rows_fn(payload) if rows_fn is not None else payload
-        return F.broadcast(spark.createDataFrame(rows, schema))
+        return F.broadcast(local_frame(spark, rows, schema))
 
     def as_payloads(self, spark: SparkSession) -> dict[str, Any]:
         """All payloads parsed, keyed by name — the dict handed to operator

@@ -81,6 +81,7 @@ from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import (
     anti_tombstones,
     ensure_store,
+    local_frame,
     store_path,
     upsert_partitions,
     upsert_tombstones,
@@ -1228,7 +1229,8 @@ def _trained_entry_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _corpus_rows(spark, sf_dir)
     k = max(2, min(_G_TRAINED_ENTRY_K_CAP, (n + _G_ENTRY_MOD - 1) // _G_ENTRY_MOD))
     cents, _info = kmeans_fit(emb, k=k, iters=3)
-    cents_df = spark.createDataFrame(
+    cents_df = local_frame(
+        spark,
         [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
         "cid long, ce array<double>",
     ).select("cid", _grid(F.col("ce")).alias("gc"))
@@ -1494,7 +1496,7 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
         # one row per page again (repair with an empty delete set is
         # the identity on an already-capped adjacency).  Serve
         # equality re-proven in tests/test_ann_graph.py.
-        del_ids = spark.createDataFrame([], "vec_id long")
+        del_ids = local_frame(spark, [], "vec_id long")
     del_ids = del_ids.transform(checkpoint_df)
     pages = _store_pages_latest(spark, path).transform(checkpoint_df)
     radj = _repaired_adjacency(pages, del_ids)

@@ -21,11 +21,14 @@ closes that gap with the engine's own partitioned store
   (functions/similarity.py:nearest_centroid_assign) and the trained PQ
   encoder (queries/mmdata.py:pq_encode_udf) emits codes in the same
   projection; the only added cost is the partitioned write.
-- **search** collects the probed (query, cell) pairs — bounded: a query
-  batch times ``n_probe`` — turns the cell set into a static ``IN``
-  filter on the partition column, and ADC-scores just those files with
-  the broadcast per-query LUT.  Results are bit-identical to
-  ``ann_ivfpq_topk`` (same oracle SQL registered for both).
+- **search** plans on the driver (queries/mmdata.py:ivfpq_probe_plan):
+  one bounded collect of the query batch and the centroid rows gives the
+  probe route and the quantized ADC LUT in numpy, engine-exact against
+  the in-plan ``_ivf_probes``/``_pq_query_lut``.  The route's cell set
+  becomes a static ``IN`` filter on the partition column, and just those
+  files are ADC-scored against the broadcast LUT, each vector at its
+  latest ``batch``.  Results are bit-identical to ``ann_ivfpq_topk``
+  (same oracle SQL registered for both).
 
 Mirrors the reference's columnar-store round-trip (reference
 columnflow/tasks/reduction.py merged outputs re-read by downstream
@@ -43,11 +46,10 @@ from pyspark.sql.window import Window as W
 from columnflow_spark.queries import query
 from columnflow_spark.queries.mmdata import (
     IVFPQ_ORACLE,
-    _PQ_GRID,
+    PQ_LUT_SCHEMA,
     _ivf_cents,
-    _ivf_probes,
-    _pq_query_lut,
     ivf_probe_route,
+    ivfpq_probe_plan,
     pq_encode_udf,
     pq_query_lut_cached,
 )
@@ -57,6 +59,7 @@ from columnflow_spark.sources.sinks import (
     anti_tombstones,
     clear_tombstones,
     ensure_store,
+    local_frame,
     mark_built,
     replace_store,
     store_path,
@@ -84,8 +87,11 @@ def upsert_index_frame(
     quantizer + trained PQ codebook (both derive from the static corpus —
     the IVF contract; incremental and streaming ingest reuse them) and
     upsert it as the index's ``batch=<n>`` slice."""
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    cents = _ivf_cents(emb).select("cid", "ce")
+    # the centroid rows are a bounded collect (nearest_centroid_assign):
+    # no spread, so no shuffle
+    cents = _ivf_cents(
+        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    ).select("cid", "ce")
     encode = pq_encode_udf(spark, sf_dir)
     idx = nearest_centroid_assign(rows, cents).select(
         "vec_id",
@@ -162,58 +168,40 @@ def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def search_ivfpq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    query_pred=None,
-    topk: int = 5,
-    route_key=None,
+def _probed_adc_topk(
+    spark: SparkSession, path: str, route: list, lut: DataFrame, topk: int
 ) -> DataFrame:
-    """Probe-pruned ADC top-``topk`` over the persisted index
-    (bit-identical to ``ann_ivfpq_topk`` for the default workload): only
-    the probed ``cid=`` partitions are read — the scan's PartitionFilters
-    carry the ``IN`` list, so at scale the IO is (query batch x n_probe /
-    n_cells) of the index, not the index.  ``query_pred`` selects the
-    probe batch (default: the fixed ``vec_id % 100 == 7`` workload) —
-    composite consumers (``hybrid_search_rrf_indexed``) pass their own,
-    with ``route_key`` naming the batch so the routing collect is the
-    shared per-session artifact (mmdata.ivf_probe_route)."""
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 100 == 7
-        route_key = route_key or ("mod100", 7)
-    # bounded collect: |query batch| x n_probe rows — the probe plan is
-    # the driver-side artifact here, exactly like a broadcast hint list
-    probe_rows = ivf_probe_route(
-        spark, sf_dir, query_pred=query_pred, route_key=route_key
-    )
-    probe_cids = sorted({cid for _, cid in probe_rows})
-    probes = spark.createDataFrame(probe_rows, "query_id long, cid long")
-    # deletion propagation: tombstoned vectors drop out of the probed
-    # read (broadcast anti-join AFTER the partition prune, so the IO
-    # stays probe-bounded); physically purged at compaction
+    """The ADC top-``topk`` tail shared by every probe-pruned index read:
+    only the routed ``cid=`` partitions are scanned (the ``IN`` list
+    lands in the scan's PartitionFilters), tombstoned vectors drop out
+    (broadcast anti-join after the prune, so the IO stays
+    probe-bounded), and each vector is scored at its LATEST ``batch``
+    only — the row compaction keeps, so a re-encoded vector is never
+    summed twice.  One exchange on ``query_id`` serves the latest-batch
+    window, the per-pair sum and the rank window."""
+    probes = local_frame(spark, route, "query_id long, cid long")
     idx = anti_tombstones(
-        spark.read.parquet(path).filter(F.col("cid").isin(probe_cids)),
+        spark.read.parquet(path).filter(F.col("cid").isin(sorted({c for _, c in route}))),
         path,
         id_col="vec_id",
-    ).select("vec_id", "codes", F.col("cid").cast("long").alias("cid"))
-    exploded = idx.select(
-        "vec_id", "cid", F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code")
     )
-    # the served path reuses the batch's precomputed LUT rows (bounded:
-    # |batch| x M x K quantized integers) — the in-session compute twins
-    # (ann_pq_adc_topk / ann_ivfpq_topk) keep the LUT in-plan
-    lut = (
-        pq_query_lut_cached(spark, sf_dir, query_pred, lut_key=route_key)
-        if route_key is not None
-        else _pq_query_lut(spark, sf_dir, query_pred)
+    cand = (
+        idx.select(
+            F.col("vec_id").alias("neighbor_id"),
+            "batch",
+            F.col("cid").cast("long").alias("cid"),
+            F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
+        )
+        .join(F.broadcast(probes), "cid")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .join(F.broadcast(lut), ["query_id", "sub", "code"])
+        .repartition("query_id")
     )
-    cand = exploded.join(F.broadcast(probes), "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
+    latest = F.max("batch").over(W.partitionBy("query_id", "neighbor_id"))
     adc = (
-        cand.join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        cand.withColumn("_latest", latest)
+        .filter(F.col("batch") == F.col("_latest"))
+        .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("sum_d"))
     )
     # integer-scaled distance: round(x*1e4) shares the fp multiply with
@@ -230,6 +218,36 @@ def search_ivfpq_index(
         .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
         .orderBy("query_id", "rk")
     )
+
+
+def search_ivfpq_index(
+    spark: SparkSession,
+    sf_dir: str,
+    path: str,
+    query_pred=None,
+    topk: int = 5,
+    route_key=None,
+) -> DataFrame:
+    """Probe-pruned ADC top-``topk`` over the persisted index
+    (bit-identical to ``ann_ivfpq_topk`` for the default workload): only
+    the probed ``cid=`` partitions are read, so at scale the IO is
+    (query batch x n_probe / n_cells) of the index, not the index.
+    ``query_pred`` selects the probe batch (default: the fixed
+    ``vec_id % 100 == 7`` workload).  An unnamed batch is planned on the
+    driver by one bounded collect (mmdata.ivfpq_probe_plan); composite
+    consumers (``hybrid_search_rrf_indexed``) pass ``route_key`` naming
+    their batch, so its route and LUT are the shared per-session
+    artifacts (mmdata.ivf_probe_route / pq_query_lut_cached)."""
+    if query_pred is None:
+        query_pred = F.col("vec_id") % 100 == 7
+        route_key = route_key or ("mod100", 7)
+    if route_key is None:
+        route, lut_rows = ivfpq_probe_plan(spark, sf_dir, query_pred)
+        lut = local_frame(spark, lut_rows, PQ_LUT_SCHEMA)
+    else:
+        route = ivf_probe_route(spark, sf_dir, query_pred=query_pred, route_key=route_key)
+        lut = pq_query_lut_cached(spark, sf_dir, query_pred, lut_key=route_key)
+    return _probed_adc_topk(spark, path, route, lut, topk)
 
 
 @query("ann_ivfpq_materialized_topk", oracle=IVFPQ_ORACLE)
@@ -539,17 +557,12 @@ def build_opq_index(
     )
 
     R, cms = opq_train_np(spark, sf_dir)
-    from columnflow_spark.sources.sinks import tiny_rows_df
-
-    # one-partition sidecar frames (r14): createDataFrame(list).coalesce(1)
-    # paid one sequential Python-worker round trip per empty parallelize
-    # partition inside a single task — see sinks.tiny_rows_df
-    tiny_rows_df(
+    local_frame(
         spark,
         [(i, [float(x) for x in R[i]]) for i in range(R.shape[0])],
         "i int, row array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(path, "_rotation"))
-    tiny_rows_df(
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_rotation"))
+    local_frame(
         spark,
         [
             (s, ci, [float(x) for x in cms[s][ci]])
@@ -557,10 +570,14 @@ def build_opq_index(
             for ci in range(_PQ_K)
         ],
         "sub int, code int, c array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     rows = emb.filter(batch_pred) if batch_pred is not None else emb
-    cents = _ivf_cents(emb).select("cid", "ce")
+    # the centroid rows are a bounded collect (nearest_centroid_assign):
+    # no spread, so no shuffle
+    cents = _ivf_cents(
+        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    ).select("cid", "ce")
     encode = opq_encode_udf(spark, sf_dir)
     idx = nearest_centroid_assign(rows, cents).select(
         "vec_id",
@@ -611,25 +628,12 @@ def search_opq_index(
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, _PQ_M, ivf_probe_route
+    from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, _PQ_M
 
     if query_pred is None:
         query_pred = F.col("vec_id") % 100 == 7
         route_key = route_key or ("mod100", 7)
-    probe_rows = ivf_probe_route(
-        spark, sf_dir, query_pred=query_pred, route_key=route_key
-    )
-    probe_cids = sorted({cid for _, cid in probe_rows})
-    probes = spark.createDataFrame(probe_rows, "query_id long, cid long")
-    idx = anti_tombstones(
-        spark.read.parquet(path).filter(F.col("cid").isin(probe_cids)),
-        path,
-        id_col="vec_id",
-    ).select("vec_id", "codes", F.col("cid").cast("long").alias("cid"))
-    exploded = idx.select(
-        "vec_id", "cid",
-        F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
-    )
+    route = ivf_probe_route(spark, sf_dir, query_pred=query_pred, route_key=route_key)
     R, _ = load_opq_artifacts(spark, path)
 
     @F.pandas_udf("array<long>")
@@ -658,22 +662,7 @@ def search_opq_index(
     lut = qsubs.join(F.broadcast(cbdf), "sub").select(
         "query_id", "sub", "code", F.round(subd, 0).alias("d")
     )
-    cand = exploded.join(F.broadcast(probes), "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    adc = (
-        cand.join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("sum_d"))
-    )
-    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
-    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _probed_adc_topk(spark, path, route, lut, topk)
 
 
 @query("ann_opq_materialized_topk")

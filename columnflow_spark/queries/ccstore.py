@@ -65,7 +65,7 @@ from columnflow_spark.queries.streaming import (
     replay_ingest,
 )
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import upsert_partitions
+from columnflow_spark.sources.sinks import local_frame, upsert_partitions
 
 
 def _gb(col: str = "label", gb_mod: int = _SCC_GB):
@@ -96,7 +96,7 @@ def _node_lookup(spark: SparkSession, store: str, nodes: DataFrame, b: int) -> D
     latest-wins window (a node-keyed lookup cannot label-prune; the
     window runs over the semi-joined batch-bounded rows only)."""
     if not os.path.exists(_nodes_path(store)):
-        return spark.createDataFrame([], "node long, label long")
+        return local_frame(spark, [], "node long, label long")
     return (
         _latest(
             spark.read.parquet(_nodes_path(store))

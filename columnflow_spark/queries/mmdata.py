@@ -58,7 +58,7 @@ from columnflow_spark.functions.text import (
 )
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import ensure_store, store_path, tiny_rows_df
+from columnflow_spark.sources.sinks import ensure_store, local_frame, store_path
 
 JACCARD_THRESHOLD = 0.8
 
@@ -431,7 +431,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_blocks = 8
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     emb = emb.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)))
-    block_pairs = spark.createDataFrame(
+    block_pairs = local_frame(
+        spark,
         [(i, j, i * n_blocks + j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "i int, j int, pid int",
     )
@@ -853,6 +854,103 @@ def _pred_fingerprint(pred) -> str:
     return "default" if pred is None else str(pred)
 
 
+#: the schema of an ADC lookup-table frame
+PQ_LUT_SCHEMA = "query_id long, sub int, code int, d double"
+
+
+def _probe_batch(spark: SparkSession, sf_dir: str, query_pred):
+    """The one bounded collect a served read plans from: the query batch
+    (``query_pred`` on vec_id; default the fixed ``vec_id % 100 == 7``
+    workload) plus the every-64th centroid rows, as ``(query ids, query
+    matrix, cell ids, centroid matrix)`` sorted by id, float32 as stored.
+    No ``spread``: a filter plus a collect needs no shuffle."""
+    import numpy as np  # noqa: PLC0415
+
+    if query_pred is None:
+        query_pred = F.col("vec_id") % 100 == 7
+    is_q = F.coalesce(query_pred, F.lit(False))
+    is_c = F.col("vec_id") % 64 == 0
+    rows = sorted(
+        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+        .filter(is_q | is_c)
+        .select("vec_id", "embedding", is_q.alias("q"), is_c.alias("c"))
+        .collect(),
+        key=lambda r: r.vec_id,
+    )
+
+    dim = len(rows[0].embedding) if rows else 0
+
+    def side(flag: str):
+        sel = [r for r in rows if r[flag]]
+        ids = np.array([r.vec_id for r in sel], dtype=np.int64)
+        return ids, np.array([r.embedding for r in sel], dtype=np.float32).reshape(len(sel), dim)
+
+    return (*side("q"), *side("c"))
+
+
+def _route_np(qid, q, cid, c, n_probe: int) -> list[tuple[int, int]]:
+    """``(query_id, cid)`` rows of each query's top-``n_probe`` cells,
+    equal to :func:`_ivf_probes` row for row: products in float32 widened
+    to double and folded dimension by dimension from 0.0 (the
+    ``F.aggregate(F.zip_with(...))`` order), ``csim = dot / (qn * nb)``,
+    ordered by ``(csim desc, cid asc)``."""
+    import numpy as np  # noqa: PLC0415
+
+    def fold(a, b):
+        acc = np.zeros((a.shape[0], b.shape[0]))
+        for j in range(a.shape[1]):
+            acc += (a[:, None, j] * b[None, :, j]).astype(np.float64)
+        return acc
+
+    def norm(a):
+        acc = np.zeros(a.shape[0])
+        for j in range(a.shape[1]):
+            acc += (a[:, j] * a[:, j]).astype(np.float64)
+        return np.sqrt(acc)
+
+    csim = fold(q, c) / (norm(q)[:, None] * norm(c)[None, :])
+    return [
+        (int(qid[i]), int(cid[k]))
+        for i, row in enumerate(csim)
+        for k in np.lexsort((cid, -row))[:n_probe]
+    ]
+
+
+def _lut_np(spark: SparkSession, sf_dir: str, qid, q) -> list[tuple[int, int, int, float]]:
+    """``(query_id, sub, code, d)`` ADC lookup rows, equal to
+    :func:`_pq_query_lut` row for row: the encoder's grid
+    ``sign(y)*floor(|y|+0.5)``, sequential :func:`_seq_sqdist` distances
+    to the trained codebook, and each entry rounded half-up exactly as
+    ``r = floor(x); r + (x - r >= 0.5)`` (``floor(x + 0.5)`` carries at
+    fp knife edges)."""
+    import numpy as np  # noqa: PLC0415
+
+    codes, cmats = _pq_train_np(spark, sf_dir)
+    y = q.astype(np.float64) * _PQ_GRID
+    t = np.sign(y) * np.floor(np.abs(y) + 0.5)
+    subd = []
+    for s in range(_PQ_M):
+        d = _seq_sqdist(t[:, s * _PQ_DIM:(s + 1) * _PQ_DIM], cmats[s])
+        r = np.floor(d)
+        subd.append(r + (d - r >= 0.5))
+    return [
+        (int(qid[i]), s, int(code), float(subd[s][i, k]))
+        for i in range(len(qid))
+        for s in range(_PQ_M)
+        for k, code in enumerate(codes[s])
+    ]
+
+
+def ivfpq_probe_plan(spark: SparkSession, sf_dir: str, query_pred, n_probe: int = 2):
+    """``(route, lut)`` of a served IVF-PQ read, planned on the driver
+    from ONE bounded collect (:func:`_probe_batch`): the probe route
+    (:func:`_route_np`) and the quantized ADC lookup table
+    (:func:`_lut_np`), both equal to the in-plan :func:`_ivf_probes` and
+    :func:`_pq_query_lut` that the in-session compute queries keep."""
+    qid, q, cid, c = _probe_batch(spark, sf_dir, query_pred)
+    return _route_np(qid, q, cid, c, n_probe), _lut_np(spark, sf_dir, qid, q)
+
+
 def ivf_probe_route(
     spark: SparkSession,
     sf_dir: str,
@@ -861,8 +959,8 @@ def ivf_probe_route(
     query_pred=None,
     route_key=None,
 ) -> list[tuple[int, int]]:
-    """Collected ``(query_id, cid)`` probe route for a query batch — the
-    bounded driver artifact every index-served search starts from;
+    """``(query_id, cid)`` probe route for a query batch, the route half
+    of :func:`ivfpq_probe_plan` (one bounded collect, numpy ranking);
     cached when the caller names its batch via ``route_key``.  The key
     folds in the predicate's canonical expression string, so a caller
     reusing an existing route_key with a DIFFERENT predicate misses the
@@ -872,19 +970,12 @@ def ivf_probe_route(
     Named routes are the ``ivf_probe_route`` session artifact: a FIXED
     query batch routes identically on every invocation, so the
     index-served paths that share a batch (hybrid RRF dense arm, routed
-    MaxSim, the default ANN workload) pay the routing job once per
-    session instead of once per call (VERDICT r7 next #4).  At scale
-    routing is |batch| x K centroid ranking; at bench scale it is mostly
-    job latency.  A NEW batch (different route_key) always routes fresh."""
+    MaxSim, the default ANN workload) pay the routing collect once per
+    session instead of once per call (VERDICT r7 next #4).  A NEW batch
+    (different route_key) always routes fresh."""
 
     def build() -> list[tuple[int, int]]:
-        emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-        return [
-            (int(r.query_id), int(r.cid))
-            for r in _ivf_probes(emb, _ivf_cents(emb), n_probe=n_probe, query_pred=query_pred)
-            .select("query_id", "cid")
-            .collect()
-        ]
+        return _route_np(*_probe_batch(spark, sf_dir, query_pred), n_probe)
 
     if route_key is None:
         return build()
@@ -897,21 +988,22 @@ def ivf_probe_route(
 def pq_query_lut_cached(
     spark: SparkSession, sf_dir: str, query_pred, *, lut_key
 ) -> DataFrame:
-    """Collected ADC lookup table of a query batch, the ``pq_query_lut``
-    session artifact per (lut_key, predicate): a fixed query batch's LUT
-    is |batch| x M x K quantized integers — the driver artifact ADC
-    serving systems precompute once per batch.  Only the index-SERVED
-    paths cache (the in-session compute queries keep the LUT in-plan so
+    """ADC lookup table of a named query batch, the LUT half of
+    :func:`ivfpq_probe_plan` kept as the ``pq_query_lut`` session
+    artifact per (lut_key, predicate): a fixed query batch's LUT is
+    |batch| x M x K quantized integers — the driver artifact ADC serving
+    systems precompute once per batch.  Only the index-SERVED paths plan
+    on the driver (the in-session compute queries keep the LUT in-plan so
     their bench lines keep the build cost)."""
+
+    def build() -> list[tuple[int, int, int, float]]:
+        qid, q, _, _ = _probe_batch(spark, sf_dir, query_pred)
+        return _lut_np(spark, sf_dir, qid, q)
+
     rows = artifacts.get(
-        "pq_query_lut", spark, sf_dir,
-        lambda: [
-            (int(r.query_id), int(r.sub), int(r.code), float(r.d))
-            for r in _pq_query_lut(spark, sf_dir, query_pred).collect()
-        ],
-        (lut_key, _pred_fingerprint(query_pred)),
+        "pq_query_lut", spark, sf_dir, build, (lut_key, _pred_fingerprint(query_pred))
     )
-    return spark.createDataFrame(rows, "query_id long, sub int, code int, d double")
+    return local_frame(spark, rows, PQ_LUT_SCHEMA)
 
 
 def _ivf_probes(
@@ -1152,7 +1244,7 @@ def components_from_edges(all_docs: DataFrame, edges: DataFrame) -> DataFrame:
         comp_rows = [(d, find(d)) for d in parent]
         if not comp_rows:
             return all_docs.select("doc_id", F.col("doc_id").alias("component"))
-        comp_map = spark.createDataFrame(comp_rows, "doc_id long, comp long")
+        comp_map = local_frame(spark, comp_rows, "doc_id long, comp long")
         return all_docs.join(F.broadcast(comp_map), "doc_id", "left").select(
             "doc_id", F.coalesce(F.col("comp"), F.col("doc_id")).alias("component")
         )
@@ -1244,9 +1336,7 @@ _SAMPLE_DEFAULT_RATE = 0.1
 )
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    rates = spark.createDataFrame(
-        list(_SAMPLE_RATES.items()), "source string, rate double"
-    )
+    rates = local_frame(spark, list(_SAMPLE_RATES.items()), "source string, rate double")
     u = (
         F.conv(F.substring(F.sha2(F.concat(F.lit("sample|"), F.col("doc_id").cast("string")), 256), 1, 15), 16, 10)
         .cast("double") / F.lit(16.0 ** 15)
@@ -1944,7 +2034,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnflow_spark.functions.skew import salted_topk
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    quota = spark.createDataFrame(list(_MIXTURE_QUOTA.items()), "source string, q int")
+    quota = local_frame(spark, list(_MIXTURE_QUOTA.items()), "source string, q int")
     h = F.conv(
         F.substring(F.sha2(F.concat(F.lit("mix|"), F.col("doc_id").cast("string")), 256), 1, 15),
         16,
@@ -3227,11 +3317,11 @@ def _pq_train_ctes(iters: int = _PQ_ITERS) -> str:
     return "".join(parts)
 
 
-def _pq_quantized_subs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(vec_id, sub, t)``: each vector exploded into its m sub-vectors,
-    components quantized to the integer grid ``round(x * 1000)`` (exact
-    longs — the representation the whole PQ chain trains and encodes on)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
+def _pq_quantized_subs(emb: DataFrame) -> DataFrame:
+    """``(vec_id, sub, t)``: each ``(vec_id, embedding)`` row exploded
+    into its m sub-vectors, components quantized to the integer grid
+    ``round(x * 1000)`` (exact longs — the representation the whole PQ
+    chain trains and encodes on)."""
     tq = F.transform("embedding", lambda x: F.round(x.cast("double") * _PQ_GRID, 0).cast("long"))
     return emb.select(
         "vec_id",
@@ -3256,7 +3346,8 @@ def pq_trained_codebook(spark: SparkSession, sf_dir: str, iters: int = _PQ_ITERS
     matching list_aggregate / F.aggregate); argmin ties fall to the first
     (lowest) code; empty codes keep their previous centroid."""
     codes, cmats = _pq_train_np(spark, sf_dir, iters)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (s, int(codes[s][ci]), [float(x) for x in cmats[s][ci]])
             for s in range(_PQ_M)
@@ -3294,11 +3385,9 @@ def _pq_train_np(spark: SparkSession, sf_dir: str, iters: int = _PQ_ITERS):
     per session and every PQ query (encode, ADC search) reuses it."""
     import numpy as np  # noqa: PLC0415
 
-    sample = (
-        _pq_quantized_subs(spark, sf_dir)
-        .filter(F.col("vec_id") < _PQ_SAMPLE)
-        .collect()
-    )
+    # a filter plus a collect: no spread, so no shuffle (sorted below)
+    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    sample = _pq_quantized_subs(emb.filter(F.col("vec_id") < _PQ_SAMPLE)).collect()
     by_sub: dict[int, list] = {}
     for r in sorted(sample, key=lambda r: (r.sub, r.vec_id)):
         by_sub.setdefault(r.sub, []).append((r.vec_id, r.t))
@@ -3395,8 +3484,9 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str, query_pred) -> DataFrame:
     the broadcast trained codebook, grid-space squared L2 per entry.  A
     DataFrame op with the same shape the corpus encode uses, so a
     10k-query batch builds its LUTs distributed, with no driver loop."""
+    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     qsubs = (
-        _pq_quantized_subs(spark, sf_dir)
+        _pq_quantized_subs(emb)
         .filter(query_pred)
         .select(F.col("vec_id").alias("query_id"), "sub", F.col("t").alias("qs"))
     )
@@ -4060,7 +4150,8 @@ def _dsir_logw(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tgt = sum(r.c_tgt for r in buckets)
     import math
 
-    lam = spark.createDataFrame(
+    lam = local_frame(
+        spark,
         [
             (
                 r.b,
@@ -4838,7 +4929,8 @@ def _bpe_round_ctes() -> str:
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r + 1, f"{a}+{b}", n) for r, (a, b, n) in enumerate(merges)],
         "rank int, pair string, n long",
     ).orderBy("rank")
@@ -5646,7 +5738,7 @@ def _ivf_trained_rows(spark: SparkSession, sf_dir: str) -> list:
 
 
 def _ivf_trained_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(_ivf_trained_rows(spark, sf_dir), "cid long, ce array<double>")
+    df = local_frame(spark, _ivf_trained_rows(spark, sf_dir), "cid long, ce array<double>")
     return df.select("cid", "ce", _ivf_norm(F.col("ce")).alias("nb"))
 
 
@@ -5879,7 +5971,7 @@ def ml_logreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounding happens in the SQL engine (Python round() is banker's,
     # Spark/DuckDB round are half-away — the cookbook's knife edge)
     return (
-        spark.createDataFrame([(j, float(w[j])) for j in range(64)], "j int, w double")
+        local_frame(spark, [(j, float(w[j])) for j in range(64)], "j int, w double")
         .select("j", F.round("w", 4).alias("w"))
         .orderBy("j")
     )
@@ -6321,12 +6413,8 @@ def build_unigram_vocab_store(spark: SparkSession, sf_dir: str) -> str:
 
     def build(p: str) -> None:
         rows = unigram_train_rows(spark, _ulm_word_counts(spark, sf_dir))
-        # one-partition frame: createDataFrame(list).coalesce(1) evaluated
-        # 32 Python partitions sequentially in ONE task — 4-5 s of worker
-        # round trips per build for a ~40-row vocab (r14; see
-        # sinks.tiny_rows_df)
-        df = tiny_rows_df(spark, rows, "piece string, cnt long, score_q long")
-        df.write.parquet(os.path.join(p, "vocab"))
+        df = local_frame(spark, rows, "piece string, cnt long, score_q long")
+        df.coalesce(1).write.parquet(os.path.join(p, "vocab"))
 
     return ensure_store(unigram_vocab_store_path(sf_dir), build)
 
@@ -6505,7 +6593,8 @@ def unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final vocab with counts and integer-grid scores, fully replayed
     by the oracle's recursive-CTE training chain."""
     rows = _ulm_vocab(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, len(p), c, s) for p, c, s in rows],
         "piece string, piece_len int, cnt long, score_q long",
     ).orderBy("piece")
@@ -6969,8 +7058,8 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in rows
     ]
-    return spark.createDataFrame(
-        out, "source string, n_tokens long, loss_q long, weight_q long"
+    return local_frame(
+        spark, out, "source string, n_tokens long, loss_q long, weight_q long"
     ).orderBy("source")
 
 
@@ -7490,9 +7579,7 @@ def domain_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     after dropping listed domains.  The list ships as a broadcast
     anti-join — the shape a real ~1M-domain blocklist (or its bloom
     form) uses; a literal IN-filter would not survive list scale."""
-    spark_bl = spark.createDataFrame(
-        [(d,) for d in _URL_BLOCKLIST], "domain string"
-    )
+    spark_bl = local_frame(spark, [(d,) for d in _URL_BLOCKLIST], "domain string")
     nrm = _url_frame(spark, sf_dir)
     d = nrm.select(
         "n_chars", F.substring_index("url_norm", "/", 1).alias("domain")
@@ -7538,7 +7625,7 @@ def opq_train_np(spark: SparkSession, sf_dir: str):
     import numpy as np  # noqa: PLC0415
 
     rows = (
-        spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
+        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
         .filter(F.col("vec_id") < _PQ_SAMPLE)
         .collect()
     )
@@ -7614,7 +7701,8 @@ def opq_encode_udf(spark: SparkSession, sf_dir: str):
 
 def _opq_codebook_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     R, cms = opq_train_np(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (s, ci, [float(x) for x in cms[s][ci]])
             for s in range(_PQ_M)
@@ -7873,7 +7961,8 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, integer-grid likelihood score) — the full training chain
     replayed by the oracle round for round."""
     merges = wordpiece_train(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r + 1, f"{a}+{b}", n, sq) for r, (a, b, n, sq) in enumerate(merges)],
         "rank int, pair string, n long, score_q long",
     ).orderBy("rank")

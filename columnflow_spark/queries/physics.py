@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from columnflow_spark.pipeline_demo import build_nested_events
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table
+from columnflow_spark.sources.sinks import local_frame
 
 
 # --- met_filters analog: AND of configured event-flag columns
@@ -91,7 +92,7 @@ def golden_json_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1 + F.col("event_id") % 28).alias("lumi"),
     )
     golden = F.broadcast(
-        ev.sparkSession.createDataFrame(_golden_ranges(), "run long, lo long, hi long")
+        local_frame(ev.sparkSession, _golden_ranges(), "run long, lo long, hi long")
     )
     cond = (ev.run == golden.run) & ev.lumi.between(golden.lo, golden.hi)
     return ev.join(golden, cond, "left_semi")
@@ -121,7 +122,8 @@ _PROCESS_VALUES = ", ".join(f"('{k}', {v})" for k, v in _PROCESS_MAP)
 def process_ids_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders", columns=["o_orderpriority", "o_totalprice"])
     pmap = F.broadcast(
-        orders.sparkSession.createDataFrame(
+        local_frame(
+            orders.sparkSession,
             _PROCESS_MAP, "o_orderpriority string, process_id long"
         )
     )
@@ -1111,7 +1113,7 @@ def ml_ridge_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = suff.filter(F.col("split") == "train").drop("split")
     val = suff.filter(F.col("split") == "val").drop("split")
     val = val.select(*[F.col(c).alias(f"v_{c}") for c in val.columns])
-    grid = spark.createDataFrame([(x,) for x in _RIDGE_LAMBDAS], "lam double")
+    grid = local_frame(spark, [(x,) for x in _RIDGE_LAMBDAS], "lam double")
     m = train.crossJoin(F.broadcast(val)).crossJoin(F.broadcast(grid))
     t = {k: F.col(k) for k in ("n", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y")}
     lam = F.col("lam")

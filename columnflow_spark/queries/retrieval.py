@@ -40,7 +40,7 @@ from columnflow_spark.functions.similarity import cosine
 from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import ensure_store, mark_built, store_path
+from columnflow_spark.sources.sinks import ensure_store, local_frame, mark_built, store_path
 
 # fixed search workload: deterministic multi-term keyword queries over the
 # synthetic corpus vocabulary (TESTDATA.md documents.text)
@@ -190,7 +190,8 @@ def _bm25_totals_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
     )
 
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
         "query_id INT, w STRING",
     )
@@ -869,7 +870,7 @@ def colbert_maxsim_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         route_key=("isin", _HYBRID_IDX_QUERY_IDS),
     )
     probe_cids = sorted({cid for _, cid in probe_rows})
-    routes = spark.createDataFrame(probe_rows, "query_id long, cid long")
+    routes = local_frame(spark, probe_rows, "query_id long, cid long")
     cand_ids = (
         spark.read.parquet(path)
         .filter(F.col("cid").isin(probe_cids))
@@ -929,7 +930,8 @@ def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
     toks = docs.select(
         "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
     )
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         sorted({(w,) for _, text in _BM25_QUERIES for w in text.split(" ")}),
         "w STRING",
     )
@@ -1002,7 +1004,8 @@ def bm25_totals_from_store(spark: SparkSession, path: str) -> DataFrame:
         )
     )
     posting = posting_rows.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("w")))
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
         "query_id INT, w STRING",
     )
@@ -1244,7 +1247,8 @@ def bm25_rm3_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "w")
         .agg(F.sum("c").cast("long").alias("wt"))
     )
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
         "query_id INT, w STRING",
     )
@@ -1476,12 +1480,13 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
     )
     words = toks.select("doc_id", F.explode("ts").alias("w"))
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
         "query_id INT, w STRING",
     )
     nterms = {qid: len(set(text.split(" "))) for qid, text in _BM25_QUERIES}
-    nt = spark.createDataFrame(list(nterms.items()), "query_id INT, nt INT")
+    nt = local_frame(spark, list(nterms.items()), "query_id INT, nt INT")
     hits = (
         words.join(F.broadcast(qterms), "w")
         .groupBy("query_id", "doc_id")
@@ -1503,7 +1508,7 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_rel").cast("long").alias("n_rel_ranked"),
     )
     ideal = relevant.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("n_rel"))
-    ranks = spark.createDataFrame([(r,) for r in range(1, _EVAL_K + 1)], "r INT")
+    ranks = local_frame(spark, [(r,) for r in range(1, _EVAL_K + 1)], "r INT")
     idcg = (
         ideal.join(F.broadcast(ranks), F.col("r") <= F.least(F.col("n_rel"), F.lit(_EVAL_K)))
         .groupBy("query_id")
@@ -1715,11 +1720,13 @@ def _ltr_feat_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("w")
     )
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
         "query_id INT, w STRING",
     )
-    nt = spark.createDataFrame(
+    nt = local_frame(
+        spark,
         [(qid, len(set(text.split(" ")))) for qid, text in _BM25_QUERIES],
         "query_id INT, nt INT",
     )
@@ -1847,7 +1854,7 @@ def ltr_model_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-double one."""
     wq = ltr_train(spark, sf_dir)
     return (
-        spark.createDataFrame([(j, int(wq[j])) for j in range(_LTR_NF)], "j int, wq long")
+        local_frame(spark, [(j, int(wq[j])) for j in range(_LTR_NF)], "j int, wq long")
         .orderBy("j")
     )
 

@@ -50,7 +50,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from columnflow_spark.core.state import checkpoint_df
 from columnflow_spark.queries import query
 from columnflow_spark.sources import normalize_events_ts, table_path
-from columnflow_spark.sources.sinks import is_built, upsert_partitions
+from columnflow_spark.sources.sinks import is_built, local_frame, upsert_partitions
 
 # raw schema of events.parquet; ts as NTZ (the parquet stores timestamp[us]
 # without a timezone) — normalize_events_ts casts it to session-TZ TIMESTAMP,
@@ -350,7 +350,7 @@ def streaming_hist_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial_rows.extend(h.collect())
 
     _drain(ev, upsert)
-    partials = spark.createDataFrame(partial_rows, schema_holder["schema"])
+    partials = local_frame(spark, partial_rows, schema_holder["schema"])
     return merge_hists([partials])
 
 
@@ -1263,7 +1263,7 @@ def streaming_cms_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         _drain(rp.stream.select("text"), sink)
         if latest["path"] is None:  # zero micro-batches: an empty sketch
-            cells = spark.createDataFrame([], "j INT, idx BIGINT, c BIGINT")
+            cells = local_frame(spark, [], "j INT, idx BIGINT, c BIGINT")
         else:
             cells = spark.read.parquet(latest["path"]).select(
                 "j", "idx", F.col("c").cast("long").alias("c")
@@ -2241,7 +2241,7 @@ def streaming_connected_components(spark: SparkSession, sf_dir: str) -> DataFram
                     .select("node", "label")
                 )
             else:
-                cur = spark.createDataFrame([], "node long, label long")
+                cur = local_frame(spark, [], "node long, label long")
             cur = cur.transform(checkpoint_df)
             # LABEL-level edges: resolve both endpoints to their current
             # labels distributed, keep only cross-component pairs — bounded

@@ -22,6 +22,7 @@ from columnflow_spark.core.state import checkpoint_df
 
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table
+from columnflow_spark.sources.sinks import local_frame
 
 SESSION_GAP_MIN = 30
 
@@ -1477,14 +1478,10 @@ def _build_qsk_store(spark: SparkSession, sf_dir: str, p: str) -> None:
             ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
         ).withColumn("batch", F.lit(b))
         upsert_partitions(rows, p, partition_by=["batch"])
-    from columnflow_spark.sources.sinks import tiny_rows_df
-
-    # one-partition sidecar (r14): coalesce(1) on a createDataFrame list
-    # serialized 32 Python partitions into one task — see sinks.tiny_rows_df
-    slices = tiny_rows_df(
+    slices = local_frame(
         spark, [(b, lo, hi) for b, (lo, hi) in enumerate(bounds)], "batch int, lo long, hi long"
     )
-    slices.write.mode("overwrite").parquet(os.path.join(p, "_slices"))
+    slices.coalesce(1).write.mode("overwrite").parquet(os.path.join(p, "_slices"))
 
 
 def _ensure_qsk_store(spark: SparkSession, sf_dir: str, variant: str = "") -> str:
@@ -1595,7 +1592,8 @@ def qsk_apply_deletes(spark: SparkSession, sf_dir: str, path: str) -> list[int]:
     for _b, lo, hi in affected:
         pred = (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         in_affected = pred if in_affected is None else (pred | in_affected)
-    bounds = spark.createDataFrame(
+    bounds = local_frame(
+        spark,
         [(int(b), int(lo), int(hi)) for b, lo, hi in affected],
         "batch int, lo long, hi long",
     )

@@ -74,6 +74,12 @@ def get_spark(app_name: str = "columnflow_spark", shuffle_partitions: int | None
         # (the engine's own kernels are already pandas/Arrow-native; this
         # covers user extensions at the session level)
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
+        # one Python worker pool per session: a simplified traceback adds
+        # SPARK_SIMPLIFIED_TRACEBACK=1 to the SQL UDF workers' env, and
+        # the env keys the pyspark.daemon, so plain Python RDDs (a
+        # caller's list createDataFrame) started a SECOND daemon with its
+        # own workers; its first use in a session cost ~1.4 s at local[4]
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
         # reliable-checkpoint retention (core/state.py switch): without
         # this the ContextCleaner never deletes checkpointed RDD data, so
         # a long job under SPARK_GRAFT_RELIABLE_CHECKPOINT=1 accumulates

@@ -9,6 +9,7 @@ import pytest
 
 from columnflow_spark.queries.annindex import (
     build_ivfpq_index,
+    compact_ivfpq_index,
     search_ivfpq_index,
 )
 from columnflow_spark.queries.mmdata import ann_ivfpq_topk
@@ -73,6 +74,31 @@ def test_incremental_batches_equal_full_build(spark, sf_dir, tmp_path):
     )
     assert spark.read.parquet(path).count() == n_rows
     assert _rows(search_ivfpq_index(spark, sf_dir, path)) == live
+
+
+def test_probe_read_serves_latest_batch(spark, sf_dir, tmp_path):
+    # re-encoding vectors into a newer batch (identical codes) must not
+    # change what a probe read serves: each vector scores at its latest
+    # batch only, the row compaction keeps — never the sum of both
+    path = str(tmp_path / "index")
+    build_ivfpq_index(spark, sf_dir, path)
+    live = _rows(ann_ivfpq_topk.__wrapped__(spark, sf_dir))
+    build_ivfpq_index(
+        spark, sf_dir, path, batch=1, batch_pred=F.col("vec_id") % 3 == 0
+    )
+    assert _rows(search_ivfpq_index(spark, sf_dir, path)) == live
+    compact_ivfpq_index(spark, path)
+    assert _rows(search_ivfpq_index(spark, sf_dir, path)) == live
+
+
+def test_served_read_plan_has_no_python_stage(spark, sf_dir, fresh_index):
+    # a fresh batch is planned on the driver and its route and LUT enter
+    # the plan as JVM-local relations (sinks.local_frame): no scan of a
+    # parallelized Python list, no Python UDF anywhere in the read
+    df = search_ivfpq_index(spark, sf_dir, fresh_index, query_pred=F.col("vec_id") % 50 == 3)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("LocalTableScan") == 2, plan
+    assert "ExistingRDD" not in plan and "EvalPython" not in plan, plan
 
 
 def test_index_store_layout(spark, sf_dir, fresh_index):

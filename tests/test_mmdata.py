@@ -440,6 +440,30 @@ def test_probe_route_and_lut_cache_key_on_predicate(spark, sf_dir):
     assert qb and all(q % 100 == 13 for q in qb)
 
 
+def test_driver_probe_plan_equals_in_plan(spark, sf_dir):
+    """The driver-planned route and ADC LUT of a served read
+    (``ivfpq_probe_plan``: one collect, numpy folds) equal the in-plan
+    ``_ivf_probes``/``_pq_query_lut`` exactly, with every vector as a
+    query."""
+    from pyspark.sql import functions as F
+
+    from columnflow_spark.queries.mmdata import (
+        _ivf_cents,
+        _ivf_probes,
+        _pq_query_lut,
+        ivfpq_probe_plan,
+    )
+    from columnflow_spark.sources import load_table
+
+    every = F.lit(True)
+    route, lut = ivfpq_probe_plan(spark, sf_dir, every)
+    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    in_route = _ivf_probes(emb, _ivf_cents(emb), query_pred=every).select("query_id", "cid")
+    in_lut = _pq_query_lut(spark, sf_dir, every)
+    assert route and sorted(route) == sorted(map(tuple, in_route.collect()))
+    assert lut and sorted(lut) == sorted(map(tuple, in_lut.collect()))
+
+
 def test_session_cache_key_is_application_scoped(spark):
     """Driver-side caches key on the application id (unique per context,
     embeds start time) — never id(spark), which CPython can recycle

@@ -80,7 +80,10 @@ def test_replay_harness_and_scratch_dirs_have_one_owner():
     (``_SEQ_COMPLETE``, or Hadoop's ``_SUCCESS`` outside the DataSource
     V2 commit protocol of sources/pydatasource.py) exists, and
     ``ensure_store``/``replace_store`` take nothing beyond
-    ``(path, build_fn)``."""
+    ``(path, build_fn)``.  Driver rows become frames only through
+    ``sinks.local_frame`` (Arrow, JVM-side): no ``createDataFrame(`` or
+    ``parallelize(`` outside sources/sinks.py, where a list would pay
+    Python-worker tasks."""
     offenders = []
     for path in sorted((_REPO / "columnflow_spark" / "queries").rglob("*.py")):
         offenders += _calls_outside(path, "mkdtemp(", set())
@@ -92,7 +95,14 @@ def test_replay_harness_and_scratch_dirs_have_one_owner():
     for path in sorted((_REPO / "columnflow_spark").rglob("*.py")):
         rel = path.relative_to(_REPO)
         if rel != sources / "sinks.py":
-            for needle in ('"_BUILT"', "content_tag(", "scratch_root(", "os.rename("):
+            for needle in (
+                '"_BUILT"',
+                "content_tag(",
+                "scratch_root(",
+                "os.rename(",
+                "createDataFrame(",
+                "parallelize(",
+            ):
                 offenders += _calls_outside(path, needle, set())
         if rel != sources / "pydatasource.py":
             offenders += _calls_outside(path, "_SUCCESS", set())
