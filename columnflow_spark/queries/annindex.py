@@ -21,14 +21,19 @@ closes that gap with the engine's own partitioned store
   (functions/similarity.py:nearest_centroid_assign) and the trained PQ
   encoder (queries/mmdata.py:pq_encode_udf) emits codes in the same
   projection; the only added cost is the partitioned write.
-- **search** plans on the driver (queries/mmdata.py:ivfpq_probe_plan):
-  one bounded collect of the query batch and the centroid rows gives the
-  probe route and the quantized ADC LUT in numpy, engine-exact against
-  the in-plan ``_ivf_probes``/``_pq_query_lut``.  The route's cell set
-  becomes a static ``IN`` filter on the partition column, and just those
-  files are ADC-scored against the broadcast LUT, each vector at its
-  latest ``batch``.  Results are bit-identical to ``ann_ivfpq_topk``
-  (same oracle SQL registered for both).
+- **search** is scatter-gather.  The driver plans the read
+  (queries/mmdata.py:ivfpq_probe_plan): one bounded collect of the query
+  batch and the centroid rows gives the probe route and the quantized
+  ADC LUT in numpy, engine-exact against the in-plan
+  ``_ivf_probes``/``_pq_query_lut``.  The route's cell set becomes a
+  static ``IN`` filter on the partition column, and ONE Spark job
+  collects just those cells' live rows through Arrow (the scatter).
+  The driver then scores each vector at its latest ``batch`` against
+  the LUT and keeps each query's top-k (the gather).  The collected rows
+  are the probed cells' rows: a cell holds ~64 vectors, so a read brings
+  back at most n_probe x |batch| x ~64 rows, the same order as the
+  centroid rows the plan already collects.  Results are bit-identical
+  to ``ann_ivfpq_topk`` (same oracle SQL registered for both).
 
 Mirrors the reference's columnar-store round-trip (reference
 columnflow/tasks/reduction.py merged outputs re-read by downstream
@@ -45,9 +50,12 @@ from pyspark.sql.window import Window as W
 
 from columnflow_spark.queries import query
 from columnflow_spark.queries.mmdata import (
+    _PQ_K,
+    _PQ_M,
     IVFPQ_ORACLE,
-    PQ_LUT_SCHEMA,
     _ivf_cents,
+    _probe_batch,
+    grid_lut_rows,
     ivf_probe_route,
     ivfpq_probe_plan,
     pq_encode_udf,
@@ -168,56 +176,103 @@ def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+#: the index store's rows: ``cid``/``batch`` are its hive partition
+#: columns.  Reading with it plans no schema-inference job.
+_INDEX_SCHEMA = "codes string, vec_id long, cid int, batch int"
+#: a served read's result
+TOPK_SCHEMA = "query_id long, neighbor_id long, adc_dist long, rk int"
+
+
+def _candidate_scan(spark: SparkSession, path: str, cids: list[int]) -> DataFrame:
+    """The scatter half of a served read: the live rows of the routed
+    cells.  The ``cid IN`` list lands in the scan's PartitionFilters, so
+    only those cells' files are listed and read; tombstoned vectors drop
+    out through a broadcast anti-join after the prune."""
+    scan = spark.read.schema(_INDEX_SCHEMA).parquet(path).filter(F.col("cid").isin(cids))
+    return anti_tombstones(scan, path, id_col="vec_id").select(
+        "vec_id", "cid", "batch", F.split("codes", "-").cast("array<int>").alias("codes")
+    )
+
+
+def _adc_topk_np(vid, cid, batch, codes, route, lut_rows, topk: int) -> list[tuple]:
+    """The gather half of a served read, in numpy on the driver: per
+    route row ``(query_id, cid)`` the candidate rows ``(vid, cid, batch,
+    codes)`` of that cell, minus the query itself; each vector scored
+    at its LATEST ``batch`` among them (the row compaction keeps, so a
+    re-encoded vector is never summed twice) as the sum of its codes'
+    entries in ``lut_rows`` ``(query_id, sub, code, d)``; ``adc_dist`` =
+    ``sum_d / 100`` rounded half-up; ranked by ``(adc_dist, vid)``.
+    Returns ``TOPK_SCHEMA`` rows sorted by ``(query_id, rk)``."""
+    import numpy as np  # noqa: PLC0415
+
+    route = np.asarray(route, dtype=np.int64).reshape(-1, 2)
+    # pair each route row with the candidate rows of its cell
+    by_cell = np.argsort(cid, kind="stable")
+    lo = np.searchsorted(cid[by_cell], route[:, 1], "left")
+    n = np.searchsorted(cid[by_cell], route[:, 1], "right") - lo
+    pq = np.repeat(route[:, 0], n)
+    pc = by_cell[np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n)]
+    keep = vid[pc] != pq
+    pq, pc = pq[keep], pc[keep]
+    if not len(pq):
+        return []
+    # (query, neighbour) groups, newest batch first; keep the newest rows
+    o = np.lexsort((-batch[pc], vid[pc], pq))
+    pq, pc = pq[o], pc[o]
+    pv, pb = vid[pc], batch[pc]
+    head = np.r_[True, (pq[1:] != pq[:-1]) | (pv[1:] != pv[:-1])]
+    grp = np.cumsum(head) - 1
+    live = pb == pb[head][grp]
+    # dense LUT [query, sub, code]; its entries are integers, so every sum
+    # below is exact in any order
+    lut = np.asarray(lut_rows, dtype=np.float64).reshape(-1, 4)
+    lq, ls, lc = (lut[:, i].astype(np.int64) for i in range(3))
+    qids = np.unique(lq)
+    table = np.zeros((len(qids), ls.max() + 1, lc.max() + 1))
+    table[np.searchsorted(qids, lq), ls, lc] = lut[:, 3]
+    qi = np.searchsorted(qids, pq[live])[:, None]
+    d = table[qi, np.arange(codes.shape[1])[None, :], codes[pc[live]]].sum(axis=1)
+    sum_d = np.bincount(grp[live], weights=d)
+    x = sum_d / 100.0
+    r = np.floor(x)
+    adc = (r + (x - r >= 0.5)).astype(np.int64)
+    gq, gv = pq[head], pv[head]
+    # rank within each query by (adc_dist, neighbour id)
+    o = np.lexsort((gv, adc, gq))
+    gq, gv, adc = gq[o], gv[o], adc[o]
+    first = np.r_[True, gq[1:] != gq[:-1]]
+    rk = np.arange(len(gq)) - np.flatnonzero(first)[np.cumsum(first) - 1] + 1
+    top = rk <= topk
+    return list(zip(gq[top].tolist(), gv[top].tolist(), adc[top].tolist(), rk[top].tolist()))
+
+
 def _probed_adc_topk(
-    spark: SparkSession, path: str, route: list, lut: DataFrame, topk: int
+    spark: SparkSession, path: str, route: list, lut_rows: list, topk: int
 ) -> DataFrame:
-    """The ADC top-``topk`` tail shared by every probe-pruned index read:
-    only the routed ``cid=`` partitions are scanned (the ``IN`` list
-    lands in the scan's PartitionFilters), tombstoned vectors drop out
-    (broadcast anti-join after the prune, so the IO stays
-    probe-bounded), and each vector is scored at its LATEST ``batch``
-    only — the row compaction keeps, so a re-encoded vector is never
-    summed twice.  One exchange on ``query_id`` serves the latest-batch
-    window, the per-pair sum and the rank window."""
-    probes = local_frame(spark, route, "query_id long, cid long")
-    idx = anti_tombstones(
-        spark.read.parquet(path).filter(F.col("cid").isin(sorted({c for _, c in route}))),
-        path,
-        id_col="vec_id",
-    )
-    cand = (
-        idx.select(
-            F.col("vec_id").alias("neighbor_id"),
-            "batch",
-            F.col("cid").cast("long").alias("cid"),
-            F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
+    """The ADC top-``topk`` of every probe-pruned index read, as
+    scatter-gather: ONE Spark job collects the routed cells' live rows
+    through Arrow (:func:`_candidate_scan`), and :func:`_adc_topk_np`
+    scores, dedups and ranks them on the driver.  The collect is bounded
+    by design: a cell holds ~64 vectors (every 64th vector is a
+    centroid), so a read brings back at most n_probe x |batch| x ~64
+    rows, the same order as the centroid rows the probe plan collects.
+    The result is a local frame of |batch| x ``topk`` rows."""
+    import pyarrow.compute as pac  # noqa: PLC0415
+
+    cids = sorted({c for _, c in route})
+    cand = _candidate_scan(spark, path, cids).toArrow() if cids else None
+    rows = []
+    if cand is not None and cand.num_rows:
+        rows = _adc_topk_np(
+            cand.column("vec_id").to_numpy(),
+            cand.column("cid").to_numpy(),
+            cand.column("batch").to_numpy(),
+            pac.list_flatten(cand.column("codes")).to_numpy().reshape(cand.num_rows, -1),
+            route,
+            lut_rows,
+            topk,
         )
-        .join(F.broadcast(probes), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .repartition("query_id")
-    )
-    latest = F.max("batch").over(W.partitionBy("query_id", "neighbor_id"))
-    adc = (
-        cand.withColumn("_latest", latest)
-        .filter(F.col("batch") == F.col("_latest"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("sum_d"))
-    )
-    # integer-scaled distance: round(x*1e4) shares the fp multiply with
-    # the oracle, so there is no BigDecimal-vs-float knife edge at any sf
-    # (sf1 sweep caught round(x, 4) ties diverging)
-    # ONE division before the round: sum_d is an exact integer-valued
-    # double, sum_d/100 is the identical double on every engine, and
-    # .5 ties round half-up on both — no compound-fp-op divergence
-    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
-    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return local_frame(spark, rows, TOPK_SCHEMA)
 
 
 def search_ivfpq_index(
@@ -236,14 +291,17 @@ def search_ivfpq_index(
     ``vec_id % 100 == 7`` workload).  An unnamed batch is planned on the
     driver by one bounded collect (mmdata.ivfpq_probe_plan); composite
     consumers (``hybrid_search_rrf_indexed``) pass ``route_key`` naming
-    their batch, so its route and LUT are the shared per-session
-    artifacts (mmdata.ivf_probe_route / pq_query_lut_cached)."""
+    their batch, so its route and LUT rows are the shared per-session
+    artifacts (mmdata.ivf_probe_route / pq_query_lut_cached).  The read
+    itself is :func:`_probed_adc_topk`: one pruned candidate collect, a
+    driver-side merge, and a local result frame; a warm read runs at
+    most two Spark jobs (the probe collect and the candidate collect),
+    plus the tombstone broadcast on a store with deletions."""
     if query_pred is None:
         query_pred = F.col("vec_id") % 100 == 7
         route_key = route_key or ("mod100", 7)
     if route_key is None:
-        route, lut_rows = ivfpq_probe_plan(spark, sf_dir, query_pred)
-        lut = local_frame(spark, lut_rows, PQ_LUT_SCHEMA)
+        route, lut = ivfpq_probe_plan(spark, sf_dir, query_pred)
     else:
         route = ivf_probe_route(spark, sf_dir, query_pred=query_pred, route_key=route_key)
         lut = pq_query_lut_cached(spark, sf_dir, query_pred, lut_key=route_key)
@@ -540,6 +598,8 @@ def ann_index_delete_vacuum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rotation's SVD has no SQL twin); store ≡ in-session-math equality and
 # tombstone-delete behavior are pinned in tests/test_ann_index.py. ---
 _OPQ_INDEX_FORMAT = 1
+_ROTATION_SCHEMA = "i int, row array<double>"
+_CODEBOOK_SCHEMA = "sub int, code int, c array<double>"
 
 
 def build_opq_index(
@@ -549,18 +609,13 @@ def build_opq_index(
     encode (a batch of) the corpus into ``cid=/batch=`` code partitions
     — one rotate+encode projection per vector, zero shuffle beyond the
     partitioned write."""
-    from columnflow_spark.queries.mmdata import (
-        _PQ_K,
-        _PQ_M,
-        opq_encode_udf,
-        opq_train_np,
-    )
+    from columnflow_spark.queries.mmdata import opq_encode_udf, opq_train_np
 
     R, cms = opq_train_np(spark, sf_dir)
     local_frame(
         spark,
         [(i, [float(x) for x in R[i]]) for i in range(R.shape[0])],
-        "i int, row array<double>",
+        _ROTATION_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_rotation"))
     local_frame(
         spark,
@@ -569,7 +624,7 @@ def build_opq_index(
             for s in range(_PQ_M)
             for ci in range(_PQ_K)
         ],
-        "sub int, code int, c array<double>",
+        _CODEBOOK_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     rows = emb.filter(batch_pred) if batch_pred is not None else emb
@@ -592,17 +647,16 @@ def build_opq_index(
 def load_opq_artifacts(spark: SparkSession, path: str):
     """``(R, cms)`` read back from the persisted sidecars — serving NEVER
     retrains (a fresh session must produce bit-identical search results
-    from the store alone)."""
+    from the store alone).  Each sidecar is read with its fixed schema,
+    so neither read plans a schema-inference job."""
     import numpy as np  # noqa: PLC0415
 
-    from columnflow_spark.queries.mmdata import _PQ_K, _PQ_M
-
     rot = sorted(
-        spark.read.parquet(os.path.join(path, "_rotation")).collect(),
+        spark.read.schema(_ROTATION_SCHEMA).parquet(os.path.join(path, "_rotation")).collect(),
         key=lambda r: r.i,
     )
     R = np.array([list(r.row) for r in rot], dtype=np.float64)
-    cb = spark.read.parquet(os.path.join(path, "_codebook")).collect()
+    cb = spark.read.schema(_CODEBOOK_SCHEMA).parquet(os.path.join(path, "_codebook")).collect()
     cms = [np.zeros((_PQ_K, len(cb[0].c)), dtype=np.float64) for _ in range(_PQ_M)]
     for r in cb:
         cms[r.sub][r.code] = np.array(r.c, dtype=np.float64)
@@ -616,52 +670,35 @@ def _ensure_opq_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+def opq_lut_rows(spark: SparkSession, sf_dir: str, path: str, query_pred):
+    """``(query_id, sub, code, d)`` ADC lookup rows of an OPQ query
+    batch, planned on the driver: the batch's vectors (the probe plan's
+    bounded collect) rotate through the PERSISTED rotation and score
+    against the persisted codebooks with the engine's folds
+    (mmdata.grid_lut_rows)."""
+    import numpy as np  # noqa: PLC0415
+
+    R, cms = load_opq_artifacts(spark, path)
+    qid, q, _, _ = _probe_batch(spark, sf_dir, query_pred)
+    codes = [range(_PQ_K)] * _PQ_M
+    return grid_lut_rows(qid, q.astype(np.float64) @ R, codes, cms)
+
+
 def search_opq_index(
     spark: SparkSession, sf_dir: str, path: str, query_pred=None, topk: int = 5,
     route_key=None,
 ) -> DataFrame:
     """Probe-pruned ADC top-k over the persisted OPQ index: probe routes
     come from the SHARED raw-space coarse quantizer (so the routing
-    collect is reused across every index-served path); queries rotate +
-    grid-quantize through the PERSISTED artifacts and the per-query LUT
-    builds against the persisted codebook."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, _PQ_M
-
+    collect is reused across every index-served path); the LUT rows are
+    planned on the driver from the persisted artifacts
+    (:func:`opq_lut_rows`), and the read is the same scatter-gather as
+    :func:`search_ivfpq_index`."""
     if query_pred is None:
         query_pred = F.col("vec_id") % 100 == 7
         route_key = route_key or ("mod100", 7)
     route = ivf_probe_route(spark, sf_dir, query_pred=query_pred, route_key=route_key)
-    R, _ = load_opq_artifacts(spark, path)
-
-    @F.pandas_udf("array<long>")
-    def _rot(batch):
-        x = np.vstack(batch.to_numpy()).astype(np.float64) @ R
-        y = x * _PQ_GRID
-        return pd.Series(list((np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)))
-
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    qsubs = (
-        emb.filter(query_pred)
-        .select(F.col("vec_id").alias("query_id"), _rot("embedding").alias("tq"))
-        .select(
-            "query_id",
-            F.posexplode(
-                F.array(*[F.slice("tq", s * _PQ_DIM + 1, _PQ_DIM) for s in range(_PQ_M)])
-            ).alias("sub", "qs"),
-        )
-    )
-    cbdf = spark.read.parquet(os.path.join(path, "_codebook"))
-    subd = F.aggregate(
-        F.zip_with("qs", "c", lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    lut = qsubs.join(F.broadcast(cbdf), "sub").select(
-        "query_id", "sub", "code", F.round(subd, 0).alias("d")
-    )
+    lut = opq_lut_rows(spark, sf_dir, path, query_pred)
     return _probed_adc_topk(spark, path, route, lut, topk)
 
 

@@ -854,10 +854,6 @@ def _pred_fingerprint(pred) -> str:
     return "default" if pred is None else str(pred)
 
 
-#: the schema of an ADC lookup-table frame
-PQ_LUT_SCHEMA = "query_id long, sub int, code int, d double"
-
-
 def _probe_batch(spark: SparkSession, sf_dir: str, query_pred):
     """The one bounded collect a served read plans from: the query batch
     (``query_pred`` on vec_id; default the fixed ``vec_id % 100 == 7``
@@ -918,15 +914,24 @@ def _route_np(qid, q, cid, c, n_probe: int) -> list[tuple[int, int]]:
 
 def _lut_np(spark: SparkSession, sf_dir: str, qid, q) -> list[tuple[int, int, int, float]]:
     """``(query_id, sub, code, d)`` ADC lookup rows, equal to
-    :func:`_pq_query_lut` row for row: the encoder's grid
-    ``sign(y)*floor(|y|+0.5)``, sequential :func:`_seq_sqdist` distances
-    to the trained codebook, and each entry rounded half-up exactly as
+    :func:`_pq_query_lut` row for row (see :func:`grid_lut_rows`)."""
+    import numpy as np  # noqa: PLC0415
+
+    codes, cmats = _pq_train_np(spark, sf_dir)
+    return grid_lut_rows(qid, q.astype(np.float64), codes, cmats)
+
+
+def grid_lut_rows(qid, x, codes, cmats) -> list[tuple[int, int, int, float]]:
+    """``(query_id, sub, code, d)`` ADC lookup rows of the query vectors
+    ``x`` (float64, raw scale; OPQ passes them rotated) against the
+    sub-space codebooks ``cmats`` whose rows are ``codes``: the encoder's
+    grid ``sign(y)*floor(|y|+0.5)``, sequential :func:`_seq_sqdist`
+    distances, and each entry rounded half-up exactly as
     ``r = floor(x); r + (x - r >= 0.5)`` (``floor(x + 0.5)`` carries at
     fp knife edges)."""
     import numpy as np  # noqa: PLC0415
 
-    codes, cmats = _pq_train_np(spark, sf_dir)
-    y = q.astype(np.float64) * _PQ_GRID
+    y = x * _PQ_GRID
     t = np.sign(y) * np.floor(np.abs(y) + 0.5)
     subd = []
     for s in range(_PQ_M):
@@ -987,8 +992,8 @@ def ivf_probe_route(
 
 def pq_query_lut_cached(
     spark: SparkSession, sf_dir: str, query_pred, *, lut_key
-) -> DataFrame:
-    """ADC lookup table of a named query batch, the LUT half of
+) -> list[tuple[int, int, int, float]]:
+    """ADC lookup rows of a named query batch, the LUT half of
     :func:`ivfpq_probe_plan` kept as the ``pq_query_lut`` session
     artifact per (lut_key, predicate): a fixed query batch's LUT is
     |batch| x M x K quantized integers — the driver artifact ADC serving
@@ -1000,10 +1005,9 @@ def pq_query_lut_cached(
         qid, q, _, _ = _probe_batch(spark, sf_dir, query_pred)
         return _lut_np(spark, sf_dir, qid, q)
 
-    rows = artifacts.get(
+    return artifacts.get(
         "pq_query_lut", spark, sf_dir, build, (lut_key, _pred_fingerprint(query_pred))
     )
-    return local_frame(spark, rows, PQ_LUT_SCHEMA)
 
 
 def _ivf_probes(

@@ -89,3 +89,23 @@ def get_spark(app_name: str = "columnflow_spark", shuffle_partitions: int | None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def count_jobs(spark: SparkSession, fn, label: str = "count-jobs"):
+    """``(fn(), n_jobs)``: run ``fn`` under a fresh job group (described
+    as ``label``) and count the Spark jobs it started, read from the
+    status tracker (which keeps job records with the UI off).  The
+    caller's job group, if any, is restored afterwards."""
+    import uuid  # noqa: PLC0415
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = [sc.getLocalProperty(k) for k in keys]
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
+    try:
+        out = fn()
+    finally:
+        for k, v in zip(keys, saved):
+            sc.setLocalProperty(k, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

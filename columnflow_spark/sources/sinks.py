@@ -320,21 +320,36 @@ def upsert_tombstones(
     upsert_partitions(rows, os.path.join(path, "_deleted"), partition_by=["batch"])
 
 
-def read_tombstones(
-    spark: SparkSession, path: str, *, id_col: str = "doc_id"
+def _tombstone_ids(
+    spark: SparkSession, path: str, id_col: str, field: T.StructField | None = None
 ) -> DataFrame | None:
+    """The tombstoned ids of every ``_deleted`` slice (``None`` when the
+    store has none), read as ``field`` when given, so the read infers no
+    schema."""
     p = os.path.join(path, "_deleted")
     if not os.path.exists(p):
         return None
-    return spark.read.parquet(p).select(id_col).distinct()
+    reader = spark.read if field is None else spark.read.schema(T.StructType([field]))
+    return reader.parquet(p).select(id_col)
+
+
+def read_tombstones(
+    spark: SparkSession, path: str, *, id_col: str = "doc_id"
+) -> DataFrame | None:
+    """The distinct tombstoned ids, for callers that join on them (an id
+    deleted in two batches is one row)."""
+    t = _tombstone_ids(spark, path, id_col)
+    return None if t is None else t.distinct()
 
 
 def anti_tombstones(store: DataFrame, path: str, *, id_col: str = "doc_id") -> DataFrame:
     """Serve-time delete mask: store rows minus the tombstoned ids (a
     broadcast anti-join — the id list is compliance-batch sized, never
     corpus-grain; unbounded tombstone growth is what the purging
-    compaction bounds)."""
-    t = read_tombstones(store.sparkSession, path, id_col=id_col)
+    compaction bounds).  The ids are read with the store's own id type
+    and without ``distinct``: a left-anti join ignores duplicates, so an
+    aggregate on the broadcast side would only add a stage."""
+    t = _tombstone_ids(store.sparkSession, path, id_col, store.schema[id_col])
     if t is None:
         return store
     return store.join(F.broadcast(t), id_col, "left_anti")

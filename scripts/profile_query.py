@@ -7,7 +7,9 @@ Usage: python scripts/profile_query.py [--plans-dir plans/r13 --suffix before]
 For each query: warm the shared tables, run the query N times (default 3)
 with ``.count()`` (the bench methodology) and once with the noop sink
 (guide §1.4 — computes every column), and write ``explain("formatted")``
-to ``<plans-dir>/<name>_<suffix>.txt`` when requested.
+to ``<plans-dir>/<name>_<suffix>.txt`` when requested.  Each sample also
+reports its Spark job count (building the frame included), read from the
+status tracker under a per-sample job group (``session.count_jobs``).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 """
@@ -35,7 +37,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from columnflow_spark.queries import all_queries
-    from columnflow_spark.session import get_spark
+    from columnflow_spark.session import count_jobs, get_spark
 
     spark = get_spark("columnflow_spark-profile")
     queries = all_queries()
@@ -48,17 +50,25 @@ def main() -> None:
 
     for name in args.names:
         fn = queries[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        runs = []
+        label = f"profile:{name}"
+        runs, jobs = [], []
         for _ in range(args.samples):
             t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
+            _, n = count_jobs(spark, lambda: fn(spark, sf_dir).count(), label)
             runs.append(time.perf_counter() - t0)
-        line = f"[profile] {name}: min={min(runs):.3f}s runs={[round(r,3) for r in runs]}"
+            jobs.append(n)
+        line = (
+            f"[profile] {name}: min={min(runs):.3f}s runs={[round(r,3) for r in runs]}"
+            f" jobs={jobs}"
+        )
         if args.noop:
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            line += f" noop={time.perf_counter() - t0:.3f}s"
+            _, n = count_jobs(
+                spark,
+                lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+                label,
+            )
+            line += f" noop={time.perf_counter() - t0:.3f}s noop_jobs={n}"
         print(line, flush=True)
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
@@ -68,7 +78,6 @@ def main() -> None:
             out = os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt")
             with open(out, "w") as fh:
                 fh.write(buf.getvalue())
-        spark.sparkContext.setJobDescription(None)
 
 
 if __name__ == "__main__":

@@ -21,3 +21,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def candidate_scans(monkeypatch):
+    """Every candidate scan the served index reads collect
+    (``annindex._candidate_scan``): their frame is a local relation, so
+    plan checks on the index read look at these scans."""
+    from columnflow_spark.queries import annindex
+
+    scans, scan = [], annindex._candidate_scan
+    monkeypatch.setattr(
+        annindex, "_candidate_scan", lambda *a: scans.append(scan(*a)) or scans[-1]
+    )
+    return scans

@@ -91,14 +91,116 @@ def test_probe_read_serves_latest_batch(spark, sf_dir, tmp_path):
     assert _rows(search_ivfpq_index(spark, sf_dir, path)) == live
 
 
-def test_served_read_plan_has_no_python_stage(spark, sf_dir, fresh_index):
-    # a fresh batch is planned on the driver and its route and LUT enter
-    # the plan as JVM-local relations (sinks.local_frame): no scan of a
-    # parallelized Python list, no Python UDF anywhere in the read
+def test_served_read_plan_has_no_python_stage(spark, sf_dir, fresh_index, candidate_scans):
+    # a fresh batch is planned on the driver, its candidates are ONE
+    # probe-pruned scan with no parallelized Python list and no Python
+    # UDF, and the result is a JVM-local relation (sinks.local_frame)
     df = search_ivfpq_index(spark, sf_dir, fresh_index, query_pred=F.col("vec_id") % 50 == 3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("LocalTableScan") == 2, plan
-    assert "ExistingRDD" not in plan and "EvalPython" not in plan, plan
+    assert len(candidate_scans) == 1
+    out = df._jdf.queryExecution().executedPlan().toString()
+    assert out.startswith("LocalTableScan"), out
+    plan = candidate_scans[0]._jdf.queryExecution().executedPlan().toString()
+    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert pf and all("cid" in l and "IN (" in l for l in pf), plan
+    for p in (out, plan):
+        assert "ExistingRDD" not in p and "EvalPython" not in p, p
+
+
+def test_served_read_job_counts(spark, sf_dir, fresh_index, tmp_path):
+    # a warm served read is two Spark jobs (the probe-plan collect and
+    # the candidate collect); an index with deletions adds the tombstone
+    # broadcast, and nothing else (no schema inference, no result job)
+    from columnflow_spark.queries.annindex import delete_vectors_from_index
+    from columnflow_spark.session import count_jobs
+    from columnflow_spark.sources.sinks import local_frame
+
+    ingest = str(tmp_path / "ingest")
+    build_ivfpq_index(spark, sf_dir, ingest, batch_pred=F.col("vec_id") % 2 == 0)
+    build_ivfpq_index(spark, sf_dir, ingest, batch=1, batch_pred=F.col("vec_id") % 4 == 1)
+    ids = local_frame(spark, [(v,) for v in range(0, 500, 9)], "vec_id long")
+    delete_vectors_from_index(spark, ids, ingest, batch=2)
+
+    def read(path, r):
+        return search_ivfpq_index(spark, sf_dir, path, query_pred=F.col("vec_id") % 50 == r).collect()
+
+    for path in (fresh_index, ingest):
+        read(path, 1)
+    rows, fresh = count_jobs(spark, lambda: read(fresh_index, 2))
+    assert rows and fresh <= 2, fresh
+    rows, ingested = count_jobs(spark, lambda: read(ingest, 4))
+    assert rows and ingested <= 3, ingested
+
+
+def test_driver_merge_knife_edges(spark, tmp_path):
+    """The driver merge against Spark's own ``F.round(sum_d / 100.0, 0)``
+    and ``row_number`` over the same hand-built rows: sums at k*100+50,
+    adc ties broken by neighbour id, the query never its own neighbour,
+    a re-encoded vector scored at its latest batch only, a tombstoned id
+    dropped, an empty cell, and an empty route."""
+    from pyspark.sql import types as T
+    from pyspark.sql.window import Window as W
+
+    from columnflow_spark.queries.annindex import TOPK_SCHEMA, _probed_adc_topk
+    from columnflow_spark.session import count_jobs
+    from columnflow_spark.sources.sinks import local_frame, upsert_partitions, upsert_tombstones
+
+    path = str(tmp_path / "index")
+    rows = [
+        # (codes, vec_id, cid, batch)
+        ("0-0", 1000, 10, 0),  # query 1000 itself
+        ("1-1", 1, 10, 0),  # q1000: 50 + 100 = 150 -> 2
+        ("2-2", 2, 10, 0),  # q1000: 100 + 150 = 250 -> 3
+        ("0-0", 3, 10, 0),  # tombstoned
+        ("1-2", 4, 20, 0),  # q1000: 200 -> 2, ties with 1 and 5
+        ("1-0", 5, 20, 0),  # re-encoded below: batch 0 must not count
+        ("2-1", 5, 20, 1),
+        ("0-1", 6, 20, 0),
+        ("0-0", 2000, 20, 0),  # query 2000 itself; q1000's nearest
+    ]
+    cand = local_frame(spark, rows, "codes string, vec_id long, cid int, batch int")
+    upsert_partitions(cand, path, partition_by=["cid", "batch"])
+    upsert_tombstones(local_frame(spark, [(3,)], "vec_id long"), path, batch=0, id_col="vec_id")
+    route = [(1000, 10), (1000, 20), (2000, 20), (2000, 30)]
+    tables = {1000: ([0, 50, 100], [0, 100, 150]), 2000: ([0, 49, 51], [0, 1, 0])}
+    lut = [(q, s, c, float(d)) for q, t in tables.items() for s in (0, 1) for c, d in enumerate(t[s])]
+
+    live = cand.filter(F.col("vec_id") != 3)
+    pairs = (
+        live.join(local_frame(spark, route, "query_id long, cid int"), "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("_latest", F.max("batch").over(W.partitionBy("query_id", "vec_id")))
+        .filter(F.col("batch") == F.col("_latest"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
+        )
+        .join(local_frame(spark, lut, "query_id long, sub int, code int, d double"),
+              ["query_id", "sub", "code"])
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("d").alias("sum_d"))
+    )
+    adc = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
+    win = W.partitionBy("query_id").orderBy(adc, F.asc("neighbor_id"))
+    for topk in (3, 4, 10):
+        want = (
+            pairs.withColumn("rk", F.row_number().over(win))
+            .filter(F.col("rk") <= topk)
+            .select("query_id", "neighbor_id", adc.alias("adc_dist"), "rk")
+            .orderBy("query_id", "rk")
+        )
+        got = _probed_adc_topk(spark, path, route, lut, topk)
+        assert got.schema.simpleString() == want.schema.simpleString()
+        assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    got = [tuple(r) for r in _probed_adc_topk(spark, path, route, lut, 10).collect()]
+    assert got[:5] == [(1000, 2000, 0, 1), (1000, 6, 1, 2), (1000, 1, 2, 3), (1000, 4, 2, 4),
+                       (1000, 5, 2, 5)]
+    assert (1000, 2, 3, 6) in got and {r[1] for r in got} & {3, 1000} == set()
+    assert [r for r in got if r[0] == 2000] == [(2000, 4, 0, 1), (2000, 6, 0, 2), (2000, 5, 1, 3)]
+
+    empty, jobs = count_jobs(spark, lambda: _probed_adc_topk(spark, path, [], [], 5))
+    assert jobs == 0 and empty.count() == 0
+    assert empty.schema == T.StructType.fromDDL(TOPK_SCHEMA)
 
 
 def test_index_store_layout(spark, sf_dir, fresh_index):
@@ -292,18 +394,21 @@ def test_opq_materialized_codes_match_encoder(spark, sf_dir, fresh_opq_index):
     assert stored == expect
 
 
-def test_opq_materialized_search_shape_and_probe_pruning(spark, sf_dir, fresh_opq_index):
-    """Full ranking for every workload query; the probed scan carries
-    PartitionFilters (reads probe cells only, not the index)."""
+def test_opq_materialized_search_shape_and_probe_pruning(
+    spark, sf_dir, fresh_opq_index, candidate_scans
+):
+    """Full ranking for every workload query; the probed candidate scan
+    carries PartitionFilters (reads probe cells only, not the index)."""
     import contextlib
     import io
 
     from columnflow_spark.queries.annindex import search_opq_index
 
     df = search_opq_index(spark, sf_dir, fresh_opq_index)
+    assert len(candidate_scans) == 1
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        candidate_scans[0].explain("formatted")
     plan = buf.getvalue()
     assert "PartitionFilters: [" in plan
     assert "cid" in plan.split("PartitionFilters")[1].split("]")[0]
@@ -314,6 +419,49 @@ def test_opq_materialized_search_shape_and_probe_pruning(spark, sf_dir, fresh_op
             .filter("vec_id % 100 = 7").collect()}
     assert {r.query_id for r in rows} == qids
     assert all(1 <= r.rk <= 5 for r in rows)
+
+
+def test_opq_driver_lut_equals_in_plan(spark, sf_dir, fresh_opq_index):
+    """The OPQ LUT rows planned on the driver from the persisted
+    ``_rotation``/``_codebook`` equal the in-plan LUT (rotation pandas
+    UDF, codebook join, ``F.round(subd, 0)``), with every vector as a
+    query."""
+    import numpy as np
+    import pandas as pd
+
+    from columnflow_spark.queries.annindex import load_opq_artifacts, opq_lut_rows
+    from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, _PQ_M
+    from columnflow_spark.sources import load_table
+
+    every = F.lit(True)
+    R, _ = load_opq_artifacts(spark, fresh_opq_index)
+
+    @F.pandas_udf("array<long>")
+    def _rot(batch):
+        y = (np.vstack(batch.to_numpy()).astype(np.float64) @ R) * _PQ_GRID
+        return pd.Series(list((np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)))
+
+    qsubs = (
+        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+        .filter(every)
+        .select(F.col("vec_id").alias("query_id"), _rot("embedding").alias("tq"))
+        .select(
+            "query_id",
+            F.posexplode(
+                F.array(*[F.slice("tq", s * _PQ_DIM + 1, _PQ_DIM) for s in range(_PQ_M)])
+            ).alias("sub", "qs"),
+        )
+    )
+    subd = F.aggregate(
+        F.zip_with("qs", "c", lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    in_plan = qsubs.join(
+        F.broadcast(spark.read.parquet(os.path.join(fresh_opq_index, "_codebook"))), "sub"
+    ).select("query_id", "sub", "code", F.round(subd, 0).alias("d"))
+    lut = opq_lut_rows(spark, sf_dir, fresh_opq_index, every)
+    assert lut and sorted(lut) == sorted(map(tuple, in_plan.collect()))
 
 
 def test_opq_materialized_delete_drops_neighbors(spark, sf_dir, fresh_opq_index):

@@ -434,8 +434,8 @@ def test_probe_route_and_lut_cache_key_on_predicate(spark, sf_dir):
     lb = pq_query_lut_cached(
         spark, sf_dir, F.col("vec_id") % 100 == 13, lut_key=key
     )
-    qa = {r.query_id for r in la.select("query_id").distinct().collect()}
-    qb = {r.query_id for r in lb.select("query_id").distinct().collect()}
+    qa = {q for q, _, _, _ in la}
+    qb = {q for q, _, _, _ in lb}
     assert qa and all(q % 100 == 7 for q in qa)
     assert qb and all(q % 100 == 13 for q in qb)
 

@@ -417,3 +417,29 @@ def test_ensure_store_cleans_staging_on_failure(tmp_path, verb):
         store(path, lambda p: None)
     assert leftovers() == []
     assert unchanged()
+
+def test_anti_tombstones_broadcasts_ids_without_aggregate(spark, tmp_path):
+    # a left-anti join ignores duplicate ids, so the serve-time mask
+    # broadcasts the raw _deleted ids: no distinct (HashAggregate) on the
+    # broadcast side, and the ids read with the store's schema
+    from columnflow_spark.sources.sinks import (
+        anti_tombstones,
+        local_frame,
+        read_tombstones,
+        upsert_tombstones,
+    )
+
+    path = str(tmp_path / "store")
+    store = local_frame(spark, [(i, i % 3) for i in range(10)], "vec_id long, cid int")
+    store.write.parquet(path)
+    for b, ids in enumerate(([1, 2], [2, 5])):
+        upsert_tombstones(local_frame(spark, [(i,) for i in ids], "vec_id long"), path,
+                          batch=b, id_col="vec_id")
+    live = anti_tombstones(spark.read.parquet(path), path, id_col="vec_id")
+    plan = live._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert sorted(r.vec_id for r in live.collect()) == [0, 3, 4, 6, 7, 8, 9]
+    # the join callers keep one row per id
+    assert sorted(r.vec_id for r in read_tombstones(spark, path, id_col="vec_id").collect()) == [
+        1, 2, 5]
