@@ -299,7 +299,8 @@ def main() -> None:
 
     from columnflow_spark.queries import anngraph as _ag
     from columnflow_spark.queries import annindex as _ai
-    from columnflow_spark.queries import mmdata as _mm
+    from columnflow_spark.queries.quality import tf_learned_gate
+    from columnflow_spark.queries.tokenlm import build_unigram_vocab_store, unigram_vocab_store_path
 
     def timed_build(line: str, build) -> None:
         """Time one once-per-corpus artifact build as its own line."""
@@ -366,7 +367,7 @@ def main() -> None:
     if "training_corpus_pipeline" in names:
         for artifact in ("tf_features", "tf_weights", "tf_threshold"):
             purge(artifact)
-        timed_build("tf_learned_gate_build", lambda: _mm.tf_learned_gate(spark, sf_dir))
+        timed_build("tf_learned_gate_build", lambda: tf_learned_gate(spark, sf_dir))
 
     # unigram vocab build/serve split (VERDICT r8 next #7): training (2
     # EM segmentation rounds over the word table) is a once-per-corpus
@@ -374,9 +375,9 @@ def main() -> None:
     # below then measures the serving path (vocab read + ONE corpus
     # pass), the same split the IVF+PQ index and learned gate use
     if "unigram_encode_corpus" in names:
-        shutil.rmtree(_mm.unigram_vocab_store_path(sf_dir), ignore_errors=True)
+        shutil.rmtree(unigram_vocab_store_path(sf_dir), ignore_errors=True)
         purge("unigram_vocab")
-        timed_build("unigram_vocab_build", lambda: _mm.build_unigram_vocab_store(spark, sf_dir))
+        timed_build("unigram_vocab_build", lambda: build_unigram_vocab_store(spark, sf_dir))
 
     # fixed same-tree reference line (r14, VERDICT r13 next #8): a
     # code-independent CPU probe (hash-sum over an in-memory range — no
@@ -463,32 +464,10 @@ def main() -> None:
     # the driver's capture keeps only the last ~2000 chars of stdout
     # (BENCH_r07.json: tail len 2000, line len 4382 -> "parsed": null),
     # so the stdout line must FIT that window to parse at all.  Shrink in
-    # order until it does: drop the samples dict (it lives in BENCHLOG),
-    # 3-digit floats, then abbreviate query names by truncating each
-    # underscore-token to its first 4+ chars (width grows until names
-    # stay unique; "names": "abbr<w>" flags the scheme — BENCHLOG maps
-    # the abbreviations back via its full-name record of the same run).
+    # order until it does: full names with 3-digit floats, then
+    # enumerated keys in sorted-name order ("names" flags the scheme —
+    # BENCHLOG maps the keys back via its full-name record of the run).
     print(_driver_line(timings, sf_val, budget=1900))
-
-
-def _abbr_names(names: list[str], w0: int = 2) -> tuple[dict[str, str], int]:
-    """Per-token truncation map: width-``w0`` baseline (2 — the suite
-    passed 95 lines in round 9 and width-3 no longer fits the capture
-    window even separator-stripped), widening ONLY the colliding names
-    (e.g. ann_ivf_topk vs ann_ivfpq_topk) until all abbreviations are
-    unique.  BENCHLOG's full-name record of the same run recomputes the
-    map for anyone reading the driver line."""
-    from collections import Counter
-
-    out = {n: "_".join(t[:w0] for t in n.split("_")) for n in names}
-    w = w0
-    while len(set(out.values())) < len(names) and w < 40:
-        w += 1
-        counts = Counter(out.values())
-        for n in names:
-            if counts[out[n]] > 1:
-                out[n] = "_".join(t[:w] for t in n.split("_"))
-    return out, w
 
 
 def _driver_line(timings: dict[str, float], sf_val, budget: int) -> str:
@@ -504,25 +483,7 @@ def _driver_line(timings: dict[str, float], sf_val, budget: int) -> str:
     cand = json.dumps({**scalars, "names": "full", "queries": full3}, **compact)
     if len(cand) <= budget:
         return cand
-    amap, w = _abbr_names(list(timings))
     scalars.pop("n_queries")  # derivable from the queries dict; saves chars
-    # the flag records the ACTUAL max truncation width _abbr_names used
-    # (colliding names widen past 3), so "abbr<w>" always describes the
-    # scheme in the captured line (ADVICE r8)
-    for digits in (3, 2):
-        q = {amap[k]: round(v, digits) for k, v in timings.items()}
-        cand = json.dumps({**scalars, "names": f"abbr{w}", "queries": q}, **compact)
-        if len(cand) <= budget:
-            return cand
-    # next tier: strip the separators too ("ann_ivf_top" -> "annivftop",
-    # ~2 chars per name) when that stays collision-free
-    nosep = {n: a.replace("_", "") for n, a in amap.items()}
-    if len(set(nosep.values())) == len(nosep):
-        q = {nosep[k]: round(v, 2) for k, v in timings.items()}
-        cand2 = json.dumps({**scalars, "names": f"abbr{w}ns", "queries": q}, **compact)
-        if len(cand2) <= budget:
-            return cand2
-    # endgame tier (suite outgrew every per-token scheme in round 9):
     # enumerated keys q<i> assigned in SORTED full-name order, so the
     # mapping is reconstructible from the name list alone — BENCHLOG's
     # full-fidelity record of the same run carries it, and sorted()

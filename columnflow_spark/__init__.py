@@ -14,8 +14,12 @@ package re-expresses its data model and operator inventory Spark-first:
   :mod:`columnflow_spark.operators`
 - weighted N-dim histograms -> groupBy/agg hist tables
   (:mod:`columnflow_spark.hist`)
-- plus large-scale training-data operators (dedup, similarity search, text
-  QC, multimodal plumbing) in :mod:`columnflow_spark.mmdata`.
+- plus large-scale training-data operators, one registry module per
+  family under :mod:`columnflow_spark.queries`: vector search and
+  compression (``mmdata``), text and media dedup (``textdedup``),
+  tokenizers and language models (``tokenlm``), quality scoring
+  (``quality``) and sampling/mixing (``mixing``); the typed media
+  columns they decode live in :mod:`columnflow_spark.mmdata`.
 
 Everything is declarative DataFrame API so Catalyst does pruning/pushdown;
 Python/pandas UDFs are used only where built-ins cannot express the

@@ -161,7 +161,7 @@ def bucketed_candidate_pairs(banded, keys: list[str], id_col: str = "doc_id", ca
     the broadcast size-count subtree is planned separately, so ReuseExchange
     does NOT collapse expensive lineage beneath it — feed this helper a
     cheap projection over a MATERIALIZED table (e.g. the session signature
-    table, queries.mmdata.minhash_sigs), not a raw signature pipeline."""
+    table, queries.textdedup.minhash_sigs), not a raw signature pipeline."""
     salted = salt_oversized_buckets(banded, keys, id_col, cap)
     a, b = salted.alias("a"), salted.alias("b")
     cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")

@@ -2,10 +2,10 @@
 training-data pipeline): image/audio/video as opaque ``binary`` payloads
 with typed metadata, processed by Arrow-batched pandas UDFs.
 
-The decode kernels themselves (PIL / pyav / librosa) are not available in
-this container, so each op routes through a clearly-marked deterministic
-fallback — but the Spark-side plumbing is real and tested: the typed media
-struct schema, the mapInPandas signatures and batch shapes, the
+Each op runs a deterministic, integer-exact kernel in place of a real
+media decoder (PIL / pyav / librosa), so its output is replayable in SQL
+and oracle-checked.  The Spark-side plumbing is the real part: the typed
+media struct schema, the mapInPandas signatures and batch shapes, the
 explode-based frame fan-out, and the compute-spread partitioning that a
 CPU-heavy decode stage needs at scale.
 """

@@ -7,17 +7,16 @@ downstream planning happens on the typed metadata, which Catalyst can
 prune/filter without touching payload bytes (a scan that filters on
 ``media.meta.n_bytes`` never reads the payload pages in Parquet).
 
-Every op is ``mapInPandas`` (Arrow batches, zero-copy into pandas) with a
-real decoder gated behind ``SPARK_GRAFT_REAL_DECODE=1`` (opt-in: the
-synthetic test payloads are not decodable media, so merely having PIL
-importable must not flip the code path) and a deterministic fallback, so
-plans, schemas and tests exercise the identical code path that a container
-with PIL/pyav would run.
+Every op is ``mapInPandas`` (Arrow batches, zero-copy into pandas) over a
+deterministic, integer-exact kernel that stands in for a real media
+decoder (the synthetic test payloads are not decodable media).  The
+kernels are replayable in SQL, so the oracles check them bit-for-bit; a
+real decoder (PIL, pyav, librosa) would replace the kernel body inside
+the same ``mapInPandas`` signature and batch shape.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,37 +46,18 @@ def build_media_table(df: DataFrame, payload: str, mime: str) -> DataFrame:
 
 
 def _fake_dims(n_bytes: pd.Series) -> tuple[pd.Series, pd.Series]:
-    # deterministic stand-in for a real header parse
+    # deterministic stand-in for a header parse
     return (64 + n_bytes % 577).astype("int32"), (64 + (n_bytes * 7) % 577).astype("int32")
 
 
 def decode_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Image decode -> (id, n_bytes, width, height).  The real PIL path
-    requires the SPARK_GRAFT_REAL_DECODE=1 opt-in (AND PIL importable);
-    otherwise the deterministic fallback runs."""
+    """Image decode -> (id, n_bytes, width, height), with the dimensions
+    derived deterministically from the payload size."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        have_pil = False
-        if os.environ.get("SPARK_GRAFT_REAL_DECODE") == "1":
-            try:
-                from PIL import Image  # noqa: F401, PLC0415
-
-                have_pil = True
-            except ImportError:
-                have_pil = False
         for pdf in batches:
-            payload = pdf["payload"]
-            n_bytes = payload.map(len)
-            if have_pil:  # pragma: no cover - PIL absent in this container
-                import io  # noqa: PLC0415
-
-                from PIL import Image  # noqa: PLC0415
-
-                dims = [Image.open(io.BytesIO(b)).size for b in payload]
-                width = pd.Series([d[0] for d in dims], index=pdf.index).astype("int32")
-                height = pd.Series([d[1] for d in dims], index=pdf.index).astype("int32")
-            else:
-                width, height = _fake_dims(n_bytes)
+            n_bytes = pdf["payload"].map(len)
+            width, height = _fake_dims(n_bytes)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -93,7 +73,7 @@ def decode_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def sample_frames(df: DataFrame, every_n: int = 30, id_col: str = "doc_id") -> DataFrame:
     """Video frame sampling: derive the frame count from the payload
-    (deterministic fallback: 1 + n_bytes % 120), emit every ``every_n``-th
+    (deterministically: 1 + n_bytes % 120), emit every ``every_n``-th
     frame index with a per-frame fingerprint.  The fan-out is a JVM-side
     ``explode`` over ``sequence`` — only the frame-count derivation touches
     Python, so the row multiplication never serializes payload bytes."""
@@ -109,19 +89,10 @@ def sample_frames(df: DataFrame, every_n: int = 30, id_col: str = "doc_id") -> D
 
 
 def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Audio feature extraction -> (id, duration_ms, loudness).  The real
-    librosa path requires the SPARK_GRAFT_REAL_DECODE=1 opt-in (and is
-    unwired here); the deterministic fallback derives both from the byte
-    stream."""
+    """Audio feature extraction -> (id, duration_ms, loudness), both
+    derived deterministically from the byte stream."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if os.environ.get("SPARK_GRAFT_REAL_DECODE") == "1":
-            try:
-                import librosa  # noqa: F401, PLC0415
-
-                raise NotImplementedError("real audio decode not wired in this container")
-            except ImportError:
-                pass
         for pdf in batches:
             n_bytes = pdf["payload"].map(len)
             yield pd.DataFrame(
@@ -142,50 +113,30 @@ def phash_image(df: DataFrame, id_col: str = "doc_id", bits: int = 60) -> DataFr
     the standard image-dedup fingerprint (near-identical payloads differ
     in a few bits; exact Hamming verification happens downstream).
 
-    Both paths share the packing contract: derive ``bits + 1`` integer
-    luminance cells, then ``bit_i = cell_i > cell_{i+1}`` packed
-    little-endian (60 bits by default — the engine-portable width, no
-    sign-bit hazards).  The real path (PIL, gated behind
-    SPARK_GRAFT_REAL_DECODE=1) decodes, grayscales and resizes to
-    ``(bits+1) x 1``; the deterministic fallback treats the utf-8
-    codepoint stream of the payload as the pixel stream and takes
-    ``bits + 1`` floor-division range means — integer-exact, so a SQL
-    oracle can replay the fingerprint bit-for-bit.  Payloads shorter than
+    The packing contract: derive ``bits + 1`` integer luminance cells,
+    then ``bit_i = cell_i > cell_{i+1}`` packed little-endian (60 bits by
+    default — the engine-portable width, no sign-bit hazards).  The
+    kernel treats the utf-8 codepoint stream of the payload as the pixel
+    stream and takes ``bits + 1`` floor-division range means —
+    integer-exact, so a SQL oracle can replay the fingerprint
+    bit-for-bit.  Payloads shorter than
     ``bits + 1`` units emit ph = 0 (callers filter)."""
     import numpy as np  # noqa: PLC0415
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        have_pil = False
-        if os.environ.get("SPARK_GRAFT_REAL_DECODE") == "1":
-            try:
-                from PIL import Image  # noqa: F401, PLC0415
-
-                have_pil = True
-            except ImportError:
-                have_pil = False
         shifts = np.int64(1) << np.arange(bits, dtype=np.int64)
         for pdf in batches:
             out = np.zeros(len(pdf), dtype=np.int64)
             for k, b in enumerate(pdf["payload"]):
-                if have_pil:  # pragma: no cover - PIL absent in this container
-                    import io  # noqa: PLC0415
-
-                    from PIL import Image  # noqa: PLC0415
-
-                    im = Image.open(io.BytesIO(b)).convert("L").resize((bits + 1, 1))
-                    cell = np.asarray(im, dtype=np.int64).ravel()
-                else:
-                    cp = np.frombuffer(
-                        b.decode("utf-8").encode("utf-32-le"), dtype=np.uint32
-                    ).astype(np.int64)
-                    n = len(cp)
-                    if n < bits + 1:
-                        continue
-                    bounds = (np.arange(bits + 2, dtype=np.int64) * n) // (bits + 1)
-                    csum = np.concatenate([[0], np.cumsum(cp)])
-                    cell = (csum[bounds[1:]] - csum[bounds[:-1]]) // (
-                        bounds[1:] - bounds[:-1]
-                    )
+                cp = np.frombuffer(
+                    b.decode("utf-8").encode("utf-32-le"), dtype=np.uint32
+                ).astype(np.int64)
+                n = len(cp)
+                if n < bits + 1:
+                    continue
+                bounds = (np.arange(bits + 2, dtype=np.int64) * n) // (bits + 1)
+                csum = np.concatenate([[0], np.cumsum(cp)])
+                cell = (csum[bounds[1:]] - csum[bounds[:-1]]) // (bounds[1:] - bounds[:-1])
                 out[k] = int(((cell[:-1] > cell[1:]) * shifts).sum())
             yield pd.DataFrame({id_col: pdf[id_col], "ph": out})
 
@@ -201,55 +152,28 @@ def resize_image(
 ) -> DataFrame:
     """Aspect-preserving thumbnail resize -> (id, out payload, out dims).
 
-    The real path (PIL ``Image.thumbnail`` + re-encode) requires the
-    SPARK_GRAFT_REAL_DECODE=1 opt-in; the deterministic fallback computes the same integer-exact output
-    dims (scale = min(target/w, target/h, 1) done in integer rationals)
-    and stands in for the re-encoded bytes with a proportional payload
+    The kernel computes ``Image.thumbnail``'s output dims exactly
+    (scale = min(target/w, target/h, 1) done in integer rationals) and
+    stands in for the re-encoded bytes with a proportional payload
     prefix.  Payload bytes move through one Arrow batch and never fan
     out; all post-resize planning runs on the typed output columns.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        have_pil = False
-        if os.environ.get("SPARK_GRAFT_REAL_DECODE") == "1":
-            try:
-                from PIL import Image  # noqa: F401, PLC0415
-
-                have_pil = True
-            except ImportError:
-                have_pil = False
         for pdf in batches:
             payload = pdf["payload"]
             n_bytes = payload.map(len)
-            if have_pil:  # pragma: no cover - PIL absent in this container
-                import io  # noqa: PLC0415
-
-                from PIL import Image  # noqa: PLC0415
-
-                out_p, out_w, out_h = [], [], []
-                for b in payload:
-                    im = Image.open(io.BytesIO(b))
-                    im.thumbnail((target_w, target_h))
-                    buf = io.BytesIO()
-                    im.save(buf, format=im.format or "PNG")
-                    out_p.append(buf.getvalue())
-                    out_w.append(im.width)
-                    out_h.append(im.height)
-                out_payload = pd.Series(out_p, index=pdf.index)
-                width = pd.Series(out_w, index=pdf.index).astype("int32")
-                height = pd.Series(out_h, index=pdf.index).astype("int32")
-            else:
-                w, h = _fake_dims(n_bytes)
-                w64, h64 = w.astype("int64"), h.astype("int64")
-                wide = w64 * target_h >= h64 * target_w
-                no_shrink = (w64 <= target_w) & (h64 <= target_h)
-                width = w64.where(no_shrink, (w64 * target_h // h64).where(~wide, target_w))
-                height = h64.where(no_shrink, (h64 * target_w // w64).where(wide, target_h))
-                out_len = (n_bytes * (width * height)) // (w64 * h64)
-                out_payload = pd.Series(
-                    [b[: int(k)] for b, k in zip(payload, out_len)], index=pdf.index
-                )
-                width, height = width.astype("int32"), height.astype("int32")
+            w, h = _fake_dims(n_bytes)
+            w64, h64 = w.astype("int64"), h.astype("int64")
+            wide = w64 * target_h >= h64 * target_w
+            no_shrink = (w64 <= target_w) & (h64 <= target_h)
+            width = w64.where(no_shrink, (w64 * target_h // h64).where(~wide, target_w))
+            height = h64.where(no_shrink, (h64 * target_w // w64).where(wide, target_h))
+            out_len = (n_bytes * (width * height)) // (w64 * h64)
+            out_payload = pd.Series(
+                [b[: int(k)] for b, k in zip(payload, out_len)], index=pdf.index
+            )
+            width, height = width.astype("int32"), height.astype("int32")
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],

@@ -15,11 +15,13 @@ Conventions (driver compare is column-name + order-insensitive value-hash):
 
 from __future__ import annotations
 
-import os
+import pkgutil
 from collections.abc import Callable
 from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
+
+from columnflow_spark.session import SHJ_LOCAL_MAP
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -58,36 +60,10 @@ def tune_session(spark: SparkSession) -> None:
     # fits a per-partition hash table (both are spill-safe, size-gated,
     # and change plans only, never results)
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"),
-    )
+    spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", SHJ_LOCAL_MAP)
     # deliberately NOT touching result-representation confs (e.g. Arrow
     # collect): they change collected dtypes, and the external compare
     # harness hashed round-1 results without them — plan-side tuning only.
-
-_MODULES = (
-    "columnflow_spark.queries.relational",
-    "columnflow_spark.queries.nested",
-    "columnflow_spark.queries.pipeline",
-    "columnflow_spark.queries.histogram",
-    "columnflow_spark.queries.physics",
-    "columnflow_spark.queries.timeseries",
-    "columnflow_spark.queries.mmdata",
-    "columnflow_spark.queries.annindex",
-    "columnflow_spark.queries.anngraph",
-    "columnflow_spark.queries.annfiltered",
-    "columnflow_spark.queries.retrieval",
-    "columnflow_spark.queries.dedupstore",
-    "columnflow_spark.queries.graph",
-    "columnflow_spark.queries.formats",
-    "columnflow_spark.queries.layout",
-    "columnflow_spark.queries.warehouse",
-    "columnflow_spark.queries.governance",
-    "columnflow_spark.queries.streaming",
-    "columnflow_spark.queries.ccstore",
-    "columnflow_spark.queries.analysis_demo",
-)
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -114,8 +90,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 def load_all() -> None:
-    for mod in _MODULES:
-        import_module(mod)
+    """Import every module of this package, which registers its queries."""
+    for mod in sorted(m.name for m in pkgutil.iter_modules(__path__)):
+        import_module(f"{__name__}.{mod}")
 
 
 def all_queries() -> dict[str, QueryFn]:

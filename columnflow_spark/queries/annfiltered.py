@@ -38,7 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from columnflow_spark.queries import query
 from columnflow_spark.queries.anngraph import (
@@ -138,6 +137,7 @@ def ann_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w.r.t. the probed cells."""
     from columnflow_spark.functions.similarity import nearest_centroid_assign
     from columnflow_spark.queries.mmdata import (
+        _adc_rank,
         _ivf_cents,
         _ivf_probes,
         _pq_exploded_codes,
@@ -166,11 +166,4 @@ def ann_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").alias("sum_d"))
     )
-    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
-    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _adc_rank(adc)

@@ -594,12 +594,27 @@ def ann_index_delete_vacuum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the artifacts without retraining (the unigram-vocab contract); cells
 # come from the same frozen raw-space coarse quantizer the IVF+PQ index
 # uses, so probe routing is SHARED with every other index-served path
-# (the ``ivf_probe_route`` session artifact).  Rows-only registration (the
-# rotation's SVD has no SQL twin); store ≡ in-session-math equality and
-# tombstone-delete behavior are pinned in tests/test_ann_index.py. ---
+# (the ``ivf_probe_route`` session artifact).  The sidecars are a few KB
+# of driver-side numbers, so they are written and read with pyarrow on
+# the driver: no Spark job and no hidden-path scan for either.
+# Rows-only registration (the rotation's SVD has no SQL twin); store ≡
+# in-session-math equality and tombstone-delete behavior are pinned in
+# tests/test_ann_index.py. ---
 _OPQ_INDEX_FORMAT = 1
-_ROTATION_SCHEMA = "i int, row array<double>"
-_CODEBOOK_SCHEMA = "sub int, code int, c array<double>"
+
+
+def _write_sidecar(path: str, name: str, columns: dict) -> None:
+    """Replace the ``path/name`` sidecar directory by one parquet file of
+    ``columns`` (name -> pyarrow array)."""
+    import shutil  # noqa: PLC0415
+
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    d = os.path.join(path, name)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    pq.write_table(pa.table(columns), os.path.join(d, "part-0.parquet"))
 
 
 def build_opq_index(
@@ -609,23 +624,22 @@ def build_opq_index(
     encode (a batch of) the corpus into ``cid=/batch=`` code partitions
     — one rotate+encode projection per vector, zero shuffle beyond the
     partitioned write."""
+    import pyarrow as pa  # noqa: PLC0415
+
     from columnflow_spark.queries.mmdata import opq_encode_udf, opq_train_np
 
     R, cms = opq_train_np(spark, sf_dir)
-    local_frame(
-        spark,
-        [(i, [float(x) for x in R[i]]) for i in range(R.shape[0])],
-        _ROTATION_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_rotation"))
-    local_frame(
-        spark,
-        [
-            (s, ci, [float(x) for x in cms[s][ci]])
-            for s in range(_PQ_M)
-            for ci in range(_PQ_K)
-        ],
-        _CODEBOOK_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_codebook"))
+    vecs = pa.list_(pa.float64())
+    _write_sidecar(path, "_rotation", {
+        "i": pa.array(range(R.shape[0]), pa.int32()),
+        "row": pa.array([[float(x) for x in r] for r in R], vecs),
+    })
+    keys = [(s, ci) for s in range(_PQ_M) for ci in range(_PQ_K)]
+    _write_sidecar(path, "_codebook", {
+        "sub": pa.array([s for s, _ in keys], pa.int32()),
+        "code": pa.array([ci for _, ci in keys], pa.int32()),
+        "c": pa.array([[float(x) for x in cms[s][ci]] for s, ci in keys], vecs),
+    })
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     rows = emb.filter(batch_pred) if batch_pred is not None else emb
     # the centroid rows are a bounded collect (nearest_centroid_assign):
@@ -644,22 +658,20 @@ def build_opq_index(
     return path
 
 
-def load_opq_artifacts(spark: SparkSession, path: str):
+def load_opq_artifacts(path: str):
     """``(R, cms)`` read back from the persisted sidecars — serving NEVER
     retrains (a fresh session must produce bit-identical search results
-    from the store alone).  Each sidecar is read with its fixed schema,
-    so neither read plans a schema-inference job."""
+    from the store alone).  Both reads are driver-side pyarrow: no Spark
+    job."""
     import numpy as np  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
 
-    rot = sorted(
-        spark.read.schema(_ROTATION_SCHEMA).parquet(os.path.join(path, "_rotation")).collect(),
-        key=lambda r: r.i,
-    )
-    R = np.array([list(r.row) for r in rot], dtype=np.float64)
-    cb = spark.read.schema(_CODEBOOK_SCHEMA).parquet(os.path.join(path, "_codebook")).collect()
-    cms = [np.zeros((_PQ_K, len(cb[0].c)), dtype=np.float64) for _ in range(_PQ_M)]
-    for r in cb:
-        cms[r.sub][r.code] = np.array(r.c, dtype=np.float64)
+    rot = pq.read_table(os.path.join(path, "_rotation")).to_pydict()
+    R = np.array(rot["row"], dtype=np.float64)[np.argsort(rot["i"])]
+    cb = pq.read_table(os.path.join(path, "_codebook")).to_pydict()
+    cms = [np.zeros((_PQ_K, len(cb["c"][0])), dtype=np.float64) for _ in range(_PQ_M)]
+    for s, ci, c in zip(cb["sub"], cb["code"], cb["c"]):
+        cms[s][ci] = np.array(c, dtype=np.float64)
     return R, cms
 
 
@@ -678,7 +690,7 @@ def opq_lut_rows(spark: SparkSession, sf_dir: str, path: str, query_pred):
     (mmdata.grid_lut_rows)."""
     import numpy as np  # noqa: PLC0415
 
-    R, cms = load_opq_artifacts(spark, path)
+    R, cms = load_opq_artifacts(path)
     qid, q, _, _ = _probe_batch(spark, sf_dir, query_pred)
     codes = [range(_PQ_K)] * _PQ_M
     return grid_lut_rows(qid, q.astype(np.float64) @ R, codes, cms)

@@ -135,7 +135,7 @@ def cc_apply_edges(
     store creation (r13): each touched bucket reads ~the creation-time
     target rows, so the member re-read scales with the touched
     components, not with a constant fraction of the store."""
-    from columnflow_spark.queries.mmdata import components_from_edges
+    from columnflow_spark.queries.textdedup import components_from_edges
 
     b = int(batch_id)
     gbm = _read_scc_gb(store)
@@ -261,7 +261,7 @@ def cc_retract_edges(
     (dual-bucket) and tombstone the dead edges.  Retracting an absent or
     already-retracted edge re-solves to the identical labels — re-delete
     is idempotent."""
-    from columnflow_spark.queries.mmdata import components_from_edges
+    from columnflow_spark.queries.textdedup import components_from_edges
 
     b = int(batch_id)
     gbm = _read_scc_gb(store)
@@ -440,7 +440,7 @@ def order_part_components_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     splicing the re-solved labels over the untouched rest.  Work beyond
     the base solve is proportional to the retracted components, not the
     graph."""
-    from columnflow_spark.queries.mmdata import components_from_edges
+    from columnflow_spark.queries.textdedup import components_from_edges
 
     li = spread(
         load_table(

@@ -1,7 +1,7 @@
 """Materialized exact-dedup fingerprint store: dedup NEW data against
 ALL of history without rescanning history.
 
-``dedup_exact`` (queries/mmdata.py) fingerprints the whole corpus every
+``dedup_exact`` (queries/textdedup.py) fingerprints the whole corpus every
 session; at 100 TB the history side is the expensive artifact — a real
 ingest pipeline fingerprints each arriving batch once, flags it against
 the accumulated fingerprint store, and upserts the batch's new
@@ -820,7 +820,7 @@ def semdedup_store_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # idempotent upsert unit.  Within-batch firsts reuse the exact
 # chunk-capped pair join.  The oracle replays both sides exhaustively
 # from the raw table. ---
-from columnflow_spark.queries.mmdata import (  # noqa: E402
+from columnflow_spark.queries.textdedup import (  # noqa: E402
     _PH_BITS,
     _PH_BLOCK_BITS,
     _PH_HAM_MAX,
@@ -1030,7 +1030,7 @@ def phash_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-doc islands window).  Store rows keep the gram's first
 # (doc, pos) key so compaction can min-merge slices exactly like the
 # fingerprint store. ---
-from columnflow_spark.queries.mmdata import (  # noqa: E402
+from columnflow_spark.queries.textdedup import (  # noqa: E402
     _SSTR_GRAM_CTES,
     _SSTR_K,
     _sstr_grams,
@@ -1123,7 +1123,7 @@ def substring_cov_rollup(marked: DataFrame, k: int = _SSTR_K) -> DataFrame:
     form): the r8 per-extent sums double-counted whenever neighboring
     coverage intervals ``[mn, mx + k - 1]`` were closer than k
     positions (ADVICE r9)."""
-    from columnflow_spark.queries.mmdata import _interval_union_contrib
+    from columnflow_spark.queries.textdedup import _interval_union_contrib
 
     dup = marked.filter("cov").select("doc_id", "p", "pr")
     win = W.partitionBy("doc_id").orderBy("p")
@@ -1525,7 +1525,7 @@ def semdedup_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this corpus (the dedup_minhash_lsh guarantee, now at the store
 # boundary).  Doc-grain rows carry their ids, so deletion is the
 # tombstone shape (both postings and payloads anti-join ``_deleted``). ---
-from columnflow_spark.queries.mmdata import (  # noqa: E402
+from columnflow_spark.queries.textdedup import (  # noqa: E402
     JACCARD_THRESHOLD,
     _GRAMS_CTE,
     _verify_pairs_exact,
@@ -1741,7 +1741,7 @@ def substring_store_rewrite_frame(
     text_md5)``.  Same plan shape as the flag pass (one history scan
     under the broadcast batch-gram semi-join, batch-grain everything
     after) plus the in-row indexed cut shared with the batch rewrite."""
-    from columnflow_spark.queries.mmdata import _sstr_cut
+    from columnflow_spark.queries.textdedup import _sstr_cut
 
     bg = _sstr_grams(docs, k)
     store = spark.read.parquet(path)
@@ -1852,8 +1852,8 @@ def substring_store_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # URL) has the same store + delete + vacuum lifecycle. ---
 def _url_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
     """``(doc_id, fingerprint, band)`` where fingerprint = normalized
-    synthetic URL (queries/mmdata.py's URL family)."""
-    from columnflow_spark.queries.mmdata import normalize_url, synthetic_urls
+    synthetic URL (queries/textdedup.py's URL family)."""
+    from columnflow_spark.queries.textdedup import normalize_url, synthetic_urls
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
     if pred is not None:
@@ -1868,7 +1868,7 @@ def _url_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
 #: oracle template: URL-grain flagging over the (optionally reduced)
 #: history — the _inc_store_oracle shape with the URL CTE chain
 def _url_store_oracle(hist_filter: str = "") -> str:
-    from columnflow_spark.queries.mmdata import _URL_CTES
+    from columnflow_spark.queries.textdedup import _URL_CTES
 
     return f"""
     WITH {_URL_CTES},
@@ -1958,7 +1958,7 @@ def _segment_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFr
     """``(doc_id, fingerprint, band)`` — one row per DISTINCT (doc,
     segment text): the count monoid must count holder DOCS, so in-doc
     repeats of a segment are collapsed before the upsert."""
-    from columnflow_spark.queries.mmdata import segment_docs
+    from columnflow_spark.queries.textdedup import segment_docs
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
     if pred is not None:
@@ -1972,7 +1972,7 @@ def _segment_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFr
 
 
 def _segment_store_oracle(hist_filter: str = "") -> str:
-    from columnflow_spark.queries.mmdata import _BP_MIN_DOCS, _BP_SEG_TOKENS
+    from columnflow_spark.queries.textdedup import _BP_MIN_DOCS, _BP_SEG_TOKENS
 
     return f"""
     WITH n AS (SELECT 3 * count(*) // 5 AS h FROM documents),
@@ -2055,7 +2055,7 @@ def segment_store_serve(
     partitions, summed with the batch's own distinct-doc counts in a
     segment-grain shuffle join (history is never broadcast and never
     rescanned at corpus grain); the rollup is one doc-keyed aggregate."""
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.textdedup import (
         _BP_MIN_DOCS,
         bp_doc_rollup,
         segment_docs,

@@ -1027,7 +1027,7 @@ def order_part_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders cluster through shared high-quantity parts — per-order
     component = min node id reachable (orders dominate the min: part
     node ids are offset above every order key)."""
-    from columnflow_spark.queries.mmdata import components_from_edges
+    from columnflow_spark.queries.textdedup import components_from_edges
 
     edges = (
         spread(load_table(

@@ -1,28 +1,29 @@
-"""Large-scale training-data pipeline operators: deduplication (exact,
-n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine), similarity
-search (brute-force + LSH-bucketed ANN), text analysis (quality, lang-ID,
-token counting, fingerprinting) and multimodal column plumbing.
+"""Embedding-vector operators: similarity search, vector compression and
+vector-space curation.
 
-Scale notes (the 100 TB story, per op):
+Brute-force cosine top-k, LSH-bucketed ANN and embedding-cosine near-dup
+pairs, IVF (seeded and k-means-trained), PQ, OPQ, IVF-PQ with exact
+refine, int8 and binary (sign) quantization with Hamming search, one
+Lloyd k-means step, covariance/PCA, MMR diversification, hard-negative
+mining and SemDeDup.  Session artifacts: ``pq_codebook``, ``ivfpq_adc``,
+``pca_model``, ``ivf_trained_centroids`` and ``opq_model``.  The
+persisted IVF-PQ/OPQ indexes that serve these codes live in
+``queries/annindex.py``.
 
-- exact dedup / fingerprints: one hash + groupBy — single shuffle on the
-  16-byte digest.
-- n-gram Jaccard: explode-shingles + equi-join on the shingle — exact but
-  O(sum of postings²) on hot shingles; it is the *verifier*, MinHash+LSH
-  is the *candidate generator* at scale.
-- MinHash+LSH: per-doc signatures (narrow), explode only b band keys per
-  doc, equi-join on (band, hash) buckets, verify candidates exactly —
-  the standard near-dup pipeline for multi-TB corpora.
-- SimHash: 64-bit fingerprint per doc; 16-bit block buckets + hamming
-  verification.
-- ANN: exact top-k is a broadcast of the (small) query set over the
-  corpus — no shuffle of the corpus; the LSH variant buckets first so each
-  bucket joins locally.
+Scale notes:
+
+- exact top-k broadcasts the (small) query set over the corpus — no
+  shuffle of the corpus;
+- LSH buckets first, so each bucket joins locally;
+- IVF assigns every vector to its nearest cell once (the index build);
+  a query probes only its top cells, so per-query work scales with
+  corpus / n_cells;
+- PQ/OPQ/IVF-PQ scan 8 sub-vector codes per vector against a per-query
+  lookup table, never the float corpus.
 """
 
 from __future__ import annotations
 
-import math
 import random
 
 import pandas as pd
@@ -33,356 +34,16 @@ from pyspark.sql import functions as F
 from columnflow_spark.core import artifacts
 from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df, checkpoint_df_lazy
-
 from columnflow_spark.functions.similarity import (
-    bucketed_candidate_pairs,
     chunked_self_pairs,
     cosine,
-    hamming64,
     hyperplane_signs,
-    lsh_band_keys,
-    minhash_signature_agg,
     nearest_centroid_assign,
-    salt_oversized_buckets,
-    simhash64,
 )
-from columnflow_spark.functions.text import (
-    STOPWORDS,
-    avg_token_len,
-    bpe_ish_token_count,
-    fingerprint,
-    n_tokens,
-    stopword_ratio,
-    tokens,
-    word_shingles,
-)
+from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import ensure_store, local_frame, store_path
-
-JACCARD_THRESHOLD = 0.8
-
-# bucket-skew guard for LSH-family self-joins: buckets above this size are
-# salt-chunked (see functions.similarity.salt_oversized_buckets).  The test
-# corpora's buckets sit far below it, so capped and uncapped plans produce
-# identical output there; at 100 TB it is the incident guard against
-# boilerplate-degenerate band keys.
-LSH_BUCKET_CAP = 256
-
-# SQL fragment: distinct word-trigram list per doc (twin of word_shingles(n=3))
-_GRAMS_CTE = """
-    toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts FROM documents
-    ),
-    grams AS (
-        SELECT doc_id,
-               list_distinct(list_transform(range(1, len(ts) - 1),
-                             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS gs
-        FROM toks WHERE len(ts) >= 3
-    )
-"""
-
-
-# --- exact dedup: normalize -> fingerprint -> groupBy ---
-@query(
-    "dedup_exact",
-    oracle="""
-    WITH fp AS (
-        SELECT source, md5(regexp_replace(trim(lower(text)), ' +', ' ', 'g')) AS fingerprint
-        FROM documents
-    )
-    SELECT source, count(*) AS n_docs, count(DISTINCT fingerprint) AS n_unique
-    FROM fp
-    GROUP BY source
-    """,
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["source", "text"])
-    return (
-        docs.withColumn("fingerprint", fingerprint(F.col("text")))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("fingerprint").alias("n_unique"),
-        )
-    )
-
-
-#: ``hashed_grams`` session artifact: the materialized hashed-shingle
-#: table.  Every dedup op consumes the corpus as sorted arrays of 64-bit
-#: shingle hashes; a production pipeline materializes this table ONCE (it
-#: is the single full-corpus pass) and candidate generation /
-#: verification / clustering all reuse it.  localCheckpoint stands in for
-#: the persisted table on a long-lived session: doc_id + ~sz longs per
-#: doc, far smaller than text.
-@artifact("hashed_grams")
-def hashed_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, hs, sz)``: distinct xxhash64 trigram-shingle hashes per
-    doc, sorted by the global canonical order (document frequency asc,
-    hash asc).
-
-    Joining and intersecting on 8-byte longs instead of shingle strings
-    keeps every downstream shuffle narrow.  The rare-first canonical order
-    is what makes the prefix filter *selective*, not just correct: a
-    boilerplate shingle shared by thousands of docs sorts to the END of
-    every doc's array and never enters a prefix, so prefix posting lists
-    stay short and the candidate join emits ~true-pair volume instead of
-    df² blowups on hot shingles (PPJoin's ordering heuristic).  Costs one
-    extra df-aggregation pass at build time — paid once per session, like
-    the materialized shingle table of a production dedup pipeline.
-    (xxhash64 collisions need two distinct trigrams of the same corpus to
-    collide: P ~ n²/2^65, irrelevant below ~10^8 distinct shingles; the
-    exact-string form is the fallback above.)
-    """
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    hv = F.transform(word_shingles(F.col("text"), 3), lambda s: F.xxhash64(s))
-    ex = (
-        docs.filter(F.size(tokens(F.col("text"))) >= 3)
-        .select("doc_id", F.explode(hv).alias("h"))
-    )
-    dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    # the per-doc source tag rides along so decontamination consumers
-    # never need to re-join (let alone broadcast) the corpus-sized
-    # doc->source map: one doc-keyed equi-join here, paid once per
-    # session at build time and frozen into the checkpoint
-    src = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    return (
-        ex.join(dfreq, "h")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "h"))).alias("sh"))
-        .select("doc_id", F.transform("sh", lambda s: s["h"]).alias("hs"))
-        .withColumn("sz", F.size("hs"))
-        .join(src, "doc_id")
-        .transform(checkpoint_df)
-    )
-
-
-#: ``minhash_sigs`` session artifact: the materialized MinHash signature
-#: table — the second canonical dedup-index artifact after the shingle
-#: table: one row per doc, 32 longs.  Band explode, the skew-guard size
-#: count and both candidate join sides are all cheap projections over it;
-#: without materialization each reference re-runs the signature
-#: aggregation (the broadcast size count lives in a separate subtree, so
-#: ReuseExchange cannot collapse it).
-@artifact("minhash_sigs")
-def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, sig)``: 32-permutation MinHash signatures, materialized
-    once per session from the shared hashed-shingle table."""
-    g = hashed_grams(spark, sf_dir)
-    return minhash_signature_agg(g, ["doc_id"], "hs", k=32, pre_hashed=True).transform(
-        checkpoint_df  # through the reliability switch like every loop-body site
-    )
-
-
-#: same role for SimHash: one 64-bit fingerprint per doc, materialized so
-#: the md5-shingle vote pass (the expensive projection) runs once per
-#: session instead of once per plan reference.
-@artifact("simhash_table")
-def simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, sh)``: 60-bit md5-family SimHash fingerprints (the
-    engine-portable hash family — see functions/hashing.py), materialized
-    once per session."""
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    md5_hashes = F.transform(
-        word_shingles(F.col("text"), 3),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
-    return (
-        docs.filter(F.size(tokens(F.col("text"))) >= 3)
-        .select("doc_id", simhash64(md5_hashes).alias("sh"))
-        .transform(checkpoint_df)
-    )
-
-
-def _verify_pairs_exact(g: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of candidate ``(d1, d2)`` pairs against
-    the hashed-shingle table: join the candidate pair list back to the
-    materialized grams on each side and intersect the hash arrays.  Plain
-    equi-joins on doc_id — AQE picks broadcast while the restricted grams
-    fit and falls back to shuffle joins at corpus scale, where both sides
-    are large.  Verification cost scales with |candidates|."""
-    gs1 = g.select(F.col("doc_id").alias("d1"), F.col("hs").alias("hs1"), F.col("sz").alias("sz1"))
-    gs2 = g.select(F.col("doc_id").alias("d2"), F.col("hs").alias("hs2"), F.col("sz").alias("sz2"))
-    pairs = cand.join(gs1, "d1").join(gs2, "d2")
-    common = F.size(F.array_intersect("hs1", "hs2"))
-    jac = common / (F.col("sz1") + F.col("sz2") - common)
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-# --- exact n-gram Jaccard near-dup pairs (the verifier / small-scale path) ---
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    pairs AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT d1, d2, round(common * 1.0 / (s1.sz + s2.sz - common), 4) AS jaccard
-    FROM pairs
-    JOIN sizes s1 ON s1.doc_id = d1
-    JOIN sizes s2 ON s2.doc_id = d2
-    WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # prefix-filtered set-similarity join (Bayardo et al., WWW'07): with
-    # shingle sets sorted by a global order, J(x,y) >= t implies the
-    # prefixes of length |x| - ceil(t*|x|) + 1 intersect — so only prefix
-    # shingles enter the posting-list self-join.  At t=0.8 that is ~1/5th
-    # of the postings per side (~1/25th of the join work and hot-shingle
-    # skew), and it is EXACT: no near-dup pair can be missed.  Survivors
-    # are verified by intersecting the full sorted hash arrays.
-    t = JACCARD_THRESHOLD
-    g = hashed_grams(spark, sf_dir)
-    plen = (F.col("sz") - F.ceil(F.col("sz") * F.lit(t)) + 1).cast("int")
-    ex = g.select(
-        "doc_id", "sz", F.posexplode(F.slice("hs", F.lit(1), plen)).alias("p", "h")
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    # PPJoin pruning on top of the prefix match — all exact:
-    # - length filter: J >= t forces t*sz1 <= sz2 <= sz1/t
-    # - positional filter: elements strictly before the matching position
-    #   can't contribute more than the match itself plus both suffixes, so
-    #   overlap <= 1 + min(sz1-p1-1, sz2-p2-1) must still reach the
-    #   required overlap ceil(t/(1+t)*(sz1+sz2))
-    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("a.sz") + F.col("b.sz")))
-    ubound = 1 + F.least(
-        F.col("a.sz") - F.col("a.p") - 1, F.col("b.sz") - F.col("b.p") - 1
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.sz") * F.lit(t) <= F.col("a.sz"))
-            & (F.col("a.sz") * F.lit(t) <= F.col("b.sz"))
-            & (ubound >= alpha),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .dropDuplicates(["d1", "d2"])
-    )
-    return _verify_pairs_exact(g, cand, JACCARD_THRESHOLD)
-
-
-# --- MinHash + LSH banding + exact verification (the scale path).
-# With 16 bands x 2 rows, P(candidate) = 1-(1-j²)^16: j=0.8 -> 0.9999988,
-# and the corpus's planted near-dups sit at j≈0.99 (P_miss ~ 1e-27), so the
-# verified output equals the exact-Jaccard oracle. ---
-@query(
-    "dedup_minhash_lsh",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    pairs AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT d1, d2, round(common * 1.0 / (s1.sz + s2.sz - common), 4) AS jaccard
-    FROM pairs
-    JOIN sizes s1 ON s1.doc_id = d1
-    JOIN sizes s2 ON s2.doc_id = d2
-    WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    """,
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # signatures from the shared materialized hashed-shingle table —
-    # the corpus is shingled once per session across all dedup ops;
-    # explode+groupBy-min signature (flat codegen; the nested-HOF form
-    # costs seconds of JIT per stage — see minhash_signature_agg)
-    g = hashed_grams(spark, sf_dir)
-    sigs = minhash_sigs(spark, sf_dir)
-    # explode ONLY (doc_id, band_key): the shingle arrays must not ride
-    # through the 16x band duplication and its shuffle — at corpus scale
-    # that multiplies shuffle bytes by the band count
-    banded = sigs.select(
-        "doc_id", F.explode(F.array(*lsh_band_keys(F.col("sig"), bands=16, rows=2))).alias("bk")
-    )
-    # skew-guarded bucket self-join: buckets over LSH_BUCKET_CAP are
-    # salt-chunked so a degenerate band key (boilerplate-heavy corpus)
-    # costs O(n·cap) candidates across n/cap tasks, never one O(n²)
-    # straggler; buckets under the cap — all of them, on a healthy
-    # corpus — are paired exactly, so the oracle is unchanged
-    candidates = bucketed_candidate_pairs(banded, ["bk"], cap=LSH_BUCKET_CAP)
-    # exact verification against the same hashed-shingle table: cost
-    # scales with |candidates|, not corpus size
-    return _verify_pairs_exact(g, candidates, JACCARD_THRESHOLD)
-
-
-# --- SimHash near-dup.  Token hashes are md5-based 60-bit ints (the
-# engine-portable hash family — see functions/hashing.py) so DuckDB can
-# recompute the exact fingerprints; the oracle does a full cross-join
-# hamming check (exhaustive at sf0.01), which also proves the block-bucket
-# candidate generation misses nothing: 8 blocks of 8 bits guarantee a
-# shared block for any pair within hamming 7 (pigeonhole). ---
-@query(
-    "dedup_simhash",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    hx AS (SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::BIGINT AS h FROM ex),
-    bits AS (
-        SELECT doc_id, b,
-               CASE WHEN 2 * CAST(sum((h >> b) & 1) AS BIGINT) > count(*) THEN 1 ELSE 0 END AS bit
-        FROM hx CROSS JOIN (SELECT unnest(range(60)) AS b)
-        GROUP BY doc_id, b
-    ),
-    sh AS (SELECT doc_id, CAST(sum(bit::BIGINT << b) AS BIGINT) AS sh FROM bits GROUP BY doc_id)
-    SELECT a.doc_id AS d1, b.doc_id AS d2,
-           CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sh, b.sh)) <= 6
-    ORDER BY d1, d2
-    """,
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hashed = simhash_table(spark, sf_dir)
-    # bucket on 16-bit blocks: near-dups (hamming <= 6 over 64 bits) share
-    # at least one of 4 blocks by pigeonhole when hamming <= 3... use 8
-    # blocks of 8 bits to guarantee a shared block up to hamming 7
-    blocks = F.array(*[F.shiftright(F.col("sh"), 8 * i).bitwiseAND(F.lit(255)).alias(f"b{i}") for i in range(8)])
-    banded = hashed.select(
-        "doc_id", "sh", F.posexplode(blocks).alias("block_idx", "block_val")
-    )
-    # hash-partition on the bucket key BEFORE self-joining: both join sides
-    # then carry an identical Exchange, so Spark plans the second as a
-    # ReusedExchange — the md5-shingle simhash projection (the expensive
-    # part) runs once instead of twice, and the bucket join is co-located
-    banded = banded.repartition(
-        spark.sparkContext.defaultParallelism, "block_idx", "block_val"
-    )
-    # same skew guard as the MinHash path: an 8-bit block value shared by
-    # a huge boilerplate cluster would otherwise put the whole cluster in
-    # one quadratic bucket.  The md5-shingle simhash projection — the
-    # expensive part — still runs once: the size count and both join sides
-    # all sit above the same repartition Exchange (ReusedExchange).
-    banded = salt_oversized_buckets(banded, ["block_idx", "block_val"], "doc_id", LSH_BUCKET_CAP)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            hamming64(F.col("a.sh"), F.col("b.sh")).cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["d1", "d2"])
-    )
-    return pairs.filter(F.col("hamming") <= 6).orderBy("d1", "d2")
+from columnflow_spark.sources.sinks import local_frame
 
 
 # --- embedding-cosine near-dup pairs (exact, block-pair form) ---
@@ -458,14 +119,20 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- hyperplane LSH shared by the embedding near-dup and the ANN paths.
+# The random hyperplanes are a fixed driver-side constant (seeded), so
+# the oracle recomputes the exact same bucket ids from the same literal
+# plane weights — sign(dot) with identical sequential summation order on
+# both engines (IEEE-754 determinism; same pattern as
+# dedup_embedding_cosine). ---
 def _lsh_planes() -> list[list[float]]:
     rng = random.Random(42)
     return [[rng.gauss(0, 1) for _ in range(64)] for _ in range(6)]
 
 
-def _lsh_threshold_oracle() -> str:
-    """Same deterministic hyperplane buckets as :func:`_lsh_buckets_oracle`,
-    threshold-filtered pairs instead of per-vector top-k."""
+def _lsh_bkt_cte() -> str:
+    """SQL CTE ``bkt(vec_id, embedding, bucket)``: every vector's
+    hyperplane bucket, the oracle twin of :func:`hyperplane_signs`."""
     terms = []
     for i, plane in enumerate(_lsh_planes()):
         lits = ", ".join(repr(w) for w in plane)
@@ -475,19 +142,32 @@ def _lsh_threshold_oracle() -> str:
         )
         terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
     bucket = "\n         + ".join(terms)
-    return f"""
-    WITH bkt AS (
+    return f"""bkt AS (
         SELECT vec_id, embedding, CAST({bucket} AS BIGINT) AS bucket
         FROM embeddings
-    )
+    )"""
+
+
+def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-bucketed vector pairs ``(bucket, v1, e1, v2, e2)`` with
+    ``v1 < v2``: a local join per bucket, never a cross join."""
+    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
+    bucketed = emb.withColumn("bucket", hyperplane_signs(F.col("embedding"), _lsh_planes()))
+    a = bucketed.select("bucket", F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"))
+    b = bucketed.select("bucket", F.col("vec_id").alias("v2"), F.col("embedding").alias("e2"))
+    return a.join(b, ["bucket"]).filter(F.col("v1") < F.col("v2"))
+
+
+@query(
+    "dedup_embedding_cosine_lsh",
+    oracle=f"""
+    WITH {_lsh_bkt_cte()}
     SELECT e1.vec_id AS v1, e2.vec_id AS v2,
            round(list_cosine_similarity(e1.embedding::DOUBLE[], e2.embedding::DOUBLE[]), 4) AS sim
     FROM bkt e1 JOIN bkt e2 ON e1.bucket = e2.bucket AND e1.vec_id < e2.vec_id
     WHERE list_cosine_similarity(e1.embedding::DOUBLE[], e2.embedding::DOUBLE[]) >= 0.4
-    """
-
-
-@query("dedup_embedding_cosine_lsh", oracle=_lsh_threshold_oracle())
+    """,
+)
 def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate (SemDeDup-style) embedding near-dup: hyperplane-LSH
     buckets as candidate generator, exact cosine verify within buckets only.
@@ -496,13 +176,8 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 - θ/π)^k per pair — the production trade for sub-quadratic cost.  The
     oracle recomputes the identical buckets from the same literal plane
     weights (IEEE-754-deterministic), so the compare is exact."""
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    bucketed = emb.withColumn("bucket", hyperplane_signs(F.col("embedding"), _lsh_planes()))
-    a = bucketed.select("bucket", F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"))
-    b = bucketed.select("bucket", F.col("vec_id").alias("v2"), F.col("embedding").alias("e2"))
-    cand = a.join(b, ["bucket"]).filter(F.col("v1") < F.col("v2"))
     return (
-        cand.withColumn("sim", cosine(F.col("e1"), F.col("e2")))
+        _lsh_candidates(spark, sf_dir).withColumn("sim", cosine(F.col("e1"), F.col("e2")))
         .filter(F.col("sim") >= 0.4)
         .select("v1", "v2", F.round("sim", 4).alias("sim"))
     )
@@ -538,7 +213,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort task per query; phase 2 ranks the <= n_salt·k survivors.
     Identical results (top-k is reduction-safe), no single-task
     corpus-sized sort at any scale."""
-    from columnflow_spark.functions.skew import salted_topk
 
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     queries_df = emb.filter(F.col("vec_id") < 10).select(
@@ -561,28 +235,12 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rk")
 
 
-# --- similarity search: LSH-bucketed ANN (the scale path).  The random
-# hyperplanes are a fixed driver-side constant (seeded), so the oracle
-# recomputes the exact same bucket ids from the same literal plane
-# weights — sign(dot) with identical sequential summation order on both
-# engines (IEEE-754 determinism; same pattern as dedup_embedding_cosine).
-
-
-def _lsh_buckets_oracle() -> str:
-    terms = []
-    for i, plane in enumerate(_lsh_planes()):
-        lits = ", ".join(repr(w) for w in plane)
-        dot = (
-            f"list_aggregate(list_transform(range(1, 65), "
-            f"j -> embedding[j] * ([{lits}])[j]), 'sum')"
-        )
-        terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
-    bucket = "\n         + ".join(terms)
-    return f"""
-    WITH bkt AS (
-        SELECT vec_id, embedding, CAST({bucket} AS BIGINT) AS bucket
-        FROM embeddings
-    ),
+# --- similarity search: LSH-bucketed ANN (the scale path): the same
+# hyperplane buckets as dedup_embedding_cosine_lsh, top-3 per vector. ---
+@query(
+    "ann_lsh_buckets",
+    oracle=f"""
+    WITH {_lsh_bkt_cte()},
     pairs AS (
         SELECT e1.bucket AS bucket, e1.vec_id AS v1, e2.vec_id AS v2,
                round(list_cosine_similarity(e1.embedding::DOUBLE[], e2.embedding::DOUBLE[]), 4) AS sim
@@ -594,172 +252,16 @@ def _lsh_buckets_oracle() -> str:
     )
     SELECT bucket, v1, v2, sim, CAST(rk AS INTEGER) AS rk
     FROM ranked WHERE rk <= 3 ORDER BY v1, rk
-    """
-
-
-@query("ann_lsh_buckets", oracle=_lsh_buckets_oracle())
+    """,
+)
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    bucketed = emb.withColumn("bucket", hyperplane_signs(F.col("embedding"), _lsh_planes()))
-    a = bucketed.select("bucket", F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"))
-    b = bucketed.select("bucket", F.col("vec_id").alias("v2"), F.col("embedding").alias("e2"))
-    # candidates co-bucketed only: local joins per bucket, no cross join
-    cand = a.join(b, ["bucket"]).filter(F.col("v1") < F.col("v2"))
+    cand = _lsh_candidates(spark, sf_dir)
     sims = cand.select("bucket", "v1", "v2", F.round(cosine(F.col("e1"), F.col("e2")), 4).alias("sim"))
     w = W.partitionBy("v1").orderBy(F.desc("sim"), F.asc("v2"))
     return (
         sims.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .orderBy("v1", "rk")
-    )
-
-
-# --- text quality scoring ---
-@query(
-    "text_quality",
-    oracle=f"""
-    WITH t AS (
-        SELECT doc_id, lang, n_chars,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id, lang, n_chars,
-               len(ts) AS n_tokens,
-               round(list_aggregate(list_transform(ts, x -> length(x)), 'sum') * 1.0 / len(ts), 4) AS avg_token_len,
-               round(len(list_filter(ts, x -> x IN {STOPWORDS!r})) * 1.0 / len(ts), 4) AS stop_ratio
-        FROM t
-    )
-    SELECT lang,
-           count(*) AS n_docs,
-           round(avg(n_tokens), 4) AS mean_tokens,
-           round(avg(avg_token_len), 4) AS mean_token_len,
-           round(avg(stop_ratio), 4) AS mean_stop_ratio,
-           count(*) FILTER (WHERE n_tokens >= 50 AND stop_ratio <= 0.3) AS n_high_quality
-    FROM m
-    GROUP BY lang
-    """,
-)
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "lang", "n_chars", "text"])
-    t = F.col("text")
-    m = docs.select(
-        "lang",
-        n_tokens(t).alias("nt"),
-        F.round(avg_token_len(t), 4).alias("atl"),
-        F.round(stopword_ratio(t), 4).alias("sr"),
-    )
-    return m.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("nt"), 4).alias("mean_tokens"),
-        F.round(F.avg("atl"), 4).alias("mean_token_len"),
-        F.round(F.avg("sr"), 4).alias("mean_stop_ratio"),
-        F.count_if((F.col("nt") >= 50) & (F.col("sr") <= 0.3)).alias("n_high_quality"),
-    )
-
-
-# --- language-ID heuristic (marker-word voting; deterministic) ---
-@query(
-    "lang_id_heuristic",
-    oracle="""
-    WITH scored AS (
-        SELECT lang,
-               len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''), x -> x IN ('the', 'a', 'of'))) AS en_score,
-               len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''), x -> x IN ('query', 'table'))) AS tech_score
-        FROM documents
-    )
-    SELECT lang,
-           CASE WHEN en_score > tech_score THEN 'en-like'
-                WHEN tech_score > 0 THEN 'tech'
-                ELSE 'unknown' END AS predicted,
-           count(*) AS n
-    FROM scored
-    GROUP BY 1, 2
-    """,
-)
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["lang", "text"])
-    toks = tokens(F.col("text"))
-    en_score = F.size(F.filter(toks, lambda x: x.isin("the", "a", "of")))
-    tech_score = F.size(F.filter(toks, lambda x: x.isin("query", "table")))
-    predicted = (
-        F.when(en_score > tech_score, F.lit("en-like"))
-        .when(tech_score > 0, F.lit("tech"))
-        .otherwise(F.lit("unknown"))
-    )
-    return docs.select("lang", predicted.alias("predicted")).groupBy("lang", "predicted").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-# --- token counting (whitespace + BPE-ish subword proxy) ---
-@query(
-    "token_counts",
-    oracle="""
-    WITH t AS (
-        SELECT source, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        FROM documents
-    )
-    SELECT source,
-           CAST(sum(len(ts)) AS BIGINT) AS whitespace_tokens,
-           CAST(sum(list_aggregate(list_transform(ts, x -> CAST(ceil(length(x) / 4.0) AS INT)), 'sum')) AS BIGINT) AS bpe_ish_tokens
-    FROM t
-    GROUP BY source
-    """,
-)
-def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["source", "text"])
-    t = F.col("text")
-    return docs.groupBy("source").agg(
-        F.sum(n_tokens(t)).alias("whitespace_tokens"),
-        F.sum(bpe_ish_token_count(t)).alias("bpe_ish_tokens"),
-    )
-
-
-# --- multimodal column plumbing: opaque binary payload + typed metadata,
-# decoded via an Arrow-batched mapInPandas operator.  The real decoder
-# (image/audio libs) is STUBBED with a deterministic fake — the Spark-side
-# schema, batching and partitioning are real and oracle-checked. ---
-@query(
-    "multimodal_decode_stub",
-    oracle="""
-    SELECT
-        doc_id,
-        octet_length(encode(text)) AS n_bytes,
-        64 + octet_length(encode(text)) % 577 AS width,
-        64 + (octet_length(encode(text)) * 7) % 577 AS height
-    FROM documents
-    WHERE doc_id < 50
-    """,
-)
-def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-
-    def decode_batches(batches):
-        for pdf in batches:
-            n_bytes = pdf["payload"].map(len)
-            try:
-                # real decoders (PIL/av/librosa) are not in this container;
-                # the deterministic fake below keeps the pipeline testable
-                raise NotImplementedError("image/audio decode stubbed in this environment")
-            except NotImplementedError:
-                width = 64 + n_bytes % 577
-                height = 64 + (n_bytes * 7) % 577
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "width": width.astype("int64"),
-                    "height": height.astype("int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        decode_batches, schema="doc_id long, n_bytes long, width long, height long"
     )
 
 
@@ -785,42 +287,6 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg(l2), 4).alias("mean_l2"),
         F.round(F.avg(comp_sum), 4).alias("mean_comp_sum"),
     )
-
-
-# --- positional rolling-hash document fingerprint (order-sensitive, unlike
-# the md5-of-normalized-text exact fingerprint in dedup_exact): each token
-# contributes hash(token) * weight(position), summed into one 64-bit value.
-# Pure built-in expressions -> WholeStageCodegen; one projection, no
-# shuffle at any corpus size. ---
-@query(
-    "doc_fingerprint",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        FROM documents
-    ),
-    ex AS (
-        SELECT doc_id, unnest(ts) AS t, generate_subscripts(ts, 1) AS i
-        FROM toks WHERE len(ts) > 0
-    )
-    SELECT doc_id,
-           CAST(sum((('0x' || substring(md5(t), 1, 12))::BIGINT % 2147483647)
-                    * ((i * 2654435761) % 1048573)) AS BIGINT) AS fp
-    FROM ex
-    GROUP BY doc_id
-    """,
-)
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    toks = tokens(F.col("text"))
-
-    def term(t, i):
-        hv = F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("long") % F.lit(2147483647)
-        w = ((i + F.lit(1)).cast("long") * F.lit(2654435761)) % F.lit(1048573)
-        return hv * w
-
-    fp = F.aggregate(F.transform(toks, term), F.lit(0).cast("long"), lambda a, x: a + x)
-    return docs.filter(F.size(toks) > 0).select("doc_id", fp.alias("fp"))
 
 
 # --- similarity search: IVF-style ANN (the 100 TB scale path).  Broadcast
@@ -1042,6 +508,33 @@ def _ivf_probes(
     )
 
 
+def _ivf_topk(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Cosine top-5 per probe query over the vectors of its 2 probed
+    cells of ``cents`` (``cid, ce, nb``).
+
+    Index build: nearest-centroid assignment fully map-side
+    (nearest_centroid_assign: bounded centroid set baked into an
+    Arrow-batched numpy-matmul UDF).  Zero per-centroid row fan-out and
+    zero groupBy(vec_id) shuffle: the assignment is a pure projection
+    over the scan, which is what survives a 100x corpus.  Tie-break
+    (higher csim, then lower cid) matches the oracle's window.  Query
+    side: the probes are tiny, so they broadcast."""
+    assign = nearest_centroid_assign(emb, cents.select("cid", "ce"))
+    probes = _ivf_probes(emb, cents)
+    cand = assign.join(F.broadcast(probes), "cid").filter(F.col("vec_id") != F.col("query_id"))
+    sims = cand.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine(F.col("q"), F.col("embedding")).alias("sim"),
+    )
+    wr = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        sims.withColumn("rk", F.row_number().over(wr))
+        .filter(F.col("rk") <= 5)
+        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rk")
+    )
+
+
 @query(
     "ann_ivf_topk",
     oracle="""
@@ -1090,794 +583,7 @@ def _ivf_probes(
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    cents = _ivf_cents(emb)
-    # index build: nearest-centroid assignment fully map-side
-    # (nearest_centroid_assign: bounded centroid set baked into an
-    # Arrow-batched numpy-matmul UDF).  Zero per-centroid row fan-out and
-    # zero groupBy(vec_id) shuffle: the assignment is a pure projection
-    # over the scan, which is what survives a 100x corpus.  Tie-break
-    # (higher csim, then lower cid) matches the oracle's window.
-    assign = nearest_centroid_assign(emb, cents.select("cid", "ce"))
-    # query side: probe the 2 closest cells; search only those (probes
-    # are tiny -> broadcast)
-    probes = _ivf_probes(emb, cents)
-    cand = assign.join(F.broadcast(probes), "cid").filter(F.col("vec_id") != F.col("query_id"))
-    sims = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine(F.col("q"), F.col("embedding")).alias("sim"),
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rk")
-    )
-
-
-# --- multimodal: video-style frame sampling over binary payloads (the
-# mmdata.media typed-column model; frame count from metadata, JVM-side
-# sequence+explode fan-out — payload bytes never ride through the
-# row multiplication) ---
-@query(
-    "multimodal_frame_sample",
-    oracle="""
-    WITH media AS (
-        SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-               1 + octet_length(encode(text)) % 120 AS n_frames
-        FROM documents WHERE doc_id < 100
-    )
-    SELECT doc_id, frame_idx,
-           CAST((n_bytes * 31 + frame_idx * 7919) % 1000003 AS BIGINT) AS frame_fp
-    FROM (
-        SELECT doc_id, n_bytes, unnest(range(0, n_frames, 30)) AS frame_idx
-        FROM media
-    )
-    """,
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.mmdata import build_media_table, sample_frames
-
-    docs = (
-        load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-        .filter(F.col("doc_id") < 100)
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-    media = build_media_table(docs, payload="payload", mime="video/fake")
-    return sample_frames(media, every_n=30)
-
-
-# --- near-dup connected components: pair list -> cluster representative.
-# The step after candidate generation in every production dedup pipeline:
-# near-dup pairs form a graph; each doc must map to one canonical keeper
-# (the min doc_id in its component).  The expensive, genuinely
-# distributed part is the PAIR GENERATION (shingle join over the corpus);
-# the component solve is hybrid on the pair count:
-# - below _CC_DRIVER_MAX_EDGES the edge list is collected and solved with
-#   union-find on the driver (microseconds; a near-dup graph is sparse —
-#   edges scale with duplicates, not corpus), then broadcast-joined back;
-# - above it, iterative min-label propagation over the edge set with a
-#   monotone-sum convergence check — one shuffle per round, lineage
-#   truncated per round with localCheckpoint.  Small-diameter near-dup
-#   clusters converge in 2-3 rounds; for adversarial long-chain graphs
-#   swap the loop body for alternating large-star/small-star (same join
-#   shapes, O(log n) rounds).
-# Oracle: recursive-CTE transitive closure + min per source. ---
-_CC_DRIVER_MAX_EDGES = 5_000_000  # ~80 MB of (long, long) — trivially driver-safe
-@query(
-    "dedup_connected_components",
-    oracle=f"""
-    WITH RECURSIVE {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    cand AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT d1, d2
-        FROM cand
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    ),
-    sym AS (
-        SELECT d1 AS s, d2 AS t FROM edges
-        UNION ALL
-        SELECT d2 AS s, d1 AS t FROM edges
-    ),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS node FROM documents
-        UNION
-        SELECT r.src, sym.t AS node FROM reach r JOIN sym ON sym.s = r.node
-    )
-    SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src
-    """,
-)
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    all_docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    return components_from_edges(all_docs, _jaccard_edges_cached(spark, sf_dir))
-
-
-#: ``jaccard_edges`` session artifact: checkpointed text near-dup edge
-#: list — FOUR
-#: queries consume the identical ``(d1, d2)`` Jaccard pair set
-#: (dedup_connected_components and, through it,
-#: dedup_canonical_per_cluster; leakage_safe_split; dedup_cluster_stats;
-#: multimodal_canonical_full's text arm), each previously recompiling
-#: the full prefix-filtered set-similarity join and paying its own
-#: checkpoint of the same rows (r13, guide §1.2 — the shared-shingle
-#: pattern one level up).  bench.py purges this on
-#: dedup_connected_components, the family's first bench line.
-@artifact("jaccard_edges")
-def _jaccard_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        dedup_ngram_jaccard(spark, sf_dir)
-        .select("d1", "d2")
-        .transform(checkpoint_df)
-    )
-
-
-def components_from_edges(all_docs: DataFrame, edges: DataFrame) -> DataFrame:
-    """Connected components ``(doc_id, component = min id reachable)``
-    over a CHECKPOINTED undirected pair list ``(d1, d2)``; ids absent
-    from the edge list come back as identity singletons.  Shared by
-    every near-dup family that ends in a cluster solve (n-gram Jaccard,
-    perceptual-hash): driver union-find below ``_CC_DRIVER_MAX_EDGES``
-    (the duplicate graph is sparse by construction), the distributed
-    min-label loop above it."""
-    import os
-
-    spark = all_docs.sparkSession
-    force_loop = os.environ.get("SPARK_GRAFT_CC_DISTRIBUTED") == "1"
-    if not force_loop and edges.count() <= _CC_DRIVER_MAX_EDGES:
-        # driver union-find on the sparse duplicate graph
-        parent: dict = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for r in edges.collect():
-            ra, rb = find(r.d1), find(r.d2)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp_rows = [(d, find(d)) for d in parent]
-        if not comp_rows:
-            return all_docs.select("doc_id", F.col("doc_id").alias("component"))
-        comp_map = local_frame(spark, comp_rows, "doc_id long, comp long")
-        return all_docs.join(F.broadcast(comp_map), "doc_id", "left").select(
-            "doc_id", F.coalesce(F.col("comp"), F.col("doc_id")).alias("component")
-        )
-    # one generator instead of the self-union: the union form evaluated
-    # the (possibly expensive, caller-lazy) edge subtree once per
-    # direction branch (r13, guide §1.2); identical row multiset
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("d1").alias("src"), F.col("d2").alias("dst")),
-                    F.struct(F.col("d2").alias("src"), F.col("d1").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .coalesce(8)
-        .transform(checkpoint_df)
-    )
-    # iterate ONLY over edge endpoints: isolated docs can never change
-    # label, so they join in as identity components at the end — the loop
-    # state is proportional to the duplicate graph, not the corpus
-    labels = (
-        sym.select("src").distinct()
-        .select(F.col("src").alias("doc_id"), F.col("src").alias("comp"))
-        .transform(checkpoint_df)
-    )
-    # convergence via the monotone label sum: comp only ever decreases, so
-    # an unchanged sum means a fixed point — one tiny aggregate per round,
-    # no join-based diff
-    prev_sum = labels.agg(F.sum("comp")).first()[0]
-    for _ in range(25):
-        nbr = (
-            sym.join(labels, sym.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_min"))
-        )
-        # lazy checkpoint: the convergence aggregate below is the single
-        # action that both materializes this round's labels and reads the
-        # label sum — one job per round, lineage still truncated
-        labels = (
-            labels.join(nbr, labels.doc_id == nbr.src, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))).alias("comp"),
-            )
-            .transform(checkpoint_df_lazy)
-        )
-        cur_sum = labels.agg(F.sum("comp")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    # no broadcast hint: labels is proportional to the duplicate GRAPH
-    # (unbounded at corpus scale) — AQE broadcasts it while small and
-    # falls back to a doc_id-keyed shuffle join when it isn't
-    return all_docs.join(labels, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("comp"), F.col("doc_id")).alias("component")
-    )
-
-
-# --- deterministic stratified sampling: content-hash Bernoulli per
-# stratum.  Training corpora are sampled by source with *reproducible*
-# membership — the keep decision derives from sha256(doc_id), never from
-# partitioning or RNG state, so the same docs are kept on 1 core or 1000
-# executors, on reruns, and after repartitions (F.rand cannot promise
-# any of that).  One narrow scan, zero shuffles for membership; the
-# per-source rate map rides a broadcast join. ---
-_SAMPLE_RATES = {"src0": 0.25, "src1": 0.5, "src2": 1.0, "src3": 0.75}
-_SAMPLE_DEFAULT_RATE = 0.1
-
-@query(
-    "stratified_sample",
-    oracle=f"""
-    WITH rates(source, rate) AS (
-        VALUES ('src0', 0.25), ('src1', 0.5), ('src2', 1.0), ('src3', 0.75)
-    ),
-    keep AS (
-        SELECT
-            d.doc_id,
-            d.source,
-            ('0x' || substr(sha256('sample|' || d.doc_id), 1, 15))::BIGINT
-                / 1152921504606846976.0 AS u,
-            coalesce(r.rate, {_SAMPLE_DEFAULT_RATE}) AS rate
-        FROM documents d
-        LEFT JOIN rates r ON r.source = d.source
-    )
-    SELECT doc_id, source FROM keep WHERE u < rate
-    """,
-)
-def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    rates = local_frame(spark, list(_SAMPLE_RATES.items()), "source string, rate double")
-    u = (
-        F.conv(F.substring(F.sha2(F.concat(F.lit("sample|"), F.col("doc_id").cast("string")), 256), 1, 15), 16, 10)
-        .cast("double") / F.lit(16.0 ** 15)
-    )
-    return (
-        docs.join(F.broadcast(rates), "source", "left")
-        .withColumn("rate", F.coalesce(F.col("rate"), F.lit(_SAMPLE_DEFAULT_RATE)))
-        .filter(u < F.col("rate"))
-        .select("doc_id", "source")
-    )
-
-
-# --- sequence packing (concat-and-chunk): the LLM-pretraining step that
-# concatenates the corpus in a canonical order and cuts fixed token-budget
-# chunks, mapping every doc to its chunk span.  The core is an EXACT
-# global prefix sum over doc order, computed distributed in two phases:
-# (1) per-coarse-group token subtotals (one narrow groupBy), (2) running
-# offsets over the tiny group table, broadcast-joined back, (3) in-group
-# running sums via a window PARTITIONED by group — no global
-# single-partition window anywhere, so the same plan runs on a 100 TB
-# corpus (recurse phase 2 if even the group table outgrows one node). ---
-_PACK_BUDGET = 256  # tokens per packed sequence
-_PACK_GROUP = 64    # docs per coarse prefix-sum group
-
-@query(
-    "pack_sequences",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tok
-        FROM documents
-    ),
-    c AS (
-        SELECT doc_id, n_tok,
-               sum(n_tok) OVER (ORDER BY doc_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        FROM toks WHERE n_tok > 0
-    )
-    SELECT
-        doc_id,
-        n_tok,
-        CAST((cum - n_tok) // {_PACK_BUDGET} AS BIGINT) AS chunk_start,
-        CAST((cum - 1) // {_PACK_BUDGET} AS BIGINT) AS chunk_end,
-        CAST((cum - 1) // {_PACK_BUDGET} - (cum - n_tok) // {_PACK_BUDGET} + 1 AS BIGINT) AS n_chunks
-    FROM c
-    """,
-)
-def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    toks = (
-        docs.select("doc_id", n_tokens(F.col("text")).alias("n_tok"))
-        .filter(F.col("n_tok") > 0)
-        .withColumn("grp", (F.col("doc_id") / _PACK_GROUP).cast("long"))
-    )
-    # phase 1: coarse subtotals (rows = n_docs / _PACK_GROUP)
-    partials = toks.groupBy("grp").agg(F.sum("n_tok").alias("grp_tok"))
-    # phase 2: running offset per group over the tiny partials table; its
-    # window is per-group-count sized, not corpus sized
-    w_off = W.orderBy("grp").rowsBetween(W.unboundedPreceding, -1)
-    offsets = partials.select(
-        "grp", F.coalesce(F.sum("grp_tok").over(w_off), F.lit(0)).alias("offset")
-    )
-    # phase 3: in-group running sum, partitioned window (scales out)
-    w_in = W.partitionBy("grp").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
-    cum = (
-        toks.join(F.broadcast(offsets), "grp")
-        .withColumn("cum", F.col("offset") + F.sum("n_tok").over(w_in))
-    )
-    start_chunk = F.floor((F.col("cum") - F.col("n_tok")) / _PACK_BUDGET)
-    end_chunk = F.floor((F.col("cum") - 1) / _PACK_BUDGET)
-    return cum.select(
-        "doc_id",
-        "n_tok",
-        start_chunk.alias("chunk_start"),
-        end_chunk.alias("chunk_end"),
-        (end_chunk - start_chunk + 1).alias("n_chunks"),
-    )
-
-
-# --- boundary-preserving sequence packing (VERDICT r6 next #7):
-# concat-and-chunk (pack_sequences above) splits documents across
-# training sequences; real pretraining pipelines avoid cross-doc splits
-# with a bin-packing form.  True first-fit-decreasing is inherently
-# sequential, so this is the DISTRIBUTED closed-form relative real
-# pipelines use: harmonic size-class packing.  Docs fall into class
-# k = BUDGET div n_tok (exactly the k docs of class k fit one bin:
-# n_tok <= BUDGET/k by construction), and within a class the p-th doc
-# (doc_id order) lands in bin p div k — a pure rank computation with NO
-# sequential bin state, replayable in SQL, and with a provable
-# utilization floor: every full class-k bin holds > k·B/(k+1) >= B/2
-# tokens.  No document is ever split; oversized docs (n_tok > BUDGET,
-# class 0) each get their own bin.  The rank uses the same two-phase
-# group-prefix-sum as pack_sequences, so no window ever sees more than a
-# bounded (class, group) slice — the shuffle is (class, group)-keyed. ---
-@query(
-    "pack_sequences_bestfit",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tok
-        FROM documents
-    ),
-    cls AS (
-        SELECT doc_id, n_tok,
-               CASE WHEN n_tok > {_PACK_BUDGET} THEN 0
-                    ELSE {_PACK_BUDGET} // n_tok END AS k
-        FROM toks WHERE n_tok > 0
-    ),
-    r AS (
-        SELECT doc_id, n_tok, k,
-               row_number() OVER (PARTITION BY k ORDER BY doc_id) - 1 AS p
-        FROM cls
-    )
-    SELECT doc_id, n_tok, CAST(k AS INT) AS size_class,
-           CAST(CASE WHEN k = 0 THEN -(p + 1)
-                     ELSE k * 1000000000 + p // k END AS BIGINT) AS bin_id
-    FROM r
-    """,
-)
-def pack_sequences_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    toks = (
-        docs.select("doc_id", n_tokens(F.col("text")).alias("n_tok"))
-        .filter(F.col("n_tok") > 0)
-        .withColumn(
-            "k",
-            F.when(F.col("n_tok") > _PACK_BUDGET, F.lit(0)).otherwise(
-                F.expr(f"{_PACK_BUDGET} div n_tok")
-            ).cast("long"),
-        )
-        .withColumn("grp", (F.col("doc_id") / _PACK_GROUP).cast("long"))
-    )
-    # two-phase within-class rank (the pack_sequences prefix-sum shape):
-    # per-(class, group) counts -> per-class running offsets over the
-    # tiny partials table -> in-group rank under a bounded window
-    partials = toks.groupBy("k", "grp").agg(F.count(F.lit(1)).alias("cnt"))
-    w_off = W.partitionBy("k").orderBy("grp").rowsBetween(W.unboundedPreceding, -1)
-    offsets = partials.select(
-        "k", "grp", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    )
-    w_in = W.partitionBy("k", "grp").orderBy("doc_id")
-    ranked = (
-        toks.join(F.broadcast(offsets), ["k", "grp"])
-        .withColumn("p", F.col("offset") + F.row_number().over(w_in) - 1)
-    )
-    bin_id = F.when(F.col("k") == 0, -(F.col("p") + 1)).otherwise(
-        F.col("k") * F.lit(1_000_000_000) + F.expr("p div k")
-    )
-    return ranked.select(
-        "doc_id",
-        "n_tok",
-        F.col("k").cast("int").alias("size_class"),
-        bin_id.cast("long").alias("bin_id"),
-    )
-
-
-# --- the consumable form of the packing: one row per BIN with its
-# ordered member list, fill and headroom — what a sequence-building data
-# loader actually reads.  Same assignment as pack_sequences_bestfit
-# (shared semantics proven by both oracles), rolled up by one bin-keyed
-# aggregation; members are emitted as a comma-joined ordered id string
-# (deterministic on both engines). ---
-@query(
-    "pack_bins_emit",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_tok
-        FROM documents
-    ),
-    cls AS (
-        SELECT doc_id, n_tok,
-               CASE WHEN n_tok > {_PACK_BUDGET} THEN 0
-                    ELSE {_PACK_BUDGET} // n_tok END AS k
-        FROM toks WHERE n_tok > 0
-    ),
-    r AS (
-        SELECT doc_id, n_tok, k,
-               row_number() OVER (PARTITION BY k ORDER BY doc_id) - 1 AS p
-        FROM cls
-    ),
-    b AS (
-        SELECT doc_id, n_tok, k,
-               CASE WHEN k = 0 THEN -(p + 1)
-                    ELSE k * 1000000000 + p // k END AS bin_id
-        FROM r
-    )
-    SELECT CAST(bin_id AS BIGINT) AS bin_id,
-           CAST(max(k) AS INT) AS size_class,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tok) AS BIGINT) AS fill,
-           CAST(greatest({_PACK_BUDGET} - sum(n_tok), 0) AS BIGINT) AS headroom,
-           string_agg(doc_id, ',' ORDER BY doc_id) AS doc_ids
-    FROM b GROUP BY bin_id
-    """,
-)
-def pack_bins_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    assign = pack_sequences_bestfit.__wrapped__(spark, sf_dir)
-    return assign.groupBy("bin_id").agg(
-        F.max("size_class").cast("int").alias("size_class"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tok").cast("long").alias("fill"),
-        F.greatest(F.lit(_PACK_BUDGET) - F.sum("n_tok"), F.lit(0))
-        .cast("long")
-        .alias("headroom"),
-        F.concat_ws(",", F.sort_array(F.collect_list("doc_id"))).alias("doc_ids"),
-    )
-
-
-# --- corpus curation pipeline: the composed end-to-end filter chain a
-# training corpus actually goes through — language gate, quality gate
-# (token count + stopword ratio), exact-dup canonicalization (keep the
-# min doc_id per normalized fingerprint), then per-source yield
-# accounting.  One scan feeds everything; dedup is one groupBy on the
-# 16-byte digest; all gates are codegen'd predicates, so the 100 TB cost
-# is scan + a single digest-keyed shuffle. ---
-@query(
-    "corpus_curation_pipeline",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id, source, text,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        FROM documents
-        WHERE lang IN ('en', 'de')
-    ),
-    gated AS (
-        SELECT doc_id, source, text, len(ts) AS n_tok
-        FROM base
-        WHERE len(ts) >= 20
-          AND len(list_filter(ts, x -> x IN ('the', 'a', 'of', 'and', 'is'))) * 1.0 / len(ts) <= 0.4
-    ),
-    canon AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY md5(regexp_replace(trim(lower(text)), ' +', ' ', 'g'))
-            ORDER BY doc_id
-        ) AS rn
-        FROM gated
-    )
-    SELECT source,
-           count(*) AS n_kept,
-           CAST(sum(n_tok) AS BIGINT) AS tokens_kept
-    FROM canon
-    WHERE rn = 1
-    GROUP BY source
-    """,
-)
-def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "lang", "text"]))
-    t = F.col("text")
-    toks = tokens(t)
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin("the", "a", "of", "and", "is")))
-    gated = (
-        docs.filter(F.col("lang").isin("en", "de"))
-        .withColumn("n_tok", F.size(toks))
-        .filter((F.col("n_tok") >= 20) & (stop_hits / F.col("n_tok") <= 0.4))
-    )
-    norm = F.regexp_replace(F.trim(F.lower(t)), " +", " ")
-    # keep-first-per-fingerprint as an AGGREGATION (min_by on doc_id),
-    # not a window sort: the keep decision partial-aggregates map-side,
-    # so the shuffle carries one candidate row per fingerprint per
-    # partition instead of every gated row through a sorted window
-    kept = (
-        gated.groupBy(F.md5(norm).alias("fp"))
-        .agg(F.min_by(F.struct("source", "n_tok"), F.col("doc_id")).alias("k"))
-        .select(F.col("k.source").alias("source"), F.col("k.n_tok").alias("n_tok"))
-    )
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_tok").alias("tokens_kept"),
-    )
-
-
-# --- within-doc repetition scoring (Gopher/C4-style quality signal):
-# the ratio of distinct tokens / distinct trigrams to their totals flags
-# boilerplate and looping generations.  Pure per-row expressions + one
-# partial-aggregated groupBy — no shuffle beyond the final per-source agg. ---
-@query(
-    "doc_repetition_score",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id, source,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id, source,
-               len(ts) AS n_tok,
-               round(len(list_distinct(ts)) * 1.0 / len(ts), 4) AS uniq_tok_ratio,
-               round(len(list_distinct(list_transform(range(1, len(ts) - 1),
-                           i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])))
-                     * 1.0 / (len(ts) - 2), 4) AS uniq_tri_ratio
-        FROM t WHERE len(ts) >= 3
-    )
-    SELECT source,
-           count(*) AS n_docs,
-           round(avg(uniq_tok_ratio), 4) AS mean_uniq_tok,
-           round(avg(uniq_tri_ratio), 4) AS mean_uniq_tri,
-           count(*) FILTER (WHERE uniq_tri_ratio < 0.7) AS n_repetitive
-    FROM m GROUP BY source
-    """,
-)
-def doc_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "text"])
-    toks = tokens(F.col("text"))
-    n_tok = F.size(toks)
-    uniq_tok = F.round(F.size(F.array_distinct(toks)) / n_tok, 4)
-    uniq_tri = F.round(F.size(word_shingles(F.col("text"), 3)) / (n_tok - 2), 4)
-    m = docs.filter(n_tok >= 3).select(
-        "source", uniq_tok.alias("uniq_tok_ratio"), uniq_tri.alias("uniq_tri_ratio")
-    )
-    return m.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("uniq_tok_ratio"), 4).alias("mean_uniq_tok"),
-        F.round(F.avg("uniq_tri_ratio"), 4).alias("mean_uniq_tri"),
-        F.sum(F.when(F.col("uniq_tri_ratio") < 0.7, 1).otherwise(0)).alias("n_repetitive"),
-    )
-
-
-# --- multi-rule quality gate: per-language violation counts for each
-# filter rule of a curation pipeline, all in ONE conditional aggregation
-# pass (the same shape as the reference's increment_stats weight_map,
-# reference columnflow/selection/stats.py:28 — counters via sum(when)). ---
-@query(
-    "quality_gate_rules",
-    oracle="""
-    WITH t AS (
-        SELECT lang, list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        FROM documents
-    ),
-    m AS (
-        SELECT lang,
-               len(ts) AS n_tok,
-               list_aggregate(list_transform(ts, x -> length(x)), 'sum') * 1.0 / len(ts) AS mean_len,
-               len(list_distinct(ts)) * 1.0 / len(ts) AS uniq_ratio
-        FROM t WHERE len(ts) > 0
-    )
-    SELECT lang,
-           count(*) AS n_docs,
-           count(*) FILTER (WHERE n_tok < 20 OR n_tok > 1000) AS n_fail_length,
-           count(*) FILTER (WHERE mean_len < 2 OR mean_len > 12) AS n_fail_wordlen,
-           count(*) FILTER (WHERE uniq_ratio < 0.3) AS n_fail_repetition,
-           count(*) FILTER (WHERE n_tok BETWEEN 20 AND 1000
-                              AND mean_len BETWEEN 2 AND 12
-                              AND uniq_ratio >= 0.3) AS n_keep
-    FROM m GROUP BY lang
-    """,
-)
-def quality_gate_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["lang", "text"])
-    toks = tokens(F.col("text"))
-    n_tok = F.size(toks)
-    mean_len = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)) / n_tok
-    uniq = F.size(F.array_distinct(toks)) / n_tok
-    m = docs.filter(n_tok > 0).select(
-        "lang", n_tok.alias("n_tok"), mean_len.alias("mean_len"), uniq.alias("uniq_ratio")
-    )
-    ok_len = F.col("n_tok").between(20, 1000)
-    ok_wl = F.col("mean_len").between(2, 12)
-    ok_rep = F.col("uniq_ratio") >= 0.3
-    cnt_if = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-    return m.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        cnt_if(~ok_len).alias("n_fail_length"),
-        cnt_if(~ok_wl).alias("n_fail_wordlen"),
-        cnt_if(~ok_rep).alias("n_fail_repetition"),
-        cnt_if(ok_len & ok_wl & ok_rep).alias("n_keep"),
-    )
-
-
-# --- corpus vocabulary statistics: trigram document frequency top-k.
-# The df table is the same aggregation hashed_grams builds for its
-# canonical order — exposed here over the string shingles so the ranking
-# is human-readable.  explode + count + total-order top-k. ---
-@query(
-    "vocab_df_topk",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams)
-    SELECT g AS gram, count(*) AS df
-    FROM ex GROUP BY g
-    ORDER BY df DESC, gram ASC
-    LIMIT 20
-    """,
-)
-def vocab_df_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    ex = (
-        docs.filter(F.size(tokens(F.col("text"))) >= 3)
-        .select(F.explode(word_shingles(F.col("text"), 3)).alias("gram"))
-    )
-    return (
-        ex.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .orderBy(F.desc("df"), F.asc("gram"))
-        .limit(20)
-    )
-
-
-# --- collocation mining: top adjacent-bigram collocations by exact
-# integer LIFT = P(w1 w2) / (P(w1) P(w2)).  Lift orders identically to
-# PMI (log is monotone) but needs no ln(), so the whole ranking is exact
-# integer arithmetic — no libm knife edge (the SCALE_VALIDATION.md #6
-# class).  Collocation/phrase mining is the vocabulary-induction step of
-# tokenizer pipelines (merge candidates for BPE/WordPiece seeding) and a
-# boilerplate-detection signal at corpus scale. ---
-_COLL_MINC = 5
-#: lift quantization: 1e6 grid via exact integer division in both engines
-_COLL_SCALE = 1_000_000
-
-
-@query(
-    "collocation_lift_topk",
-    oracle=f"""
-    WITH toks AS MATERIALIZED (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-        FROM documents
-    ),
-    n_tot AS (SELECT CAST(sum(len(ws)) AS BIGINT) AS n FROM toks),
-    uni AS MATERIALIZED (
-        SELECT w, CAST(count(*) AS BIGINT) AS c
-        FROM (SELECT unnest(ws) AS w FROM toks) GROUP BY w
-    ),
-    bi AS (
-        SELECT ws[i + 1] AS w1, ws[i + 2] AS w2, CAST(count(*) AS BIGINT) AS cxy
-        FROM toks, unnest(range(len(ws) - 1)) AS t(i)
-        GROUP BY 1, 2
-        HAVING count(*) >= {_COLL_MINC}
-    )
-    SELECT w1, w2, cxy,
-           CAST((cxy * n * {_COLL_SCALE}) // (u1.c * u2.c) AS BIGINT) AS lift_q
-    FROM bi
-    JOIN uni u1 ON u1.w = bi.w1
-    JOIN uni u2 ON u2.w = bi.w2
-    CROSS JOIN n_tot
-    ORDER BY lift_q DESC, w1, w2
-    LIMIT 20
-    """,
-)
-def collocation_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 adjacent-word collocations by exact integer lift
-    ``(c_xy * N * SCALE) div (c_x * c_y)``.
-
-    Plan shape: one token projection feeds (a) the corpus token count
-    (scalar agg), (b) unigram counts, (c) in-row adjacent-pair expansion
-    → bigram counts.  All three aggregations partial-aggregate map-side;
-    the bigram table is vocabulary²-bounded (tiny vs corpus) AFTER its
-    groupBy, so the two unigram joins and the scalar cross join ride
-    broadcast exchanges of vocabulary-sized relations — nothing
-    corpus-sized is ever broadcast.  Ranking is integer division on
-    BIGINTs (``div`` / ``//``), bit-identical across engines; magnitudes
-    stay < 2^63 up to ~sf100 with this vocabulary (c_xy·N·SCALE ≈ 1e18
-    worst case there — drop SCALE to 1e4 beyond that).  That bound is
-    ENFORCED, not just documented: DuckDB raises on BIGINT overflow while
-    Spark (ANSI off) wraps silently, so the numerator carries an in-plan
-    ``raise_error`` guard — past the bound both engines now fail loudly
-    instead of silently diverging.
-    """
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    toks = docs.select("doc_id", tokens(F.col("text")).alias("ws"))
-
-    n_tot = toks.agg(F.sum(F.size("ws")).cast("long").alias("n"))
-    uni = (
-        toks.select(F.explode("ws").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size("ws") - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("ws"), i).alias("w1"),
-            F.element_at(F.col("ws"), i + 1).alias("w2"),
-        ),
-    )
-    bi = (
-        toks.filter(F.size("ws") >= 2)
-        .select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cxy"))
-        .filter(F.col("cxy") >= _COLL_MINC)
-    )
-    u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
-    u2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
-    return (
-        bi.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(n_tot))
-        .select(
-            "w1",
-            "w2",
-            "cxy",
-            # overflow guard (matches DuckDB's raise-on-overflow): BOTH
-            # the numerator cxy*n*SCALE AND the denominator c1*c2 must
-            # fit BIGINT (two words with ~5e9 occurrences each would
-            # overflow the product, ADVICE r6); n*SCALE is checked first
-            # so the division deriving the cxy bound is itself safe
-            F.expr(
-                f"CASE WHEN n <= 9223372036854775807 div {_COLL_SCALE}"
-                f" AND cxy <= 9223372036854775807 div (n * {_COLL_SCALE})"
-                f" AND c1 <= 9223372036854775807 div c2"
-                f" THEN CAST((cxy * n * {_COLL_SCALE}) div (c1 * c2) AS BIGINT)"
-                f" ELSE CAST(raise_error('collocation_lift_topk: cxy*n*SCALE"
-                f" or c1*c2 overflows BIGINT — lower _COLL_SCALE for this"
-                f" corpus size') AS BIGINT) END"
-            ).alias("lift_q"),
-        )
-        .orderBy(F.desc("lift_q"), F.asc("w1"), F.asc("w2"))
-        .limit(20)
-    )
-
-
-# --- the shingle-index build pass, exposed as its own operator: every
-# production dedup pipeline materializes the (doc -> shingle set) index
-# once and amortizes it over candidate generation, verification, and
-# clustering (hashed_grams is that table here).  Benchmarked separately
-# so the one-time build cost is visible instead of hiding inside the
-# first dedup query that touches a scale factor. ---
-@query(
-    "dedup_shingle_index",
-    oracle=f"""
-    WITH {_GRAMS_CTE}
-    SELECT count(*) AS n_docs,
-           CAST(sum(len(gs)) AS BIGINT) AS total_shingles
-    FROM grams
-    """,
-)
-def dedup_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = hashed_grams(spark, sf_dir)
-    return g.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("sz").alias("total_shingles"),
-    )
+    return _ivf_topk(emb, _ivf_cents(emb))
 
 
 # --- distributed k-means (one Lloyd iteration): the index-build
@@ -1942,523 +648,6 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.join(n, "cid").select("cid", "n_assigned", "mean_norm")
 
 
-# --- weighted sampling without replacement (Efraimidis-Spirakis A-ES):
-# per stratum, rank docs by u^(1/w) with u a content-derived uniform —
-# the distributed-safe form of weighted reservoir sampling (the top-k by
-# key IS the weighted sample).  Deterministic like stratified_sample:
-# u comes from sha256(doc_id), so the sample is identical across
-# partitionings, reruns, and cluster sizes.  Top-k per stratum via the
-# salted two-phase window (functions/skew.py): ~5 sources would
-# otherwise serialize the whole corpus through 5 tasks. ---
-@query(
-    "weighted_sample_aes",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id, source, n_chars,
-               pow(
-                   ('0x' || substr(sha256('wsample|' || doc_id), 1, 15))::BIGINT
-                       / 1152921504606846976.0,
-                   1.0 / n_chars
-               ) AS k
-        FROM documents
-        WHERE n_chars > 0
-    )
-    SELECT source, doc_id, round(k, 4) AS key
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY source ORDER BY k DESC, doc_id) AS rn
-        FROM keyed
-    )
-    WHERE rn <= 10
-    ORDER BY source, key DESC, doc_id
-    """,
-)
-def weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.skew import salted_topk
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "n_chars"])
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("wsample|"), F.col("doc_id").cast("string")), 256), 1, 15
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(16.0 ** 15)
-    )
-    keyed = docs.filter(F.col("n_chars") > 0).withColumn(
-        "k", F.pow(u, 1.0 / F.col("n_chars"))
-    )
-    # per-source top-10 is a plain top-k: the salted two-phase window
-    # (VERDICT r9 weak #3) spreads each source over n_salt tasks in phase
-    # 1 and ranks only the <= n_salt*10 survivors per source — with ~5
-    # sources at 100 TB the unsalted window would funnel ~20 TB/task
-    top = salted_topk(
-        keyed,
-        keys=["source"],
-        order_cols=[F.desc("k"), F.asc("doc_id")],
-        k=10,
-        salt_src=F.col("doc_id"),
-    )
-    return (
-        top.select("source", "doc_id", F.round("k", 4).alias("key"))
-        .orderBy("source", F.desc("key"), "doc_id")
-    )
-
-
-# --- corpus mixture sampling: hit a target source mixture by taking a
-# quota per source, selecting members by deterministic hash rank (the
-# "data mixture" step of LLM corpus assembly).  Quotas are driver-side
-# arithmetic on the tiny per-source count table; membership is a salted
-# two-phase hash rank per source — reproducible under any partitioning,
-# and no task ever holds a whole source. ---
-_MIXTURE_QUOTA = {"src0": 40, "src1": 20, "src2": 10}
-
-
-@query(
-    "corpus_mixture_sample",
-    oracle=f"""
-    WITH quota(source, q) AS (
-        VALUES ('src0', 40), ('src1', 20), ('src2', 10)
-    ),
-    ranked AS (
-        SELECT d.doc_id, d.source, q.q,
-               row_number() OVER (
-                   PARTITION BY d.source
-                   ORDER BY ('0x' || substr(sha256('mix|' || d.doc_id), 1, 15))::BIGINT, d.doc_id
-               ) AS rn
-        FROM documents d JOIN quota q ON q.source = d.source
-    )
-    SELECT source, count(*) AS n_taken, CAST(sum(doc_id) AS BIGINT) AS id_checksum
-    FROM ranked WHERE rn <= q
-    GROUP BY source
-    """,
-)
-def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.skew import salted_topk
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    quota = local_frame(spark, list(_MIXTURE_QUOTA.items()), "source string, q int")
-    h = F.conv(
-        F.substring(F.sha2(F.concat(F.lit("mix|"), F.col("doc_id").cast("string")), 256), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    # per-source quota take is a top-k at k = max quota (the quotas are
-    # driver-side literals): the salted two-phase window keeps any one
-    # source from serializing into a single task; the per-source quota
-    # then trims the bounded survivors
-    top = salted_topk(
-        docs.join(F.broadcast(quota), "source"),
-        keys=["source"],
-        order_cols=[h.asc(), F.col("doc_id").asc()],
-        k=max(_MIXTURE_QUOTA.values()),
-        salt_src=F.col("doc_id"),
-    )
-    return (
-        top.filter(F.col("rk") <= F.col("q"))
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_taken"), F.sum("doc_id").alias("id_checksum"))
-    )
-
-
-# --- span-level dedup with reassembly (the paragraph-dedup shape of
-# Dolma/FineWeb pipelines, on fixed 20-word spans since the corpus has no
-# paragraph breaks): chunk in-row with HOFs (no shuffle), group spans
-# corpus-wide by digest keeping the first (doc_id, span_idx) occurrence,
-# and report per-document removal stats.  At 100 TB the span table is
-# (digest, key) — 24 bytes/span — and the groupBy partitioning is reused
-# by the join back (exchange reuse), so the whole op is ONE wide shuffle
-# of narrow rows; payload text never rides it twice. ---
-@query(
-    "dedup_span_chunks",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-    ),
-    chunks AS (
-        SELECT doc_id, i AS cidx,
-               array_to_string(ws[i*20+1 : i*20+20], ' ') AS chunk,
-               len(ws[i*20+1 : i*20+20]) AS n_words
-        FROM base, unnest(range(CAST(ceil(len(ws) / 20.0) AS BIGINT))) AS t(i)
-    ),
-    firsts AS (
-        SELECT md5(chunk) AS h, min(doc_id * 1000 + cidx) AS first_key
-        FROM chunks GROUP BY md5(chunk)
-    )
-    SELECT doc_id,
-           count(*) AS n_spans,
-           CAST(sum(CASE WHEN doc_id * 1000 + cidx = first_key THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-           CAST(sum(CASE WHEN doc_id * 1000 + cidx = first_key THEN n_words ELSE 0 END) AS BIGINT) AS kept_words
-    FROM chunks JOIN firsts ON md5(chunk) = h
-    GROUP BY doc_id
-    HAVING sum(CASE WHEN doc_id * 1000 + cidx = first_key THEN 0 ELSE 1 END) > 0
-    ORDER BY doc_id
-    """,
-)
-def dedup_span_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    ws = F.split(F.col("text"), " ")
-    docs = spread(docs, "doc_id").withColumn("ws", ws)
-    n_spans = F.ceil(F.size("ws") / F.lit(20.0)).cast("int")
-    span_list = F.transform(
-        F.sequence(F.lit(0), n_spans - 1),
-        lambda i: F.struct(
-            F.array_join(F.slice(F.col("ws"), i * 20 + 1, F.lit(20)), " ").alias("chunk"),
-            F.size(F.slice(F.col("ws"), i * 20 + 1, F.lit(20))).alias("n_words"),
-        ),
-    )
-    spans = (
-        docs.select("doc_id", F.posexplode(span_list).alias("cidx", "s"))
-        .select(
-            "doc_id",
-            "cidx",
-            F.md5(F.col("s.chunk")).alias("h"),
-            F.col("s.n_words").alias("n_words"),
-            (F.col("doc_id") * 1000 + F.col("cidx")).alias("key"),
-        )
-    )
-    firsts = spans.groupBy("h").agg(F.min("key").alias("first_key"))
-    kept = F.col("key") == F.col("first_key")
-    return (
-        spans.join(firsts, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(F.when(kept, 0).otherwise(1)).alias("n_removed"),
-            F.sum(F.when(kept, F.col("n_words")).otherwise(0)).alias("kept_words"),
-        )
-        .filter(F.col("n_removed") > 0)
-        .orderBy("doc_id")
-    )
-
-
-# --- exact substring dedup (Lee et al. 2022, "Deduplicating Training
-# Data Makes Language Models Better" — the ExactSubstr family): find
-# repeated substrings of >= k TOKENS at ARBITRARY offsets, not just the
-# aligned 20-word spans of dedup_span_chunks.  Suffix-array semantics,
-# Spark-first plan: every position's hashed k-gram is built IN-ROW
-# (transform over positions — the suffix-construction analog), then ONE
-# gram-keyed shuffle finds grams occurring more than once (plus each
-# gram's first corpus occurrence, for keep-first removal); only the
-# DUPLICATED positions flow onward, so downstream work is bounded by
-# duplicated-gram volume, never a corpus self-join.  Consecutive
-# duplicated positions p, p+1, ... within a doc merge into MAXIMAL runs
-# via the islands trick (rid = p - row_number) in a single per-doc
-# window pass that also computes the keep-first variant (running count
-# of non-first positions) — a run [s, e] of gram positions covers
-# e - s + k tokens, exactly the maximal repeated substring.  At 100 TB
-# the gram shuffle moves (16-byte digest, doc_id, pos) per token — the
-# same O(corpus tokens) a distributed suffix sort pays — and the window
-# is per-doc (bounded by doc length, the standard in-row assumption). ---
-_SSTR_K = 8
-#: position-key stride for the first-occurrence key doc_id*stride + p:
-#: supports docs up to 1M tokens and doc_ids up to ~9.2e12 in BIGINT —
-#: both comfortable bounds for pretraining corpora (a 1M-token doc is
-#: ~4 MB of text; pipelines chunk far below that)
-_SSTR_POS_STRIDE = 1_000_000
-
-
-def _sstr_words(k: int = _SSTR_K):
-    return F.filter(F.split("text", " "), lambda t: t != "")
-
-
-def _sstr_grams(docs: DataFrame, k: int = _SSTR_K) -> DataFrame:
-    """Positional hashed k-grams ``(doc_id, p, g, key)`` for a
-    ``(doc_id, text)`` frame — the shared suffix-construction analog of
-    every ExactSubstr surface (runs, rewrite, incremental store)."""
-    d = docs.select("doc_id", _sstr_words(k).alias("ws"))
-    npos = F.size("ws") - F.lit(k - 1)
-    poss = F.when(npos > 0, F.sequence(F.lit(0), npos - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    gh = F.transform(
-        poss, lambda p: F.md5(F.concat_ws(" ", F.slice("ws", p + 1, F.lit(k))))
-    )
-    return d.select("doc_id", F.posexplode(gh).alias("p", "g")).withColumn(
-        "key", F.col("doc_id") * _SSTR_POS_STRIDE + F.col("p")
-    )
-
-
-def _sstr_marked(docs: DataFrame, k: int = _SSTR_K) -> DataFrame:
-    """Shared ExactSubstr stage: duplicated gram positions with island
-    ids — ``(doc_id, p, nf, rid, rid_rm)`` where ``nf`` marks non-first
-    occurrences, ``rid`` the maximal-run island over ALL dup positions,
-    ``rid_rm`` the island over the non-first subset (NULL on firsts)."""
-    grams = _sstr_grams(docs, k)
-    gstats = (
-        grams.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("c"), F.min("key").alias("first_key"))
-        .filter(F.col("c") > 1)
-    )
-    dup = grams.join(gstats, "g").select(
-        "doc_id", "p", (F.col("key") != F.col("first_key")).alias("nf")
-    )
-    # ONE per-doc window pass serves both run families: rid merges
-    # consecutive dup positions (all of them); the running non-first
-    # count gives the same islands over the non-first SUBSET without a
-    # second sort (downstream groupBys are satisfied by the doc_id
-    # clustering — no further exchange)
-    win = W.partitionBy("doc_id").orderBy("p")
-    return (
-        dup.withColumn("rid", F.col("p") - F.row_number().over(win))
-        .withColumn("cnf", F.sum(F.when(F.col("nf"), 1).otherwise(0)).over(win))
-        .withColumn("rid_rm", F.when(F.col("nf"), F.col("p") - F.col("cnf")))
-    )
-
-
-def _interval_union_contrib(e_col, mn_col, prev_max_e):
-    """Per-interval contribution to the UNION length of coverage
-    intervals ``[mn, e]`` sorted by ``mn`` within a doc: clamp each
-    interval's start past the running max end of every PRECEDING
-    interval, so overlapping coverage is counted once.  ``prev_max_e``
-    is a preceding-rows-exclusive window max of ``e`` (NULL on the
-    first row — positions are >= 0, so -1 is a safe sentinel)."""
-    start = F.greatest(mn_col, F.coalesce(prev_max_e, F.lit(-1)) + F.lit(1))
-    return F.greatest(F.lit(0), e_col - start + F.lit(1))
-
-
-def substring_dup_runs_frame(docs: DataFrame, k: int = _SSTR_K) -> DataFrame:
-    """Per-document maximal duplicated-substring runs over ``docs``
-    (``doc_id``, ``text``): ``n_runs``, ``dup_tokens`` (UNION of tokens
-    covered by any >= k-token repeat), ``max_run_tokens`` (longest
-    single run's extent), and ``removed_tokens`` (UNION of tokens
-    covered by non-FIRST occurrences — EXACTLY what keep-first
-    ExactSubstr removal deletes, so per doc ``removed_tokens ==
-    n_tokens - n_tokens_kept`` of :func:`substring_rewrite_frame`; the
-    invariant is pinned in tests).  Both coverage columns are interval
-    UNIONS: a sub-run's coverage ``[mn, mx + k - 1]`` overlaps its
-    neighbor's whenever the position gap is < k (interleaved first /
-    non-first segments inside a run, or adjacent runs separated by < k
-    non-dup positions), and the r8 per-extent sums double-counted the
-    overlap — removed_tokens could exceed the document length (ADVICE
-    r9)."""
-    marked = _sstr_marked(docs, k)
-    # three-level rollup in ONE pass (a branched agg_all/agg_rm plan
-    # recomputes the gram join + window per branch — 2x the corpus
-    # shuffle): sub-islands (doc, rid, rid_rm) -> maximal runs
-    # (doc, rid) -> per-doc stats.  rid_rm is NULL exactly on
-    # first-occurrence positions, so the sub-island level keeps removed
-    # sub-runs separate while the null group rides along; consecutive nf
-    # positions are always inside one all-run, so (rid, rid_rm) segments
-    # equal the nf-only islands.  Every level (including the coverage
-    # window below) is satisfied by the marked window's doc_id
-    # clustering — zero additional exchanges, one added in-partition
-    # sort.  Sub-runs partition each run's positions contiguously, so
-    # the union over sub-run coverages equals the union over runs.
-    sub = marked.groupBy("doc_id", "rid", "rid_rm").agg(
-        F.min("p").alias("mn"), F.max("p").alias("mx")
-    )
-    wc = W.partitionBy("doc_id").orderBy("mn").rowsBetween(W.unboundedPreceding, -1)
-    e = F.col("mx") + F.lit(k - 1)
-    prev_all = F.max("mx").over(wc) + F.lit(k - 1)
-    prev_rm = F.max(F.when(F.col("rid_rm").isNotNull(), F.col("mx"))).over(wc) + F.lit(
-        k - 1
-    )
-    cov = sub.select(
-        "doc_id",
-        "rid",
-        "mn",
-        "mx",
-        _interval_union_contrib(e, F.col("mn"), prev_all).alias("c_all"),
-        F.when(
-            F.col("rid_rm").isNotNull(),
-            _interval_union_contrib(e, F.col("mn"), prev_rm),
-        )
-        .otherwise(F.lit(0))
-        .alias("c_rm"),
-    )
-    runs = cov.groupBy("doc_id", "rid").agg(
-        (F.max("mx") - F.min("mn") + k).cast("long").alias("run_tokens"),
-        F.sum("c_all").cast("long").alias("cov_tokens"),
-        F.sum("c_rm").cast("long").alias("rm_tokens"),
-    )
-    return (
-        runs.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_runs"),
-            F.sum("cov_tokens").alias("dup_tokens"),
-            F.max("run_tokens").alias("max_run_tokens"),
-            F.sum("rm_tokens").alias("removed_tokens"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-#: gram-construction oracle CTEs (no leading WITH) — the SQL twin of
-#: :func:`_sstr_grams`, shared by every ExactSubstr oracle incl. the
-#: incremental store's
-_SSTR_GRAM_CTES = f"""
-    toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        FROM documents
-    ),
-    grams AS (
-        SELECT doc_id, i AS p, doc_id * {_SSTR_POS_STRIDE} + i AS key,
-               md5(array_to_string(ws[i+1:i+{_SSTR_K}], ' ')) AS g
-        FROM toks, unnest(range(len(ws) - {_SSTR_K - 1})) AS t(i)
-    )"""
-
-#: shared ExactSubstr oracle CTE chain (no leading WITH): positional
-#: hashed k-grams -> duplicated positions -> island ids, the SQL twin
-#: of :func:`_sstr_marked`
-_SSTR_CTES = f"""{_SSTR_GRAM_CTES},
-    gstats AS MATERIALIZED (
-        SELECT g, min(key) AS first_key
-        FROM grams GROUP BY g HAVING count(*) > 1
-    ),
-    dup AS MATERIALIZED (
-        SELECT doc_id, p, (key <> first_key) AS nf
-        FROM grams JOIN gstats USING (g)
-    ),
-    runs AS (
-        SELECT doc_id, p, nf,
-               p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS rid,
-               p - sum(CASE WHEN nf THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY doc_id ORDER BY p) AS rid_rm
-        FROM dup
-    )"""
-
-
-@query(
-    "dedup_substring_runs",
-    oracle=f"""
-    WITH {_SSTR_CTES},
-    sub AS (
-        SELECT doc_id, rid, CASE WHEN nf THEN rid_rm END AS rm,
-               min(p) AS mn, max(p) AS mx
-        FROM runs GROUP BY doc_id, rid, CASE WHEN nf THEN rid_rm END
-    ),
-    -- interval-UNION coverage (the engine's clamped-contribution form):
-    -- each sub-run's coverage [mn, mx + k - 1] starts past the running
-    -- max end of every preceding interval, so overlaps count once
-    covw AS (
-        SELECT doc_id, rid, rm, mn, mx,
-               max(mx) OVER (PARTITION BY doc_id ORDER BY mn
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pa,
-               max(CASE WHEN rm IS NOT NULL THEN mx END)
-                   OVER (PARTITION BY doc_id ORDER BY mn
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        FROM sub
-    ),
-    contrib AS (
-        SELECT doc_id, rid, mn, mx,
-               greatest(0, (mx + {_SSTR_K - 1})
-                   - greatest(mn, coalesce(pa + {_SSTR_K - 1}, -1) + 1) + 1) AS c_all,
-               CASE WHEN rm IS NOT NULL THEN greatest(0, (mx + {_SSTR_K - 1})
-                   - greatest(mn, coalesce(pm + {_SSTR_K - 1}, -1) + 1) + 1)
-               ELSE 0 END AS c_rm
-        FROM covw
-    ),
-    r2 AS (
-        SELECT doc_id, rid, max(mx) - min(mn) + {_SSTR_K} AS run_tokens,
-               sum(c_all) AS cov_tokens, sum(c_rm) AS rm_tokens
-        FROM contrib GROUP BY doc_id, rid
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_runs,
-           CAST(sum(cov_tokens) AS BIGINT) AS dup_tokens,
-           CAST(max(run_tokens) AS BIGINT) AS max_run_tokens,
-           CAST(sum(rm_tokens) AS BIGINT) AS removed_tokens
-    FROM r2 GROUP BY doc_id
-    ORDER BY doc_id
-    """,
-)
-def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact substring dedup over ``documents``: maximal repeated
-    substrings of >= _SSTR_K tokens at arbitrary offsets, per-doc
-    coverage and keep-first removal stats (see the block comment)."""
-    docs = spread(
-        load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]), "doc_id"
-    )
-    return substring_dup_runs_frame(docs, _SSTR_K)
-
-
-def substring_rewrite_frame(docs: DataFrame, k: int = _SSTR_K) -> DataFrame:
-    """The ExactSubstr REWRITE (Lee et al.'s actual output): delete the
-    UNION of tokens covered by non-first maximal runs, keep everything
-    else in order, and emit the deduped text's token count + md5 for
-    every document.  The removal spans are a per-doc bounded artifact
-    (collect_list over the rm-run table — rows ∝ duplicated volume);
-    the cut itself is one in-row indexed filter, no token-grain
-    shuffle."""
-    marked = _sstr_marked(docs, k)
-    spans = (
-        marked.filter("nf")
-        .groupBy("doc_id", "rid_rm")
-        .agg(F.min("p").alias("s"), F.max("p").alias("e"))
-        .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("s", "e")).alias("rs"))
-    )
-    return _sstr_cut(docs, spans, k).orderBy("doc_id")
-
-
-def _sstr_cut(docs: DataFrame, spans: DataFrame, k: int = _SSTR_K) -> DataFrame:
-    """Apply removal spans to documents in-row: delete every token whose
-    position falls in the coverage ``[s, e + k - 1]`` of any of the
-    doc's spans ``rs``, emit ``(doc_id, n_tokens_kept, text_md5)``.
-    Shared by the batch rewrite and the incremental-store rewrite
-    (queries/dedupstore.py) — one indexed filter over the token array,
-    no token-grain shuffle."""
-    d = docs.select("doc_id", _sstr_words(k).alias("ws"))
-    covered = lambda i: F.exists(  # noqa: E731 - in-row span-membership test
-        "rs", lambda r: (i >= r["s"]) & (i <= r["e"] + F.lit(k - 1))
-    )
-    kept = F.filter(
-        F.transform("ws", lambda w, i: F.struct(w.alias("w"), i.alias("i"))),
-        lambda x: F.col("rs").isNull() | ~covered(x["i"]),
-    )
-    return d.join(spans, "doc_id", "left").select(
-        "doc_id",
-        F.size(F.transform(kept, lambda x: x["w"])).cast("long").alias("n_tokens_kept"),
-        F.md5(F.concat_ws(" ", F.transform(kept, lambda x: x["w"]))).alias("text_md5"),
-    )
-
-
-@query(
-    "dedup_substring_rewrite",
-    oracle=f"""
-    WITH {_SSTR_CTES},
-    rm AS MATERIALIZED (
-        SELECT doc_id, rid_rm, min(p) AS s, max(p) AS e
-        FROM runs WHERE nf GROUP BY doc_id, rid_rm
-    ),
-    tokpos AS (
-        SELECT doc_id, i - 1 AS i, w FROM (
-            SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS i
-            FROM toks
-        )
-    ),
-    cov AS (
-        SELECT DISTINCT t.doc_id, t.i
-        FROM tokpos t JOIN rm r
-          ON r.doc_id = t.doc_id AND t.i BETWEEN r.s AND r.e + {_SSTR_K - 1}
-    ),
-    kept AS (
-        SELECT t.doc_id, t.i, t.w
-        FROM tokpos t ANTI JOIN cov c ON c.doc_id = t.doc_id AND c.i = t.i
-    ),
-    agg AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n,
-               list(w ORDER BY i) AS lw
-        FROM kept GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(coalesce(a.n, 0) AS BIGINT) AS n_tokens_kept,
-           md5(coalesce(array_to_string(a.lw, ' '), '')) AS text_md5
-    FROM documents d LEFT JOIN agg a USING (doc_id)
-    ORDER BY d.doc_id
-    """,
-)
-def dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr removal applied: the deduped corpus (kept-token count
-    + content digest per doc), keep-first semantics at arbitrary
-    offsets."""
-    docs = spread(
-        load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]), "doc_id"
-    )
-    return substring_rewrite_frame(docs, _SSTR_K)
-
-
 # --- int8 embedding quantization (the storage/serving compression step):
 # per-vector symmetric scale = max|x| / 127, elementwise round(x/scale).
 # Everything is in-row HOF math over the (already double-cast) vector, so
@@ -2510,734 +699,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-
-
-# --- one distributed logistic-regression gradient step (the iterative
-# complement to ml_train_linreg's closed form): grad_j = sum_i
-# (sigmoid(w.x_i) - y_i) * x_ij at a fixed literal w.  The dot product is
-# an in-row HOF fold; the per-component sum posexplodes to (j, term) rows
-# so the gradient is ONE groupBy(j) partial+final agg — at 100 TB each
-# executor emits 64 partial sums, nothing else moves.  Iterating = the
-# driver feeding w back in; each step stays this same single-shuffle job. ---
-_LOGREG_W0 = 0.01  # shared initial weight for every component
-
-# K-step training loop shared by ml_logreg_fit and the classifier
-# filters (batch + streaming): each step is ONE distributed aggregation
-# whose 64-row result (the model, never data) is folded into the next
-# step's plan as literals; ml_logreg_grad_step is exactly the K=1 case
-# of the same kernel.  The oracle twin _logreg_fit_ctes replays the
-# identical rounds in materialized CTEs.
-_LOGREG_STEPS = 3
-_LOGREG_LR = 0.1
-
-
-def _logreg_feat(spark: SparkSession, sf_dir: str, with_id: bool = False) -> DataFrame:
-    cols = (["vec_id"] if with_id else []) + ["embedding", "label"]
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=cols))
-    keep = ["vec_id"] if with_id else []
-    return emb.select(
-        *keep,
-        F.transform("embedding", lambda v: v.cast("double")).alias("x"),
-        F.when(F.col("label") > 4, 1.0).otherwise(0.0).alias("y"),
-    )
-
-
-def _logreg_logit(w: list[float]):
-    """In-row logit against the weights as a 64-literal array —
-    ascending-j fold, the same order as the oracle's ``list_aggregate``."""
-    wl = F.array(*[F.lit(float(v)) for v in w])
-    return F.aggregate(
-        F.zip_with(wl, F.col("x"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _logreg_prob(w: list[float]):
-    """Predicted probability sigmoid(w.x) — the one place the model's
-    probability form lives, shared by training and calibration."""
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_logit(w)))
-
-
-def _logreg_grad(feat: DataFrame, w: list[float]) -> DataFrame:
-    """One gradient step as ONE groupBy(j) partial+final aggregation:
-    (sigmoid(w.x) - y) * x_j posexploded to (j, term) rows — at scale
-    each executor emits 64 partial sums, nothing else moves.  Measured
-    alternative (rejected): 64 parallel ``sum(x[j] * pm)`` aggregates
-    avoid the row fan-out but run ~1.6x SLOWER here — Catalyst collapses
-    the pm projection into every aggregate expression, so the sigmoid's
-    64-element fold is recomputed per component; the explode form
-    evaluates p once per row and the fan-out collapses map-side."""
-    p = _logreg_prob(w)
-    return (
-        feat.select(
-            F.posexplode(F.transform("x", lambda v: (p - F.col("y")) * v)).alias("j", "term")
-        )
-        .groupBy("j")
-        .agg(F.sum("term").alias("g"))
-    )
-
-
-@artifact("logreg_weights")
-def _logreg_train(spark: SparkSession, sf_dir: str) -> list[float]:
-    """K fixed gradient steps, the ``logreg_weights`` session artifact:
-    the weights are a deterministic artifact of the corpus and every
-    consumer would otherwise retrain the identical model (3 full passes
-    each)."""
-    feat = _logreg_feat(spark, sf_dir)
-    w = [_LOGREG_W0] * 64
-    for _ in range(_LOGREG_STEPS):
-        gmap = {r.j: r.g for r in _logreg_grad(feat, w).collect()}
-        w = [w[j] - _LOGREG_LR * gmap[j] for j in range(64)]
-    return w
-
-
-def _logreg_fit_ctes() -> str:
-    parts = [f"""
-    feat AS MATERIALIZED (
-        SELECT vec_id, label, list_transform(embedding, v -> v::DOUBLE) AS x,
-               CASE WHEN label > 4 THEN 1.0 ELSE 0.0 END AS y
-        FROM embeddings
-    ),
-    wl0 AS MATERIALIZED (
-        SELECT list_transform(range(64), j -> {_LOGREG_W0}) AS wl
-    )"""]
-    for k in range(1, _LOGREG_STEPS + 1):
-        parts.append(f""",
-    scored{k} AS MATERIALIZED (
-        SELECT vec_id, x, y,
-               1.0 / (1.0 + exp(-list_aggregate(
-                   list_transform(range(1, 65), j -> wl[j] * x[j]), 'sum'))) AS p
-        FROM feat, wl{k - 1}
-    ),
-    grad{k} AS MATERIALIZED (
-        SELECT j, sum((p - y) * x[j + 1]) AS g
-        FROM scored{k}, unnest(range(64)) AS t(j)
-        GROUP BY j
-    ),
-    wl{k} AS MATERIALIZED (
-        SELECT list(w ORDER BY j) AS wl FROM (
-            SELECT g.j, wl[g.j + 1] - {_LOGREG_LR} * g.g AS w
-            FROM grad{k} g, wl{k - 1}
-        )
-    )""")
-    return "".join(parts)
-
-
-@query(
-    "ml_logreg_grad_step",
-    oracle=f"""
-    WITH feat AS (
-        SELECT list_transform(embedding, v -> v::DOUBLE) AS x,
-               CASE WHEN label > 4 THEN 1.0 ELSE 0.0 END AS y
-        FROM embeddings
-    ),
-    scored AS (
-        SELECT x, y,
-               1.0 / (1.0 + exp(-list_aggregate(list_transform(x, v -> v * {_LOGREG_W0}), 'sum')))
-                   AS p
-        FROM feat
-    )
-    SELECT j, round(sum((p - y) * x[j + 1]), 4) AS grad
-    FROM scored, unnest(range(64)) AS t(j)
-    GROUP BY j
-    ORDER BY j
-    """,
-)
-def ml_logreg_grad_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the K=1 case of _logreg_train's shared kernel
-    grad = _logreg_grad(_logreg_feat(spark, sf_dir), [_LOGREG_W0] * 64)
-    return grad.select("j", F.round("g", 4).alias("grad")).orderBy("j")
-
-# --- regex content flags (the pattern-gate family of corpus filters):
-# JVM-side rlike with RE2-safe patterns, aggregated per source.  Patterns
-# stay in the (word-boundary, char-class, quantifier) subset where Java
-# and RE2 semantics agree, so the oracle is exact. ---
-@query(
-    "regex_content_flags",
-    oracle=r"""
-    SELECT source,
-           count(*) AS n_docs,
-           count(*) FILTER (WHERE regexp_matches(text, '\b[a-z]{6,}\b')) AS has_long_word,
-           count(*) FILTER (WHERE regexp_matches(text, '\b(data|table) (row|scan)\b')) AS has_bigram,
-           count(*) FILTER (WHERE regexp_matches(text, '^[a-z]'))        AS starts_lower
-    FROM documents
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def regex_content_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["source", "text"])
-    flag = lambda pat: F.sum(F.when(F.col("text").rlike(pat), 1).otherwise(0))
-    return (
-        docs.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            flag(r"\b[a-z]{6,}\b").alias("has_long_word"),
-            flag(r"\b(data|table) (row|scan)\b").alias("has_bigram"),
-            flag(r"^[a-z]").alias("starts_lower"),
-        )
-        .orderBy("source")
-    )
-
-# --- grouped-aggregate pandas UDAF (the UDAF class of SURVEY §2.10's
-# operator surface): interpolated median per group, Arrow-batched.  The
-# built-in F.median is the production path; this query exists to prove the
-# custom-UDAF seam with an exact oracle (numpy and DuckDB both use the
-# interpolated sample median).  Scale note: GROUPED_AGG pulls each
-# group's column into one executor's memory — bounded group sizes only
-# (here: per order-status slices of a bounded sample). ---
-@query(
-    "pandas_udaf_median",
-    oracle="""
-    SELECT o_orderstatus, round(median(o_totalprice), 4) AS med_price, count(*) AS n
-    FROM orders
-    GROUP BY o_orderstatus
-    ORDER BY o_orderstatus
-    """,
-)
-def pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def np_median(v: pd.Series) -> float:
-        return float(np.median(v.to_numpy()))
-
-    @pandas_udf("long")
-    def np_count(v: pd.Series) -> int:
-        # grouped-agg UDFs cannot mix with built-in aggregates in one agg,
-        # so the count rides the same Arrow batch
-        return int(len(v))
-
-    orders = load_table(spark, sf_dir, "orders", columns=["o_orderstatus", "o_totalprice"])
-    return (
-        orders.groupBy("o_orderstatus")
-        .agg(
-            F.round(np_median("o_totalprice"), 4).alias("med_price"),
-            np_count("o_totalprice").alias("n"),
-        )
-        .orderBy("o_orderstatus")
-    )
-
-
-# --- Python UDTF (table function — the third UDF class): explodes a
-# document into fixed 20-word spans via a lateral join.  The HOF path
-# (dedup_span_chunks) is the production form; the UDTF proves the
-# extension seam and its oracle is the same chunk CTE. ---
-@query(
-    "udtf_span_explode",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-    ),
-    chunks AS (
-        SELECT doc_id, i AS cidx,
-               len(ws[i*20+1 : i*20+20]) AS n_words
-        FROM base, unnest(range(CAST(ceil(len(ws) / 20.0) AS BIGINT))) AS t(i)
-    )
-    SELECT doc_id, count(*) AS n_spans, CAST(sum(n_words) AS BIGINT) AS total_words
-    FROM chunks GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def udtf_span_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import lit, udtf
-
-    @udtf(returnType="cidx int, n_words int")
-    class SpanSplit:
-        def eval(self, text: str, width: int):
-            words = text.split(" ")
-            for i in range(0, (len(words) + width - 1) // width):
-                yield i, len(words[i * width : (i + 1) * width])
-
-    spark.udtf.register("span_split", SpanSplit)
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    docs.createOrReplaceTempView("udtf_docs")
-    out = spark.sql(
-        """
-        SELECT doc_id, count(*) AS n_spans, sum(n_words) AS total_words
-        FROM udtf_docs, LATERAL span_split(text, 20)
-        GROUP BY doc_id ORDER BY doc_id
-        """
-    )
-    return out
-
-# --- eval-set decontamination: per eval doc (source 'src2' stands in for
-# the held-out benchmark), how many of its distinct trigram shingles occur
-# anywhere in the train split (every other source).  The train grams
-# explode to (hash) and aggregate to a distinct-gram set ONCE; the eval
-# side is the small one — at 100 TB the eval grams broadcast and the train
-# corpus streams past them a single time, never the reverse. ---
-@query(
-    "decontaminate_eval_overlap",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    eval_grams AS (
-        SELECT g.doc_id, ug AS gram
-        FROM grams g JOIN documents d USING (doc_id), unnest(g.gs) AS t(ug)
-        WHERE d.source = 'src2'
-    ),
-    train_grams AS (
-        SELECT DISTINCT ug AS gram
-        FROM grams g JOIN documents d USING (doc_id), unnest(g.gs) AS t(ug)
-        WHERE d.source <> 'src2'
-    )
-    SELECT doc_id,
-           count(*) AS n_grams,
-           CAST(sum(CASE WHEN t.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated
-    FROM eval_grams e LEFT JOIN train_grams t ON e.gram = t.gram
-    GROUP BY doc_id
-    HAVING sum(CASE WHEN t.gram IS NOT NULL THEN 1 ELSE 0 END) > 0
-    ORDER BY doc_id
-    """,
-)
-def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one shingle pass for the whole corpus: the session-shared
-    # hashed_grams table (8-byte shingle hashes; build cost benched as
-    # dedup_shingle_index; it carries the per-doc source tag, so no
-    # corpus-sized doc->source join is needed here).  The eval gram SET
-    # is the small side: train grams stream past its broadcast (semi
-    # join emits only collisions), so the wide data never shuffles and
-    # the distinct runs on the collision set alone.
-    grams = hashed_grams(spark, sf_dir)
-    eval_grams = (
-        grams.filter(F.col("source") == "src2").select("doc_id", F.explode("hs").alias("h"))
-    )
-    eval_gram_set = eval_grams.select("h").distinct()
-    contaminated = (
-        grams.filter(F.col("source") != "src2")
-        .select(F.explode("hs").alias("h"))
-        .join(F.broadcast(eval_gram_set), "h", "left_semi")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        eval_grams.join(F.broadcast(contaminated), "h", "left_outer")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.when(F.col("hit").isNotNull(), 1).otherwise(0)).alias("n_contaminated"),
-        )
-        .filter(F.col("n_contaminated") > 0)
-        .orderBy("doc_id")
-    )
-
-
-#: unigram-LM vocabulary cap: the word-frequency table grows without
-#: bound with the corpus (Heaps' law — ~100M+ entries at 100 TB), so the
-#: broadcast LM keeps only the top-K words by count (count desc, word asc
-#: tie-break; compiles to Spark's distributed TakeOrderedAndProject — a
-#: map-side partial top-K, never a global single-partition sort) and
-#: scores out-of-vocabulary words with the standard 0.5-count floor.
-#: K exceeds every test corpus's vocabulary, so results are unchanged at
-#: any test sf; the cap exists to bound the broadcast at production
-#: scale (the CCNet deployment uses a fixed trained LM the same way).
-_ULM_VOCAB_K = 1 << 18
-
-
-def _unigram_lm(words: DataFrame, k: int = 0) -> tuple[DataFrame, DataFrame]:
-    """``(vocab, total)`` of the capped unigram LM over exploded
-    ``(.., w)`` rows: vocab is the top-``k`` words with exact integer
-    counts, total is the one-row full-corpus token count."""
-    k = k or _ULM_VOCAB_K
-    vocab_all = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    total = vocab_all.agg(F.sum("c").cast("double").alias("n"))
-    vocab = vocab_all.orderBy(F.desc("c"), F.asc("w")).limit(k)
-    return vocab, total
-
-
-def _unigram_neg_logp():
-    """In-row ``-ln(p)`` with the OOV floor: joined count when in
-    vocabulary, half a count otherwise."""
-    return -F.log(F.coalesce(F.col("c").cast("double"), F.lit(0.5)) / F.col("n"))
-
-
-# --- unigram language-model scoring (the perplexity-proxy quality
-# filter): capped corpus word frequencies (one groupBy + distributed
-# top-K) broadcast back onto each doc's words; the per-doc score is the
-# mean negative log-probability with an OOV floor.  Both engines fold the
-# identical doubles in the same in-row order, so the oracle is exact
-# after round(4). ---
-@query(
-    "unigram_logprob_score",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id, w
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents), unnest(ws) AS t(w)
-        WHERE w <> ''
-    ),
-    vocab_all AS (
-        SELECT w, count(*) AS c FROM words GROUP BY w
-    ),
-    vocab AS (SELECT w, c FROM vocab_all ORDER BY c DESC, w LIMIT {_ULM_K}),
-    total AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM vocab_all)
-    SELECT doc_id,
-           count(*) AS n_tokens,
-           round(avg(-ln(coalesce(CAST(c AS DOUBLE), 0.5) / n)), 4) AS avg_neg_logp
-    FROM words LEFT JOIN vocab USING (w), total
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """.replace("{_ULM_K}", str(_ULM_VOCAB_K)),
-)
-def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    words = docs.select(
-        "doc_id", F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    )
-    vocab, total = _unigram_lm(words)
-    return (
-        words.join(F.broadcast(vocab), "w", "left")
-        .join(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg(_unigram_neg_logp()), 4).alias("avg_neg_logp"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- PII redaction (training-data hygiene: mask emails/IPs/phones before
-# training; the synthetic corpus carries none, so the query deterministically
-# injects doc_id-derived PII first, then redacts — both sides replicate the
-# injection, so the compare verifies the *redaction regexes*, which use only
-# RE2-and-Java-common syntax: character classes + bounded repetition, no
-# lookaround).  Pure codegen regexp_replace: one scan, no shuffle beyond the
-# final per-source rollup. ---
-_PII_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
-_PII_IP_RE = "([0-9]{1,3}[.]){3}[0-9]{1,3}"
-
-
-@query(
-    "pii_redact",
-    oracle=f"""
-    WITH seeded AS (
-        SELECT doc_id, source,
-               text || CASE WHEN doc_id % 7 = 0
-                   THEN ' contact u' || doc_id || '@example.com or 10.0.' || (doc_id % 256) || '.1'
-                   ELSE '' END AS t
-        FROM documents
-    ),
-    red AS (
-        SELECT doc_id, source, t,
-               regexp_replace(
-                   regexp_replace(t, '{_PII_EMAIL_RE}', '<EMAIL>', 'g'),
-                   '{_PII_IP_RE}', '<IP>', 'g') AS clean
-        FROM seeded
-    )
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(count(*) FILTER (WHERE t <> clean) AS BIGINT) AS n_pii_docs,
-           CAST(sum(length(t) - length(clean)) AS BIGINT) AS chars_removed
-    FROM red
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "text"])
-    seeded = docs.withColumn(
-        "t",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(
-                    F.lit(" contact u"), F.col("doc_id"), F.lit("@example.com or 10.0."),
-                    F.col("doc_id") % 256, F.lit(".1"),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    clean = F.regexp_replace(
-        F.regexp_replace(F.col("t"), _PII_EMAIL_RE, "<EMAIL>"), _PII_IP_RE, "<IP>"
-    )
-    return (
-        seeded.withColumn("clean", clean)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_if(F.col("t") != F.col("clean")).alias("n_pii_docs"),
-            F.sum(F.length("t") - F.length("clean")).alias("chars_removed"),
-        )
-        .orderBy("source")
-    )
-
-
-# --- overlapping document chunking (embedding/RAG prep: fixed-size word
-# windows with stride overlap; the downstream embedder consumes chunks, so
-# chunk identity must be deterministic).  sequence() generates the window
-# starts in-row, transform+slice builds each chunk, one explode — no UDF,
-# no shuffle until the rollup. ---
-_CHUNK_SIZE = 32
-_CHUNK_STRIDE = 24
-
-
-@query(
-    "doc_chunk_overlap",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ts
-        FROM documents
-    ),
-    starts AS (
-        SELECT doc_id, ts, unnest(range(0, len(ts), {_CHUNK_STRIDE})) AS i
-        FROM toks WHERE len(ts) > 0
-    ),
-    chunks AS (
-        SELECT doc_id,
-               CAST(i AS BIGINT) // {_CHUNK_STRIDE} AS chunk_idx,
-               len(ts[i + 1 : least(i + {_CHUNK_SIZE}, len(ts))]) AS n_words
-        FROM starts
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-           CAST(sum(n_words) AS BIGINT) AS total_chunk_words,
-           CAST(max(n_words) AS BIGINT) AS max_chunk_words
-    FROM chunks
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """,
-)
-def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    ts = F.filter(F.split("text", " "), lambda w: w != "")
-    starts = F.sequence(F.lit(0), F.greatest(F.size(ts) - 1, F.lit(0)), F.lit(_CHUNK_STRIDE))
-    chunks = (
-        docs.withColumn("ts", ts)
-        .filter(F.size("ts") > 0)
-        .select("doc_id", F.explode(starts).alias("start"), F.col("ts"))
-        .select(
-            "doc_id",
-            (F.col("start") / _CHUNK_STRIDE).cast("long").alias("chunk_idx"),
-            F.size(
-                F.slice(
-                    "ts", F.col("start") + 1,
-                    F.least(F.lit(_CHUNK_SIZE), F.size("ts") - F.col("start")),
-                )
-            ).alias("n_words"),
-        )
-    )
-    return (
-        chunks.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("n_words").alias("total_chunk_words"),
-            F.max("n_words").cast("long").alias("max_chunk_words"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- BPE merge-step pair counting (tokenizer training: count adjacent
-# symbol pairs across the corpus — one iteration of the BPE loop; at scale
-# this is THE shuffle-heavy step of tokenizer training and maps to
-# explode-pairs + count, with map-side partial aggregation doing the heavy
-# lifting).  Characters here, ranked top-20 with a total tie-break. ---
-@query(
-    "bpe_pair_counts",
-    oracle="""
-    WITH words AS (
-        SELECT unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS w
-        FROM documents
-    ),
-    pairs AS (
-        SELECT substring(w, CAST(i AS INT), 2) AS pair
-        FROM (SELECT w, unnest(range(1, length(w))) AS i FROM words WHERE length(w) >= 2)
-    )
-    SELECT pair, CAST(count(*) AS BIGINT) AS n
-    FROM pairs
-    GROUP BY pair
-    ORDER BY n DESC, pair
-    LIMIT 20
-    """,
-)
-def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["text"])
-    words = docs.select(
-        F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    ).filter(F.length("w") >= 2)
-    pairs = words.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("w") - 1),
-                lambda i: F.substring(F.col("w"), i, F.lit(2)),
-            )
-        ).alias("pair")
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(20)
-    )
-
-
-# --- TF-IDF top terms per document (retrieval/quality featurization: term
-# frequency x inverse document frequency; at corpus scale tf is a per-doc
-# in-row aggregation, df is one word-keyed shuffle reused from the vocab
-# pass, and idf joins back as a broadcast).  ln-based idf, deterministic
-# top-3 per doc with (score, term) tie-break. ---
-@query(
-    "tfidf_top_terms",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS w
-        FROM documents WHERE doc_id < 500
-    ),
-    all_words AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS w
-        FROM documents
-    ),
-    tf AS (SELECT doc_id, w, count(*) AS tf FROM words GROUP BY doc_id, w),
-    df AS (SELECT w, count(DISTINCT doc_id) AS df FROM all_words GROUP BY w),
-    n_docs AS (SELECT count(*) AS n FROM documents),
-    scored AS (
-        SELECT t.doc_id, t.w,
-               round(t.tf * ln(CAST(n.n AS DOUBLE) / d.df), 4) AS tfidf
-        FROM tf t JOIN df d USING (w) CROSS JOIN n_docs n
-    )
-    SELECT doc_id, w AS term, tfidf, CAST(rk AS INT) AS rk
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, w) AS rk
-        FROM scored
-    )
-    WHERE rk <= 3
-    ORDER BY doc_id, rk
-    """,
-)
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    words_all = docs.select(
-        "doc_id", F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    )
-    df_tab = words_all.groupBy("w").agg(F.count_distinct("doc_id").alias("df"))
-    n_docs = docs.count()
-    tf = (
-        words_all.filter(F.col("doc_id") < 500)
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    # broadcast the SMALL side: tf covers only the selected doc subset; the
-    # df table is vocabulary-sized (100M+ terms at corpus scale) and must
-    # never move — it streams past the broadcast tf rows
-    scored = df_tab.join(F.broadcast(tf), "w").select(
-        "doc_id",
-        F.col("w"),
-        F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 4).alias("tfidf"),
-    )
-    win = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("w"))
-    return (
-        scored.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", F.col("w").alias("term"), "tfidf", "rk")
-        .orderBy("doc_id", "rk")
-    )
-
-
-# --- duplicate-cluster resolution: per connected component keep the
-# canonical document (longest, doc_id tie-break) — the step that turns a
-# duplicate GRAPH into a keep/drop decision (SemDeDup-style cluster
-# resolution).  Reuses the component labels; the per-component argmax is
-# one max_by aggregation. ---
-@query(
-    "dedup_canonical_per_cluster",
-    oracle=f"""
-    WITH RECURSIVE {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    cand AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT d1, d2
-        FROM cand
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    ),
-    sym AS (
-        SELECT d1 AS s, d2 AS t FROM edges
-        UNION ALL
-        SELECT d2 AS s, d1 AS t FROM edges
-    ),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS node FROM documents
-        UNION
-        SELECT r.src, sym.t AS node FROM reach r JOIN sym ON sym.s = r.node
-    ),
-    comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src),
-    members AS (
-        SELECT c.component, c.doc_id, d.n_chars
-        FROM comp c JOIN documents d USING (doc_id)
-    )
-    SELECT component,
-           CAST(count(*) AS BIGINT) AS n_members,
-           max_by(doc_id, n_chars * 10000000000 - doc_id) AS canonical_doc,
-           CAST(max(n_chars) AS BIGINT) AS canonical_chars
-    FROM members
-    GROUP BY component
-    HAVING count(*) >= 2
-    ORDER BY component
-    """,
-)
-def dedup_canonical_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    comp = dedup_connected_components(spark, sf_dir)
-    chars = load_table(spark, sf_dir, "documents", columns=["doc_id", "n_chars"])
-    members = comp.join(chars, "doc_id")
-    return (
-        members.groupBy("component")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            # packed (n_chars, -doc_id) ordering: one exact BIGINT key,
-            # because the oracle engine's max_by has no composite keys
-            F.max_by("doc_id", F.col("n_chars") * F.lit(10000000000) - F.col("doc_id")).alias("canonical_doc"),
-            F.max("n_chars").alias("canonical_chars"),
-        )
-        .filter(F.col("n_members") >= 2)
-        .orderBy("component")
-    )
-
-
-# --- deterministic k-per-group sampling (eval/holdout set construction:
-# exactly k docs per source, reproducible on any cluster layout).  Rank by
-# a content-derived hash (never by partition order), keep rank <= k — via
-# the salted two-phase top-k (functions/skew.py), since a plain
-# source-partitioned window would put each whole source in one task. ---
-@query(
-    "sample_k_per_group",
-    oracle="""
-    WITH ranked AS (
-        SELECT source, doc_id, n_chars,
-               row_number() OVER (
-                   PARTITION BY source
-                   ORDER BY ('0x' || substring(sha256(concat_ws('|', CAST(doc_id AS VARCHAR), 'holdout')), 1, 15))::BIGINT,
-                            doc_id
-               ) AS rk
-        FROM documents
-    )
-    SELECT source, doc_id, CAST(n_chars AS BIGINT) AS n_chars, CAST(rk AS INT) AS rk
-    FROM ranked WHERE rk <= 10
-    ORDER BY source, rk
-    """,
-)
-def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.hashing import seed_long
-    from columnflow_spark.functions.skew import salted_topk
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "n_chars"])
-    # salted two-phase top-k (VERDICT r9 weak #4): phase 1 ranks per
-    # (source, salt) so no task ever sees a whole source; phase 2 ranks
-    # the bounded survivors — identical rows/ranks to the single window
-    top = salted_topk(
-        docs,
-        keys=["source"],
-        order_cols=[seed_long(F.col("doc_id"), F.lit("holdout")), F.asc("doc_id")],
-        k=10,
-        salt_src=F.col("doc_id"),
-    )
-    return top.select("source", "doc_id", "n_chars", "rk").orderBy("source", "rk")
 
 
 # --- product quantization: encode + asymmetric-distance search (the
@@ -3453,7 +914,6 @@ def pq_encode_udf(spark: SparkSession, sf_dir: str):
     and the materialized index build (queries/annindex.py), so the
     persisted codes are bit-identical to the in-session ones."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
     codes_arr, cmats = _pq_train_np(spark, sf_dir)
 
@@ -3476,7 +936,12 @@ def pq_encode_udf(spark: SparkSession, sf_dir: str):
 def _pq_exploded_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(vec_id, sub, code)``: the trained-codebook corpus codes exploded
     one row per subspace — the join-ready form of the PQ index."""
-    return ann_pq_codes.__wrapped__(spark, sf_dir).select(
+    return _explode_codes(ann_pq_codes.__wrapped__(spark, sf_dir))
+
+
+def _explode_codes(codes: DataFrame) -> DataFrame:
+    """``(vec_id, codes)`` -> ``(vec_id, sub, code)``, one row per subspace."""
+    return codes.select(
         "vec_id",
         F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
     )
@@ -3494,18 +959,64 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str, query_pred) -> DataFrame:
         .filter(query_pred)
         .select(F.col("vec_id").alias("query_id"), "sub", F.col("t").alias("qs"))
     )
+    return _adc_lut(qsubs, pq_trained_codebook(spark, sf_dir))
+
+
+def _adc_lut(qsubs: DataFrame, codebook: DataFrame) -> DataFrame:
+    """``(query_id, sub, code, d)``: query sub-vectors ``(query_id, sub,
+    qs)`` scored against every ``(sub, code, c)`` codebook entry, the
+    codebook broadcast.
+
+    LUT entries are QUANTIZED to integers (round 0) — the standard ADC
+    quantized-lookup-table trick, and the reason the downstream sum(d)
+    is exact in ANY summation order on any engine (the sf1 sweep caught
+    the unquantized 8-double sum diverging by 1 ulp between Spark's and
+    DuckDB's fold orders at a rounding knife edge)."""
     subd = F.aggregate(
         F.zip_with("qs", "c", lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    # LUT entries are QUANTIZED to integers (round 0) — the standard ADC
-    # quantized-lookup-table trick, and the reason the downstream
-    # sum(d) is exact in ANY summation order on any engine (the sf1
-    # sweep caught the unquantized 8-double sum diverging by 1 ulp
-    # between Spark's and DuckDB's fold orders at a rounding knife edge)
-    return qsubs.join(F.broadcast(pq_trained_codebook(spark, sf_dir)), "sub").select(
+    return qsubs.join(F.broadcast(codebook), "sub").select(
         "query_id", "sub", "code", F.round(subd, 0).alias("d")
+    )
+
+
+def _adc_topk(exploded: DataFrame, lut: DataFrame) -> DataFrame:
+    """ADC top-5 of every LUT query over the exploded corpus codes: each
+    candidate's ``sum_d`` is the sum of its m table entries, then
+    :func:`_adc_rank`.
+
+    Distances are computed on the integer grid (magnitude ~GRID² larger
+    than raw units) and divided back down before rounding, so the
+    compare tolerance stays absolute at raw scale — the m-term sum's
+    floating-point order is partial-aggregation-dependent."""
+    adc = (
+        exploded.join(F.broadcast(lut), ["sub", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("d").alias("sum_d"))
+    )
+    return _adc_rank(adc)
+
+
+def _adc_rank(adc: DataFrame) -> DataFrame:
+    """``(query_id, neighbor_id, sum_d)`` -> the top-5 per query as
+    ``(query_id, neighbor_id, adc_dist, rk)``, ranked by ``(adc_dist,
+    neighbor_id)``.
+
+    ``adc_dist`` is an integer-scaled distance with ONE division before
+    the round: sum_d is an exact integer-valued double, sum_d/100 is the
+    identical double on every engine, and .5 ties round half-up on both
+    — no BigDecimal-vs-float or compound-fp-op divergence at any sf (the
+    sf1 sweep caught round(x, 4) ties diverging)."""
+    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
+    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
+    return (
+        adc.withColumn("rk", F.row_number().over(win))
+        .filter(F.col("rk") <= 5)
+        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
+        .orderBy("query_id", "rk")
     )
 
 
@@ -3550,74 +1061,8 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver loop anywhere.  Distances live on the quantized grid (the
     space the codebook was trained in); ranking on the rounded distance
     keeps the argsort stable across engines."""
-    exploded = _pq_exploded_codes(spark, sf_dir)
-    lut = _pq_query_lut(spark, sf_dir, F.col("vec_id") < 50)
-    # distances are computed on the integer grid (magnitude ~GRID² larger
-    # than raw units); divide back down BEFORE the round-4 so the compare
-    # tolerance stays absolute-1e-4-at-raw-scale — the m-term sum's
-    # floating-point order is partial-aggregation-dependent, and at grid
-    # magnitude a 4-decimal round would demand ~1e-11 relative agreement
-    adc = (
-        exploded.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("sum_d"))
-    )
-    # integer-scaled distance: round(x*1e4) shares the fp multiply with
-    # the oracle, so there is no BigDecimal-vs-float knife edge at any sf
-    # (sf1 sweep caught round(x, 4) ties diverging)
-    # ONE division before the round: sum_d is an exact integer-valued
-    # double, sum_d/100 is the identical double on every engine, and
-    # .5 ties round half-up on both — no compound-fp-op divergence
-    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
-    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
-        .orderBy("query_id", "rk")
-    )
-
-
-# --- deterministic training-order sharding: the "global shuffle" step of
-# corpus assembly without a global sort.  Order derives from
-# sha256(doc_id): shard = key % n_shards (the training-file id), pos =
-# rank within shard — one shuffle on the shard key and a per-shard sort
-# of corpus/n_shards rows; no single-partition window anywhere.  The
-# order is a pure function of content, so it is identical on 1 core or
-# 1000 executors, across reruns and repartitions — the property a
-# reproducible training run needs from its data order. ---
-_SHUFFLE_SHARDS = 8
-
-
-@query(
-    "training_shuffle_shards",
-    oracle=f"""
-    WITH keyed AS (
-        SELECT doc_id,
-               ('0x' || substr(sha256('shuffle|' || doc_id), 1, 15))::BIGINT AS k
-        FROM documents
-    )
-    SELECT CAST(k % {_SHUFFLE_SHARDS} AS INT) AS shard, doc_id,
-           CAST(row_number() OVER (
-               PARTITION BY k % {_SHUFFLE_SHARDS} ORDER BY k, doc_id) AS BIGINT) AS pos
-    FROM keyed
-    ORDER BY shard, pos
-    """,
-)
-def training_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.hashing import seed_long
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    k = seed_long(F.lit("shuffle"), F.col("doc_id"))
-    keyed = docs.withColumn("k", k).withColumn(
-        "shard", F.pmod(F.col("k"), F.lit(_SHUFFLE_SHARDS)).cast("int")
-    )
-    w = W.partitionBy("shard").orderBy("k", "doc_id")
-    return (
-        keyed.withColumn("pos", F.row_number().over(w).cast("long"))
-        .select("shard", "doc_id", "pos")
-        .orderBy("shard", "pos")
+    return _adc_topk(
+        _pq_exploded_codes(spark, sf_dir), _pq_query_lut(spark, sf_dir, F.col("vec_id") < 50)
     )
 
 
@@ -3652,40 +1097,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sqrt(F.sum(F.col("mv") * F.col("mv"))), 4).alias("centroid_norm")
     )
     return c.join(n, "label").select("label", "n_vectors", "centroid_norm").orderBy("label")
-
-
-# --- temperature-scaled mixture weights: the multinomial sampling weights
-# of multi-source corpus mixing (p_s ∝ n_s^alpha; alpha < 1 upsamples
-# small sources — the standard multilingual/multi-domain trade).  Pure
-# arithmetic over the tiny per-source count table; the only window runs
-# over that table, never the corpus. ---
-_MIX_TEMP_ALPHA = 0.5
-_MIX_TEMP_BUDGET = 1000
-
-
-@query(
-    "source_temperature_weights",
-    oracle=f"""
-    WITH n AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-    t AS (SELECT source, n_docs, pow(n_docs, {_MIX_TEMP_ALPHA}) AS s FROM n)
-    SELECT source, n_docs,
-           round(s / sum(s) OVER (), 4) AS weight,
-           CAST(round(s / sum(s) OVER () * {_MIX_TEMP_BUDGET}) AS BIGINT) AS quota
-    FROM t ORDER BY source
-    """,
-)
-def source_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["source"])
-    n = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    t = n.withColumn("s", F.pow(F.col("n_docs"), F.lit(_MIX_TEMP_ALPHA)))
-    # global window over the per-source table only (a handful of rows)
-    tot = F.sum("s").over(W.partitionBy())
-    return t.select(
-        "source",
-        "n_docs",
-        F.round(F.col("s") / tot, 4).alias("weight"),
-        F.round(F.col("s") / tot * _MIX_TEMP_BUDGET, 0).cast("long").alias("quota"),
-    ).orderBy("source")
 
 
 # --- IVF + PQ composed (the production ANN layout: FAISS-style IVF-PQ).
@@ -3824,21 +1235,7 @@ def _ivfpq_adc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("ann_ivfpq_topk", oracle=IVFPQ_ORACLE)
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    adc = _ivfpq_adc_cached(spark, sf_dir)
-    # integer-scaled distance: round(x*1e4) shares the fp multiply with
-    # the oracle, so there is no BigDecimal-vs-float knife edge at any sf
-    # (sf1 sweep caught round(x, 4) ties diverging)
-    # ONE division before the round: sum_d is an exact integer-valued
-    # double, sum_d/100 is the identical double on every engine, and
-    # .5 ties round half-up on both — no compound-fp-op divergence
-    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
-    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _adc_rank(_ivfpq_adc_cached(spark, sf_dir))
 
 
 # --- IVF+PQ + exact refine (VERDICT r6 next #4): the standard production
@@ -3922,1553 +1319,6 @@ def ann_ivfpq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Bloom-filter dedup prefilter: the constant-memory membership
-# pre-check in front of exact dedup when a new batch lands against an
-# already-deduped corpus (the 100 TB pattern: the full corpus fingerprint
-# SET does not fit an executor, but m bits do).  Built entirely with
-# DataFrame ops: k hash positions per index fingerprint -> word/mask ->
-# one bit_or aggregation into a (m/64)-row bitmap that broadcasts;
-# probing is a broadcast join + bit tests, no shuffle of either side
-# beyond the tiny bitmap build.  Positions derive from the engine's
-# portable sha256 family, so the oracle rebuilds the identical bitmap
-# and the compare is exact (maybe_dup is deterministic — unlike opaque
-# native bloom implementations).  k=5, m=2^17 -> fp rate ~(1-e^(-kn/m))^k
-# ≈ 0.4% at n=2000 index docs. ---
-_BLOOM_M = 131072
-_BLOOM_K = 5
-
-
-@query(
-    "dedup_bloom_prefilter",
-    oracle=f"""
-    WITH fp AS (
-        SELECT doc_id, source,
-               md5(regexp_replace(trim(lower(text)), ' +', ' ', 'g')) AS f
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, source,
-               ('0x' || substr(sha256(f || '|' || j), 1, 15))::BIGINT % {_BLOOM_M} AS p
-        FROM fp CROSS JOIN (SELECT unnest(range({_BLOOM_K})) AS j) s
-    ),
-    bitmap AS (
-        -- 32-bit words: DuckDB's checked << overflows at bit 63
-        SELECT p // 32 AS word, bit_or(1::BIGINT << CAST(p % 32 AS INT)) AS bits
-        FROM pos WHERE source <> 'src0' GROUP BY 1
-    )
-    SELECT p.doc_id,
-           min(CASE WHEN b.bits IS NOT NULL
-                         AND ((b.bits >> CAST(p.p % 32 AS INT)) & 1) = 1
-                    THEN 1 ELSE 0 END) = 1 AS maybe_dup
-    FROM pos p LEFT JOIN bitmap b ON b.word = p.p // 32
-    WHERE p.source = 'src0'
-    GROUP BY 1 ORDER BY 1
-    """,
-)
-def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "text"])
-    f = fingerprint(F.col("text"))
-
-    def position(j: int):
-        h = F.conv(
-            F.substring(F.sha2(F.concat_ws("|", f, F.lit(str(j))), 256), 1, 15), 16, 10
-        ).cast("long")
-        return F.pmod(h, F.lit(_BLOOM_M))
-
-    pos = docs.select(
-        "doc_id", "source", F.explode(F.array(*[position(j) for j in range(_BLOOM_K)])).alias("p")
-    )
-    bitmap = (
-        pos.filter(F.col("source") != "src0")
-        .select((F.col("p") / 32).cast("long").alias("word"), (F.col("p") % 32).alias("bitpos"))
-        .select("word", F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bitpos AS INT))").alias("mask"))
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
-    probe = (
-        pos.filter(F.col("source") == "src0")
-        .select("doc_id", "p", (F.col("p") / 32).cast("long").alias("word"))
-        .join(F.broadcast(bitmap), "word", "left")
-        .select(
-            "doc_id",
-            F.when(
-                F.col("bits").isNotNull()
-                & (F.expr("(shiftright(bits, CAST(p % 32 AS INT)) & 1) = 1")),
-                1,
-            )
-            .otherwise(0)
-            .alias("present"),
-        )
-    )
-    return (
-        probe.groupBy("doc_id")
-        .agg((F.min("present") == 1).alias("maybe_dup"))
-        .orderBy("doc_id")
-    )
-
-
-# --- Count-Min sketch heavy hitters: sub-linear-memory frequency
-# estimation over an unbounded token stream (the companion primitive to
-# the Bloom prefilter: Bloom answers "seen before?", CMS answers "roughly
-# how often?").  d=4 hash rows x w=1024 counters build with ONE groupBy
-# over (row, counter) — the sketch is <= d*w rows regardless of corpus
-# size and broadcasts; estimates are min over the d addressed counters
-# (the classic overestimate-only bound, pinned by a property test).
-# Deterministic md5-family hashing makes the sketch — and therefore the
-# estimates and the heavy-hitter ranking — exactly reproducible in the
-# SQL oracle. ---
-_CMS_D = 4
-_CMS_W = 1024
-
-
-def cms_cell_idx(tok, j: int):
-    """Deterministic md5-family CMS bucket for hash row ``j`` — shared by
-    the batch builder, the streaming ingest, and (re-derived literally)
-    the SQL oracles."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", tok, F.lit(str(j)))), 1, 15), 16, 10
-    ).cast("long")
-    return F.pmod(h, F.lit(_CMS_W))
-
-
-def cms_cells(toks: DataFrame) -> DataFrame:
-    """``(j, idx, c)`` sketch cells for a ``tok`` column — ≤ d·w rows
-    regardless of input size; cells from disjoint inputs MERGE by adding
-    ``c`` (the commutative-monoid property the streaming ingest relies on)."""
-    return (
-        toks.select(
-            F.posexplode(
-                F.array(*[cms_cell_idx(F.col("tok"), j) for j in range(_CMS_D)])
-            ).alias("j", "idx")
-        )
-        .groupBy("j", "idx")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-#: shared by cms_heavy_hitters and streaming_cms_ingest: the sketch is a
-#: commutative monoid, so the stream-accumulated cells equal the batch
-#: cells and both at-rest results replay from this one SQL twin
-CMS_ORACLE = f"""
-    WITH toks AS (
-        SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-        FROM documents
-    ),
-    cells AS (
-        SELECT j, ('0x' || substr(md5(tok || '|' || j), 1, 15))::BIGINT % {_CMS_W} AS idx,
-               count(*) AS c
-        FROM toks CROSS JOIN (SELECT unnest(range({_CMS_D})) AS j) s
-        GROUP BY 1, 2
-    ),
-    vocab AS (SELECT DISTINCT tok FROM toks),
-    est AS (
-        SELECT v.tok, min(c.c) AS est
-        FROM vocab v
-        CROSS JOIN (SELECT unnest(range({_CMS_D})) AS j) s
-        JOIN cells c ON c.j = s.j
-                    AND c.idx = ('0x' || substr(md5(v.tok || '|' || s.j), 1, 15))::BIGINT % {_CMS_W}
-        GROUP BY 1
-    )
-    SELECT tok, CAST(est AS BIGINT) AS est_count, CAST(rk AS INT) AS rk
-    FROM (
-        SELECT tok, est, row_number() OVER (ORDER BY est DESC, tok) AS rk FROM est
-    )
-    WHERE rk <= 15
-    ORDER BY rk
-    """
-
-
-@query("cms_heavy_hitters", oracle=CMS_ORACLE)
-def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["text"]))
-    toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
-    return cms_topk_from_cells(toks, cms_cells(toks))
-
-
-def cms_topk_from_cells(toks: DataFrame, cells: DataFrame) -> DataFrame:
-    """Heavy-hitter estimates for a candidate ``tok`` column against a
-    (possibly stream-accumulated) sketch-cell table: min over the d
-    addressed counters, top-15 ranked."""
-    vocab = toks.distinct()
-    vcells = vocab.select(
-        "tok",
-        F.posexplode(
-            F.array(*[cms_cell_idx(F.col("tok"), j) for j in range(_CMS_D)])
-        ).alias("j", "idx"),
-    )
-    est = (
-        vcells.join(F.broadcast(cells), ["j", "idx"])
-        .groupBy("tok")
-        .agg(F.min("c").alias("est"))
-    )
-    # distributed top-k first (TakeOrderedAndProject — per-partition heads
-    # merged on the driver, never a vocab-wide single-partition sort);
-    # the rank window then runs over 15 rows
-    top = est.orderBy(F.desc("est"), F.asc("tok")).limit(15)
-    w = W.orderBy(F.desc("est"), F.asc("tok"))
-    return (
-        top.withColumn("rk", F.row_number().over(w))
-        .select("tok", F.col("est").cast("long").alias("est_count"), "rk")
-        .orderBy("rk")
-    )
-
-
-# --- DSIR-style data selection (public method: Xie et al. 2023,
-# "Data Selection for Language Models via Importance Resampling"): score
-# every raw doc by the log-likelihood ratio of two hashed-unigram LMs
-# (target distribution = the 'en' slice here, raw = the whole corpus),
-# then resample with Gumbel top-k so selection probability follows the
-# importance weight — all deterministic.  Distributed shape: one token
-# explode + two tiny bucket-count tables (B=1024 rows) broadcast back;
-# the corpus is scanned once and never shuffled beyond the per-doc sum.
-# Hash bucketing uses the same sha256->long primitive as
-# functions/hashing.py (exact integers in both engines). ---
-_DSIR_B = 1024
-_DSIR_BUCKET_SQL = "(('0x' || substr(sha256(w), 1, 15))::BIGINT % {b})".format(b=_DSIR_B)
-
-
-def _dsir_logw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.hashing import seed_long
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "lang", "text"])
-    words = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"),
-    ).withColumn("b", seed_long(F.col("w")) % _DSIR_B)
-    # the token stream is re-derived for the scoring join rather than
-    # checkpointed: at corpus scale two column-pruned parquet scans are
-    # cheaper than materializing an exploded token table to local disk
-    # ONE stats pass builds both LMs: per-bucket raw + target counts
-    # (<= B=1024 rows, a bounded side table like a PQ codebook), collected
-    # so the log-ratio lookup broadcasts without re-triggering the scan
-    buckets = (
-        words.groupBy("b")
-        .agg(
-            F.count(F.lit(1)).alias("c_raw"),
-            F.count_if(F.col("lang") == "en").alias("c_tgt"),
-        )
-        .collect()
-    )
-    n_raw = sum(r.c_raw for r in buckets)
-    n_tgt = sum(r.c_tgt for r in buckets)
-    import math
-
-    lam = local_frame(
-        spark,
-        [
-            (
-                r.b,
-                math.log((r.c_tgt + 1.0) / (n_tgt + _DSIR_B))
-                - math.log((r.c_raw + 1.0) / (n_raw + _DSIR_B)),
-            )
-            for r in buckets
-        ],
-        "b long, logratio double",
-    )
-    return (
-        words.join(F.broadcast(lam), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum("logratio").alias("logw"),
-        )
-    )
-
-
-_DSIR_LOGW_SQL = f"""
-    words AS (
-        SELECT doc_id, lang, {_DSIR_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
-             unnest(ws) AS t(w)
-        WHERE w <> ''
-    ),
-    raw AS (SELECT b, count(*) AS c_raw FROM words GROUP BY b),
-    tgt AS (SELECT b, count(*) AS c_tgt FROM words WHERE lang = 'en' GROUP BY b),
-    tot AS (
-        SELECT (SELECT count(*) FROM words) AS n_raw,
-               (SELECT count(*) FROM words WHERE lang = 'en') AS n_tgt
-    ),
-    lam AS (
-        SELECT raw.b,
-               ln((coalesce(tgt.c_tgt, 0) + 1.0) / (tot.n_tgt + {_DSIR_B}))
-             - ln((raw.c_raw + 1.0) / (tot.n_raw + {_DSIR_B})) AS logratio
-        FROM raw LEFT JOIN tgt ON raw.b = tgt.b, tot
-    ),
-    scored AS (
-        SELECT doc_id, count(*) AS n_tokens, sum(logratio) AS logw
-        FROM words JOIN lam USING (b)
-        GROUP BY doc_id
-    )
-"""
-
-
-@query(
-    "dsir_importance_weights",
-    oracle=f"""
-    WITH {_DSIR_LOGW_SQL}
-    SELECT doc_id, n_tokens, round(logw, 4) AS logw
-    FROM scored
-    ORDER BY doc_id
-    """,
-)
-def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _dsir_logw(spark, sf_dir)
-        .select("doc_id", "n_tokens", F.round("logw", 4).alias("logw"))
-        .orderBy("doc_id")
-    )
-
-
-_DSIR_K = 50
-
-
-@query(
-    "dsir_resample",
-    oracle=f"""
-    WITH {_DSIR_LOGW_SQL},
-    keyed AS (
-        SELECT doc_id, logw,
-               logw - ln(-ln(
-                   (('0x' || substr(sha256('g|' || doc_id), 1, 13))::BIGINT + 1.0)
-                   / (power(16.0, 13) + 2.0)
-               )) AS gkey
-        FROM scored
-    )
-    SELECT doc_id, round(gkey, 4) AS gkey
-    FROM keyed
-    ORDER BY gkey DESC, doc_id
-    LIMIT {_DSIR_K}
-    """,
-)
-def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gumbel top-k importance resampling: adding a deterministic
-    per-doc Gumbel(0,1) draw to the log-weight and taking the global
-    top-k samples k docs without replacement with probability
-    proportional to exp(logw) — the streaming-friendly form of weighted
-    sampling (same content-derived-key pattern as weighted_sample_aes).
-    Distributed top-k via orderBy+limit (TakeOrderedAndProject: partial
-    per-partition heads, no global sort)."""
-    scored = _dsir_logw(spark, sf_dir)
-    u = (
-        F.conv(F.substring(F.sha2(F.concat(F.lit("g|"), F.col("doc_id").cast("string")), 256), 1, 13), 16, 10)
-        .cast("double")
-        + 1.0
-    ) / (16.0 ** 13 + 2.0)
-    keyed = scored.select(
-        "doc_id", (F.col("logw") - F.log(-F.log(u))).alias("gkey")
-    )
-    return (
-        keyed.orderBy(F.desc("gkey"), F.asc("doc_id"))
-        .limit(_DSIR_K)
-        .select("doc_id", F.round("gkey", 4).alias("gkey"))
-    )
-
-
-# --- text normalization (training-data hygiene: casefold, strip
-# punctuation, collapse whitespace — the standard pre-dedup canonical
-# form).  The synthetic corpus is already clean, so the query injects
-# deterministic messiness first (uppercase flips, punctuation, ragged
-# spacing derived from doc_id) and then normalizes it back; the compare
-# verifies the normalization pipeline itself.  Pure codegen string ops:
-# one scan, no shuffle beyond the per-source rollup. ---
-@query(
-    "text_normalize",
-    oracle="""
-    WITH messy AS (
-        SELECT doc_id, source,
-               CASE WHEN doc_id % 3 = 0 THEN upper(text)
-                    WHEN doc_id % 3 = 1 THEN replace(text, ' ', '   ')
-                    ELSE text END
-               || CASE WHEN doc_id % 5 = 0 THEN '!!  Read,  MORE... ' ELSE '' END
-               AS t
-        FROM documents
-    ),
-    norm AS (
-        SELECT doc_id, source, t,
-               trim(regexp_replace(
-                   regexp_replace(lower(t), '[^a-z0-9 ]', '', 'g'),
-                   ' +', ' ', 'g')) AS clean
-        FROM messy
-    )
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(count(*) FILTER (WHERE t <> clean) AS BIGINT) AS n_changed,
-           CAST(sum(length(t) - length(clean)) AS BIGINT) AS chars_removed,
-           min(md5(clean)) AS sample_fingerprint
-    FROM norm
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "text"])
-    messy = docs.withColumn(
-        "t",
-        F.concat(
-            F.when(F.col("doc_id") % 3 == 0, F.upper("text"))
-            .when(F.col("doc_id") % 3 == 1, F.replace(F.col("text"), F.lit(" "), F.lit("   ")))
-            .otherwise(F.col("text")),
-            F.when(F.col("doc_id") % 5 == 0, F.lit("!!  Read,  MORE... ")).otherwise(F.lit("")),
-        ),
-    )
-    norm = messy.withColumn(
-        "clean",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower("t"), "[^a-z0-9 ]", ""), " +", " "
-            )
-        ),
-    )
-    return (
-        norm.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_if(F.col("t") != F.col("clean")).alias("n_changed"),
-            F.sum(F.length("t") - F.length("clean")).alias("chars_removed"),
-            F.min(F.md5("clean")).alias("sample_fingerprint"),
-        )
-        .orderBy("source")
-    )
-
-
-# --- per-source corpus statistics (dataset-card style rollup: doc and
-# token counts plus exact length quantiles per (source, lang) slice).
-# One groupBy; quantiles are exact percentile_cont with linear
-# interpolation on both engines (integer inputs -> interpolation is a
-# single division, identical IEEE on both sides). ---
-@query(
-    "corpus_stats_by_source",
-    oracle="""
-    SELECT source, lang,
-           count(*) AS n_docs,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-           round(quantile_cont(n_chars, 0.5), 4) AS p50_chars,
-           round(quantile_cont(n_chars, 0.9), 4) AS p90_chars
-    FROM documents
-    GROUP BY source, lang
-    ORDER BY source, lang
-    """,
-)
-def corpus_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "lang", "text", "n_chars"])
-    return (
-        docs.groupBy("source", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
-            F.round(F.percentile("n_chars", F.lit(0.5)), 4).alias("p50_chars"),
-            F.round(F.percentile("n_chars", F.lit(0.9)), 4).alias("p90_chars"),
-        )
-        .orderBy("source", "lang")
-    )
-
-
-# --- multimodal: aspect-preserving thumbnail resize over binary payloads
-# (mmdata.media.resize_image; real PIL path gated, deterministic fallback
-# active here).  Output dims use integer-rational scaling so both engines
-# agree exactly; the payload checksum proves the bytes themselves round-trip
-# through the Arrow batch.  DuckDB `//` is integer division like the
-# fallback's numpy `//`. ---
-@query(
-    "multimodal_resize",
-    oracle="""
-    WITH media AS (
-        SELECT doc_id, text,
-               octet_length(encode(text)) AS n_bytes,
-               64 + octet_length(encode(text)) % 577 AS w,
-               64 + (octet_length(encode(text)) * 7) % 577 AS h
-        FROM documents WHERE doc_id < 100
-    ),
-    sized AS (
-        SELECT doc_id, text, n_bytes, w, h,
-               CASE WHEN w <= 224 AND h <= 224 THEN w
-                    WHEN w * 224 >= h * 224 THEN 224
-                    ELSE (w * 224) // h END AS out_w,
-               CASE WHEN w <= 224 AND h <= 224 THEN h
-                    WHEN w * 224 >= h * 224 THEN (h * 224) // w
-                    ELSE 224 END AS out_h
-        FROM media
-    )
-    SELECT doc_id, out_w AS width, out_h AS height,
-           (n_bytes * (out_w * out_h)) // (w * h) AS out_bytes,
-           md5(substr(text, 1, CAST((n_bytes * (out_w * out_h)) // (w * h) AS INT)))
-               AS payload_md5
-    FROM sized
-    ORDER BY doc_id
-    """,
-)
-def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.mmdata import build_media_table, resize_image
-
-    docs = (
-        load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-        .filter(F.col("doc_id") < 100)
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-    media = build_media_table(docs, payload="payload", mime="image/png")
-    out = resize_image(media)
-    return out.select(
-        "doc_id",
-        "width",
-        "height",
-        F.length("payload").cast("bigint").alias("out_bytes"),
-        F.md5("payload").alias("payload_md5"),
-    ).orderBy("doc_id")
-
-
-# --- multimodal perceptual-hash near-dup (VERDICT r6 next #6): the
-# standard image-dedup step in multimodal corpus builds.  Each payload is
-# fingerprinted by the Arrow-batched dHash kernel (mmdata.media.
-# phash_image: real PIL path gated, deterministic codepoint-grid fallback
-# active here — the fallback is itself integer-exact, so DuckDB replays
-# the fingerprint bit-for-bit), then pairs are generated by the SimHash
-# block-bucket pattern: 6 blocks of 10 bits — by pigeonhole any pair
-# within Hamming distance 5 shares at least one block — with the EXACT
-# chunk-capped self-join (chunked_self_pairs: cap^2 per-task bound, NO
-# dropped pairs, so the exhaustive-oracle equality is structural, not
-# probabilistic), and verified by exact Hamming distance.  The oracle
-# does the full O(n^2) cross check (exhaustive at sf0.01), which also
-# proves the block candidate generation misses nothing. ---
-_PH_BITS = 60
-_PH_BLOCK_BITS = 10  # 6 blocks of 10 bits: pigeonhole covers hamming <= 5
-_PH_HAM_MAX = 5
-
-#: fingerprint replay CTEs (no leading WITH) shared by the pair and
-#: canonical oracles: codepoint stream -> 61 integer cell means ->
-#: 60-bit gradient-sign fingerprint
-_PHASH_FP_CTES = f"""
-    cp AS MATERIALIZED (
-        SELECT doc_id,
-               list_transform(range(1, length(text) + 1),
-                   j -> CAST(ord(substr(text, j, 1)) AS BIGINT)) AS cs
-        FROM documents WHERE length(text) >= {_PH_BITS + 1}
-    ),
-    cells AS MATERIALIZED (
-        SELECT doc_id,
-               list_transform(range(0, {_PH_BITS + 1}), i ->
-                   CAST(list_aggregate(
-                       cs[(i * len(cs)) // {_PH_BITS + 1} + 1 :
-                          ((i + 1) * len(cs)) // {_PH_BITS + 1}], 'sum') AS BIGINT)
-                   // (((i + 1) * len(cs)) // {_PH_BITS + 1}
-                       - (i * len(cs)) // {_PH_BITS + 1})) AS c
-        FROM cp
-    ),
-    fp AS MATERIALIZED (
-        SELECT doc_id,
-               CAST(list_aggregate(list_transform(range(0, {_PH_BITS}), i ->
-                   CASE WHEN c[i + 1] > c[i + 2]
-                        THEN CAST(1 AS BIGINT) << i ELSE 0 END), 'sum') AS BIGINT)
-                   AS ph
-        FROM cells
-    )
-"""
-
-
-@query(
-    "multimodal_phash_neardup",
-    oracle=f"""
-    WITH {_PHASH_FP_CTES.strip()}
-    SELECT a.doc_id AS d1, b.doc_id AS d2,
-           CAST(bit_count(xor(a.ph, b.ph)) AS INT) AS hamming
-    FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.ph, b.ph)) <= {_PH_HAM_MAX}
-    """,
-)
-def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _phash_pairs_cached(spark, sf_dir)
-
-
-#: ``phash_fingerprints`` and ``phash_pairs`` session artifacts:
-#: checkpointed corpus fingerprints and verified near-dup pairs — THREE
-#: queries build the identical Arrow dHash pass and blocked+verified pair
-#: join (neardup, phash_canonical, the cross-modal canonical_full),
-#: each previously re-running the UDF scan and the self-join with its own
-#: checkpoints (r13, guide §1.2/§4).
-#: bench.py purges BOTH on multimodal_phash_neardup, the family's first
-#: bench line, so the full fingerprint+pair cost stays measured cold
-#: there.  (phash_incremental_store fingerprints per ingest SLICE — a
-#: different grain — and stays independent.)
-@artifact("phash_fingerprints")
-def _phash_fp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, ph)`` corpus fingerprints: one Arrow pass, checkpointed
-    so the bucket size-count and both candidate join sides read the
-    narrow table instead of re-running the UDF per plan reference (the
-    hashed_grams materialize-once contract)."""
-    from columnflow_spark.mmdata import build_media_table, phash_image
-
-    docs = (
-        spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-        .filter(F.length("text") >= _PH_BITS + 1)
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-    media = build_media_table(docs, payload="payload", mime="image/png")
-    return phash_image(media).transform(checkpoint_df)
-
-
-@artifact("phash_pairs")
-def _phash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified ``(d1, d2, hamming)`` pairs over the cached fingerprints,
-    checkpointed once per session: the canonical solves reference the
-    edge list twice (symmetrize), and the pair join is the family's
-    expensive step."""
-    return phash_neardup_pairs(_phash_fp_cached(spark, sf_dir)).transform(
-        checkpoint_df
-    )
-
-
-def phash_neardup_pairs(ph: DataFrame) -> DataFrame:
-    """Blocked + verified near-dup pairs ``(d1, d2, hamming)`` for a
-    ``(doc_id, ph)`` fingerprint table — shared by the registered query
-    and the planted-copy recall test."""
-    n_blocks = _PH_BITS // _PH_BLOCK_BITS
-    mask = (1 << _PH_BLOCK_BITS) - 1
-    blocks = F.array(
-        *[
-            F.shiftright(F.col("ph"), b * _PH_BLOCK_BITS).bitwiseAND(F.lit(mask))
-            + F.lit(b << _PH_BLOCK_BITS)
-            for b in range(n_blocks)
-        ]
-    )
-    banded = ph.select("doc_id", "ph", F.explode(blocks).alias("bk"))
-    pairs = chunked_self_pairs(banded, "bk", "doc_id", cap=LSH_BUCKET_CAP)
-    ham = hamming64(F.col("ph"), F.col("ph_b"))
-    return (
-        pairs.filter(ham <= _PH_HAM_MAX)
-        .select(
-            F.col("doc_id").alias("d1"),
-            F.col("doc_id_b").alias("d2"),
-            ham.cast("int").alias("hamming"),
-        )
-        .dropDuplicates(["d1", "d2"])
-    )
-
-
-@query(
-    "multimodal_phash_canonical",
-    oracle=f"""
-    WITH RECURSIVE {_PHASH_FP_CTES.strip()},
-    edges AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.ph, b.ph)) <= {_PH_HAM_MAX}
-    ),
-    sym AS (
-        SELECT d1 AS s, d2 AS t FROM edges
-        UNION ALL
-        SELECT d2 AS s, d1 AS t FROM edges
-    ),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS node FROM documents
-        UNION
-        SELECT r.src, sym.t AS node FROM reach r JOIN sym ON sym.s = r.node
-    )
-    SELECT src AS doc_id, min(node) AS component,
-           src = min(node) AS keep
-    FROM reach GROUP BY src
-    """,
-)
-def multimodal_phash_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multimodal dedup DECISION, end to end: perceptual fingerprints
-    -> blocked+verified near-dup pairs -> connected components -> keep
-    exactly the lowest-id member of every visual duplicate cluster
-    (docs without a fingerprint, or with no near-dup, are identity
-    singletons and kept).  Composes :func:`phash_neardup_pairs` with the
-    shared cluster solve (:func:`components_from_edges`) — the same
-    fingerprint/pair/cluster/keep chain ``dedup_connected_components``
-    runs for text, applied to the media payload axis."""
-    all_docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    edges = _phash_pairs_cached(spark, sf_dir).select("d1", "d2")
-    comp = components_from_edges(all_docs, edges)
-    return comp.select(
-        "doc_id",
-        "component",
-        (F.col("doc_id") == F.col("component")).alias("keep"),
-    )
-
-
-# --- cross-modal canonical selection (VERDICT r7 next #7): a real
-# multimodal corpus build keeps ONE representative per cluster across
-# BOTH the text near-dup graph and the visual (perceptual-hash)
-# near-dup graph — two docs are duplicates if they are connected
-# through ANY chain of text-Jaccard or visual-Hamming edges.  Composes
-# the two existing exact pair generators (prefix-filtered n-gram
-# Jaccard, pigeonhole-blocked dHash) with the shared cluster solve over
-# the UNIONED edge set; each edge family's work stays bounded by its
-# own duplicate volume, and the union adds nothing corpus-sized. ---
-@query(
-    "multimodal_canonical_full",
-    oracle=f"""
-    WITH RECURSIVE {_GRAMS_CTE}, {_PHASH_FP_CTES},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    tcand AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    tedges AS (
-        SELECT d1, d2 FROM tcand
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    ),
-    vedges AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.ph, b.ph)) <= {_PH_HAM_MAX}
-    ),
-    alledges AS (
-        SELECT d1, d2 FROM tedges UNION SELECT d1, d2 FROM vedges
-    ),
-    sym AS (
-        SELECT d1 AS s, d2 AS t FROM alledges
-        UNION ALL
-        SELECT d2 AS s, d1 AS t FROM alledges
-    ),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS node FROM documents
-        UNION
-        SELECT r.src, sym.t AS node FROM reach r JOIN sym ON sym.s = r.node
-    )
-    SELECT src AS doc_id, min(node) AS component,
-           src = min(node) AS keep
-    FROM reach GROUP BY src
-    """,
-)
-def multimodal_canonical_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep set across BOTH modalities: text n-gram-Jaccard edges
-    unioned with visual perceptual-hash edges, one connected-components
-    solve, keep the lowest-id member of every cross-modal cluster."""
-    all_docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    # both edge families are session-checkpointed artifacts; the union
-    # is a cheap scan of the two narrow checkpoints per action, and
-    # dropDuplicates because a pair can be both a text AND a visual
-    # duplicate
-    tedges = _jaccard_edges_cached(spark, sf_dir)
-    vedges = _phash_pairs_cached(spark, sf_dir).select("d1", "d2")
-    edges = tedges.union(vedges).dropDuplicates(["d1", "d2"]).transform(checkpoint_df)
-    comp = components_from_edges(all_docs, edges)
-    return comp.select(
-        "doc_id",
-        "component",
-        (F.col("doc_id") == F.col("component")).alias("keep"),
-    )
-
-
-# --- BPE tokenizer: iterative merge training + corpus encoding.  The
-# trainer runs on the word-COUNT table (the classic scalable form: the
-# corpus collapses to distinct words x counts first, so each merge round
-# touches a table whose size is the vocabulary, not the corpus).  The
-# segmentation state wraps every symbol in delimiters ("<a><b><c>"):
-# applying a merge (a,b) is replace(s, '<a><b>', '<ab>') — SQL replace is
-# left-to-right non-overlapping, which IS greedy BPE merge order, and the
-# two-sided wrapping anchors BOTH symbol boundaries, so a rule (a,b) can
-# never fire on a longer symbol that merely ends in `a` (with one-sided
-# separators, rule (h,e) would corrupt state '<th><e>').  The whole round
-# is codegen string ops with no UDF.  Delimiter characters are STRIPPED
-# from input words first (every surface, both engines): a corpus '<' or
-# '>' would otherwise silently corrupt symbol boundaries — the same
-# normalization a production tokenizer applies to its own specials.  Each round's best pair is one
-# bounded collect (a 3-field scalar, same artifact class as PQ seeds).
-# Encoding then applies the learned rules as a static chain of replaces
-# over every doc in-row: one corpus scan, zero shuffle. ---
-_BPE_ROUNDS = 6
-_BPE_DRIVER_CAP = 100_000
-
-
-def _bpe_train_rows(rows: list[tuple[int, str]]) -> list[tuple[str, str, int]]:
-    """Driver-side rounds over (count, wrapped-symbol-string) word rows."""
-    import re
-    from collections import Counter
-
-    merges: list[tuple[str, str, int]] = []
-    states = list(rows)
-    for _ in range(_BPE_ROUNDS):
-        counts: Counter[tuple[str, str]] = Counter()
-        for cnt, sep in states:
-            syms = [x for x in re.split("[<>]+", sep) if x]
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] += cnt
-        if not counts:
-            break
-        (a, b), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((a, b, int(n)))
-        states = [(cnt, sep.replace(f"<{a}><{b}>", f"<{a}{b}>")) for cnt, sep in states]
-    return merges
-
-
-def _bpe_clean_word(col):
-    """Strip the state delimiters from an input word (the op's
-    normalization contract — see the header comment).  Words that clean
-    to EMPTY must be dropped by the caller on both engines (an empty
-    word has zero tokens, but SQL string_split('') yields [''])."""
-    return F.replace(F.replace(col, F.lit("<"), F.lit("")), F.lit(">"), F.lit(""))
-
-
-def _bpe_clean_sql(col: str) -> str:
-    """The DuckDB twin of :func:`_bpe_clean_word` — single source for
-    every oracle surface so the normalization cannot desynchronize."""
-    return f"replace(replace({col}, '<', ''), '>', '')"
-
-
-def _bpe_syms(col):
-    """Clean symbol list of a wrapped state string '<a><bc>' -> [a, bc]."""
-    return F.filter(F.split(F.regexp_replace(col, "^<|>$", ""), "><"), lambda x: x != "")
-
-
-def _bpe_word_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["text"])
-    words = docs.select(
-        F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    )
-    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    wc = wc.filter(F.length(_bpe_clean_word(F.col("w"))) > 0)
-    # the word-count table IS the training set (vocabulary-sized, tiny);
-    # materialize it so the corpus is scanned exactly once
-    return wc.withColumn(
-        "s", F.regexp_replace(_bpe_clean_word(F.col("w")), "(.)", "<$1>")
-    ).transform(
-        checkpoint_df  # through the reliability switch like every loop-body site
-    )
-
-
-def bpe_encode_expr(merges: list[tuple]) -> "F.Column":
-    """In-row encode of column ``w``: clean, wrap, apply the merge chain."""
-    enc = F.regexp_replace(_bpe_clean_word(F.col("w")), "(.)", "<$1>")
-    for a, b, *_ in merges:
-        enc = F.replace(enc, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
-    return enc
-
-
-def bpe_ntokens_expr(merges: list[tuple], text=None) -> "F.Column":
-    """Per-DOC BPE token count as ONE in-row expression: fold over the
-    whitespace words of ``text``, encoding each word with the merge chain
-    and summing symbol counts — no word-grain explode, so a funnel can
-    count tokens inside the same single corpus pass that evaluates its
-    stage flags.  Words that clean to empty contribute 0 (the
-    :func:`_bpe_words` drop rule)."""
-    text = F.col("text") if text is None else text
-
-    def enc_syms(w):
-        e = F.regexp_replace(_bpe_clean_word(w), "(.)", "<$1>")
-        for a, b, *_ in merges:
-            e = F.replace(e, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
-        return F.size(_bpe_syms(e))
-
-    words = F.filter(F.split(text, " "), lambda x: x != "")
-    return F.aggregate(words, F.lit(0), lambda acc, w: acc + enc_syms(w))
-
-
-def _bpe_words(df: DataFrame) -> DataFrame:
-    """Explode whitespace words, dropping words that clean to empty (the
-    oracle's string_split('') would count them as one token)."""
-    out = df.select(
-        "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("w"),
-    )
-    return out.filter(F.length(_bpe_clean_word(F.col("w"))) > 0)
-
-
-@artifact("bpe_merges")
-def bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
-    """Learn ``_BPE_ROUNDS`` merges; returns [(a, b, weighted_count)]."""
-    state = _bpe_word_state(spark, sf_dir)
-    # vocabulary-sized training sets run the rounds driver-side (identical
-    # algorithm: str.replace is the same left-to-right non-overlapping
-    # greedy merge) — one job instead of ~3 per round.  Above the cap the
-    # distributed loop below takes over (CommonCrawl-scale vocabularies),
-    # same split as dedup_connected_components' union-find cap.
-    head = state.take(_BPE_DRIVER_CAP + 1)
-    if len(head) <= _BPE_DRIVER_CAP:
-        return _bpe_train_rows([(r.cnt, r.s) for r in head])
-    merges: list[tuple[str, str, int]] = []
-    rounds = 0
-    while len(merges) < _BPE_ROUNDS:
-        rounds += 1
-        syms = _bpe_syms(F.col("s"))
-        # single-symbol words have no pairs; sequence(0, -1) would descend
-        pairs = state.filter(F.size(syms) >= 2).select(
-            "cnt",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(syms) - 2),
-                    lambda i: F.struct(
-                        F.element_at(syms, i + 1).alias("a"),
-                        F.element_at(syms, i + 2).alias("b"),
-                    ),
-                )
-            ).alias("p"),
-        )
-        counts = (
-            pairs.groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n")).transform(checkpoint_df)
-        )
-        top = (
-            counts.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(_BPE_BATCH_K)
-            .collect()
-        )
-        if not top:
-            break
-        # multi-merge batch, provably order-equivalent to one-at-a-time
-        # BPE.  Keep the longest RANKED PREFIX m_1..m_k such that
-        # (1) prefix pairs are symbol-disjoint (none shares a symbol with
-        #     an earlier kept pair or equals its concatenation), so
-        #     applying m_i cannot change count(m_j); and
-        # (2) domination: n_j strictly exceeds every pair count any
-        #     earlier m_i could CREATE.  A new pair around c_i = a_i+b_i
-        #     is (x, c_i) <= count(x, a_i), (c_i, x) <= count(b_i, x) or
-        #     (c_i, c_i) <= count(b_i, a_i) — all bounded by M_i = max
-        #     count over existing pairs with right symbol a_i or left
-        #     symbol b_i, read from the SAME round's count table.
-        # Everything past the first violation waits for the next round.
-        per_right, per_left = _bpe_neighbor_maxes(counts, top)
-        kept: list[tuple[str, str, int]] = []
-        kept_syms: set[str] = set()
-        bound = -1  # running max of M_i over kept merges
-        for r in top:
-            a, b, n = r.a, r.b, int(r.n)
-            if kept:
-                if a in kept_syms or b in kept_syms or (a + b) in kept_syms:
-                    break
-                if n <= bound:
-                    break
-            kept.append((a, b, n))
-            kept_syms.update({a, b, a + b})
-            bound = max(bound, per_right.get(a, 0), per_left.get(b, 0))
-            if len(merges) + len(kept) >= _BPE_ROUNDS:
-                break
-        merges.extend(kept)
-        # apply the whole batch in ONE projection + checkpoint: without
-        # the checkpoint round k's lineage replays rounds 1..k-1
-        # (quadratic); the table is vocabulary-sized
-        s = F.col("s")
-        for a, b, _n in kept:
-            s = F.replace(s, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
-        state = state.withColumn("s", s).transform(checkpoint_df)
-    _BPE_LAST_FALLBACK_ROUNDS["rounds"] = rounds
-    return merges
-
-
-#: test/diagnostic hook: rounds the last distributed fallback needed
-#: (a module-level cell, not function-object state)
-_BPE_LAST_FALLBACK_ROUNDS: dict = {}
-
-
-#: candidates collected per distributed-fallback round (bounded scalar
-#: artifact, like the PQ seeds); the kept batch is usually smaller
-_BPE_BATCH_K = 16
-
-
-def _bpe_neighbor_maxes(counts: DataFrame, top) -> tuple[dict, dict]:
-    """For every candidate pair's symbols, the max count over existing
-    pairs ending in its left symbol (``per_right[a]``) / starting with
-    its right symbol (``per_left[b]``) — the upper bound on any pair a
-    merge (a, b) can create (see bpe_train).  TWO tiny aggregations per
-    round regardless of batch size."""
-    rights = list({r.a for r in top})
-    lefts = list({r.b for r in top})
-    per_right = {
-        r.b: int(r.m)
-        for r in counts.filter(F.col("b").isin(rights)).groupBy("b").agg(F.max("n").alias("m")).collect()
-    }
-    per_left = {
-        r.a: int(r.m)
-        for r in counts.filter(F.col("a").isin(lefts)).groupBy("a").agg(F.max("n").alias("m")).collect()
-    }
-    return per_right, per_left
-
-
-def _bpe_round_ctes() -> str:
-    """The DuckDB mirror of the training loop: K materialized rounds."""
-    parts = [
-        """
-    wstate0 AS MATERIALIZED (
-        SELECT w, cnt,
-               regexp_replace(replace(replace(w, '<', ''), '>', ''), '(.)', '<\\1>', 'g') AS s
-        FROM (
-            SELECT w, count(*) AS cnt
-            FROM (
-                SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-                FROM documents
-            )
-            GROUP BY w
-        )
-        WHERE length(replace(replace(w, '<', ''), '>', '')) > 0
-    )"""
-    ]
-    for r in range(1, _BPE_ROUNDS + 1):
-        parts.append(f"""
-    pairs{r} AS MATERIALIZED (
-        SELECT syms[i] AS a, syms[i + 1] AS b, CAST(sum(cnt) AS BIGINT) AS n
-        FROM (
-            SELECT cnt,
-                   string_split(regexp_replace(s, '^<|>$', '', 'g'), '><') AS syms
-            FROM wstate{r - 1}
-        ), unnest(range(1, len(syms))) AS t(i)
-        GROUP BY a, b
-    ),
-    best{r} AS MATERIALIZED (
-        SELECT a, b, n FROM pairs{r} ORDER BY n DESC, a, b LIMIT 1
-    ),
-    wstate{r} AS MATERIALIZED (
-        SELECT w, cnt, replace(s, '<' || a || '><' || b || '>', '<' || a || b || '>') AS s
-        FROM wstate{r - 1}, best{r}
-    )""")
-    return ",".join(parts)
-
-
-@query(
-    "bpe_train_merges",
-    oracle=f"""
-    WITH {_bpe_round_ctes()}
-    SELECT * FROM (
-        {" UNION ALL ".join(
-            f"SELECT {r} AS rank, a || '+' || b AS pair, n FROM best{r}"
-            for r in range(1, _BPE_ROUNDS + 1)
-        )}
-    )
-    ORDER BY rank
-    """,
-)
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merges = bpe_train(spark, sf_dir)
-    return local_frame(
-        spark,
-        [(r + 1, f"{a}+{b}", n) for r, (a, b, n) in enumerate(merges)],
-        "rank int, pair string, n long",
-    ).orderBy("rank")
-
-
-@query(
-    "bpe_encode_corpus",
-    oracle=f"""
-    WITH {_bpe_round_ctes()},
-    encoded AS (
-        SELECT doc_id,
-               {"".join("replace(" for _ in range(_BPE_ROUNDS))}
-                   regexp_replace({_bpe_clean_sql('w')}, '(.)', '<\\1>', 'g')
-               {"".join(
-                   f", (SELECT '<' || a || '><' || b || '>' FROM best{r})"
-                   f", (SELECT '<' || a || b || '>' FROM best{r}))"
-                   for r in range(1, _BPE_ROUNDS + 1)
-               )} AS s
-        FROM (
-            SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-            FROM documents
-        )
-        WHERE length({_bpe_clean_sql('w')}) > 0
-    )
-    SELECT doc_id,
-           CAST(sum(len(string_split(s, '><'))) AS BIGINT) AS n_tokens,
-           CAST(sum(length(replace(replace(s, '<', ''), '>', ''))) AS BIGINT) AS n_chars
-    FROM encoded
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """,
-)
-def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenize every doc with the learned merges: a static chain of
-    in-row replaces (no UDF, no shuffle — the training artifact is ~6
-    tiny literals).  n_chars doubles as a lossless-segmentation check:
-    it must equal the pre-tokenization character count."""
-    merges = bpe_train(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    enc = bpe_encode_expr(merges)
-    per_word = _bpe_words(docs).select(
-        "doc_id",
-        F.size(_bpe_syms(enc)).alias("nt"),
-        F.length(_bpe_clean_word(enc)).alias("nc"),
-    )
-    return (
-        per_word.groupBy("doc_id")
-        .agg(F.sum("nt").alias("n_tokens"), F.sum("nc").alias("n_chars"))
-        .orderBy("doc_id")
-    )
-
-
-# --- the composed training-corpus pipeline as a funnel report: every
-# curation stage this engine provides, chained end-to-end the way a real
-# pretraining data build runs them — language filter, quality gate, exact
-# dedup, eval-set decontamination, BPE tokenization, sequence-packing
-# sizing — with the surviving doc count (and final token/sequence totals)
-# after each stage.  Each stage reuses the session artifacts of its
-# standalone op (shingle table, BPE merges), so the whole funnel costs
-# one corpus scan per independent aggregate and every join is broadcast;
-# the oracle replays all six stages in one CTE chain. ---
-_TCP_MIN_TOKENS = 25
-_TCP_SEQ_LEN = 512
-_TCP_EVAL_SRC = "src2"
-
-
-# --- hashing-TF text classifier for the corpus funnel: the learned
-# (not rule-based) quality gate.  Features are in-row hashed bag-of-words
-# counts (portable md5 bucketing, a pure projection over the corpus — the
-# classic hashing-trick featurization that needs no vocabulary build);
-# training reuses the shared logistic-regression kernel (_logreg_grad: K
-# steps x ONE 16-row aggregation); scoring bakes the weights into the
-# plan as literals.  Pseudo-labels are weak supervision from a content
-# rule (docs containing the 'dup' marker token are the negative class) —
-# the standard bootstrap when no human labels exist. ---
-_TF_D = 32  # hashed-term buckets; +1 bias component appended
-_TF_STEPS = 4
-_TF_LR = 0.5
-#: gradient quantization grid (power of two -> exact binary scaling).
-#: The per-step gradient is the only cross-engine float whose value
-#: depends on SUMMATION ORDER (F.sum over shuffle partials vs DuckDB's
-#: scan order); snapping it to this grid makes the trained weights
-#: bit-identical across engines, so the downstream median-threshold
-#: compare has no ulp knife edge — same treatment as the PQ/ADC LUT.
-_TF_GQ = float(2**24)
-
-
-def _tf_bucket(w):
-    return F.pmod(
-        F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"), F.lit(_TF_D)
-    )
-
-
-def _tf_x_expr():
-    """Hashed term-FREQUENCY feature vector + bias (length ``_TF_D + 1``)
-    of column ``text`` — one in-row expression, no explode, no shuffle.
-    Normalizing by the word count removes doc-length from the score so
-    the learned content weights decide, not the document size."""
-    ws = F.filter(F.split("text", " "), lambda t: t != "")
-    bs = F.transform(ws, _tf_bucket)
-    denom = F.greatest(F.size(ws), F.lit(1)).cast("double")
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(_TF_D - 1)),
-        lambda j: F.size(F.filter(bs, lambda b: b == j.cast("long"))).cast("double")
-        / denom,
-    )
-    return F.concat(counts, F.array(F.lit(1.0)))
-
-
-def _tf_feat(docs: DataFrame) -> DataFrame:
-    """``(doc_id, x, y)`` training features, built the LINEAR way:
-    explode tokens -> per-(doc, bucket) counts -> densify.  Produces
-    bit-identical vectors to the in-row ``_tf_x_expr`` form (asserted in
-    test_mmdata.py) at O(words) instead of O(_TF_D * words) per doc —
-    measured 2.2x faster at sf0.1.  The shuffle partial-aggregates
-    map-side to <= _TF_D + 1 rows per doc per partition, so shuffle
-    volume is doc-grain, not token-grain.  Scoring paths (the funnel's
-    final filter, the streaming ingest gate) keep the in-row expression
-    form, which must stay shuffle-free.
-
-    ONE documents scan (r14, guide §1.2/§6): the previous form read the
-    text column twice (a doc-grain (nw, y) branch joined to the exploded
-    token branch) — at corpus scale two full reads of the heaviest
-    column where one suffices.  ``nw``/``y`` now ride the exploded rows
-    as group keys (constant per doc, so the grouping is unchanged);
-    ``explode_outer`` + the NULL-skipping ``count("w")`` /
-    NULL-dropping ``collect_list(when(...))`` keep empty documents
-    present with an all-zero vector, exactly the old left join.  The
-    tokenization is pre-projected into its own select so ``split`` is
-    evaluated once per row, not once per consuming expression
-    (measured: the inlined form was 2.4x slower).  Bit-identical rows
-    asserted against the in-row form in test_mmdata.py and re-verified
-    against the old two-scan form at sf0.1 during the r14 A/B."""
-    ws = F.filter(F.split("text", " "), lambda t: t != "")
-    toks = docs.select("doc_id", ws.alias("ws"))
-    ex = toks.select(
-        "doc_id",
-        F.size("ws").alias("nw"),
-        F.when(F.array_contains("ws", "dup"), 0.0).otherwise(1.0).alias("y"),
-        F.explode_outer("ws").alias("w"),
-    )
-    cnt = ex.groupBy("doc_id", "nw", "y", _tf_bucket(F.col("w")).alias("b")).agg(
-        F.count("w").alias("c")
-    )
-    vec = cnt.groupBy("doc_id", "nw", "y").agg(
-        F.map_from_entries(
-            F.collect_list(F.when(F.col("b").isNotNull(), F.struct("b", "c")))
-        ).alias("m")
-    )
-    denom = F.greatest(F.col("nw"), F.lit(1)).cast("double")
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(_TF_D - 1)),
-        lambda j: F.coalesce(F.col("m")[j.cast("long")], F.lit(0)).cast("double") / denom,
-    )
-    return vec.select(
-        "doc_id", F.concat(counts, F.array(F.lit(1.0))).alias("x"), "y"
-    )
-
-
-@artifact("tf_features")
-def _tf_feat_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``(doc_id, x, y)`` hashing-TF feature frame, featurized ONCE
-    per (session, corpus) and checkpointed — the O(_TF_D * words)-per-doc
-    featurization is the expensive projection, and every training round
-    and the threshold pass read ~``_TF_D + 1`` doubles per doc instead of
-    re-running the bucket-count scan over the text column (the
-    ``hashed_grams`` pattern)."""
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    return _tf_feat(docs).transform(checkpoint_df)
-
-
-def tf_gate_score_expr(w: list[float], x=None):
-    """The learned gate's score ``z = w . x`` as an in-row expression
-    (weights baked in as plan literals — zero shuffle, zero Python).
-    ``x`` defaults to featurizing the ``text`` column in place."""
-    wl = F.array(*[F.lit(float(v)) for v in w])
-    return F.aggregate(
-        F.zip_with(wl, x if x is not None else _tf_x_expr(), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def tf_learned_gate(spark: SparkSession, sf_dir: str) -> tuple[list[float], float]:
-    """``(weights, threshold)`` of the corpus-trained hashing-TF quality
-    gate: the batch-trained classifier plus the corpus-global median
-    score cutoff (CCNet keep-the-better-half).  This is the ONE artifact
-    both the batch funnel stage 6 and the streaming ingest gate consume,
-    so their keep decisions are definitionally identical."""
-    w = _tf_logreg_train(spark, sf_dir)
-    return w, _tf_threshold(spark, sf_dir)
-
-
-@artifact("tf_threshold")
-def _tf_threshold(spark: SparkSession, sf_dir: str) -> float:
-    w = _tf_logreg_train(spark, sf_dir)
-    return float(
-        _tf_feat_cached(spark, sf_dir)
-        .select(tf_gate_score_expr(w, F.col("x")).alias("z"))
-        .agg(F.expr("percentile(z, 0.5)"))
-        .collect()[0][0]
-    )
-
-
-@artifact("tf_weights")
-def _tf_logreg_train(spark: SparkSession, sf_dir: str) -> list[float]:
-    """K gradient steps on the hashed text features (the shared logistic
-    kernel with the TF schedule), memoized per corpus.  Gradients are
-    snapped to the ``_TF_GQ`` grid each step (mirrored in the oracle
-    replay) so engine summation order cannot drift the weights."""
-    feat = _tf_feat_cached(spark, sf_dir)
-    w = [_LOGREG_W0] * (_TF_D + 1)
-    for _ in range(_TF_STEPS):
-        gmap = {r.j: r.g for r in _logreg_grad(feat, w).collect()}
-        w = [
-            w[j] - _TF_LR * (math.floor(gmap[j] * _TF_GQ + 0.5) / _TF_GQ)
-            for j in range(_TF_D + 1)
-        ]
-    return w
-
-
-def _tf_fit_ctes() -> str:
-    """SQL replay of the hashing-TF featurization + K training rounds +
-    the final per-doc score and its median threshold."""
-    nd = _TF_D + 1  # features + bias
-    parts = [f"""
-    tfeat AS MATERIALIZED (
-        SELECT doc_id,
-               list_transform(range(0, {_TF_D}),
-                   j -> CAST(len(list_filter(bs, b -> b = j)) AS DOUBLE)
-                        / greatest(len(ws), 1)) || [1.0] AS x,
-               CASE WHEN list_contains(ws, 'dup') THEN 0.0 ELSE 1.0 END AS y
-        FROM (
-            SELECT doc_id, ws,
-                   list_transform(ws, w -> ('0x' || substr(md5(w), 1, 15))::BIGINT % {_TF_D}) AS bs
-            FROM (
-                SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-                FROM documents
-            )
-        )
-    ),
-    twl0 AS MATERIALIZED (SELECT list_transform(range({nd}), j -> {_LOGREG_W0}) AS wl)"""]
-    for k in range(1, _TF_STEPS + 1):
-        parts.append(f""",
-    tscored{k} AS MATERIALIZED (
-        SELECT doc_id, x, y,
-               1.0 / (1.0 + exp(-list_aggregate(
-                   list_transform(range(1, {nd + 1}), j -> wl[j] * x[j]), 'sum'))) AS p
-        FROM tfeat, twl{k - 1}
-    ),
-    tgrad{k} AS MATERIALIZED (
-        SELECT j, floor(sum((p - y) * x[j + 1]) * {_TF_GQ} + 0.5) / {_TF_GQ} AS g
-        FROM tscored{k}, unnest(range({nd})) AS t(j)
-        GROUP BY j
-    ),
-    twl{k} AS MATERIALIZED (
-        SELECT list(w ORDER BY j) AS wl FROM (
-            SELECT g.j, wl[g.j + 1] - {_TF_LR} * g.g AS w
-            FROM tgrad{k} g, twl{k - 1}
-        )
-    )""")
-    parts.append(f""",
-    tscoredf AS MATERIALIZED (
-        SELECT doc_id,
-               list_aggregate(list_transform(range(1, {nd + 1}), j -> wl[j] * x[j]), 'sum') AS z
-        FROM tfeat, twl{_TF_STEPS}
-    ),
-    tthresh AS MATERIALIZED (SELECT quantile_cont(z, 0.5) AS t FROM tscoredf)""")
-    return "".join(parts)
-
-
-@query(
-    "training_corpus_pipeline",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    {_bpe_round_ctes()},
-    {_tf_fit_ctes()},
-    s1 AS (SELECT doc_id, text, lang, source FROM documents),
-    s2 AS (SELECT * FROM s1 WHERE lang = 'en'),
-    s3 AS (
-        SELECT * FROM s2
-        WHERE len(list_filter(string_split(text, ' '), t -> t <> '')) >= {_TCP_MIN_TOKENS}
-    ),
-    s4 AS (
-        SELECT * FROM s3 WHERE doc_id IN (
-            SELECT min(doc_id) FROM s3 GROUP BY md5(text)
-        )
-    ),
-    s4g AS MATERIALIZED (
-        SELECT g.doc_id, g.gs FROM grams g JOIN s4 USING (doc_id)
-    ),
-    fex AS MATERIALIZED (SELECT doc_id, unnest(gs) AS g FROM s4g),
-    fpairs AS MATERIALIZED (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM fex a JOIN fex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    flosers AS MATERIALIZED (
-        SELECT DISTINCT p.d2 AS doc_id
-        FROM fpairs p
-        JOIN s4g s1 ON s1.doc_id = p.d1
-        JOIN s4g s2 ON s2.doc_id = p.d2
-        WHERE p.common * 1.0 / (len(s1.gs) + len(s2.gs) - p.common)
-              >= {JACCARD_THRESHOLD}
-    ),
-    s4f AS MATERIALIZED (
-        SELECT * FROM s4 WHERE doc_id NOT IN (SELECT doc_id FROM flosers)
-    ),
-    eval_g AS (
-        SELECT DISTINCT ug AS gram
-        FROM grams g JOIN documents d USING (doc_id), unnest(g.gs) AS t(ug)
-        WHERE d.source = '{_TCP_EVAL_SRC}'
-    ),
-    contaminated AS (
-        SELECT DISTINCT g.doc_id
-        FROM grams g, unnest(g.gs) AS t(ug)
-        WHERE ug IN (SELECT gram FROM eval_g)
-    ),
-    s5 AS (
-        SELECT * FROM s4f
-        WHERE source <> '{_TCP_EVAL_SRC}'
-          AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-    ),
-    s6 AS (
-        SELECT s5.* FROM s5
-        JOIN tscoredf sc USING (doc_id), tthresh
-        WHERE sc.z >= tthresh.t
-    ),
-    tokde AS (
-        SELECT doc_id,
-               {"".join("replace(" for _ in range(_BPE_ROUNDS))}
-                   regexp_replace({_bpe_clean_sql('w')}, '(.)', '<\\1>', 'g')
-               {"".join(
-                   f", (SELECT '<' || a || '><' || b || '>' FROM best{r})"
-                   f", (SELECT '<' || a || b || '>' FROM best{r}))"
-                   for r in range(1, _BPE_ROUNDS + 1)
-               )} AS s
-        FROM (
-            SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-            FROM s6
-        )
-        WHERE length({_bpe_clean_sql('w')}) > 0
-    ),
-    s7 AS (
-        SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-               CAST(sum(len(string_split(s, '><'))) AS BIGINT) AS n_tokens
-        FROM tokde
-    )
-    SELECT * FROM (
-        SELECT 1 AS stage, 'input' AS name,
-               (SELECT count(*) FROM s1) AS n_docs,
-               CAST(0 AS BIGINT) AS n_tokens, CAST(0 AS BIGINT) AS n_sequences
-        UNION ALL SELECT 2, 'lang_filter', (SELECT count(*) FROM s2), 0, 0
-        UNION ALL SELECT 3, 'quality_gate', (SELECT count(*) FROM s3), 0, 0
-        UNION ALL SELECT 4, 'exact_dedup', (SELECT count(*) FROM s4), 0, 0
-        UNION ALL SELECT 5, 'fuzzy_dedup', (SELECT count(*) FROM s4f), 0, 0
-        UNION ALL SELECT 6, 'decontaminated', (SELECT count(*) FROM s5), 0, 0
-        UNION ALL SELECT 7, 'classifier_filter', (SELECT count(*) FROM s6), 0, 0
-        UNION ALL SELECT 8, 'tokenized', (SELECT n_docs FROM s7),
-                          (SELECT n_tokens FROM s7),
-                          CAST(ceil((SELECT n_tokens FROM s7) / {_TCP_SEQ_LEN}.0) AS BIGINT)
-    )
-    ORDER BY stage
-    """,
-)
-def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eight-stage pretraining funnel counted in a SINGLE corpus pass.
-
-    Every stage membership is a per-doc boolean FLAG evaluated in one
-    chain over ``documents`` — lang/length/gate are projections, exact
-    dedup is one window over the content hash, fuzzy dedup and
-    decontamination are doc-keyed joins against bounded/derived id sets,
-    and BPE token counting folds in-row over the words array — so the
-    whole funnel is one featurization + one single-row aggregate, not a
-    per-stage re-derivation (the r6 shape recomputed the dedup shuffle
-    once per downstream stage; real 100 TB funnels compute per-doc
-    decisions in one pass and count them for free)."""
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text", "lang", "source"])
-    ntok_ws = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-    in_s2 = F.col("lang") == "en"
-    in_s3 = in_s2 & (ntok_ws >= _TCP_MIN_TOKENS)
-
-    # fuzzy near-dedup loser set (VERDICT r6 next #3): MinHash-banded
-    # candidate pairs among the exact-dedup SURVIVORS (the session
-    # signature table semi-joined down — near-dup work scales with
-    # survivors, not raw corpus), exact-Jaccard verified against the
-    # shared shingle table, then the HIGHER doc_id of every verified
-    # pair is dropped (deterministic, SQL-replayable; the oracle replays
-    # the exact pair set — the LSH banding's P_miss at j >= 0.8 is
-    # < 1.2e-6, the dedup_minhash_lsh equivalence argument).  The band
-    # self-join goes through chunked_self_pairs (ADVICE r7): the cap
-    # SPLITS an oversized band bucket into chunk-pair tasks instead of
-    # dropping its cross-chunk pairs, so a skewed near-dup cluster over
-    # LSH_BUCKET_CAP cannot silently diverge from the oracle — the only
-    # residual miss is the banding P_miss itself.  The loser id set is
-    # bounded by near-dup volume and checkpointed once.
-    g = hashed_grams(spark, sf_dir)
-    s4ids = (
-        docs.filter(in_s3)
-        .groupBy(F.md5("text").alias("dg"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    banded4 = (
-        minhash_sigs(spark, sf_dir)
-        .join(s4ids, "doc_id", "leftsemi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.array(*lsh_band_keys(F.col("sig"), bands=16, rows=2))
-            ).alias("bk"),
-        )
-    )
-    cand4 = (
-        chunked_self_pairs(banded4, "bk", "doc_id", cap=LSH_BUCKET_CAP)
-        .select(F.col("doc_id").alias("d1"), F.col("doc_id_b").alias("d2"))
-        .dropDuplicates(["d1", "d2"])
-    )
-    losers = (
-        _verify_pairs_exact(g, cand4, JACCARD_THRESHOLD)
-        .select(F.col("d2").alias("doc_id"), F.lit(True).alias("is_loser"))
-        .distinct()
-        .transform(checkpoint_df)
-    )
-
-    # decontamination id set: docs sharing any shingle with the eval
-    # source — the eval gram SET is the bounded side and broadcasts; the
-    # corpus-sized contaminated set joins un-hinted below (AQE broadcasts
-    # it at small scale, falls back to a doc_id-keyed shuffle join at
-    # corpus scale instead of OOMing the build side)
-    eval_set = (
-        g.filter(F.col("source") == _TCP_EVAL_SRC)
-        .select(F.explode("hs").alias("h"))
-        .distinct()
-    )
-    contaminated = (
-        g.select("doc_id", F.explode("hs").alias("h"))
-        .join(F.broadcast(eval_set), "h", "leftsemi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("is_cont", F.lit(True))
-    )
-
-    # the learned gate weights/threshold and BPE merges are session
-    # artifacts (featurize-once contracts of their own); both land in the
-    # flag chain as plan literals
-    w_tf, thr = tf_learned_gate(spark, sf_dir)
-    merges = bpe_train(spark, sf_dir)
-
-    # exact dedup as ONE window over the content hash: keep the lowest
-    # doc_id among the stage-3 survivors of each distinct text (map-side
-    # no, but a single fingerprint-keyed shuffle — and the ONLY corpus
-    # shuffle besides the contamination join; there is no keep-set join)
-    s4min = F.min(F.when(in_s3, F.col("doc_id"))).over(W.partitionBy(F.md5("text")))
-    flags = (
-        docs.withColumn("in_s2", in_s2)
-        .withColumn("in_s3", in_s3)
-        .withColumn("in_s4", F.col("in_s3") & (F.col("doc_id") == s4min))
-        .join(losers, "doc_id", "left")
-        .withColumn("in_s4f", F.col("in_s4") & F.col("is_loser").isNull())
-        .join(contaminated, "doc_id", "left")
-        .withColumn(
-            "in_s5",
-            F.col("in_s4f")
-            & (F.col("source") != _TCP_EVAL_SRC)
-            & F.col("is_cont").isNull(),
-        )
-        .withColumn(
-            "in_s6",
-            F.col("in_s5") & (tf_gate_score_expr(w_tf) >= F.lit(thr)),
-        )
-        .withColumn(
-            "nt",
-            F.when(F.col("in_s6"), bpe_ntokens_expr(merges)).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "has_tok",
-            F.exists(
-                F.filter(F.split("text", " "), lambda x: x != ""),
-                lambda w: F.length(_bpe_clean_word(w)) > 0,
-            ),
-        )
-    )
-
-    def cnt(flag: str):
-        return F.sum(F.col(flag).cast("long"))
-
-    agg = flags.agg(
-        F.count(F.lit(1)).alias("n1"),
-        cnt("in_s2").alias("n2"),
-        cnt("in_s3").alias("n3"),
-        cnt("in_s4").alias("n4"),
-        cnt("in_s4f").alias("n5"),
-        cnt("in_s5").alias("n6"),
-        cnt("in_s6").alias("n7"),
-        F.sum((F.col("in_s6") & F.col("has_tok")).cast("long")).alias("n8"),
-        F.sum("nt").cast("long").alias("tok_sum"),
-    )
-    # tokenized totals are NULL when nothing survives (the word-grain
-    # aggregate's empty-sum semantics both engines share)
-    n_tokens8 = F.when(F.col("n8") > 0, F.col("tok_sum")).cast("long")
-    zero = F.lit(0).cast("long")
-
-    def row(i: int, name: str, n_docs, n_tokens, n_seq):
-        return F.struct(
-            F.lit(i).alias("stage"),
-            F.lit(name).alias("name"),
-            n_docs.cast("long").alias("n_docs"),
-            n_tokens.cast("long").alias("n_tokens"),
-            n_seq.cast("long").alias("n_sequences"),
-        )
-
-    return agg.select(
-        F.inline(
-            F.array(
-                row(1, "input", F.col("n1"), zero, zero),
-                row(2, "lang_filter", F.col("n2"), zero, zero),
-                row(3, "quality_gate", F.col("n3"), zero, zero),
-                row(4, "exact_dedup", F.col("n4"), zero, zero),
-                row(5, "fuzzy_dedup", F.col("n5"), zero, zero),
-                row(6, "decontaminated", F.col("n6"), zero, zero),
-                row(7, "classifier_filter", F.col("n7"), zero, zero),
-                row(
-                    8,
-                    "tokenized",
-                    F.col("n8"),
-                    n_tokens8,
-                    F.ceil(n_tokens8 / float(_TCP_SEQ_LEN)),
-                ),
-            )
-        )
-    ).orderBy("stage")
-
-
 # --- distributed PCA, phase 1: exact covariance of the embedding matrix.
 # The scalable shape is per-partition numpy partial sums (each Arrow batch
 # folds its rows into one d x d product matrix, so the shuffle carries
@@ -5489,8 +1339,6 @@ def _pca_moment_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["embedding"]))
 
     def partial(batches):
-        import pandas as pd  # noqa: PLC0415
-
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -5630,101 +1478,6 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(*cols).orderBy("vec_id")
 
 
-# --- winnowing fingerprint selection (Schleimer-Wilkerson-Aiken 2003,
-# the MOSS local fingerprinting algorithm; public paper): slide a window
-# of w consecutive k-gram hashes and select each window's minimum —
-# rightmost on ties — deduping repeated selections.  Winnowing guarantees
-# any shared substring of length >= w + k - 1 yields a shared
-# fingerprint, with far fewer fingerprints than full shingling; it is
-# the standard accuracy/size trade for plagiarism-style span matching.
-# Entirely in-row (one corpus scan, zero shuffle); gram hashes use the
-# sha256->long primitive both engines share, so selection decisions are
-# engine-exact. ---
-_WINNOW_K = 3
-_WINNOW_W = 4
-
-
-@query(
-    "winnowing_fingerprints",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-        FROM documents
-    ),
-    hs AS (
-        SELECT doc_id,
-               [ ('0x' || substr(sha256(array_to_string(ts[i:i + {_WINNOW_K - 1}], ' ')), 1, 15))::BIGINT
-                 FOR i IN range(1, len(ts) - {_WINNOW_K - 2}) ] AS h
-        FROM toks WHERE len(ts) >= {_WINNOW_K}
-    ),
-    sel AS (
-        SELECT doc_id,
-               list_distinct([
-                   CAST(list_max([ i + j FOR j IN range({_WINNOW_W})
-                                   IF h[i + j] = list_min(h[i:i + {_WINNOW_W - 1}]) ]) AS VARCHAR)
-                   || ':' || CAST(list_min(h[i:i + {_WINNOW_W - 1}]) AS VARCHAR)
-                   FOR i IN range(1, len(h) - {_WINNOW_W - 2})
-               ]) AS sels,
-               [ list_min(h[i:i + {_WINNOW_W - 1}])
-                 FOR i IN range(1, len(h) - {_WINNOW_W - 2}) ] AS mins
-        FROM hs WHERE len(h) >= {_WINNOW_W}
-    )
-    SELECT doc_id,
-           CAST(len(sels) AS BIGINT) AS n_fingerprints,
-           list_min(mins) AS min_fp,
-           list_max(mins) AS max_fp
-    FROM sel
-    ORDER BY doc_id
-    """,
-)
-def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.hashing import seed_long
-    from columnflow_spark.functions.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    ts = tokens(F.col("text"))
-    k, w = _WINNOW_K, _WINNOW_W
-    # ordered (positional) k-gram hash sequence — winnowing is positional,
-    # unlike the distinct shingle sets of the dedup family
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(ts) - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(ts, i, k)),
-    )
-    h = F.transform(grams, lambda g: seed_long(g))
-    docs = docs.filter(F.size(ts) >= k).select("doc_id", h.alias("h"))
-    n = F.size("h")
-    win_min = lambda i: F.array_min(F.slice("h", i, w))  # noqa: E731
-    sel_str = F.transform(
-        F.sequence(F.lit(1), n - (w - 1)),
-        lambda i: F.concat_ws(
-            ":",
-            F.array_max(
-                F.filter(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(w - 1)),
-                        lambda j: F.when(
-                            F.element_at("h", (i + j).cast("int")) == win_min(i), i + j
-                        ).otherwise(F.lit(-1)),
-                    ),
-                    lambda x: x >= 0,
-                )
-            ),
-            win_min(i),
-        ),
-    )
-    mins = F.transform(F.sequence(F.lit(1), n - (w - 1)), lambda i: win_min(i))
-    return (
-        docs.filter(n >= w)
-        .select(
-            "doc_id",
-            F.size(F.array_distinct(sel_str)).cast("long").alias("n_fingerprints"),
-            F.array_min(mins).alias("min_fp"),
-            F.array_max(mins).alias("max_fp"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 #: ``ivf_trained_centroids`` session artifact: the trained IVF centroid
 #: set — the Lloyd-trained counterpart of _ivf_cents' seeded cells,
 #: built once per session
@@ -5756,321 +1509,7 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast probes); rows-only for the driver (the trained model has
     no SQL twin), with recall-vs-seeded pinned in test_ann_recall.py."""
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    cents = _ivf_trained_cents(spark, sf_dir)
-    assign = nearest_centroid_assign(emb, cents.select("cid", "ce"))
-    probes = _ivf_probes(emb, cents)
-    cand = assign.join(F.broadcast(probes), "cid").filter(F.col("vec_id") != F.col("query_id"))
-    sims = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine(F.col("q"), F.col("embedding")).alias("sim"),
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rk")
-    )
-
-
-# --- incremental corpus maintenance: snapshot delta detection
-# (functions/delta.py).  Two deterministic snapshot views of the corpus
-# (simulating yesterday's and today's crawl: some docs removed, some
-# added, some re-crawled with changed content) full-outer-joined on the
-# key with md5 fingerprints -> added/removed/changed/unchanged counts —
-# the decision input for incremental re-processing. ---
-@query(
-    "corpus_snapshot_diff",
-    oracle="""
-    WITH old AS (
-        SELECT doc_id,
-               md5(CASE WHEN doc_id % 8 = 1 THEN 'v1 ' || text ELSE text END) AS fp
-        FROM documents WHERE doc_id % 4 <> 3
-    ),
-    new AS (
-        SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 4 <> 2
-    )
-    SELECT change_type, CAST(count(*) AS BIGINT) AS n_docs
-    FROM (
-        SELECT CASE
-            WHEN old.fp IS NULL THEN 'added'
-            WHEN new.fp IS NULL THEN 'removed'
-            WHEN old.fp <> new.fp THEN 'changed'
-            ELSE 'unchanged' END AS change_type
-        FROM old FULL OUTER JOIN new USING (doc_id)
-    )
-    GROUP BY change_type
-    ORDER BY change_type
-    """,
-)
-def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.functions.delta import snapshot_diff
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    old = docs.filter(F.col("doc_id") % 4 != 3).select(
-        "doc_id",
-        F.md5(
-            F.when(F.col("doc_id") % 8 == 1, F.concat(F.lit("v1 "), F.col("text")))
-            .otherwise(F.col("text"))
-        ).alias("fp"),
-    )
-    new = docs.filter(F.col("doc_id") % 4 != 2).select("doc_id", F.md5("text").alias("fp"))
-    return (
-        snapshot_diff(old, new, ["doc_id"], "fp")
-        .groupBy("change_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .orderBy("change_type")
-    )
-
-
-# --- custom Python DataSource scan (sources/pydatasource.py): the
-# reference's ChunkedParquetReader (columnar_util.py:3276) as a Spark 4
-# Python data source — metadata-only chunk planning, Arrow-batch reads,
-# column projection and comparison-filter pushdown INSIDE the pyarrow
-# scan.  The integration blueprint for any Python-only columnar reader
-# (the uproot/ROOT scan would plug into exactly this shape).  Oracle
-# reads the same table natively, proving the source is transparent. ---
-@query(
-    "pyds_chunked_scan_stats",
-    oracle="""
-    SELECT lang,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents
-    WHERE n_chars > 150
-    GROUP BY lang
-    ORDER BY lang
-    """,
-)
-def pyds_chunked_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.sources.pydatasource import register
-
-    register(spark)
-    df = (
-        spark.read.format("chunked_parquet")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("columns", "lang,n_chars")
-        .load()
-    )
-    return (
-        df.filter(F.col("n_chars") > 150)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("lang")
-    )
-
-
-# --- CCNet-style perplexity bucketing (public pipeline: Wenzek et al.
-# 2020 — split each language's corpus into head/middle/tail by LM score;
-# head feeds training, tail gets dropped or down-weighted).  The LM is
-# the corpus unigram model (unigram_logprob_score's shape); buckets are
-# per-language score terciles — two column-pruned corpus scans
-# (vocabulary build, scoring) with the vocabulary broadcast back, then
-# tercile SIZES derived arithmetically from per-lang counts (no
-# per-language corpus sort — see the in-function comment). ---
-@query(
-    "ccnet_perplexity_buckets",
-    oracle="""
-    WITH words AS (
-        SELECT doc_id, lang, w
-        FROM (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
-             unnest(ws) AS t(w)
-        WHERE w <> ''
-    ),
-    vocab_all AS (SELECT w, count(*) AS c FROM words GROUP BY w),
-    vocab AS (SELECT w, c FROM vocab_all ORDER BY c DESC, w LIMIT {_ULM_K}),
-    total AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM vocab_all),
-    scored AS (
-        SELECT doc_id, lang,
-               round(avg(-ln(coalesce(CAST(c AS DOUBLE), 0.5) / n)), 8) AS nlp
-        FROM words LEFT JOIN vocab USING (w), total
-        GROUP BY doc_id, lang
-    ),
-    bucketed AS (
-        SELECT lang, nlp,
-               ntile(3) OVER (PARTITION BY lang ORDER BY nlp, doc_id) AS tercile
-        FROM scored
-    ),
-    lang_stats AS (
-        SELECT lang, round(avg(nlp), 4) AS lang_avg_nlp
-        FROM scored GROUP BY lang
-    )
-    SELECT b.lang,
-           CASE tercile WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           any_value(ls.lang_avg_nlp) AS lang_avg_nlp
-    FROM bucketed b JOIN lang_stats ls ON ls.lang = b.lang
-    GROUP BY b.lang, tercile
-    ORDER BY b.lang, tercile
-    """.replace("{_ULM_K}", str(_ULM_VOCAB_K)),
-)
-def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "lang", "text"])
-    words = docs.select(
-        "doc_id", "lang",
-        F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w"),
-    )
-    vocab, total = _unigram_lm(words)
-    scored = (
-        words.join(F.broadcast(vocab), "w", "left")
-        .join(F.broadcast(total))
-        .groupBy("doc_id", "lang")
-        # round before ordering: the avg is partial-aggregation
-        # order-dependent in its last ulps, and a near-tie straddling a
-        # tercile boundary must resolve identically on both engines
-        # (doc_id then breaks the now-exact tie)
-        .agg(F.round(F.avg(_unigram_neg_logp()), 8).alias("nlp"))
-    )
-    # The output aggregates terciles to COUNTS — and ntile(3) bucket
-    # sizes are a pure function of the per-language row count n (the
-    # first n % 3 buckets get ceil(n/3) rows, the rest floor(n/3)), so
-    # the per-language corpus sort the oracle's ntile implies never has
-    # to happen (VERDICT r9 weak #5): derive the three sizes
-    # arithmetically from the per-lang count table.  The per-LANGUAGE
-    # mean score keeps the oracle sensitive to the SCORING while staying
-    # insensitive to tercile-boundary float swaps — per-bucket extrema
-    # would reintroduce the round-4 knife-edge class a boundary doc flip
-    # triggers at larger sf.
-    lang_stats = scored.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"), F.round(F.avg("nlp"), 4).alias("lang_avg_nlp")
-    )
-    q = F.expr("n div 3")
-    r = F.col("n") % 3
-    buckets = F.array(
-        F.struct(F.lit("head").alias("bucket"), (q + (r >= 1).cast("long")).alias("n_docs")),
-        F.struct(F.lit("middle").alias("bucket"), (q + (r >= 2).cast("long")).alias("n_docs")),
-        F.struct(F.lit("tail").alias("bucket"), q.alias("n_docs")),
-    )
-    return (
-        lang_stats.select("lang", "lang_avg_nlp", F.explode(buckets).alias("b"))
-        .filter(F.col("b.n_docs") > 0)
-        .select("lang", F.col("b.bucket").alias("bucket"), F.col("b.n_docs").alias("n_docs"), "lang_avg_nlp")
-        .orderBy("lang", F.when(F.col("bucket") == "head", 1).when(F.col("bucket") == "middle", 2).otherwise(3))
-    )
-
-
-# --- full logistic-regression training loop (the gradient-descent member
-# of the iterative-training family next to kmeans_fit / PQ / BPE): K
-# fixed gradient steps via the shared _logreg_train kernel, with the
-# weight vector a bounded per-step artifact baked back into the next
-# step's plan as a literal array.  The oracle replays all K rounds in
-# materialized CTEs; both engines compute each row's logit as the SAME
-# ascending-j fold over a weight LIST, so the only cross-engine noise in
-# the weights is cross-row partial-sum order — far below the round-4
-# output. ---
-@query(
-    "ml_logreg_fit",
-    oracle=f"""
-    WITH {_logreg_fit_ctes()}
-    SELECT j, round(wl[j + 1], 4) AS w
-    FROM wl{_LOGREG_STEPS}, unnest(range(64)) AS t(j)
-    ORDER BY j
-    """,
-)
-def ml_logreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = _logreg_train(spark, sf_dir)
-    # rounding happens in the SQL engine (Python round() is banker's,
-    # Spark/DuckDB round are half-away — the cookbook's knife edge)
-    return (
-        local_frame(spark, [(j, float(w[j])) for j in range(64)], "j int, w double")
-        .select("j", F.round("w", 4).alias("w"))
-        .orderBy("j")
-    )
-
-
-# --- quality-classifier corpus filter (the classifier-filtering stage of
-# GPT/LLaMA-style data pipelines: train a cheap linear classifier on
-# labeled examples, score EVERY document, keep the high-quality side).
-# Training reuses the logreg loop above; scoring is an in-row dot product
-# against the 64 trained weights baked in as literals — zero shuffle, no
-# join, no UDF — and the keep decision is ``z >= 0`` (the sigmoid-0.5
-# threshold expressed on the logit): the in-row fold is the same
-# ascending order in both engines and no transcendental sits at the
-# decision point, so the only residual cross-engine noise is ulp-level
-# disagreement in the trained weights themselves (cross-row partial-sum
-# order) — a row flips only when |z| lands inside that noise band around
-# 0, orders of magnitude tighter than the ``round(p, 4)`` knife edge an
-# output-side threshold would have.  Kept doc metadata arrives via
-# one equi-join on doc_id (broadcastable: the kept-id side is a
-# projection of the scored scan). ---
-@query(
-    "quality_classifier_filter",
-    oracle=f"""
-    WITH {_logreg_fit_ctes()},
-    scored AS MATERIALIZED (
-        SELECT vec_id,
-               list_aggregate(list_transform(range(1, 65), j -> wl[j] * x[j]), 'sum') AS z
-        FROM feat, wl{_LOGREG_STEPS}
-    )
-    SELECT d.doc_id, d.lang, d.source, round(1.0 / (1.0 + exp(-s.z)), 4) AS quality
-    FROM scored s JOIN documents d ON d.doc_id = s.vec_id
-    WHERE s.z >= 0
-    ORDER BY d.doc_id
-    """,
-)
-def quality_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = _logreg_train(spark, sf_dir)
-    # y/label are pruned out of the scan: only vec_id + embedding are read
-    scored = _logreg_feat(spark, sf_dir, with_id=True).select(
-        "vec_id", _logreg_logit(w).alias("z")
-    )
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "lang", "source"])
-    return (
-        scored.filter(F.col("z") >= 0)
-        .join(docs, scored.vec_id == docs.doc_id)
-        .select(
-            "doc_id", "lang", "source",
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z"))), 4).alias("quality"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- classifier calibration curve (reliability diagram): bucket the
-# trained logreg's predicted probability into deciles and compare the
-# mean prediction against the observed positive rate per bucket — the
-# standard check before using classifier scores as sampling weights or
-# keep thresholds in a curation pipeline.  ONE aggregation over the
-# scored scan (map-side partial per bucket); the trained weights arrive
-# as plan literals via the shared kernel, so nothing but 10 bucket rows
-# ever moves.  A row within float-ulp of a decile edge could bin
-# differently across engines (p needs exp()) — same measure-zero class
-# as the filter's logit-sign note above. ---
-@query(
-    "ml_calibration_curve",
-    oracle=f"""
-    WITH {_logreg_fit_ctes()},
-    scored AS MATERIALIZED (
-        SELECT y,
-               1.0 / (1.0 + exp(-list_aggregate(
-                   list_transform(range(1, 65), j -> wl[j] * x[j]), 'sum'))) AS p
-        FROM feat, wl{_LOGREG_STEPS}
-    )
-    SELECT least(CAST(floor(p * 10) AS INT), 9) AS bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           round(avg(p), 4) AS mean_pred,
-           round(avg(y), 4) AS frac_pos
-    FROM scored
-    GROUP BY 1 ORDER BY 1
-    """,
-)
-def ml_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = _logreg_train(spark, sf_dir)
-    scored = _logreg_feat(spark, sf_dir).select("y", _logreg_prob(w).alias("p"))
-    return (
-        scored.groupBy(
-            F.least(F.floor(F.col("p") * 10).cast("int"), F.lit(9)).alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("p"), 4).alias("mean_pred"),
-            F.round(F.avg("y"), 4).alias("frac_pos"),
-        )
-        .orderBy("bucket")
-    )
+    return _ivf_topk(emb, _ivf_trained_cents(spark, sf_dir))
 
 
 # --- hard-negative mining (contrastive-training support): for each
@@ -6129,646 +1568,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
         .select("anchor_id", "negative_id", "negative_label", F.round("sim", 4).alias("sim"), "rk")
         .orderBy("anchor_id", "rk")
-    )
-
-
-# --- tokenizer fertility by language (the standard multilingual
-# tokenizer-quality metric: average BPE tokens per word, plus the
-# chars-per-token compression rate).  Same trained-merge replace chain
-# as bpe_encode_corpus (static in-row expression, no UDF, no shuffle
-# before the per-language aggregate); the ratios divide exact integer
-# sums, so both engines agree bit-exactly before the round. ---
-@query(
-    "bpe_fertility_by_lang",
-    oracle=f"""
-    WITH {_bpe_round_ctes()},
-    encoded AS (
-        SELECT lang,
-               {"".join("replace(" for _ in range(_BPE_ROUNDS))}
-                   regexp_replace({_bpe_clean_sql('w')}, '(.)', '<\\1>', 'g')
-               {"".join(
-                   f", (SELECT '<' || a || '><' || b || '>' FROM best{r})"
-                   f", (SELECT '<' || a || b || '>' FROM best{r}))"
-                   for r in range(1, _BPE_ROUNDS + 1)
-               )} AS s
-        FROM (
-            SELECT lang, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-            FROM documents
-        )
-        WHERE length({_bpe_clean_sql('w')}) > 0
-    )
-    SELECT lang,
-           CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(len(string_split(s, '><'))) AS BIGINT) AS n_tokens,
-           round(sum(len(string_split(s, '><'))) * 1.0 / count(*), 4) AS fertility,
-           round(sum(length({_bpe_clean_sql('s')})) * 1.0
-                 / sum(len(string_split(s, '><'))), 4) AS chars_per_token
-    FROM encoded
-    GROUP BY lang ORDER BY lang
-    """,
-)
-def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merges = bpe_train(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents", columns=["lang", "text"])
-    words = docs.select(
-        "lang",
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("w"),
-    ).filter(F.length(_bpe_clean_word(F.col("w"))) > 0)
-    enc = bpe_encode_expr(merges)
-    per_word = words.select(
-        "lang",
-        F.size(_bpe_syms(enc)).alias("nt"),
-        F.length(_bpe_clean_word(enc)).alias("nc"),
-    )
-    return (
-        per_word.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("nt").alias("n_tokens"),
-            F.round(F.sum("nt") / F.count(F.lit(1)), 4).alias("fertility"),
-            F.round(F.sum("nc") / F.sum("nt"), 4).alias("chars_per_token"),
-        )
-        .orderBy("lang")
-    )
-
-
-# --- unigram-LM tokenizer (the SentencePiece unigram model, Kudo 2018
-# — the production complement to BPE; VERDICT r7 next #3).  Same
-# scalable skeleton as bpe_train: the corpus collapses ONCE to the
-# word-count table (vocabulary-sized), training rounds then touch only
-# vocab-sized tables with bounded driver artifacts.  Algorithm (the
-# hard-EM / Viterbi variant, deterministic end to end):
-#   1. SEED: every substring of length 1.._ULM_MAXLEN of every word,
-#      weighted by word count; vocab_0 = all single chars + the top
-#      _ULM_SEED multi-char pieces by (count desc, piece asc).
-#   2. SCORES: integer log-likelihood grid sc_q(p) =
-#      -floor(-ln(cnt/total)*GRID + 0.5) — ONE shared fp form computed
-#      in Spark expressions and replayed verbatim by the oracle, with
-#      the mixture-sampler knife-edge guard (raise in-plan if an ln ulp
-#      could flip the floor) so cross-engine divergence is loud.
-#   3. EM ROUND (x_ULM_ROUNDS): Viterbi-segment every word under the
-#      current integer scores (max total score, tie -> fewest pieces,
-#      tie -> lexicographically smallest space-joined sequence — the
-#      space separator sorts below every word char, which makes the
-#      DP's per-position prefix choice globally lexicographic-optimal);
-#      re-count piece usage weighted by word counts; multi-char pieces
-#      with zero use drop out, single chars floor at count 1 (coverage
-#      for encode-time OOV); re-score.
-#   4. PRUNE: keep all single chars + the top _ULM_VOCAB multi-char
-#      pieces by (count desc, piece asc); final scores over the pruned
-#      total.
-# The Viterbi step is an Arrow-batched mapInPandas over the word-count
-# table with the bounded score dict in the closure — integer-only math
-# inside Python (no fp, no rounding), so the banker's-rounding trap
-# cannot apply.  At 100 TB the corpus is touched once (word counts +
-# the encode pass); everything else is vocabulary-sized.  The oracle
-# replays the ENTIRE training chain in SQL: seeding, both EM rounds
-# (Viterbi via recursive-CTE path enumeration — words here are <= 8
-# chars, so paths are bounded), floors, prune, final scores. ---
-_ULM_MAXLEN = 4
-_ULM_SEED = 64
-_ULM_PRUNE = 32
-_ULM_ROUNDS = 2
-_ULM_GRID = 1_000_000
-
-
-def _ulm_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["text"])
-    words = docs.select(
-        F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    )
-    # vocabulary-sized: materialize so training rounds never rescan
-    return (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .transform(checkpoint_df)
-    )
-
-
-def _ulm_scores(spark: SparkSession, vocab: dict[str, int]) -> dict[str, int]:
-    """Integer-grid scores for a bounded vocab — model-sized DRIVER math
-    (r13: the input and output are driver dicts already; a Spark job per
-    EM step was 4 scheduler round-trips per build for vocab-bounded
-    work).  The fp chain (one division, one ln, one grid floor) is the
-    same IEEE expression the oracle replays in SQL, and the knife-edge
-    guard raises whenever ``-ln(cnt/total)*grid + 0.5`` lands within the
-    cross-engine ln guard band (max(1e-9, |z|*1e-12)) of a rounding
-    boundary — libm/JVM/DuckDB ln agree to ~1 ulp, so outside the band
-    every engine floors to the same integer (the
-    mixture_temperature_sample pattern)."""
-    total = float(sum(vocab.values()))
-    out: dict[str, int] = {}
-    for p, c in vocab.items():
-        z = -math.log(float(int(c)) / total) * float(_ULM_GRID) + 0.5
-        if abs(z - math.floor(z + 0.5)) < max(1e-9, abs(z) * 1e-12):
-            raise ValueError(
-                "unigram_lm: -ln(cnt/total)*grid + 0.5 lands within the"
-                " cross-engine ln guard band of a rounding boundary — bump"
-                " _ULM_GRID for this corpus"
-            )
-        out[p] = int(-math.floor(z))
-    return out
-
-
-def _ulm_viterbi_word(w: str, sc: dict[str, int], maxlen: int) -> list[str]:
-    """Integer Viterbi: maximize total score, tie -> fewest pieces,
-    tie -> lexicographically smallest space-joined sequence."""
-    best: list = [None] * (len(w) + 1)
-    best[0] = (0, 0, "")
-    for j in range(1, len(w) + 1):
-        bj = None
-        for i in range(max(0, j - maxlen), j):
-            bi = best[i]
-            if bi is None:
-                continue
-            s = sc.get(w[i:j])
-            if s is None:
-                continue
-            cand = (bi[0] + s, bi[1] + 1, (bi[2] + " " + w[i:j]) if bi[2] else w[i:j])
-            if (
-                bj is None
-                or cand[0] > bj[0]
-                or (cand[0] == bj[0] and cand[1] < bj[1])
-                or (cand[0] == bj[0] and cand[1] == bj[1] and cand[2] < bj[2])
-            ):
-                bj = cand
-        best[j] = bj
-    if best[-1] is None:  # unreachable: every corpus char is in the vocab
-        raise ValueError(f"unigram_lm: uncoverable word {w!r}")
-    return best[-1][2].split(" ")
-
-
-def _ulm_segment(wc: DataFrame, sc: dict[str, int]) -> DataFrame:
-    """Arrow-batched Viterbi over the word-count table -> (w, cnt,
-    pieces).  Integer-only Python; the score dict is vocab-bounded.
-
-    r13 measurement note (guide §1): spreading this frame across cores
-    was tried and REVERTED — the synthetic corpus has a ~31-word
-    vocabulary, so the DP input is tens of rows and a round-robin
-    repartition costs 2-5x the whole serial pass (0.6 s → 1.3-5.4 s
-    measured at sf0.1).  On a real corpus (1e6+ distinct words) the
-    caller should ``spread`` the word-count table first."""
-    scores = dict(sc)
-
-    def run(it):
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "cnt": pdf["cnt"],
-                    "pieces": [
-                        _ulm_viterbi_word(w, scores, _ULM_MAXLEN) for w in pdf["w"]
-                    ],
-                }
-            )
-
-    return wc.mapInPandas(run, schema="w string, cnt long, pieces array<string>")
-
-
-def unigram_train_rows(
-    spark: SparkSession, wc: DataFrame
-) -> list[tuple[str, int, int]]:
-    """Run the full seeding + EM + prune chain over a word-count table;
-    returns the final vocab as [(piece, cnt, score_q)] sorted by piece."""
-    subs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.length("w") - 1),
-            lambda i: F.filter(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(_ULM_MAXLEN)),
-                    lambda l: F.when(
-                        i + l <= F.length("w"), F.col("w").substr(i + 1, l)
-                    ),
-                ),
-                lambda x: x.isNotNull(),
-            ),
-        )
-    )
-    pieces = (
-        wc.select(F.explode(subs).alias("piece"), "cnt")
-        .groupBy("piece")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    # ONE seeding job: single-char coverage rows + the top-_ULM_SEED
-    # multi-char candidates collected together (r13 — two collects over
-    # the same substring aggregate were two scheduler round-trips and
-    # two evaluations of the aggregate)
-    seeded = (
-        pieces.filter(F.length("piece") == 1)
-        .select("piece", "cnt", F.lit(True).alias("is_char"))
-        .unionAll(
-            pieces.filter(F.length("piece") >= 2)
-            .orderBy(F.desc("cnt"), F.asc("piece"))
-            .limit(_ULM_SEED)
-            .select("piece", "cnt", F.lit(False).alias("is_char"))
-        )
-        .collect()
-    )
-    chars = {r["piece"]: int(r["cnt"]) for r in seeded if r["is_char"]}
-    multi = [r for r in seeded if not r["is_char"]]
-    vocab = dict(chars)
-    vocab.update({r["piece"]: int(r["cnt"]) for r in multi})
-    sc = _ulm_scores(spark, vocab)
-    for _ in range(_ULM_ROUNDS):
-        used = (
-            _ulm_segment(wc, sc)
-            .select(F.explode("pieces").alias("piece"), "cnt")
-            .groupBy("piece")
-            .agg(F.sum("cnt").alias("cnt"))
-            .collect()
-        )
-        uc = {r["piece"]: int(r["cnt"]) for r in used}
-        vocab = {p: c for p, c in uc.items() if len(p) >= 2}
-        for ch in chars:  # single chars always survive (OOV-coverage floor)
-            vocab[ch] = uc.get(ch, 1)
-        sc = _ulm_scores(spark, vocab)
-    kept_multi = sorted(
-        ((p, c) for p, c in vocab.items() if len(p) >= 2),
-        key=lambda pc: (-pc[1], pc[0]),
-    )[:_ULM_PRUNE]
-    final = {p: c for p, c in kept_multi}
-    final.update({ch: vocab[ch] for ch in chars})
-    sc = _ulm_scores(spark, final)
-    return sorted((p, c, sc[p]) for p, c in final.items())
-
-
-def unigram_vocab_store_path(sf_dir: str) -> str:
-    """Content-addressed location of the PERSISTED trained vocab (the
-    tf_learned_gate/PQ-codebook artifact contract, VERDICT r8 next #7):
-    the tag folds in every training hyperparameter, so a changed
-    corpus or config trains fresh and an unchanged one is reused across
-    sessions."""
-    return store_path(
-        sf_dir,
-        "documents",
-        "ulm_vocab",
-        f"ulm-v1-m{_ULM_MAXLEN}-s{_ULM_SEED}-p{_ULM_PRUNE}-r{_ULM_ROUNDS}-g{_ULM_GRID}",
-    )
-
-
-def build_unigram_vocab_store(spark: SparkSession, sf_dir: str) -> str:
-    """Train the unigram vocab and persist it (piece, cnt, score_q) — the
-    once-per-corpus BUILD, skipped whole while the store is reused;
-    serving (encode, streaming tokenize) reads this artifact and pays
-    only the corpus pass."""
-    import os
-
-    def build(p: str) -> None:
-        rows = unigram_train_rows(spark, _ulm_word_counts(spark, sf_dir))
-        df = local_frame(spark, rows, "piece string, cnt long, score_q long")
-        df.coalesce(1).write.parquet(os.path.join(p, "vocab"))
-
-    return ensure_store(unigram_vocab_store_path(sf_dir), build)
-
-
-@artifact("unigram_vocab")
-def _ulm_vocab(spark: SparkSession, sf_dir: str) -> list[tuple[str, int, int]]:
-    """The trained vocab ``[(piece, cnt, score_q)]``, the
-    ``unigram_vocab`` session artifact served from the PERSISTED store
-    (built on first touch): encode consumers no longer pay the two EM
-    segmentation jobs per fresh session — only the first session per
-    corpus trains (r8 bench: 2.88 s encode line was mostly in-session
-    training)."""
-    import os
-
-    path = build_unigram_vocab_store(spark, sf_dir)
-    return sorted(
-        (r.piece, int(r.cnt), int(r.score_q))
-        for r in spark.read.parquet(os.path.join(path, "vocab")).collect()
-    )
-
-
-def _ulm_score_sql(cnt: str, total: str) -> str:
-    return (
-        f"CAST(-floor(-ln(CAST({cnt} AS DOUBLE) / CAST({total} AS DOUBLE))"
-        f" * {_ULM_GRID} + 0.5) AS BIGINT)"
-    )
-
-
-def _ulm_viterbi_ctes(tag: str, scores: str) -> str:
-    """Per-position DP replay of the integer Viterbi (VERDICT r8 next
-    #3): ONE recursion level per character position, each row carrying a
-    sliding window of the last ``_ULM_MAXLEN`` best prefix states, so
-    the replay is LINEAR in word length — the previous path-enumeration
-    form materialized every segmentation path and exploded
-    combinatorially on long words.  Struct field order (nsc = -score,
-    np, seq) makes ``list_sort``'s minimum the engine kernel's exact
-    (score desc, pieces asc, space-joined seq asc) tie-break
-    (:func:`_ulm_viterbi_word`; DuckDB's binary VARCHAR collation
-    matches Python's codepoint compare).  Emits ``dp{{tag}}`` and
-    ``best{{tag}}(w, cnt, seq, np)``."""
-    m = _ULM_MAXLEN
-    null_s = "CAST(NULL AS STRUCT(nsc BIGINT, np INTEGER, seq VARCHAR))"
-    init = ",\n            ".join(
-        [null_s] * (m - 1) + ["{'nsc': CAST(0 AS BIGINT), 'np': 0, 'seq': ''}"]
-    )
-    shift = ", ".join(f"d.win[{i}]" for i in range(2, m + 1))
-    cands = []
-    for l in range(1, m + 1):
-        idx = m - l + 1  # window slot holding the state at position pos+1-l
-        cands.append(f"""
-              CASE WHEN d.pos + 1 >= {l} AND s{l}.piece IS NOT NULL
-                        AND d.win[{idx}] IS NOT NULL
-                   THEN {{'nsc': d.win[{idx}].nsc - s{l}.sc,
-                          'np': d.win[{idx}].np + 1,
-                          'seq': CASE WHEN d.win[{idx}].seq = '' THEN s{l}.piece
-                                      ELSE d.win[{idx}].seq || ' ' || s{l}.piece END}}
-              END""")
-    joins = "\n".join(
-        f"        LEFT JOIN {scores} s{l} ON d.pos + 1 >= {l}"
-        f" AND s{l}.piece = substr(d.w, d.pos + 2 - {l}, {l})"
-        for l in range(1, m + 1)
-    )
-    return f"""
-    dp{tag} AS (
-        SELECT w, cnt, 0 AS pos,
-               [{init}] AS win
-        FROM wcnt
-        UNION ALL
-        SELECT d.w, d.cnt, d.pos + 1,
-               [{shift},
-                list_sort(list_filter([{",".join(cands)}
-                ], x -> x IS NOT NULL))[1]]
-        FROM dp{tag} d
-{joins}
-        WHERE d.pos < len(d.w)
-    ),
-    best{tag} AS MATERIALIZED (
-        SELECT w, cnt, win[{m}].seq AS seq, win[{m}].np AS np
-        FROM dp{tag} WHERE pos = len(w)
-    )"""
-
-
-def _ulm_train_ctes() -> str:
-    """Shared training-replay CTE chain (no leading WITH; callers open
-    WITH RECURSIVE): wcnt -> seed -> v0/s0 -> EM rounds -> vf/sf."""
-
-    def viterbi(n: int, vocab: str, scores: str) -> str:
-        # vocab arg kept for call-site symmetry; the scores table is
-        # one-to-one with it, so the DP joins scores only
-        return _ulm_viterbi_ctes(str(n), scores)
-
-    parts = [
-        f"""
-    wcnt AS MATERIALIZED (
-        SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-            SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-            FROM documents
-        ) GROUP BY w
-    ),
-    seedp AS MATERIALIZED (
-        SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt FROM (
-            SELECT substr(w, i + 1, l) AS piece, cnt
-            FROM wcnt,
-                 unnest(range(len(w))) AS t(i),
-                 unnest(range(1, {_ULM_MAXLEN + 1})) AS u(l)
-            WHERE i + l <= len(w)
-        ) GROUP BY piece
-    ),
-    chars AS (SELECT piece, cnt FROM seedp WHERE len(piece) = 1),
-    v0 AS MATERIALIZED (
-        SELECT piece, cnt FROM chars
-        UNION ALL
-        SELECT piece, cnt FROM (
-            SELECT piece, cnt,
-                   row_number() OVER (ORDER BY cnt DESC, piece) AS rn
-            FROM seedp WHERE len(piece) >= 2
-        ) WHERE rn <= {_ULM_SEED}
-    ),
-    s0 AS MATERIALIZED (
-        SELECT piece, {_ulm_score_sql('cnt', '(SELECT sum(cnt) FROM v0)')} AS sc
-        FROM v0
-    )"""
-    ]
-    for n in range(1, _ULM_ROUNDS + 1):
-        parts.append(viterbi(n, f"v{n - 1}", f"s{n - 1}"))
-        parts.append(
-            f"""
-    c{n} AS MATERIALIZED (
-        SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt FROM (
-            SELECT unnest(string_split(seq, ' ')) AS piece, cnt FROM best{n}
-        ) GROUP BY piece
-    ),
-    v{n} AS MATERIALIZED (
-        SELECT piece, cnt FROM c{n} WHERE len(piece) >= 2
-        UNION ALL
-        SELECT ch.piece, COALESCE(c.cnt, 1) AS cnt
-        FROM chars ch LEFT JOIN (SELECT piece, cnt FROM c{n} WHERE len(piece) = 1) c
-             ON c.piece = ch.piece
-    ),
-    s{n} AS MATERIALIZED (
-        SELECT piece, {_ulm_score_sql('cnt', f'(SELECT sum(cnt) FROM v{n})')} AS sc
-        FROM v{n}
-    )"""
-        )
-    parts.append(
-        f"""
-    vf AS MATERIALIZED (
-        SELECT piece, cnt FROM (
-            SELECT piece, cnt,
-                   row_number() OVER (ORDER BY cnt DESC, piece) AS rn
-            FROM v{_ULM_ROUNDS} WHERE len(piece) >= 2
-        ) WHERE rn <= {_ULM_PRUNE}
-        UNION ALL
-        SELECT piece, cnt FROM v{_ULM_ROUNDS} WHERE len(piece) = 1
-    ),
-    sf AS MATERIALIZED (
-        SELECT piece, {_ulm_score_sql('cnt', '(SELECT sum(cnt) FROM vf)')} AS sc
-        FROM vf
-    )"""
-    )
-    return ",".join(parts)
-
-
-@query(
-    "unigram_lm_train",
-    oracle=f"""
-    WITH RECURSIVE {_ulm_train_ctes()}
-    SELECT vf.piece, CAST(len(vf.piece) AS INT) AS piece_len, vf.cnt,
-           sf.sc AS score_q
-    FROM vf JOIN sf ON sf.piece = vf.piece
-    ORDER BY vf.piece
-    """,
-)
-def unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM tokenizer training end to end (see the block comment):
-    the final vocab with counts and integer-grid scores, fully replayed
-    by the oracle's recursive-CTE training chain."""
-    rows = _ulm_vocab(spark, sf_dir)
-    return local_frame(
-        spark,
-        [(p, len(p), c, s) for p, c, s in rows],
-        "piece string, piece_len int, cnt long, score_q long",
-    ).orderBy("piece")
-
-
-#: shared by the batch encode and its streaming-ingest twin — hash
-#: equality across the two IS the maintenance proof (the lang totals
-#: form a monoid over micro-batch partials)
-_ULM_ENCODE_ORACLE = f"""
-    WITH RECURSIVE {_ulm_train_ctes()},
-    {_ulm_viterbi_ctes("E", "sf")},
-    wtok AS MATERIALIZED (
-        SELECT w, np AS ntok FROM bestE
-    ),
-    corpus AS (
-        SELECT lang, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-        FROM documents
-    )
-    SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(ntok) AS BIGINT) AS n_tokens,
-           CAST(sum(ntok) * 10000 // count(*) AS BIGINT) AS fert_q
-    FROM corpus JOIN wtok USING (w)
-    GROUP BY lang ORDER BY lang
-    """
-
-
-@query("unigram_encode_corpus", oracle=_ULM_ENCODE_ORACLE)
-def unigram_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus encode under the trained unigram vocab, reported as the
-    per-language fertility harness (the bpe_fertility_by_lang shape):
-    Viterbi runs once per DISTINCT word (vocabulary-sized mapInPandas),
-    the corpus-scale pass is explode + broadcast word->ntok join + one
-    lang-keyed aggregation; fertility is integer-scaled (x10000)."""
-    rows = _ulm_vocab(spark, sf_dir)
-    sc = {p: s for p, c, s in rows}
-    wtok = _ulm_segment(_ulm_word_counts(spark, sf_dir), sc).select(
-        "w", F.size("pieces").alias("ntok")
-    )
-    docs = load_table(spark, sf_dir, "documents", columns=["lang", "text"])
-    words = spread(docs).select(
-        "lang", F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    )
-    return (
-        words.join(F.broadcast(wtok), "w")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("ntok").alias("n_tokens"),
-        )
-        .select(
-            "lang",
-            "n_words",
-            "n_tokens",
-            F.expr("n_tokens * 10000 div n_words").alias("fert_q"),
-        )
-        .orderBy("lang")
-    )
-
-
-# --- bigram-LM perplexity scoring (the CCNet/KenLM quality-filter
-# shape, one order above the existing unigram-LM scorer): documents are
-# scored by their average negative log-likelihood under a corpus-trained
-# Laplace-smoothed bigram model, P(b|a) = (c2(a,b)+1) / (c1(a)+V).
-# Training is two narrow aggregations (bigram counts; first-word totals
-# derive from them — no second corpus pass for the denominator) and the
-# model stays DISTRIBUTED: per-bigram integer-grid log-probs are
-# computed in-plan (one division, one ln, one grid floor — the shared
-# oracle form, with the knife-edge raise), never collected, and the
-# scoring join is bigram-keyed.  Scores are exact integer sums; the
-# average and the half-nat perplexity bucket use positive-side integer
-# division (nll >= 0), so Spark's truncating `div` and DuckDB's
-# flooring `//` agree.  Docs under 2 words have no bigrams and drop
-# out (the CCNet convention: too short to score). ---
-_BLM_GRID = 1_000_000
-_BLM_BUCKET = 500_000  # half-nat perplexity buckets
-
-
-@query(
-    "bigram_lm_perplexity",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        FROM documents
-    ),
-    ex AS MATERIALIZED (
-        SELECT doc_id, ws[i+1] AS a, ws[i+2] AS b
-        FROM toks, unnest(range(len(ws) - 1)) AS t(i)
-    ),
-    c2 AS MATERIALIZED (
-        SELECT a, b, CAST(count(*) AS BIGINT) AS cnt2 FROM ex GROUP BY a, b
-    ),
-    c1 AS (SELECT a, CAST(sum(cnt2) AS BIGINT) AS cnt1 FROM c2 GROUP BY a),
-    vv AS (
-        SELECT CAST(count(DISTINCT w) AS BIGINT) AS v
-        FROM (SELECT unnest(ws) AS w FROM toks)
-    ),
-    lp AS MATERIALIZED (
-        SELECT c2.a, c2.b,
-               CAST(-floor(-ln(CAST(cnt2 + 1 AS DOUBLE) / CAST(cnt1 + v AS DOUBLE))
-                           * {_BLM_GRID} + 0.5) AS BIGINT) AS lp_q
-        FROM c2 JOIN c1 USING (a) CROSS JOIN vv
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(-sum(lp_q) AS BIGINT) AS nll_q,
-           CAST((-sum(lp_q)) // count(*) AS BIGINT) AS nll_avg_q,
-           CAST(((-sum(lp_q)) // count(*)) // {_BLM_BUCKET} AS BIGINT) AS ppl_bucket
-    FROM ex JOIN lp USING (a, b)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc bigram-LM negative log-likelihood (integer grid), average
-    and half-nat perplexity bucket — see the block comment."""
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    ws = F.filter(F.split("text", " "), lambda t: t != "")
-    d = docs.select("doc_id", ws.alias("ws"))
-    npairs = F.size("ws") - 1
-    bigs = F.when(
-        npairs > 0,
-        F.transform(
-            F.sequence(F.lit(0), npairs - 1),
-            lambda i: F.struct(
-                F.element_at("ws", i + 1).alias("a"),
-                F.element_at("ws", i + 2).alias("b"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    ex = d.select("doc_id", F.explode(bigs).alias("bg")).select(
-        "doc_id", F.col("bg.a").alias("a"), F.col("bg.b").alias("b")
-    )
-    c2 = ex.groupBy("a", "b").agg(F.count(F.lit(1)).alias("cnt2"))
-    # first-word totals as a window over the bigram table (NOT a second
-    # aggregation branch: a self-referencing c2 would compute the whole
-    # bigram-count subtree twice — 4 scans instead of 3)
-    c2 = c2.withColumn("cnt1", F.sum("cnt2").over(W.partitionBy("a")))
-    vv = d.select(F.explode("ws").alias("w")).agg(
-        F.countDistinct("w").alias("v")
-    )
-    z = (
-        -F.log(
-            (F.col("cnt2") + 1).cast("double") / (F.col("cnt1") + F.col("v")).cast("double")
-        )
-        * F.lit(float(_BLM_GRID))
-        + F.lit(0.5)
-    )
-    edge = F.abs(z - F.round(z, 0)) < F.greatest(F.lit(1e-9), F.abs(z) * F.lit(1e-12))
-    lp_q = (
-        -F.when(
-            edge,
-            F.expr(
-                "CAST(raise_error('bigram_lm_perplexity: -ln(p)*grid + 0.5 lands"
-                " within the cross-engine ln guard band of a rounding boundary —"
-                " bump _BLM_GRID for this corpus') AS DOUBLE)"
-            ),
-        ).otherwise(F.floor(z))
-    ).cast("long")
-    lp = c2.crossJoin(F.broadcast(vv)).select("a", "b", lp_q.alias("lp_q"))
-    return (
-        ex.join(lp, ["a", "b"])
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_bigrams"), (-F.sum("lp_q")).alias("nll_q"))
-        .select(
-            "doc_id",
-            "n_bigrams",
-            "nll_q",
-            F.expr("nll_q div n_bigrams").alias("nll_avg_q"),
-            F.expr(f"(nll_q div n_bigrams) div {_BLM_BUCKET}").alias("ppl_bucket"),
-        )
-        .orderBy("doc_id")
     )
 
 
@@ -6960,644 +1759,6 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- DoReMi-style domain reweighting (data-mixing optimization, Xie et
-# al.): multiplicative-weights iterations over per-domain excess proxy
-# loss decide how much of each source the training mixture should draw.
-# The distributed part is ONE corpus aggregation — per-token unigram
-# negative log-prob, quantized to an integer grid per token and
-# integer-summed so engine summation order cannot drift the domain loss
-# (the exact-integer-sum-first pattern from SCALE_VALIDATION #5); the
-# iterations then run driver-side over the |domains|-row table (the
-# model artifact, like the logreg weights), weights re-quantized each
-# round, and the oracle unrolls the identical rounds in CTEs. ---
-_DOREMI_ETA = 0.5
-_DOREMI_ROUNDS = 5
-_DOREMI_Q = float(2**20)
-
-
-def _doremi_round_ctes() -> str:
-    parts = [f"""
-    w0 AS MATERIALIZED (
-        SELECT source, 1.0 / (SELECT count(*) FROM dom_loss) AS w FROM dom_loss
-    )"""]
-    for t in range(1, _DOREMI_ROUNDS + 1):
-        parts.append(f""",
-    m{t} AS MATERIALIZED (
-        SELECT sum(w.w * l.loss) AS m
-        FROM w{t - 1} w JOIN dom_loss l USING (source)
-    ),
-    u{t} AS MATERIALIZED (
-        SELECT w.source, w.w * exp({_DOREMI_ETA} * (l.loss - m{t}.m)) AS uw
-        FROM w{t - 1} w JOIN dom_loss l USING (source), m{t}
-    ),
-    w{t} AS MATERIALIZED (
-        SELECT source,
-               floor(uw / (SELECT sum(uw) FROM u{t}) * {_DOREMI_Q} + 0.5) / {_DOREMI_Q} AS w
-        FROM u{t}
-    )""")
-    return "".join(parts)
-
-
-@query(
-    "doremi_domain_weights",
-    oracle=f"""
-    WITH words AS (
-        SELECT doc_id, source, w
-        FROM (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
-             unnest(ws) AS t(w)
-        WHERE w <> ''
-    ),
-    vocab_all AS (SELECT w, count(*) AS c FROM words GROUP BY w),
-    vocab AS (SELECT w, c FROM vocab_all ORDER BY c DESC, w LIMIT {{_ULM_K}}),
-    total AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM vocab_all),
-    tok AS (
-        SELECT source,
-               CAST(floor(-ln(coalesce(CAST(c AS DOUBLE), 0.5) / n) * 1000000 + 0.5) AS BIGINT) AS lq
-        FROM words LEFT JOIN vocab USING (w), total
-    ),
-    dom_loss AS MATERIALIZED (
-        SELECT source, CAST(count(*) AS BIGINT) AS n_tokens,
-               (CAST(sum(lq) AS BIGINT) * 1.0 / count(*)) / 1000000.0 AS loss
-        FROM tok GROUP BY source
-    ),
-    {_doremi_round_ctes()}
-    SELECT l.source, l.n_tokens,
-           CAST(floor(l.loss * 1000000 + 0.5) AS BIGINT) AS loss_q,
-           CAST(floor(w.w * 1000000 + 0.5) AS BIGINT) AS weight_q
-    FROM dom_loss l JOIN w{_DOREMI_ROUNDS} w USING (source)
-    ORDER BY l.source
-    """.replace("{{_ULM_K}}", "{_ULM_K}").replace("{_ULM_K}", str(_ULM_VOCAB_K)),
-)
-def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final mixture weight per source after ``_DOREMI_ROUNDS`` rounds of
-    multiplicative weights on excess loss vs the weighted corpus mean —
-    domains with above-average proxy loss gain sampling mass."""
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "text"])
-    words = docs.select(
-        "source", F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("w")
-    )
-    vocab, total = _unigram_lm(words)
-    lq = F.floor(_unigram_neg_logp() * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-    dom = (
-        words.join(F.broadcast(vocab), "w", "left")
-        .join(F.broadcast(total))
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_tokens"), F.sum(lq).alias("sl"))
-        .collect()
-    )
-    rows = sorted(dom, key=lambda r: r.source)
-    loss = {r.source: (r.sl * 1.0 / r.n_tokens) / 1e6 for r in rows}
-    w = {r.source: 1.0 / len(rows) for r in rows}
-    for _ in range(_DOREMI_ROUNDS):
-        m = sum(w[s] * loss[s] for s in sorted(w))
-        u = {s: w[s] * math.exp(_DOREMI_ETA * (loss[s] - m)) for s in w}
-        z = sum(u[s] for s in sorted(u))
-        w = {s: math.floor(u[s] / z * _DOREMI_Q + 0.5) / _DOREMI_Q for s in u}
-    out = [
-        (
-            r.source,
-            int(r.n_tokens),
-            int(math.floor(loss[r.source] * 1e6 + 0.5)),
-            int(math.floor(w[r.source] * 1e6 + 0.5)),
-        )
-        for r in rows
-    ]
-    return local_frame(
-        spark, out, "source string, n_tokens long, loss_q long, weight_q long"
-    ).orderBy("source")
-
-
-# --- repetition-based quality signals (the Gopher/MassiveText repetition
-# rules): excessive n-gram repetition is the strongest cheap predictor of
-# boilerplate/SEO-spam documents.  Two exact integer-grid signals per
-# doc: the token fraction covered by the single most frequent bigram
-# (ties to the lexicographically smallest bigram — deterministic), and
-# the fraction of trigram slots occupied by trigrams appearing more than
-# once.  Plan shape: one token projection feeds two in-row adjacent
-# n-gram expansions; both counts partial-aggregate map-side at
-# (doc, gram) grain, then fold to doc grain — the dedup-family shuffle
-# pattern, linear in corpus token count. ---
-_REP_SCALE = 1_000_000
-#: flag thresholds (Gopher's table A1 ballpark, scaled to this grid)
-_REP_TOP2_MAX = 200_000   # top bigram covers > 20% of tokens
-_REP_DUP3_MAX = 300_000   # > 30% of trigram slots are repeats
-
-
-@query(
-    "repetition_quality_flags",
-    oracle=f"""
-    WITH toks AS MATERIALIZED (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-        FROM documents
-    ),
-    base AS (SELECT doc_id, len(ws) AS n_tokens FROM toks),
-    bi AS (
-        SELECT doc_id, ws[i + 1] || ' ' || ws[i + 2] AS g, CAST(count(*) AS BIGINT) AS c
-        FROM toks, unnest(range(len(ws) - 1)) AS t(i)
-        GROUP BY 1, 2
-    ),
-    top2 AS (
-        SELECT doc_id, c AS top_c FROM (
-            SELECT doc_id, c, row_number() OVER (
-                PARTITION BY doc_id ORDER BY c DESC, g
-            ) AS rn FROM bi
-        ) WHERE rn = 1
-    ),
-    tri AS (
-        SELECT doc_id, ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] AS g,
-               CAST(count(*) AS BIGINT) AS c
-        FROM toks, unnest(range(len(ws) - 2)) AS t(i)
-        GROUP BY 1, 2
-    ),
-    tri3 AS (
-        SELECT doc_id,
-               CAST(sum(c) AS BIGINT) AS n_tri,
-               CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup_tri
-        FROM tri GROUP BY doc_id
-    )
-    SELECT b.doc_id,
-           CAST(b.n_tokens AS BIGINT) AS n_tokens,
-           CAST(coalesce(t2.top_c * 2 * {_REP_SCALE} // b.n_tokens, 0) AS BIGINT) AS top2_q,
-           CAST(coalesce(t3.dup_tri * {_REP_SCALE} // t3.n_tri, 0) AS BIGINT) AS dup3_q,
-           (coalesce(t2.top_c * 2 * {_REP_SCALE} // b.n_tokens, 0) > {_REP_TOP2_MAX}
-            OR coalesce(t3.dup_tri * {_REP_SCALE} // t3.n_tri, 0) > {_REP_DUP3_MAX})
-               AS flagged
-    FROM base b
-    LEFT JOIN top2 t2 USING (doc_id)
-    LEFT JOIN tri3 t3 USING (doc_id)
-    ORDER BY b.doc_id
-    """,
-)
-def repetition_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc repetition signals on the exact 1e-6 integer grid: token
-    share of the most frequent bigram (x2 tokens per occurrence), share
-    of trigram slots in repeated trigrams, and the Gopher-style flag."""
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    toks = docs.select("doc_id", tokens(F.col("text")).alias("ws"))
-    base = toks.select("doc_id", F.size("ws").cast("long").alias("n_tokens"))
-
-    def _grams(n: int):
-        parts = F.transform(
-            F.sequence(F.lit(1), F.size("ws") - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("ws"), i + k) for k in range(n)]
-            ),
-        )
-        return (
-            toks.filter(F.size("ws") >= n)
-            .select("doc_id", F.explode(parts).alias("g"))
-            .groupBy("doc_id", "g")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-
-    top2 = (
-        _grams(2)
-        .groupBy("doc_id")
-        .agg(F.min_by("c", F.struct(-F.col("c"), F.col("g"))).alias("top_c"))
-    )
-    tri3 = (
-        _grams(3)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_tri"),
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("dup_tri"),
-        )
-    )
-    top2_q = F.coalesce(
-        F.expr(f"top_c * 2 * {_REP_SCALE} div n_tokens"), F.lit(0)
-    ).cast("long")
-    dup3_q = F.coalesce(
-        F.expr(f"dup_tri * {_REP_SCALE} div n_tri"), F.lit(0)
-    ).cast("long")
-    return (
-        base.join(top2, "doc_id", "left")
-        .join(tri3, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            top2_q.alias("top2_q"),
-            dup3_q.alias("dup3_q"),
-            (
-                (top2_q > _REP_TOP2_MAX) | (dup3_q > _REP_DUP3_MAX)
-            ).alias("flagged"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- temperature-scaled mixture sampling (the XLM-R / mT5 alpha-sampling
-# rule): draw from source s with probability proportional to n_s^alpha
-# (alpha < 1 upsamples small sources) while keeping the total draw
-# target-sized.  Per-doc keep decisions reuse the engine's deterministic
-# sha256-uniform (the stratified_sample contract) with per-source rates
-# derived IN-PLAN from the source counts on an exact integer grid — the
-# corpus moves once for the counts (a |sources|-row aggregate) and once
-# for the filter; nothing corpus-sized is broadcast or collected. ---
-_MIX_ALPHA = 0.7
-_MIX_TARGET_FRAC = 0.5  # sample half the corpus, alpha-reweighted
-_MIX_Q = 1_000_000
-
-
-@query(
-    "mixture_temperature_sample",
-    oracle=f"""
-    WITH counts AS MATERIALIZED (
-        SELECT source, CAST(count(*) AS BIGINT) AS n,
-               CAST(floor((n ** {_MIX_ALPHA}) * {_MIX_Q} + 0.5) AS BIGINT) AS nq
-        FROM documents GROUP BY source
-    ),
-    z AS (
-        SELECT CAST(sum(nq) AS BIGINT) AS zq, CAST(sum(n) AS BIGINT) AS total
-        FROM counts
-    ),
-    rates AS MATERIALIZED (
-        SELECT source, n,
-               floor(least(1.0,
-                   {_MIX_TARGET_FRAC} * z.total * nq / (CAST(z.zq AS DOUBLE) * n)
-               ) * {_MIX_Q} + 0.5) / {_MIX_Q} AS rate
-        FROM counts, z
-    ),
-    keep AS (
-        SELECT d.doc_id, d.source,
-               ('0x' || substr(sha256('mix|' || d.doc_id), 1, 15))::BIGINT
-                   / 1152921504606846976.0 AS u,
-               r.rate
-        FROM documents d JOIN rates r USING (source)
-    )
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_sampled,
-           CAST(sum(doc_id) AS BIGINT) AS id_checksum
-    FROM keep WHERE u < rate
-    GROUP BY source ORDER BY source
-    """,
-)
-def mixture_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source sampled counts (+ id checksum) under alpha-temperature
-    mixture sampling: rate_s = min(1, TARGET_FRAC · total · n_s^α /
-    (Z · n_s)), quantized to the 1e-6 grid so both engines compare the
-    identical rate literal against the identical sha256-uniform."""
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    # n^alpha is quantized to the grid per source BEFORE the normalizer
-    # sum, so Z is an exact integer and engine summation order cannot
-    # shift a rate literal (SCALE_VALIDATION #5 pattern).  pow is the one
-    # fp op here that java.lang.Math and libm may disagree on by an ulp;
-    # if that ulp could flip the floor (y within a scale-aware guard band
-    # of an integer boundary) the plan RAISES instead of silently
-    # diverging from the oracle (ADVICE r6) — the band (|y|·1e-12, four
-    # orders above the ~2e-16 relative ulp error) also covers a DuckDB-
-    # side knife edge, since the two engines' y differ by far less than
-    # the band width.
-    y = F.pow(F.col("n").cast("double"), F.lit(_MIX_ALPHA)) * F.lit(float(_MIX_Q)) + F.lit(0.5)
-    on_knife_edge = F.abs(y - F.round(y, 0)) < F.greatest(
-        F.lit(1e-9), F.abs(y) * F.lit(1e-12)
-    )
-    nq = F.when(
-        on_knife_edge,
-        F.expr(
-            "CAST(raise_error('mixture_temperature_sample: n^alpha * Q + 0.5"
-            " lands within the cross-engine pow guard band of a rounding"
-            " boundary — pick a different _MIX_Q for this corpus') AS DOUBLE)"
-        ),
-    ).otherwise(F.floor(y))
-    counts = docs.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n")).select(
-        "source",
-        "n",
-        nq.cast("long").alias("nq"),
-    )
-    z = counts.agg(
-        F.sum("nq").cast("long").alias("zq"),
-        F.sum("n").cast("long").alias("total"),
-    )
-    rate = (
-        F.floor(
-            F.least(
-                F.lit(1.0),
-                F.lit(_MIX_TARGET_FRAC)
-                * F.col("total")
-                * F.col("nq")
-                / (F.col("zq").cast("double") * F.col("n")),
-            )
-            * _MIX_Q
-            + F.lit(0.5)
-        )
-        / F.lit(_MIX_Q)
-    )
-    rates = counts.crossJoin(F.broadcast(z)).select("source", rate.alias("rate"))
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("mix|"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(16.0 ** 15)
-    )
-    return (
-        docs.join(F.broadcast(rates), "source")
-        .filter(u < F.col("rate"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_sampled"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-        )
-        .orderBy("source")
-    )
-
-
-# --- fuzzy decontamination (MinHash): exact n-gram decontamination
-# (decontaminate_eval_overlap) catches verbatim leakage; PARAPHRASED eval
-# leakage needs near-duplicate matching between the train split and the
-# eval split.  Same machinery as dedup_minhash_lsh — session signature
-# table, band keys, exact-Jaccard verify — but the candidate join is
-# train x eval: the eval side is small by construction (the exact
-# decontamination contract), so its banded keys BROADCAST and the train
-# corpus streams past them once; candidate volume is collision volume,
-# never |train| x |eval|.  The same 16x2 band guarantee applies (P_miss
-# ~ 1e-27 at the planted j≈0.99), so the oracle is the exact cross-split
-# Jaccard. ---
-@query(
-    "decontaminate_fuzzy_minhash",
-    oracle=f"""
-    WITH {_GRAMS_CTE},
-    ex AS (
-        SELECT g.doc_id, d.source, ug AS gr
-        FROM grams g JOIN documents d USING (doc_id), unnest(g.gs) AS t(ug)
-    ),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    pairs AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.gr = b.gr
-        WHERE a.source <> 'src2' AND b.source = 'src2'
-        GROUP BY 1, 2
-    ),
-    jac AS (
-        SELECT d1, d2,
-               CAST(round(common * 10000.0 / (s1.sz + s2.sz - common)) AS BIGINT) AS jq
-        FROM pairs
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    )
-    SELECT d1 AS doc_id,
-           CAST(max(jq) AS BIGINT) AS max_jq,
-           min_by(d2, -jq * 10000000000 + d2) AS best_eval_id,
-           CAST(count(*) AS BIGINT) AS n_eval_matches
-    FROM jac GROUP BY d1 ORDER BY doc_id
-    """,
-)
-def decontaminate_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train docs that are NEAR-duplicates of an eval doc (Jaccard >=
-    threshold on word trigrams): per flagged train doc, the best eval
-    match (max Jaccard on the 1e-4 integer grid, lowest eval id on ties)
-    and the match count."""
-    g = hashed_grams(spark, sf_dir)
-    sigs = minhash_sigs(spark, sf_dir).join(
-        g.select("doc_id", "source"), "doc_id"
-    )
-    banded = sigs.select(
-        "doc_id",
-        "source",
-        F.explode(F.array(*lsh_band_keys(F.col("sig"), bands=16, rows=2))).alias("bk"),
-    )
-    beval = banded.filter(F.col("source") == "src2").select(
-        F.col("doc_id").alias("d2"), "bk"
-    )
-    btrain = banded.filter(F.col("source") != "src2").select(
-        F.col("doc_id").alias("d1"), "bk"
-    )
-    cand = (
-        btrain.join(F.broadcast(beval), "bk")
-        .select("d1", "d2")
-        .dropDuplicates(["d1", "d2"])
-    )
-    gs1 = g.select(F.col("doc_id").alias("d1"), F.col("hs").alias("hs1"), F.col("sz").alias("sz1"))
-    gs2 = g.select(F.col("doc_id").alias("d2"), F.col("hs").alias("hs2"), F.col("sz").alias("sz2"))
-    pairs = cand.join(gs1, "d1").join(gs2, "d2")
-    common = F.size(F.array_intersect("hs1", "hs2")).cast("long")
-    denom = F.col("sz1").cast("long") + F.col("sz2") - common
-    verified = (
-        pairs.withColumn("common", common)
-        .withColumn("denom", denom)
-        .filter(F.col("common") * F.lit(1.0) / F.col("denom") >= F.lit(JACCARD_THRESHOLD))
-        .select(
-            "d1",
-            "d2",
-            F.round(F.col("common") * F.lit(10000.0) / F.col("denom"), 0)
-            .cast("long")
-            .alias("jq"),
-        )
-    )
-    return (
-        verified.groupBy(F.col("d1").alias("doc_id"))
-        .agg(
-            F.max("jq").cast("long").alias("max_jq"),
-            F.min_by("d2", -F.col("jq") * F.lit(10_000_000_000) + F.col("d2")).alias(
-                "best_eval_id"
-            ),
-            F.count(F.lit(1)).cast("long").alias("n_eval_matches"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- URL/domain-grain dedup + domain rollups (VERDICT r8 next #2): the
-# FIRST stage of every CC-derived pretraining pipeline (CCNet / FineWeb
-# dedupe by normalized URL before any content pass, then drop
-# blocklisted domains and keep per-domain stats for mixture decisions).
-# The documents table carries no URL, so a deterministic synthetic URL
-# derives from (source, doc_id) IN THE QUERY (testgen is read-only):
-# three docs per 60-id block share a source and a path but carry
-# different raw-URL noise (scheme/case/www, trailing slash + tracking
-# query, http + fragment), so the keep-first decision genuinely
-# requires normalization.  Normalization is pure in-row string ops
-# (lowercase, scheme strip, www strip, query/fragment strip, trailing
-# slash strip — native fns, whole-stage codegen); the ONLY shuffle in
-# the dedup is the url_norm-keyed window, and the rollups ride a
-# domain-keyed aggregate.  At 100 TB this is the cheapest pass in the
-# funnel: one narrow shuffle of (doc_id, url_norm). ---
-_URL_CTES = r"""
-    u AS (
-        SELECT doc_id, source, lang, n_chars,
-               CASE CAST(doc_id % 3 AS INT)
-                 WHEN 0 THEN 'HTTPS://WWW.' || upper(source)
-                      || '.Example.com/art/' || CAST(doc_id // 60 AS VARCHAR)
-                 WHEN 1 THEN 'https://' || source || '.example.com/art/'
-                      || CAST(doc_id // 60 AS VARCHAR) || '/?utm_source=feed'
-                 ELSE 'http://' || source || '.example.com/art/'
-                      || CAST(doc_id // 60 AS VARCHAR) || '#frag'
-               END AS url
-        FROM documents
-    ),
-    nrm AS (
-        SELECT doc_id, source, lang, n_chars,
-               regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-                   lower(url), '^https?://', ''), '^www\.', ''),
-                   '[?#].*$', ''), '/$', '') AS url_norm
-        FROM u
-    )"""
-
-#: fixed domain blocklist for the filter op (a real list is ~1M rows and
-#: ships exactly the same way: a broadcast anti-join — or its bloom form)
-_URL_BLOCKLIST = ("src3.example.com", "src7.example.com", "src11.example.com",
-                  "src19.example.com")
-
-
-def synthetic_urls(docs: DataFrame) -> DataFrame:
-    """Attach the deterministic synthetic ``url`` column (see the module
-    comment) to a ``(doc_id, source, ...)`` frame."""
-    g = F.expr("CAST(doc_id div 60 AS STRING)")
-    url = (
-        F.when(
-            (F.col("doc_id") % 3) == 0,
-            F.concat(
-                F.lit("HTTPS://WWW."), F.upper("source"),
-                F.lit(".Example.com/art/"), g,
-            ),
-        )
-        .when(
-            (F.col("doc_id") % 3) == 1,
-            F.concat(
-                F.lit("https://"), F.col("source"), F.lit(".example.com/art/"),
-                g, F.lit("/?utm_source=feed"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("http://"), F.col("source"), F.lit(".example.com/art/"),
-                g, F.lit("#frag"),
-            )
-        )
-    )
-    return docs.withColumn("url", url)
-
-
-def normalize_url(col) -> F.Column:
-    """Canonical URL normalization (CCNet/FineWeb style): lowercase,
-    drop scheme, drop a leading ``www.``, drop query + fragment, drop a
-    trailing slash.  Pure in-row regex chain — identical semantics in
-    Spark (Java regex) and the DuckDB oracle (RE2) for these anchored
-    patterns."""
-    n = F.lower(col)
-    n = F.regexp_replace(n, "^https?://", "")
-    n = F.regexp_replace(n, r"^www\.", "")
-    n = F.regexp_replace(n, "[?#].*$", "")
-    return F.regexp_replace(n, "/$", "")
-
-
-def _url_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(
-        spark, sf_dir, "documents", columns=["doc_id", "source", "lang", "n_chars"]
-    )
-    return synthetic_urls(docs).withColumn("url_norm", normalize_url(F.col("url")))
-
-
-@query(
-    "url_dedup_keep_first",
-    oracle=f"""
-    WITH {_URL_CTES}
-    SELECT doc_id, url_norm,
-           min(doc_id) OVER (PARTITION BY url_norm) = doc_id AS keep
-    FROM nrm
-    """,
-)
-def url_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-grain exact dedup, keep-first per NORMALIZED url: the
-    cheapest and first dedup pass of a crawl pipeline.  One narrow
-    url_norm-keyed shuffle; corpus-grain output, order-insensitive
-    compare (no presentation sort)."""
-    nrm = _url_frame(spark, sf_dir)
-    keep = F.min("doc_id").over(W.partitionBy("url_norm")) == F.col("doc_id")
-    return nrm.select("doc_id", "url_norm", keep.alias("keep"))
-
-
-@query(
-    "domain_stats_rollup",
-    oracle=f"""
-    WITH {_URL_CTES},
-    k AS (
-        SELECT doc_id, source, lang, n_chars, url_norm,
-               split_part(url_norm, '/', 1) AS domain,
-               min(doc_id) OVER (PARTITION BY url_norm) = doc_id AS keep
-        FROM nrm
-    )
-    SELECT domain,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(DISTINCT url_norm) AS BIGINT) AS n_urls,
-           CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS kept_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-    FROM k GROUP BY domain ORDER BY domain
-    """,
-)
-def domain_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain crawl statistics (the FineWeb dataset-card rollup):
-    doc and distinct-URL counts, post-URL-dedup survivors, char volume,
-    language spread.  The url_norm window and the domain aggregate are
-    the only shuffles; the domain table is catalog-sized output."""
-    nrm = _url_frame(spark, sf_dir)
-    k = nrm.select(
-        "lang",
-        "n_chars",
-        "url_norm",
-        F.substring_index("url_norm", "/", 1).alias("domain"),
-        (F.min("doc_id").over(W.partitionBy("url_norm")) == F.col("doc_id")).alias(
-            "keep"
-        ),
-    )
-    return (
-        k.groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("url_norm").cast("long").alias("n_urls"),
-            F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("kept_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.countDistinct("lang").cast("long").alias("n_langs"),
-        )
-        .orderBy("domain")
-    )
-
-
-@query(
-    "domain_blocklist_filter",
-    oracle=f"""
-    WITH {_URL_CTES},
-    d AS (
-        SELECT doc_id, n_chars, split_part(url_norm, '/', 1) AS domain
-        FROM nrm
-    )
-    SELECT domain,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars
-    FROM d
-    WHERE domain NOT IN {tuple(_URL_BLOCKLIST)!r}
-    GROUP BY domain ORDER BY domain
-    """,
-)
-def domain_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocklist anti-join at domain grain: surviving per-domain volume
-    after dropping listed domains.  The list ships as a broadcast
-    anti-join — the shape a real ~1M-domain blocklist (or its bloom
-    form) uses; a literal IN-filter would not survive list scale."""
-    spark_bl = local_frame(spark, [(d,) for d in _URL_BLOCKLIST], "domain string")
-    nrm = _url_frame(spark, sf_dir)
-    d = nrm.select(
-        "n_chars", F.substring_index("url_norm", "/", 1).alias("domain")
-    ).join(F.broadcast(spark_bl), "domain", "left_anti")
-    return (
-        d.groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-        .orderBy("domain")
-    )
-
-
 # --- OPQ: Optimized Product Quantization (Ge et al., CVPR 2013 — the
 # non-parametric alternation; VERDICT r8 next #5).  A learned ORTHONORMAL
 # rotation R is applied before the sub-vector split so the PQ subspaces
@@ -7684,7 +1845,6 @@ def opq_encode_udf(spark: SparkSession, sf_dir: str):
     codebooks baked in, the identical one-scan shape as
     :func:`pq_encode_udf`."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
     R, cms = opq_train_np(spark, sf_dir)
 
@@ -7720,7 +1880,6 @@ def _opq_rotate_grid_udf(spark: SparkSession, sf_dir: str):
     """Arrow-batched rotate+grid projection (vector -> array<long> of
     rotated grid components) — the query-side twin of the encoder."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
     R, _ = opq_train_np(spark, sf_dir)
 
@@ -7744,10 +1903,7 @@ def ann_opq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_ann_recall.py."""
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     encode = opq_encode_udf(spark, sf_dir)
-    exploded = emb.select("vec_id", encode("embedding").alias("codes")).select(
-        "vec_id",
-        F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
-    )
+    exploded = _explode_codes(emb.select("vec_id", encode("embedding").alias("codes")))
     rot = _opq_rotate_grid_udf(spark, sf_dir)
     qsubs = (
         emb.filter(F.col("vec_id") < 50)
@@ -7761,590 +1917,7 @@ def ann_opq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sub", "qs"),
         )
     )
-    subd = F.aggregate(
-        F.zip_with("qs", "c", lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    lut = qsubs.join(F.broadcast(_opq_codebook_df(spark, sf_dir)), "sub").select(
-        "query_id", "sub", "code", F.round(subd, 0).alias("d")
-    )
-    adc = (
-        exploded.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("sum_d"))
-    )
-    adc_scaled = F.round(F.col("sum_d") / F.lit(100.0), 0).cast("long")
-    win = W.partitionBy("query_id").orderBy(adc_scaled, F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", adc_scaled.alias("adc_dist"), "rk")
-        .orderBy("query_id", "rk")
-    )
-
-
-# --- WordPiece tokenizer trainer (round 9 — the third member of the
-# standard tokenizer trio next to BPE and unigram-LM; Schuster &
-# Nakajima 2012 / BERT's trainer): per round, merge the adjacent symbol
-# pair maximizing the LIKELIHOOD score count(ab) / (count(a)*count(b))
-# instead of BPE's raw count(ab).  The score is quantized to the exact
-# integer grid ``floor(n * 1e12 / (ca * cb))`` (ties -> (a, b) asc) so
-# every selection decision is integer-exact on both engines — the same
-# determinism contract as the unigram trainer's log-likelihood grid.
-# The training set is the distinct-word count table (vocabulary-
-# bounded; BPE's argument), trained driver-side under the shared cap;
-# above it, the DISTRIBUTED loop runs the identical rounds — two
-# map-side-combinable aggregations (pair counts + symbol counts) and a
-# 1-row collect per round, with the score computed in DECIMAL(38,0)
-# ``div`` (exact integral division at any corpus magnitude — BIGINT
-# n*1e12 would overflow past n ~ 9.2e6).  The oracle replays every
-# round in SQL with HUGEINT arithmetic. ---
-_WP_ROUNDS = 6
-_WP_GRID = 10**12
-
-
-def _wp_train_rows(rows: list[tuple[int, str]]) -> list[tuple[str, str, int, int]]:
-    """Driver-side rounds over (count, wrapped-symbol-string) word rows;
-    returns [(a, b, pair_count, score_q)] — exact Python integers."""
-    import re
-    from collections import Counter
-
-    merges: list[tuple[str, str, int, int]] = []
-    states = list(rows)
-    for _ in range(_WP_ROUNDS):
-        pc: Counter = Counter()
-        sc: Counter = Counter()
-        for cnt, sep in states:
-            syms = [x for x in re.split("[<>]+", sep) if x]
-            for s in syms:
-                sc[s] += cnt
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += cnt
-        if not pc:
-            break
-        scored = {
-            (a, b): (n * _WP_GRID) // (sc[a] * sc[b]) for (a, b), n in pc.items()
-        }
-        (a, b) = min(scored, key=lambda k: (-scored[k], k))
-        merges.append((a, b, int(pc[(a, b)]), int(scored[(a, b)])))
-        states = [(c, s.replace(f"<{a}><{b}>", f"<{a}{b}>")) for c, s in states]
-    return merges
-
-
-def _wp_score_expr():
-    """Exact integer-grid WordPiece score over (n, ca, cb) columns:
-    DECIMAL(38,0) products + integral ``div`` — bit-equal to Python's
-    ``(n * 1e12) // (ca * cb)`` at any magnitude."""
-    return F.expr(
-        f"CAST(CAST(n AS DECIMAL(38,0)) * {_WP_GRID} div "
-        "(CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0))) AS BIGINT)"
-    )
-
-
-def _wp_train_distributed(state: DataFrame) -> list[tuple[str, str, int, int]]:
-    """The identical rounds as DataFrame jobs for above-cap vocabularies:
-    per round two aggregations + ONE 1-row collect; the word-state
-    column mutates via the same in-row replace and checkpoints per round
-    (bounded lineage, the graph-loop pattern)."""
-    merges: list[tuple[str, str, int, int]] = []
-    for _ in range(_WP_ROUNDS):
-        syms = _bpe_syms(F.col("s"))
-        scnt = (
-            state.select("cnt", F.explode(syms).alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("cnt").alias("c"))
-        )
-        pairs = state.filter(F.size(syms) >= 2).select(
-            "cnt",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(syms) - 2),
-                    lambda i: F.struct(
-                        F.element_at(syms, i + 1).alias("a"),
-                        F.element_at(syms, i + 2).alias("b"),
-                    ),
-                )
-            ).alias("p"),
-        )
-        pc = pairs.groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n"))
-        scored = (
-            pc.join(scnt.select(F.col("sym").alias("a"), F.col("c").alias("ca")), "a")
-            .join(scnt.select(F.col("sym").alias("b"), F.col("c").alias("cb")), "b")
-            .select("a", "b", "n", _wp_score_expr().alias("score_q"))
-        )
-        top = scored.orderBy(F.desc("score_q"), F.asc("a"), F.asc("b")).limit(1).collect()
-        if not top:
-            break
-        r = top[0]
-        merges.append((r.a, r.b, int(r.n), int(r.score_q)))
-        state = state.withColumn(
-            "s",
-            F.replace(F.col("s"), F.lit(f"<{r.a}><{r.b}>"), F.lit(f"<{r.a}{r.b}>")),
-        ).transform(checkpoint_df)
-    return merges
-
-
-@artifact("wordpiece_merges")
-def wordpiece_train(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int, int]]:
-    """Learn ``_WP_ROUNDS`` likelihood-scored merges; the
-    ``wordpiece_merges`` session artifact, like the BPE merge table."""
-    state = _bpe_word_state(spark, sf_dir)
-    head = state.take(_BPE_DRIVER_CAP + 1)
-    if len(head) <= _BPE_DRIVER_CAP:
-        return _wp_train_rows([(r.cnt, r.s) for r in head])
-    return _wp_train_distributed(state)
-
-
-def _wp_round_ctes() -> str:
-    """The DuckDB mirror: K materialized rounds with HUGEINT scoring."""
-    parts = [
-        """
-    wpstate0 AS MATERIALIZED (
-        SELECT w, cnt,
-               regexp_replace(replace(replace(w, '<', ''), '>', ''), '(.)', '<\\1>', 'g') AS s
-        FROM (
-            SELECT w, count(*) AS cnt
-            FROM (
-                SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-                FROM documents
-            )
-            GROUP BY w
-        )
-        WHERE length(replace(replace(w, '<', ''), '>', '')) > 0
-    )"""
-    ]
-    for r in range(1, _WP_ROUNDS + 1):
-        parts.append(f"""
-    wsyms{r} AS MATERIALIZED (
-        SELECT cnt, string_split(regexp_replace(s, '^<|>$', '', 'g'), '><') AS syms
-        FROM wpstate{r - 1}
-    ),
-    wscnt{r} AS MATERIALIZED (
-        SELECT sym, CAST(sum(cnt) AS BIGINT) AS c
-        FROM (SELECT cnt, unnest(syms) AS sym FROM wsyms{r})
-        GROUP BY sym
-    ),
-    wpairs{r} AS MATERIALIZED (
-        SELECT syms[i] AS a, syms[i + 1] AS b, CAST(sum(cnt) AS BIGINT) AS n
-        FROM wsyms{r}, unnest(range(1, len(syms))) AS t(i)
-        GROUP BY a, b
-    ),
-    wbest{r} AS MATERIALIZED (
-        SELECT p.a, p.b, p.n,
-               CAST(CAST(p.n AS HUGEINT) * {_WP_GRID}
-                    // (CAST(ca.c AS HUGEINT) * cb.c) AS BIGINT) AS score_q
-        FROM wpairs{r} p
-        JOIN wscnt{r} ca ON ca.sym = p.a
-        JOIN wscnt{r} cb ON cb.sym = p.b
-        ORDER BY score_q DESC, p.a, p.b LIMIT 1
-    ),
-    wpstate{r} AS MATERIALIZED (
-        SELECT w, cnt, replace(s, '<' || a || '><' || b || '>', '<' || a || b || '>') AS s
-        FROM wpstate{r - 1}, wbest{r}
-    )""")
-    return ",".join(parts)
-
-
-@query(
-    "wordpiece_train_merges",
-    oracle=f"""
-    WITH {_wp_round_ctes()}
-    SELECT * FROM (
-        {" UNION ALL ".join(
-            f"SELECT {r} AS rank, a || '+' || b AS pair, n, score_q FROM wbest{r}"
-            for r in range(1, _WP_ROUNDS + 1)
-        )}
-    )
-    ORDER BY rank
-    """,
-)
-def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned WordPiece merge table (rank, pair, weighted pair
-    count, integer-grid likelihood score) — the full training chain
-    replayed by the oracle round for round."""
-    merges = wordpiece_train(spark, sf_dir)
-    return local_frame(
-        spark,
-        [(r + 1, f"{a}+{b}", n, sq) for r, (a, b, n, sq) in enumerate(merges)],
-        "rank int, pair string, n long, score_q long",
-    ).orderBy("rank")
-
-
-# --- WordPiece greedy encode (the BERT inference algorithm): per word,
-# repeatedly take the LONGEST vocab piece matching at the cursor (vocab
-# = every seen single char + the trained merge results; no ##-prefix
-# distinction — the SentencePiece-style variant).  A piece built from k
-# merges has length <= k + 1 (induction over concatenations), so the
-# max piece length is statically _WP_ROUNDS + 1 and the oracle replays
-# the greedy scan as a linear recursion — one level per EMITTED token,
-# longest match chosen by a static coalesce ladder over per-length
-# vocab joins.  Engine side: the Arrow greedy kernel runs once per
-# DISTINCT word (vocabulary-sized), the corpus pass is explode +
-# broadcast word->ntok join (the unigram-encode shape). ---
-def _wp_vocab_set(spark: SparkSession, sf_dir: str) -> set[str]:
-    merges = wordpiece_train(spark, sf_dir)
-    state = _bpe_word_state(spark, sf_dir)
-    chars = {
-        r.ch
-        for r in state.select(
-            F.explode(F.split(_bpe_clean_word(F.col("w")), "")).alias("ch")
-        )
-        .filter(F.col("ch") != "")
-        .distinct()
-        .collect()
-    }
-    return chars | {a + b for a, b, _, _ in merges}
-
-
-def _wp_greedy_ntok(w: str, vocab: set[str], maxlen: int) -> int:
-    pos, ntok = 0, 0
-    while pos < len(w):
-        for l in range(min(maxlen, len(w) - pos), 0, -1):
-            if w[pos:pos + l] in vocab:
-                pos += l
-                ntok += 1
-                break
-        else:  # unreachable: every corpus char is in the vocab
-            raise ValueError(f"wordpiece: uncoverable word {w!r}")
-    return ntok
-
-
-#: shared by the batch encode and its streaming-ingest twin (hash
-#: equality across the two IS the maintenance proof — the lang totals
-#: form a monoid over micro-batch partials, the unigram contract)
-_WP_ENCODE_ORACLE = f"""
-    WITH RECURSIVE {_wp_round_ctes()},
-    wvocab AS MATERIALIZED (
-        SELECT DISTINCT piece FROM (
-            SELECT unnest(string_split(regexp_replace(s, '^<|>$', '', 'g'), '><')) AS piece
-            FROM wpstate0
-            UNION ALL
-            {" UNION ALL ".join(f"SELECT a || b FROM wbest{r}" for r in range(1, _WP_ROUNDS + 1))}
-        ) WHERE piece <> ''
-    ),
-    wpwords AS MATERIALIZED (
-        SELECT replace(replace(w, '<', ''), '>', '') AS cw, w
-        FROM wpstate0
-    ),
-    wpenc AS (
-        SELECT cw, w, 0 AS pos, 0 AS ntok FROM wpwords
-        UNION ALL
-        SELECT e.cw, e.w,
-               e.pos + coalesce({", ".join(f"len(v{l}.piece)" for l in range(_WP_ROUNDS + 1, 0, -1))}),
-               e.ntok + 1
-        FROM wpenc e
-        {chr(10).join(
-            f"        LEFT JOIN wvocab v{l} ON len(v{l}.piece) = {l}"
-            f" AND substr(e.cw, e.pos + 1, {l}) = v{l}.piece"
-            for l in range(_WP_ROUNDS + 1, 0, -1)
-        )}
-        WHERE e.pos < len(e.cw)
-    ),
-    wtok AS MATERIALIZED (
-        SELECT w, ntok FROM wpenc WHERE pos = len(cw)
-    ),
-    corpus AS (
-        SELECT lang, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
-        FROM documents
-    )
-    SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(ntok) AS BIGINT) AS n_tokens,
-           CAST(sum(ntok) * 10000 // count(*) AS BIGINT) AS fert_q
-    FROM corpus JOIN wtok USING (w)
-    GROUP BY lang ORDER BY lang
-    """
-
-
-@query("wordpiece_encode_corpus", oracle=_WP_ENCODE_ORACLE)
-def wordpiece_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus encode under the trained WordPiece vocab, reported as the
-    per-language fertility harness (the unigram_encode_corpus shape):
-    greedy longest-match runs once per distinct word in an Arrow batch,
-    the corpus is touched once."""
-    import pandas as pd  # noqa: PLC0415
-
-    vocab = _wp_vocab_set(spark, sf_dir)
-    maxlen = _WP_ROUNDS + 1
-
-    def run(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "ntok": [
-                        _wp_greedy_ntok(w.replace("<", "").replace(">", ""), vocab, maxlen)
-                        for w in pdf["w"]
-                    ],
-                }
-            )
-
-    state = _bpe_word_state(spark, sf_dir)
-    wtok = state.select("w").mapInPandas(run, schema="w string, ntok int")
-    docs = load_table(spark, sf_dir, "documents", columns=["lang", "text"])
-    words = docs.select(
-        "lang", F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("w")
-    )
-    return (
-        words.join(F.broadcast(wtok), "w")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("ntok").cast("long").alias("n_tokens"),
-        )
-        .select(
-            "lang",
-            "n_words",
-            "n_tokens",
-            F.expr("n_tokens * 10000 div n_words").cast("long").alias("fert_q"),
-        )
-        .orderBy("lang")
-    )
-
-
-# --- interpolated TRIGRAM-LM perplexity (round 9 — one order above the
-# bigram scorer; the Jelinek-Mercer interpolation KenLM-style pipelines
-# use when Kneser-Ney's discount bookkeeping isn't warranted):
-# P(c|a,b) = 0.6*c3(abc)/c2(ab) + 0.3*c2(bc)/c1(b) + 0.1*(c1(c)+1)/(T+V),
-# every marginal derived from the SAME trigram count table (the closed
-# convention: c2(ab) = sum_c c3, c2(bc) = sum_a c3, c1(b), c1(c), T —
-# one corpus shuffle builds c3, four map-side-combinable marginal
-# aggregations + joins stay at n-gram-type grain).  Every division's
-# inputs are exact integers cast to double, the three-term sum is
-# written in one fixed order on both engines, and the single ln rides
-# the shared integer grid with the in-plan knife-edge raise — so
-# per-trigram log-probs are bit-identical and doc sums are exact
-# integer arithmetic.  Docs under 3 words have no trigrams and drop out
-# (the scoring convention the bigram op documents). ---
-_TLM_GRID = 1_000_000
-_TLM_BUCKET = 500_000
-_TLM_L3, _TLM_L2, _TLM_L1 = 0.6, 0.3, 0.1
-
-
-@query(
-    "trigram_lm_perplexity",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        FROM documents
-    ),
-    ex AS MATERIALIZED (
-        SELECT doc_id, ws[i+1] AS a, ws[i+2] AS b, ws[i+3] AS c
-        FROM toks, unnest(range(len(ws) - 2)) AS t(i)
-    ),
-    c3 AS MATERIALIZED (
-        SELECT a, b, c, CAST(count(*) AS BIGINT) AS n3 FROM ex GROUP BY a, b, c
-    ),
-    m_ab AS (SELECT a, b, CAST(sum(n3) AS BIGINT) AS nab FROM c3 GROUP BY a, b),
-    m_bc AS (SELECT b, c, CAST(sum(n3) AS BIGINT) AS nbc FROM c3 GROUP BY b, c),
-    m_b AS (SELECT b, CAST(sum(n3) AS BIGINT) AS nb FROM c3 GROUP BY b),
-    m_c AS (SELECT c, CAST(sum(n3) AS BIGINT) AS nc FROM c3 GROUP BY c),
-    tot AS (
-        SELECT CAST(sum(n3) AS BIGINT) AS t,
-               CAST(count(DISTINCT c) AS BIGINT) AS v
-        FROM c3
-    ),
-    lp AS MATERIALIZED (
-        SELECT c3.a, c3.b, c3.c,
-               CAST(-floor(-ln(
-                   {_TLM_L3} * (CAST(n3 AS DOUBLE) / CAST(nab AS DOUBLE))
-                   + {_TLM_L2} * (CAST(nbc AS DOUBLE) / CAST(nb AS DOUBLE))
-                   + {_TLM_L1} * (CAST(nc + 1 AS DOUBLE) / CAST(t + v AS DOUBLE))
-               ) * {_TLM_GRID} + 0.5) AS BIGINT) AS lp_q
-        FROM c3
-        JOIN m_ab USING (a, b)
-        JOIN m_bc USING (b, c)
-        JOIN m_b USING (b)
-        JOIN m_c USING (c)
-        CROSS JOIN tot
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_trigrams,
-           CAST(-sum(lp_q) AS BIGINT) AS nll_q,
-           CAST((-sum(lp_q)) // count(*) AS BIGINT) AS nll_avg_q,
-           CAST(((-sum(lp_q)) // count(*)) // {_TLM_BUCKET} AS BIGINT) AS ppl_bucket
-    FROM ex JOIN lp USING (a, b, c)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc interpolated trigram-LM negative log-likelihood (integer
-    grid), average and half-nat perplexity bucket — see the block
-    comment."""
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    ws = F.filter(F.split("text", " "), lambda t: t != "")
-    d = docs.select("doc_id", ws.alias("ws"))
-    ntri = F.size("ws") - 2
-    tris = F.when(
-        ntri > 0,
-        F.transform(
-            F.sequence(F.lit(0), ntri - 1),
-            lambda i: F.struct(
-                F.element_at("ws", i + 1).alias("a"),
-                F.element_at("ws", i + 2).alias("b"),
-                F.element_at("ws", i + 3).alias("c"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string,c:string>>"))
-    ex = d.select("doc_id", F.explode(tris).alias("tg")).select(
-        "doc_id",
-        F.col("tg.a").alias("a"),
-        F.col("tg.b").alias("b"),
-        F.col("tg.c").alias("c"),
-    )
-    # ONE corpus-grain shuffle; everything below is n-gram-type grain.
-    # checkpoint so the four marginal branches + the scoring join read
-    # the counted table, not four recomputations of the corpus explode
-    c3 = ex.groupBy("a", "b", "c").agg(F.count(F.lit(1)).alias("n3")).transform(checkpoint_df)
-    m_ab = c3.groupBy("a", "b").agg(F.sum("n3").alias("nab"))
-    m_bc = c3.groupBy("b", "c").agg(F.sum("n3").alias("nbc"))
-    m_b = c3.groupBy("b").agg(F.sum("n3").alias("nb"))
-    m_c = c3.groupBy("c").agg(F.sum("n3").alias("nc"))
-    tot = c3.agg(
-        F.sum("n3").alias("t"), F.countDistinct("c").alias("v")
-    )
-    p = (
-        F.lit(_TLM_L3) * (F.col("n3").cast("double") / F.col("nab").cast("double"))
-        + F.lit(_TLM_L2) * (F.col("nbc").cast("double") / F.col("nb").cast("double"))
-        + F.lit(_TLM_L1)
-        * ((F.col("nc") + 1).cast("double") / (F.col("t") + F.col("v")).cast("double"))
-    )
-    z = -F.log(p) * F.lit(float(_TLM_GRID)) + F.lit(0.5)
-    edge = F.abs(z - F.round(z, 0)) < F.greatest(F.lit(1e-9), F.abs(z) * F.lit(1e-12))
-    lp_q = (
-        -F.when(
-            edge,
-            F.expr(
-                "CAST(raise_error('trigram_lm_perplexity: -ln(p)*grid + 0.5 lands"
-                " within the cross-engine ln guard band of a rounding boundary —"
-                " bump _TLM_GRID for this corpus') AS DOUBLE)"
-            ),
-        ).otherwise(F.floor(z))
-    ).cast("long")
-    lp = (
-        c3.join(m_ab, ["a", "b"])
-        .join(m_bc, ["b", "c"])
-        .join(m_b, "b")
-        .join(m_c, "c")
-        .crossJoin(F.broadcast(tot))
-        .select("a", "b", "c", lp_q.alias("lp_q"))
-    )
-    return (
-        ex.join(lp, ["a", "b", "c"])
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_trigrams"), (-F.sum("lp_q")).alias("nll_q"))
-        .select(
-            "doc_id",
-            "n_trigrams",
-            "nll_q",
-            F.expr("nll_q div n_trigrams").alias("nll_avg_q"),
-            F.expr(f"(nll_q div n_trigrams) div {_TLM_BUCKET}").alias("ppl_bucket"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- UniMax mixture allocation (Chung et al. 2023 — the budget-
-# constrained uniform sampler that replaced temperature mixing for
-# mT5/umT5): allocate a total training budget UNIFORMLY across sources,
-# capped at E epochs of each source's corpus.  In (size asc, source
-# asc) order the capped set is provably a prefix (if cap_i*(L-i+1) >
-# B - prefix_caps then the same holds for every later i: caps are
-# monotone and the remainder only shrinks), so the classic iterative
-# waterfill collapses to per-row INTEGER comparisons over prefix sums —
-# one window pass over the per-source table (catalog-bounded rows, the
-# source_temperature_weights class) and exact BIGINT arithmetic end to
-# end.  Budget = 8*T/5 chars with E = 2 epochs: BELOW total capacity
-# (2T), so allocation genuinely binds — on the near-uniform test corpus
-# no source caps (pure uniform split; a budget above capacity degenerates
-# to all-capped), and the crafted skewed fixture in tests pins MIXED
-# binding where small sources cap and big ones share the remainder.
-# Uncapped sources split by integer division, the sub-|uncapped|
-# rounding remainder deliberately unallocated. ---
-_UNIMAX_EPOCHS = 2
-
-
-@query(
-    "unimax_mixture_allocation",
-    oracle=f"""
-    WITH per AS (
-        SELECT source, CAST(sum(n_chars) AS BIGINT) AS n FROM documents GROUP BY source
-    ),
-    tot AS (
-        SELECT CAST(sum(n) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS l FROM per
-    ),
-    ordered AS (
-        SELECT source, n, {_UNIMAX_EPOCHS} * n AS cap,
-               row_number() OVER (ORDER BY n, source) AS i,
-               coalesce(sum({_UNIMAX_EPOCHS} * n) OVER (
-                   ORDER BY n, source
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pref
-        FROM per
-    ),
-    flagged AS (
-        SELECT o.source, o.n, o.cap, o.i,
-               (o.cap * (tot.l - o.i + 1) <= (tot.t * 8) // 5 - o.pref) AS capped,
-               (tot.t * 8) // 5 AS b, tot.l AS l
-        FROM ordered o CROSS JOIN tot
-    ),
-    pools AS (
-        SELECT CAST(coalesce(sum(CASE WHEN capped THEN cap END), 0) AS BIGINT) AS capsum,
-               CAST(count(*) FILTER (WHERE NOT capped) AS BIGINT) AS nun
-        FROM flagged
-    )
-    SELECT f.source, f.n AS n_chars, f.capped,
-           CAST(CASE WHEN f.capped THEN f.cap
-                     ELSE (f.b - p.capsum) // p.nun END AS BIGINT) AS quota
-    FROM flagged f CROSS JOIN pools p
-    ORDER BY f.source
-    """,
-)
-def unimax_mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source UniMax budget allocation: ``(source, n_chars, capped,
-    quota)`` — capped sources contribute E epochs of themselves, the
-    remainder splits uniformly over the rest.  Exact integers
-    throughout; the windows run over the catalog-bounded per-source
-    table."""
-    docs = load_table(spark, sf_dir, "documents", columns=["source", "n_chars"])
-    per = docs.groupBy("source").agg(F.sum("n_chars").cast("long").alias("n"))
-    wtot = W.partitionBy()
-    wo = W.orderBy("n", "source")
-    cap = F.lit(_UNIMAX_EPOCHS) * F.col("n")
-    flagged = per.select(
-        "source",
-        "n",
-        cap.alias("cap"),
-        F.row_number().over(wo).alias("i"),
-        F.coalesce(
-            F.sum(cap).over(wo.rowsBetween(W.unboundedPreceding, -1)), F.lit(0)
-        ).alias("pref"),
-        F.sum("n").over(wtot).alias("t"),
-        F.count(F.lit(1)).over(wtot).alias("l"),
-    ).withColumn(
-        "b", F.expr("t * 8 div 5")
-    ).withColumn(
-        "capped", F.col("cap") * (F.col("l") - F.col("i") + 1) <= F.col("b") - F.col("pref")
-    )
-    pools = flagged.agg(
-        F.coalesce(F.sum(F.when(F.col("capped"), F.col("cap"))), F.lit(0)).alias(
-            "capsum"
-        ),
-        F.sum(F.when(~F.col("capped"), 1).otherwise(0)).alias("nun"),
-    )
-    return (
-        flagged.crossJoin(F.broadcast(pools))
-        .select(
-            "source",
-            F.col("n").alias("n_chars"),
-            "capped",
-            F.when(F.col("capped"), F.col("cap"))
-            .otherwise(F.expr("(b - capsum) div nun"))
-            .cast("long")
-            .alias("quota"),
-        )
-        .orderBy("source")
-    )
+    return _adc_topk(exploded, _adc_lut(qsubs, _opq_codebook_df(spark, sf_dir)))
 
 
 # --- binary (sign) embedding quantization + Hamming search.  The modern
@@ -8399,6 +1972,31 @@ def _binary_codes_ctes() -> str:
     )"""
 
 
+def _hamming_topk(emb: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` corpus vectors per probe query (``_BINARY_QUERY_PRED``)
+    by ``(ham, neighbor_id)``: the probe codes broadcast over the corpus
+    codes, ranked by the two-phase salted top-k."""
+
+    codes = binary_sign_codes(emb).drop("embedding")
+    q = codes.filter(F.expr(_BINARY_QUERY_PRED)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("h1").alias("q1"),
+        F.col("h2").alias("q2"),
+    )
+    hams = codes.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr("bit_count(h1 ^ q1) + bit_count(h2 ^ q2)").cast("long").alias("ham"),
+    )
+    return salted_topk(
+        hams,
+        ["query_id"],
+        [F.asc("ham"), F.asc("neighbor_id")],
+        k,
+        salt_src=F.col("neighbor_id"),
+    )
+
+
 @query(
     "ann_binary_hamming_topk",
     oracle=f"""
@@ -8420,27 +2018,8 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance join), the distance is two XOR+popcount longs inside
     codegen, and the per-query rank is the two-phase salted top-k — at
     100 TB the scan reads 8 bytes/vector instead of 256."""
-    from columnflow_spark.functions.skew import salted_topk
-
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    codes = binary_sign_codes(emb).drop("embedding")
-    q = codes.filter(F.expr(_BINARY_QUERY_PRED)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("h1").alias("q1"),
-        F.col("h2").alias("q2"),
-    )
-    hams = codes.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr("bit_count(h1 ^ q1) + bit_count(h2 ^ q2)").cast("long").alias("ham"),
-    )
-    top = salted_topk(
-        hams,
-        ["query_id"],
-        [F.asc("ham"), F.asc("neighbor_id")],
-        _BINARY_TOPK,
-        salt_src=F.col("neighbor_id"),
-    )
+    top = _hamming_topk(emb, _BINARY_TOPK)
     return top.select("query_id", "neighbor_id", "ham", "rk").orderBy("query_id", "rk")
 
 
@@ -8479,27 +2058,8 @@ def ann_binary_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries| x {r} shortlist only (broadcast id-list semi-join — the
     refine-fetch shape of ann_ivfpq_refined_topk), so the full-precision
     corpus is touched at shortlist grain, never scanned."""
-    from columnflow_spark.functions.skew import salted_topk
-
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    codes = binary_sign_codes(emb).drop("embedding")
-    q = codes.filter(F.expr(_BINARY_QUERY_PRED)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("h1").alias("q1"),
-        F.col("h2").alias("q2"),
-    )
-    hams = codes.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr("bit_count(h1 ^ q1) + bit_count(h2 ^ q2)").cast("long").alias("ham"),
-    )
-    shortlist = salted_topk(
-        hams,
-        ["query_id"],
-        [F.asc("ham"), F.asc("neighbor_id")],
-        _BINARY_RESCORE_R,
-        salt_src=F.col("neighbor_id"),
-    ).select("query_id", "neighbor_id")
+    shortlist = _hamming_topk(emb, _BINARY_RESCORE_R).select("query_id", "neighbor_id")
     # bounded refine fetch: |queries| * R ids broadcast against the corpus
     cand = emb.join(
         F.broadcast(shortlist), emb["vec_id"] == shortlist["neighbor_id"]
@@ -8518,224 +2078,6 @@ def ann_binary_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _BINARY_TOPK)
         .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rk")
         .orderBy("query_id", "rk")
-    )
-
-
-# --- bulk segment (line-level) dedup: the CCNet/FineWeb pipeline stage
-# the run-level ExactSubstr family deliberately does not cover — drop
-# from EVERY document (including the first) any fixed-width token
-# segment whose exact text occurs in >= N distinct documents
-# (boilerplate: headers, navigation, license blurbs).  The synthetic
-# corpus has no newlines, so the "line" is a fixed S-token window —
-# the same grain doc_chunk_overlap uses.
-_BP_SEG_TOKENS = 8
-_BP_MIN_DOCS = 2  # CCNet removes lines duplicated across >= 2 shards
-
-
-@query(
-    "boilerplate_segment_removal",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-        FROM documents
-    ),
-    segs AS (
-        SELECT doc_id, (i - 1) // {_BP_SEG_TOKENS} AS seg_idx,
-               string_agg(w, ' ' ORDER BY i) AS seg_text,
-               CAST(count(*) AS BIGINT) AS ntok
-        FROM (
-            SELECT doc_id, unnest(ts) AS w, generate_subscripts(ts, 1) AS i
-            FROM toks
-        )
-        GROUP BY doc_id, (i - 1) // {_BP_SEG_TOKENS}
-    ),
-    cnt AS (
-        SELECT seg_text, count(DISTINCT doc_id) AS nd
-        FROM segs GROUP BY seg_text
-    ),
-    flagged AS (
-        SELECT s.doc_id, s.seg_idx, s.seg_text, s.ntok,
-               (c.nd < {_BP_MIN_DOCS}) AS kept
-        FROM segs s JOIN cnt c USING (seg_text)
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_seg,
-           CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_seg_kept,
-           CAST(coalesce(sum(ntok) FILTER (WHERE kept), 0) AS BIGINT) AS n_tokens_kept,
-           md5(coalesce(string_agg(seg_text, ' ' ORDER BY seg_idx)
-                        FILTER (WHERE kept), '')) AS sig
-    FROM flagged GROUP BY doc_id
-    """,
-)
-def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide bulk-segment removal: per-doc survivor stats + an
-    md5 digest of the rebuilt text (the rewrite equality shape of
-    dedup_substring_rewrite).
-
-    Plan shape: segmentation is PURE IN-ROW (one transform over the
-    token array — no explode shuffle to form segments); the only
-    segment-grain shuffles are the distinct-doc count per segment text
-    (map-side combinable after the in-partition (seg_text, doc_id)
-    dedup) and the count join back; the rebuild is one doc-keyed
-    aggregate.  Work is proportional to corpus segments — the FineWeb
-    line-dedup cost envelope — never a doc-pair join."""
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    segs = segment_docs(docs)
-    cnt = segs.groupBy("seg_text").agg(F.countDistinct("doc_id").alias("nd"))
-    flagged = segs.join(cnt, "seg_text").withColumn(
-        "kept", F.col("nd") < _BP_MIN_DOCS
-    )
-    return bp_doc_rollup(flagged)
-
-
-def segment_docs(docs: DataFrame) -> DataFrame:
-    """``(doc_id, seg_idx, seg_text, ntok)`` fixed-width token segments
-    for a ``(doc_id, text, …)`` frame — pure in-row segmentation (one
-    transform over the token array; no shuffle to form segments).
-    Shared by the batch removal pass and the incremental segment-count
-    store (queries/dedupstore.py)."""
-    return segment_docs_width(docs, _BP_SEG_TOKENS)
-
-
-def bp_doc_rollup(flagged: DataFrame) -> DataFrame:
-    """Per-doc survivor rollup for a segmented frame carrying a ``kept``
-    flag: counts + the md5 digest of the rebuilt (kept-only) text."""
-    kept_struct = F.when(F.col("kept"), F.struct("seg_idx", "seg_text"))
-    return flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_seg"),
-        F.sum(F.col("kept").cast("long")).cast("long").alias("n_seg_kept"),
-        F.coalesce(
-            F.sum(F.when(F.col("kept"), F.col("ntok"))), F.lit(0)
-        ).cast("long").alias("n_tokens_kept"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(kept_struct)),
-                    lambda s: s["seg_text"],
-                ),
-                " ",
-            )
-        ).alias("sig"),
-    )
-
-
-# --- chi-square token feature selection: the classic feature-selection
-# step in front of a quality classifier (select the vocabulary that
-# discriminates the target class, THEN fit — the fastText/CCNet recipe
-# at corpus scale).  The class label is the deterministic length proxy
-# (n_chars >= threshold) also used by the quality-rule family; presence
-# is per-doc (distinct doc-term), the standard chi2 contingency grain.
-# All four margins are exact BIGINT counts; the statistic is computed in
-# 128-bit integers (DECIMAL(38,0) / HUGEINT) on a 1e4 grid so the
-# ranking is bit-identical in both engines.
-_CHI2_THRESH = 300  # splits the corpus ~50/50 at every SF
-_CHI2_MIN_DF = 5
-_CHI2_TOPK = 20
-_CHI2_GRID = 10_000
-
-
-@query(
-    "token_chi2_selection",
-    oracle=f"""
-    WITH lab AS (
-        SELECT doc_id, CASE WHEN n_chars >= {_CHI2_THRESH} THEN 1 ELSE 0 END AS y,
-               list_filter(string_split(text, ' '), t -> t <> '') AS ts
-        FROM documents
-    ),
-    tot AS (
-        SELECT CAST(count(*) FILTER (WHERE y = 1) AS BIGINT) AS n1,
-               CAST(count(*) FILTER (WHERE y = 0) AS BIGINT) AS n0
-        FROM lab
-    ),
-    pres AS (
-        SELECT DISTINCT doc_id, y, unnest(ts) AS w FROM lab
-    ),
-    cnt AS (
-        SELECT w,
-               CAST(count(*) FILTER (WHERE y = 1) AS BIGINT) AS a,
-               CAST(count(*) FILTER (WHERE y = 0) AS BIGINT) AS b
-        FROM pres GROUP BY w
-        HAVING count(*) >= {_CHI2_MIN_DF}
-    ),
-    stat AS (
-        SELECT w, a, b,
-               CAST(((n1 + n0)::HUGEINT
-                     * (a::HUGEINT * (n0 - b) - b::HUGEINT * (n1 - a))
-                     * (a::HUGEINT * (n0 - b) - b::HUGEINT * (n1 - a))
-                     * {_CHI2_GRID})
-                    // ((a + b)::HUGEINT * (n1 + n0 - a - b)
-                        * n1::HUGEINT * n0::HUGEINT) AS BIGINT) AS chi2_q,
-               CASE WHEN a::HUGEINT * n0 >= b::HUGEINT * n1 THEN 1 ELSE -1 END AS direction
-        FROM cnt CROSS JOIN tot
-        WHERE (a + b) < (n1 + n0) AND n1 > 0 AND n0 > 0
-    )
-    SELECT w, a, b, chi2_q, direction, CAST(rk AS INT) AS rk
-    FROM (
-        SELECT *, row_number() OVER (ORDER BY chi2_q DESC, w) AS rk FROM stat
-    )
-    WHERE rk <= {_CHI2_TOPK}
-    ORDER BY rk
-    """,
-)
-def token_chi2_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{k} tokens by chi-square association with the quality class:
-    ``(w, a, b, chi2_q, direction, rk)`` where a/b are class presence
-    counts and direction is +1 when the token indicates the positive
-    class.
-
-    Plan shape: ONE corpus explode -> in-partition distinct -> one
-    w-keyed count aggregate (map-side combinable); the class totals are
-    one scalar row broadcast into the vocabulary-grain statistic; the
-    final rank is a distributed top-k over vocabulary-grain rows."""
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"]))
-    lab = docs.select(
-        "doc_id",
-        F.when(F.col("n_chars") >= _CHI2_THRESH, 1).otherwise(0).alias("y"),
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts"),
-    )
-    tot = lab.agg(
-        F.sum(F.col("y")).cast("long").alias("n1"),
-        F.sum(1 - F.col("y")).cast("long").alias("n0"),
-    )
-    pres = lab.select("doc_id", "y", F.explode("ts").alias("w")).distinct()
-    cnt = (
-        pres.groupBy("w")
-        .agg(
-            F.sum("y").cast("long").alias("a"),
-            F.sum(1 - F.col("y")).cast("long").alias("b"),
-        )
-        .filter(F.col("a") + F.col("b") >= _CHI2_MIN_DF)
-    )
-    d38 = "DECIMAL(38,0)"
-    diff = f"(CAST(a AS {d38}) * (n0 - b) - CAST(b AS {d38}) * (n1 - a))"
-    chi2 = (
-        f"CAST((CAST(n1 + n0 AS {d38}) * {diff} * {diff} * {_CHI2_GRID})"
-        f" div (CAST(a + b AS {d38}) * (n1 + n0 - a - b)"
-        f" * CAST(n1 AS {d38}) * CAST(n0 AS {d38})) AS BIGINT)"
-    )
-    stat = (
-        cnt.crossJoin(F.broadcast(tot))
-        .filter(
-            (F.col("a") + F.col("b") < F.col("n1") + F.col("n0"))
-            & (F.col("n1") > 0)
-            & (F.col("n0") > 0)
-        )
-        .select(
-            "w",
-            "a",
-            "b",
-            F.expr(chi2).alias("chi2_q"),
-            F.when(
-                F.expr(f"CAST(a AS {d38}) * n0 >= CAST(b AS {d38}) * n1"), 1
-            ).otherwise(-1).alias("direction"),
-        )
-    )
-    top = stat.orderBy(F.desc("chi2_q"), F.asc("w")).limit(_CHI2_TOPK)
-    win = W.orderBy(F.desc("chi2_q"), F.asc("w"))
-    return (
-        top.withColumn("rk", F.row_number().over(win).cast("int"))
-        .select("w", "a", "b", "chi2_q", "direction", "rk")
-        .orderBy("rk")
     )
 
 
@@ -8830,7 +2172,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded |queries| x {p} pool (broadcast id fetch, then a
     per-query self-join — {p}^2 rows per query); the greedy chain runs
     in one cogrouped Arrow kernel per query over integer grids."""
-    from columnflow_spark.functions.skew import salted_topk
 
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     q = emb.filter(F.col("vec_id") < 10).select(
@@ -8883,8 +2224,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, w_rel, w_div = _MMR_K, _MMR_W_REL, _MMR_W_DIV
 
     def greedy(key, left, right):
-        import pandas as pd  # noqa: PLC0415
-
         (qid,) = key
         rel = {
             int(n): int(r) for n, r in zip(left["neighbor_id"], left["rel_q"])
@@ -8923,440 +2262,3 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .applyInPandas(greedy, "query_id long, neighbor_id long, rk int")
     )
     return out.orderBy("query_id", "rk")
-
-
-# --- T5-style span corruption (Raffel et al. 2020): the pretraining
-# target generator — mask ~15% of each document in multi-token spans,
-# emit the sentinel-bridged encoder input and the sentinel->span decoder
-# target.  Masking is DETERMINISTIC per (doc, block): the reference's
-# sha256-seed recipe (functions/hashing.py, reference seeds.py) decides
-# each fixed-width block, so the whole generator is one in-row
-# expression chain over the token array — ZERO shuffles, exactly what a
-# 100 TB target-generation pass wants — and the DuckDB oracle replays
-# the identical hash arithmetic.  Sentinels are consecutive per doc
-# (<extra_id_0>, <extra_id_1>, ...), the T5 convention.
-_SPAN_BLOCK = 3  # tokens per maskable block (mean noise span length)
-_SPAN_DEN = 20
-_SPAN_NUM = 3  # 3/20 = 15% of blocks masked
-
-
-@query(
-    "span_corruption_targets",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-        FROM documents
-    ),
-    blocks AS (
-        SELECT doc_id, (i - 1) // {_SPAN_BLOCK} AS bi,
-               string_agg(w, ' ' ORDER BY i) AS btext,
-               CAST(count(*) AS BIGINT) AS ntok,
-               (('0x' || substr(sha256(doc_id || '|' || ((i - 1) // {_SPAN_BLOCK})), 1, 15))::BIGINT
-                % {_SPAN_DEN}) < {_SPAN_NUM} AS masked
-        FROM (SELECT doc_id, unnest(ts) AS w, generate_subscripts(ts, 1) AS i FROM toks)
-        GROUP BY doc_id, (i - 1) // {_SPAN_BLOCK}
-    ),
-    numbered AS (
-        SELECT doc_id, bi, btext, ntok, masked,
-               CAST(coalesce(sum(CASE WHEN masked THEN 1 ELSE 0 END) OVER (
-                   PARTITION BY doc_id ORDER BY bi
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS k
-        FROM blocks
-    )
-    SELECT doc_id,
-           CAST(sum(ntok) AS BIGINT) AS n_tokens,
-           CAST(count(*) AS BIGINT) AS n_blocks,
-           CAST(coalesce(sum(ntok) FILTER (WHERE masked), 0) AS BIGINT) AS n_masked,
-           CAST(sum(CASE WHEN masked THEN 1 ELSE 0 END) AS BIGINT) AS n_spans,
-           md5(string_agg(CASE WHEN masked THEN '<extra_id_' || k || '>'
-                               ELSE btext END, ' ' ORDER BY bi)) AS inputs_sig,
-           md5(coalesce(string_agg('<extra_id_' || k || '> ' || btext, ' ' ORDER BY bi)
-                        FILTER (WHERE masked), '')) AS targets_sig
-    FROM numbered GROUP BY doc_id
-    """,
-)
-def span_corruption_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc span-corruption pair digests: ``(doc_id, n_tokens,
-    n_blocks, n_masked, n_spans, inputs_sig, targets_sig)``.
-
-    Plan shape: block split and the sha256 mask decision are in-row;
-    the consecutive sentinel numbering is ONE doc-partitioned running
-    count whose doc clustering the rollup aggregate reuses — a single
-    doc-grain shuffle for the whole generator.  Cites reference
-    production/cms/seeds.py:26-55 for the per-entity sha256 seed shape."""
-    from columnflow_spark.functions.hashing import seed_long
-
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    segs = segment_docs_width(docs, _SPAN_BLOCK).withColumn(
-        "masked",
-        F.pmod(seed_long(F.col("doc_id"), F.col("seg_idx")), F.lit(_SPAN_DEN))
-        < _SPAN_NUM,
-    )
-    kwin = (
-        W.partitionBy("doc_id")
-        .orderBy("seg_idx")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    numbered = segs.withColumn(
-        "k",
-        F.coalesce(
-            F.sum(F.when(F.col("masked"), 1).otherwise(0)).over(kwin), F.lit(0)
-        ).cast("long"),
-    )
-    inp = F.when(
-        F.col("masked"), F.concat(F.lit("<extra_id_"), F.col("k"), F.lit(">"))
-    ).otherwise(F.col("seg_text"))
-    tgt = F.when(
-        F.col("masked"),
-        F.concat(F.lit("<extra_id_"), F.col("k"), F.lit("> "), F.col("seg_text")),
-    )
-    return numbered.groupBy("doc_id").agg(
-        F.sum("ntok").cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_blocks"),
-        F.coalesce(F.sum(F.when(F.col("masked"), F.col("ntok"))), F.lit(0))
-        .cast("long")
-        .alias("n_masked"),
-        F.sum(F.col("masked").cast("long")).cast("long").alias("n_spans"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("seg_idx", inp.alias("v")))),
-                    lambda s: s["v"],
-                ),
-                " ",
-            )
-        ).alias("inputs_sig"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.when(F.col("masked"), F.struct("seg_idx", tgt.alias("v"))))),
-                    lambda s: s["v"],
-                ),
-                " ",
-            )
-        ).alias("targets_sig"),
-    )
-
-
-def segment_docs_width(docs: DataFrame, width: int) -> DataFrame:
-    """:func:`segment_docs` at an arbitrary block width."""
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    segs_arr = F.when(F.size("ts") == 0, F.expr("array()")).otherwise(
-        F.expr(
-            f"transform(sequence(0, CAST(ceil(size(ts) / {width}.0) AS INT) - 1), "
-            f"i -> struct(array_join(slice(ts, i * {width} + 1, {width}), ' ') AS seg_text, "
-            f"CAST(size(slice(ts, i * {width} + 1, {width})) AS BIGINT) AS ntok))"
-        )
-    )
-    return toks.select(
-        "doc_id", F.posexplode(segs_arr).alias("seg_idx", "seg")
-    ).select("doc_id", "seg_idx", F.col("seg.seg_text").alias("seg_text"), F.col("seg.ntok").alias("ntok"))
-
-
-# --- leakage-safe train/test split: assign every NEAR-DUP CLUSTER
-# wholly to one side (split by the cluster's canonical id, not the doc
-# id), so a paraphrase of a test document can never land in train — the
-# eval-hygiene rule naive doc-hash splits violate (Lee et al. 2022 §6;
-# the reason decontamination pipelines split AFTER dedup).  Reuses the
-# n-gram-Jaccard component solve; the split decision is one sha256 of
-# the component id.
-_SPLIT_TEST_MOD = 10
-_SPLIT_TEST_REM = 2  # hash % 10 < 2 -> ~20% test
-
-
-@query(
-    "leakage_safe_split",
-    oracle=f"""
-    WITH RECURSIVE {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    cand AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT d1, d2
-        FROM cand
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    ),
-    sym AS (
-        SELECT d1 AS s, d2 AS t FROM edges
-        UNION ALL
-        SELECT d2 AS s, d1 AS t FROM edges
-    ),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS node FROM documents
-        UNION
-        SELECT r.src, sym.t AS node FROM reach r JOIN sym ON sym.s = r.node
-    ),
-    comp AS (
-        SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src
-    )
-    SELECT doc_id, component,
-           CASE WHEN ('0x' || substr(sha256(component::VARCHAR), 1, 15))::BIGINT
-                     % {_SPLIT_TEST_MOD} < {_SPLIT_TEST_REM}
-                THEN 'test' ELSE 'train' END AS split
-    FROM comp
-    """,
-)
-def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, component, split)`` — a dedup-aware holdout split:
-    the component id (not the doc id) hashes to the side, so connected
-    near-dups always co-locate.  Plan: the component solve plus one
-    in-row hash — no extra shuffle."""
-    from columnflow_spark.functions.hashing import seed_long
-
-    all_docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    edges = _jaccard_edges_cached(spark, sf_dir)
-    comp = components_from_edges(all_docs, edges)
-    return comp.select(
-        "doc_id",
-        "component",
-        F.when(
-            F.pmod(seed_long(F.col("component")), F.lit(_SPLIT_TEST_MOD))
-            < _SPLIT_TEST_REM,
-            F.lit("test"),
-        )
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-
-
-# --- per-source quantile calibration: raw quality signals are not
-# comparable across sources (a web dump's length distribution differs
-# from curated text), so production filters threshold each source at
-# its OWN quantiles (the FineWeb per-dump calibration).  The calibrated
-# score is the exact-integer empirical quantile of the doc's raw score
-# within its source; a single global cut on the calibrated score then
-# keeps the same fraction of every source by construction.
-_CAL_SCALE = 1_000_000
-_CAL_KEEP_Q = 800_000  # keep the per-source top 20%
-
-
-@query(
-    "per_source_quantile_calibration",
-    oracle=f"""
-    WITH ranked AS (
-        SELECT doc_id, source, n_chars,
-               row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rk,
-               count(*) OVER (PARTITION BY source) AS n
-        FROM documents
-    )
-    SELECT doc_id, source, CAST(n_chars AS BIGINT) AS raw,
-           CAST(CASE WHEN n > 1 THEN (rk - 1) * {_CAL_SCALE} // (n - 1)
-                ELSE {_CAL_SCALE} END AS BIGINT) AS cal_q,
-           (CASE WHEN n > 1 THEN (rk - 1) * {_CAL_SCALE} // (n - 1)
-                 ELSE {_CAL_SCALE} END) >= {_CAL_KEEP_Q} AS keep
-    FROM ranked
-    """,
-)
-def per_source_quantile_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, source, raw, cal_q, keep)`` — the raw score mapped to
-    its exact within-source quantile (1e-6 grid), with the global keep
-    cut applied on the calibrated scale.
-
-    Histogram-rank plan (VERDICT r9 weak #2 — replaces the per-source
-    corpus rank window, which put each whole source in one task):
-
-    1. ``groupBy(source, n_chars)`` counts — map-side combinable;
-    2. cumulative windows over that distinct-value table (bounded by
-       |sources| x |distinct lengths|, a grid not the corpus) derive
-       each value group's rank-range start and the source total ``n``;
-    3. the start table broadcasts back onto the docs, and the in-group
-       tiebreak rank (the oracle orders by ``n_chars, doc_id``) is a
-       window keyed by (source, n_chars) — corpus-grain work, but the
-       partition key is now high-cardinality, so no task ever holds
-       more than one length-value of one source.
-
-    ``rk = start + in-group rank`` reproduces the oracle's row_number
-    exactly; the quantile math is the same exact-integer expression."""
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source", "n_chars"])
-    hist = docs.groupBy("source", "n_chars").agg(F.count(F.lit(1)).alias("c"))
-    wcum = W.partitionBy("source").orderBy("n_chars")
-    cum = hist.select(
-        "source",
-        "n_chars",
-        (F.sum("c").over(wcum) - F.col("c")).alias("start"),
-        F.sum("c").over(W.partitionBy("source")).alias("n"),
-    )
-    sub = F.row_number().over(W.partitionBy("source", "n_chars").orderBy("doc_id"))
-    ranked = (
-        docs.join(F.broadcast(cum), ["source", "n_chars"])
-        .withColumn("rk", (F.col("start") + sub).cast("long"))
-    )
-    cal = F.when(
-        F.col("n") > 1, F.expr(f"(rk - 1) * {_CAL_SCALE} div (CAST(n AS BIGINT) - 1)")
-    ).otherwise(F.lit(_CAL_SCALE))
-    return ranked.select(
-        "doc_id",
-        "source",
-        F.col("n_chars").cast("long").alias("raw"),
-        cal.cast("long").alias("cal_q"),
-        (cal >= _CAL_KEEP_Q).alias("keep"),
-    )
-
-
-# --- FIM (fill-in-the-middle) transformation (Bavarian et al. 2022;
-# the StarCoder/Codex pretraining transform): for a deterministic half
-# of the corpus, split the token stream at two seeded cut points and
-# re-order to PSM (prefix-suffix-middle) with sentinel tokens, so the
-# model learns infilling.  Like span corruption the WHOLE transform is
-# in-row (two sha256 draws + array slices) — a 100 TB pass is one scan.
-_FIM_RATE_MOD = 2  # seed % 2 == 0 -> ~50% of docs transformed
-
-
-@query(
-    "fim_transform_targets",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ts
-        FROM documents
-    ),
-    cuts AS (
-        SELECT doc_id, ts, len(ts) AS n,
-               (('0x' || substr(sha256(doc_id || '|0'), 1, 15))::BIGINT % 2 = 0)
-                   AS fim_applied,
-               ('0x' || substr(sha256(doc_id || '|1'), 1, 15))::BIGINT
-                   % greatest(len(ts), 1) AS u1,
-               ('0x' || substr(sha256(doc_id || '|2'), 1, 15))::BIGINT
-                   % greatest(len(ts), 1) AS u2
-        FROM toks
-    ),
-    spans AS (
-        SELECT doc_id, ts, n, fim_applied,
-               least(u1, u2) AS c1, greatest(u1, u2) AS c2
-        FROM cuts
-    )
-    SELECT doc_id, fim_applied,
-           CAST(CASE WHEN fim_applied THEN c1 ELSE n END AS BIGINT) AS n_prefix,
-           CAST(CASE WHEN fim_applied THEN c2 - c1 ELSE 0 END AS BIGINT) AS n_middle,
-           CAST(CASE WHEN fim_applied THEN n - c2 ELSE 0 END AS BIGINT) AS n_suffix,
-           -- DuckDB array_to_string([]) is NULL (Spark array_join is '');
-           -- coalesce each piece so empty prefix/middle/suffix cannot
-           -- poison the concat
-           md5(CASE WHEN fim_applied THEN
-                   '<fim_prefix> ' || coalesce(array_to_string(ts[1:c1], ' '), '')
-                   || ' <fim_suffix> ' || coalesce(array_to_string(ts[c2+1:n], ' '), '')
-                   || ' <fim_middle> ' || coalesce(array_to_string(ts[c1+1:c2], ' '), '')
-               ELSE coalesce(array_to_string(ts, ' '), '') END) AS sig
-    FROM spans
-    """,
-)
-def fim_transform_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, fim_applied, n_prefix, n_middle, n_suffix, sig)`` —
-    the PSM re-ordering digest for the transformed half, the identity
-    digest for the rest.  Zero shuffles: scan-and-emit."""
-    from columnflow_spark.functions.hashing import seed_long
-
-    docs = spread(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    n = F.size("ts")
-    cuts = toks.select(
-        "doc_id",
-        "ts",
-        n.alias("n"),
-        (F.pmod(seed_long(F.col("doc_id"), F.lit(0)), F.lit(_FIM_RATE_MOD)) == 0).alias(
-            "fim_applied"
-        ),
-        F.pmod(seed_long(F.col("doc_id"), F.lit(1)), F.greatest(n, F.lit(1))).alias("u1"),
-        F.pmod(seed_long(F.col("doc_id"), F.lit(2)), F.greatest(n, F.lit(1))).alias("u2"),
-    ).select(
-        "doc_id",
-        "ts",
-        "n",
-        "fim_applied",
-        F.least("u1", "u2").alias("c1"),
-        F.greatest("u1", "u2").alias("c2"),
-    )
-    psm = F.concat(
-        F.lit("<fim_prefix> "),
-        F.array_join(F.slice(F.col("ts"), 1, F.col("c1")), " "),
-        F.lit(" <fim_suffix> "),
-        F.array_join(
-            F.slice(F.col("ts"), F.col("c2") + 1, F.greatest(F.col("n") - F.col("c2"), F.lit(0))),
-            " ",
-        ),
-        F.lit(" <fim_middle> "),
-        F.array_join(
-            F.slice(F.col("ts"), F.col("c1") + 1, F.col("c2") - F.col("c1")), " "
-        ),
-    )
-    return cuts.select(
-        "doc_id",
-        "fim_applied",
-        F.when(F.col("fim_applied"), F.col("c1")).otherwise(F.col("n")).cast("long").alias("n_prefix"),
-        F.when(F.col("fim_applied"), F.col("c2") - F.col("c1")).otherwise(0).cast("long").alias("n_middle"),
-        F.when(F.col("fim_applied"), F.col("n") - F.col("c2")).otherwise(0).cast("long").alias("n_suffix"),
-        F.md5(
-            F.when(F.col("fim_applied"), psm).otherwise(F.array_join("ts", " "))
-        ).alias("sig"),
-    )
-
-
-# --- dedup observability: cluster-size distribution + per-source
-# duplication factors.  Every production dedup run ships this report
-# (it is how FineWeb/Dolma card their duplication rates) — and it is
-# the cheap sanity check that catches a broken band config (cluster
-# sizes collapse to 1) or a degenerate corpus (one giant cluster).
-@query(
-    "dedup_cluster_stats",
-    oracle=f"""
-    WITH RECURSIVE {_GRAMS_CTE},
-    ex AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-    sizes AS (SELECT doc_id, len(gs) AS sz FROM grams),
-    cand AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS common
-        FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    edges AS (
-        SELECT d1, d2 FROM cand
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE common * 1.0 / (s1.sz + s2.sz - common) >= {JACCARD_THRESHOLD}
-    ),
-    sym AS (
-        SELECT d1 AS s, d2 AS t FROM edges
-        UNION ALL SELECT d2, d1 FROM edges
-    ),
-    reach AS (
-        SELECT doc_id AS src, doc_id AS node FROM documents
-        UNION
-        SELECT r.src, sym.t FROM reach r JOIN sym ON sym.s = r.node
-    ),
-    comp AS (SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src),
-    csize AS (
-        SELECT component, count(*) AS sz FROM comp GROUP BY component
-    )
-    SELECT CAST(sz AS BIGINT) AS cluster_size,
-           CAST(count(*) AS BIGINT) AS n_clusters,
-           CAST(sum(sz) AS BIGINT) AS n_docs,
-           CAST(sum(sz - 1) AS BIGINT) AS n_removable
-    FROM csize GROUP BY sz ORDER BY sz
-    """,
-)
-def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster-size histogram: ``(cluster_size, n_clusters,
-    n_docs, n_removable)`` — n_removable sums what keep-one-per-cluster
-    deletes.  Catalog-sized output; the only cost is the shared
-    component solve."""
-    all_docs = load_table(spark, sf_dir, "documents", columns=["doc_id"])
-    edges = _jaccard_edges_cached(spark, sf_dir)
-    comp = components_from_edges(all_docs, edges)
-    csize = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
-    return (
-        csize.groupBy(F.col("sz").cast("long").alias("cluster_size"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_clusters"),
-            F.sum("sz").cast("long").alias("n_docs"),
-            F.sum(F.col("sz") - 1).cast("long").alias("n_removable"),
-        )
-        .orderBy("cluster_size")
-    )

@@ -914,7 +914,7 @@ def streaming_neardup_bounded_state(spark: SparkSession, sf_dir: str) -> DataFra
 # with any downstream streaming stage.  Per-doc token counts + the
 # lossless-segmentation char check; oracle replays training + encoding. ---
 def _bpe_oracle() -> str:
-    import columnflow_spark.queries.mmdata  # noqa: F401  (registers the oracle)
+    import columnflow_spark.queries.tokenlm  # noqa: F401  (registers the oracle)
     from columnflow_spark.queries import ORACLES
 
     return ORACLES["bpe_encode_corpus"]
@@ -925,7 +925,7 @@ def _bpe_oracle() -> str:
     oracle=_bpe_oracle(),
 )
 def streaming_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.tokenlm import (
         _bpe_clean_word,
         _bpe_syms,
         _bpe_words,
@@ -983,7 +983,7 @@ def streaming_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # projection -> filter -> one aggregation: no state store, no join,
 # unbounded-feed safe.  The oracle replays the K training rounds and the
 # scoring pass in one SQL chain. ---
-from columnflow_spark.queries.mmdata import (  # noqa: E402
+from columnflow_spark.queries.quality import (  # noqa: E402
     _LOGREG_STEPS,
     _logreg_fit_ctes,
     _logreg_logit,
@@ -1030,7 +1030,7 @@ def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle replays featurization + the 4 training rounds + the median in
 # SQL, the same correctness bar as the batch funnel. ---
 def _learned_gate_oracle() -> str:
-    from columnflow_spark.queries.mmdata import _tf_fit_ctes
+    from columnflow_spark.queries.quality import _tf_fit_ctes
 
     return f"""
     WITH {_tf_fit_ctes()}
@@ -1046,7 +1046,7 @@ def _learned_gate_oracle() -> str:
 
 @query("streaming_learned_quality_gate", oracle=_learned_gate_oracle())
 def streaming_learned_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.queries.mmdata import tf_gate_score_expr, tf_learned_gate
+    from columnflow_spark.queries.quality import tf_gate_score_expr, tf_learned_gate
 
     w, thr = tf_learned_gate(spark, sf_dir)  # offline batch training pass
     stream = (
@@ -1222,7 +1222,7 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_oracle() -> str:
-    from columnflow_spark.queries.mmdata import CMS_ORACLE
+    from columnflow_spark.queries.tokenlm import CMS_ORACLE
 
     return CMS_ORACLE
 
@@ -1240,7 +1240,7 @@ def streaming_cms_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline read) against the stream-accumulated cells.
     """
     from columnflow_spark.functions.text import tokens
-    from columnflow_spark.queries.mmdata import cms_cells, cms_topk_from_cells
+    from columnflow_spark.queries.tokenlm import cms_cells, cms_topk_from_cells
     from columnflow_spark.sources import load_table
 
     latest = {"path": None}
@@ -1445,8 +1445,8 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in-batch) fires, never the union (pigeonhole makes the block index
 # exact, so the proof is structural).  State is the on-disk store,
 # bounded by fingerprint volume. ---
-from columnflow_spark.queries.mmdata import _PH_HAM_MAX as _PH_HAM  # noqa: E402
-from columnflow_spark.queries.mmdata import _PHASH_FP_CTES as _PH_CTES  # noqa: E402
+from columnflow_spark.queries.textdedup import _PH_HAM_MAX as _PH_HAM  # noqa: E402
+from columnflow_spark.queries.textdedup import _PHASH_FP_CTES as _PH_CTES  # noqa: E402
 
 
 @query(
@@ -1466,7 +1466,7 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_fp_frame,
         upsert_phash_fp,
     )
-    from columnflow_spark.queries.mmdata import phash_neardup_pairs
+    from columnflow_spark.queries.textdedup import phash_neardup_pairs
 
     with replay_ingest(
         spark, sf_dir, "documents", "doc_id", "store", "flags",
@@ -1524,8 +1524,8 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # prior/in-batch split depends on where boundaries fall and stays a
 # per-batch diagnostic.  Replay-fenced: a retried micro-batch flags
 # against batches <= batch_id - 1, never its own failed upsert. ---
-from columnflow_spark.queries.mmdata import _SSTR_GRAM_CTES as _SSG  # noqa: E402
-from columnflow_spark.queries.mmdata import _SSTR_K as _SSK  # noqa: E402
+from columnflow_spark.queries.textdedup import _SSTR_GRAM_CTES as _SSG  # noqa: E402
+from columnflow_spark.queries.textdedup import _SSTR_K as _SSK  # noqa: E402
 
 
 @query(
@@ -1570,7 +1570,7 @@ def streaming_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         substring_cov_rollup,
         upsert_substring_grams,
     )
-    from columnflow_spark.queries.mmdata import _SSTR_K, _sstr_grams
+    from columnflow_spark.queries.textdedup import _SSTR_K, _sstr_grams
 
     with replay_ingest(spark, sf_dir, "documents", "doc_id", "store", "flags") as rp:
         store, flags = rp.dirs
@@ -1606,7 +1606,7 @@ def streaming_substring_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shares unigram_encode_corpus's ORACLE — hash equality is the
 # streaming-maintenance proof; fertility is computed from the TOTALS at
 # read time (a per-batch fert would not be mergeable). ---
-from columnflow_spark.queries.mmdata import _ULM_ENCODE_ORACLE as _ULME  # noqa: E402
+from columnflow_spark.queries.tokenlm import _ULM_ENCODE_ORACLE as _ULME  # noqa: E402
 
 
 def _lang_token_totals(partials: DataFrame) -> DataFrame:
@@ -1631,7 +1631,7 @@ def _lang_token_totals(partials: DataFrame) -> DataFrame:
 
 @query("streaming_unigram_tokenize", oracle=_ULME)
 def streaming_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.queries.mmdata import _ulm_segment, _ulm_vocab
+    from columnflow_spark.queries.tokenlm import _ulm_segment, _ulm_vocab
 
     sc = {p: s for p, c, s in _ulm_vocab(spark, sf_dir)}  # offline artifact
     with replay_ingest(spark, sf_dir, "documents", "doc_id", "flags") as rp:
@@ -1770,12 +1770,12 @@ def streaming_dedup_cdc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # monoid over the partials, so the at-rest rollup shares
 # wordpiece_encode_corpus's ORACLE — hash equality is the
 # streaming-maintenance proof. ---
-from columnflow_spark.queries.mmdata import _WP_ENCODE_ORACLE as _WPE  # noqa: E402
+from columnflow_spark.queries.tokenlm import _WP_ENCODE_ORACLE as _WPE  # noqa: E402
 
 
 @query("streaming_wordpiece_tokenize", oracle=_WPE)
 def streaming_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.tokenlm import (
         _WP_ROUNDS,
         _wp_greedy_ntok,
         _wp_vocab_set,
@@ -1850,7 +1850,7 @@ def streaming_segment_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         segment_store_serve,
         upsert_fingerprints,
     )
-    from columnflow_spark.queries.mmdata import segment_docs
+    from columnflow_spark.queries.textdedup import segment_docs
 
     h = _history_cutoff(spark, sf_dir)
     with replay_ingest(spark, sf_dir, "documents", "doc_id", "store") as rp:
@@ -2214,7 +2214,7 @@ def streaming_connected_components(spark: SparkSession, sf_dir: str) -> DataFram
         scc_gb = _read_scc_gb(store)
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            from columnflow_spark.queries.mmdata import components_from_edges
+            from columnflow_spark.queries.textdedup import components_from_edges
 
             b = int(batch_id)
             pairs = batch_df.select("a", "b").distinct().transform(checkpoint_df)

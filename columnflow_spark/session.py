@@ -13,6 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: AQE's per-partition build-side cap for rewriting a sort-merge join to a
+#: shuffled hash join; set by ``get_spark`` and by ``queries.tune_session``
+#: on sessions the engine did not build
+SHJ_LOCAL_MAP = "64m"
+
 
 def session_key(spark: SparkSession) -> str:
     """Stable per-session key of the engine's session artifacts
@@ -62,10 +67,7 @@ def get_spark(app_name: str = "columnflow_spark", shuffle_partitions: int | None
         # threshold.  Both are size-gated, spill-safe defaults on any
         # deployment; override per-cluster via spark-submit conf.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", SHJ_LOCAL_MAP)
         # r13 (guide §6): zstd parquet for everything the engine writes —
         # smaller store/sink bytes at similar read speed (codec is
         # per-file metadata, so existing snappy stores keep reading fine)

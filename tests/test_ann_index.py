@@ -377,7 +377,7 @@ def test_opq_artifacts_roundtrip_exactly(spark, sf_dir, fresh_opq_index):
     from columnflow_spark.queries.mmdata import opq_train_np
 
     R0, cms0 = opq_train_np(spark, sf_dir)
-    R1, cms1 = load_opq_artifacts(spark, fresh_opq_index)
+    R1, cms1 = load_opq_artifacts(fresh_opq_index)
     assert np.array_equal(R0, R1)
     for a, b in zip(cms0, cms1):
         assert np.array_equal(np.asarray(a), np.asarray(b))
@@ -421,6 +421,24 @@ def test_opq_materialized_search_shape_and_probe_pruning(
     assert all(1 <= r.rk <= 5 for r in rows)
 
 
+def test_opq_served_read_job_count(spark, sf_dir, fresh_opq_index):
+    # a warm OPQ read with a new query batch is three Spark jobs: the
+    # routing collect, the LUT's query-batch collect and the candidate
+    # collect; the ``_rotation``/``_codebook`` sidecars are read on the
+    # driver, with no Spark job
+    from columnflow_spark.queries.annindex import search_opq_index
+    from columnflow_spark.session import count_jobs
+
+    def read(r):
+        return search_opq_index(
+            spark, sf_dir, fresh_opq_index, query_pred=F.col("vec_id") % 50 == r
+        ).collect()
+
+    read(1)
+    rows, jobs = count_jobs(spark, lambda: read(2))
+    assert rows and jobs <= 3, jobs
+
+
 def test_opq_driver_lut_equals_in_plan(spark, sf_dir, fresh_opq_index):
     """The OPQ LUT rows planned on the driver from the persisted
     ``_rotation``/``_codebook`` equal the in-plan LUT (rotation pandas
@@ -434,7 +452,7 @@ def test_opq_driver_lut_equals_in_plan(spark, sf_dir, fresh_opq_index):
     from columnflow_spark.sources import load_table
 
     every = F.lit(True)
-    R, _ = load_opq_artifacts(spark, fresh_opq_index)
+    R, _ = load_opq_artifacts(fresh_opq_index)
 
     @F.pandas_udf("array<long>")
     def _rot(batch):

@@ -134,3 +134,18 @@ def test_no_module_level_caches_outside_the_registry():
         if _CACHE_REF.search(line)
     ]
     assert not refs, refs
+
+
+_MAX_QUERY_MODULE_LINES = 2500
+
+
+def test_query_modules_stay_split_by_family():
+    """One module per operator family: no module of the query registry
+    grows past ~2.5k lines (``queries/mmdata.py`` once held ten families
+    in 9.4k lines, with copies of the same code thousands of lines
+    apart)."""
+    sizes = {
+        path.name: len(path.read_text().splitlines())
+        for path in sorted((_REPO / "columnflow_spark" / "queries").glob("*.py"))
+    }
+    assert sizes and all(n <= _MAX_QUERY_MODULE_LINES for n in sizes.values()), sizes

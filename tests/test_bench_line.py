@@ -35,15 +35,8 @@ def test_driver_line_fits_window_and_parses():
     line = b._driver_line(timings, 0.1, budget=1900)
     assert len(line) <= 1900, len(line)
     parsed = json.loads(line)
-    assert len(parsed["queries"]) == len(timings), "abbreviation collided"
+    assert len(parsed["queries"]) == len(timings), "query keys collided"
     assert list(parsed)[-1] == "queries"  # tail-truncation loses scalars, not data
-
-
-def test_abbreviation_is_unique_and_flagged():
-    b = _bench()
-    amap, width = b._abbr_names(list(b.BENCH_QUERIES))
-    assert len(set(amap.values())) == len(b.BENCH_QUERIES)
-    assert width >= 3
 
 
 def test_idx_tier_mapping_is_reconstructible():
@@ -52,7 +45,7 @@ def test_idx_tier_mapping_is_reconstructible():
     the name list."""
     b = _bench()
     timings = {name: 1.2345 for name in b.BENCH_QUERIES}
-    for i in range(30):  # force far past every abbr tier
+    for i in range(30):  # force past the full-name tier
         timings[f"some_very_long_future_query_name_variant_{i}"] = 9.9
     line = b._driver_line(timings, 0.1, budget=1500)
     parsed = json.loads(line)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from columnflow_spark.queries.mmdata import _bpe_clean_word, _bpe_syms, _bpe_train_rows
+from columnflow_spark.queries.tokenlm import _bpe_clean_word, _bpe_syms, _bpe_train_rows
 
 
 def _apply_chain(spark, words, merges):
@@ -54,7 +54,7 @@ def test_pure_delimiter_token_is_dropped(spark):
     # a whitespace token made only of delimiter chars cleans to the empty
     # string and must vanish entirely (the SQL twin's string_split('')
     # would otherwise count it as one token)
-    from columnflow_spark.queries.mmdata import _bpe_syms, _bpe_words, bpe_encode_expr
+    from columnflow_spark.queries.tokenlm import _bpe_syms, _bpe_words, bpe_encode_expr
 
     docs = spark.createDataFrame([(1, "a <> b"), (2, "<><>")], "doc_id long, text string")
     per_word = _bpe_words(docs).select(
@@ -70,7 +70,7 @@ def test_distributed_fallback_batches_merges_identically(spark, sf_dir, monkeypa
     # distributed loop; its multi-merge batching (ranked symbol-disjoint
     # prefix + creation-count domination bound) must reproduce the
     # one-merge-at-a-time list EXACTLY, in fewer rounds
-    import columnflow_spark.queries.mmdata as M
+    import columnflow_spark.queries.tokenlm as M
     from columnflow_spark.core.artifacts import purge
 
     purge("bpe_merges")
@@ -90,7 +90,7 @@ def test_distributed_fallback_batches_merges_identically(spark, sf_dir, monkeypa
 def test_wordpiece_prefers_likelihood_over_raw_count(spark):
     """The WordPiece score picks a RARE-symbol pair over a higher-count
     pair of ubiquitous symbols — the defining difference vs BPE."""
-    from columnflow_spark.queries.mmdata import _wp_train_rows
+    from columnflow_spark.queries.tokenlm import _wp_train_rows
 
     # 'xy' occurs 4x with x,y appearing ONLY together (score 1e12/16*4);
     # 'ab' occurs 6x but a and b are everywhere (each count 20)
@@ -109,7 +109,7 @@ def test_wordpiece_prefers_likelihood_over_raw_count(spark):
 def test_wordpiece_distributed_equals_driver(spark, sf_dir, monkeypatch):
     """Above the driver cap the distributed rounds must learn the
     identical merge table (the BPE cap-monkeypatch proof)."""
-    import columnflow_spark.queries.mmdata as M
+    import columnflow_spark.queries.tokenlm as M
     from columnflow_spark.core.artifacts import purge
 
     purge("wordpiece_merges")
@@ -124,7 +124,7 @@ def test_wordpiece_distributed_equals_driver(spark, sf_dir, monkeypatch):
 def test_wordpiece_greedy_longest_match(spark):
     """Greedy longest-match-first semantics: with vocab {a, b, ab, abc},
     'abcab' -> [abc, ab] (3-char match beats 2), 'abab' -> [ab, ab]."""
-    from columnflow_spark.queries.mmdata import _wp_greedy_ntok
+    from columnflow_spark.queries.tokenlm import _wp_greedy_ntok
 
     vocab = {"a", "b", "c", "ab", "abc"}
     assert _wp_greedy_ntok("abcab", vocab, 3) == 2

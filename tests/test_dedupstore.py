@@ -380,7 +380,7 @@ def test_substring_store_layout_invariance_and_idempotency(spark, sf_dir, tmp_pa
         flag_substring_frame,
         upsert_substring_batch,
     )
-    from columnflow_spark.queries.mmdata import _SSTR_K, _sstr_grams
+    from columnflow_spark.queries.textdedup import _SSTR_K, _sstr_grams
     from columnflow_spark.sources import load_table
 
     h = _history_cutoff(spark, sf_dir)
@@ -676,7 +676,7 @@ def test_substring_store_vacuum_purges_and_stays_equal(spark, sf_dir, tmp_path):
         substring_store_rewrite_frame,
         upsert_substring_batch,
     )
-    from columnflow_spark.queries.mmdata import _SSTR_K, _sstr_grams
+    from columnflow_spark.queries.textdedup import _SSTR_K, _sstr_grams
     from columnflow_spark.sources import load_table
 
     h = _history_cutoff(spark, sf_dir)

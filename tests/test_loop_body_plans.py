@@ -105,7 +105,7 @@ def test_logreg_round_body_plan(spark, sf_dir):
     # the learned-gate / quality-classifier training round: K x ONE
     # corpus aggregation — the gradient plan must be a single partial+final
     # aggregate pair over the feature frame, nothing else
-    from columnflow_spark.queries.mmdata import _LOGREG_W0, _logreg_feat, _logreg_grad
+    from columnflow_spark.queries.quality import _LOGREG_W0, _logreg_feat, _logreg_grad
 
     feat = _logreg_feat(spark, sf_dir).localCheckpoint()
     plan = _fmt(_logreg_grad(feat, [_LOGREG_W0] * 64))

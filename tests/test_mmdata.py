@@ -59,7 +59,7 @@ def test_audio_features_shape(spark, sf_dir):
 def test_funnel_classifier_stage_counts_and_discrimination(spark, sf_dir):
     import pyspark.sql.functions as F
 
-    import columnflow_spark.queries.mmdata as M
+    import columnflow_spark.queries.quality as M
     from columnflow_spark.queries import all_queries
 
     rows = {r.name: r for r in all_queries()["training_corpus_pipeline"](spark, sf_dir).collect()}
@@ -112,7 +112,7 @@ def test_unigram_lm_cap_and_oov_floor(spark):
 
     from pyspark.sql import functions as F
 
-    from columnflow_spark.queries.mmdata import _unigram_lm, _unigram_neg_logp
+    from columnflow_spark.queries.tokenlm import _unigram_lm, _unigram_neg_logp
 
     docs = spark.createDataFrame(
         [(1, "a a a b"), (2, "b c d")], "doc_id long, text string"
@@ -146,7 +146,7 @@ def test_unigram_vocab_cap_is_distributed_topk(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from columnflow_spark.queries.mmdata import _unigram_lm
+    from columnflow_spark.queries.tokenlm import _unigram_lm
     from columnflow_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
@@ -167,7 +167,7 @@ def test_tf_feat_explode_form_matches_inrow_expr(spark, sf_dir):
     # paths — the two are the same function computed two ways
     from pyspark.sql import functions as F
 
-    from columnflow_spark.queries.mmdata import _tf_feat, _tf_x_expr
+    from columnflow_spark.queries.quality import _tf_feat, _tf_x_expr
     from columnflow_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
@@ -217,7 +217,7 @@ def test_phash_planted_near_copies(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from columnflow_spark.mmdata import build_media_table, phash_image
-    from columnflow_spark.queries.mmdata import _PH_BITS, phash_neardup_pairs
+    from columnflow_spark.queries.textdedup import _PH_BITS, phash_neardup_pairs
     from columnflow_spark.sources import load_table
 
     docs = (
@@ -258,7 +258,7 @@ def test_bestfit_packing_no_splits_and_utilization_floor(spark, sf_dir):
     from collections import defaultdict
 
     from columnflow_spark.queries import all_queries
-    from columnflow_spark.queries.mmdata import _PACK_BUDGET
+    from columnflow_spark.queries.tokenlm import _PACK_BUDGET
 
     qs = all_queries()
     rows = qs["pack_sequences_bestfit"](spark, sf_dir).collect()
@@ -299,7 +299,7 @@ def test_substring_dedup_planted_recall(spark):
     phrase is caught at ANY offset with its exact maximal-run length;
     a (k-1)-token repeat is invisible; keep-first removal charges every
     occurrence except the lowest (doc_id, pos) one."""
-    from columnflow_spark.queries.mmdata import _SSTR_K, substring_dup_runs_frame
+    from columnflow_spark.queries.textdedup import _SSTR_K, substring_dup_runs_frame
 
     k = _SSTR_K
     phrase = " ".join(f"p{i}" for i in range(10))  # 10-token shared phrase
@@ -330,7 +330,7 @@ def test_unigram_lm_viterbi_tiebreaks_and_training(spark):
     """Viterbi: max integer score, tie -> fewest pieces, tie -> lexico-
     graphically smallest space-joined sequence; training is determinis-
     tic and keeps char coverage."""
-    from columnflow_spark.queries.mmdata import _ulm_viterbi_word, unigram_train_rows
+    from columnflow_spark.queries.tokenlm import _ulm_viterbi_word, unigram_train_rows
 
     # multi-char piece wins when its score beats the char-by-char sum
     assert _ulm_viterbi_word("abab", {"a": -300, "b": -300, "ab": -250}, 4) == [
@@ -388,7 +388,7 @@ def test_substring_rewrite_planted_union_coverage(spark):
     """The rewrite removes the UNION of tokens covered by non-first
     runs (not the per-run sum): first occurrences survive verbatim,
     later occurrences lose exactly their covered spans."""
-    from columnflow_spark.queries.mmdata import _SSTR_K, substring_rewrite_frame
+    from columnflow_spark.queries.textdedup import _SSTR_K, substring_rewrite_frame
 
     k = _SSTR_K
     phrase = " ".join(f"p{i}" for i in range(10))
@@ -480,7 +480,7 @@ def test_substring_runs_union_coverage_overlaps(spark):
     coverage intervals — the per-extent sums double-counted them, so
     removed_tokens could exceed the document length.  Both coverage
     columns are interval unions now."""
-    from columnflow_spark.queries.mmdata import _SSTR_K, substring_dup_runs_frame
+    from columnflow_spark.queries.textdedup import _SSTR_K, substring_dup_runs_frame
 
     k = _SSTR_K
     t = [f"t{i}" for i in range(10)]
@@ -511,7 +511,7 @@ def test_substring_runs_cross_run_gap_union(spark):
     """Two maximal runs separated by < k non-dup positions have
     overlapping coverage; dup_tokens is their union, never more than
     the document's token count."""
-    from columnflow_spark.queries.mmdata import _SSTR_K, substring_dup_runs_frame
+    from columnflow_spark.queries.textdedup import _SSTR_K, substring_dup_runs_frame
 
     k = _SSTR_K
     t = [f"u{i}" for i in range(10)]
@@ -535,7 +535,7 @@ def test_substring_removed_equals_rewrite_delta(spark, sf_dir):
     frame == n_tokens - n_tokens_kept of the rewrite, corpus-wide."""
     from pyspark.sql import functions as F
 
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.textdedup import (
         _SSTR_K,
         _sstr_words,
         substring_dup_runs_frame,
@@ -561,7 +561,7 @@ def test_url_normalization_variants_collapse(spark):
     """All three raw-URL noise classes (scheme/case/www, trailing slash
     + tracking query, http + fragment) normalize to the same URL, and
     keep-first picks the lowest doc_id."""
-    from columnflow_spark.queries.mmdata import normalize_url, synthetic_urls
+    from columnflow_spark.queries.textdedup import normalize_url, synthetic_urls
     from pyspark.sql import functions as F
 
     # doc_ids 0, 121, 62 share source (%20: 0,1,2 differ... craft same
@@ -589,7 +589,7 @@ def test_unigram_dp_oracle_handles_long_words(spark, tmp_path):
     + encode must equal the SQL replay."""
     import duckdb
 
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.tokenlm import (
         _ULM_MAXLEN,
         _ulm_scores,
         _ulm_segment,
@@ -648,7 +648,7 @@ def test_unigram_vocab_store_roundtrip(spark, sf_dir):
     import shutil
 
     from columnflow_spark.core.artifacts import purge
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.tokenlm import (
         _ulm_vocab,
         _ulm_word_counts,
         unigram_train_rows,
@@ -706,7 +706,7 @@ def test_boilerplate_removal_semantics(spark, sf_dir):
     (not keep-first), and docs with all-unique segments are untouched
     (sig == md5 of the original token stream)."""
     from columnflow_spark.queries import all_queries
-    from columnflow_spark.queries.mmdata import _BP_MIN_DOCS, _BP_SEG_TOKENS
+    from columnflow_spark.queries.textdedup import _BP_MIN_DOCS, _BP_SEG_TOKENS
 
     out = {r.doc_id: r for r in all_queries()["boilerplate_segment_removal"](spark, sf_dir).collect()}
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).collect()

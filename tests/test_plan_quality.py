@@ -977,7 +977,7 @@ def test_funnel_training_phase_reads_cached_features(spark, sf_dir):
     import contextlib
     import io
 
-    from columnflow_spark.queries.mmdata import (
+    from columnflow_spark.queries.quality import (
         _logreg_grad,
         _tf_feat_cached,
         tf_learned_gate,

@@ -72,12 +72,12 @@ def test_session_artifact_caches_honor_reliable_mode(spark, sf_dir, reliable_mod
     through checkpoint_df: under the switch their materialization lands
     on the checkpoint store like every loop-body site (79/79)."""
     from columnflow_spark.core.artifacts import purge
-    from columnflow_spark.queries import mmdata
+    from columnflow_spark.queries import textdedup, tokenlm
 
     purge("minhash_sigs")
-    sigs = mmdata.minhash_sigs(spark, sf_dir)
+    sigs = textdedup.minhash_sigs(spark, sf_dir)
     assert sigs.count() > 0
-    wc = mmdata._bpe_word_state(spark, sf_dir)
+    wc = tokenlm._bpe_word_state(spark, sf_dir)
     assert wc.count() > 0
     ckpt_dir = spark.sparkContext.getCheckpointDir()
     assert ckpt_dir is not None

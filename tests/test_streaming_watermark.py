@@ -303,7 +303,7 @@ def test_streaming_learned_gate_matches_batch_stage6_filter(spark, sf_dir):
     # funnel's stage-6 expression keeps (shared weights + threshold
     # artifact) — compared at rest per source
     from columnflow_spark.queries import all_queries
-    from columnflow_spark.queries.mmdata import tf_gate_score_expr, tf_learned_gate
+    from columnflow_spark.queries.quality import tf_gate_score_expr, tf_learned_gate
     from columnflow_spark.sources import load_table
 
     w, thr = tf_learned_gate(spark, sf_dir)
