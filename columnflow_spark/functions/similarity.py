@@ -312,12 +312,26 @@ def nearest_centroid_assign(df, cents_df, vec: str = "embedding", out: str = "ci
     Ties: centroids are scanned cid-ascending and numpy ``argmax`` keeps
     the first maximum, so equal cosines resolve to the lowest cid — same
     as ``ORDER BY sim DESC, cid``."""
+    return assign_to_centroids(df, *collect_centroids(cents_df), vec, out)
+
+
+def collect_centroids(cents_df):
+    """``(cids, cmat)`` of a bounded ``(cid, centroid-vector)`` frame, one
+    collect: int64 cids ascending and a float64 matrix, one row each."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
     rows = sorted(cents_df.collect(), key=lambda r: r[0])
     cids = np.array([r[0] for r in rows], dtype=np.int64)
-    cmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    return cids, np.array([list(r[1]) for r in rows], dtype=np.float64)
+
+
+def assign_to_centroids(df, cids, cmat, vec: str = "embedding", out: str = "cid"):
+    """:func:`nearest_centroid_assign` against centroids already on the
+    driver: ``cids`` (int64, ascending) and ``cmat`` (float64, one row
+    per cid).  No Spark job until ``df`` runs."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
     cmat_t = (cmat / np.linalg.norm(cmat, axis=1, keepdims=True)).T  # d x K
 
     @F.pandas_udf("long")

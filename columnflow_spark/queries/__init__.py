@@ -46,6 +46,11 @@ def tune_session(spark: SparkSession) -> None:
     ``session_key`` is shared by ``spark.newSession()`` siblings, each of
     which has its own SQL conf to tune.  Values set after the first call
     (a test pinning shuffle partitions) are never overwritten.
+
+    Static confs cannot be set here: ``session.get_spark`` turns the
+    Python call-site capture (``spark.python.sql.dataFrameDebugging.
+    enabled``) off, but on a session it did not build that conf is not
+    modifiable and stays as the session has it.
     """
     if spark.conf.get("spark.columnflow.tuned", "false") == "true":
         return

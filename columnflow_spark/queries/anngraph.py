@@ -1497,7 +1497,6 @@ def compact_graph_index(spark: SparkSession, path: str) -> str:
         # the identity on an already-capped adjacency).  Serve
         # equality re-proven in tests/test_ann_graph.py.
         del_ids = local_frame(spark, [], "vec_id long")
-    del_ids = del_ids.transform(checkpoint_df)
     pages = _store_pages_latest(spark, path).transform(checkpoint_df)
     radj = _repaired_adjacency(pages, del_ids)
     nbrs = radj.groupBy(F.col("src").alias("vec_id")).agg(

@@ -17,10 +17,17 @@ closes that gap with the engine's own partitioned store
   sibling batches in the same cell.
 - **build** is the same zero-shuffle pass as the in-session query: the
   coarse quantizer (every-64th-vector centroids, frozen — incremental
-  batches reuse it) assigns map-side
-  (functions/similarity.py:nearest_centroid_assign) and the trained PQ
+  batches reuse it; its matrix is the ``ivf_coarse_centroids`` session
+  artifact) assigns map-side
+  (functions/similarity.py:assign_to_centroids) and the trained PQ
   encoder (queries/mmdata.py:pq_encode_udf) emits codes in the same
-  projection; the only added cost is the partitioned write.
+  projection; the only added cost is the partitioned write, so a warm
+  upsert is two Spark jobs.
+- **deletes** are ``_deleted/batch=<n>`` tombstone slices, a bounded
+  driver-side sidecar (sources/sinks.py:write_sidecar): a delete is ONE
+  Spark job, the collect of the caller's ids, and a read broadcasts the
+  ids as a local relation into a left-anti join after the prune.  The
+  OPQ ``_rotation``/``_codebook`` are sidecars of the same pair.
 - **search** is scatter-gather.  The driver plans the read
   (queries/mmdata.py:ivfpq_probe_plan): one bounded collect of the query
   batch and the centroid rows gives the probe route and the quantized
@@ -42,8 +49,6 @@ tasks) re-expressed as a Spark partitioned table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -53,15 +58,16 @@ from columnflow_spark.queries.mmdata import (
     _PQ_K,
     _PQ_M,
     IVFPQ_ORACLE,
-    _ivf_cents,
     _probe_batch,
+    _route_np,
     grid_lut_rows,
+    ivf_coarse_centroids,
     ivf_probe_route,
     ivfpq_probe_plan,
     pq_encode_udf,
     pq_query_lut_cached,
 )
-from columnflow_spark.functions.similarity import nearest_centroid_assign
+from columnflow_spark.functions.similarity import assign_to_centroids
 from columnflow_spark.sources import load_table
 from columnflow_spark.sources.sinks import (
     anti_tombstones,
@@ -69,11 +75,13 @@ from columnflow_spark.sources.sinks import (
     ensure_store,
     local_frame,
     mark_built,
+    read_sidecar,
     replace_store,
     store_path,
     upsert_partitions,
     upsert_tombstones,
     write_events,
+    write_sidecar,
 )
 from columnflow_spark.sources import spread
 
@@ -94,14 +102,11 @@ def upsert_index_frame(
     """Encode a ``(vec_id, embedding)`` frame against the FROZEN coarse
     quantizer + trained PQ codebook (both derive from the static corpus —
     the IVF contract; incremental and streaming ingest reuse them) and
-    upsert it as the index's ``batch=<n>`` slice."""
-    # the centroid rows are a bounded collect (nearest_centroid_assign):
-    # no spread, so no shuffle
-    cents = _ivf_cents(
-        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
-    ).select("cid", "ce")
+    upsert it as the index's ``batch=<n>`` slice.  The quantizer's
+    centroid matrix is a session artifact, so a warm upsert is the encode
+    and the write: no centroid collect."""
     encode = pq_encode_udf(spark, sf_dir)
-    idx = nearest_centroid_assign(rows, cents).select(
+    idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
         "vec_id",
         encode("embedding").alias("codes"),
         "cid",
@@ -593,28 +598,15 @@ def ann_index_delete_vacuum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``cid=/batch=`` OPQ-code partitions, so a fresh session serves from
 # the artifacts without retraining (the unigram-vocab contract); cells
 # come from the same frozen raw-space coarse quantizer the IVF+PQ index
-# uses, so probe routing is SHARED with every other index-served path
-# (the ``ivf_probe_route`` session artifact).  The sidecars are a few KB
+# uses, so the probe route is ranked exactly as every other
+# index-served path ranks it (mmdata._route_np).  The sidecars are a few KB
 # of driver-side numbers, so they are written and read with pyarrow on
-# the driver: no Spark job and no hidden-path scan for either.
+# the driver (sinks.write_sidecar/read_sidecar): no Spark job and no
+# hidden-path scan for either.
 # Rows-only registration (the rotation's SVD has no SQL twin); store ≡
 # in-session-math equality and tombstone-delete behavior are pinned in
 # tests/test_ann_index.py. ---
 _OPQ_INDEX_FORMAT = 1
-
-
-def _write_sidecar(path: str, name: str, columns: dict) -> None:
-    """Replace the ``path/name`` sidecar directory by one parquet file of
-    ``columns`` (name -> pyarrow array)."""
-    import shutil  # noqa: PLC0415
-
-    import pyarrow as pa  # noqa: PLC0415
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    d = os.path.join(path, name)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    pq.write_table(pa.table(columns), os.path.join(d, "part-0.parquet"))
 
 
 def build_opq_index(
@@ -630,25 +622,20 @@ def build_opq_index(
 
     R, cms = opq_train_np(spark, sf_dir)
     vecs = pa.list_(pa.float64())
-    _write_sidecar(path, "_rotation", {
+    write_sidecar(path, "_rotation", pa.table({
         "i": pa.array(range(R.shape[0]), pa.int32()),
         "row": pa.array([[float(x) for x in r] for r in R], vecs),
-    })
+    }))
     keys = [(s, ci) for s in range(_PQ_M) for ci in range(_PQ_K)]
-    _write_sidecar(path, "_codebook", {
+    write_sidecar(path, "_codebook", pa.table({
         "sub": pa.array([s for s, _ in keys], pa.int32()),
         "code": pa.array([ci for _, ci in keys], pa.int32()),
         "c": pa.array([[float(x) for x in cms[s][ci]] for s, ci in keys], vecs),
-    })
+    }))
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     rows = emb.filter(batch_pred) if batch_pred is not None else emb
-    # the centroid rows are a bounded collect (nearest_centroid_assign):
-    # no spread, so no shuffle
-    cents = _ivf_cents(
-        load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
-    ).select("cid", "ce")
     encode = opq_encode_udf(spark, sf_dir)
-    idx = nearest_centroid_assign(rows, cents).select(
+    idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
         "vec_id",
         encode("embedding").alias("codes"),
         "cid",
@@ -664,11 +651,10 @@ def load_opq_artifacts(path: str):
     from the store alone).  Both reads are driver-side pyarrow: no Spark
     job."""
     import numpy as np  # noqa: PLC0415
-    import pyarrow.parquet as pq  # noqa: PLC0415
 
-    rot = pq.read_table(os.path.join(path, "_rotation")).to_pydict()
+    rot = read_sidecar(path, "_rotation").to_pydict()
     R = np.array(rot["row"], dtype=np.float64)[np.argsort(rot["i"])]
-    cb = pq.read_table(os.path.join(path, "_codebook")).to_pydict()
+    cb = read_sidecar(path, "_codebook").to_pydict()
     cms = [np.zeros((_PQ_K, len(cb["c"][0])), dtype=np.float64) for _ in range(_PQ_M)]
     for s, ci, c in zip(cb["sub"], cb["code"], cb["c"]):
         cms[s][ci] = np.array(c, dtype=np.float64)
@@ -682,35 +668,28 @@ def _ensure_opq_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def opq_lut_rows(spark: SparkSession, sf_dir: str, path: str, query_pred):
-    """``(query_id, sub, code, d)`` ADC lookup rows of an OPQ query
-    batch, planned on the driver: the batch's vectors (the probe plan's
-    bounded collect) rotate through the PERSISTED rotation and score
-    against the persisted codebooks with the engine's folds
+def opq_lut_rows(path: str, qid, q) -> list[tuple[int, int, int, float]]:
+    """``(query_id, sub, code, d)`` ADC lookup rows of the query vectors
+    ``q``: they rotate through the PERSISTED rotation and score against
+    the persisted codebooks with the engine's folds
     (mmdata.grid_lut_rows)."""
     import numpy as np  # noqa: PLC0415
 
     R, cms = load_opq_artifacts(path)
-    qid, q, _, _ = _probe_batch(spark, sf_dir, query_pred)
-    codes = [range(_PQ_K)] * _PQ_M
-    return grid_lut_rows(qid, q.astype(np.float64) @ R, codes, cms)
+    return grid_lut_rows(qid, q.astype(np.float64) @ R, [range(_PQ_K)] * _PQ_M, cms)
 
 
 def search_opq_index(
-    spark: SparkSession, sf_dir: str, path: str, query_pred=None, topk: int = 5,
-    route_key=None,
+    spark: SparkSession, sf_dir: str, path: str, query_pred=None, topk: int = 5
 ) -> DataFrame:
-    """Probe-pruned ADC top-k over the persisted OPQ index: probe routes
-    come from the SHARED raw-space coarse quantizer (so the routing
-    collect is reused across every index-served path); the LUT rows are
-    planned on the driver from the persisted artifacts
+    """Probe-pruned ADC top-k over the persisted OPQ index, planned on
+    the driver from ONE probe collect (mmdata._probe_batch, as
+    mmdata.ivfpq_probe_plan): the route comes from the SHARED raw-space
+    coarse quantizer, the LUT rows from the persisted artifacts
     (:func:`opq_lut_rows`), and the read is the same scatter-gather as
     :func:`search_ivfpq_index`."""
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 100 == 7
-        route_key = route_key or ("mod100", 7)
-    route = ivf_probe_route(spark, sf_dir, query_pred=query_pred, route_key=route_key)
-    lut = opq_lut_rows(spark, sf_dir, path, query_pred)
+    qid, q, cid, c = _probe_batch(spark, sf_dir, query_pred)
+    route, lut = _route_np(qid, q, cid, c, n_probe=2), opq_lut_rows(path, qid, q)
     return _probed_adc_topk(spark, path, route, lut, topk)
 
 

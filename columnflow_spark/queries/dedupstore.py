@@ -46,9 +46,9 @@ from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df
 
 from columnflow_spark.functions.similarity import (
+    assign_to_centroids,
     chunked_self_pairs,
     cosine,
-    nearest_centroid_assign,
 )
 from columnflow_spark.functions.text import fingerprint
 from columnflow_spark.queries import query
@@ -58,12 +58,15 @@ from columnflow_spark.sources.sinks import (
     clear_tombstones,
     ensure_store,
     is_built,
+    local_frame,
     mark_built,
+    read_sidecar,
     replace_store,
     store_path,
     upsert_partitions,
     upsert_tombstones,
     write_events,
+    write_sidecar,
 )
 
 #: bump when the fingerprint definition OR the row monoid changes:
@@ -452,25 +455,40 @@ def init_semdedup_store(
 ) -> str:
     """Create an empty store with its FROZEN centroid set (seeded rows
     selected by ``seed_pred`` — every later assign, incremental or
-    from-scratch replay, reads these)."""
-    cents = _sem_vectors(spark, sf_dir, seed_pred).select(
+    from-scratch replay, reads these) as the driver-side ``_centroids``
+    sidecar: one collect."""
+    cents = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    cents = cents.filter(seed_pred).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
-    cents.write.mode("overwrite").parquet(os.path.join(path, "_centroids"))
+    write_sidecar(path, "_centroids", cents.toArrow())
     return path
 
 
-def _sem_centroids(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "_centroids"))
+def _sem_centroids(path: str):
+    """The frozen centroids, read on the driver: a ``pyarrow.Table`` of
+    ``(cid, ce)`` rows sorted by cid."""
+    return read_sidecar(path, "_centroids").sort_by("cid")
+
+
+def _sem_assign(vecs: DataFrame, path: str) -> DataFrame:
+    """``vecs`` with the ``cid`` of its nearest frozen centroid: a
+    map-side numpy argmax against the driver-read centroids, no Spark
+    job (functions/similarity.py:assign_to_centroids)."""
+    import numpy as np  # noqa: PLC0415
+
+    t = _sem_centroids(path)
+    cmat = np.array(t.column("ce").to_pylist(), dtype=np.float64)
+    return assign_to_centroids(vecs, t.column("cid").to_numpy(), cmat)
 
 
 def upsert_semdedup_frame(vecs: DataFrame, path: str, *, batch: int) -> str:
     """Assign a ``(vec_id, embedding)`` frame to the frozen centroids
     (map-side numpy argmax — zero shuffle) and upsert its vectors under
     ``cid=/batch=``."""
-    rows = nearest_centroid_assign(
-        vecs, _sem_centroids(vecs.sparkSession, path)
-    ).select("vec_id", "embedding", "cid", F.lit(int(batch)).alias("batch"))
+    rows = _sem_assign(vecs, path).select(
+        "vec_id", "embedding", "cid", F.lit(int(batch)).alias("batch")
+    )
     upsert_partitions(rows, path, partition_by=["cid", "batch"])
     mark_built(path, _SEM_STORE_FORMAT)
     return path
@@ -510,7 +528,7 @@ def flag_semdedup_frame(
     # assignment once so the embeddings scan + Arrow assign UDF run once,
     # not five times (the pagerank edges/outdeg pattern)
     batch = (
-        nearest_centroid_assign(vecs, _sem_centroids(spark, path))
+        _sem_assign(vecs, path)
         .select("cid", "vec_id", "embedding")
         .transform(checkpoint_df)
     )
@@ -695,8 +713,11 @@ def semdedup_drift_audit_frame(spark: SparkSession, path: str) -> DataFrame:
     there on).  ONE two-level aggregation ((batch, cid) partials, then
     batch), both levels map-side combinable; the centroid set broadcasts
     (K rows by construction)."""
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
+
     store = spark.read.parquet(path)
-    cents = _sem_centroids(spark, path)
+    t = _sem_centroids(path)
+    cents = local_frame(spark, t, from_arrow_schema(t.schema))
     eq = F.round(
         (F.lit(1.0) - cosine(F.col("embedding"), F.col("ce"))) * F.lit(1e6), 0
     ).cast("long")

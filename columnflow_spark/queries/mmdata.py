@@ -6,9 +6,9 @@ pairs, IVF (seeded and k-means-trained), PQ, OPQ, IVF-PQ with exact
 refine, int8 and binary (sign) quantization with Hamming search, one
 Lloyd k-means step, covariance/PCA, MMR diversification, hard-negative
 mining and SemDeDup.  Session artifacts: ``pq_codebook``, ``ivfpq_adc``,
-``pca_model``, ``ivf_trained_centroids`` and ``opq_model``.  The
-persisted IVF-PQ/OPQ indexes that serve these codes live in
-``queries/annindex.py``.
+``pca_model``, ``ivf_trained_centroids``, ``ivf_coarse_centroids`` and
+``opq_model``.  The persisted IVF-PQ/OPQ indexes that serve these codes
+live in ``queries/annindex.py``.
 
 Scale notes:
 
@@ -36,6 +36,7 @@ from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df, checkpoint_df_lazy
 from columnflow_spark.functions.similarity import (
     chunked_self_pairs,
+    collect_centroids,
     cosine,
     hyperplane_signs,
     nearest_centroid_assign,
@@ -309,6 +310,16 @@ def _ivf_cents(emb: DataFrame) -> DataFrame:
         F.col("embedding").alias("ce"),
         _ivf_norm(F.col("embedding")).alias("nb"),
     )
+
+
+@artifact("ivf_coarse_centroids")
+def ivf_coarse_centroids(spark: SparkSession, sf_dir: str):
+    """``(cids, cmat)`` of the frozen coarse quantizer the persisted
+    indexes assign against (:func:`_ivf_cents`, see
+    functions/similarity.py:collect_centroids): one bounded collect per
+    session, so an index build or upsert adds no centroid job."""
+    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    return collect_centroids(_ivf_cents(emb).select("cid", "ce"))
 
 
 def _pred_fingerprint(pred) -> str:

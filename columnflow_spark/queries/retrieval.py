@@ -40,7 +40,14 @@ from columnflow_spark.functions.similarity import cosine
 from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
-from columnflow_spark.sources.sinks import ensure_store, local_frame, mark_built, store_path
+from columnflow_spark.sources.sinks import (
+    ensure_store,
+    local_frame,
+    mark_built,
+    read_sidecar,
+    store_path,
+    write_sidecar,
+)
 
 # fixed search workload: deterministic multi-term keyword queries over the
 # synthetic corpus vocabulary (TESTDATA.md documents.text)
@@ -145,13 +152,21 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized to the ``1e-6`` integer grid before the per-doc sum — the
     exact-sum trick that keeps the DuckDB twin hash-identical.
     """
-    totals = _bm25_totals(spark, sf_dir)
+    return _bm25_rank(_bm25_totals(spark, sf_dir))
+
+
+def _bm25_rank(totals: DataFrame) -> DataFrame:
+    """Each query's top-k of BM25 ``totals`` ranked by ``(score_q desc,
+    doc_id)``, sorted by ``(query_id, rk)`` in ONE partition: the result
+    is |queries| x k rows, so a global ``orderBy`` would add a
+    range-partition sampling job to sort what one task sorts."""
     win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
     return (
         totals.withColumn("rk", F.row_number().over(win).cast("int"))
         .filter(F.col("rk") <= _BM25_TOPK)
         .select("query_id", "doc_id", "score_q", "rk")
-        .orderBy("query_id", "rk")
+        .coalesce(1)
+        .sortWithinPartitions("query_id", "rk")
     )
 
 
@@ -922,8 +937,6 @@ def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
     """Tokenize one ``(doc_id, text)`` ingest frame, keep postings for the
     query vocabulary only, and upsert them (plus the batch's monoid
     collection stats)."""
-    import os
-
     from columnflow_spark.sources.sinks import upsert_partitions
 
     spark = docs.sparkSession
@@ -943,13 +956,26 @@ def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
         .withColumn("batch", F.lit(int(batch)))
     )
     upsert_partitions(posting, path, partition_by=["w", "batch"])
-    stats = toks.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size("ts")).cast("long").alias("sum_dl"),
-    ).withColumn("batch", F.lit(int(batch)))
-    upsert_partitions(stats, os.path.join(path, "_stats"), partition_by=["batch"])
+    _upsert_stats(toks, path, batch=batch)
     mark_built(path, _POSTINGS_FORMAT)
     return path
+
+
+def _upsert_stats(toks: DataFrame, path: str, *, batch: int, sign: int = 1) -> None:
+    """Record the collection stats of the tokenized docs ``toks`` (times
+    ``sign``: -1 for a delete) as the ``_stats/batch=<n>`` sidecar slice,
+    one ``(n_docs, sum_dl)`` row: one collect, a driver-side write."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    (r,) = toks.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(F.size("ts")).cast("long").alias("sum_dl"),
+    ).collect()
+    row = {k: None if r[k] is None else sign * r[k] for k in ("n_docs", "sum_dl")}
+    write_sidecar(
+        path, "_stats", pa.table({k: pa.array([v], pa.int64()) for k, v in row.items()}),
+        batch=batch,
+    )
 
 
 def upsert_postings_batch(
@@ -986,23 +1012,16 @@ def bm25_totals_from_store(spark: SparkSession, path: str) -> DataFrame:
     bit-identical inputs to :func:`_bm25_totals`: df is a window over the
     accumulated postings (each doc posts from exactly one batch), n_docs
     and avgdl derive from exact integer stat sums (the double division is
-    the identical single fp op the from-scratch pass performs)."""
-    import os
+    the identical single fp op the from-scratch pass performs).  The
+    stat sums are taken on the driver from the ``_stats`` sidecar."""
+    import pyarrow.compute as pc  # noqa: PLC0415
 
     posting_rows = _read_postings(spark, path).select(
         "doc_id", F.col("w").cast("string").alias("w"), "tf", "dl"
     )
-    stat = (
-        spark.read.parquet(os.path.join(path, "_stats"))
-        .agg(
-            F.sum("n_docs").cast("long").alias("nd"),
-            F.sum("sum_dl").cast("long").alias("sd"),
-        )
-        .select(
-            F.col("nd").cast("double").alias("n_docs"),
-            (F.col("sd").cast("double") / F.col("nd").cast("double")).alias("avgdl"),
-        )
-    )
+    stats = read_sidecar(path, "_stats", ["n_docs", "sum_dl"])
+    nd, sd = (float(pc.sum(stats.column(k)).as_py() or 0) for k in ("n_docs", "sum_dl"))
+    stat = local_frame(spark, [(nd, sd / nd if nd else None)], "n_docs double, avgdl double")
     posting = posting_rows.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("w")))
     qterms = local_frame(
         spark,
@@ -1051,14 +1070,7 @@ def bm25_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares ``bm25_topk``'s oracle, so hash equality proves incremental
     index maintenance loses nothing vs the from-scratch pass."""
     path = _ensure_postings_store(spark, sf_dir)
-    totals = bm25_totals_from_store(spark, path)
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        totals.withColumn("rk", F.row_number().over(win).cast("int"))
-        .filter(F.col("rk") <= _BM25_TOPK)
-        .select("query_id", "doc_id", "score_q", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _bm25_rank(bm25_totals_from_store(spark, path))
 
 
 # --- deletion propagation through the maintained index (the
@@ -1082,9 +1094,7 @@ def delete_docs_from_postings(
     """Propagate a document deletion into the postings store: drop the
     ids from the posting slices (marker-preserving rewrite) and append
     the deleted docs' NEGATED collection stats as slice ``batch=<n>``."""
-    import os
-
-    from columnflow_spark.sources.sinks import replace_store, upsert_partitions, write_events
+    from columnflow_spark.sources.sinks import replace_store, write_events
 
     kept = (
         _read_postings(spark, path)
@@ -1099,11 +1109,7 @@ def delete_docs_from_postings(
     toks = deleted.select(
         "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
     )
-    neg = toks.agg(
-        (-F.count(F.lit(1))).cast("long").alias("n_docs"),
-        (-F.sum(F.size("ts"))).cast("long").alias("sum_dl"),
-    ).withColumn("batch", F.lit(int(batch)))
-    upsert_partitions(neg, os.path.join(path, "_stats"), partition_by=["batch"])
+    _upsert_stats(toks, path, batch=batch, sign=-1)
     return path
 
 
@@ -1142,14 +1148,7 @@ def bm25_postings_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reduced corpus — hash equality proves the delete left exactly the
     right index behind."""
     path = _ensure_deleted_postings_store(spark, sf_dir)
-    totals = bm25_totals_from_store(spark, path)
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        totals.withColumn("rk", F.row_number().over(win).cast("int"))
-        .filter(F.col("rk") <= _BM25_TOPK)
-        .select("query_id", "doc_id", "score_q", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _bm25_rank(bm25_totals_from_store(spark, path))
 
 
 # --- RM3 pseudo-relevance feedback (Lavrenko/Croft relevance models; the

@@ -2016,11 +2016,11 @@ def _graph_cdc_store(spark: SparkSession, sf_dir: str) -> Iterator[str]:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             b = int(batch_id)
             ingest_graph_batch(spark, batch_df.filter(_insert_pred()), store, b)
+            # the batch's delete requests (possibly none) as its OWN
+            # tombstone slice — a replayed batch replaces exactly its
+            # slice (idempotent)
             dels = batch_df.filter(F.col("vec_id") % 50 == 3).select("vec_id")
-            if not dels.isEmpty():
-                # the batch's delete requests as its OWN tombstone slice —
-                # a replayed batch overwrites exactly its slice (idempotent)
-                upsert_tombstones(dels, store, batch=b, id_col="vec_id")
+            upsert_tombstones(dels, store, batch=b, id_col="vec_id")
 
         _drain(
             rp.stream.filter(_insert_pred() | (F.col("vec_id") % 50 == 3)).select(

@@ -1466,9 +1466,9 @@ def _build_qsk_store(spark: SparkSession, sf_dir: str, p: str) -> None:
     """Three event_id-range ingest slices + the ``_slices`` boundary
     sidecar (what makes a per-slice rebuild operational) — written at the
     staging path ``ensure_store`` gives us."""
-    import os
+    import pyarrow as pa  # noqa: PLC0415
 
-    from columnflow_spark.sources.sinks import upsert_partitions
+    from columnflow_spark.sources.sinks import upsert_partitions, write_sidecar
 
     ev = load_table(spark, sf_dir, "events", columns=["event_id", "event_type", "value"])
     n = _events_count(spark, sf_dir)
@@ -1478,10 +1478,11 @@ def _build_qsk_store(spark: SparkSession, sf_dir: str, p: str) -> None:
             ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
         ).withColumn("batch", F.lit(b))
         upsert_partitions(rows, p, partition_by=["batch"])
-    slices = local_frame(
-        spark, [(b, lo, hi) for b, (lo, hi) in enumerate(bounds)], "batch int, lo long, hi long"
-    )
-    slices.coalesce(1).write.mode("overwrite").parquet(os.path.join(p, "_slices"))
+    write_sidecar(p, "_slices", pa.table({
+        "batch": pa.array(range(len(bounds)), pa.int32()),
+        "lo": pa.array([lo for lo, _ in bounds], pa.int64()),
+        "hi": pa.array([hi for _, hi in bounds], pa.int64()),
+    }))
 
 
 def _ensure_qsk_store(spark: SparkSession, sf_dir: str, variant: str = "") -> str:
@@ -1541,32 +1542,32 @@ def qsk_apply_deletes(spark: SparkSession, sf_dir: str, path: str) -> list[int]:
     same slices to the same bytes — idempotent."""
     import os
 
+    import numpy as np  # noqa: PLC0415
+
     from columnflow_spark.sources.sinks import (
         clear_tombstones,
-        read_tombstones,
+        read_sidecar,
+        tombstoned_ids,
         upsert_partitions,
     )
 
-    del_ids = read_tombstones(spark, path, id_col="event_id")
-    if del_ids is None:
+    pending = tombstoned_ids(path, "event_id")
+    if pending is None:
+        clear_tombstones(path)
         return []
-    del_ids = del_ids.transform(checkpoint_df)
-    slices = spark.read.parquet(os.path.join(path, "_slices"))
-    # ONE driver collect: the affected slices WITH their bounds (the
-    # unaffected slices' bounds are never needed) — r13, guide §5.2
+    # the tombstones and the slice bounds are driver-side sidecars: the
+    # affected slices (those whose [lo, hi) holds a deleted id) are found
+    # here, with no Spark job
+    ids = pending.column("event_id").to_numpy()
     affected = sorted(
-        (
-            (r.batch, r.lo, r.hi)
-            for r in slices.join(
-                F.broadcast(del_ids),
-                (F.col("event_id") >= F.col("lo")) & (F.col("event_id") < F.col("hi")),
-                "left_semi",
-            ).collect()
-        ),
-    )  # bounded: at most the slice count
+        (r["batch"], r["lo"], r["hi"])
+        for r in read_sidecar(path, "_slices").to_pylist()
+        if np.searchsorted(ids, r["lo"]) < np.searchsorted(ids, r["hi"])
+    )
     if not affected:
         clear_tombstones(path)
         return []
+    del_ids = local_frame(spark, pending, "event_id long")
     ev = load_table(spark, sf_dir, "events", columns=["event_id", "event_type", "value"])
     # ALL affected slices rebuild in ONE job + ONE dynamic-overwrite
     # write (r13, guide §2.1/§5.3: the per-slice driver loop scheduled

@@ -82,6 +82,12 @@ def get_spark(app_name: str = "columnflow_spark", shuffle_partitions: int | None
         # caller's list createDataFrame) started a SECOND daemon with its
         # own workers; its first use in a session cost ~1.4 s at local[4]
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
+        # no Python call-site capture: with it on, every F.*/Column call
+        # walks the stack, makes ~5 py4j round trips and retries a failing
+        # `import ipykernel` (~0.86 ms a call; 6 calls 7.5 ms -> 2.4 ms),
+        # and the first call imports IPython.  Only the Python call-site
+        # text of analysis errors is lost.  Static: set at session start
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # reliable-checkpoint retention (core/state.py switch): without
         # this the ContextCleaner never deletes checkpointed RDD data, so
         # a long job under SPARK_GRAFT_RELIABLE_CHECKPOINT=1 accumulates

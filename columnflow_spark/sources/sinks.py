@@ -301,55 +301,125 @@ def replace_store(path: str, build_fn: Callable[[str], None]) -> str:
     return path
 
 
+# --- driver-side sidecars: the bounded ``_*`` directories next to a
+# store's data (tombstone slices, the OPQ rotation and codebooks, the
+# BM25 collection stats, SemDeDup's frozen centroids, the quantile
+# sketch's slice bounds).  Each is at most thousands of rows that a
+# caller already holds on, or collects to, the driver, so pyarrow
+# writes and reads them there: no Spark write job, no shuffle, no
+# schema inference and no hidden-path scan.  Corpus-grain sidecars
+# (payload ``_docs``) and batch-grained incremental ones (graph-ANN
+# ``_centroids``) stay Spark writes. ---
+def write_sidecar(path: str, name: str, table, *, batch: int | None = None) -> None:
+    """Replace one slice of the store's ``name`` sidecar by the
+    ``pyarrow.Table`` ``table``: ``name/batch=<n>/`` when ``batch`` is
+    given, else all of ``name/``.  pyarrow writes one file into a hidden
+    staging dir and one rename publishes it; a slice it replaces moves
+    aside under a hidden name first and is removed after.  A write that
+    fails before the rename leaves the old slice as it was."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    target = os.path.join(path, name, *([] if batch is None else [f"batch={int(batch)}"]))
+    parent, base = os.path.split(target)
+    os.makedirs(parent, exist_ok=True)
+    staging = _sibling(os.path.join(parent, f".{base}"), "staging")
+    try:
+        os.makedirs(staging)
+        pq.write_table(table, os.path.join(staging, "part-0.parquet"))
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    old = _sibling(os.path.join(parent, f".{base}"), "old")
+    with contextlib.suppress(FileNotFoundError):
+        os.rename(target, old)
+    os.rename(staging, target)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def read_sidecar(path: str, name: str, columns: list[str] | None = None):
+    """Every row of the store's ``name`` sidecar as one ``pyarrow.Table``
+    (``None`` when it has no files): each parquet file under ``name/``
+    and its ``batch=<n>`` slices, read with ``pq.ParquetFile``.  Names
+    that start with ``.`` or ``_`` are skipped: staging dirs, and the
+    checksum and commit-marker files of slices Spark wrote.  The slice
+    key is not a column; a sidecar that needs it stores it in its rows."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    files = []
+    for d, dirs, names in os.walk(os.path.join(path, name)):
+        dirs[:] = sorted(x for x in dirs if not x.startswith((".", "_")))
+        files += [os.path.join(d, f) for f in sorted(names) if not f.startswith((".", "_"))]
+    if not files:
+        return None
+    tables = [pq.ParquetFile(f).read(columns=columns) for f in files]
+    return pa.concat_tables(tables, promote_options="permissive")
+
+
 # --- tombstone primitives for DOC-GRAIN incremental stores (phash block
-# postings, semantic vectors, the IVF+PQ index — queries/dedupstore.py,
-# queries/annindex.py): rows carry their doc/vec id, so a deletion is a
-# bounded id slice under ``_deleted/batch=<n>`` (idempotent per batch id)
-# anti-joined at serve time.  Tombstone sets are compliance-batch sized —
-# broadcast by construction; the periodic compaction rewrites the store
-# minus tombstones and clears them (logical delete -> physical purge,
-# the vacuum).  Content-grain stores (exact fingerprints, substring
-# grams) use negative count slices instead — see queries/dedupstore.py. ---
+# postings, semantic vectors, the IVF+PQ index, graph-ANN pages, the
+# quantile sketch — queries/dedupstore.py, queries/annindex.py, ...):
+# rows carry their doc/vec id, so a deletion is a bounded id slice
+# ``_deleted/batch=<n>/`` (idempotent per batch id) anti-joined at serve
+# time.  Tombstone sets are compliance-batch sized, so they are
+# driver-side sidecars: a delete is ONE Spark job (the collect of the
+# caller's ids), and a read is a local relation broadcast into the
+# anti-join.  The periodic compaction rewrites the store minus
+# tombstones and clears them (logical delete -> physical purge, the
+# vacuum).  Content-grain stores (exact fingerprints, substring grams)
+# use negative count slices instead — see queries/dedupstore.py. ---
 def upsert_tombstones(
     ids: DataFrame, path: str, *, batch: int, id_col: str = "doc_id"
 ) -> None:
     """Record a deleted-id set as the store's ``_deleted/batch=<n>``
-    slice (distinct ids only — re-running a delete batch overwrites
-    exactly its own slice)."""
-    rows = ids.select(F.col(id_col)).distinct().withColumn("batch", F.lit(int(batch)))
-    upsert_partitions(rows, os.path.join(path, "_deleted"), partition_by=["batch"])
+    slice: one collect of the id column, nulls dropped, ids deduped and
+    sorted; re-running a delete batch replaces exactly its own slice
+    (with no ids, by an empty slice)."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    col = ids.select(id_col).toArrow().column(id_col)
+    uniq = pa.table({id_col: pc.unique(pc.drop_null(col))}).sort_by(id_col)
+    write_sidecar(path, "_deleted", uniq, batch=batch)
 
 
-def _tombstone_ids(
-    spark: SparkSession, path: str, id_col: str, field: T.StructField | None = None
-) -> DataFrame | None:
-    """The tombstoned ids of every ``_deleted`` slice (``None`` when the
-    store has none), read as ``field`` when given, so the read infers no
-    schema."""
-    p = os.path.join(path, "_deleted")
-    if not os.path.exists(p):
+def tombstoned_ids(path: str, id_col: str = "doc_id"):
+    """The distinct non-null tombstoned ids of every ``_deleted`` slice
+    as a sorted one-column ``pyarrow.Table`` (``None`` when there are
+    none).  A null id never matches in the anti-join, so none is kept."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    t = read_sidecar(path, "_deleted", [id_col])
+    if t is None:
         return None
-    reader = spark.read if field is None else spark.read.schema(T.StructType([field]))
-    return reader.parquet(p).select(id_col)
+    ids = pa.table({id_col: pc.unique(pc.drop_null(t.column(id_col)))})
+    return ids.sort_by(id_col) if ids.num_rows else None
 
 
 def read_tombstones(
-    spark: SparkSession, path: str, *, id_col: str = "doc_id"
+    spark: SparkSession, path: str, *, id_col: str = "doc_id",
+    field: T.StructField | None = None,
 ) -> DataFrame | None:
-    """The distinct tombstoned ids, for callers that join on them (an id
-    deleted in two batches is one row)."""
-    t = _tombstone_ids(spark, path, id_col)
-    return None if t is None else t.distinct()
+    """The distinct tombstoned ids as a local frame (``None`` when there
+    are none), typed as ``field`` when given, else as stored: an id
+    deleted in two batches is one row."""
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
+
+    ids = tombstoned_ids(path, id_col)
+    if ids is None:
+        return None
+    return local_frame(spark, ids, T.StructType([field]) if field else from_arrow_schema(ids.schema))
 
 
 def anti_tombstones(store: DataFrame, path: str, *, id_col: str = "doc_id") -> DataFrame:
     """Serve-time delete mask: store rows minus the tombstoned ids (a
-    broadcast anti-join — the id list is compliance-batch sized, never
-    corpus-grain; unbounded tombstone growth is what the purging
-    compaction bounds).  The ids are read with the store's own id type
-    and without ``distinct``: a left-anti join ignores duplicates, so an
-    aggregate on the broadcast side would only add a stage."""
-    t = _tombstone_ids(store.sparkSession, path, id_col, store.schema[id_col])
+    broadcast left-anti join — the id list is compliance-batch sized,
+    never corpus-grain; unbounded tombstone growth is what the purging
+    compaction bounds).  The ids are a local relation of the store's own
+    id type, so the broadcast side has no scan and no aggregate; a store
+    row with a null id is kept, as the join keeps it."""
+    t = read_tombstones(store.sparkSession, path, id_col=id_col, field=store.schema[id_col])
     if t is None:
         return store
     return store.join(F.broadcast(t), id_col, "left_anti")
@@ -387,16 +457,20 @@ def local_frame(
     that reads them pays a Python-worker round trip: 1.3-1.7 s of
     executor time for 0.02 s of CPU per 4-task frame, and a following
     ``coalesce(1)`` ran all of them sequentially in one task.  Row order
-    is kept; ``coalesce(1)`` on the result costs nothing."""
+    is kept; ``coalesce(1)`` on the result costs nothing.  ``rows`` may
+    also be a ``pyarrow.Table`` (a read sidecar), cast to ``schema``."""
     import pyarrow as pa  # noqa: PLC0415
     from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
     struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.select(arrow.names).cast(arrow)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
     return spark.createDataFrame(table, struct)
 
 

@@ -131,6 +131,22 @@ def test_served_read_job_counts(spark, sf_dir, fresh_index, tmp_path):
     assert rows and ingested <= 3, ingested
 
 
+def test_warm_upsert_job_count(spark, sf_dir, tmp_path):
+    # the frozen coarse quantizer is a session artifact: a warm upsert is
+    # the encode-and-write, with no centroid collect
+    from columnflow_spark.queries.annindex import upsert_index_frame
+    from columnflow_spark.session import count_jobs
+    from columnflow_spark.sources import load_table
+
+    path = str(tmp_path / "index")
+    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    upsert_index_frame(spark, sf_dir, emb.filter(F.col("vec_id") % 4 == 0), path, batch=0)
+    _, jobs = count_jobs(spark, lambda: upsert_index_frame(
+        spark, sf_dir, emb.filter(F.col("vec_id") % 4 == 1), path, batch=1))
+    assert jobs <= 2, jobs
+    assert spark.read.parquet(path).filter(F.col("vec_id") % 4 == 1).count() > 0
+
+
 def test_driver_merge_knife_edges(spark, tmp_path):
     """The driver merge against Spark's own ``F.round(sum_d / 100.0, 0)``
     and ``row_number`` over the same hand-built rows: sums at k*100+50,
@@ -422,10 +438,10 @@ def test_opq_materialized_search_shape_and_probe_pruning(
 
 
 def test_opq_served_read_job_count(spark, sf_dir, fresh_opq_index):
-    # a warm OPQ read with a new query batch is three Spark jobs: the
-    # routing collect, the LUT's query-batch collect and the candidate
-    # collect; the ``_rotation``/``_codebook`` sidecars are read on the
-    # driver, with no Spark job
+    # a warm OPQ read with a new query batch is two Spark jobs: ONE probe
+    # collect gives both the route and the LUT's query vectors, then the
+    # candidate collect; the ``_rotation``/``_codebook`` sidecars are read
+    # on the driver, with no Spark job
     from columnflow_spark.queries.annindex import search_opq_index
     from columnflow_spark.session import count_jobs
 
@@ -436,7 +452,7 @@ def test_opq_served_read_job_count(spark, sf_dir, fresh_opq_index):
 
     read(1)
     rows, jobs = count_jobs(spark, lambda: read(2))
-    assert rows and jobs <= 3, jobs
+    assert rows and jobs <= 2, jobs
 
 
 def test_opq_driver_lut_equals_in_plan(spark, sf_dir, fresh_opq_index):
@@ -448,7 +464,7 @@ def test_opq_driver_lut_equals_in_plan(spark, sf_dir, fresh_opq_index):
     import pandas as pd
 
     from columnflow_spark.queries.annindex import load_opq_artifacts, opq_lut_rows
-    from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, _PQ_M
+    from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, _PQ_M, _probe_batch
     from columnflow_spark.sources import load_table
 
     every = F.lit(True)
@@ -478,7 +494,8 @@ def test_opq_driver_lut_equals_in_plan(spark, sf_dir, fresh_opq_index):
     in_plan = qsubs.join(
         F.broadcast(spark.read.parquet(os.path.join(fresh_opq_index, "_codebook"))), "sub"
     ).select("query_id", "sub", "code", F.round(subd, 0).alias("d"))
-    lut = opq_lut_rows(spark, sf_dir, fresh_opq_index, every)
+    qid, q, _, _ = _probe_batch(spark, sf_dir, every)
+    lut = opq_lut_rows(fresh_opq_index, qid, q)
     assert lut and sorted(lut) == sorted(map(tuple, in_plan.collect()))
 
 

@@ -313,13 +313,13 @@ def test_drift_audit_trigger(spark, sf_dir, tmp_path):
     # single cell, the cell-skew arm of the trigger
     from columnflow_spark.queries.dedupstore import _sem_centroids
 
-    c0 = sorted(_sem_centroids(spark, path).collect(), key=lambda r: r.cid)[0]
+    c0 = _sem_centroids(path).column("ce")[0].as_py()
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]).filter(
         F.col("vec_id") >= h
     )
     drifted = emb.select(
         "vec_id",
-        F.array(*[F.lit(float(x)) for x in c0.ce]).cast("array<float>").alias("embedding"),
+        F.array(*[F.lit(float(x)) for x in c0]).cast("array<float>").alias("embedding"),
     )
     upsert_semdedup_frame(drifted, path, batch=2)
     assert semdedup_store_needs_rebuild(spark, path)

@@ -418,6 +418,152 @@ def test_ensure_store_cleans_staging_on_failure(tmp_path, verb):
     assert leftovers() == []
     assert unchanged()
 
+def _slice_ids(path, batch, id_col="vec_id"):
+    from columnflow_spark.sources.sinks import read_sidecar
+
+    return read_sidecar(os.path.join(path, "_deleted"), f"batch={batch}").column(id_col).to_pylist()
+
+
+def test_tombstone_slices_are_driver_side(spark, tmp_path):
+    """A delete is ONE Spark job (the collect of the caller's ids): the
+    slice is deduped, null-free and sorted, a rerun of a batch replaces
+    only its own slice, and an empty batch is an empty slice."""
+    from columnflow_spark.session import count_jobs
+    from columnflow_spark.sources.sinks import local_frame, read_tombstones, upsert_tombstones
+
+    path = str(tmp_path / "store")
+
+    def delete(ids, batch):
+        frame = local_frame(spark, [(i,) for i in ids], "vec_id long")
+        return count_jobs(spark, lambda: upsert_tombstones(frame, path, batch=batch,
+                                                           id_col="vec_id"))[1]
+
+    assert delete([5, 3, None, 5, 1], 0) == 1
+    assert delete([9, 8], 1) == 1
+    assert _slice_ids(path, 0) == [1, 3, 5] and _slice_ids(path, 1) == [8, 9]
+    # a rerun of batch 0 replaces batch 0 only
+    assert delete([7, 7], 0) == 1
+    assert _slice_ids(path, 0) == [7] and _slice_ids(path, 1) == [8, 9]
+    # an empty batch: an empty slice, and the other slices still read
+    delete([], 2)
+    assert _slice_ids(path, 2) == []
+    assert sorted(r.vec_id for r in read_tombstones(spark, path, id_col="vec_id").collect()) == [
+        7, 8, 9]
+    # nothing but the slices: no staging or moved-aside dirs left
+    assert sorted(os.listdir(os.path.join(path, "_deleted"))) == [
+        "batch=0", "batch=1", "batch=2"]
+    # a store whose only slice is empty has no tombstones
+    empty = str(tmp_path / "empty")
+    upsert_tombstones(local_frame(spark, [], "vec_id long"), empty, batch=0, id_col="vec_id")
+    assert read_tombstones(spark, empty, id_col="vec_id") is None
+
+
+@pytest.mark.parametrize("ddl,ids,keep", [
+    ("k long", [3, 1], [2, None]),
+    ("k int", [3, 1], [2, None]),
+    ("k string", ["c", "a"], ["b", None]),
+])
+def test_tombstones_of_every_id_type(spark, tmp_path, ddl, ids, keep):
+    # the anti-join keeps the store's id type and its null-key semantics:
+    # a store row with a null id is never masked
+    from columnflow_spark.sources.sinks import anti_tombstones, local_frame, upsert_tombstones
+
+    path = str(tmp_path / "store")
+    upsert_tombstones(local_frame(spark, [(i,) for i in ids], ddl), path, batch=0, id_col="k")
+    store = local_frame(spark, [(i,) for i in [*ids, *keep]], ddl)
+    live = anti_tombstones(store, path, id_col="k")
+    assert live.schema == store.schema
+    assert sorted((r.k for r in live.collect()), key=str) == sorted(keep, key=str)
+
+
+def test_spark_written_tombstone_slice_still_reads(spark, tmp_path):
+    # a store whose slices Spark wrote (part-*.parquet, .crc, _SUCCESS,
+    # batch= partition dirs) reads beside a driver-written slice
+    from columnflow_spark.sources.sinks import (
+        anti_tombstones,
+        local_frame,
+        read_tombstones,
+        upsert_partitions,
+        upsert_tombstones,
+    )
+
+    path = str(tmp_path / "store")
+    store = local_frame(spark, [(i,) for i in range(6)], "vec_id long")
+    legacy = local_frame(spark, [(1, 0), (2, 0), (2, 1)], "vec_id long, batch int")
+    upsert_partitions(legacy, os.path.join(path, "_deleted"), partition_by=["batch"])
+    assert any(f.startswith(".") for f in os.listdir(os.path.join(path, "_deleted", "batch=0")))
+    upsert_tombstones(local_frame(spark, [(4,)], "vec_id long"), path, batch=2, id_col="vec_id")
+    assert sorted(r.vec_id for r in read_tombstones(spark, path, id_col="vec_id").collect()) == [
+        1, 2, 4]
+    assert sorted(r.vec_id for r in anti_tombstones(store, path, id_col="vec_id").collect()) == [
+        0, 3, 5]
+
+
+def test_failed_sidecar_write_keeps_the_old_slice(spark, tmp_path, monkeypatch):
+    # a write that fails before its rename publishes nothing: the old
+    # slice stays whole and no staging dir is left behind
+    import pyarrow.parquet as pq
+
+    from columnflow_spark.sources.sinks import local_frame, upsert_tombstones
+
+    path = str(tmp_path / "store")
+    upsert_tombstones(local_frame(spark, [(1,), (2,)], "vec_id long"), path, batch=0,
+                      id_col="vec_id")
+
+    def boom(*a, **k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", boom)
+    with pytest.raises(OSError, match="disk full"):
+        upsert_tombstones(local_frame(spark, [(9,)], "vec_id long"), path, batch=0,
+                          id_col="vec_id")
+    assert _slice_ids(path, 0) == [1, 2]
+    assert os.listdir(os.path.join(path, "_deleted")) == ["batch=0"]
+
+
+#: the bounded sidecars ``sinks.write_sidecar``/``read_sidecar`` own
+_DRIVER_SIDECARS = {"_deleted", "_stats", "_rotation", "_codebook", "_slices"}
+#: sidecar names that are driver-side in one module only (graph-ANN's
+#: batch-grained ``_centroids`` stay Spark writes in queries/anngraph.py)
+_MODULE_SIDECARS = {"queries/dedupstore.py": {"_centroids"}}
+#: calls that write or read a path through Spark
+_SPARK_IO = {"parquet", "json", "csv", "orc", "text", "save", "load",
+             "upsert_partitions", "write_events", "write_json_lines"}
+
+
+def test_bounded_sidecars_have_no_spark_io():
+    """Only sources/sinks.py touches the bounded sidecars' files: no other
+    module passes a ``_deleted``/``_stats``/``_rotation``/``_codebook``/
+    ``_slices`` path, nor queries/dedupstore.py a SemDeDup ``_centroids``
+    path, to a Spark reader or writer (``.parquet(``,
+    ``upsert_partitions(``, ...)."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    sinks = repo / "columnflow_spark" / "sources" / "sinks.py"
+    offenders = []
+    for path in sorted((repo / "columnflow_spark").rglob("*.py")):
+        if path == sinks:
+            continue
+        rel = path.relative_to(repo / "columnflow_spark").as_posix()
+        sidecars = _DRIVER_SIDECARS | _MODULE_SIDECARS.get(rel, set())
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in _SPARK_IO:
+                continue
+            names = {
+                c.value for arg in [*node.args, *(k.value for k in node.keywords)]
+                for c in ast.walk(arg)
+                if isinstance(c, ast.Constant) and c.value in sidecars
+            }
+            offenders += [f"{path.relative_to(repo)}:{node.lineno} {n}" for n in sorted(names)]
+    assert offenders == []
+
+
 def test_anti_tombstones_broadcasts_ids_without_aggregate(spark, tmp_path):
     # a left-anti join ignores duplicate ids, so the serve-time mask
     # broadcasts the raw _deleted ids: no distinct (HashAggregate) on the
