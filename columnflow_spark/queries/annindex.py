@@ -78,6 +78,7 @@ from columnflow_spark.sources.sinks import (
     read_sidecar,
     replace_store,
     store_path,
+    tombstoned_ids,
     upsert_partitions,
     upsert_tombstones,
     write_events,
@@ -189,13 +190,13 @@ TOPK_SCHEMA = "query_id long, neighbor_id long, adc_dist long, rk int"
 
 
 def _candidate_scan(spark: SparkSession, path: str, cids: list[int]) -> DataFrame:
-    """The scatter half of a served read: the live rows of the routed
-    cells.  The ``cid IN`` list lands in the scan's PartitionFilters, so
-    only those cells' files are listed and read; tombstoned vectors drop
-    out through a broadcast anti-join after the prune."""
-    scan = spark.read.schema(_INDEX_SCHEMA).parquet(path).filter(F.col("cid").isin(cids))
-    return anti_tombstones(scan, path, id_col="vec_id").select(
-        "vec_id", "cid", "batch", F.split("codes", "-").cast("array<int>").alias("codes")
+    """The scatter half of a served read: the rows of the routed cells.
+    The ``cid IN`` list lands in the scan's PartitionFilters, so only
+    those cells' files are listed and read.  Tombstoned vectors are
+    still in it; :func:`_probed_adc_topk` masks them on the driver."""
+    return (
+        spark.read.schema(_INDEX_SCHEMA).parquet(path).filter(F.col("cid").isin(cids))
+        .select("vec_id", "cid", "batch", F.split("codes", "-").cast("array<int>").alias("codes"))
     )
 
 
@@ -255,17 +256,23 @@ def _probed_adc_topk(
     spark: SparkSession, path: str, route: list, lut_rows: list, topk: int
 ) -> DataFrame:
     """The ADC top-``topk`` of every probe-pruned index read, as
-    scatter-gather: ONE Spark job collects the routed cells' live rows
-    through Arrow (:func:`_candidate_scan`), and :func:`_adc_topk_np`
-    scores, dedups and ranks them on the driver.  The collect is bounded
-    by design: a cell holds ~64 vectors (every 64th vector is a
-    centroid), so a read brings back at most n_probe x |batch| x ~64
+    scatter-gather: ONE Spark job collects the routed cells' rows through
+    Arrow (:func:`_candidate_scan`); the driver drops the tombstoned
+    vectors (the ``_deleted`` sidecar, read with pyarrow) and
+    :func:`_adc_topk_np` scores, dedups and ranks the rest.  The collect
+    is bounded by design: a cell holds ~64 vectors (every 64th vector is
+    a centroid), so a read brings back at most n_probe x |batch| x ~64
     rows, the same order as the centroid rows the probe plan collects.
     The result is a local frame of |batch| x ``topk`` rows."""
     import pyarrow.compute as pac  # noqa: PLC0415
 
     cids = sorted({c for _, c in route})
     cand = _candidate_scan(spark, path, cids).toArrow() if cids else None
+    dead = tombstoned_ids(path, "vec_id")
+    if cand is not None and dead is not None:
+        vid = cand.column("vec_id")
+        dead = dead.column("vec_id").cast(vid.type)
+        cand = cand.filter(pac.invert(pac.is_in(vid, value_set=dead)))
     rows = []
     if cand is not None and cand.num_rows:
         rows = _adc_topk_np(
@@ -301,7 +308,7 @@ def search_ivfpq_index(
     itself is :func:`_probed_adc_topk`: one pruned candidate collect, a
     driver-side merge, and a local result frame; a warm read runs at
     most two Spark jobs (the probe collect and the candidate collect),
-    plus the tombstone broadcast on a store with deletions."""
+    with or without deletions (tombstones are masked on the driver)."""
     if query_pred is None:
         query_pred = F.col("vec_id") % 100 == 7
         route_key = route_key or ("mod100", 7)

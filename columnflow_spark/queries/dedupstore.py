@@ -37,6 +37,7 @@ replays both sides from the raw table.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -73,7 +74,152 @@ from columnflow_spark.sources.sinks import (
 #: stored digests from an older normalizer / rows without the holder
 #: count must not be reused (v2: + ``cnt``, the deletion monoid)
 _STORE_FORMAT = 2
+#: the substring gram store's format (v2: + ``cnt``, as above)
+_SSTR_STORE_FORMAT = 2
 _N_BANDS = 16
+
+
+# --- the content-grain count stores (exact text, URL and segment
+# fingerprints; substring grams) share ONE row format, owned by the
+# functions below: signed ``cnt`` slices under ``<band>=<b>/batch=<n>``,
+# summed when read and when compacted (the reference's partial-table
+# merge, MergeSelectionStats/MergeHistograms).  A grain only says what a
+# fingerprint is: it maps a documents frame to ``(doc_id, fingerprint)``
+# (the gram grain to ``(doc_id, p, key, g)``). ---
+@dataclass(frozen=True)
+class _CountStore:
+    """A count store's row format: ``<band>=<b>/batch=<n>`` slices of
+    ``(<key>, <first>, cnt)``, one row per distinct key per slice, where
+    ``<first>`` is the least ``<holder>`` of the key in the slice."""
+
+    band: str
+    key: str
+    holder: str
+    first: str
+    fmt: int
+
+
+_FP_STORE = _CountStore("band", "fingerprint", "doc_id", "first_doc", _STORE_FORMAT)
+_GRAM_STORE = _CountStore("gb", "g", "key", "first_key", _SSTR_STORE_FORMAT)
+
+
+def _band(key: str):
+    """The co-location axis ``hash(key) % 16``: the writer partitions by
+    it, and the fingerprint read joins on ``(band, fingerprint)`` so a
+    bucketed layout can place store and probe partitions together."""
+    return F.pmod(F.hash(key), F.lit(_N_BANDS))
+
+
+def _write_counts(
+    rows: DataFrame, path: str, store: _CountStore, *, batch: int, sign: int
+) -> str:
+    """Upsert ``rows`` as the ``batch=<n>`` slice: per key its least
+    holder and its row count times ``sign`` (both map-side combinable, no
+    keep-list broadcast).  ``cnt`` is the deletion monoid: the store is
+    content grain (holder identities are aggregated away), so a
+    right-to-be-forgotten delete is a NEGATIVE slice (``sign=-1``) of the
+    deleted docs alone and presence is ``sum(cnt) > 0``: exact integers,
+    inverse-closed, order-free (the bm25 collection-stats recipe).
+    Idempotent per batch id: re-running a batch replaces its own slice."""
+    out = (
+        rows.withColumn(store.band, _band(store.key))
+        .groupBy(store.band, store.key)
+        .agg(
+            F.min(store.holder).alias(store.first),
+            (F.count(F.lit(1)) * sign).cast("long").alias("cnt"),
+        )
+        .withColumn("batch", F.lit(int(batch)))
+    )
+    upsert_partitions(out, path, partition_by=[store.band, "batch"])
+    mark_built(path, store.fmt)
+    return path
+
+
+def _slices(spark: SparkSession, path: str, max_batch: int | None) -> DataFrame:
+    """The store's slices, only ``batch <= max_batch`` when given."""
+    store = spark.read.parquet(path)
+    return store if max_batch is None else store.filter(F.col("batch") <= max_batch)
+
+
+def _net(rows: DataFrame, keys: list, *aggs) -> DataFrame:
+    """Per key, ``aggs`` and the summed ``cnt`` of every slice, kept where
+    the sum is positive: a key whose every holder was deleted nets to
+    zero and reads as absent."""
+    return rows.groupBy(*keys).agg(*aggs, F.sum("cnt").alias("cnt")).filter(F.col("cnt") > 0)
+
+
+def _compact(spark: SparkSession, path: str, store: _CountStore) -> None:
+    """Fold every slice into one ``batch=0`` slice per band (VERDICT r5
+    next #5: without compaction the store grows one directory per ingest
+    batch forever, so listing cost and small-file count grow with ingest
+    history, not with content).
+
+    Semantic, not just file-level: a key upserted by several batches
+    collapses to ONE row keeping the earliest holder (``min(<first>)``,
+    the monoid every slice already uses), so reads of the compacted
+    store equal reads of the full batch history (tests/test_dedupstore.py
+    re-proves it).  Compaction is also the VACUUM step of deletion
+    propagation: a key whose count nets to zero is dropped, so the
+    logical delete becomes a physical purge (Delta-style delete+vacuum).
+    ``<first>`` is the earliest RECORDED holder (a deleted doc can be
+    named until its content fully vacuums): informational only, never a
+    read input.  Staged and published by one rename, keeping the marker
+    (sources/sinks.py:replace_store)."""
+    rows = _net(
+        spark.read.parquet(path),
+        [F.col(store.band).cast("int").alias(store.band), store.key],
+        F.min(store.first).alias(store.first),
+    ).withColumn("batch", F.lit(0))
+    replace_store(path, lambda p: write_events(rows, p, partition_by=[store.band, "batch"]))
+
+
+def _docs(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
+    """The documents a grain reads, filtered by ``pred``; the scan keeps
+    only the columns the grain uses."""
+    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text", "source"])
+    return docs if pred is None else docs.filter(pred)
+
+
+def _ensure_count_store(
+    spark: SparkSession, sf_dir: str, path: str, grain, slices: list,
+    *, store: _CountStore = _FP_STORE, compact: bool = False,
+) -> str:
+    """Build-once count store at ``path``: slice ``n`` of ``slices`` is a
+    ``(pred, sign)`` pair, written as ``batch=<n>`` from the ``grain``
+    rows of the documents matching ``pred``; then compacted when
+    ``compact``."""
+    def build(p: str) -> None:
+        for batch, (pred, sign) in enumerate(slices):
+            _write_counts(grain(_docs(spark, sf_dir, pred)), p, store, batch=batch, sign=sign)
+        if compact:
+            _compact(spark, p, store)
+
+    return ensure_store(path, build)
+
+
+def _history_slices(h: int, *, deleted: bool = False) -> list:
+    """The history stores' slices: the first 60% of doc_ids as slice 0
+    and, when ``deleted``, the ``doc_id % 7 == 3`` among them deleted
+    through it as negative slice 1."""
+    hist = F.col("doc_id") < h
+    return [(hist, 1), (_delete_pred() & hist, -1)] if deleted else [(hist, 1)]
+
+
+def _live_fingerprints(probe: DataFrame, path: str, max_batch: int | None) -> DataFrame:
+    """The fingerprint store's live-count read: ``probe`` (any frame with
+    a ``fingerprint`` column) LEFT-joined on ``(band, fingerprint)`` to
+    the net holder count of the store's slices as ``cnt``, null where
+    the store holds no live row.  The store side is one count aggregate
+    over its partitions; both join sides are content grain and
+    deliberately un-hinted (shuffle join; see the negative broadcast
+    guardrail in tests/test_plan_quality.py)."""
+    live = _net(
+        _slices(probe.sparkSession, path, max_batch),
+        [F.col("band").cast("int").alias("band"), "fingerprint"],
+    )
+    return probe.withColumn("band", _band("fingerprint")).join(
+        live, ["band", "fingerprint"], "left"
+    )
 
 
 def dedup_store_path(sf_dir: str) -> str:
@@ -84,39 +230,16 @@ def dedup_store_path(sf_dir: str) -> str:
 
 
 def doc_fingerprints(docs: DataFrame) -> DataFrame:
-    """``(doc_id, fingerprint, band)`` for a ``(doc_id, text, …)`` frame."""
-    return docs.select(
-        "doc_id", fingerprint(F.col("text")).alias("fingerprint")
-    ).withColumn("band", F.pmod(F.hash("fingerprint"), F.lit(_N_BANDS)))
+    """The exact-text grain: ``(doc_id, fingerprint)`` for a ``(doc_id,
+    text, …)`` frame."""
+    return docs.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
 
 
-def _fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    if pred is not None:
-        docs = docs.filter(pred)
-    return doc_fingerprints(docs)
-
-
-def upsert_fingerprints(fp: DataFrame, path: str, *, batch: int) -> str:
-    """Reduce a fingerprinted frame to per-fingerprint first holder +
-    holder count (both map-side combinable — no keep-list broadcast)
-    and upsert it as the store's ``batch=<n>`` slice.  ``cnt`` is the
-    deletion monoid: the store is content-grain (holder identities are
-    aggregated away), so right-to-be-forgotten deletes land as NEGATIVE
-    count slices (:func:`delete_docs_from_dedup_store`) and presence
-    becomes ``sum(cnt) > 0`` — exact integers, inverse-closed, order-
-    free (the bm25 collection-stats recipe)."""
-    rows = (
-        fp.groupBy("band", "fingerprint")
-        .agg(
-            F.min("doc_id").alias("first_doc"),
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-        )
-        .withColumn("batch", F.lit(int(batch)))
-    )
-    upsert_partitions(rows, path, partition_by=["band", "batch"])
-    mark_built(path, _STORE_FORMAT)
-    return path
+def upsert_fingerprints(fp: DataFrame, path: str, *, batch: int, sign: int = 1) -> str:
+    """Write a ``(doc_id, fingerprint)`` frame as the fingerprint store's
+    ``batch=<n>`` slice: per fingerprint the first holder ``first_doc``
+    and the holder count ``cnt``, times ``sign`` (-1 for a delete)."""
+    return _write_counts(fp, path, _FP_STORE, batch=batch, sign=sign)
 
 
 def upsert_dedup_batch(
@@ -124,41 +247,13 @@ def upsert_dedup_batch(
 ) -> str:
     """Fingerprint one ingest batch of the documents table and upsert it."""
     return upsert_fingerprints(
-        _fingerprints(spark, sf_dir, batch_pred), path, batch=batch
+        doc_fingerprints(_docs(spark, sf_dir, batch_pred)), path, batch=batch
     )
 
 
 def compact_dedup_store(spark: SparkSession, path: str) -> None:
-    """Fold the ``band=/batch=`` store back into one ``batch=0`` slice
-    per band (VERDICT r5 next #5: without compaction the store grows one
-    directory per ingest batch forever — listing cost and small-file
-    count grow with ingest history, not with content).
-
-    Semantic, not just file-level: the same fingerprint upserted by
-    several batches collapses to ONE row keeping the earliest holder
-    (``min(first_doc)`` — the monoid the per-batch build already uses),
-    so flagging against the compacted store is bit-identical to flagging
-    against the full batch history (tests/test_dedupstore.py re-proves
-    the incremental ≡ from-scratch equivalence over a compacted store).
-    The rewrite is staged and published by one rename, keeping the
-    marker (sources/sinks.py:replace_store).
-
-    Compaction is also the VACUUM step of deletion propagation: a
-    fingerprint whose summed holder count reaches zero (every holder
-    deleted through :func:`delete_docs_from_dedup_store`) is physically
-    dropped here — the logical tombstone becomes a physical purge, the
-    same two-phase shape as Delta-style delete+vacuum.  ``first_doc``
-    min-merges over the surviving rows; it is the earliest RECORDED
-    holder (a later-deleted doc can still be named until its content
-    fully vacuums) — informational only, never a flagging input."""
-    rows = (
-        spark.read.parquet(path)
-        .groupBy(F.col("band").cast("int").alias("band"), "fingerprint")
-        .agg(F.min("first_doc").alias("first_doc"), F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") > 0)
-        .withColumn("batch", F.lit(0))
-    )
-    replace_store(path, lambda p: write_events(rows, p, partition_by=["band", "batch"]))
+    """Compact the fingerprint store (:func:`_compact`)."""
+    _compact(spark, path, _FP_STORE)
 
 
 def flag_fingerprints_against_store(
@@ -166,28 +261,12 @@ def flag_fingerprints_against_store(
 ) -> DataFrame:
     """Per-doc dedup decision for a fingerprinted batch frame vs the
     accumulated store (optionally batches ``<= max_batch``) and the
-    batch itself.  Both join sides are document/fingerprint grain and
-    deliberately un-hinted (shuffle join; see the negative broadcast
-    guardrail)."""
-    store = fp.sparkSession.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
-    # presence = summed holder count > 0 (not row existence): deletion
-    # slices carry negative counts, so a fully-forgotten fingerprint
-    # nets to zero and stops flagging — same agg shuffle shape as the
-    # previous DISTINCT
-    store = (
-        store.groupBy(F.col("band").cast("int").alias("band"), "fingerprint")
-        .agg(F.sum("cnt").alias("_c"))
-        .filter(F.col("_c") > 0)
-        .select("band", "fingerprint")
-        .withColumn("hit", F.lit(True))
-    )
-    flagged = fp.join(store, ["band", "fingerprint"], "left")
+    batch itself."""
+    flagged = _live_fingerprints(fp, path, max_batch)
     first_in_batch = F.min("doc_id").over(W.partitionBy("fingerprint"))
     return flagged.select(
         "doc_id",
-        F.coalesce(F.col("hit"), F.lit(False)).alias("dup_prior"),
+        F.col("cnt").isNotNull().alias("dup_prior"),
         (first_in_batch < F.col("doc_id")).alias("dup_in_batch"),
     ).withColumn("keep", ~(F.col("dup_prior") | F.col("dup_in_batch")))
 
@@ -197,7 +276,7 @@ def flag_batch_against_store(
 ) -> DataFrame:
     """Documents-table form of :func:`flag_fingerprints_against_store`."""
     return flag_fingerprints_against_store(
-        _fingerprints(spark, sf_dir, batch_pred), path, max_batch=max_batch
+        doc_fingerprints(_docs(spark, sf_dir, batch_pred)), path, max_batch=max_batch
     )
 
 
@@ -212,15 +291,6 @@ def _table_rows(spark: SparkSession, sf_dir: str, table: str, id_col: str) -> in
 
 def _history_cutoff(spark: SparkSession, sf_dir: str) -> int:
     return 3 * _table_rows(spark, sf_dir, "documents", "doc_id") // 5
-
-
-def _ensure_history_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    return ensure_store(
-        dedup_store_path(sf_dir),
-        lambda p: upsert_dedup_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        ),
-    )
 
 
 #: shared oracle for every store-backed exact-dedup variant: the flagging
@@ -263,35 +333,14 @@ def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids) against the PERSISTED history fingerprint store (first 60%,
     built once, content-addressed, reused across sessions)."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_history_store(spark, sf_dir, h)
+    path = _ensure_count_store(
+        spark, sf_dir, dedup_store_path(sf_dir), doc_fingerprints, _history_slices(h)
+    )
     # no trailing sort: output is batch-grain (huge at scale) and the
     # oracle compare is order-insensitive — a presentation sort would be
     # a pure range-exchange tax on every flagged batch
     return flag_batch_against_store(
         spark, sf_dir, path, batch_pred=F.col("doc_id") >= h, max_batch=0
-    )
-
-
-def _ensure_compacted_history_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    """History store built as TWO ingest batches then compacted to one
-    ``batch=0`` slice per band — the steady-state layout a long-running
-    ingest pipeline periodically restores."""
-    def build(p: str) -> None:
-        upsert_dedup_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h // 2
-        )
-        upsert_dedup_batch(
-            spark,
-            sf_dir,
-            p,
-            batch=1,
-            batch_pred=(F.col("doc_id") >= h // 2) & (F.col("doc_id") < h),
-        )
-        compact_dedup_store(spark, p)
-
-    return ensure_store(
-        store_path(sf_dir, "documents", "dedup_store_compacted", f"v{_STORE_FORMAT}-compacted"),
-        build,
     )
 
 
@@ -304,7 +353,12 @@ def dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_incremental_store``'s oracle — hash equality proves the
     compaction rewrite changes the store's layout and nothing else."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_compacted_history_store(spark, sf_dir, h)
+    doc = F.col("doc_id")
+    path = _ensure_count_store(
+        spark, sf_dir,
+        store_path(sf_dir, "documents", "dedup_store_compacted", f"v{_STORE_FORMAT}-compacted"),
+        doc_fingerprints, [(doc < h // 2, 1), ((doc >= h // 2) & (doc < h), 1)], compact=True,
+    )
     # batch-grain output, order-insensitive compare: no presentation sort
     return flag_batch_against_store(
         spark, sf_dir, path, batch_pred=F.col("doc_id") >= h, max_batch=None
@@ -316,19 +370,22 @@ def dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # documents from the corpus must propagate into EVERY derived store
 # without a full rebuild, or deleted content keeps flagging future
 # near-dups against data that is contractually gone.  Two shapes cover
-# all five stores:
+# every store in this file:
 #
-# - **content-grain stores** (this fingerprint store, the substring gram
-#   store): holder identities are aggregated away at ingest, so the
-#   delete lands as one NEGATIVE count slice computed from the deleted
-#   docs alone (cost ∝ |deleted|, zero store rewrite) — presence is
-#   ``sum(cnt) > 0``, an exact-integer monoid with inverses.  The next
-#   compaction physically purges net-zero rows (delete+vacuum).
-# - **doc-grain stores** (phash block postings, semantic vectors, the
-#   IVF+PQ index): rows carry their doc id, so the delete is a bounded
-#   tombstone slice under ``_deleted/`` anti-joined at serve time
-#   (tombstones are compliance-batch sized — broadcast); compaction
-#   rewrites the store minus tombstones and clears them.
+# - **content-grain count stores** (exact-text, URL and segment
+#   fingerprints; substring grams): holder identities are aggregated
+#   away at ingest, so the delete is the store's one writer called with
+#   ``sign=-1`` (``upsert_fingerprints``/``upsert_substring_grams``):
+#   a NEGATIVE count slice computed from the deleted docs alone (cost ∝
+#   |deleted|, zero store rewrite).  Presence is ``sum(cnt) > 0``, an
+#   exact-integer monoid with inverses; the next compaction physically
+#   purges net-zero rows (delete+vacuum).
+# - **doc-grain stores** (phash block postings, semantic vectors,
+#   MinHash band postings; the IVF+PQ and graph-ANN indexes in
+#   annindex.py/anngraph.py): rows carry their doc id, so the delete is
+#   a bounded tombstone slice under ``_deleted/`` (sources/sinks.py)
+#   masked at serve time; compaction rewrites the store minus
+#   tombstones and clears them.
 #
 # Every delete is idempotent per batch id (re-running a delete batch
 # overwrites exactly its own slice), and each variant registers under an
@@ -347,17 +404,9 @@ def delete_docs_from_dedup_store(
     """Propagate a document deletion into the fingerprint store: ONE
     negative holder-count slice computed by fingerprinting the deleted
     docs (the only inputs) — no history scan, no store rewrite."""
-    rows = (
-        _fingerprints(spark, sf_dir, delete_pred)
-        .groupBy("band", "fingerprint")
-        .agg(
-            F.min("doc_id").alias("first_doc"),
-            (-F.count(F.lit(1))).cast("long").alias("cnt"),
-        )
-        .withColumn("batch", F.lit(int(batch)))
+    return upsert_fingerprints(
+        doc_fingerprints(_docs(spark, sf_dir, delete_pred)), path, batch=batch, sign=-1
     )
-    upsert_partitions(rows, path, partition_by=["band", "batch"])
-    return path
 
 
 def _ensure_deleted_dedup_store(
@@ -366,21 +415,11 @@ def _ensure_deleted_dedup_store(
     """History store (first 60%) with ``doc_id % 7 == 3`` deleted through
     it — as a live negative slice (``vacuum=False``) or additionally
     compacted so the purge is physical (``vacuum=True``)."""
-    def build(p: str) -> None:
-        upsert_dedup_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        )
-        delete_docs_from_dedup_store(
-            spark, sf_dir, p,
-            delete_pred=_delete_pred() & (F.col("doc_id") < h), batch=1,
-        )
-        if vacuum:
-            compact_dedup_store(spark, p)
-
     kind = "vacuumed" if vacuum else "deleted"
-    return ensure_store(
+    return _ensure_count_store(
+        spark, sf_dir,
         store_path(sf_dir, "documents", f"dedup_store_{kind}", f"v{_STORE_FORMAT}-{kind}"),
-        build,
+        doc_fingerprints, _history_slices(h, deleted=True), compact=vacuum,
     )
 
 
@@ -1057,39 +1096,42 @@ from columnflow_spark.queries.textdedup import (  # noqa: E402
     _sstr_grams,
 )
 
-#: v2: + ``cnt`` (occurrence count — the deletion monoid, see the
-#: fingerprint store)
-_SSTR_STORE_FORMAT = 2
-_SSTR_BANDS = 16
-
-
-def upsert_substring_grams(grams: DataFrame, path: str, *, batch: int) -> str:
-    """Reduce a positional-gram frame to per-gram first holder +
-    occurrence count (both map-side combinable) and upsert it as the
-    store's ``batch=<n>`` slice.  ``cnt`` is the deletion monoid (see
-    the fingerprint store): deletes land as negative occurrence slices
-    and presence becomes ``sum(cnt) > 0``."""
-    rows = (
-        grams.withColumn("gb", F.pmod(F.hash("g"), F.lit(_SSTR_BANDS)))
-        .groupBy("gb", "g")
-        .agg(
-            F.min("key").alias("first_key"),
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-        )
-        .withColumn("batch", F.lit(int(batch)))
-    )
-    upsert_partitions(rows, path, partition_by=["gb", "batch"])
-    mark_built(path, _SSTR_STORE_FORMAT)
-    return path
+def upsert_substring_grams(
+    grams: DataFrame, path: str, *, batch: int, sign: int = 1
+) -> str:
+    """Write a positional-gram frame ``(doc_id, p, key, g)`` as the gram
+    store's ``batch=<n>`` slice: per gram the first (doc, pos) holder
+    ``first_key`` and the occurrence count ``cnt``, times ``sign`` (-1
+    for a delete; see the fingerprint store)."""
+    return _write_counts(grams, path, _GRAM_STORE, batch=batch, sign=sign)
 
 
 def upsert_substring_batch(
     spark: SparkSession, sf_dir: str, path: str, *, batch: int, batch_pred
 ) -> str:
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
-        batch_pred
+    return upsert_substring_grams(
+        _sstr_grams(_docs(spark, sf_dir, batch_pred), _SSTR_K), path, batch=batch
     )
-    return upsert_substring_grams(_sstr_grams(docs, _SSTR_K), path, batch=batch)
+
+
+def _mark_against_gram_store(bg: DataFrame, path: str, max_batch: int | None) -> DataFrame:
+    """The gram store's live-count read: the batch gram frame ``bg``
+    marked ``pr`` (its gram is live in history) and ``cov`` (live in
+    history or held by an earlier (doc, pos) of the batch).  History is
+    scanned ONCE with zero history shuffle: the batch's distinct grams
+    are broadcast into a map-side semi join, so the hit set is bounded
+    by the batch's gram volume."""
+    bset = bg.select("g").distinct()
+    hits = _net(
+        _slices(bg.sparkSession, path, max_batch).join(F.broadcast(bset), "g", "leftsemi"),
+        ["g"],
+    ).select("g", F.lit(True).alias("hit"))
+    wmin = F.min("key").over(W.partitionBy("g"))
+    return (
+        bg.join(hits, "g", "left")
+        .withColumn("pr", F.col("hit").isNotNull())
+        .withColumn("cov", F.col("hit").isNotNull() | (F.col("key") > wmin))
+    )
 
 
 def flag_substring_frame(
@@ -1099,31 +1141,7 @@ def flag_substring_frame(
     accumulated store: maximal runs over positions whose gram is in
     history (``prior``) or occurs earlier in the batch; reports
     ``(doc_id, n_runs, dup_tokens, prior_tokens)`` for affected docs."""
-    spark = bg.sparkSession
-    store = spark.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
-    # history side scanned ONCE, zero history shuffle: broadcast batch
-    # gram set -> map-side semi join; the hit set is bounded by the
-    # batch's gram volume.  Presence = summed occurrence count > 0 (not
-    # row existence) so negative deletion slices net out — same
-    # post-semi-join agg shuffle shape as the previous DISTINCT
-    bset = bg.select("g").distinct()
-    hits = (
-        store.join(F.broadcast(bset), "g", "leftsemi")
-        .groupBy("g")
-        .agg(F.sum("cnt").alias("_c"))
-        .filter(F.col("_c") > 0)
-        .select("g")
-        .withColumn("hit", F.lit(True))
-    )
-    wmin = F.min("key").over(W.partitionBy("g"))
-    marked = (
-        bg.join(hits, "g", "left")
-        .withColumn("pr", F.col("hit").isNotNull())
-        .withColumn("cov", F.col("hit").isNotNull() | (F.col("key") > wmin))
-    )
-    return substring_cov_rollup(marked, k)
+    return substring_cov_rollup(_mark_against_gram_store(bg, path, max_batch), k)
 
 
 def batch_only_substring_marked(bg: DataFrame) -> DataFrame:
@@ -1186,31 +1204,23 @@ def substring_cov_rollup(marked: DataFrame, k: int = _SSTR_K) -> DataFrame:
 
 
 def compact_substring_store(spark: SparkSession, path: str) -> None:
-    """Fold the ``gb=/batch=`` gram store back into one ``batch=0``
-    slice per band — semantic like :func:`compact_dedup_store`: a gram
-    upserted by several batches collapses to ONE row keeping the
-    earliest (doc, pos) holder (``min(first_key)``, the per-batch
-    monoid), so flagging against the compacted store is bit-identical
-    to flagging against the full batch history.  Also the VACUUM step
-    of deletion propagation: grams whose summed occurrence count nets
-    to zero are physically purged here.  Staged and published by one
-    rename, keeping the marker (replace_store)."""
-    rows = (
-        spark.read.parquet(path)
-        .groupBy(F.col("gb").cast("int").alias("gb"), "g")
-        .agg(F.min("first_key").alias("first_key"), F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") > 0)
-        .withColumn("batch", F.lit(0))
+    """Compact the gram store (:func:`_compact`)."""
+    _compact(spark, path, _GRAM_STORE)
+
+
+def _ensure_substring_store(
+    spark: SparkSession, sf_dir: str, h: int, *, deleted: bool = False
+) -> str:
+    """History gram store (first 60%), optionally with ``doc_id % 7 ==
+    3`` deleted through it as a negative occurrence slice."""
+    kind, tag = (
+        ("substring_store_deleted", f"sstr-v{_SSTR_STORE_FORMAT}-deleted") if deleted
+        else ("substring_store", f"sstr-v{_SSTR_STORE_FORMAT}")
     )
-    replace_store(path, lambda p: write_events(rows, p, partition_by=["gb", "batch"]))
-
-
-def _ensure_substring_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    return ensure_store(
-        store_path(sf_dir, "documents", "substring_store", f"sstr-v{_SSTR_STORE_FORMAT}"),
-        lambda p: upsert_substring_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        ),
+    return _ensure_count_store(
+        spark, sf_dir, store_path(sf_dir, "documents", kind, tag),
+        lambda d: _sstr_grams(d, _SSTR_K), _history_slices(h, deleted=deleted),
+        store=_GRAM_STORE,
     )
 
 
@@ -1302,40 +1312,8 @@ def delete_docs_from_substring_store(
     occurrence-count slice computed by gramming the deleted docs alone
     — no history scan, no store rewrite (the fingerprint-store delete
     shape at gram grain)."""
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
-        delete_pred
-    )
-    rows = (
-        _sstr_grams(docs, _SSTR_K)
-        .withColumn("gb", F.pmod(F.hash("g"), F.lit(_SSTR_BANDS)))
-        .groupBy("gb", "g")
-        .agg(
-            F.min("key").alias("first_key"),
-            (-F.count(F.lit(1))).cast("long").alias("cnt"),
-        )
-        .withColumn("batch", F.lit(int(batch)))
-    )
-    upsert_partitions(rows, path, partition_by=["gb", "batch"])
-    return path
-
-
-def _ensure_deleted_substring_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    """History gram store (first 60%) with ``doc_id % 7 == 3`` deleted
-    through it as a negative occurrence slice."""
-    def build(p: str) -> None:
-        upsert_substring_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        )
-        delete_docs_from_substring_store(
-            spark, sf_dir, p,
-            delete_pred=_delete_pred() & (F.col("doc_id") < h), batch=1,
-        )
-
-    return ensure_store(
-        store_path(
-            sf_dir, "documents", "substring_store_deleted", f"sstr-v{_SSTR_STORE_FORMAT}-deleted"
-        ),
-        build,
+    return upsert_substring_grams(
+        _sstr_grams(_docs(spark, sf_dir, delete_pred), _SSTR_K), path, batch=batch, sign=-1
     )
 
 
@@ -1351,7 +1329,7 @@ def substring_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     against forgotten content stops flagging, while grams still held by
     surviving docs keep flagging (occurrence counts net out exactly)."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_deleted_substring_store(spark, sf_dir, h)
+    path = _ensure_substring_store(spark, sf_dir, h, deleted=True)
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
         F.col("doc_id") >= h
     )
@@ -1752,8 +1730,7 @@ def minhash_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def substring_store_rewrite_frame(
-    spark: SparkSession, docs: DataFrame, path: str, *, max_batch: int | None = None,
-    k: int = _SSTR_K,
+    docs: DataFrame, path: str, *, max_batch: int | None = None, k: int = _SSTR_K
 ) -> DataFrame:
     """The ExactSubstr REWRITE at ingest time (Lee et al.'s output
     deployed against the crawl store): delete from each arriving doc the
@@ -1764,23 +1741,7 @@ def substring_store_rewrite_frame(
     after) plus the in-row indexed cut shared with the batch rewrite."""
     from columnflow_spark.queries.textdedup import _sstr_cut
 
-    bg = _sstr_grams(docs, k)
-    store = spark.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
-    bset = bg.select("g").distinct()
-    hits = (
-        store.join(F.broadcast(bset), "g", "leftsemi")
-        .groupBy("g")
-        .agg(F.sum("cnt").alias("_c"))
-        .filter(F.col("_c") > 0)
-        .select("g")
-        .withColumn("hit", F.lit(True))
-    )
-    wmin = F.min("key").over(W.partitionBy("g"))
-    marked = bg.join(hits, "g", "left").withColumn(
-        "cov", F.col("hit").isNotNull() | (F.col("key") > wmin)
-    )
+    marked = _mark_against_gram_store(_sstr_grams(docs, k), path, max_batch)
     dup = marked.filter("cov").select("doc_id", "p")
     win = W.partitionBy("doc_id").orderBy("p")
     spans = (
@@ -1856,9 +1817,7 @@ def substring_store_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
         F.col("doc_id") >= h
     )
-    return substring_store_rewrite_frame(spark, docs, path, max_batch=0).orderBy(
-        "doc_id"
-    )
+    return substring_store_rewrite_frame(docs, path, max_batch=0).orderBy("doc_id")
 
 
 # --- URL-grain incremental dedup store (round 9): the crawl frontier's
@@ -1871,18 +1830,27 @@ def substring_store_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # URLs, compaction purges).  With this, every dedup grain the engine
 # ships (exact text, fuzzy shingle, semantic, perceptual, substring,
 # URL) has the same store + delete + vacuum lifecycle. ---
-def _url_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
-    """``(doc_id, fingerprint, band)`` where fingerprint = normalized
-    synthetic URL (queries/textdedup.py's URL family)."""
+def url_fingerprints(docs: DataFrame) -> DataFrame:
+    """The URL grain: ``(doc_id, fingerprint)`` where fingerprint = the
+    normalized synthetic URL of a ``(doc_id, source, …)`` frame
+    (queries/textdedup.py's URL family)."""
     from columnflow_spark.queries.textdedup import normalize_url, synthetic_urls
 
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "source"])
-    if pred is not None:
-        docs = docs.filter(pred)
-    return (
-        synthetic_urls(docs)
-        .select("doc_id", normalize_url(F.col("url")).alias("fingerprint"))
-        .withColumn("band", F.pmod(F.hash("fingerprint"), F.lit(_N_BANDS)))
+    return synthetic_urls(docs).select(
+        "doc_id", normalize_url(F.col("url")).alias("fingerprint")
+    )
+
+
+def _ensure_grain_store(
+    spark: SparkSession, sf_dir: str, name: str, grain, *, deleted: bool
+) -> str:
+    """The ``name`` grain's history store (URL or segment): the first 60%
+    of doc_ids, optionally with ``doc_id % 7 == 3`` deleted through it."""
+    kind = f"{name}-deleted" if deleted else name
+    return _ensure_count_store(
+        spark, sf_dir,
+        store_path(sf_dir, "documents", f"dedup_store_{kind}", f"{kind}-v{_STORE_FORMAT}"),
+        grain, _history_slices(_history_cutoff(spark, sf_dir), deleted=deleted),
     )
 
 
@@ -1911,32 +1879,6 @@ def _url_store_oracle(hist_filter: str = "") -> str:
     """
 
 
-def _ensure_url_store(spark: SparkSession, sf_dir: str, h: int, *, deleted: bool) -> str:
-    def build(p: str) -> None:
-        upsert_fingerprints(
-            _url_fingerprints(spark, sf_dir, F.col("doc_id") < h), p, batch=0
-        )
-        if deleted:
-            rows = (
-                _url_fingerprints(
-                    spark, sf_dir, _delete_pred() & (F.col("doc_id") < h)
-                )
-                .groupBy("band", "fingerprint")
-                .agg(
-                    F.min("doc_id").alias("first_doc"),
-                    (-F.count(F.lit(1))).cast("long").alias("cnt"),
-                )
-                .withColumn("batch", F.lit(1))
-            )
-            upsert_partitions(rows, p, partition_by=["band", "batch"])
-
-    kind = "url-deleted" if deleted else "url"
-    return ensure_store(
-        store_path(sf_dir, "documents", f"dedup_store_{kind}", f"{kind}-v{_STORE_FORMAT}"),
-        build,
-    )
-
-
 @query("url_incremental_store", oracle=_url_store_oracle())
 def url_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental URL-grain dedup: flag the arriving batch's normalized
@@ -1944,9 +1886,9 @@ def url_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids) and within itself — the fingerprint-store contract applied
     at the URL grain."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_url_store(spark, sf_dir, h, deleted=False)
+    path = _ensure_grain_store(spark, sf_dir, "url", url_fingerprints, deleted=False)
     return flag_fingerprints_against_store(
-        _url_fingerprints(spark, sf_dir, F.col("doc_id") >= h), path, max_batch=None
+        url_fingerprints(_docs(spark, sf_dir, F.col("doc_id") >= h)), path
     )
 
 
@@ -1960,9 +1902,9 @@ def url_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     holder was forgotten stops flagging re-crawls; URLs still held by
     surviving docs keep flagging."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_url_store(spark, sf_dir, h, deleted=True)
+    path = _ensure_grain_store(spark, sf_dir, "url", url_fingerprints, deleted=True)
     return flag_fingerprints_against_store(
-        _url_fingerprints(spark, sf_dir, F.col("doc_id") >= h), path, max_batch=None
+        url_fingerprints(_docs(spark, sf_dir, F.col("doc_id") >= h)), path
     )
 
 
@@ -1975,20 +1917,17 @@ def url_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # algebra applies: forgetting a history doc decrements its segments'
 # holder counts, and a segment that drops below the threshold stops
 # being boilerplate for future batches. ---
-def _segment_fingerprints(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
-    """``(doc_id, fingerprint, band)`` — one row per DISTINCT (doc,
-    segment text): the count monoid must count holder DOCS, so in-doc
-    repeats of a segment are collapsed before the upsert."""
+def segment_fingerprints(docs: DataFrame) -> DataFrame:
+    """The segment grain: ``(doc_id, fingerprint)``, one row per DISTINCT
+    (doc, segment text) of a ``(doc_id, text, …)`` frame: the count
+    monoid must count holder DOCS, so in-doc repeats of a segment are
+    collapsed before the upsert."""
     from columnflow_spark.queries.textdedup import segment_docs
 
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    if pred is not None:
-        docs = docs.filter(pred)
     return (
         segment_docs(docs)
         .select("doc_id", F.col("seg_text").alias("fingerprint"))
         .distinct()
-        .withColumn("band", F.pmod(F.hash("fingerprint"), F.lit(_N_BANDS)))
     )
 
 
@@ -2036,34 +1975,6 @@ def _segment_store_oracle(hist_filter: str = "") -> str:
     """
 
 
-def _ensure_segment_store(
-    spark: SparkSession, sf_dir: str, h: int, *, deleted: bool
-) -> str:
-    def build(p: str) -> None:
-        upsert_fingerprints(
-            _segment_fingerprints(spark, sf_dir, F.col("doc_id") < h), p, batch=0
-        )
-        if deleted:
-            rows = (
-                _segment_fingerprints(
-                    spark, sf_dir, _delete_pred() & (F.col("doc_id") < h)
-                )
-                .groupBy("band", "fingerprint")
-                .agg(
-                    F.min("doc_id").alias("first_doc"),
-                    (-F.count(F.lit(1))).cast("long").alias("cnt"),
-                )
-                .withColumn("batch", F.lit(1))
-            )
-            upsert_partitions(rows, p, partition_by=["band", "batch"])
-
-    kind = "segment-deleted" if deleted else "segment"
-    return ensure_store(
-        store_path(sf_dir, "documents", f"dedup_store_{kind}", f"{kind}-v{_STORE_FORMAT}"),
-        build,
-    )
-
-
 def segment_store_serve(
     spark: SparkSession, sf_dir: str, path: str, *, max_batch: int | None = None
 ) -> DataFrame:
@@ -2088,29 +1999,14 @@ def segment_store_serve(
     )
     segs = segment_docs(spread(docs, "doc_id"))
     batch_cnt = (
-        segs.select("doc_id", "seg_text")
+        segs.select("doc_id", F.col("seg_text").alias("fingerprint"))
         .distinct()
-        .groupBy("seg_text")
+        .groupBy("fingerprint")
         .agg(F.count(F.lit(1)).cast("long").alias("bn"))
-        .withColumn("band", F.pmod(F.hash("seg_text"), F.lit(_N_BANDS)))
     )
-    store = spark.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
-    hist_cnt = (
-        store.groupBy(F.col("band").cast("int").alias("band"), "fingerprint")
-        .agg(F.sum("cnt").cast("long").alias("hn"))
-        .filter(F.col("hn") > 0)
-        .withColumnRenamed("fingerprint", "seg_text")
-    )
-    bulk = (
-        batch_cnt.join(hist_cnt, ["band", "seg_text"], "left")
-        .select(
-            "seg_text",
-            (
-                (F.coalesce(F.col("hn"), F.lit(0)) + F.col("bn")) >= _BP_MIN_DOCS
-            ).alias("bulk"),
-        )
+    bulk = _live_fingerprints(batch_cnt, path, max_batch).select(
+        F.col("fingerprint").alias("seg_text"),
+        ((F.coalesce(F.col("cnt"), F.lit(0)) + F.col("bn")) >= _BP_MIN_DOCS).alias("bulk"),
     )
     flagged = segs.join(bulk, "seg_text").withColumn("kept", ~F.col("bulk"))
     return bp_doc_rollup(flagged).orderBy("doc_id")
@@ -2122,8 +2018,7 @@ def segment_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last 40% of doc_ids) rewritten against the persisted segment-count
     store plus its own counts — hash-equal to the from-scratch removal
     pass restricted to the batch."""
-    h = _history_cutoff(spark, sf_dir)
-    path = _ensure_segment_store(spark, sf_dir, h, deleted=False)
+    path = _ensure_grain_store(spark, sf_dir, "segment", segment_fingerprints, deleted=False)
     return segment_store_serve(spark, sf_dir, path)
 
 
@@ -2137,6 +2032,5 @@ def segment_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative slice, so a segment below the threshold stops counting as
     boilerplate — hash-equal to from-scratch removal over the reduced
     corpus."""
-    h = _history_cutoff(spark, sf_dir)
-    path = _ensure_segment_store(spark, sf_dir, h, deleted=True)
+    path = _ensure_grain_store(spark, sf_dir, "segment", segment_fingerprints, deleted=True)
     return segment_store_serve(spark, sf_dir, path)

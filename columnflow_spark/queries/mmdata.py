@@ -334,31 +334,25 @@ def _pred_fingerprint(pred) -> str:
 def _probe_batch(spark: SparkSession, sf_dir: str, query_pred):
     """The one bounded collect a served read plans from: the query batch
     (``query_pred`` on vec_id; default the fixed ``vec_id % 100 == 7``
-    workload) plus the every-64th centroid rows, as ``(query ids, query
-    matrix, cell ids, centroid matrix)`` sorted by id, float32 as stored.
-    No ``spread``: a filter plus a collect needs no shuffle."""
+    workload) as ``(query ids, query matrix, cell ids, centroid
+    matrix)``, ids ascending, float32 as stored.  The cell side is the
+    ``ivf_coarse_centroids`` artifact cast back to float32 (its float64
+    widening is exact).  No ``spread``: a filter plus a collect needs no
+    shuffle."""
     import numpy as np  # noqa: PLC0415
 
     if query_pred is None:
         query_pred = F.col("vec_id") % 100 == 7
-    is_q = F.coalesce(query_pred, F.lit(False))
-    is_c = F.col("vec_id") % 64 == 0
+    cid, cmat = ivf_coarse_centroids(spark, sf_dir)
     rows = sorted(
         load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
-        .filter(is_q | is_c)
-        .select("vec_id", "embedding", is_q.alias("q"), is_c.alias("c"))
+        .filter(F.coalesce(query_pred, F.lit(False)))
         .collect(),
         key=lambda r: r.vec_id,
     )
-
-    dim = len(rows[0].embedding) if rows else 0
-
-    def side(flag: str):
-        sel = [r for r in rows if r[flag]]
-        ids = np.array([r.vec_id for r in sel], dtype=np.int64)
-        return ids, np.array([r.embedding for r in sel], dtype=np.float32).reshape(len(sel), dim)
-
-    return (*side("q"), *side("c"))
+    qid = np.array([r.vec_id for r in rows], dtype=np.int64)
+    q = np.array([r.embedding for r in rows], dtype=np.float32).reshape(len(rows), cmat.shape[1])
+    return qid, q, cid, cmat.astype(np.float32)
 
 
 def _route_np(qid, q, cid, c, n_probe: int) -> list[tuple[int, int]]:

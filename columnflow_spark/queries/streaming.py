@@ -1740,16 +1740,7 @@ def streaming_dedup_cdc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # slice 2b+1 — both idempotent per id, so a replayed batch
             # overwrites exactly its own two slices
             upsert_fingerprints(fp, store, batch=2 * b)
-            neg = (
-                fp.filter("del")
-                .groupBy("band", "fingerprint")
-                .agg(
-                    F.min("doc_id").alias("first_doc"),
-                    (-F.count(F.lit(1))).cast("long").alias("cnt"),
-                )
-                .withColumn("batch", F.lit(2 * b + 1))
-            )
-            upsert_partitions(neg, store, partition_by=["band", "batch"])
+            upsert_fingerprints(fp.filter("del"), store, batch=2 * b + 1, sign=-1)
 
         _drain(rp.stream.select("doc_id", "text"), sink)
         return (
@@ -1845,25 +1836,18 @@ from columnflow_spark.queries.dedupstore import _segment_store_oracle
 @query("streaming_segment_ingest", oracle=_segment_store_oracle())
 def streaming_segment_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnflow_spark.queries.dedupstore import (
-        _N_BANDS,
         _history_cutoff,
+        segment_fingerprints,
         segment_store_serve,
         upsert_fingerprints,
     )
-    from columnflow_spark.queries.textdedup import segment_docs
 
     h = _history_cutoff(spark, sf_dir)
     with replay_ingest(spark, sf_dir, "documents", "doc_id", "store") as rp:
         (store,) = rp.dirs
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            fp = (
-                segment_docs(batch_df)
-                .select("doc_id", F.col("seg_text").alias("fingerprint"))
-                .distinct()
-                .withColumn("band", F.pmod(F.hash("fingerprint"), F.lit(_N_BANDS)))
-            )
-            upsert_fingerprints(fp, store, batch=int(batch_id))
+            upsert_fingerprints(segment_fingerprints(batch_df), store, batch=int(batch_id))
 
         _drain(rp.stream.select("doc_id", "text").filter(F.col("doc_id") < h), sink)
         return segment_store_serve(spark, sf_dir, store).transform(checkpoint_df)

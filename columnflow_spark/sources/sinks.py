@@ -360,14 +360,17 @@ def read_sidecar(path: str, name: str, columns: list[str] | None = None):
 # postings, semantic vectors, the IVF+PQ index, graph-ANN pages, the
 # quantile sketch — queries/dedupstore.py, queries/annindex.py, ...):
 # rows carry their doc/vec id, so a deletion is a bounded id slice
-# ``_deleted/batch=<n>/`` (idempotent per batch id) anti-joined at serve
+# ``_deleted/batch=<n>/`` (idempotent per batch id) masked at serve
 # time.  Tombstone sets are compliance-batch sized, so they are
 # driver-side sidecars: a delete is ONE Spark job (the collect of the
-# caller's ids), and a read is a local relation broadcast into the
-# anti-join.  The periodic compaction rewrites the store minus
-# tombstones and clears them (logical delete -> physical purge, the
-# vacuum).  Content-grain stores (exact fingerprints, substring grams)
-# use negative count slices instead — see queries/dedupstore.py. ---
+# caller's ids).  A served IVF-PQ/OPQ read masks them on the driver
+# (``tombstoned_ids``; the candidates are collected there anyway), and
+# every other read broadcasts them as a local relation into the
+# anti-join (``anti_tombstones``).  The periodic compaction rewrites
+# the store minus tombstones and clears them (logical delete ->
+# physical purge, the vacuum).  Content-grain count stores (exact-text,
+# URL and segment fingerprints; substring grams) use negative count
+# slices instead — see queries/dedupstore.py. ---
 def upsert_tombstones(
     ids: DataFrame, path: str, *, batch: int, id_col: str = "doc_id"
 ) -> None:

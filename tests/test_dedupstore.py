@@ -3,9 +3,12 @@ upsert, staleness tag, layout, and the no-broadcast plan contract."""
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import io
 import os
+import pathlib
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -452,7 +455,7 @@ def test_delete_partial_holder_keeps_flagging(spark, tmp_path):
     deleting both must."""
     from columnflow_spark.queries.dedupstore import (
         doc_fingerprints,
-        delete_docs_from_dedup_store,
+        upsert_fingerprints,
     )
 
     path, _ = _mini_store(
@@ -467,25 +470,13 @@ def test_delete_partial_holder_keeps_flagging(spark, tmp_path):
             [(i, "shared text" if i in (1, 2) else "solo") for i in ids],
             "doc_id long, text string",
         )
-        rows = (
-            doc_fingerprints(docs)
-            .groupBy("band", "fingerprint")
-            .agg(
-                F.min("doc_id").alias("first_doc"),
-                (-F.count(F.lit(1))).cast("long").alias("cnt"),
-            )
-            .withColumn("batch", F.lit(batch))
-        )
-        from columnflow_spark.sources.sinks import upsert_partitions
-
-        upsert_partitions(rows, path, partition_by=["band", "batch"])
+        upsert_fingerprints(doc_fingerprints(docs), path, batch=batch, sign=-1)
 
     assert _flag(probe, path) == [(100, True), (101, True)]
     _del([1], 1)  # one holder gone, the other survives
     assert _flag(probe, path) == [(100, True), (101, True)]
     _del([2], 2)  # last holder gone -> fully forgotten
     assert _flag(probe, path) == [(100, False), (101, True)]
-    assert delete_docs_from_dedup_store is not None  # API surface exists
 
 
 def test_delete_is_idempotent_per_batch_id(spark, sf_dir, tmp_path, thirds):
@@ -521,21 +512,12 @@ def test_vacuum_purges_net_zero_rows_physically(spark, tmp_path):
     from columnflow_spark.queries.dedupstore import (
         compact_dedup_store,
         doc_fingerprints,
+        upsert_fingerprints,
     )
-    from columnflow_spark.sources.sinks import upsert_partitions
 
     path, _ = _mini_store(spark, tmp_path, "s", [(1, "gone"), (2, "stays")])
     ddocs = spark.createDataFrame([(1, "gone")], "doc_id long, text string")
-    neg = (
-        doc_fingerprints(ddocs)
-        .groupBy("band", "fingerprint")
-        .agg(
-            F.min("doc_id").alias("first_doc"),
-            (-F.count(F.lit(1))).cast("long").alias("cnt"),
-        )
-        .withColumn("batch", F.lit(1))
-    )
-    upsert_partitions(neg, path, partition_by=["band", "batch"])
+    upsert_fingerprints(doc_fingerprints(ddocs), path, batch=1, sign=-1)
     compact_dedup_store(spark, path)
     left = spark.read.parquet(path).select("fingerprint").collect()
     assert len(left) == 1  # only "stays" survives physically
@@ -693,7 +675,7 @@ def test_substring_store_vacuum_purges_and_stays_equal(spark, sf_dir, tmp_path):
         map(tuple, flag_substring_frame(_sstr_grams(docs, _SSTR_K), path).collect())
     )
     rew = lambda: sorted(  # noqa: E731
-        map(tuple, substring_store_rewrite_frame(spark, docs, path).collect())
+        map(tuple, substring_store_rewrite_frame(docs, path).collect())
     )
     f0, r0 = flag(), rew()
     n_before = spark.read.parquet(path).count()
@@ -715,28 +697,25 @@ def test_segment_store_batching_and_compaction_invariance(spark, sf_dir, tmp_pat
 
     from columnflow_spark.queries.dedupstore import (
         _history_cutoff,
-        _segment_fingerprints,
         compact_dedup_store,
+        segment_fingerprints,
         segment_store_serve,
         upsert_fingerprints,
     )
+    from columnflow_spark.sources import load_table
 
     h = _history_cutoff(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
+
+    def segs(pred):
+        return segment_fingerprints(docs.filter(pred))
 
     one = str(tmp_path / "one")
-    upsert_fingerprints(
-        _segment_fingerprints(spark, sf_dir, F.col("doc_id") < h), one, batch=0
-    )
+    upsert_fingerprints(segs(F.col("doc_id") < h), one, batch=0)
     two = str(tmp_path / "two")
+    upsert_fingerprints(segs(F.col("doc_id") < h // 2), two, batch=0)
     upsert_fingerprints(
-        _segment_fingerprints(spark, sf_dir, F.col("doc_id") < h // 2), two, batch=0
-    )
-    upsert_fingerprints(
-        _segment_fingerprints(
-            spark, sf_dir, (F.col("doc_id") >= h // 2) & (F.col("doc_id") < h)
-        ),
-        two,
-        batch=1,
+        segs((F.col("doc_id") >= h // 2) & (F.col("doc_id") < h)), two, batch=1
     )
 
     def rows(path):
@@ -762,16 +741,16 @@ def test_segment_serve_never_broadcasts_history(spark, sf_dir, tmp_path):
     hint-driven BroadcastExchange — at 100x either side OOMs a build."""
     from columnflow_spark.queries.dedupstore import (
         _history_cutoff,
-        _segment_fingerprints,
+        segment_fingerprints,
         segment_store_serve,
         upsert_fingerprints,
     )
+    from columnflow_spark.sources import load_table
 
     h = _history_cutoff(spark, sf_dir)
     path = str(tmp_path / "segstore")
-    upsert_fingerprints(
-        _segment_fingerprints(spark, sf_dir, F.col("doc_id") < h), path, batch=0
-    )
+    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
+    upsert_fingerprints(segment_fingerprints(docs.filter(F.col("doc_id") < h)), path, batch=0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -782,3 +761,31 @@ def test_segment_serve_never_broadcasts_history(spark, sf_dir, tmp_path):
         assert "BroadcastExchange" not in buf.getvalue().split("\n\n")[0]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+_PKG = pathlib.Path(__file__).resolve().parents[1] / "columnflow_spark"
+_NEG_COUNT = re.compile(r"-\s*F\.count\(")
+_STORE_BAND = re.compile(r"F\.pmod\(\s*F\.hash\([^()]*\)\s*,\s*F\.lit\(_\w*BANDS\)")
+
+
+def _matches(pattern: re.Pattern) -> list[str]:
+    return [
+        f"{path.relative_to(_PKG)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for path in sorted(_PKG.rglob("*.py"))
+        for text in [path.read_text()]
+        for m in pattern.finditer(text)
+    ]
+
+
+def test_count_store_format_has_one_owner():
+    """The content-grain count stores' row format is written in ONE
+    place: no hand-rolled negative ``F.count`` slice anywhere in the
+    package (a delete is the store writer with ``sign=-1``), and the
+    ``hash(key) % bands`` band expression only in ``dedupstore._band``,
+    which the writer and the fingerprint read share."""
+    assert not _matches(_NEG_COUNT), _matches(_NEG_COUNT)
+    tree = ast.parse((_PKG / "queries" / "dedupstore.py").read_text())
+    band = next(n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_band")
+    inside = {f"queries/dedupstore.py:{n}" for n in range(band.lineno, band.end_lineno + 1)}
+    found = _matches(_STORE_BAND)
+    assert len(found) == 1 and found[0] in inside, found

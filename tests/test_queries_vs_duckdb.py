@@ -38,7 +38,6 @@ _SLOW_ORACLES = {
     "streaming_cc_cdc",
     "streaming_cc_cdc_vacuum",
     "streaming_connected_components",
-    "streaming_dedup_cdc_ingest",
     "streaming_dedup_store_ingest",
     "streaming_graph_ann_cdc",
     "streaming_graph_ann_cdc_vacuum",
