@@ -4,8 +4,9 @@
 PQ codes every session; at 100 TB the index IS the expensive artifact —
 the corpus scan, assignment and encoding happen once, and every later
 query batch should touch only the probed cells' files.  This module
-closes that gap with the engine's own partitioned store
-(sources/sinks.py: ``upsert_partitions``):
+closes that gap with the engine's own batch-sliced store
+(sources/sinks.py: ``SlicedStore``, declared once as ``_INDEX`` and
+shared with the OPQ index):
 
 - **layout** ``cid=<cell>/batch=<n>/part-*.parquet`` rows
   ``(vec_id, codes)``.  ``cid`` is the probe/prune axis (planning-time
@@ -25,9 +26,9 @@ closes that gap with the engine's own partitioned store
   upsert is two Spark jobs.
 - **deletes** are ``_deleted/batch=<n>`` tombstone slices, a bounded
   driver-side sidecar (sources/sinks.py:write_sidecar): a delete is ONE
-  Spark job, the collect of the caller's ids, and a read broadcasts the
-  ids as a local relation into a left-anti join after the prune.  The
-  OPQ ``_rotation``/``_codebook`` are sidecars of the same pair.
+  Spark job, the collect of the caller's ids; a served read masks them
+  on the driver, the purge rewrites the index without them.  The OPQ
+  ``_rotation``/``_codebook`` are sidecars of the same pair.
 - **search** is scatter-gather.  The driver plans the read
   (queries/mmdata.py:ivfpq_probe_plan): one bounded collect of the query
   batch and the centroid rows gives the probe route and the quantized
@@ -48,6 +49,8 @@ tasks) re-expressed as a Spark partitioned table.
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,18 +73,12 @@ from columnflow_spark.queries.mmdata import (
 from columnflow_spark.functions.similarity import assign_to_centroids
 from columnflow_spark.sources import load_table
 from columnflow_spark.sources.sinks import (
-    anti_tombstones,
-    clear_tombstones,
+    SlicedStore,
     ensure_store,
     local_frame,
-    mark_built,
     read_sidecar,
-    replace_store,
     store_path,
     tombstoned_ids,
-    upsert_partitions,
-    upsert_tombstones,
-    write_events,
     write_sidecar,
 )
 from columnflow_spark.sources import spread
@@ -90,6 +87,11 @@ from columnflow_spark.sources import spread
 #: bump when the trained-codebook/encoding math changes: persisted codes
 #: from an older encoder must not be reused
 _INDEX_FORMAT = 2
+#: the index rows, shared by the IVF-PQ and OPQ indexes: ``cid`` is the
+#: probe axis, ``batch`` the upsert unit, ``vec_id`` the tombstone id
+_INDEX = SlicedStore(
+    "codes string, vec_id long, cid int, batch int", "cid", "vec_id", _INDEX_FORMAT
+)
 
 
 def ivfpq_index_path(sf_dir: str) -> str:
@@ -108,14 +110,9 @@ def upsert_index_frame(
     and the write: no centroid collect."""
     encode = pq_encode_udf(spark, sf_dir)
     idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
-        "vec_id",
-        encode("embedding").alias("codes"),
-        "cid",
-        F.lit(int(batch)).alias("batch"),
+        "vec_id", encode("embedding").alias("codes"), "cid"
     )
-    upsert_partitions(idx, path, partition_by=["cid", "batch"])
-    mark_built(path, _INDEX_FORMAT)
-    return path
+    return _INDEX.append(idx, path, batch=batch)
 
 
 def build_ivfpq_index(
@@ -149,21 +146,11 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
     are dropped from the rewrite and the tombstones cleared — a crash
     between publish and clear is harmless (surviving tombstones anti-join
     already-purged rows).  Staged and published by one rename, keeping
-    the marker (sources/sinks.py:replace_store)."""
-    rows = anti_tombstones(spark.read.parquet(path), path, id_col="vec_id")
+    the marker (``SlicedStore.purge``)."""
     win = W.partitionBy("vec_id").orderBy(F.desc("batch"))
-    rows = (
-        rows.withColumn("_rn", F.row_number().over(win))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "vec_id",
-            "codes",
-            F.col("cid").cast("long").alias("cid"),
-            F.lit(0).alias("batch"),
-        )
-    )
-    replace_store(path, lambda p: write_events(rows, p, partition_by=["cid", "batch"]))
-    clear_tombstones(path)
+    _INDEX.purge(spark, path, fold=lambda rows: (
+        rows.withColumn("_rn", F.row_number().over(win)).filter(F.col("_rn") == 1)
+    ))
 
 
 def delete_vectors_from_index(
@@ -172,8 +159,7 @@ def delete_vectors_from_index(
     """Propagate a vector deletion into the persisted index: one bounded
     ``_deleted/batch=<n>`` tombstone slice (idempotent per batch id);
     probe reads anti-join it, compaction purges it physically."""
-    upsert_tombstones(ids, path, batch=batch, id_col="vec_id")
-    return path
+    return _INDEX.delete(ids, path, batch=batch)
 
 
 def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
@@ -182,9 +168,6 @@ def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-#: the index store's rows: ``cid``/``batch`` are its hive partition
-#: columns.  Reading with it plans no schema-inference job.
-_INDEX_SCHEMA = "codes string, vec_id long, cid int, batch int"
 #: a served read's result
 TOPK_SCHEMA = "query_id long, neighbor_id long, adc_dist long, rk int"
 
@@ -194,9 +177,8 @@ def _candidate_scan(spark: SparkSession, path: str, cids: list[int]) -> DataFram
     The ``cid IN`` list lands in the scan's PartitionFilters, so only
     those cells' files are listed and read.  Tombstoned vectors are
     still in it; :func:`_probed_adc_topk` masks them on the driver."""
-    return (
-        spark.read.schema(_INDEX_SCHEMA).parquet(path).filter(F.col("cid").isin(cids))
-        .select("vec_id", "cid", "batch", F.split("codes", "-").cast("array<int>").alias("codes"))
+    return _INDEX.scan(spark, path).filter(F.col("cid").isin(cids)).select(
+        "vec_id", "cid", "batch", F.split("codes", "-").cast("array<int>").alias("codes")
     )
 
 
@@ -376,11 +358,10 @@ def index_drift_audit_frame(spark: SparkSession, sf_dir: str, path: str) -> Data
     (K x M rows); both aggregation levels are map-side combinable."""
     from columnflow_spark.queries.mmdata import _PQ_DIM, _PQ_GRID, pq_trained_codebook
 
-    idx = spark.read.parquet(path)
-    ex = idx.select(
+    ex = _INDEX.scan(spark, path).select(
         "vec_id",
-        F.col("cid").cast("long").alias("cid"),
-        F.col("batch").cast("int").alias("batch"),
+        "cid",
+        "batch",
         F.posexplode(F.split("codes", "-").cast("array<int>")).alias("sub", "code"),
     )
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
@@ -614,6 +595,7 @@ def ann_index_delete_vacuum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in-session-math equality and tombstone-delete behavior are pinned in
 # tests/test_ann_index.py. ---
 _OPQ_INDEX_FORMAT = 1
+_OPQ_INDEX = replace(_INDEX, fmt=_OPQ_INDEX_FORMAT)
 
 
 def build_opq_index(
@@ -643,13 +625,9 @@ def build_opq_index(
     rows = emb.filter(batch_pred) if batch_pred is not None else emb
     encode = opq_encode_udf(spark, sf_dir)
     idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
-        "vec_id",
-        encode("embedding").alias("codes"),
-        "cid",
-        F.lit(int(batch)).alias("batch"),
+        "vec_id", encode("embedding").alias("codes"), "cid"
     )
-    upsert_partitions(idx, path, partition_by=["cid", "batch"])
-    return path
+    return _OPQ_INDEX.append(idx, path, batch=batch)
 
 
 def load_opq_artifacts(path: str):

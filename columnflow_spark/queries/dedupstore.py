@@ -55,18 +55,12 @@ from columnflow_spark.functions.text import fingerprint
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import (
-    anti_tombstones,
-    clear_tombstones,
+    SlicedStore,
     ensure_store,
     is_built,
     local_frame,
-    mark_built,
     read_sidecar,
-    replace_store,
     store_path,
-    upsert_partitions,
-    upsert_tombstones,
-    write_events,
     write_sidecar,
 )
 
@@ -83,24 +77,37 @@ _N_BANDS = 16
 # fingerprints; substring grams) share ONE row format, owned by the
 # functions below: signed ``cnt`` slices under ``<band>=<b>/batch=<n>``,
 # summed when read and when compacted (the reference's partial-table
-# merge, MergeSelectionStats/MergeHistograms).  A grain only says what a
-# fingerprint is: it maps a documents frame to ``(doc_id, fingerprint)``
-# (the gram grain to ``(doc_id, p, key, g)``). ---
+# merge, MergeSelectionStats/MergeHistograms).  Each carries its
+# ``sinks.SlicedStore`` (read schema, slice writer, purge), which has no
+# tombstones: a count store deletes by negative slices.  A grain only
+# says what a fingerprint is: it maps a documents frame to ``(doc_id,
+# fingerprint)`` (the gram grain to ``(doc_id, p, key, g)``). ---
 @dataclass(frozen=True)
 class _CountStore:
     """A count store's row format: ``<band>=<b>/batch=<n>`` slices of
     ``(<key>, <first>, cnt)``, one row per distinct key per slice, where
-    ``<first>`` is the least ``<holder>`` of the key in the slice."""
+    ``<first>`` is the least ``<holder>`` of the key in the slice; the
+    band is ``rows.axis``."""
 
-    band: str
+    rows: SlicedStore
     key: str
     holder: str
     first: str
-    fmt: int
 
 
-_FP_STORE = _CountStore("band", "fingerprint", "doc_id", "first_doc", _STORE_FORMAT)
-_GRAM_STORE = _CountStore("gb", "g", "key", "first_key", _SSTR_STORE_FORMAT)
+_FP_STORE = _CountStore(
+    SlicedStore(
+        "fingerprint string, first_doc long, cnt long, band int, batch int",
+        "band", None, _STORE_FORMAT,
+    ),
+    "fingerprint", "doc_id", "first_doc",
+)
+_GRAM_STORE = _CountStore(
+    SlicedStore(
+        "g string, first_key long, cnt long, gb int, batch int", "gb", None, _SSTR_STORE_FORMAT
+    ),
+    "g", "key", "first_key",
+)
 
 
 def _band(key: str):
@@ -121,24 +128,16 @@ def _write_counts(
     deleted docs alone and presence is ``sum(cnt) > 0``: exact integers,
     inverse-closed, order-free (the bm25 collection-stats recipe).
     Idempotent per batch id: re-running a batch replaces its own slice."""
+    band = store.rows.axis
     out = (
-        rows.withColumn(store.band, _band(store.key))
-        .groupBy(store.band, store.key)
+        rows.withColumn(band, _band(store.key))
+        .groupBy(band, store.key)
         .agg(
             F.min(store.holder).alias(store.first),
             (F.count(F.lit(1)) * sign).cast("long").alias("cnt"),
         )
-        .withColumn("batch", F.lit(int(batch)))
     )
-    upsert_partitions(out, path, partition_by=[store.band, "batch"])
-    mark_built(path, store.fmt)
-    return path
-
-
-def _slices(spark: SparkSession, path: str, max_batch: int | None) -> DataFrame:
-    """The store's slices, only ``batch <= max_batch`` when given."""
-    store = spark.read.parquet(path)
-    return store if max_batch is None else store.filter(F.col("batch") <= max_batch)
+    return store.rows.append(out, path, batch=batch)
 
 
 def _net(rows: DataFrame, keys: list, *aggs) -> DataFrame:
@@ -164,13 +163,10 @@ def _compact(spark: SparkSession, path: str, store: _CountStore) -> None:
     ``<first>`` is the earliest RECORDED holder (a deleted doc can be
     named until its content fully vacuums): informational only, never a
     read input.  Staged and published by one rename, keeping the marker
-    (sources/sinks.py:replace_store)."""
-    rows = _net(
-        spark.read.parquet(path),
-        [F.col(store.band).cast("int").alias(store.band), store.key],
-        F.min(store.first).alias(store.first),
-    ).withColumn("batch", F.lit(0))
-    replace_store(path, lambda p: write_events(rows, p, partition_by=[store.band, "batch"]))
+    (``SlicedStore.purge``)."""
+    store.rows.purge(spark, path, fold=lambda rows: _net(
+        rows, [store.rows.axis, store.key], F.min(store.first).alias(store.first)
+    ))
 
 
 def _docs(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
@@ -197,6 +193,30 @@ def _ensure_count_store(
     return ensure_store(path, build)
 
 
+def _ensure_doc_store(
+    spark: SparkSession, sf_dir: str, table: str, kind: str, prefix: str,
+    store: SlicedStore, ingest, h: int, *, deleted: str = "",
+) -> str:
+    """Build-once doc-grain history store: ``ingest(p, pred)`` writes the
+    ``table`` rows whose ``store.id_col`` is below ``h`` into ``p``.  A
+    ``deleted`` variant, stored under ``<kind>_<deleted>``, then
+    tombstones the ids ``% 7 == 3`` among them as batch 0, and the
+    ``"vacuumed"`` one purges them."""
+    ids = F.col(store.id_col)
+
+    def build(p: str) -> None:
+        ingest(p, ids < h)
+        if deleted:
+            gone = load_table(spark, sf_dir, table, columns=[store.id_col])
+            store.delete(gone.filter(_delete_pred(store.id_col) & (ids < h)), p, batch=0)
+        if deleted == "vacuumed":
+            store.purge(spark, p)
+
+    if deleted:
+        kind, prefix = f"{kind}_{deleted}", f"{prefix}-{deleted}"
+    return ensure_store(store_path(sf_dir, table, kind, prefix), build)
+
+
 def _history_slices(h: int, *, deleted: bool = False) -> list:
     """The history stores' slices: the first 60% of doc_ids as slice 0
     and, when ``deleted``, the ``doc_id % 7 == 3`` among them deleted
@@ -214,8 +234,8 @@ def _live_fingerprints(probe: DataFrame, path: str, max_batch: int | None) -> Da
     deliberately un-hinted (shuffle join; see the negative broadcast
     guardrail in tests/test_plan_quality.py)."""
     live = _net(
-        _slices(probe.sparkSession, path, max_batch),
-        [F.col("band").cast("int").alias("band"), "fingerprint"],
+        _FP_STORE.rows.scan(probe.sparkSession, path, max_batch=max_batch),
+        ["band", "fingerprint"],
     )
     return probe.withColumn("band", _band("fingerprint")).join(
         live, ["band", "fingerprint"], "left"
@@ -381,11 +401,12 @@ def dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   exact-integer monoid with inverses; the next compaction physically
 #   purges net-zero rows (delete+vacuum).
 # - **doc-grain stores** (phash block postings, semantic vectors,
-#   MinHash band postings; the IVF+PQ and graph-ANN indexes in
-#   annindex.py/anngraph.py): rows carry their doc id, so the delete is
-#   a bounded tombstone slice under ``_deleted/`` (sources/sinks.py)
-#   masked at serve time; compaction rewrites the store minus
-#   tombstones and clears them.
+#   MinHash band postings; the IVF+PQ index in annindex.py): rows carry
+#   their doc id, so the delete is the store's ``SlicedStore.delete``, a
+#   bounded tombstone slice under ``_deleted/`` (sources/sinks.py)
+#   masked at serve time by ``live``; ``purge`` rewrites the store minus
+#   tombstones and clears them.  Their history stores (plain, deleted
+#   and vacuumed) have one builder, ``_ensure_doc_store``.
 #
 # Every delete is idempotent per batch id (re-running a delete batch
 # overwrites exactly its own slice), and each variant registers under an
@@ -394,8 +415,8 @@ def dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DEL_PRED_SQL = "doc_id % 7 = 3"
 
 
-def _delete_pred():
-    return F.col("doc_id") % 7 == 3
+def _delete_pred(id_col: str = "doc_id"):
+    return F.col(id_col) % 7 == 3
 
 
 def delete_docs_from_dedup_store(
@@ -471,6 +492,9 @@ def dedup_store_delete_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # precede batch ids), so the store holds every history vector, kept or
 # dropped — dropped vectors still block later near-copies. ---
 _SEM_STORE_FORMAT = 1
+_SEM_STORE = SlicedStore(
+    "vec_id long, embedding array<float>, cid int, batch int", "cid", "vec_id", _SEM_STORE_FORMAT
+)
 _SEM_TAU = 0.4
 _SEM_SALT = 16
 
@@ -525,12 +549,8 @@ def upsert_semdedup_frame(vecs: DataFrame, path: str, *, batch: int) -> str:
     """Assign a ``(vec_id, embedding)`` frame to the frozen centroids
     (map-side numpy argmax — zero shuffle) and upsert its vectors under
     ``cid=/batch=``."""
-    rows = _sem_assign(vecs, path).select(
-        "vec_id", "embedding", "cid", F.lit(int(batch)).alias("batch")
-    )
-    upsert_partitions(rows, path, partition_by=["cid", "batch"])
-    mark_built(path, _SEM_STORE_FORMAT)
-    return path
+    rows = _sem_assign(vecs, path).select("vec_id", "embedding", "cid")
+    return _SEM_STORE.append(rows, path, batch=batch)
 
 
 def upsert_semdedup_batch(
@@ -590,17 +610,13 @@ def flag_semdedup_frame(
             )
             .withColumn("keep", ~F.col("dup_in_batch"))
         )
-    store = spark.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
     # deletion propagation: tombstoned vectors stop blocking near-copies
     # at serve time (broadcast anti-join; purged at compaction).  The
     # FROZEN centroids are untouched by deletes — they are quantizer
     # geometry, not served content (the FAISS delete contract); a regime
     # that also forbids retaining seed vectors re-trains via the drift/
     # invalidate path.
-    store = anti_tombstones(store, path, id_col="vec_id")
-    store = store.select(
+    store = _SEM_STORE.live(spark, path, max_batch=max_batch).select(
         F.col("cid").cast("long").alias("cid"),
         F.col("vec_id").alias("hist_id"),
         F.col("embedding").alias("he"),
@@ -650,19 +666,18 @@ def _sem_history_cutoff(spark: SparkSession, sf_dir: str) -> int:
     return 3 * _table_rows(spark, sf_dir, "embeddings", "vec_id") // 5
 
 
-def _ensure_semdedup_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    def build(p: str) -> None:
-        init_semdedup_store(
-            spark, sf_dir, p,
-            seed_pred=(F.col("vec_id") % 64 == 0) & (F.col("vec_id") < h),
-        )
-        upsert_semdedup_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("vec_id") < h
-        )
+def _ensure_semdedup_store(
+    spark: SparkSession, sf_dir: str, h: int, deleted: str = ""
+) -> str:
+    """The history vectors (first ``h`` vec_ids) against centroids seeded
+    from their every 64th; ``deleted`` as in :func:`_ensure_doc_store`."""
+    def ingest(p: str, pred) -> None:
+        init_semdedup_store(spark, sf_dir, p, seed_pred=(F.col("vec_id") % 64 == 0) & pred)
+        upsert_semdedup_batch(spark, sf_dir, p, batch=0, batch_pred=pred)
 
-    return ensure_store(
-        store_path(sf_dir, "embeddings", "semdedup_store", f"semdedup-v{_SEM_STORE_FORMAT}"),
-        build,
+    return _ensure_doc_store(
+        spark, sf_dir, "embeddings", "semdedup_store", f"semdedup-v{_SEM_STORE_FORMAT}",
+        _SEM_STORE, ingest, h, deleted=deleted,
     )
 
 
@@ -754,15 +769,13 @@ def semdedup_drift_audit_frame(spark: SparkSession, path: str) -> DataFrame:
     (K rows by construction)."""
     from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
 
-    store = spark.read.parquet(path)
+    store = _SEM_STORE.scan(spark, path)
     t = _sem_centroids(path)
     cents = local_frame(spark, t, from_arrow_schema(t.schema))
     eq = F.round(
         (F.lit(1.0) - cosine(F.col("embedding"), F.col("ce"))) * F.lit(1e6), 0
     ).cast("long")
-    rows = store.join(F.broadcast(cents), "cid").select(
-        F.col("batch").cast("int").alias("batch"), "cid", eq.alias("eq")
-    )
+    rows = store.join(F.broadcast(cents), "cid").select("batch", "cid", eq.alias("eq"))
     cell = rows.groupBy("batch", "cid").agg(
         F.count(F.lit(1)).alias("n"), F.sum("eq").alias("eq")
     )
@@ -889,6 +902,9 @@ from columnflow_spark.queries.textdedup import (  # noqa: E402
 )
 
 _PH_STORE_FORMAT = 1
+_PH_STORE = SlicedStore(
+    "bv long, ph long, doc_id long, bi int, batch int", "bi", "doc_id", _PH_STORE_FORMAT
+)
 
 
 def phash_fp_frame(docs: DataFrame) -> DataFrame:
@@ -938,16 +954,8 @@ def upsert_phash_fp(ph: DataFrame, path: str, *, batch: int) -> str:
     the store's ``batch=<n>`` slice (one row per (fingerprint, block))."""
     rows = ph.select(
         "doc_id", "ph", F.explode(_ph_blocks(F.col("ph"))).alias("blk")
-    ).select(
-        F.col("blk.bi").alias("bi"),
-        F.col("blk.bv").alias("bv"),
-        "ph",
-        "doc_id",
-        F.lit(int(batch)).alias("batch"),
-    )
-    upsert_partitions(rows, path, partition_by=["bi", "batch"])
-    mark_built(path, _PH_STORE_FORMAT)
-    return path
+    ).select(F.col("blk.bi").alias("bi"), F.col("blk.bv").alias("bv"), "ph", "doc_id")
+    return _PH_STORE.append(rows, path, batch=batch)
 
 
 def upsert_phash_batch(
@@ -971,15 +979,10 @@ def flag_phash_fp(
     the within-batch check is the blocked exact pair join
     (phash_neardup_pairs).  Both sides are fingerprint-grain and never
     broadcast by hint."""
-    spark = ph.sparkSession
-    store = spark.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
     # deletion propagation: tombstoned docs' postings stop matching at
     # serve time (broadcast anti-join; physically purged at compaction)
-    store = anti_tombstones(store, path)
-    store = store.select(
-        F.col("bi").cast("int").alias("bi"), "bv", F.col("ph").alias("ph_h")
+    store = _PH_STORE.live(ph.sparkSession, path, max_batch=max_batch).select(
+        "bi", "bv", F.col("ph").alias("ph_h")
     )
     bposts = ph.select(
         "doc_id", "ph", F.explode(_ph_blocks(F.col("ph"))).alias("blk")
@@ -1021,12 +1024,13 @@ def flag_phash_batch_against_store(
     return flag_phash_fp(ph, path, max_batch=max_batch)
 
 
-def _ensure_phash_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    return ensure_store(
-        store_path(sf_dir, "documents", "phash_store", f"phash-v{_PH_STORE_FORMAT}"),
-        lambda p: upsert_phash_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        ),
+def _ensure_phash_store(spark: SparkSession, sf_dir: str, h: int, deleted: str = "") -> str:
+    """The history block postings (first ``h`` doc_ids); ``deleted`` as
+    in :func:`_ensure_doc_store`."""
+    return _ensure_doc_store(
+        spark, sf_dir, "documents", "phash_store", f"phash-v{_PH_STORE_FORMAT}", _PH_STORE,
+        lambda p, pred: upsert_phash_batch(spark, sf_dir, p, batch=0, batch_pred=pred),
+        h, deleted=deleted,
     )
 
 
@@ -1123,7 +1127,8 @@ def _mark_against_gram_store(bg: DataFrame, path: str, max_batch: int | None) ->
     by the batch's gram volume."""
     bset = bg.select("g").distinct()
     hits = _net(
-        _slices(bg.sparkSession, path, max_batch).join(F.broadcast(bset), "g", "leftsemi"),
+        _GRAM_STORE.rows.scan(bg.sparkSession, path, max_batch=max_batch)
+        .join(F.broadcast(bset), "g", "leftsemi"),
         ["g"],
     ).select("g", F.lit(True).alias("hit"))
     wmin = F.min("key").over(W.partitionBy("g"))
@@ -1337,44 +1342,12 @@ def substring_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- doc-grain store deletes: perceptual and semantic (VERDICT r8
-# next #1).  Both reuse the tombstone helpers above; the queries prove
+# next #1).  Both go through their store's tombstone verbs; the queries prove
 # the served decision equals from-scratch flagging over the REDUCED
 # history. ---
 def purge_phash_store(spark: SparkSession, path: str) -> None:
-    """Physical purge: rewrite the block-posting store minus tombstones
-    (staged, published by one rename, marker kept — replace_store) and
-    clear the tombstone slices.  A crash between publish and clear is
-    harmless: the surviving tombstones anti-join against already-purged
-    rows."""
-    rows = anti_tombstones(spark.read.parquet(path), path).select(
-        F.col("bi").cast("int").alias("bi"), "bv", "ph", "doc_id",
-        F.lit(0).alias("batch"),
-    )
-    replace_store(path, lambda p: write_events(rows, p, partition_by=["bi", "batch"]))
-    clear_tombstones(path)
-
-
-def _ensure_deleted_phash_store(
-    spark: SparkSession, sf_dir: str, h: int, *, vacuum: bool
-) -> str:
-    def build(p: str) -> None:
-        upsert_phash_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        )
-        deleted = load_table(spark, sf_dir, "documents", columns=["doc_id"]).filter(
-            _delete_pred() & (F.col("doc_id") < h)
-        )
-        upsert_tombstones(deleted, p, batch=0)
-        if vacuum:
-            purge_phash_store(spark, p)
-
-    kind = "vacuumed" if vacuum else "deleted"
-    return ensure_store(
-        store_path(
-            sf_dir, "documents", f"phash_store_{kind}", f"phash-v{_PH_STORE_FORMAT}-{kind}"
-        ),
-        build,
-    )
+    """Physical purge of the block-posting store (``SlicedStore.purge``)."""
+    _PH_STORE.purge(spark, path)
 
 
 @query(
@@ -1387,7 +1360,7 @@ def phash_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch flagged against the reduced store.  Oracle = exhaustive
     replay over the surviving history."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_deleted_phash_store(spark, sf_dir, h, vacuum=False)
+    path = _ensure_phash_store(spark, sf_dir, h, "deleted")
     return flag_phash_batch_against_store(
         spark, sf_dir, path, batch_pred=F.col("doc_id") >= h, max_batch=None
     )
@@ -1402,50 +1375,16 @@ def phash_store_delete_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones, tombstones cleared).  Shares ``phash_store_delete``'s
     oracle — hash equality proves logical delete ≡ physical purge."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_deleted_phash_store(spark, sf_dir, h, vacuum=True)
+    path = _ensure_phash_store(spark, sf_dir, h, "vacuumed")
     return flag_phash_batch_against_store(
         spark, sf_dir, path, batch_pred=F.col("doc_id") >= h, max_batch=None
     )
 
 
 def purge_semdedup_store(spark: SparkSession, path: str) -> None:
-    """Physical purge of the semantic store (see
-    :func:`purge_phash_store`); the ``_centroids`` sidecar rides through
-    the rewrite untouched (replace_store copies underscore entries into
-    its staging dir)."""
-    rows = anti_tombstones(
-        spark.read.parquet(path), path, id_col="vec_id"
-    ).select(
-        "vec_id", "embedding",
-        F.col("cid").cast("long").alias("cid"), F.lit(0).alias("batch"),
-    )
-    replace_store(path, lambda p: write_events(rows, p, partition_by=["cid", "batch"]))
-    clear_tombstones(path)
-
-
-def _ensure_deleted_sem_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    def build(p: str) -> None:
-        init_semdedup_store(
-            spark, sf_dir, p,
-            seed_pred=(F.col("vec_id") % 64 == 0) & (F.col("vec_id") < h),
-        )
-        upsert_semdedup_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("vec_id") < h
-        )
-        deleted = load_table(spark, sf_dir, "embeddings", columns=["vec_id"]).filter(
-            (F.col("vec_id") % 7 == 3) & (F.col("vec_id") < h)
-        )
-        upsert_tombstones(deleted, p, batch=0, id_col="vec_id")
-
-    return ensure_store(
-        store_path(
-            sf_dir,
-            "embeddings",
-            "semdedup_store_deleted",
-            f"semdedup-v{_SEM_STORE_FORMAT}-deleted",
-        ),
-        build,
-    )
+    """Physical purge of the semantic store (``SlicedStore.purge``); the
+    ``_centroids`` sidecar rides through the rewrite untouched."""
+    _SEM_STORE.purge(spark, path)
 
 
 @query(
@@ -1502,7 +1441,7 @@ def semdedup_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete contract; the drift audit + invalidate path owns retraining),
     which the oracle replays by seeding from the full history prefix."""
     h = _sem_history_cutoff(spark, sf_dir)
-    path = _ensure_deleted_sem_store(spark, sf_dir, h)
+    path = _ensure_semdedup_store(spark, sf_dir, h, "deleted")
     return flag_semdedup_batch(
         spark, sf_dir, path, batch_pred=F.col("vec_id") >= h
     )
@@ -1537,6 +1476,12 @@ from columnflow_spark.functions.similarity import (  # noqa: E402
 )
 
 _MH_STORE_FORMAT = 1
+_MH_POSTINGS = SlicedStore(
+    "doc_id long, bk long, bi int, batch int", "bi", "doc_id", _MH_STORE_FORMAT
+)
+#: the payloads: a sub-store at ``<store>/_docs``, masked by the
+#: postings' tombstones and marked with them
+_MH_DOCS = SlicedStore("doc_id long, hs array<long>, sz int, batch int", None, None, None)
 _MH_BANDS, _MH_ROWS = 16, 2
 _MH_SALT = 16
 
@@ -1557,18 +1502,10 @@ def upsert_minhash_batch(
 ) -> str:
     """Persist one ingest batch's band postings + shingle payloads (both
     map-side projections over the session signature/shingle tables)."""
+    docs = hashed_grams(spark, sf_dir).filter(batch_pred).select("doc_id", "hs", "sz")
+    _MH_DOCS.append(docs, os.path.join(path, "_docs"), batch=batch)
     sigs = minhash_sigs(spark, sf_dir).filter(batch_pred)
-    posts = _mh_banded(sigs).withColumn("batch", F.lit(int(batch)))
-    upsert_partitions(posts, path, partition_by=["bi", "batch"])
-    docs = (
-        hashed_grams(spark, sf_dir)
-        .filter(batch_pred)
-        .select("doc_id", "hs", "sz")
-        .withColumn("batch", F.lit(int(batch)))
-    )
-    upsert_partitions(docs, os.path.join(path, "_docs"), partition_by=["batch"])
-    mark_built(path, _MH_STORE_FORMAT)
-    return path
+    return _MH_POSTINGS.append(_mh_banded(sigs), path, batch=batch)
 
 
 def delete_docs_from_minhash_store(
@@ -1577,8 +1514,7 @@ def delete_docs_from_minhash_store(
     """Tombstone a deleted-id set (shared slice for postings AND
     payloads — both anti-join it at serve time; a purging compaction
     would rewrite both minus tombstones)."""
-    upsert_tombstones(ids, path, batch=batch)
-    return path
+    return _MH_POSTINGS.delete(ids, path, batch=batch)
 
 
 def flag_minhash_batch(
@@ -1592,12 +1528,8 @@ def flag_minhash_batch(
     sigs = minhash_sigs(spark, sf_dir).filter(batch_pred)
     gb = hashed_grams(spark, sf_dir).filter(batch_pred).select("doc_id", "hs", "sz")
     banded_b = _mh_banded(sigs)
-    store = spark.read.parquet(path)
-    if max_batch is not None:
-        store = store.filter(F.col("batch") <= max_batch)
-    store = anti_tombstones(store, path)
-    posts = store.select(
-        F.col("bi").cast("int").alias("bi"), "bk", F.col("doc_id").alias("hist_id")
+    posts = _MH_POSTINGS.live(spark, path, max_batch=max_batch).select(
+        "bi", "bk", F.col("doc_id").alias("hist_id")
     )
     cand = (
         salted_join(
@@ -1610,8 +1542,8 @@ def flag_minhash_batch(
         .select(F.col("hist_id").alias("d1"), F.col("doc_id").alias("d2"))
         .dropDuplicates(["d1", "d2"])
     )
-    hist_docs = anti_tombstones(
-        spark.read.parquet(os.path.join(path, "_docs")), path
+    hist_docs = _MH_POSTINGS.mask(
+        _MH_DOCS.scan(spark, os.path.join(path, "_docs")), path
     ).select("doc_id", "hs", "sz")
     prior = (
         _verify_pairs_exact(hist_docs.unionByName(gb), cand, JACCARD_THRESHOLD)
@@ -1672,12 +1604,14 @@ def _mh_store_oracle(hist_filter: str = "") -> str:
     """
 
 
-def _ensure_minhash_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    return ensure_store(
-        store_path(sf_dir, "documents", "minhash_store", f"minhash-v{_MH_STORE_FORMAT}"),
-        lambda p: upsert_minhash_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        ),
+def _ensure_minhash_store(spark: SparkSession, sf_dir: str, h: int, deleted: str = "") -> str:
+    """The history postings and payloads (first ``h`` doc_ids);
+    ``deleted`` as in :func:`_ensure_doc_store`."""
+    return _ensure_doc_store(
+        spark, sf_dir, "documents", "minhash_store", f"minhash-v{_MH_STORE_FORMAT}",
+        _MH_POSTINGS,
+        lambda p, pred: upsert_minhash_batch(spark, sf_dir, p, batch=0, batch_pred=pred),
+        h, deleted=deleted,
     )
 
 
@@ -1695,24 +1629,6 @@ def minhash_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_deleted_minhash_store(spark: SparkSession, sf_dir: str, h: int) -> str:
-    def build(p: str) -> None:
-        upsert_minhash_batch(
-            spark, sf_dir, p, batch=0, batch_pred=F.col("doc_id") < h
-        )
-        deleted = load_table(spark, sf_dir, "documents", columns=["doc_id"]).filter(
-            _delete_pred() & (F.col("doc_id") < h)
-        )
-        delete_docs_from_minhash_store(spark, deleted, p, batch=0)
-
-    return ensure_store(
-        store_path(
-            sf_dir, "documents", "minhash_store_deleted", f"minhash-v{_MH_STORE_FORMAT}-deleted"
-        ),
-        build,
-    )
-
-
 @query(
     "minhash_store_delete",
     oracle=_mh_store_oracle(f"AND NOT (j.{_DEL_PRED_SQL.replace('doc_id', 'd1')})"),
@@ -1723,7 +1639,7 @@ def minhash_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the payload fetch anti-join the tombstones).  Oracle = exhaustive
     exact-Jaccard flagging over the surviving history."""
     h = _history_cutoff(spark, sf_dir)
-    path = _ensure_deleted_minhash_store(spark, sf_dir, h)
+    path = _ensure_minhash_store(spark, sf_dir, h, "deleted")
     return flag_minhash_batch(
         spark, sf_dir, path, batch_pred=F.col("doc_id") >= h, max_batch=None
     )

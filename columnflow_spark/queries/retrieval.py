@@ -41,9 +41,9 @@ from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
 from columnflow_spark.sources import load_table, spread
 from columnflow_spark.sources.sinks import (
+    SlicedStore,
     ensure_store,
     local_frame,
-    mark_built,
     read_sidecar,
     store_path,
     write_sidecar,
@@ -870,7 +870,7 @@ def colbert_maxsim_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears).  The re-rank kernel is byte-identical to
     ``colbert_maxsim_topk``'s, so routed-vs-brute top-k overlap measures
     routing recall alone."""
-    from columnflow_spark.queries.annindex import _ensure_index
+    from columnflow_spark.queries.annindex import _INDEX, _ensure_index
     from columnflow_spark.queries.mmdata import ivf_probe_route
 
     path = _ensure_index(spark, sf_dir)
@@ -887,7 +887,7 @@ def colbert_maxsim_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_cids = sorted({cid for _, cid in probe_rows})
     routes = local_frame(spark, probe_rows, "query_id long, cid long")
     cand_ids = (
-        spark.read.parquet(path)
+        _INDEX.scan(spark, path)
         .filter(F.col("cid").isin(probe_cids))
         .select("vec_id", F.col("cid").cast("long").alias("cid"))
         .join(F.broadcast(routes), "cid")
@@ -931,14 +931,19 @@ def colbert_maxsim_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # under bm25_topk's SAME oracle (hash equality IS the maintenance-
 # correctness proof, the incremental_agg_merge pattern). ---
 _POSTINGS_FORMAT = 1
+#: the postings rows.  The declared read schema also pins the partition
+#: key ``w`` to STRING: it is a raw vocabulary term, and a term that
+#: parses as a number or date ("2021", "01") would otherwise come back
+#: through the inferred partition type reformatted ("01" -> 1 -> "1").
+_POSTINGS = SlicedStore(
+    "doc_id long, tf long, dl int, w string, batch int", "w", "doc_id", _POSTINGS_FORMAT
+)
 
 
 def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
     """Tokenize one ``(doc_id, text)`` ingest frame, keep postings for the
     query vocabulary only, and upsert them (plus the batch's monoid
     collection stats)."""
-    from columnflow_spark.sources.sinks import upsert_partitions
-
     spark = docs.sparkSession
     toks = docs.select(
         "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
@@ -953,12 +958,9 @@ def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
         words.join(F.broadcast(qterms), "w")
         .groupBy("w", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .withColumn("batch", F.lit(int(batch)))
     )
-    upsert_partitions(posting, path, partition_by=["w", "batch"])
     _upsert_stats(toks, path, batch=batch)
-    mark_built(path, _POSTINGS_FORMAT)
-    return path
+    return _POSTINGS.append(posting, path, batch=batch)
 
 
 def _upsert_stats(toks: DataFrame, path: str, *, batch: int, sign: int = 1) -> None:
@@ -988,25 +990,6 @@ def upsert_postings_batch(
     return upsert_postings_frame(docs, path, batch=batch)
 
 
-# full store schema (data + partition columns) for _read_postings: an
-# explicit reader schema bypasses partition-column type inference
-# entirely, so it is reader-scoped instead of a session-conf toggle
-_POSTINGS_READ_SCHEMA = "doc_id BIGINT, tf BIGINT, dl INT, w STRING, batch INT"
-
-
-def _read_postings(spark: SparkSession, path: str) -> DataFrame:
-    """Read the ``w=<term>/batch=<n>`` postings store with the partition
-    key ``w`` pinned to STRING: the key is a raw vocabulary term, and a
-    term that happens to parse as a number or date ("2021", "01") would
-    otherwise round-trip through the inferred partition type and come
-    back reformatted ("01" -> 1 -> "1").  Declaring the full schema on
-    the reader (data + partition columns) disables inference for THIS
-    read only — the previous session-conf toggle could leak the flipped
-    setting to concurrent reads on the same session, e.g. a streaming
-    foreachBatch job in flight (ADVICE r7)."""
-    return spark.read.schema(_POSTINGS_READ_SCHEMA).parquet(path)
-
-
 def bm25_totals_from_store(spark: SparkSession, path: str) -> DataFrame:
     """Integer-grid BM25 totals served from the postings store —
     bit-identical inputs to :func:`_bm25_totals`: df is a window over the
@@ -1016,9 +999,7 @@ def bm25_totals_from_store(spark: SparkSession, path: str) -> DataFrame:
     stat sums are taken on the driver from the ``_stats`` sidecar."""
     import pyarrow.compute as pc  # noqa: PLC0415
 
-    posting_rows = _read_postings(spark, path).select(
-        "doc_id", F.col("w").cast("string").alias("w"), "tf", "dl"
-    )
+    posting_rows = _POSTINGS.scan(spark, path).select("doc_id", "w", "tf", "dl")
     stats = read_sidecar(path, "_stats", ["n_docs", "sum_dl"])
     nd, sd = (float(pc.sum(stats.column(k)).as_py() or 0) for k in ("n_docs", "sum_dl"))
     stat = local_frame(spark, [(nd, sd / nd if nd else None)], "n_docs double, avgdl double")
@@ -1092,17 +1073,10 @@ def delete_docs_from_postings(
     spark: SparkSession, sf_dir: str, path: str, *, delete_pred, batch: int
 ) -> str:
     """Propagate a document deletion into the postings store: drop the
-    ids from the posting slices (marker-preserving rewrite) and append
-    the deleted docs' NEGATED collection stats as slice ``batch=<n>``."""
-    from columnflow_spark.sources.sinks import replace_store, write_events
-
-    kept = (
-        _read_postings(spark, path)
-        .filter(~delete_pred)
-        .select(F.col("w").cast("string").alias("w"), "doc_id", "tf", "dl")
-        .withColumn("batch", F.lit(0))
-    )
-    replace_store(path, lambda p: write_events(kept, p, partition_by=["w", "batch"]))
+    ids from the posting slices (a purge with the delete as its filter)
+    and append the deleted docs' NEGATED collection stats as slice
+    ``batch=<n>``."""
+    _POSTINGS.purge(spark, path, fold=lambda rows: rows.filter(~delete_pred))
     deleted = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
         delete_pred
     )

@@ -33,6 +33,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
@@ -308,8 +309,9 @@ def replace_store(path: str, build_fn: Callable[[str], None]) -> str:
 # caller already holds on, or collects to, the driver, so pyarrow
 # writes and reads them there: no Spark write job, no shuffle, no
 # schema inference and no hidden-path scan.  Corpus-grain sidecars
-# (payload ``_docs``) and batch-grained incremental ones (graph-ANN
-# ``_centroids``) stay Spark writes. ---
+# (the MinHash payload ``_docs``, a :class:`SlicedStore` sub-store) and
+# batch-grained incremental ones (graph-ANN ``_centroids``) stay Spark
+# writes. ---
 def write_sidecar(path: str, name: str, table, *, batch: int | None = None) -> None:
     """Replace one slice of the store's ``name`` sidecar by the
     ``pyarrow.Table`` ``table``: ``name/batch=<n>/`` when ``batch`` is
@@ -357,20 +359,23 @@ def read_sidecar(path: str, name: str, columns: list[str] | None = None):
 
 
 # --- tombstone primitives for DOC-GRAIN incremental stores (phash block
-# postings, semantic vectors, the IVF+PQ index, graph-ANN pages, the
-# quantile sketch — queries/dedupstore.py, queries/annindex.py, ...):
-# rows carry their doc/vec id, so a deletion is a bounded id slice
-# ``_deleted/batch=<n>/`` (idempotent per batch id) masked at serve
-# time.  Tombstone sets are compliance-batch sized, so they are
-# driver-side sidecars: a delete is ONE Spark job (the collect of the
-# caller's ids).  A served IVF-PQ/OPQ read masks them on the driver
-# (``tombstoned_ids``; the candidates are collected there anyway), and
-# every other read broadcasts them as a local relation into the
-# anti-join (``anti_tombstones``).  The periodic compaction rewrites
-# the store minus tombstones and clears them (logical delete ->
-# physical purge, the vacuum).  Content-grain count stores (exact-text,
-# URL and segment fingerprints; substring grams) use negative count
-# slices instead — see queries/dedupstore.py. ---
+# postings, semantic vectors, MinHash postings, the IVF+PQ/OPQ index,
+# graph-ANN pages, the quantile sketch): rows carry their doc/vec id, so
+# a deletion is a bounded id slice ``_deleted/batch=<n>/`` (idempotent
+# per batch id) masked at serve time.  Tombstone sets are
+# compliance-batch sized, so they are driver-side sidecars: a delete is
+# ONE Spark job (the collect of the caller's ids).  A served IVF-PQ/OPQ
+# read masks them on the driver (``tombstoned_ids``; the candidates are
+# collected there anyway), and every other read broadcasts them as a
+# local relation into the anti-join (``anti_tombstones``).  The periodic
+# purge rewrites the store minus tombstones and clears them (logical
+# delete -> physical purge, the vacuum).  The batch-sliced stores reach
+# these only through :class:`SlicedStore` (``delete``, ``mask``/``live``
+# and ``purge``); the graph-ANN pages and the sketches, whose reads
+# resolve latest-wins per key, call them directly.  Content-grain count
+# stores (exact-text, URL and segment fingerprints; substring grams)
+# have no ``id_col`` and delete by negative count slices instead — see
+# queries/dedupstore.py. ---
 def upsert_tombstones(
     ids: DataFrame, path: str, *, batch: int, id_col: str = "doc_id"
 ) -> None:
@@ -430,6 +435,85 @@ def anti_tombstones(store: DataFrame, path: str, *, id_col: str = "doc_id") -> D
 
 def clear_tombstones(path: str) -> None:
     shutil.rmtree(os.path.join(path, "_deleted"), ignore_errors=True)
+
+
+@dataclass(frozen=True)
+class SlicedStore:
+    """One batch-sliced store format, declared once: rows under
+    ``<axis>=<v>/batch=<n>/`` (``batch=<n>/`` when ``axis`` is None),
+    read with the declared ``schema`` (a DDL string, partition columns
+    included), ``_deleted`` tombstones on ``id_col`` (None: the store
+    has none), and ``fmt`` the version in its ``_BUILT`` marker (None: a
+    sub-store under ``<root>/_<name>``, marked by its root).  The verbs
+    below are the only code that spells this layout out: the incremental
+    stores (dedup counts and doc-grain postings in queries/dedupstore.py,
+    the IVF-PQ/OPQ index in queries/annindex.py, the BM25 postings in
+    queries/retrieval.py) each declare their format and call them.  A
+    declared read schema plans no schema-inference job and types the
+    partition columns, so a read is never a Spark job of its own and a
+    store with no slices reads as empty."""
+
+    schema: str
+    axis: str | None
+    id_col: str | None
+    fmt: int | None
+
+    def _parts(self) -> list[str]:
+        return [self.axis, "batch"] if self.axis else ["batch"]
+
+    def append(self, rows: DataFrame, path: str, *, batch: int) -> str:
+        """Write ``rows`` as the ``batch=<n>`` slice and mark the store.
+        Re-running a batch replaces its whole slice: every
+        ``<axis>=*/batch=<n>`` dir goes first, so a cell the re-run does
+        not write keeps no row of the old run (dynamic partition
+        overwrite replaces only the cells present in ``rows``)."""
+        batch = int(batch)
+        if os.path.isdir(path):
+            cells = [path] if self.axis is None else [
+                os.path.join(path, d) for d in os.listdir(path) if d.startswith(f"{self.axis}=")
+            ]
+            for cell in cells:
+                shutil.rmtree(os.path.join(cell, f"batch={batch}"), ignore_errors=True)
+        upsert_partitions(rows.withColumn("batch", F.lit(batch)), path, partition_by=self._parts())
+        if self.fmt is not None:
+            mark_built(path, self.fmt)
+        return path
+
+    def scan(self, spark: SparkSession, path: str, *, max_batch: int | None = None) -> DataFrame:
+        """Every slice's rows (only ``batch <= max_batch`` when given:
+        the replay fence of a streaming sink), tombstoned rows included."""
+        rows = spark.read.schema(self.schema).parquet(path)
+        return rows if max_batch is None else rows.filter(F.col("batch") <= max_batch)
+
+    def mask(self, rows: DataFrame, path: str) -> DataFrame:
+        """``rows`` minus the ids tombstoned in the store at ``path``
+        (:func:`anti_tombstones`); a sub-store's rows use its root's."""
+        return rows if self.id_col is None else anti_tombstones(rows, path, id_col=self.id_col)
+
+    def live(self, spark: SparkSession, path: str, *, max_batch: int | None = None) -> DataFrame:
+        """:meth:`scan` minus tombstones: the rows a read serves."""
+        return self.mask(self.scan(spark, path, max_batch=max_batch), path)
+
+    def delete(self, ids: DataFrame, path: str, *, batch: int) -> str:
+        """Tombstone the ``id_col`` ids of ``ids`` as ``_deleted/batch=<n>``."""
+        upsert_tombstones(ids, path, batch=batch, id_col=self.id_col)
+        return path
+
+    def purge(
+        self, spark: SparkSession, path: str, fold: Callable[[DataFrame], DataFrame] | None = None
+    ) -> None:
+        """Rewrite the store as one ``batch=0`` slice: its live rows,
+        through ``fold`` when given (a per-key merge of the slices, or a
+        filter), staged and published by :func:`replace_store` (the
+        marker and the other sidecars ride along); then the tombstones
+        are cleared.  The vacuum of a delete: a crash between publish and
+        clear is harmless, as the surviving tombstones mask
+        already-purged rows."""
+        rows = self.live(spark, path)
+        rows = (fold(rows) if fold else rows).withColumn("batch", F.lit(0))
+        rows = rows.select(*T.StructType.fromDDL(self.schema).fieldNames())
+        replace_store(path, lambda p: write_events(rows, p, partition_by=self._parts()))
+        clear_tombstones(path)
 
 
 def write_json_lines(

@@ -75,6 +75,16 @@ def test_incremental_batches_equal_full_build(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == n_rows
     assert _rows(search_ivfpq_index(spark, sf_dir, path)) == live
 
+    # a re-run over a subset that skips cells replaces the WHOLE slice:
+    # no row of the old run survives in a cell the re-run does not write
+    rows1 = spark.read.parquet(path).filter("batch = 1").select("vec_id", "cid").collect()
+    c0 = min(r.cid for r in rows1)
+    sub = sorted(r.vec_id for r in rows1 if r.cid == c0)
+    assert len({r.cid for r in rows1}) > 1
+    build_ivfpq_index(spark, sf_dir, path, batch=1, batch_pred=F.col("vec_id").isin(sub))
+    again = spark.read.parquet(path).filter("batch = 1").select("vec_id").collect()
+    assert sorted(r.vec_id for r in again) == sub
+
 
 def test_probe_read_serves_latest_batch(spark, sf_dir, tmp_path):
     # re-encoding vectors into a newer batch (identical codes) must not

@@ -789,3 +789,66 @@ def test_count_store_format_has_one_owner():
     inside = {f"queries/dedupstore.py:{n}" for n in range(band.lineno, band.end_lineno + 1)}
     found = _matches(_STORE_BAND)
     assert len(found) == 1 and found[0] in inside, found
+
+
+#: the batch-sliced store IO that only ``sinks.SlicedStore`` may spell out
+_STORE_IO = re.compile(
+    r"spark\.read\.parquet\(|\.read\.schema\(|upsert_partitions\(|mark_built\("
+    r"|anti_tombstones\(|clear_tombstones\(|upsert_tombstones\(|F\.col\(\"batch\"\)\s*<="
+)
+_SLICED_MODULES = ("queries/dedupstore.py", "queries/annindex.py", "queries/retrieval.py")
+
+
+def test_sliced_store_format_has_one_owner():
+    """The dedup, IVF-PQ/OPQ and BM25 stores read, write, fence, mask and
+    purge their slices only through their ``SlicedStore`` declaration,
+    and no two declarations in the package spell the same format."""
+    found = [m for m in _matches(_STORE_IO) if m.startswith(_SLICED_MODULES)]
+    assert not found, found
+    schemas = [
+        m.group(1)
+        for path in sorted(_PKG.rglob("*.py"))
+        for m in re.finditer(r'SlicedStore\(\s*"([^"]+)"', path.read_text())
+    ]
+    assert schemas and len(schemas) == len(set(schemas)), schemas
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_incremental_store",
+        "url_incremental_store",
+        "segment_incremental_store",
+        "substring_incremental_store",
+        "phash_incremental_store",
+        "minhash_incremental_store",
+        "semdedup_incremental_store",
+    ],
+)
+def test_store_reads_plan_no_job(spark, sf_dir, tmp_path, monkeypatch, name):
+    """Every store read a store query makes builds its frame with 0
+    Spark jobs (a declared read schema infers nothing), and each format
+    it reads scans a store with no slices as an empty frame."""
+    from columnflow_spark.queries import all_queries
+    from columnflow_spark.session import count_jobs
+    from columnflow_spark.sources.sinks import SlicedStore
+
+    reads = []
+
+    def counted(verb):
+        def run(self, *a, **k):
+            df, n = count_jobs(spark, lambda: verb(self, *a, **k))
+            reads.append((self, verb.__name__, n))
+            return df
+
+        return run
+
+    for verb in (SlicedStore.scan, SlicedStore.mask):
+        monkeypatch.setattr(SlicedStore, verb.__name__, counted(verb))
+    all_queries()[name](spark, sf_dir)
+    assert reads and all(n == 0 for *_, n in reads), reads
+    for store in {s for s, *_ in reads}:
+        empty = store.scan(spark, str(tmp_path))
+        assert empty.count() == 0 and empty.columns == [
+            c.split()[0] for c in store.schema.split(", ")
+        ]

@@ -34,7 +34,6 @@ _SLOW_ORACLES = {
     "ann_ivfpq_refined_topk",
     "ann_lsh_buckets",
     "dedup_embedding_cosine_lsh",
-    "streaming_ann_index_ingest",
     "streaming_cc_cdc",
     "streaming_cc_cdc_vacuum",
     "streaming_connected_components",
@@ -42,7 +41,6 @@ _SLOW_ORACLES = {
     "streaming_graph_ann_cdc",
     "streaming_graph_ann_cdc_vacuum",
     "streaming_graph_ann_ingest",
-    "streaming_phash_ingest",
     "streaming_postings_ingest",
     "streaming_semdedup_ingest",
     "streaming_stream_join",
