@@ -325,6 +325,17 @@ def collect_centroids(cents_df):
     return cids, np.array([list(r[1]) for r in rows], dtype=np.float64)
 
 
+def nearest_cids(mat, cids, cmat):
+    """The assignment kernel of :func:`assign_to_centroids`, in numpy:
+    the cid of each row of ``mat`` (float64, one vector per row) by
+    cosine argmax against ``cmat``, the lowest cid on ties.  The pandas
+    UDF runs it per Arrow batch; a served upsert runs it on the driver."""
+    import numpy as np  # noqa: PLC0415
+
+    cmat_t = (cmat / np.linalg.norm(cmat, axis=1, keepdims=True)).T  # d x K
+    return cids[(mat @ cmat_t).argmax(axis=1)]
+
+
 def assign_to_centroids(df, cids, cmat, vec: str = "embedding", out: str = "cid"):
     """:func:`nearest_centroid_assign` against centroids already on the
     driver: ``cids`` (int64, ascending) and ``cmat`` (float64, one row
@@ -332,12 +343,9 @@ def assign_to_centroids(df, cids, cmat, vec: str = "embedding", out: str = "cid"
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    cmat_t = (cmat / np.linalg.norm(cmat, axis=1, keepdims=True)).T  # d x K
-
     @F.pandas_udf("long")
     def _assign(batch):
-        mat = np.vstack(batch.to_numpy()).astype(np.float64)
-        return pd.Series(cids[(mat @ cmat_t).argmax(axis=1)])
+        return pd.Series(nearest_cids(np.vstack(batch.to_numpy()).astype(np.float64), cids, cmat))
 
     return df.withColumn(out, _assign(F.col(vec)))
 

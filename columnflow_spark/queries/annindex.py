@@ -22,8 +22,12 @@ shared with the OPQ index):
   artifact) assigns map-side
   (functions/similarity.py:assign_to_centroids) and the trained PQ
   encoder (queries/mmdata.py:pq_encode_udf) emits codes in the same
-  projection; the only added cost is the partitioned write, so a warm
-  upsert is two Spark jobs.
+  projection; the only added cost is the partitioned write.
+- **upsert** of a served request runs the same numpy kernels on the
+  driver (``nearest_cids``, ``pq_encode_np``) over the request's rows,
+  collected through Arrow, and pyarrow writes the slice: a warm upsert
+  is ONE Spark job, the collect.  A corpus (batch) encode is unbounded
+  and keeps the distributed build path.
 - **deletes** are ``_deleted/batch=<n>`` tombstone slices, a bounded
   driver-side sidecar (sources/sinks.py:write_sidecar): a delete is ONE
   Spark job, the collect of the caller's ids; a served read masks them
@@ -63,14 +67,15 @@ from columnflow_spark.queries.mmdata import (
     IVFPQ_ORACLE,
     _probe_batch,
     _route_np,
+    encode_udf,
     grid_lut_rows,
     ivf_coarse_centroids,
     ivf_probe_route,
     ivfpq_probe_plan,
-    pq_encode_udf,
+    pq_encoder,
     pq_query_lut_cached,
 )
-from columnflow_spark.functions.similarity import assign_to_centroids
+from columnflow_spark.functions.similarity import assign_to_centroids, nearest_cids
 from columnflow_spark.sources import load_table
 from columnflow_spark.sources.sinks import (
     SlicedStore,
@@ -102,17 +107,53 @@ def ivfpq_index_path(sf_dir: str) -> str:
 def upsert_index_frame(
     spark: SparkSession, sf_dir: str, rows: DataFrame, path: str, *, batch: int
 ) -> str:
-    """Encode a ``(vec_id, embedding)`` frame against the FROZEN coarse
-    quantizer + trained PQ codebook (both derive from the static corpus —
-    the IVF contract; incremental and streaming ingest reuse them) and
-    upsert it as the index's ``batch=<n>`` slice.  The quantizer's
-    centroid matrix is a session artifact, so a warm upsert is the encode
-    and the write: no centroid collect."""
-    encode = pq_encode_udf(spark, sf_dir)
-    idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
-        "vec_id", encode("embedding").alias("codes"), "cid"
-    )
+    """Encode a request-sized ``(vec_id, embedding)`` frame against the
+    FROZEN coarse quantizer + trained PQ codebook (both derive from the
+    static corpus — the IVF contract; incremental and streaming ingest
+    reuse them) and upsert it as the index's ``batch=<n>`` slice.
+
+    A served write is ONE Spark job: the rows are collected through
+    Arrow, assigned (functions/similarity.py:nearest_cids) and encoded
+    (queries/mmdata.py:pq_encode_np) on the driver by the kernels the
+    build's pandas UDFs run, and pyarrow writes the slice
+    (``SlicedStore.append``).  The quantizer and codebook are session
+    artifacts, so a warm upsert collects nothing else.  The rows must
+    fit on the driver, as a served read's candidates do; a bulk load
+    goes through :func:`build_ivfpq_index`."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pac  # noqa: PLC0415
+
+    t = rows.select("vec_id", "embedding").toArrow()
+    codes, cids = [], []
+    if t.num_rows:
+        x = pac.list_flatten(t.column("embedding")).to_numpy()
+        x = x.reshape(t.num_rows, -1).astype(np.float64)
+        codes = pq_encoder(spark, sf_dir)(x)
+        cids = nearest_cids(x, *ivf_coarse_centroids(spark, sf_dir))
+    idx = pa.table({
+        "codes": pa.array(codes, pa.string()),
+        "vec_id": t.column("vec_id"),
+        "cid": pa.array(cids, pa.int64()),
+    })
     return _INDEX.append(idx, path, batch=batch)
+
+
+def _encode_corpus(
+    spark: SparkSession, sf_dir: str, store: SlicedStore, encode, path: str, *, batch: int,
+    batch_pred,
+) -> str:
+    """Encode (the ``batch_pred`` rows of) the corpus with ``encode``
+    (mmdata.pq_encoder / opq_encoder) and write them into ``store`` at
+    ``path`` as its ``batch=<n>`` slice.  A corpus encode is unbounded,
+    so it stays distributed: the kernels run in pandas UDFs in one
+    projection and Spark writes the slice."""
+    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
+    rows = emb.filter(batch_pred) if batch_pred is not None else emb
+    idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
+        "vec_id", encode_udf(encode)("embedding").alias("codes"), "cid"
+    )
+    return store.append(idx, path, batch=batch)
 
 
 def build_ivfpq_index(
@@ -128,9 +169,9 @@ def build_ivfpq_index(
     corpus (frozen cell geometry — the IVF contract), while ``batch_pred``
     selects which vectors this batch (re-)encodes."""
     path = path or ivfpq_index_path(sf_dir)
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    rows = emb.filter(batch_pred) if batch_pred is not None else emb
-    return upsert_index_frame(spark, sf_dir, rows, path, batch=batch)
+    return _encode_corpus(
+        spark, sf_dir, _INDEX, pq_encoder(spark, sf_dir), path, batch=batch, batch_pred=batch_pred
+    )
 
 
 def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
@@ -158,7 +199,8 @@ def delete_vectors_from_index(
 ) -> str:
     """Propagate a vector deletion into the persisted index: one bounded
     ``_deleted/batch=<n>`` tombstone slice (idempotent per batch id);
-    probe reads anti-join it, compaction purges it physically."""
+    a served read masks it on the driver, compaction purges it
+    physically."""
     return _INDEX.delete(ids, path, batch=batch)
 
 
@@ -525,7 +567,7 @@ def ann_index_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- index deletion propagation (VERDICT r8 next #1, the ANN arm): a
 # forgotten document's codes must stop being served WITHOUT a full
 # index rebuild.  The delete is a bounded tombstone slice; the probed
-# search anti-joins it after the partition prune (IO stays
+# search masks it on the driver after the partition prune (IO stays
 # probe-bounded), and compaction purges it physically.  The oracle is
 # the full IVF+PQ replay with the deleted ids excluded from the
 # CANDIDATE side only — the query batch is external serve-time input
@@ -607,7 +649,7 @@ def build_opq_index(
     partitioned write."""
     import pyarrow as pa  # noqa: PLC0415
 
-    from columnflow_spark.queries.mmdata import opq_encode_udf, opq_train_np
+    from columnflow_spark.queries.mmdata import opq_encoder, opq_train_np
 
     R, cms = opq_train_np(spark, sf_dir)
     vecs = pa.list_(pa.float64())
@@ -621,13 +663,10 @@ def build_opq_index(
         "code": pa.array([ci for _, ci in keys], pa.int32()),
         "c": pa.array([[float(x) for x in cms[s][ci]] for s, ci in keys], vecs),
     }))
-    emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
-    rows = emb.filter(batch_pred) if batch_pred is not None else emb
-    encode = opq_encode_udf(spark, sf_dir)
-    idx = assign_to_centroids(rows, *ivf_coarse_centroids(spark, sf_dir)).select(
-        "vec_id", encode("embedding").alias("codes"), "cid"
+    return _encode_corpus(
+        spark, sf_dir, _OPQ_INDEX, opq_encoder(spark, sf_dir), path, batch=batch,
+        batch_pred=batch_pred,
     )
-    return _OPQ_INDEX.append(idx, path, batch=batch)
 
 
 def load_opq_artifacts(path: str):

@@ -913,29 +913,50 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", encode("embedding").alias("codes")).orderBy("vec_id")
 
 
+def pq_encode_np(x, codes, cmats) -> list[str]:
+    """The PQ encoder kernel, in numpy: each row of ``x`` (float64, raw
+    scale; OPQ passes it rotated) as its dash-joined code string.  The
+    grid is half-away ``sign(y)*floor(|y|+0.5)`` (exact), and subspace
+    ``s`` takes ``codes[s]`` of its nearest ``cmats[s]`` row by
+    sequential :func:`_seq_sqdist`, the first on ties.  The pandas UDFs
+    run it per Arrow batch (:func:`encode_udf`), a served upsert on the
+    driver (queries/annindex.py), so the codes have one definition."""
+    import numpy as np  # noqa: PLC0415
+
+    y = x * _PQ_GRID
+    t = np.sign(y) * np.floor(np.abs(y) + 0.5)  # half-away, exact
+    packed = np.stack([
+        codes[s][_seq_sqdist(t[:, s * _PQ_DIM:(s + 1) * _PQ_DIM], cmats[s]).argmin(axis=1)]
+        for s in range(_PQ_M)
+    ], axis=1)
+    return ["-".join(map(str, row)) for row in packed]
+
+
+def pq_encoder(spark: SparkSession, sf_dir: str):
+    """:func:`pq_encode_np` with the trained codebook (the ``pq_codebook``
+    session artifact) bound: float64 vector rows -> code strings."""
+    codes, cmats = _pq_train_np(spark, sf_dir)
+    return lambda x: pq_encode_np(x, codes, cmats)
+
+
+def encode_udf(encode):
+    """An encoder (:func:`pq_encoder`, :func:`opq_encoder`) as an
+    Arrow-batched pandas UDF: vector column -> code string column."""
+    import numpy as np  # noqa: PLC0415
+
+    @F.pandas_udf("string")
+    def _encode(batch):
+        return pd.Series(encode(np.vstack(batch.to_numpy()).astype(np.float64)))
+
+    return _encode
+
+
 def pq_encode_udf(spark: SparkSession, sf_dir: str):
     """The Arrow-batched PQ encoder (vector -> dash-joined code string)
     with the trained codebook baked in — shared by :func:`ann_pq_codes`
     and the materialized index build (queries/annindex.py), so the
     persisted codes are bit-identical to the in-session ones."""
-    import numpy as np  # noqa: PLC0415
-
-    codes_arr, cmats = _pq_train_np(spark, sf_dir)
-
-    @F.pandas_udf("string")
-    def _encode(batch):
-        x = np.vstack(batch.to_numpy()).astype(np.float64)
-        y = x * _PQ_GRID
-        t = np.sign(y) * np.floor(np.abs(y) + 0.5)  # half-away, exact
-        cols = []
-        for s in range(_PQ_M):
-            sub = t[:, s * _PQ_DIM:(s + 1) * _PQ_DIM]
-            d = _seq_sqdist(sub, cmats[s])
-            cols.append(codes_arr[s][d.argmin(axis=1)])
-        packed = np.stack(cols, axis=1)
-        return pd.Series(["-".join(map(str, row)) for row in packed])
-
-    return _encode
+    return encode_udf(pq_encoder(spark, sf_dir))
 
 
 def _pq_exploded_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1844,28 +1865,20 @@ def opq_train_np(spark: SparkSession, sf_dir: str):
     return R, cms
 
 
-def opq_encode_udf(spark: SparkSession, sf_dir: str):
-    """Arrow-batched OPQ encoder (vector -> dash-joined code string):
-    rotate, grid-quantize, argmin all m subspaces per batch — R and the
-    codebooks baked in, the identical one-scan shape as
-    :func:`pq_encode_udf`."""
+def opq_encoder(spark: SparkSession, sf_dir: str):
+    """The OPQ encoder: rotate by R, then :func:`pq_encode_np` against
+    the rotated codebooks (code id = row index)."""
     import numpy as np  # noqa: PLC0415
 
     R, cms = opq_train_np(spark, sf_dir)
+    codes = [np.arange(len(c)) for c in cms]
+    return lambda x: pq_encode_np(x @ R, codes, cms)
 
-    @F.pandas_udf("string")
-    def _encode(batch):
-        x = np.vstack(batch.to_numpy()).astype(np.float64) @ R
-        y = x * _PQ_GRID
-        t = np.sign(y) * np.floor(np.abs(y) + 0.5)
-        cols = []
-        for s in range(_PQ_M):
-            d = _seq_sqdist(t[:, s * _PQ_DIM:(s + 1) * _PQ_DIM], cms[s])
-            cols.append(d.argmin(axis=1))
-        packed = np.stack(cols, axis=1)
-        return pd.Series(["-".join(map(str, row)) for row in packed])
 
-    return _encode
+def opq_encode_udf(spark: SparkSession, sf_dir: str):
+    """Arrow-batched OPQ encoder (vector -> dash-joined code string):
+    the identical one-scan shape as :func:`pq_encode_udf`."""
+    return encode_udf(opq_encoder(spark, sf_dir))
 
 
 def _opq_codebook_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,10 @@ from pyspark.sql import SparkSession
 #: shuffled hash join; set by ``get_spark`` and by ``queries.tune_session``
 #: on sessions the engine did not build
 SHJ_LOCAL_MAP = "64m"
+#: the parquet codec of everything the engine writes: Spark's writes in a
+#: ``get_spark`` session, and the driver-side pyarrow writes
+#: (sources/sinks.py) in any session
+PARQUET_CODEC = "zstd"
 
 
 def session_key(spark: SparkSession) -> str:
@@ -71,7 +75,7 @@ def get_spark(app_name: str = "columnflow_spark", shuffle_partitions: int | None
         # r13 (guide §6): zstd parquet for everything the engine writes —
         # smaller store/sink bytes at similar read speed (codec is
         # per-file metadata, so existing snappy stores keep reading fine)
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         # r13 (guide §4.3): Arrow serialization for any scalar Python UDF
         # (the engine's own kernels are already pandas/Arrow-native; this
         # covers user extensions at the session level)

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
+import json
 import math
 import os
 import shutil
@@ -39,6 +40,7 @@ from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from columnflow_spark.session import PARQUET_CODEC
 from columnflow_spark.sources.tables import table_path
 
 DEFAULT_ROWS_PER_FILE = 50_000
@@ -101,15 +103,15 @@ def write_events(
     partition across tasks (advisory size), so one hot ``batch=0`` slice
     still writes in parallel; ``maxRecordsPerFile`` bounds row groups
     either way."""
-    _sorted_writer(df, list(partition_by), rows_per_file, mode).parquet(path)
+    _sorted_writer(sort_fields(df), list(partition_by), rows_per_file, mode).parquet(path)
 
 
 def _sorted_writer(
-    df: DataFrame, partition_by: list[str], rows_per_file: int, mode: str
+    out: DataFrame, partition_by: list[str], rows_per_file: int, mode: str
 ) -> DataFrameWriter:
-    """The shared writer of :func:`write_events`, :func:`upsert_partitions`
-    and :func:`write_json_lines` (``rows_per_file`` 0: no cap)."""
-    out = sort_fields(df)
+    """The shared writer of :func:`write_events`, :func:`write_output`,
+    :func:`upsert_partitions` and :func:`write_json_lines` over ``out``,
+    a :func:`sort_fields` frame (``rows_per_file`` 0: no cap)."""
     if partition_by:
         out = out.hint("rebalance", *partition_by)
     writer = out.write.mode(mode).option("maxRecordsPerFile", rows_per_file)
@@ -189,11 +191,34 @@ def tables_tag(sf_dir: str, tables: Iterable[str]) -> str:
 BUILT = "_BUILT"
 
 
-def mark_built(path: str, fmt: object = None) -> None:
-    """Write ``path``'s completeness marker: one ``format=<fmt>`` line
-    (the store format version), or an empty file when ``fmt`` is None."""
+def mark_built(path: str, fmt: object = None, *, schema: str | None = None) -> None:
+    """Write ``path``'s completeness marker: a ``format=<fmt>`` line (the
+    store format version) when ``fmt`` is given and a ``schema=<json>``
+    line (the read schema of a parquet output) when ``schema`` is; an
+    empty file when neither is."""
+    lines = [f"{k}={v}\n" for k, v in (("format", fmt), ("schema", schema)) if v is not None]
     with open(os.path.join(path, BUILT), "w") as f:
-        f.write("" if fmt is None else f"format={fmt}\n")
+        f.write("".join(lines))
+
+
+def write_output(df: DataFrame, path: str) -> None:
+    """Write a parquet output as :func:`write_events` does (unpartitioned)
+    and mark it with the schema a read of it returns: the JVM's
+    ``schema.asNullable`` of the written, field-sorted frame.  A task
+    output is written this way and read back by :func:`read_output`."""
+    out = sort_fields(df)
+    _sorted_writer(out, [], DEFAULT_ROWS_PER_FILE, "overwrite").parquet(path)
+    mark_built(path, schema=out._jdf.schema().asNullable().json())
+
+
+def read_output(spark: SparkSession, path: str) -> DataFrame:
+    """Read an output :func:`write_output` wrote, with the schema its
+    ``_BUILT`` records: a declared schema plans no job, where
+    ``spark.read.parquet(path)`` infers one by reading a footer in a
+    Spark job of its own."""
+    with open(os.path.join(path, BUILT)) as f:
+        line = next(x for x in f if x.startswith("schema="))
+    return spark.read.schema(T.StructType.fromJson(json.loads(line[len("schema="):]))).parquet(path)
 
 
 def is_built(path: str) -> bool:
@@ -319,15 +344,25 @@ def write_sidecar(path: str, name: str, table, *, batch: int | None = None) -> N
     staging dir and one rename publishes it; a slice it replaces moves
     aside under a hidden name first and is removed after.  A write that
     fails before the rename leaves the old slice as it was."""
+    _write_dir(os.path.join(path, name, *([] if batch is None else [f"batch={int(batch)}"])), table)
+
+
+def _write_dir(target: str, table, **opts) -> None:
+    """Replace the directory ``target`` by one file of the
+    ``pyarrow.Table`` ``table`` (``opts`` go to ``pq.write_table``).
+    The file is written into a hidden staging sibling, which Spark's
+    listing and :func:`read_sidecar` skip, and one rename publishes it;
+    a dir it replaces moves aside under a hidden name first and is
+    removed after.  A write that fails before the rename leaves the old
+    dir as it was."""
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    target = os.path.join(path, name, *([] if batch is None else [f"batch={int(batch)}"]))
     parent, base = os.path.split(target)
     os.makedirs(parent, exist_ok=True)
     staging = _sibling(os.path.join(parent, f".{base}"), "staging")
     try:
         os.makedirs(staging)
-        pq.write_table(table, os.path.join(staging, "part-0.parquet"))
+        pq.write_table(table, os.path.join(staging, "part-0.parquet"), **opts)
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
@@ -461,12 +496,20 @@ class SlicedStore:
     def _parts(self) -> list[str]:
         return [self.axis, "batch"] if self.axis else ["batch"]
 
-    def append(self, rows: DataFrame, path: str, *, batch: int) -> str:
+    def append(self, rows, path: str, *, batch: int) -> str:
         """Write ``rows`` as the ``batch=<n>`` slice and mark the store.
         Re-running a batch replaces its whole slice: every
         ``<axis>=*/batch=<n>`` dir goes first, so a cell the re-run does
         not write keeps no row of the old run (dynamic partition
-        overwrite replaces only the cells present in ``rows``)."""
+        overwrite replaces only the cells present in ``rows``).
+
+        ``rows`` is a DataFrame (an unbounded corpus encode: Spark's
+        partitioned write) or, for a store with an axis, a request-sized
+        ``pyarrow.Table`` already on the driver, as :func:`local_frame`
+        takes one: cast to the declared data columns, it is written one
+        file per axis value by pyarrow, with no Spark job, in the
+        engine's codec.  Without the Arrow schema blob
+        (``store_schema=False``) such a file is no larger than Spark's."""
         batch = int(batch)
         if os.path.isdir(path):
             cells = [path] if self.axis is None else [
@@ -474,10 +517,30 @@ class SlicedStore:
             ]
             for cell in cells:
                 shutil.rmtree(os.path.join(cell, f"batch={batch}"), ignore_errors=True)
-        upsert_partitions(rows.withColumn("batch", F.lit(batch)), path, partition_by=self._parts())
+        if isinstance(rows, DataFrame):
+            upsert_partitions(rows.withColumn("batch", F.lit(batch)), path, partition_by=self._parts())
+        else:
+            self._write_table(rows, path, batch)
         if self.fmt is not None:
             mark_built(path, self.fmt)
         return path
+
+    def _write_table(self, rows, path: str, batch: int) -> None:
+        """:meth:`append`'s driver-side writer: one ``part-0.parquet``
+        per ``<axis>=<v>/batch=<n>`` dir, published by :func:`_write_dir`."""
+        import pyarrow.compute as pc  # noqa: PLC0415
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+        fields = T.StructType.fromDDL(self.schema).fields
+        arrow = to_arrow_schema(T.StructType([f for f in fields if f.name not in self._parts()]))
+        keys = rows.column(self.axis)
+        for v in sorted(pc.unique(keys).to_pylist()):
+            _write_dir(
+                os.path.join(path, f"{self.axis}={v}", f"batch={batch}"),
+                rows.filter(pc.equal(keys, v)).select(arrow.names).cast(arrow),
+                compression=PARQUET_CODEC,
+                store_schema=False,
+            )
 
     def scan(self, spark: SparkSession, path: str, *, max_batch: int | None = None) -> DataFrame:
         """Every slice's rows (only ``batch <= max_batch`` when given:
@@ -529,7 +592,7 @@ def write_json_lines(
     (e.g. tasks/selection.py stats targets).  Partitioned writes
     REBALANCE by the partition columns exactly like :func:`write_events`
     (guide §6)."""
-    _sorted_writer(df, list(partition_by), 0, mode).json(path)
+    _sorted_writer(sort_fields(df), list(partition_by), 0, mode).json(path)
 
 
 def local_frame(
@@ -567,8 +630,6 @@ def write_side_output(obj: object, path: str) -> str:
     these as pickle/json law targets next to the event data,
     tasks/selection.py:260 stats output).  Atomic write (tmp + rename);
     keys are sorted so re-runs are byte-identical."""
-    import json
-
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
@@ -579,8 +640,6 @@ def write_side_output(obj: object, path: str) -> str:
 
 
 def read_side_output(path: str) -> object:
-    import json
-
     with open(path) as fh:
         return json.load(fh)
 
@@ -629,6 +688,6 @@ def upsert_partitions(
     partition_by = list(partition_by)
     if not partition_by:
         raise ValueError("upsert_partitions requires partition columns")
-    _sorted_writer(df, partition_by, rows_per_file, "overwrite").option(
+    _sorted_writer(sort_fields(df), partition_by, rows_per_file, "overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).parquet(path)

@@ -7,7 +7,9 @@ and luigi completeness).
 Scope: the orchestration *semantics* (store-parts output layout, idempotent
 re-runs, shift-aware planning) without the luigi scheduler — each task is
 one Spark job writing Parquet through ``sinks.ensure_store`` (staged,
-published by one rename, complete once it carries ``_BUILT``), and the
+published by one rename, complete once it carries ``_BUILT``, which
+records the output's read schema so a downstream task reads it with no
+schema-inference job: ``sinks.write_output``/``read_output``), and the
 DAG is resolved by a plain depth-first runner.  On a cluster the same
 classes run under any scheduler that calls :func:`run_pipeline` per
 terminal task.
@@ -28,7 +30,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from columnflow_spark.plans.shifts import NOMINAL, Shift
-from columnflow_spark.sources.sinks import ensure_store, is_built, tables_tag, write_events
+from columnflow_spark.sources.sinks import (
+    ensure_store,
+    is_built,
+    read_output,
+    tables_tag,
+    write_output,
+)
 
 
 @dataclass
@@ -44,7 +52,8 @@ class Task:
     and ``run``; the runner handles pathing, caching and shift collapse."""
 
     name: str = "task"
-    version: str = "v1"
+    #: part of the output address; v2: ``_BUILT`` records the read schema
+    version: str = "v2"
     #: shift names whose aliases/logic affect THIS task's operators
     local_shifts: frozenset[str] = frozenset()
     #: source tables THIS task reads; downstream tasks inherit them
@@ -96,9 +105,9 @@ def run_pipeline(task: Task, ctx: TaskContext) -> str:
 
     def build(staging: str) -> None:
         inputs = {
-            dep.name: ctx.spark.read.parquet(run_pipeline(dep, ctx)) for dep in task.requires()
+            dep.name: read_output(ctx.spark, run_pipeline(dep, ctx)) for dep in task.requires()
         }
-        write_events(task.run(ctx, inputs), staging)
+        write_output(task.run(ctx, inputs), staging)
 
     return ensure_store(task.output_path(ctx), build)
 

@@ -142,8 +142,9 @@ def test_served_read_job_counts(spark, sf_dir, fresh_index, tmp_path):
 
 
 def test_warm_upsert_job_count(spark, sf_dir, tmp_path):
-    # the frozen coarse quantizer is a session artifact: a warm upsert is
-    # the encode-and-write, with no centroid collect
+    # the frozen coarse quantizer and the codebook are session artifacts
+    # and the request is encoded and written on the driver: a warm
+    # upsert is one Spark job, the collect of its rows
     from columnflow_spark.queries.annindex import upsert_index_frame
     from columnflow_spark.session import count_jobs
     from columnflow_spark.sources import load_table
@@ -153,8 +154,58 @@ def test_warm_upsert_job_count(spark, sf_dir, tmp_path):
     upsert_index_frame(spark, sf_dir, emb.filter(F.col("vec_id") % 4 == 0), path, batch=0)
     _, jobs = count_jobs(spark, lambda: upsert_index_frame(
         spark, sf_dir, emb.filter(F.col("vec_id") % 4 == 1), path, batch=1))
-    assert jobs <= 2, jobs
+    assert jobs == 1, jobs
     assert spark.read.parquet(path).filter(F.col("vec_id") % 4 == 1).count() > 0
+
+
+def _parquet_bytes(path):
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_driver_upsert_equals_the_distributed_build(spark, sf_dir, tmp_path):
+    """A served upsert encodes on the driver with the kernels the build's
+    pandas UDFs run: the odd ids upserted through ``upsert_index_frame``
+    and built by ``build_ivfpq_index`` give equal ``(cid, batch, vec_id,
+    codes)`` rows, the driver-written slice is no larger on disk, and a
+    served read over it equals the DuckDB replay over the odd ids."""
+    from columnflow_spark.oracle import duckdb_connection
+    from columnflow_spark.queries.annindex import _INDEX, upsert_index_frame
+    from columnflow_spark.queries.mmdata import ivfpq_adc_ctes
+    from columnflow_spark.sources import load_table
+
+    odd = F.col("vec_id") % 2 == 1
+    driver, spark_written = str(tmp_path / "driver"), str(tmp_path / "spark")
+    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+    upsert_index_frame(spark, sf_dir, emb.filter(odd), driver, batch=1)
+    build_ivfpq_index(spark, sf_dir, spark_written, batch=1, batch_pred=odd)
+
+    def rows(path):
+        cols = ("cid", "batch", "vec_id", "codes")
+        return sorted(tuple(r) for r in _INDEX.scan(spark, path).select(*cols).collect())
+
+    got = rows(driver)
+    assert got and got == rows(spark_written)
+    cells = [d for d in os.listdir(driver) if d.startswith("cid=")]
+    assert cells and all(
+        os.listdir(os.path.join(driver, c, "batch=1")) == ["part-0.parquet"] for c in cells
+    )
+    assert _parquet_bytes(driver) <= _parquet_bytes(spark_written)
+
+    con = duckdb_connection(sf_dir)
+    try:
+        want = con.sql(
+            f"WITH {ivfpq_adc_ctes(cand_filter_sql='AND a.vec_id % 2 = 1')} "
+            "SELECT query_id, neighbor_id, adc_dist, rk FROM ivf_rank"
+        ).fetchall()
+    finally:
+        con.close()
+    served = _rows(search_ivfpq_index(spark, sf_dir, driver))
+    assert served and served == sorted(tuple(int(x) for x in r) for r in want)
 
 
 def test_driver_merge_knife_edges(spark, tmp_path):

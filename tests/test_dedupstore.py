@@ -795,6 +795,7 @@ def test_count_store_format_has_one_owner():
 _STORE_IO = re.compile(
     r"spark\.read\.parquet\(|\.read\.schema\(|upsert_partitions\(|mark_built\("
     r"|anti_tombstones\(|clear_tombstones\(|upsert_tombstones\(|F\.col\(\"batch\"\)\s*<="
+    r"|write_table\("
 )
 _SLICED_MODULES = ("queries/dedupstore.py", "queries/annindex.py", "queries/retrieval.py")
 

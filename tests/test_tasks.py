@@ -6,6 +6,7 @@ complete or absent, also under concurrent runs."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
@@ -13,12 +14,15 @@ from concurrent.futures import ThreadPoolExecutor
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from columnflow_spark.plans.shifts import Shift
-from columnflow_spark.sources.sinks import tables_tag
+from columnflow_spark.session import count_jobs
+from columnflow_spark.sources.sinks import read_output, tables_tag
 from columnflow_spark.tasks import (
     BuildEvents,
     CreateHistograms,
+    Task,
     TaskContext,
     run_pipeline,
 )
@@ -55,10 +59,12 @@ def test_pipeline_end_to_end_and_idempotent(spark, sf_dir, tmp_path):
     # tag / shift / version, complete once it carries _BUILT
     tag = tables_tag(sf_dir, ("orders", "lineitem"))
     for stage in ("events", "calib", "select", "reduce", "produce", "hist"):
-        assert os.path.exists(os.path.join(str(tmp_path), stage, tag, "shift_nominal", "v1", "_BUILT"))
+        assert os.path.exists(
+            os.path.join(str(tmp_path), stage, tag, "shift_nominal", Task.version, "_BUILT")
+        )
     assert _hist_total(spark, out) > 0
     # re-run: completed targets short-circuit (no rewrite -> mtimes stable)
-    marker = os.path.join(str(tmp_path), "events", tag, "shift_nominal", "v1", "_BUILT")
+    marker = os.path.join(str(tmp_path), "events", tag, "shift_nominal", Task.version, "_BUILT")
     mtime = os.path.getmtime(marker)
     out2 = run_pipeline(CreateHistograms(), ctx)
     assert out2 == out
@@ -132,3 +138,27 @@ def test_concurrent_runs_publish_one_complete_output(spark, sf_dir, tmp_path):
     assert outs[0] == outs[1]
     assert _hist_cells(spark, outs[0]) == _hist_cells(spark, single)
     assert _leftovers(str(tmp_path)) == []
+
+
+def _chain(task):
+    return [t for dep in task.requires() for t in _chain(dep)] + [task]
+
+
+def test_outputs_record_the_schema_they_read_back_with(spark, sf_dir, tmp_path):
+    """Every task output's ``_BUILT`` records the schema
+    ``spark.read.parquet`` infers for it, nested nullability included,
+    and a downstream read with that schema plans no Spark job."""
+    chain = _chain(CreateHistograms())
+    assert [t.name for t in chain] == ["events", "calib", "select", "reduce", "produce", "hist"]
+    for shift in (Shift("nominal"), Shift("price_up")):
+        ctx = TaskContext(spark, sf_dir, str(tmp_path), shift)
+        run_pipeline(CreateHistograms(), ctx)
+        for task in chain:
+            out = task.output_path(ctx)
+            with open(os.path.join(out, "_BUILT")) as f:
+                lines = f.read().splitlines()
+            assert len(lines) == 1 and lines[0].startswith("schema="), lines
+            recorded = T.StructType.fromJson(json.loads(lines[0][len("schema="):]))
+            assert recorded == spark.read.parquet(out).schema, task.name
+            df, jobs = count_jobs(spark, lambda out=out: read_output(spark, out))
+            assert jobs == 0 and df.schema == recorded, (task.name, jobs)
