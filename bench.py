@@ -274,9 +274,9 @@ def main() -> None:
         "pagerank_trade_graph": ["graph_edges"],
         "graph_label_propagation": ["graph_edges"],
         "dedup_shingle_index": ["hashed_grams"],
-        # first line of the retrieval family pays the shared BM25-totals
-        # checkpoint COLD (r13 — nine queries consume the identical
-        # query-driven totals frame; the shared-shingle-table pattern)
+        # first line of the retrieval family pays the shared BM25 totals
+        # COLD (r13 — nine queries consume the identical query-driven
+        # totals, a driver-scored posting collect)
         "bm25_topk": ["bm25_totals"],
         # first line of each near-dup edge family pays its shared edge
         # artifact COLD (r13): the text-Jaccard pair set and the phash
@@ -288,8 +288,7 @@ def main() -> None:
         "ann_pq_adc_topk": ["pq_codebook"],
         # first consumer of the shared probed-ADC aggregate (r14): pays the
         # assign → probe → LUT → ADC chain COLD every sample; the refined
-        # sibling then reads the session checkpoint (the bm25_totals
-        # pattern)
+        # sibling then reads the session checkpoint
         "ann_ivfpq_topk": ["ivfpq_adc"],
         "bpe_encode_corpus": ["bpe_merges"],
         "unigram_encode_corpus": ["unigram_vocab"],

@@ -35,17 +35,17 @@ shared with the OPQ index):
   ``_rotation``/``_codebook`` are sidecars of the same pair.
 - **search** is scatter-gather.  The driver plans the read
   (queries/mmdata.py:ivfpq_probe_plan): one bounded collect of the query
-  batch and the centroid rows gives the probe route and the quantized
-  ADC LUT in numpy, engine-exact against the in-plan
-  ``_ivf_probes``/``_pq_query_lut``.  The route's cell set becomes a
-  static ``IN`` filter on the partition column, and ONE Spark job
-  collects just those cells' live rows through Arrow (the scatter).
-  The driver then scores each vector at its latest ``batch`` against
-  the LUT and keeps each query's top-k (the gather).  The collected rows
-  are the probed cells' rows: a cell holds ~64 vectors, so a read brings
-  back at most n_probe x |batch| x ~64 rows, the same order as the
-  centroid rows the plan already collects.  Results are bit-identical
-  to ``ann_ivfpq_topk`` (same oracle SQL registered for both).
+  batch, against the centroid matrix of the ``ivf_coarse_centroids``
+  session artifact, gives the probe route and the quantized ADC LUT in
+  numpy, engine-exact against the in-plan ``_ivf_probes``/
+  ``_pq_query_lut``.  The route's cell set becomes a static ``IN``
+  filter on the partition column, and ONE Spark job collects just those
+  cells' live rows through Arrow (the scatter).  The driver then scores
+  each vector at its latest ``batch`` against the LUT and keeps each
+  query's top-k (the gather).  The collected rows are the probed cells'
+  rows: a cell holds ~64 vectors, so a read brings back at most
+  n_probe x |batch| x ~64 rows.  Results are bit-identical to
+  ``ann_ivfpq_topk`` (same oracle SQL registered for both).
 
 Mirrors the reference's columnar-store round-trip (reference
 columnflow/tasks/reduction.py merged outputs re-read by downstream
@@ -286,8 +286,7 @@ def _probed_adc_topk(
     :func:`_adc_topk_np` scores, dedups and ranks the rest.  The collect
     is bounded by design: a cell holds ~64 vectors (every 64th vector is
     a centroid), so a read brings back at most n_probe x |batch| x ~64
-    rows, the same order as the centroid rows the probe plan collects.
-    The result is a local frame of |batch| x ``topk`` rows."""
+    rows.  The result is a local frame of |batch| x ``topk`` rows."""
     import pyarrow.compute as pac  # noqa: PLC0415
 
     cids = sorted({c for _, c in route})

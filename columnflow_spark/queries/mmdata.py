@@ -1220,7 +1220,7 @@ IVFPQ_ORACLE = f"""
 
 
 #: ``ivfpq_adc`` session artifact: the checkpointed probed-ADC aggregate
-#: — the exact ``bm25_totals`` pattern (r14, guide §1.2): ``ann_ivfpq_topk`` and
+#: — one shared per-session relation (r14, guide §1.2): ``ann_ivfpq_topk`` and
 #: ``ann_ivfpq_refined_topk`` consume the IDENTICAL bounded frame
 #: (|queries| × probed candidates rows), and each previously recompiled +
 #: re-ran the full assign → probe → LUT → ADC join chain.  bench.py

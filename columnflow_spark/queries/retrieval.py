@@ -11,31 +11,41 @@ alongside queries/mmdata.py.
 
 Scale notes (the 100 TB story):
 
-- The whole pipeline is *query-driven*: the corpus word explosion is
-  immediately semi-joined to the (tiny, broadcast) query-term table, so
-  only posting lists for searched terms ever enter a shuffle — work
-  scales with posting volume, not corpus size.
-- Document frequencies are derived FROM the retained postings
-  (``count over (partition by term)``), not from a vocabulary-sized df
-  table: no second corpus pass, nothing vocabulary-sized moves.
-- Document lengths are a corpus-grain side table joined on ``doc_id``;
-  it is never broadcast (see tests/test_plan_quality.py negative
-  guardrail) — at scale it is a narrow (id, int) relation that AQE can
-  shuffle-join or reuse from a materialized stats store.
-- Scores are quantized to an integer grid per TERM before the per-doc
-  sum, so cross-engine summation order cannot flip a rank (same
-  treatment as the PQ/ADC and cosine paths in mmdata.py).
+- Scoring is *query-driven*: one documents scan keeps each document's
+  tokens that are searched terms (an in-row filter), and only documents
+  with a hit explode into ``(w, doc_id, tf, dl)`` posting rows.  Those
+  rows reach the driver in ONE collect with no shuffle, so the work and
+  the collect scale with the posting volume of the searched terms, not
+  with the corpus.
+- The collection stats ``(n_docs, sum_dl)`` are observed on that same
+  scan (``DataFrame.observe``): no second corpus pass and no aggregate
+  job.  The postings store keeps them as its ``_stats`` sidecar instead.
+- Document frequencies are counted over the collected postings, not
+  looked up in a vocabulary-sized df table.
+- :func:`bm25_score` is the one BM25 scoring kernel, numpy on the
+  driver, behind the fresh, store-served and RM3 paths.  It repeats the
+  Spark double arithmetic op for op and quantizes each term score to an
+  integer grid before the per-doc sum, so summation order cannot flip a
+  rank and the DuckDB twin stays hash-identical (same treatment as the
+  PQ/ADC and cosine paths in mmdata.py).
+- Ranking (:func:`_bm25_rank`) runs on the driver as well: consumers get
+  a local frame of |queries| x k rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from columnflow_spark.core.artifacts import artifact
-from columnflow_spark.core.state import checkpoint_df, checkpoint_df_lazy
+from columnflow_spark.core.state import checkpoint_df
 
+from columnflow_spark.functions.math import strict_log
 from columnflow_spark.functions.similarity import cosine
 from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
@@ -56,6 +66,8 @@ _BM25_QUERIES = (
     (2, "window agg join"),
     (3, "customer query value slow"),
 )
+#: the workload's term list, one ``(query_id, w)`` row per query word
+_BM25_TERMS = tuple((qid, w) for qid, text in _BM25_QUERIES for w in text.split(" "))
 _BM25_K1 = 1.2
 _BM25_B = 0.75
 _BM25_TOPK = 10
@@ -143,108 +155,165 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 (Robertson/Sparck Jones; the Lucene ``ln(1 + (N-df+.5)/(df+.5))``
     idf form) top-k documents per keyword query.
 
-    Plan shape: one corpus word explosion feeds (a) the doc-length
-    aggregate and (b) the posting build; postings are restricted to query
-    terms via a broadcast of the literal query-term table *before* the
-    term-frequency aggregation, so the groupBy shuffles posting-volume
-    rows only.  df comes from a window over the retained postings (one
-    partial-agg pass, no vocabulary table).  Per-term scores are
+    Plan shape: ONE shuffle-free collect of the query terms' posting rows
+    with the collection stats observed on the same scan
+    (:func:`_bm25_hits`); :func:`bm25_score` scores them and
+    :func:`_bm25_rank` ranks them on the driver.  Per-term scores are
     quantized to the ``1e-6`` integer grid before the per-doc sum — the
     exact-sum trick that keeps the DuckDB twin hash-identical.
     """
-    return _bm25_rank(_bm25_totals(spark, sf_dir))
+    return _bm25_rank(spark, _bm25_totals(spark, sf_dir))
 
 
-def _bm25_rank(totals: DataFrame) -> DataFrame:
-    """Each query's top-k of BM25 ``totals`` ranked by ``(score_q desc,
-    doc_id)``, sorted by ``(query_id, rk)`` in ONE partition: the result
-    is |queries| x k rows, so a global ``orderBy`` would add a
-    range-partition sampling job to sort what one task sorts."""
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        totals.withColumn("rk", F.row_number().over(win).cast("int"))
-        .filter(F.col("rk") <= _BM25_TOPK)
-        .select("query_id", "doc_id", "score_q", "rk")
-        .coalesce(1)
-        .sortWithinPartitions("query_id", "rk")
+class Bm25Totals(NamedTuple):
+    """Integer-grid BM25 totals as driver arrays, one entry per
+    (query_id, doc_id) pair, sorted by (query_id, doc_id)."""
+
+    query_id: np.ndarray
+    doc_id: np.ndarray
+    score_q: np.ndarray
+
+
+def _sum_per_pair(qid: np.ndarray, doc: np.ndarray, v: np.ndarray) -> Bm25Totals:
+    """The int64 sum of ``v`` per (query_id, doc_id) pair."""
+    o = np.lexsort((doc, qid))
+    qid, doc, v = qid[o], doc[o], v[o].astype(np.int64)
+    head = np.flatnonzero(np.r_[True, (qid[1:] != qid[:-1]) | (doc[1:] != doc[:-1])][: len(v)])
+    return Bm25Totals(qid[head], doc[head], np.add.reduceat(v, head) if len(v) else v)
+
+
+def _half_up(x: np.ndarray) -> np.ndarray:
+    """Spark's HALF_UP ``round(x, 0)`` of non-negative doubles as int64:
+    ``r + (x - r >= 0.5)`` with ``r = floor(x)``, where ``x - r`` is
+    exact."""
+    r = np.floor(x)
+    return (r + (x - r >= 0.5)).astype(np.int64)
+
+
+def bm25_score(terms, postings: pa.Table, n_docs: int, sum_dl: int) -> Bm25Totals:
+    """The BM25 scoring kernel: ``score_q`` per (query, doc) for the term
+    list ``terms`` of ``(query_id, w)`` rows over posting rows ``(w,
+    doc_id, tf, dl)`` (one per term and document) and the exact integer
+    collection stats.
+
+    It repeats the Spark expression ``round(ln(1 + (n_docs - df + .5) /
+    (df + .5)) * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl)) *
+    1e6)`` bit for bit: the idf is :func:`strict_log` (Spark's
+    ``StrictMath.log``) once per term, every other step is the same IEEE
+    double op in the same order, and
+    :func:`_half_up` is Spark's ``round(x, 0)`` for the positive scores
+    BM25 yields.  The per-pair sums are int64, so the result is exact
+    whatever the order."""
+    if not postings.num_rows:
+        empty = np.zeros(0, np.int64)
+        return Bm25Totals(empty, empty, empty)
+    vocab, wi = np.unique(postings.column("w").to_numpy(zero_copy_only=False), return_inverse=True)
+    n, avgdl = float(n_docs), sum_dl / n_docs
+    idf = np.array([strict_log(1 + (n - df + 0.5) / (df + 0.5)) for df in np.bincount(wi).tolist()])
+    tf = postings.column("tf").to_numpy().astype(np.float64)
+    dl = postings.column("dl").to_numpy().astype(np.float64)
+    k1, b = _BM25_K1, _BM25_B
+    x = idf[wi] * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl)) * _BM25_SCALE
+    si = _half_up(x)
+    # the term list joins on w: each (query, term) row adds its term's rows
+    at = {w: i for i, w in enumerate(vocab.tolist())}
+    rows = [(qid, np.flatnonzero(wi == at[w])) for qid, w in terms if w in at]
+    ix = np.concatenate([r for _, r in rows] or [np.zeros(0, np.int64)])
+    qid = np.repeat(np.array([q for q, _ in rows], np.int64), [len(r) for _, r in rows])
+    return _sum_per_pair(qid, postings.column("doc_id").to_numpy()[ix], si[ix])
+
+
+def _rank_np(totals: Bm25Totals, k: int) -> tuple[np.ndarray, ...]:
+    """``(query_id, doc_id, score_q, rk)`` arrays of each query's top-``k``
+    of ``totals`` by ``(score_q desc, doc_id)``, sorted by (query_id, rk)."""
+    qid, doc, score = totals
+    o = np.lexsort((doc, -score, qid))
+    qid, doc, score = qid[o], doc[o], score[o]
+    first = np.r_[True, qid[1:] != qid[:-1]][: len(qid)]
+    rk = np.arange(len(qid)) - np.flatnonzero(first)[np.cumsum(first) - 1] + 1
+    top = rk <= k
+    return qid[top], doc[top], score[top], rk[top]
+
+
+def _bm25_rank(spark: SparkSession, totals: Bm25Totals, k: int = _BM25_TOPK) -> DataFrame:
+    """Each query's top-``k`` of BM25 ``totals`` ranked on the driver by
+    ``(score_q desc, doc_id)``: a local frame ``(query_id, doc_id,
+    score_q, rk)`` sorted by (query_id, rk), so serving it runs no job."""
+    cols = dict(zip(("query_id", "doc_id", "score_q", "rk"), _rank_np(totals, k)))
+    return local_frame(
+        spark, pa.table(cols), "query_id INT, doc_id LONG, score_q LONG, rk INT"
     )
 
 
-#: ``bm25_totals`` session artifact: checkpointed BM25 totals — NINE
-#: queries consume the identical (query_id, doc_id, score_q) frame
-#: (bm25_topk, the three hybrid fusions, RM3's first pass, nDCG's run,
-#: the LTR pool, MMR's lexical arm, ...), each previously recompiling the
-#: full tokenize → explode → postings → totals pipeline (r13, guide §1.2
-#: — the shared-shingle-table pattern; the ``ltr_features`` artifact
-#: below is the same shape).  The frame is query-driven and tiny
-#: (≤ |queries| × matching docs integer rows).  bench.py purges
-#: ``bm25_totals`` on bm25_topk — the family's first line — so the build
-#: cost stays measured cold every sample there.
-@artifact("bm25_totals")
-def _bm25_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-grid BM25 totals ``(query_id, doc_id, score_q)`` for the
-    fixed query workload — the shared scoring pipeline behind
-    :func:`bm25_topk` and the lexical arm of :func:`hybrid_search_rrf`,
-    checkpointed once per (session, sf_dir)."""
-    # LAZY checkpoint (r14, guide §5): the first consumer's own action
-    # materializes the blocks — an eager checkpoint here scheduled a
-    # separate build job whose output the consumer immediately re-read,
-    # which on the cold bm25_topk path (bench purges this artifact every
-    # sample) was a pure extra scheduling round-trip.  Later consumers
-    # still read the materialized blocks; the plan truncation (and the
-    # serve-never-rescans-the-corpus pin) is unchanged.
-    return _bm25_totals_frame(spark, sf_dir).transform(checkpoint_df_lazy)
+def _totals_frame(spark: SparkSession, totals: Bm25Totals) -> DataFrame:
+    """Every BM25 total as a local frame ``(query_id, doc_id, score_q)``,
+    for consumers that join scores rather than ranks."""
+    return local_frame(
+        spark, pa.table(totals._asdict()), "query_id INT, doc_id LONG, score_q LONG"
+    )
 
 
-def _bm25_totals_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UN-checkpointed totals pipeline — the query-driven plan shape
-    (broadcast query terms into the word stream BEFORE the tf
-    aggregation) is pinned by tests/test_retrieval.py on this frame."""
+def _tokens() -> Column:
+    """A document's tokens ``ts``: its ``text`` split on single spaces,
+    empty tokens dropped (the oracle's ``list_filter(string_split(...))``)."""
+    return F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+
+
+def _postings(toks: DataFrame, terms) -> DataFrame:
+    """The posting rows ``(w, doc_id, tf, dl)`` of the words in ``terms``
+    over tokenized documents ``toks(doc_id, ts)``, one per (word,
+    document).  The word filter runs in-row before the explode, so the
+    frame has no shuffle: only documents with a hit explode, each into
+    one row per distinct hit word."""
+    words = F.array(*[F.lit(w) for w in sorted({w for _, w in terms})]).cast("array<string>")
+    hits = toks.filter(F.arrays_overlap("ts", words)).select(
+        "doc_id",
+        F.size("ts").alias("dl"),
+        F.filter("ts", lambda t: F.array_contains(words, t)).alias("hit"),
+    )
+    frame = hits.select("doc_id", "dl", "hit", F.explode(F.array_distinct("hit")).alias("w"))
+    return frame.select(
+        "w",
+        "doc_id",
+        F.size(F.filter("hit", lambda t: t == F.col("w"))).cast("long").alias("tf"),
+        "dl",
+    )
+
+
+def _bm25_hits_frame(spark: SparkSession, sf_dir: str, terms) -> tuple[DataFrame, Observation]:
+    """:func:`_postings` of ``terms`` over the documents table, and the
+    observation of the collection stats ``(n_docs, sum_dl)`` over every
+    document of the same scan."""
+    stats = Observation()
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+    toks = docs.select("doc_id", _tokens()).observe(
+        stats,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.size("ts")).cast("long").alias("sum_dl"),
     )
+    return _postings(toks, terms), stats
 
-    qterms = local_frame(
-        spark,
-        [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
-        "query_id INT, w STRING",
-    )
 
-    # global collection stats: one narrow projection + scalar aggregate
-    # (at 100 TB these are catalog statistics refreshed with the corpus,
-    # not a per-query pass)
-    stats = toks.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        (F.sum(F.size("ts")).cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
+def _bm25_hits(spark: SparkSession, sf_dir: str, terms) -> tuple[pa.Table, int, int]:
+    """``(postings, n_docs, sum_dl)``: :func:`_bm25_hits_frame` collected
+    through Arrow — ONE Spark job for the rows and the stats."""
+    frame, stats = _bm25_hits_frame(spark, sf_dir, terms)
+    postings = frame.toArrow()
+    return postings, stats.get["n_docs"], stats.get["sum_dl"] or 0
 
-    # ONE corpus explosion serves term frequencies AND document length:
-    # dl rides along each word row, so no corpus-grain dl join later
-    words = toks.select("doc_id", F.size("ts").alias("dl"), F.explode("ts").alias("w"))
-    tf = (
-        words.join(F.broadcast(qterms.select("w").distinct()), "w")
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    posting = tf.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("w")))
 
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
-    term_score = (
-        F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * (k1 + 1))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        posting.join(F.broadcast(qterms), "w")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(term_score * _BM25_SCALE, 0).cast("long").alias("si"),
-        )
-    )
-    return scored.groupBy("query_id", "doc_id").agg(F.sum("si").alias("score_q"))
+#: ``bm25_totals`` session artifact: the BM25 totals of the fixed
+#: workload as driver arrays (:class:`Bm25Totals`).  Nine queries consume
+#: them (bm25_topk, the three hybrid fusions, RM3's first pass, nDCG's
+#: run, the LTR pool, ...), so the posting collect and the scoring run
+#: once per session.  They are |queries| x matching docs integers: the
+#: posting-volume collect of :func:`_bm25_hits`, scored on the driver.
+#: bench.py purges ``bm25_totals`` on bm25_topk — the family's first
+#: line — so the build cost stays measured cold every sample there.
+@artifact("bm25_totals")
+def _bm25_totals(spark: SparkSession, sf_dir: str) -> Bm25Totals:
+    """BM25 totals of the fixed query workload over the documents table."""
+    return bm25_score(_BM25_TERMS, *_bm25_hits(spark, sf_dir, _BM25_TERMS))
 
 
 # --- hybrid retrieval: Reciprocal Rank Fusion of the BM25 lexical arm and a
@@ -259,6 +328,40 @@ _RRF_TOPK = 10
 #: two-arm sum is BIGINT addition with identical semantics in both engines —
 #: no float 1/(k+r) summation-order knife edge.
 _RRF_SCALE = 1_000_000_000
+
+
+def _lex_arm(spark: SparkSession, totals: Bm25Totals) -> DataFrame:
+    """The lexical RRF arm: each query's top-``POOL`` BM25 documents as
+    ``(query_id, doc_id, lex_rk)``, a local frame."""
+    return _bm25_rank(spark, totals, _RRF_POOL).select(
+        "query_id", "doc_id", F.col("rk").alias("lex_rk")
+    )
+
+
+def _rrf_fuse(lex: DataFrame, dense: DataFrame) -> DataFrame:
+    """Integer RRF of the ``lex_rk`` and ``dense_rk`` candidate lists:
+    ``SCALE div (K + rank)`` per arm (0 when absent), top-k per query by
+    ``(rrf_q desc, doc_id)`` — shared by every hybrid variant."""
+
+    def arm(rk_col: str):
+        return F.when(
+            F.col(rk_col).isNull(), F.lit(0).cast("long")
+        ).otherwise(F.expr(f"CAST({_RRF_SCALE} div ({_RRF_K} + {rk_col}) AS LONG)"))
+
+    fused = lex.join(dense, ["query_id", "doc_id"], "full_outer").select(
+        "query_id",
+        "doc_id",
+        (arm("lex_rk") + arm("dense_rk")).cast("long").alias("rrf_q"),
+        F.coalesce("lex_rk", F.lit(0)).cast("int").alias("lex_rk"),
+        F.coalesce("dense_rk", F.lit(0)).cast("int").alias("dense_rk"),
+    )
+    fwin = W.partitionBy("query_id").orderBy(F.desc("rrf_q"), F.asc("doc_id"))
+    return (
+        fused.withColumn("rk", F.row_number().over(fwin).cast("int"))
+        .filter(F.col("rk") <= _RRF_TOPK)
+        .select("query_id", "doc_id", "rrf_q", "lex_rk", "dense_rk", "rk")
+        .orderBy("query_id", "rk")
+    )
 
 
 @query(
@@ -331,14 +434,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries| × pool — driver-trivial at any corpus size.  Fused scores are
     ``SCALE div (K + rank)`` integer sums, exact in both engines.
     """
-    # lexical arm: shared integer-grid BM25 totals, ranked per query
-    lwin = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    lex = (
-        _bm25_totals(spark, sf_dir)
-        .withColumn("lex_rk", F.row_number().over(lwin).cast("int"))
-        .filter(F.col("lex_rk") <= _RRF_POOL)
-        .select("query_id", "doc_id", "lex_rk")
-    )
+    # lexical arm: the shared BM25 totals, ranked per query on the driver
+    lex = _lex_arm(spark, _bm25_totals(spark, sf_dir))
 
     # dense arm: probe embeddings broadcast over the corpus, exact cosine;
     # the per-query rank is the two-phase salted top-k so no single task
@@ -361,29 +458,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _RRF_POOL,
         salt_src=F.col("doc_id"),
     ).select("query_id", "doc_id", F.col("rk").cast("int").alias("dense_rk"))
-
-    def _arm(rk_col: str):
-        return F.when(
-            F.col(rk_col).isNull(), F.lit(0).cast("long")
-        ).otherwise(F.expr(f"CAST({_RRF_SCALE} div ({_RRF_K} + {rk_col}) AS LONG)"))
-
-    fused = (
-        lex.join(dense, ["query_id", "doc_id"], "full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            (_arm("lex_rk") + _arm("dense_rk")).cast("long").alias("rrf_q"),
-            F.coalesce("lex_rk", F.lit(0)).cast("int").alias("lex_rk"),
-            F.coalesce("dense_rk", F.lit(0)).cast("int").alias("dense_rk"),
-        )
-    )
-    fwin = W.partitionBy("query_id").orderBy(F.desc("rrf_q"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(fwin).cast("int"))
-        .filter(F.col("rk") <= _RRF_TOPK)
-        .select("query_id", "doc_id", "rrf_q", "lex_rk", "dense_rk", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _rrf_fuse(lex, dense)
 
 
 # --- filtered hybrid retrieval (r11, the filtered-RAG API shape): the
@@ -465,14 +540,11 @@ def hybrid_search_rrf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lang") == _HYB_FILTER_LANG)
         .select("doc_id")
     )
-    lwin = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    lex = (
-        _bm25_totals(spark, sf_dir)
-        .join(allowed, "doc_id", "left_semi")
-        .withColumn("lex_rk", F.row_number().over(lwin).cast("int"))
-        .filter(F.col("lex_rk") <= _RRF_POOL)
-        .select("query_id", "doc_id", "lex_rk")
-    )
+    # the lexical arm ranks the totals of the eligible documents only
+    totals = _bm25_totals(spark, sf_dir)
+    eligible = allowed.join(_totals_frame(spark, totals), "doc_id", "left_semi").toArrow()
+    keep = np.isin(totals.doc_id, eligible.column("doc_id").to_numpy())
+    lex = _lex_arm(spark, Bm25Totals(*(a[keep] for a in totals)))
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     probe_ids = [qid for qid, _ in _BM25_QUERIES]
     probes = emb.filter(F.col("vec_id").isin(probe_ids)).select(
@@ -494,29 +566,7 @@ def hybrid_search_rrf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         _RRF_POOL,
         salt_src=F.col("doc_id"),
     ).select("query_id", "doc_id", F.col("rk").cast("int").alias("dense_rk"))
-
-    def _arm(rk_col: str):
-        return F.when(
-            F.col(rk_col).isNull(), F.lit(0).cast("long")
-        ).otherwise(F.expr(f"CAST({_RRF_SCALE} div ({_RRF_K} + {rk_col}) AS LONG)"))
-
-    fused = (
-        lex.join(dense, ["query_id", "doc_id"], "full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            (_arm("lex_rk") + _arm("dense_rk")).cast("long").alias("rrf_q"),
-            F.coalesce("lex_rk", F.lit(0)).cast("int").alias("lex_rk"),
-            F.coalesce("dense_rk", F.lit(0)).cast("int").alias("dense_rk"),
-        )
-    )
-    fwin = W.partitionBy("query_id").orderBy(F.desc("rrf_q"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(fwin).cast("int"))
-        .filter(F.col("rk") <= _RRF_TOPK)
-        .select("query_id", "doc_id", "rrf_q", "lex_rk", "dense_rk", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _rrf_fuse(lex, dense)
 
 
 # --- index-served hybrid retrieval (VERDICT r5 next #1): the SAME integer
@@ -600,13 +650,7 @@ def hybrid_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_retrieval.py)."""
     from columnflow_spark.queries.annindex import _ensure_index, search_ivfpq_index
 
-    lwin = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    lex = (
-        _bm25_totals(spark, sf_dir)
-        .withColumn("lex_rk", F.row_number().over(lwin).cast("int"))
-        .filter(F.col("lex_rk") <= _RRF_POOL)
-        .select("query_id", "doc_id", "lex_rk")
-    )
+    lex = _lex_arm(spark, _bm25_totals(spark, sf_dir))
 
     path = _ensure_index(spark, sf_dir)
     dense = search_ivfpq_index(
@@ -624,29 +668,7 @@ def hybrid_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id").alias("doc_id"),
         F.col("rk").cast("int").alias("dense_rk"),
     )
-
-    def _arm(rk_col: str):
-        return F.when(
-            F.col(rk_col).isNull(), F.lit(0).cast("long")
-        ).otherwise(F.expr(f"CAST({_RRF_SCALE} div ({_RRF_K} + {rk_col}) AS LONG)"))
-
-    fused = (
-        lex.join(dense, ["query_id", "doc_id"], "full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            (_arm("lex_rk") + _arm("dense_rk")).cast("long").alias("rrf_q"),
-            F.coalesce("lex_rk", F.lit(0)).cast("int").alias("lex_rk"),
-            F.coalesce("dense_rk", F.lit(0)).cast("int").alias("dense_rk"),
-        )
-    )
-    fwin = W.partitionBy("query_id").orderBy(F.desc("rrf_q"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(fwin).cast("int"))
-        .filter(F.col("rk") <= _RRF_TOPK)
-        .select("query_id", "doc_id", "rrf_q", "lex_rk", "dense_rk", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _rrf_fuse(lex, dense)
 
 
 # --- late-interaction (ColBERT-style MaxSim) retrieval: treat each 64-dim
@@ -925,9 +947,10 @@ def colbert_maxsim_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``(doc_id, tf, dl)`` (query-driven: only the fixed query vocabulary's
 # terms are stored — work ∝ posting volume) plus a monoid collection-
 # stats slice ``_stats/batch=<n>`` rows ``(n_docs, sum_dl)``.  Serving
-# reads the accumulated store: df from a window over the stored
-# postings, avgdl from the exact integer stat sums — every scoring
-# input is bit-identical to the from-scratch pass, so this registers
+# collects the accumulated postings once and scores them with
+# ``bm25_score``: df counted over the stored postings, avgdl from the
+# exact integer stat sums — every scoring input is bit-identical to the
+# from-scratch pass, so this registers
 # under bm25_topk's SAME oracle (hash equality IS the maintenance-
 # correctness proof, the incremental_agg_merge pattern). ---
 _POSTINGS_FORMAT = 1
@@ -944,23 +967,9 @@ def upsert_postings_frame(docs: DataFrame, path: str, *, batch: int) -> str:
     """Tokenize one ``(doc_id, text)`` ingest frame, keep postings for the
     query vocabulary only, and upsert them (plus the batch's monoid
     collection stats)."""
-    spark = docs.sparkSession
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    qterms = local_frame(
-        spark,
-        sorted({(w,) for _, text in _BM25_QUERIES for w in text.split(" ")}),
-        "w STRING",
-    )
-    words = toks.select("doc_id", F.size("ts").alias("dl"), F.explode("ts").alias("w"))
-    posting = (
-        words.join(F.broadcast(qterms), "w")
-        .groupBy("w", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
+    toks = docs.select("doc_id", _tokens())
     _upsert_stats(toks, path, batch=batch)
-    return _POSTINGS.append(posting, path, batch=batch)
+    return _POSTINGS.append(_postings(toks, _BM25_TERMS), path, batch=batch)
 
 
 def _upsert_stats(toks: DataFrame, path: str, *, batch: int, sign: int = 1) -> None:
@@ -990,41 +999,18 @@ def upsert_postings_batch(
     return upsert_postings_frame(docs, path, batch=batch)
 
 
-def bm25_totals_from_store(spark: SparkSession, path: str) -> DataFrame:
-    """Integer-grid BM25 totals served from the postings store —
-    bit-identical inputs to :func:`_bm25_totals`: df is a window over the
-    accumulated postings (each doc posts from exactly one batch), n_docs
-    and avgdl derive from exact integer stat sums (the double division is
-    the identical single fp op the from-scratch pass performs).  The
-    stat sums are taken on the driver from the ``_stats`` sidecar."""
+def bm25_totals_from_store(spark: SparkSession, path: str) -> Bm25Totals:
+    """BM25 totals served from the postings store: ONE collect of the
+    stored posting rows (each doc posts from exactly one batch), scored by
+    :func:`bm25_score` with the exact integer stat sums of the ``_stats``
+    sidecar, read on the driver — the same kernel inputs as the
+    from-scratch pass."""
     import pyarrow.compute as pc  # noqa: PLC0415
 
-    posting_rows = _POSTINGS.scan(spark, path).select("doc_id", "w", "tf", "dl")
+    postings = _POSTINGS.scan(spark, path).select("w", "doc_id", "tf", "dl").toArrow()
     stats = read_sidecar(path, "_stats", ["n_docs", "sum_dl"])
-    nd, sd = (float(pc.sum(stats.column(k)).as_py() or 0) for k in ("n_docs", "sum_dl"))
-    stat = local_frame(spark, [(nd, sd / nd if nd else None)], "n_docs double, avgdl double")
-    posting = posting_rows.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("w")))
-    qterms = local_frame(
-        spark,
-        [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
-        "query_id INT, w STRING",
-    )
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
-    term_score = (
-        F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * (k1 + 1))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        posting.join(F.broadcast(qterms), "w")
-        .crossJoin(F.broadcast(stat))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(term_score * _BM25_SCALE, 0).cast("long").alias("si"),
-        )
-    )
-    return scored.groupBy("query_id", "doc_id").agg(F.sum("si").alias("score_q"))
+    n_docs, sum_dl = (pc.sum(stats.column(k)).as_py() or 0 for k in ("n_docs", "sum_dl"))
+    return bm25_score(_BM25_TERMS, postings, n_docs, sum_dl)
 
 
 def _ensure_postings_store(spark: SparkSession, sf_dir: str) -> str:
@@ -1051,7 +1037,7 @@ def bm25_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares ``bm25_topk``'s oracle, so hash equality proves incremental
     index maintenance loses nothing vs the from-scratch pass."""
     path = _ensure_postings_store(spark, sf_dir)
-    return _bm25_rank(bm25_totals_from_store(spark, path))
+    return _bm25_rank(spark, bm25_totals_from_store(spark, path))
 
 
 # --- deletion propagation through the maintained index (the
@@ -1080,10 +1066,7 @@ def delete_docs_from_postings(
     deleted = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]).filter(
         delete_pred
     )
-    toks = deleted.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    _upsert_stats(toks, path, batch=batch, sign=-1)
+    _upsert_stats(deleted.select("doc_id", _tokens()), path, batch=batch, sign=-1)
     return path
 
 
@@ -1122,7 +1105,7 @@ def bm25_postings_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reduced corpus — hash equality proves the delete left exactly the
     right index behind."""
     path = _ensure_deleted_postings_store(spark, sf_dir)
-    return _bm25_rank(bm25_totals_from_store(spark, path))
+    return _bm25_rank(spark, bm25_totals_from_store(spark, path))
 
 
 # --- RM3 pseudo-relevance feedback (Lavrenko/Croft relevance models; the
@@ -1186,53 +1169,34 @@ def bm25_rm3_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned RM3 expansion terms per query: ``(query_id, w, wt,
     trk)`` — the relevance-model vocabulary of the pseudo-relevant pool
     minus the original query terms, ranked by exact-integer model
-    weight.
+    weight (:func:`_rm3_expansion`, a local frame)."""
+    return local_frame(
+        spark, _rm3_expansion(spark, sf_dir), "query_id INT, w STRING, wt LONG, trk INT"
+    )
 
-    Plan shape: the feedback pool is BOUNDED (|queries| x {n}) and
-    broadcasts into the corpus word stream, so the model build shuffles
-    fb-doc words only; the original-term anti-join is a broadcast of the
-    literal query table."""
-    totals = _bm25_totals(spark, sf_dir)
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    # the pool is BOUNDED (|queries| x N rows) and referenced by BOTH the
-    # model-build join and the fb-doc broadcast: materialize it once so
-    # the first-pass scoring subtree is not compiled into the plan twice
-    fb = (
-        totals.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= _RM3_FB_DOCS)
-        .select("query_id", "doc_id", "score_q")
-        .transform(checkpoint_df)
-    )
+
+def _rm3_expansion(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int, int]]:
+    """``(query_id, w, wt, trk)`` rows of the RM3 expansion, sorted by
+    (query_id, trk), built on the driver: the feedback pool is each
+    query's BM25 top-N, ONE collect fetches the pool documents' tokens
+    (at most |queries| x N documents), and the model weights
+    ``sum_d(score_q * tf // dl)`` are exact Python integers."""
+    from collections import Counter  # noqa: PLC0415
+
+    qid, doc, score, _ = _rank_np(_bm25_totals(spark, sf_dir), _RM3_FB_DOCS)
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    words = toks.select("doc_id", F.size("ts").alias("dl"), F.explode("ts").alias("w"))
-    fb_docs = fb.select("doc_id").distinct()
-    wtf = (
-        words.join(F.broadcast(fb_docs), "doc_id")
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    rm = (
-        fb.join(wtf, "doc_id")
-        .select("query_id", "w", F.expr("score_q * tf div dl").alias("c"))
-        .groupBy("query_id", "w")
-        .agg(F.sum("c").cast("long").alias("wt"))
-    )
-    qterms = local_frame(
-        spark,
-        [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
-        "query_id INT, w STRING",
-    )
-    fresh = rm.join(F.broadcast(qterms), ["query_id", "w"], "left_anti")
-    twin = W.partitionBy("query_id").orderBy(F.desc("wt"), F.asc("w"))
-    return (
-        fresh.withColumn("trk", F.row_number().over(twin).cast("int"))
-        .filter(F.col("trk") <= _RM3_EXP_TERMS)
-        .select("query_id", "w", "wt", "trk")
-        .orderBy("query_id", "trk")
-    )
+    pool = docs.filter(F.col("doc_id").isin(sorted(set(doc.tolist()))))
+    toks = {r.doc_id: r.ts for r in pool.select("doc_id", _tokens()).collect()}
+    wt: Counter = Counter()
+    for q, d, s in zip(qid.tolist(), doc.tolist(), score.tolist()):
+        for w, tf in Counter(toks[d]).items():
+            wt[q, w] += s * tf // len(toks[d])
+    out, seen = [], Counter()
+    for (q, w), v in sorted(wt.items(), key=lambda kv: (kv[0][0], -kv[1], kv[0][1])):
+        if (q, w) not in _BM25_TERMS and seen[q] < _RM3_EXP_TERMS:
+            seen[q] += 1
+            out.append((q, w, v, seen[q]))
+    return out
 
 
 @query(
@@ -1285,71 +1249,22 @@ def bm25_rm3_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bm25_rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-pass BM25 under the RM3-expanded query: original terms at
-    weight {w1}/10, the learned expansion terms at {w2}/10, exact
-    integer fusion, top-{k} per query.
+    weight 7/10, the learned expansion terms at 3/10, exact integer
+    fusion, top-k per query.
 
-    Plan shape: the second corpus pass scores expansion terms exactly
-    like the first pass scores query terms (broadcast term list into
-    the word stream BEFORE the tf aggregation — posting-volume shuffles
-    only), and the fusion is a (query, doc)-keyed outer join of two
-    already-aggregated score tables."""
+    Plan shape: the second pass scores the expansion terms exactly like
+    the first pass scores the query terms — one shuffle-free posting
+    collect (:func:`_bm25_hits`) and :func:`bm25_score` — and the fusion
+    and rank are int64 sums and a sort on the driver."""
     totals = _bm25_totals(spark, sf_dir)
-    exp = (
-        bm25_rm3_terms.__wrapped__(spark, sf_dir)
-        .select("query_id", "w")
-        .transform(checkpoint_df)
+    exp = [(q, w) for q, w, _, _ in _rm3_expansion(spark, sf_dir)]
+    etotals = bm25_score(exp, *_bm25_hits(spark, sf_dir, exp))
+    fused = _sum_per_pair(
+        np.r_[totals.query_id, etotals.query_id],
+        np.r_[totals.doc_id, etotals.doc_id],
+        np.r_[_RM3_W_ORIG * totals.score_q, _RM3_W_EXP * etotals.score_q],
     )
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    stats = toks.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        (F.sum(F.size("ts")).cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    words = toks.select("doc_id", F.size("ts").alias("dl"), F.explode("ts").alias("w"))
-    etf = (
-        words.join(F.broadcast(exp.select("w").distinct()), "w")
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    eposting = etf.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("w")))
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
-    term_score = (
-        F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * (k1 + 1))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    escored = (
-        eposting.join(F.broadcast(exp), "w")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(term_score * _BM25_SCALE, 0).cast("long").alias("si"),
-        )
-    )
-    etotals = escored.groupBy("query_id", "doc_id").agg(
-        F.sum("si").cast("long").alias("escore")
-    )
-    fused = (
-        totals.join(etotals, ["query_id", "doc_id"], "full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            (
-                F.lit(_RM3_W_ORIG) * F.coalesce(F.col("score_q"), F.lit(0))
-                + F.lit(_RM3_W_EXP) * F.coalesce(F.col("escore"), F.lit(0))
-            ).cast("long").alias("score_q"),
-        )
-    )
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(win).cast("int"))
-        .filter(F.col("rk") <= _BM25_TOPK)
-        .select("query_id", "doc_id", "score_q", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _bm25_rank(spark, fused)
 
 
 # --- retrieval quality metrics: MRR@10 and nDCG@10 for the BM25 run
@@ -1441,23 +1356,12 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query-term postings (posting-volume shuffle, never a corpus
     text rescan); the judged run and the ideal-DCG table are
     |queries| x k grain."""
-    totals = _bm25_totals(spark, sf_dir)
-    win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    run = (
-        totals.withColumn("rk", F.row_number().over(win).cast("int"))
-        .filter(F.col("rk") <= _EVAL_K)
-        .select("query_id", "doc_id", "rk")
+    run = _bm25_rank(spark, _bm25_totals(spark, sf_dir), _EVAL_K).select(
+        "query_id", "doc_id", "rk"
     )
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    toks = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
-    )
-    words = toks.select("doc_id", F.explode("ts").alias("w"))
-    qterms = local_frame(
-        spark,
-        [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
-        "query_id INT, w STRING",
-    )
+    words = docs.select("doc_id", F.explode(_tokens()).alias("w"))
+    qterms = local_frame(spark, _BM25_TERMS, "query_id INT, w STRING")
     nterms = {qid: len(set(text.split(" "))) for qid, text in _BM25_QUERIES}
     nt = local_frame(spark, list(nterms.items()), "query_id INT, nt INT")
     hits = (
@@ -1670,12 +1574,7 @@ def _ltr_feat_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once per (session, sf_dir): |queries| x <=2·pool rows;
     training replays K aggregations over it, never the corpus."""
     totals = _bm25_totals(spark, sf_dir)
-    lwin = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    lex = (
-        totals.withColumn("rk", F.row_number().over(lwin))
-        .filter(F.col("rk") <= _RRF_POOL)
-        .select("query_id", "doc_id")
-    )
+    lex = _lex_arm(spark, totals).select("query_id", "doc_id")
     emb = spread(load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]))
     probe_ids = [qid for qid, _ in _BM25_QUERIES]
     probes = emb.filter(F.col("vec_id").isin(probe_ids)).select(
@@ -1690,14 +1589,8 @@ def _ltr_feat_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = lex.unionAll(dense).distinct().transform(checkpoint_df)
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    words = docs.select(
-        "doc_id", F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("w")
-    )
-    qterms = local_frame(
-        spark,
-        [(qid, w) for qid, text in _BM25_QUERIES for w in text.split(" ")],
-        "query_id INT, w STRING",
-    )
+    words = docs.select("doc_id", F.explode(_tokens()).alias("w"))
+    qterms = local_frame(spark, _BM25_TERMS, "query_id INT, w STRING")
     nt = local_frame(
         spark,
         [(qid, len(set(text.split(" ")))) for qid, text in _BM25_QUERIES],
@@ -1712,7 +1605,7 @@ def _ltr_feat_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     qe = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
     de = emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("de"))
     feat = (
-        pool.join(totals, ["query_id", "doc_id"], "left")
+        pool.join(_totals_frame(spark, totals), ["query_id", "doc_id"], "left")
         .join(qe, "query_id")
         .join(de, "doc_id")
         .join(hits, ["query_id", "doc_id"], "left")

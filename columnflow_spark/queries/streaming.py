@@ -1379,7 +1379,7 @@ from columnflow_spark.queries.retrieval import BM25_TOPK_ORACLE as _BM25_ORACLE
 @query("streaming_postings_ingest", oracle=_BM25_ORACLE)
 def streaming_postings_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnflow_spark.queries.retrieval import (
-        _BM25_TOPK,
+        _bm25_rank,
         bm25_totals_from_store,
         upsert_postings_frame,
     )
@@ -1393,16 +1393,8 @@ def streaming_postings_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             upsert_postings_frame(batch_df, store, batch=int(batch_id))
 
         _drain(rp.stream.select("doc_id", "text"), sink)
-        totals = bm25_totals_from_store(spark, store)
-        win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-        return (
-            totals.withColumn("rk", F.row_number().over(win).cast("int"))
-            .filter(F.col("rk") <= _BM25_TOPK)
-            .select("query_id", "doc_id", "score_q", "rk")
-            .orderBy("query_id", "rk")
-            .transform(checkpoint_df)
-        )
-
+        # the served totals are collected before the store goes away
+        return _bm25_rank(spark, bm25_totals_from_store(spark, store))
 
 
 # --- streaming ANN-index maintenance (the ingest deployment of the

@@ -47,38 +47,50 @@ DEFAULT_ROWS_PER_FILE = 50_000
 DEFAULT_TARGET_FILE_BYTES = 512 * 1024 * 1024
 
 
-def _sorted_field_expr(field: T.StructField, prefix: str) -> Column:
-    """Recursively re-project a field with struct members in sorted order
-    (arrays of structs included)."""
-    dt = field.dataType
-    path = f"{prefix}`{field.name}`"
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _is_sorted(dt: T.DataType) -> bool:
+    """True when every struct level of ``dt``, inside arrays too, lists
+    its fields in name order."""
+    if isinstance(dt, T.StructType):
+        return dt.names == sorted(dt.names) and all(_is_sorted(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _is_sorted(dt.elementType)
+    return True
+
+
+def _sorted_sql(expr: str, dt: T.DataType, depth: int = 0) -> str:
+    """SQL re-projecting ``expr`` of type ``dt`` with the members of
+    every struct level (inside arrays too) in sorted order; sorted
+    levels are kept as they are."""
+    if _is_sorted(dt):
+        return expr
     if isinstance(dt, T.StructType):
         members = sorted(dt.fields, key=lambda f: f.name)
-        return F.struct(*[_sorted_field_expr(m, f"{path}.") for m in members]).alias(field.name)
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-        members = sorted(dt.elementType.fields, key=lambda f: f.name)
-
-        def rebuild(x: Column) -> Column:
-            return F.struct(*[_rebuild_nested(x[m.name], m).alias(m.name) for m in members])
-
-        return F.transform(F.expr(path), rebuild).alias(field.name)
-    return F.expr(path).alias(field.name)
-
-
-def _rebuild_nested(col: Column, field: T.StructField) -> Column:
-    dt = field.dataType
-    if isinstance(dt, T.StructType):
-        members = sorted(dt.fields, key=lambda f: f.name)
-        return F.struct(*[_rebuild_nested(col[m.name], m).alias(m.name) for m in members])
-    return col
+        return "named_struct(" + ", ".join(
+            "'" + m.name.replace("\\", "\\\\").replace("'", "\\'") + "', "
+            + _sorted_sql(f"{expr}.{_ident(m.name)}", m.dataType, depth)
+            for m in members
+        ) + ")"
+    x = f"x{depth}"  # an unsorted array
+    return f"transform({expr}, {x} -> {_sorted_sql(x, dt.elementType, depth + 1)})"
 
 
 def sort_fields(df: DataFrame) -> DataFrame:
     """Recursively sort all (nested) field names — the reference's
     ``sort_ak_fields`` (columnar_util.py:1027) giving deterministic
-    layouts independent of operator insertion order."""
+    layouts independent of operator insertion order.  A frame already
+    in that order comes back unchanged (a schema walk, no plan change);
+    otherwise the projection is ONE ``selectExpr`` of SQL strings, not a
+    py4j ``Column`` per field."""
+    if _is_sorted(df.schema):
+        return df
     top = sorted(df.schema.fields, key=lambda f: f.name)
-    return df.select(*[_sorted_field_expr(f, "") for f in top])
+    return df.selectExpr(
+        *[f"{_sorted_sql(_ident(f.name), f.dataType)} AS {_ident(f.name)}" for f in top]
+    )
 
 
 def write_events(

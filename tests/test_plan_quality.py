@@ -585,25 +585,25 @@ _PLAN_BUDGETS = {
     "corpus_curation_pipeline": (3, 1),
     "dedup_connected_components": (0, 1),
     "bpe_encode_corpus": (2, 1),
-    # query-driven postings: the corpus moves once into the tf aggregate,
-    # df/rank/topk shuffles are posting-volume
-    "bm25_topk": (7, 2),
+    # the posting collect and the scoring run while the query builds
+    # (driver-side kernel and rank): its frame is the local top-k relation
+    "bm25_topk": (0, 0),
     # batch fp scan + store scan, shuffle join + window + final sort
     "dedup_incremental_store": (3, 2),
     # per-round state is checkpointed: the visible (final) plan segment
     # is the top-20 window over the last checkpoint — no residual
     # exchanges or rescans may leak past a checkpoint boundary
     "pagerank_trade_graph": (0, 0),
-    # lexical arm = bm25 totals (7/2) + its rank window; dense arm = probe
-    # broadcast + TWO-PHASE salted rank windows (the +1 exchange buys the
-    # no-single-task-sort guarantee) over 2 embeddings scans; fusion join
-    # + final window/sort make up the rest
-    "hybrid_search_rrf": (14, 4),
-    # lexical arm's rank window over the bm25 totals; the dense arm is a
-    # local relation (its probe-pruned candidate scan runs while the query
-    # builds, checked in test_hybrid_indexed_dense_arm_prunes_partitions);
+    # lexical arm = the driver-ranked local top-pool (0/0); dense arm =
+    # probe broadcast + TWO-PHASE salted rank windows (the +1 exchange
+    # buys the no-single-task-sort guarantee) over 2 embeddings scans;
     # fusion join + final window/sort make up the rest
-    "hybrid_search_rrf_indexed": (5, 0),
+    "hybrid_search_rrf": (8, 2),
+    # both arms are local relations: the driver-ranked lexical top-pool,
+    # and the dense arm whose probe-pruned candidate scan runs while the
+    # query builds (checked in test_hybrid_indexed_dense_arm_prunes_partitions);
+    # fusion join + final window/sort make up the rest
+    "hybrid_search_rrf_indexed": (4, 0),
     # probe-pruned candidate read + vector equi-join + salted two-phase rank
     "colbert_maxsim_routed_topk": (5, 3),
     # batch assignment checkpointed once: only the store scan remains —
@@ -725,11 +725,11 @@ _PLAN_BUDGETS = {
     # join back + the doc rebuild agg (count pass + rewrite pass — the
     # two-pass FineWeb line-dedup envelope)
     "boilerplate_segment_removal": (5, 4),
-    # r9 RM3: the model build runs over the checkpointed BOUNDED fb pool
-    # (first-pass scoring is NOT compiled twice); the second pass mirrors
-    # the first-pass posting shape for the expansion terms + outer fusion
-    "bm25_rm3_terms": (7, 2),
-    "bm25_rm3_topk": (12, 8),
+    # r9 RM3: the feedback pool's tokens, the expansion terms' postings,
+    # the model, fusion and ranks are collected or computed while the
+    # query builds: both frames are local relations
+    "bm25_rm3_terms": (0, 0),
+    "bm25_rm3_topk": (0, 0),
     # r9 HITS: final plan reads the checkpointed last half-rounds only
     # (loop body asserted in test_loop_body_plans.py)
     "graph_hits_scores": (2, 0),
@@ -767,9 +767,9 @@ _PLAN_BUDGETS = {
     # r9 Poisson bootstrap: ONE exploded aggregation (corpus x B with
     # map-side partials) + the |groups| x B CI rank + full-mean join
     "bootstrap_mean_ci": (4, 4),
-    # r9 retrieval eval: BM25 run (posting shape) + conjunctive gold
-    # aggregation + |queries| x k judged/ideal joins
-    "retrieval_eval_ndcg": (12, 4),
+    # r9 retrieval eval: driver-ranked BM25 run (local) + conjunctive
+    # gold aggregation + |queries| x k judged/ideal joins
+    "retrieval_eval_ndcg": (6, 0),
     # r9 split/calibration: component solve off the checkpointed edge
     # list + in-row hash; calibration (r10 histogram-rank rewrite) pays
     # 3 exchanges — (source, n_chars) hist agg, the bounded cum window,
@@ -810,10 +810,11 @@ _PLAN_BUDGETS = {
     # ann_ivfpq_topk (10, 5) + the label pre-filter's pruned scan/join
     "ann_graph_filtered_topk": (4, 1),
     "ann_ivfpq_filtered_topk": (11, 6),
-    # filtered hybrid = hybrid_search_rrf (14, 4) with the lang filter's
-    # pruned documents scans semi-joined into each arm (+2 scans, the
-    # semi joins fold into existing exchanges)
-    "hybrid_search_rrf_filtered": (14, 6),
+    # filtered hybrid = hybrid_search_rrf (8, 2) with the lang filter's
+    # pruned documents scan semi-joined into the dense arm (+1 scan, the
+    # semi join folds into an existing exchange); the lexical arm's
+    # eligibility collect runs while the query builds
+    "hybrid_search_rrf_filtered": (8, 3),
     # r10 quantile sketch: distinct + salted bottom-k + sketch-grain
     # summarize; the incremental serve reads only the store; the
     # sliding form works off the checkpointed daily-sketch table

@@ -45,34 +45,205 @@ def test_bm25_top_docs_contain_query_terms(spark, sf_dir, bm25_rows):
 
 
 def test_bm25_plan_is_query_driven(spark, sf_dir):
-    """The corpus explosion must join the (broadcast) query-term table
-    BEFORE the term-frequency aggregation — posting volume, not corpus
-    volume, enters the shuffle — and the corpus parquet is scanned at
-    most twice (postings + collection stats)."""
-    # r13: the totals are a session-checkpointed artifact — the
-    # query-driven property is pinned on the BUILD pipeline (what the
-    # checkpoint materializes), not the serve plan over the checkpoint
-    from columnflow_spark.queries.retrieval import _bm25_totals_frame
+    """The posting collect behind every BM25 path filters each document's
+    tokens to the query terms BEFORE the explode — only documents with a
+    hit become rows, so posting volume, not corpus volume, leaves the
+    scan — with no shuffle at all and at most two corpus scans; serving
+    the ranked result never rescans the corpus."""
+    from columnflow_spark.queries.retrieval import _BM25_TERMS, _bm25_hits_frame
 
-    df = _bm25_totals_frame(spark, sf_dir)
+    df, _ = _bm25_hits_frame(spark, sf_dir, _BM25_TERMS)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     plan = buf.getvalue()
-    tree = plan.split("\n\n")[0]
-    assert tree.count("Scan parquet") <= 2, tree
-    gen = next(i for i, ln in enumerate(tree.splitlines()) if "Generate" in ln)
-    above = tree.splitlines()[:gen]
-    # the first plan node above the explosion on its branch is the
-    # broadcast join with the query terms, then the partial aggregate
-    assert any("BroadcastHashJoin" in ln for ln in above), tree
-    # and the serve over the checkpoint must never rescan the corpus
+    tree = plan.split("\n\n")[0].splitlines()
+    assert not any("Exchange" in ln for ln in tree), plan
+    assert sum("Scan parquet" in ln for ln in tree) <= 2, plan
+    # the term filter sits below (runs before) the one explosion
+    gen = next(i for i, ln in enumerate(tree) if "Generate" in ln)
+    filters = [ln for ln in tree[gen + 1 :] if "Filter (" in ln]
+    assert filters, plan
+    nid = filters[0].split("(")[-1].rstrip(")")
+    cond = next(ln for ln in plan.split(f"({nid}) Filter")[1].splitlines() if "Condition" in ln)
+    assert all(w in cond for _, w in _BM25_TERMS), cond
+    assert sum("Generate" in ln for ln in tree) == 1, plan
     sdf = all_queries()["bm25_topk"](spark, sf_dir)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         sdf.explain("formatted")
     stree = buf.getvalue().split("\n\n")[0]
     assert "Scan parquet" not in stree, stree
+
+
+def _spark_si(spark, rows):
+    """``{key: (x, si)}``: the per-term BM25 score as Spark computed it
+    before the driver kernel, the ``F.log`` expression scaled to the grid
+    (``x``) and its ``F.round`` (``si``), over ``rows`` of ``(key,
+    n_docs, sum_dl, df, tf, dl)``; avgdl is the double division of the
+    integer stats."""
+    import pyspark.sql.functions as F
+
+    from columnflow_spark.queries.retrieval import _BM25_B, _BM25_K1, _BM25_SCALE
+    from columnflow_spark.sources.sinks import local_frame
+
+    frame = local_frame(
+        spark, rows, "key long, n_docs long, sum_dl long, df long, tf long, dl int"
+    )
+    n_docs = F.col("n_docs").cast("double")
+    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
+    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
+    term_score = (
+        F.log(1 + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5))
+        * (F.col("tf") * (k1 + 1))
+        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl))
+    )
+    x = term_score * _BM25_SCALE
+    out = frame.select("key", x.alias("x"), F.round(x, 0).cast("long").alias("si"))
+    return {r.key: (r.x, r.si) for r in out.collect()}
+
+
+def test_bm25_kernel_matches_spark_arithmetic(spark, monkeypatch):
+    """Seeded property test: the driver kernel's per-term score equals
+    Spark's double expression bit for bit over >= 10^4 rows of
+    (n_docs, sum_dl, df, tf, dl), edge cases df = n_docs and tf = 1
+    included — both the scaled double before rounding and the rounded
+    grid value.  Each term is its own query, so each (query, doc) total
+    IS one term score."""
+    import numpy as np
+    import pyarrow as pa
+
+    from columnflow_spark.queries import retrieval
+
+    doubles = []
+    half_up = retrieval._half_up
+    monkeypatch.setattr(retrieval, "_half_up", lambda x: doubles.append(x) or half_up(x))
+    rng = np.random.default_rng(16)
+    rows, got = [], {}
+    for group in range(40):
+        # small collections reach df = n_docs; large ones stress the idf
+        n_docs = int(rng.integers(1, 200)) if group % 2 else int(rng.integers(200, 10**7))
+        sum_dl = n_docs * int(rng.integers(1, 300)) + int(rng.integers(0, n_docs))
+        top = min(n_docs, 200)
+        dfs = sorted({1, min(n_docs, 2), top, *rng.integers(1, top + 1, 6).tolist()})
+        terms, post = [], []
+        for t, df in enumerate(dfs):
+            terms.append((t, f"w{t}"))
+            tf = np.where(rng.random(df) < 0.3, 1, rng.integers(1, 40, df))
+            dl = tf + rng.integers(0, 2000, df)
+            for d in range(df):
+                post.append((f"w{t}", d, int(tf[d]), int(dl[d])))
+                rows.append(((group * 16 + t) * 1000 + d, n_docs, sum_dl, df, int(tf[d]), int(dl[d])))
+        w, doc, tf, dl = zip(*post)
+        table = pa.table({"w": w, "doc_id": doc, "tf": tf, "dl": pa.array(dl, pa.int32())})
+        totals = retrieval.bm25_score(terms, table, n_docs, sum_dl)
+        # the kernel scores the posting rows in their (w, doc) order
+        x = dict(zip(((group * 16 + int(w[1:])) * 1000 + d for w, d, _, _ in post), doubles[-1]))
+        for q, d, si in zip(*(a.tolist() for a in totals)):
+            key = (group * 16 + q) * 1000 + d
+            got[key] = (x[key], si)
+    assert len(rows) >= 10_000 and any(r[3] == r[1] for r in rows) and any(r[4] == 1 for r in rows)
+    assert got == _spark_si(spark, rows)
+
+
+def test_bm25_formula_has_one_home():
+    """The BM25 parameters are read in exactly two kinds of place in the
+    package: the driver kernel ``bm25_score`` and the oracle SQL
+    (f-strings).  A second Spark or numpy spelling of the formula would
+    read them anywhere else, and fails here."""
+    import ast
+    import pathlib
+
+    import columnflow_spark
+
+    names = {"_BM25_K1", "_BM25_B"}
+    stray = []
+    for path in pathlib.Path(columnflow_spark.__file__).parent.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and node.id in names:
+                if isinstance(node.ctx, ast.Store):
+                    continue  # the definition
+            elif not (isinstance(node, ast.Attribute) and node.attr in names):
+                continue
+            up = node
+            while up in parent and not (
+                isinstance(up, ast.JoinedStr)
+                or isinstance(up, ast.FunctionDef) and up.name == "bm25_score"
+            ):
+                up = parent[up]
+            if up not in parent:
+                stray.append(f"{path.name}:{node.lineno}")
+    assert not stray, stray
+
+
+def test_strict_log_is_spark_log(spark):
+    """``strict_log`` equals Spark's ``F.log`` bit for bit across the
+    double range: wide random magnitudes, arguments within 2**-20 of 1
+    (fdlibm's short branch), powers of two and subnormals."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from columnflow_spark.functions.math import strict_log
+    from columnflow_spark.sources.sinks import local_frame
+
+    rng = np.random.default_rng(5)
+    one = np.nextafter(1.0, np.inf) - 1.0
+    xs = np.concatenate([
+        10.0 ** rng.uniform(-300, 300, 4000),
+        1.0 + rng.integers(-2**32, 2**32, 2000) * one,
+        1.0 + rng.uniform(-1, 1, 2000),
+        2.0 ** np.arange(-1074, 1024, 7, dtype=np.float64),
+        rng.integers(1, 2**52, 200) * 5e-324,
+    ])
+    frame = local_frame(spark, [(i, float(x)) for i, x in enumerate(xs)], "i int, x double")
+    want = [r.y for r in frame.orderBy("i").select(F.log("x").alias("y")).collect()]
+    assert [strict_log(float(x)) for x in xs] == want
+
+
+def test_half_up_is_spark_round(spark):
+    """The kernel's rounding equals Spark's ``round(x, 0)`` on the knife
+    edges a random score never hits: exact halves, their float
+    neighbours and values whose shortest decimal form ends in 5."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from columnflow_spark.queries.retrieval import _half_up
+    from columnflow_spark.sources.sinks import local_frame
+
+    halves = np.arange(0, 5000) + 0.5
+    xs = np.concatenate([
+        halves,
+        np.nextafter(halves, 0),
+        np.nextafter(halves, np.inf),
+        np.array([0.0, 0.49999999999999994, 2.5e15 + 0.5, 4503599627370495.5]),
+        np.random.default_rng(7).random(2000) * 1e7,
+    ])
+    frame = local_frame(spark, [(i, float(x)) for i, x in enumerate(xs)], "i int, x double")
+    want = [r.si for r in frame.orderBy("i").select(F.round("x", 0).cast("long").alias("si")).collect()]
+    assert _half_up(xs).tolist() == want
+
+
+def test_bm25_serving_job_counts(spark, sf_dir):
+    """The BM25 reads run on the driver: a cold bm25_topk is the one
+    posting collect (the stats ride on it), a warm one reads the session
+    totals and runs no job, and a warm store-served read is one collect
+    of the stored postings."""
+    from columnflow_spark.core.artifacts import purge
+    from columnflow_spark.session import count_jobs
+    from columnflow_spark.sources import load_table
+
+    qs = all_queries()
+    load_table(spark, sf_dir, "documents")  # the base table artifact
+    purge("bm25_totals")
+    _, cold = count_jobs(spark, lambda: qs["bm25_topk"](spark, sf_dir).collect())
+    _, warm = count_jobs(spark, lambda: qs["bm25_topk"](spark, sf_dir).collect())
+    qs["bm25_incremental_postings"](spark, sf_dir).collect()  # builds the store
+    _, served = count_jobs(
+        spark, lambda: qs["bm25_incremental_postings"](spark, sf_dir).collect()
+    )
+    assert (cold, warm, served) == (1, 0, 1)
 
 
 def test_hybrid_rrf_fusion_invariants(spark, sf_dir):
@@ -185,7 +356,7 @@ def test_postings_store_incremental_equals_from_scratch(spark, sf_dir, tmp_path)
     import pyspark.sql.functions as F
 
     from columnflow_spark.queries.retrieval import (
-        _BM25_TOPK,
+        _bm25_rank,
         bm25_totals_from_store,
         upsert_postings_batch,
     )
@@ -194,14 +365,7 @@ def test_postings_store_incremental_equals_from_scratch(spark, sf_dir, tmp_path)
     n = load_table(spark, sf_dir, "documents", columns=["doc_id"]).count()
 
     def ranked(path):
-        from pyspark.sql import Window as W
-
-        totals = bm25_totals_from_store(spark, path)
-        win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-        df = (
-            totals.withColumn("rk", F.row_number().over(win))
-            .filter(F.col("rk") <= _BM25_TOPK)
-        )
+        df = _bm25_rank(spark, bm25_totals_from_store(spark, path))
         return sorted((r.query_id, r.doc_id, r.score_q, r.rk) for r in df.collect())
 
     two = str(tmp_path / "two")
@@ -225,22 +389,16 @@ def test_postings_delete_equals_reduced_rebuild(spark, sf_dir, tmp_path):
     import os
 
     import pyspark.sql.functions as F
-    from pyspark.sql import Window as W
 
     from columnflow_spark.queries.retrieval import (
-        _BM25_TOPK,
+        _bm25_rank,
         bm25_totals_from_store,
         delete_docs_from_postings,
         upsert_postings_batch,
     )
 
     def ranked(path):
-        totals = bm25_totals_from_store(spark, path)
-        win = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-        df = (
-            totals.withColumn("rk", F.row_number().over(win))
-            .filter(F.col("rk") <= _BM25_TOPK)
-        )
+        df = _bm25_rank(spark, bm25_totals_from_store(spark, path))
         return sorted((r.query_id, r.doc_id, r.score_q, r.rk) for r in df.collect())
 
     deleted_pred = F.col("doc_id") % 5 == 2

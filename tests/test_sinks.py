@@ -26,6 +26,34 @@ def test_sort_fields_recursive(spark):
     row = out.collect()[0]
     assert row["rec"]["a"] == 1 and row["rec"]["b"] == 2
     assert row["arr"][0]["y"] == 2.0 and row["arr"][0]["z"] == 1.0
+    # a sorted frame comes back as it is
+    assert sort_fields(out) is out
+
+
+def test_sort_fields_every_nested_level(spark):
+    # arrays inside array elements and odd names are sorted too; already
+    # sorted levels keep their values
+    from pyspark.sql import types as T
+
+    def struct(*names, types=None):
+        return T.StructType(
+            [T.StructField(n, (types or {}).get(n, T.IntegerType())) for n in names]
+        )
+
+    inner = T.ArrayType(struct("d", "c"))
+    schema = struct(
+        "b", "a", "k.k",
+        types={"a": T.ArrayType(struct("q", "p", types={"q": inner})), "k.k": struct("m", "`l")},
+    )
+    df = spark.createDataFrame([(1, [([(4, 3)], 2)], (5, 6))], schema)
+    out = sort_fields(df)
+    assert out.columns == ["a", "b", "k.k"]
+    el = out.schema["a"].dataType.elementType
+    assert el.names == ["p", "q"] and el["q"].dataType.elementType.names == ["c", "d"]
+    assert out.schema["k.k"].dataType.names == ["`l", "m"]
+    row = out.collect()[0]
+    assert row["a"][0]["p"] == 2 and row["a"][0]["q"][0]["c"] == 3
+    assert row["a"][0]["q"][0]["d"] == 4 and row["k.k"]["`l"] == 6 and row["b"] == 1
 
 
 def test_write_events_rows_per_file_and_partitioning(spark, sf_dir, tmp_path):

@@ -147,7 +147,11 @@ def _chain(task):
 def test_outputs_record_the_schema_they_read_back_with(spark, sf_dir, tmp_path):
     """Every task output's ``_BUILT`` records the schema
     ``spark.read.parquet`` infers for it, nested nullability included,
-    and a downstream read with that schema plans no Spark job."""
+    and a downstream read with that schema plans no Spark job.  The
+    recorded line of every task is pinned (tests/data): the sink's field
+    sorting must not change the layout it writes."""
+    with open(os.path.join(os.path.dirname(__file__), "data", "task_built_schemas.json")) as f:
+        pinned = json.load(f)
     chain = _chain(CreateHistograms())
     assert [t.name for t in chain] == ["events", "calib", "select", "reduce", "produce", "hist"]
     for shift in (Shift("nominal"), Shift("price_up")):
@@ -158,6 +162,7 @@ def test_outputs_record_the_schema_they_read_back_with(spark, sf_dir, tmp_path):
             with open(os.path.join(out, "_BUILT")) as f:
                 lines = f.read().splitlines()
             assert len(lines) == 1 and lines[0].startswith("schema="), lines
+            assert lines[0] == pinned[task.name], task.name
             recorded = T.StructType.fromJson(json.loads(lines[0][len("schema="):]))
             assert recorded == spark.read.parquet(out).schema, task.name
             df, jobs = count_jobs(spark, lambda out=out: read_output(spark, out))
