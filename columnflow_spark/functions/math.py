@@ -10,7 +10,6 @@ no UDFs.
 from __future__ import annotations
 
 import math as _math
-import struct as _struct
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -39,68 +38,6 @@ def cosh(x: Column) -> Column:
 
 def sinh(x: Column) -> Column:
     return (F.exp(x) - F.exp(-x)) / 2.0
-
-
-# fdlibm e_log.c constants: ln(2) split in two, and the minimax
-# coefficients of log((1+s)/(1-s)) on [0, 0.1716]
-_LN2_HI, _LN2_LO = 6.93147180369123816490e-01, 1.90821492927058770002e-10
-_TWO54 = 1.80143985094819840000e16
-_LG = (
-    6.666666666666735130e-01, 3.999999999940941908e-01, 2.857142874366239149e-01,
-    2.222219843214978396e-01, 1.818357216161805012e-01, 1.531383769920937332e-01,
-    1.479819860511658591e-01,
-)
-
-
-def _hi_lo(x: float) -> tuple[int, int]:
-    bits = _struct.unpack("<q", _struct.pack("<d", x))[0]
-    return bits >> 32, bits & 0xFFFFFFFF
-
-
-def strict_log(x: float) -> float:
-    """Natural log of a Python float, bit-identical to the JVM's
-    ``StrictMath.log`` — the function Spark's ``F.log`` evaluates.  It is
-    fdlibm's ``__ieee754_log`` op for op (every Python float op is one
-    IEEE double op, as in fdlibm).  ``math.log`` is glibc's and differs
-    from it by one ulp on about 5% of arguments, which a driver-side
-    twin of a Spark expression cannot afford."""
-    hx, lx = _hi_lo(x)
-    k = 0
-    if hx < 0x00100000:  # zero, negative or subnormal
-        if ((hx & 0x7FFFFFFF) | lx) == 0:
-            return -_math.inf
-        if hx < 0:
-            return _math.nan
-        k, x = -54, x * _TWO54
-        hx, lx = _hi_lo(x)
-    if hx >= 0x7FF00000:
-        return x + x
-    k += (hx >> 20) - 1023
-    hx &= 0x000FFFFF
-    i = (hx + 0x95F64) & 0x100000
-    # normalize x or x/2 into [sqrt(2)/2, sqrt(2))
-    x = _struct.unpack("<d", _struct.pack("<q", ((hx | (i ^ 0x3FF00000)) << 32) | lx))[0]
-    k += i >> 20
-    f, dk = x - 1.0, float(k)
-    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
-        if f == 0.0:
-            return dk * _LN2_HI + dk * _LN2_LO if k else 0.0
-        r = f * f * (0.5 - 0.33333333333333333 * f)
-        return dk * _LN2_HI - ((r - dk * _LN2_LO) - f) if k else f - r
-    s = f / (2.0 + f)
-    z = s * s
-    w = z * z
-    t1 = w * (_LG[1] + w * (_LG[3] + w * _LG[5]))
-    t2 = z * (_LG[0] + w * (_LG[2] + w * (_LG[4] + w * _LG[6])))
-    r = t2 + t1
-    if ((hx - 0x6147A) | (0x6B851 - hx)) > 0:
-        hfsq = 0.5 * f * f
-        if k == 0:
-            return f - (hfsq - s * (hfsq + r))
-        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
-    if k == 0:
-        return f - s * (f - r)
-    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
 
 
 def four_vector_sum_mass(

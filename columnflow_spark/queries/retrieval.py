@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 from columnflow_spark.core.artifacts import artifact
 from columnflow_spark.core.state import checkpoint_df
 
-from columnflow_spark.functions.math import strict_log
 from columnflow_spark.functions.similarity import cosine
 from columnflow_spark.functions.skew import salted_topk
 from columnflow_spark.queries import query
@@ -190,7 +189,9 @@ def _half_up(x: np.ndarray) -> np.ndarray:
     return (r + (x - r >= 0.5)).astype(np.int64)
 
 
-def bm25_score(terms, postings: pa.Table, n_docs: int, sum_dl: int) -> Bm25Totals:
+def bm25_score(
+    spark: SparkSession, terms, postings: pa.Table, n_docs: int, sum_dl: int
+) -> Bm25Totals:
     """The BM25 scoring kernel: ``score_q`` per (query, doc) for the term
     list ``terms`` of ``(query_id, w)`` rows over posting rows ``(w,
     doc_id, tf, dl)`` (one per term and document) and the exact integer
@@ -198,18 +199,19 @@ def bm25_score(terms, postings: pa.Table, n_docs: int, sum_dl: int) -> Bm25Total
 
     It repeats the Spark expression ``round(ln(1 + (n_docs - df + .5) /
     (df + .5)) * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl)) *
-    1e6)`` bit for bit: the idf is :func:`strict_log` (Spark's
-    ``StrictMath.log``) once per term, every other step is the same IEEE
-    double op in the same order, and
-    :func:`_half_up` is Spark's ``round(x, 0)`` for the positive scores
-    BM25 yields.  The per-pair sums are int64, so the result is exact
-    whatever the order."""
+    1e6)`` bit for bit: the idf is the JVM's ``StrictMath.log`` (the
+    function ``F.log`` runs; ``math.log`` differs from it by one ulp on
+    some arguments) called once per term, every other step is the same
+    IEEE double op in the same order, and :func:`_half_up` is Spark's
+    ``round(x, 0)`` for the positive scores BM25 yields.  The per-pair
+    sums are int64, so the result is exact whatever the order."""
     if not postings.num_rows:
         empty = np.zeros(0, np.int64)
         return Bm25Totals(empty, empty, empty)
     vocab, wi = np.unique(postings.column("w").to_numpy(zero_copy_only=False), return_inverse=True)
     n, avgdl = float(n_docs), sum_dl / n_docs
-    idf = np.array([strict_log(1 + (n - df + 0.5) / (df + 0.5)) for df in np.bincount(wi).tolist()])
+    log = spark._jvm.java.lang.StrictMath.log
+    idf = np.array([log(1 + (n - df + 0.5) / (df + 0.5)) for df in np.bincount(wi).tolist()])
     tf = postings.column("tf").to_numpy().astype(np.float64)
     dl = postings.column("dl").to_numpy().astype(np.float64)
     k1, b = _BM25_K1, _BM25_B
@@ -313,7 +315,7 @@ def _bm25_hits(spark: SparkSession, sf_dir: str, terms) -> tuple[pa.Table, int, 
 @artifact("bm25_totals")
 def _bm25_totals(spark: SparkSession, sf_dir: str) -> Bm25Totals:
     """BM25 totals of the fixed query workload over the documents table."""
-    return bm25_score(_BM25_TERMS, *_bm25_hits(spark, sf_dir, _BM25_TERMS))
+    return bm25_score(spark, _BM25_TERMS, *_bm25_hits(spark, sf_dir, _BM25_TERMS))
 
 
 # --- hybrid retrieval: Reciprocal Rank Fusion of the BM25 lexical arm and a
@@ -1010,7 +1012,7 @@ def bm25_totals_from_store(spark: SparkSession, path: str) -> Bm25Totals:
     postings = _POSTINGS.scan(spark, path).select("w", "doc_id", "tf", "dl").toArrow()
     stats = read_sidecar(path, "_stats", ["n_docs", "sum_dl"])
     n_docs, sum_dl = (pc.sum(stats.column(k)).as_py() or 0 for k in ("n_docs", "sum_dl"))
-    return bm25_score(_BM25_TERMS, postings, n_docs, sum_dl)
+    return bm25_score(spark, _BM25_TERMS, postings, n_docs, sum_dl)
 
 
 def _ensure_postings_store(spark: SparkSession, sf_dir: str) -> str:
@@ -1258,7 +1260,7 @@ def bm25_rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rank are int64 sums and a sort on the driver."""
     totals = _bm25_totals(spark, sf_dir)
     exp = [(q, w) for q, w, _, _ in _rm3_expansion(spark, sf_dir)]
-    etotals = bm25_score(exp, *_bm25_hits(spark, sf_dir, exp))
+    etotals = bm25_score(spark, exp, *_bm25_hits(spark, sf_dir, exp))
     fused = _sum_per_pair(
         np.r_[totals.query_id, etotals.query_id],
         np.r_[totals.doc_id, etotals.doc_id],

@@ -64,16 +64,18 @@ def _is_sorted(dt: T.DataType) -> bool:
 def _sorted_sql(expr: str, dt: T.DataType, depth: int = 0) -> str:
     """SQL re-projecting ``expr`` of type ``dt`` with the members of
     every struct level (inside arrays too) in sorted order; sorted
-    levels are kept as they are."""
+    levels are kept as they are.  A null struct stays null, as it does
+    in a sorted level, so what is written never depends on which levels
+    needed sorting."""
     if _is_sorted(dt):
         return expr
     if isinstance(dt, T.StructType):
         members = sorted(dt.fields, key=lambda f: f.name)
-        return "named_struct(" + ", ".join(
+        return f"if({expr} IS NULL, NULL, named_struct(" + ", ".join(
             "'" + m.name.replace("\\", "\\\\").replace("'", "\\'") + "', "
             + _sorted_sql(f"{expr}.{_ident(m.name)}", m.dataType, depth)
             for m in members
-        ) + ")"
+        ) + "))"
     x = f"x{depth}"  # an unsorted array
     return f"transform({expr}, {x} -> {_sorted_sql(x, dt.elementType, depth + 1)})"
 
@@ -84,7 +86,8 @@ def sort_fields(df: DataFrame) -> DataFrame:
     layouts independent of operator insertion order.  A frame already
     in that order comes back unchanged (a schema walk, no plan change);
     otherwise the projection is ONE ``selectExpr`` of SQL strings, not a
-    py4j ``Column`` per field."""
+    py4j ``Column`` per field.  Null structs and null array elements
+    stay null at every level, as awkward's option types do."""
     if _is_sorted(df.schema):
         return df
     top = sorted(df.schema.fields, key=lambda f: f.name)

@@ -136,7 +136,7 @@ def test_bm25_kernel_matches_spark_arithmetic(spark, monkeypatch):
                 rows.append(((group * 16 + t) * 1000 + d, n_docs, sum_dl, df, int(tf[d]), int(dl[d])))
         w, doc, tf, dl = zip(*post)
         table = pa.table({"w": w, "doc_id": doc, "tf": tf, "dl": pa.array(dl, pa.int32())})
-        totals = retrieval.bm25_score(terms, table, n_docs, sum_dl)
+        totals = retrieval.bm25_score(spark, terms, table, n_docs, sum_dl)
         # the kernel scores the posting rows in their (w, doc) order
         x = dict(zip(((group * 16 + int(w[1:])) * 1000 + d for w, d, _, _ in post), doubles[-1]))
         for q, d, si in zip(*(a.tolist() for a in totals)):
@@ -176,30 +176,6 @@ def test_bm25_formula_has_one_home():
             if up not in parent:
                 stray.append(f"{path.name}:{node.lineno}")
     assert not stray, stray
-
-
-def test_strict_log_is_spark_log(spark):
-    """``strict_log`` equals Spark's ``F.log`` bit for bit across the
-    double range: wide random magnitudes, arguments within 2**-20 of 1
-    (fdlibm's short branch), powers of two and subnormals."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from columnflow_spark.functions.math import strict_log
-    from columnflow_spark.sources.sinks import local_frame
-
-    rng = np.random.default_rng(5)
-    one = np.nextafter(1.0, np.inf) - 1.0
-    xs = np.concatenate([
-        10.0 ** rng.uniform(-300, 300, 4000),
-        1.0 + rng.integers(-2**32, 2**32, 2000) * one,
-        1.0 + rng.uniform(-1, 1, 2000),
-        2.0 ** np.arange(-1074, 1024, 7, dtype=np.float64),
-        rng.integers(1, 2**52, 200) * 5e-324,
-    ])
-    frame = local_frame(spark, [(i, float(x)) for i, x in enumerate(xs)], "i int, x double")
-    want = [r.y for r in frame.orderBy("i").select(F.log("x").alias("y")).collect()]
-    assert [strict_log(float(x)) for x in xs] == want
 
 
 def test_half_up_is_spark_round(spark):

@@ -56,6 +56,32 @@ def test_sort_fields_every_nested_level(spark):
     assert row["a"][0]["q"][0]["d"] == 4 and row["k.k"]["`l"] == 6 and row["b"] == 1
 
 
+@pytest.mark.parametrize("order", ["sorted", "unsorted"])
+def test_sort_fields_keeps_null_structs(spark, tmp_path, order):
+    # a null struct, a null array element, a null nested struct and a null
+    # array read back as null whether or not their level needed sorting
+    names = ("a", "b") if order == "sorted" else ("b", "a")
+    st = f"struct<{names[0]}:int,{names[1]}:int>"
+    df = spark.createDataFrame(
+        [
+            (0, None, [None, {"a": 1, "b": 2}], {"s": None}, None),
+            (1, {"a": 3, "b": 4}, [{"a": 5, "b": 6}], {"s": {"a": 7, "b": 8}}, [None]),
+        ],
+        f"id int, rec {st}, arr array<{st}>, outer struct<s:{st}>, arr2 array<{st}>",
+    )
+    out = sort_fields(df)
+    assert out.schema["rec"].dataType.names == ["a", "b"]
+    write_events(df, str(tmp_path / "o"))
+    for frame in (out, spark.read.parquet(str(tmp_path / "o"))):
+        rows = {r["id"]: r for r in frame.collect()}
+        assert rows[0]["rec"] is None and rows[0]["arr"][0] is None
+        assert rows[0]["outer"]["s"] is None and rows[0]["arr2"] is None
+        assert rows[1]["arr2"] == [None]
+        assert rows[0]["arr"][1].asDict() == {"a": 1, "b": 2}
+        assert rows[1]["rec"].asDict() == {"a": 3, "b": 4}
+        assert rows[1]["outer"]["s"].asDict() == {"a": 7, "b": 8}
+
+
 def test_write_events_rows_per_file_and_partitioning(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "dataset", F.when(F.col("o_orderkey") % 2 == 0, "even").otherwise("odd")
